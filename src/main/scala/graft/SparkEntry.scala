@@ -379,8 +379,9 @@ object SparkEntry {
     // ---- EAV meta path (P7/J1/J4/T3/F5) ----
     "q25_meta_or_filter" -> ((s, d) => {
       // meta predicates mixed into an OR group + a second AND'd meta group
-      // (QueryCompiler.withMetaFlags; Filter.php:96-100 + QueryBuilder.php:
-      // 108-116). n_chars compares RAW-STRING lexicographic on purpose.
+      // (QueryCompiler.condition's IN subqueries; Filter.php:96-100 +
+      // QueryBuilder.php:108-116). n_chars compares RAW-STRING
+      // lexicographic on purpose.
       val builder = QueryBuilder()
         .withGroup(
           Filter("lang", FilterOp.Eq, FilterValue.S("en"), meta = true),
@@ -399,7 +400,7 @@ object SparkEntry {
         (col("n_chars") - 1).cast(StringType).as("meta_value"))
       val meta2 = docsAsMeta(s, d).unionByName(dup)
       val frame = QueryCompiler.withMetaSortKeys(posts, meta2,
-        Seq("n_chars", "source"), postIdCol = "ID")
+        Seq("n_chars", "source"), postIdCol = "ID", rowKey = "ID")
       val qb = QueryBuilder()
         .withSort(graft.query.Sort("n_chars", SortDir.Desc, Some(MetaCast.AsDecimal)))
         .withSort(graft.query.Sort("source", SortDir.Asc, Some(MetaCast.AsText)))

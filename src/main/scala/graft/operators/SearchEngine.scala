@@ -9,21 +9,35 @@ import graft.model.SearchConfig
 import graft.query.{QueryBuilder, QueryCompiler}
 
 /** The flagship two-phase ANN search (`src/VectorTable.php:73-233`,
-  * SURVEY.md §3.1), re-expressed as ONE lazily-composed DataFrame plan.
+  * SURVEY.md §3.1), composed lazily as one DataFrame.
   *
   * The reference makes 3 PHP<->MySQL round-trips with full candidate
-  * materialization in client memory between stages; here the stages chain
-  * inside a single Spark job:
+  * materialization in client memory between stages; here one `collect`
+  * runs the whole plan, and no stage's rows ever reach the driver:
   *
   *   stage 0  binarize the query vector driver-side (64 longs max — trivial)
-  *   stage 1  candidate filter: posts x postmeta predicate -> semi join
-  *            (broadcast: candidate id set is small by construction)
+  *   stage 1  candidate filter, inside the hamming scan: the sketch columns
+  *            semi-join a broadcast of the posts columns the filter names,
+  *            the AND-of-OR condition in the join; meta predicates are IN
+  *            subqueries (existence joins under OR, broadcast too)
   *   stage 2  hamming prefilter: codegen XOR/popcount over the packed
   *            sketch, top-(10n) via orderBy+limit -> TakeOrderedAndProject
   *            (per-partition heap + single merge — the distributed version
   *            of the reference's SplMinHeap, `VectorTable.php:122-146`)
   *   stage 3  exact cosine rerank over only 10n rows, top-(5n)
-  *   stage 4  optional attribute sort (posts/meta keys), final limit n
+  *   stage 4  optional attribute sort (posts/meta keys), final limit n —
+  *            on the single-partition top-5n frame, so no exchange
+  *
+  * Every broadcast is a Spark job of its own, so a search is several jobs
+  * in dependent waves. Unfiltered: 2 jobs — the hamming top-(10n)
+  * broadcast, then the rerank and final cut. Filtered and sorted: one more
+  * job per stage-1 broadcast (the posts columns, each meta predicate) and
+  * per stage-4 broadcast (the meta sort rows, the posts attributes). The
+  * benchmark's shape (one meta and two posts predicates, one meta and one
+  * posts sort key) runs 6 jobs in 4 waves: the leaf broadcasts; the posts
+  * broadcast, which waits for the meta one because Catalyst copies the
+  * meta subqueries onto the posts side through the join key equality;
+  * the hamming cut; the rerank and final cut. No stage shuffles row mass.
   *
   * Column pruning matters at scale: stages 1-2 never touch the wide
   * `vector` column — only `id`/`post_id`/`binary_code` (3 cols) are read
@@ -70,16 +84,23 @@ object SearchEngine {
     val qVecLit = lit(queryVec).cast(ArrayType(FloatType))
     val qBitsLit = lit(qBits)
 
-    // stage 1: candidate posts (only if filters present — matches
-    // VectorTable.php:112-114 which always scopes by post type; post-type
-    // scoping is a caller-supplied filter group here)
+    // stage 1 runs inside the hamming scan (only if filters present —
+    // VectorTable.php:112-114 always scopes by post type; post-type scoping
+    // is a caller-supplied filter group here). The sketch columns
+    // semi-join a broadcast of just the posts columns the filter names,
+    // aliased apart from the store's, with the whole AND-of-OR condition
+    // in the join; meta predicates are IN subqueries on post_id. Semi and
+    // existence joins never duplicate a row, so nothing needs a distinct.
+    val sketch = embeddings.select(col("id"), col("post_id"), col("binary_code"))
     val candidates =
       if (builder.hasFilters) {
-        val ids = QueryCompiler.candidatePosts(posts, postmeta, builder)
-        // candidate sets are small by construction (<= stage1Limit);
-        // broadcast keeps the embeddings scan shuffle-free
-        embeddings.join(broadcast(ids), Seq("post_id"), "left_semi")
-      } else embeddings
+        val fields = builder.groups.flatten.filterNot(_.meta).map(_.field).distinct
+        val alias = fields.zipWithIndex.map { case (f, i) => f -> s"__pf_$i" }.toMap
+        val attrs = posts.select(col("ID").as("__pk") +: fields.map(f => col(f).as(alias(f))): _*)
+        sketch.join(broadcast(attrs), sketch("post_id") === col("__pk") &&
+          QueryCompiler.condition(builder, postmeta, sketch("post_id"), f => col(alias(f))),
+          "left_semi")
+      } else sketch
     // stage-1 cap: off by default (see SearchConfig.stage1Limit scaladoc);
     // when on, deterministic lowest-ids via orderBy+limit (TakeOrdered)
     val staged = cfg.stage1Limit.fold(candidates) { cap =>
@@ -88,39 +109,35 @@ object SearchEngine {
 
     // stage 2: hamming top-(10n); reads only (id, post_id, binary_code)
     val hamming = staged
-      .select(col("id"), col("post_id"), col("binary_code"))
-      .withColumn("hamming_distance", hammingDist(col("binary_code"), qBitsLit))
+      .select(col("id"), col("post_id"),
+        hammingDist(col("binary_code"), qBitsLit).as("hamming_distance"))
       .orderBy(col("hamming_distance").asc, col("id").asc)
       .limit(cfg.stage2Factor * n)
-      .select(col("id"), col("post_id"), col("hamming_distance"))
 
     // stage 3: cosine rerank over 10n rows — fetch vectors for just those
-    // ids (broadcast semi join against the tiny survivor set), exactly the
+    // ids (broadcast join against the tiny survivor set), exactly the
     // reference's `WHERE id IN (...)` refetch (VectorTable.php:157)
-    val rerankInput = embeddings
+    val cosine = embeddings
       .select(col("id").as("__rid"), col("vector"), col("magnitude"))
       .join(broadcast(hamming), col("__rid") === hamming("id"), "inner")
-      .drop("__rid")
-    val cosine = rerankInput
-      .withColumn("cosine_similarity",
-        vecDot(col("vector"), qVecLit) / (col("magnitude") * lit(qMag) + lit(CosineEps)))
+      .select(col("id"), col("post_id"), col("hamming_distance"),
+        (vecDot(col("vector"), qVecLit) / (col("magnitude") * lit(qMag) + lit(CosineEps)))
+          .as("cosine_similarity"))
       .orderBy(col("cosine_similarity").desc, col("id").asc)
       .limit(cfg.stage3Factor * n)
-      .select(col("id"), col("post_id"), col("hamming_distance"), col("cosine_similarity"))
 
-    // stage 4: optional attribute sort (VectorTable.php:195-217), final n.
-    // Rename the posts join key first: Spark's case-insensitive resolver
-    // would otherwise see posts.ID and our output id as ambiguous.
+    // stage 4: optional attribute sort (VectorTable.php:195-217), final n,
+    // on the single-partition top-5n frame: meta keys first (grouped by
+    // the unique chunk id, so no exchange), then the posts attributes.
+    // Rename the posts join key: Spark's case-insensitive resolver would
+    // otherwise see posts.ID and our output id as ambiguous.
     val sorted =
       if (builder.hasSorts) {
-        val attrs = posts.withColumnRenamed("ID", "__post_ID")
-        val joined = cosine
-          .join(broadcast(attrs), cosine("post_id") === col("__post_ID"), "left")
-          .drop("__post_ID")
-        val withMeta = QueryCompiler.withMetaSortKeys(joined, postmeta, builder.metaSortKeys)
-        val resolve: String => Column = f => withMeta(f)
-        withMeta
-          .orderBy(QueryCompiler.sortColumns(builder, resolve) :+ col("id").asc: _*)
+        val withMeta = QueryCompiler.withMetaSortKeys(cosine, postmeta, builder.metaSortKeys)
+        val joined = withMeta.join(broadcast(posts.withColumnRenamed("ID", "__post_ID")),
+          withMeta("post_id") === col("__post_ID"), "left")
+        joined
+          .orderBy(QueryCompiler.sortColumns(builder, joined.apply) :+ col("id").asc: _*)
           .select(col("id"), col("post_id"), col("hamming_distance"), col("cosine_similarity"))
       } else cosine.orderBy(col("cosine_similarity").desc, col("id").asc)
 

@@ -13,12 +13,11 @@ import org.apache.spark.sql.types._
   *
   * EAV meta predicates (`src/query/parts/Filter.php:96-100`:
   * `pm.meta_key = f AND pm.meta_value <op> v` over the joined fan-out, then
-  * `DISTINCT p.ID` — i.e. EXISTS semantics) are compiled to per-predicate
-  * boolean flag columns: postmeta is filtered down to the tiny matching id
-  * set first, then joined back. This supports meta predicates mixed into OR
-  * groups, which a plain chain of semi joins cannot express. At scale the
-  * postmeta scan is filtered by `meta_key` before the shuffle, so each flag
-  * join moves only matching post ids.
+  * `DISTINCT p.ID` — i.e. EXISTS semantics) are compiled to IN subqueries
+  * over postmeta, filtered by `meta_key` and value at the scan. Catalyst
+  * rewrites each into a semi join, or into an existence join when it sits
+  * under an OR with posts predicates — so meta and posts predicates mix
+  * freely in one AND-of-OR condition, and neither join can duplicate rows.
   */
 object QueryCompiler {
 
@@ -71,37 +70,26 @@ object QueryCompiler {
     }
   }
 
-  /** Same predicate applied to a postmeta `meta_value` column. NB the
-    * reference compares `meta_value` as a raw string (Filter.php:97) —
-    * lexicographic for numbers — replicated here on purpose; see
-    * SURVEY.md §7 "EAV semantics". */
-  private def metaValuePredicate(f: Filter): Column = predicate(f, _ => col("meta_value"))
+  /** One meta predicate as an IN subquery over postmeta: `postId IN (SELECT
+    * post_id FROM postmeta WHERE meta_key = f AND meta_value <op> v AND
+    * post_id IS NOT NULL)`. NB the reference compares `meta_value` as a raw
+    * string (Filter.php:97) — lexicographic for numbers — replicated here
+    * on purpose; see SURVEY.md §7 "EAV semantics". The NULL-id guard keeps
+    * the IN two-valued: orphan meta rows can never turn a miss into NULL. */
+  private def metaPredicate(f: Filter, postmeta: DataFrame, postId: Column): Column =
+    postId.isin(postmeta
+      .filter(col("meta_key") === f.field && predicate(f, _ => col("meta_value")) &&
+        col("post_id").isNotNull)
+      .select(col("post_id")))
 
-  private def flagName(i: Int): String = s"__meta_flag_$i"
-
-  /** posts + one boolean flag column per distinct meta predicate.
-    * Each flag = EXISTS(postmeta row with that key matching that predicate). */
-  def withMetaFlags(posts: DataFrame, postmeta: DataFrame, metaFilters: Seq[Filter]): DataFrame =
-    metaFilters.zipWithIndex.foldLeft(posts) { case (acc, (f, i)) =>
-      val matching = postmeta
-        .filter(col("meta_key") === f.field && metaValuePredicate(f))
-        .select(col("post_id").as("__mf_post_id"))
-        .distinct()
-        .withColumn(flagName(i), lit(true))
-      acc.join(matching, acc("ID") === col("__mf_post_id"), "left")
-        .drop("__mf_post_id")
-        .withColumn(flagName(i), coalesce(col(flagName(i)), lit(false)))
-    }
-
-  /** Full AND-of-OR condition (QueryBuilder.php:108-116) over a frame that
-    * already has meta flags attached. */
-  def condition(qb: QueryBuilder, resolve: String => Column): Column = {
-    val metaIdx = qb.metaFilters.zipWithIndex.toMap
+  /** Full AND-of-OR condition (QueryBuilder.php:108-116). Posts predicates
+    * resolve through `resolve`; each distinct meta predicate is compiled
+    * once, as an IN subquery keyed on `postId`. */
+  def condition(qb: QueryBuilder, postmeta: DataFrame, postId: Column,
+      resolve: String => Column): Column = {
+    val meta = qb.metaFilters.map(f => f -> metaPredicate(f, postmeta, postId)).toMap
     val groups = qb.groups.filter(_.nonEmpty).map { g =>
-      g.map { f =>
-        if (f.meta) col(flagName(metaIdx(f)))
-        else predicate(f, resolve)
-      }.reduce(_ || _)
+      g.map(f => if (f.meta) meta(f) else predicate(f, resolve)).reduce(_ || _)
     }
     if (groups.isEmpty) lit(true) else groups.reduce(_ && _)
   }
@@ -109,13 +97,10 @@ object QueryCompiler {
   /** Candidate post ids satisfying the builder's filters — the Spark form of
     * the reference's stage-1 subquery (`src/VectorTable.php:104-114`).
     * Returns a single-column `post_id` frame, deduplicated. */
-  def candidatePosts(posts: DataFrame, postmeta: DataFrame, qb: QueryBuilder): DataFrame = {
-    val flagged = withMetaFlags(posts, postmeta, qb.metaFilters)
-    flagged
-      .filter(condition(qb, flagged.apply))
+  def candidatePosts(posts: DataFrame, postmeta: DataFrame, qb: QueryBuilder): DataFrame =
+    posts.filter(condition(qb, postmeta, posts("ID"), posts.apply))
       .select(col("ID").as("post_id"))
       .distinct()
-  }
 
   /** Meta sort-key casts (Sort.php:42-49). MySQL's bare `CAST(x AS DECIMAL)`
     * is DECIMAL(10,0); we keep fractional precision intentionally
@@ -129,19 +114,28 @@ object QueryCompiler {
     case MetaCast.AsDate    => c.try_cast(DateType)
   }
 
-  /** Attach one `__meta_sort_<key>` column per meta sort key via the
-    * aggregated-join rewrite of the reference's N-way postmeta self-join
-    * (`src/VectorTable.php:198-205`): MAX(meta_value) per post per key
-    * (the MAX-collapse at `VectorTable.php:203`), one aggregated join per
-    * key instead of a row-multiplying fan-out + GROUP BY. */
+  /** Attach one `__meta_sort_<key>` column per meta sort key: MAX(meta_value)
+    * per post per key — the MAX-collapse at `VectorTable.php:203`, an
+    * aggregated rewrite of the reference's N-way postmeta self-join
+    * (`src/VectorTable.php:198-205`). `df` must be unique on `rowKey`. One
+    * broadcast left join against the sort keys' postmeta rows, then one
+    * aggregate grouped by `rowKey` alone, every other column carried
+    * through `first`: no value is re-normalized by grouping (a double
+    * grouping key would turn -0.0 into 0.0). Over a single-partition frame
+    * (the search's top-5n cut) the aggregate plans no exchange. */
   def withMetaSortKeys(df: DataFrame, postmeta: DataFrame, keys: Seq[String],
-      postIdCol: String = "post_id"): DataFrame =
-    keys.foldLeft(df) { (acc, k) =>
-      val agg = postmeta
-        .filter(col("meta_key") === k)
-        .groupBy(col("post_id").as("__ms_post_id"))
-        .agg(max(col("meta_value")).as(s"__meta_sort_$k"))
-      acc.join(agg, acc(postIdCol) === col("__ms_post_id"), "left").drop("__ms_post_id")
+      postIdCol: String = "post_id", rowKey: String = "id"): DataFrame =
+    if (keys.isEmpty) df
+    else {
+      val rows = postmeta.filter(col("meta_key").isin(keys: _*))
+        .select(col("post_id").as("__ms_post_id"), col("meta_key").as("__ms_key"),
+          col("meta_value").as("__ms_value"))
+      val aggs = df.columns.toSeq.filter(_ != rowKey).map(c => first(col(c)).as(c)) ++
+        keys.map(k => max(when(col("__ms_key") === k, col("__ms_value"))).as(s"__meta_sort_$k"))
+      df.join(broadcast(rows), df(postIdCol) === col("__ms_post_id"), "left")
+        .groupBy(col(rowKey))
+        .agg(aggs.head, aggs.tail: _*)
+        .select((df.columns.toSeq ++ keys.map(k => s"__meta_sort_$k")).map(col): _*)
     }
 
   /** Sort expressions (Sort.php:39-53 + QueryBuilder.php:123-129). */

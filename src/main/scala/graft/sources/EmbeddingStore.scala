@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions._
-import graft.util.DenseIds
+import graft.util.{DenseIds, StampedMemo}
 
 /** Parquet-backed embedding store (SURVEY.md §2.1 S1-S12).
   *
@@ -120,9 +120,17 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   def assignIds(df: DataFrame, startAt: Long = 1L): DataFrame =
     DenseIds.assign(df, "id", startAt, col("post_id"), col("sequence_no"))
 
+  /** The store's schema, memoized: inferring it reads parquet footers in a
+    * Spark job, and it can only change when the store root does. Keyed on
+    * the root's modification time and invalidated by every mutation. */
+  private val schemaMemo = new StampedMemo[StructType](() => fs, Seq(path))
+
+  /** The live store. Recovers crashed swaps and lists the files on every
+    * call; only the schema comes from [[schemaMemo]], so a read launches
+    * no Spark job. */
   def read(): DataFrame = {
     recoverAll()
-    spark.read.parquet(path)
+    spark.read.schema(schemaMemo(spark.read.parquet(path).schema)).parquet(path)
   }
 
   /** Typed view of the store (SURVEY.md §1.3: `Dataset[Embedding]` where
@@ -349,6 +357,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     val df = assignIds(withDerived(raw))
       .withColumn("bucket", bucketOf(col("post_id")))
     df.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    schemaMemo.invalidate()
     effectivePrefixDims.foreach(writeMeta)
   }
 
@@ -387,6 +396,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
       out.coalesce(1).write.mode("overwrite").parquet(tmp)
       atomicSwap(new Path(tmp), new Path(dir))
     }
+    schemaMemo.invalidate()
     // persist the prefix setting on stores that predate it (bulkLoad wrote
     // it for fresh stores) so LATER handles without the parameter keep
     // deriving the column instead of splitting the schema
@@ -407,7 +417,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * the next upsert: id churn, lost created_at, and fresh ids colliding
     * with the hidden bucket's ids store-wide. One listStatus of the store
     * root per call — a single NameNode/S3 LIST, negligible next to the
-    * parquet footer reads that follow. */
+    * file listing that follows. */
   private def recoverAll(): Unit = {
     val matches = Option(fs.globStatus(new Path(path, ".bucket=*.bak")))
     matches.toSeq.flatten.foreach { st =>

@@ -999,4 +999,112 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"),
       s"only one-row stats frames may nested-loop (BNLJ BuildRight):\n$p")
   }
+
+  // ---- the flagship filtered search over real file scans -----------------
+
+  /** A 2-bucket store and posts/postmeta parquet tables, shaped like the
+    * benchmark's filtered search: a meta predicate OR'd with a posts one,
+    * a posts group, a meta sort key and a posts sort key. */
+  private lazy val searchFixture = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_search_audit").toString
+    (1L to 40L).map(i => (i, if (i % 2 == 0) "publish" else "draft", i * 7 % 50))
+      .toDF("ID", "post_status", "comment_count").write.parquet(s"$dir/posts")
+    (1L to 40L).flatMap(i => Seq((i, "lang", if (i % 3 == 0) "en" else "de"),
+        (i, "rating", (i % 9).toString)))
+      .toDF("post_id", "meta_key", "meta_value").write.parquet(s"$dir/meta")
+    val store = new sources.EmbeddingStore(spark, s"$dir/emb", numBuckets = 2)
+    store.bulkLoad((1L to 40L).flatMap(p => (0 until 2).map(s =>
+        (p, s, Array.tabulate(8)(d => ((p * 31 + s * 7 + d * 13) % 17 - 8).toFloat), "m")))
+      .toDF("post_id", "sequence_no", "vector", "vector_type"))
+    (store, spark.read.parquet(s"$dir/posts"), spark.read.parquet(s"$dir/meta"))
+  }
+
+  private val filtered = {
+    import query._
+    QueryBuilder(
+      Seq(Seq(Filter("lang", FilterOp.Eq, FilterValue.S("en"), meta = true),
+          Filter("comment_count", FilterOp.Gt, FilterValue.I(20))),
+        Seq(Filter("post_status", FilterOp.Eq, FilterValue.S("publish")))),
+      Seq(Sort("rating", SortDir.Desc, Some(MetaCast.AsDecimal)),
+        Sort("comment_count", SortDir.Desc)))
+  }
+
+  private val searchQuery = Array.tabulate(8)(d => (d % 3 - 1).toFloat)
+
+  private def search(b: query.QueryBuilder): DataFrame = {
+    val (store, posts, meta) = searchFixture
+    operators.SearchEngine.search(store.read(), posts, meta, searchQuery, 5, b)
+  }
+
+  /** The prepared, not yet executed, physical plan: its exchanges are plain
+    * nodes, not hidden behind adaptive query stages. */
+  private def prepared(frame: DataFrame) = frame.queryExecution.executedPlan match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  /** Spark jobs launched by `body`, counted under a job group of its own. A
+    * marker job after it flushes the listener queue (events arrive in
+    * order), so the count is final when it is read. */
+  private def jobsOf(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"audit-${java.util.UUID.randomUUID()}"
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => counts.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "audited")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!counts.containsKey(s"$group-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(counts.containsKey(s"$group-marker"), "listener never saw the marker job")
+      Option(counts.get(group)).fold(0)(_.intValue)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("filtered search with a meta filter and a meta sort plans no shuffle exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val frame = search(filtered)
+    val shuffles = prepared(frame).collect { case s: ShuffleExchangeLike => s }
+    assert(shuffles.isEmpty, s"stage 1 and stage 4 must not shuffle:\n${prepared(frame)}")
+    frame.collect()
+    val p = frame.queryExecution.executedPlan.toString
+    assert(!"Exchange (hash|range|Single|Round)".r.findFirstIn(p).isDefined,
+      s"the final plan shuffles:\n$p")
+  }
+
+  test("stage 1 is a LeftSemi join condition over a sketch scan that never reads vector") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val plan = prepared(search(filtered))
+    val semis = plan.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi && j.condition.isDefined => j
+    }
+    assert(semis.size == 1, s"one stage-1 semi join with a condition:\n$plan")
+    val cond = semis.head.condition.get.references.map(_.name).toSeq
+    assert(cond.exists(_.startsWith("__pf_")), s"posts predicate in the join condition: $cond")
+    assert(cond.contains("exists"), s"meta existence flag in the join condition: $cond")
+    val reads = semis.head.left.collect { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
+    assert(reads.exists(_.contains("binary_code")) && !reads.exists(_.contains("vector")),
+      s"the stage-1 scan reads the sketch only: $reads")
+  }
+
+  test("job counts: filtered search <= 6, unfiltered <= 2, a warm store.read() 0") {
+    val (store, _, _) = searchFixture
+    search(filtered).collect(); search(query.QueryBuilder()).collect() // warm
+    assert(jobsOf(store.read()) == 0, "read() must not infer the schema again")
+    val f = jobsOf(search(filtered).collect())
+    assert(f <= 6, s"filtered search launched $f jobs")
+    val u = jobsOf(search(query.QueryBuilder()).collect())
+    assert(u <= 2, s"unfiltered search launched $u jobs")
+  }
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -423,5 +426,203 @@ class SearchEngineSuite extends AnyFunSuite {
       hits, docs, "doc_id", col("n"), 3, boostMode = "avg"))
     intercept[IllegalArgumentException](SearchEngine.fieldValueBoost(
       hits, docs, "doc_id", col("n"), 0))
+  }
+
+  // ---- equivalence with the flag-and-aggregate formulation ---------------
+
+  /** The search as formulated before stage 1 moved into the hamming scan
+    * and stage 4 onto the cut frame: candidate posts through one left-joined
+    * flag column per meta predicate and a distinct, semi-joined to the
+    * store; meta sort keys aggregated per post over all of postmeta, then
+    * joined to the top-5n frame after the posts attributes. */
+  private object Reference {
+    def candidatePosts(posts: DataFrame, postmeta: DataFrame, qb: QueryBuilder): DataFrame = {
+      val flagOf = qb.metaFilters.zipWithIndex.toMap
+      val flagged = flagOf.foldLeft(posts) { case (acc, (f, i)) =>
+        val matching = postmeta
+          .filter(col("meta_key") === f.field && QueryCompiler.predicate(f, _ => col("meta_value")))
+          .select(col("post_id").as("__mf_post_id")).distinct()
+          .withColumn(s"__flag_$i", lit(true))
+        acc.join(matching, acc("ID") === col("__mf_post_id"), "left").drop("__mf_post_id")
+          .withColumn(s"__flag_$i", coalesce(col(s"__flag_$i"), lit(false)))
+      }
+      val groups = qb.groups.filter(_.nonEmpty).map(_.map { f =>
+        if (f.meta) col(s"__flag_${flagOf(f)}") else QueryCompiler.predicate(f, flagged.apply)
+      }.reduce(_ || _))
+      flagged.filter(groups.foldLeft(lit(true))(_ && _))
+        .select(col("ID").as("post_id")).distinct()
+    }
+
+    def search(emb: DataFrame, posts: DataFrame, postmeta: DataFrame, q: Array[Float],
+        n: Int, qb: QueryBuilder, cfg: SearchConfig): DataFrame = {
+      val candidates =
+        if (qb.hasFilters)
+          emb.join(broadcast(candidatePosts(posts, postmeta, qb)), Seq("post_id"), "left_semi")
+        else emb
+      val staged = cfg.stage1Limit.fold(candidates)(cap =>
+        candidates.orderBy(col("id").asc).limit(cap.toInt))
+      val hamming = staged
+        .withColumn("hamming_distance",
+          hammingDist(col("binary_code"), lit(SearchEngine.packQuery(q))))
+        .orderBy(col("hamming_distance").asc, col("id").asc)
+        .limit(cfg.stage2Factor * n)
+        .select(col("id"), col("post_id"), col("hamming_distance"))
+      val cosine = emb.select(col("id").as("__rid"), col("vector"), col("magnitude"))
+        .join(broadcast(hamming), col("__rid") === hamming("id"))
+        .withColumn("cosine_similarity",
+          vecDot(col("vector"), lit(q).cast(ArrayType(FloatType))) /
+            (col("magnitude") * lit(SearchEngine.magnitudeOf(q)) + lit(CosineEps)))
+        .orderBy(col("cosine_similarity").desc, col("id").asc)
+        .limit(cfg.stage3Factor * n)
+        .select(col("id"), col("post_id"), col("hamming_distance"), col("cosine_similarity"))
+      val sorted =
+        if (qb.hasSorts) {
+          val joined = cosine.join(broadcast(posts.withColumnRenamed("ID", "__post_ID")),
+            cosine("post_id") === col("__post_ID"), "left").drop("__post_ID")
+          val withMeta = qb.metaSortKeys.foldLeft(joined) { (acc, k) =>
+            val agg = postmeta.filter(col("meta_key") === k)
+              .groupBy(col("post_id").as("__ms_post_id"))
+              .agg(max(col("meta_value")).as(s"__meta_sort_$k"))
+            acc.join(agg, acc("post_id") === col("__ms_post_id"), "left").drop("__ms_post_id")
+          }
+          withMeta.orderBy(QueryCompiler.sortColumns(qb, withMeta.apply) :+ col("id").asc: _*)
+            .select(col("id"), col("post_id"), col("hamming_distance"), col("cosine_similarity"))
+        } else cosine.orderBy(col("cosine_similarity").desc, col("id").asc)
+      sorted.limit(n)
+    }
+
+    def searchPosts(pool: DataFrame, nPosts: Int): DataFrame =
+      pool.withColumn("__rk", row_number().over(Window.partitionBy(col("post_id"))
+          .orderBy(col("cosine_similarity").desc, col("id").asc)))
+        .filter(col("__rk") === 1)
+        .select(col("post_id"), col("id").as("best_chunk_id"),
+          col("hamming_distance"), col("cosine_similarity"))
+        .orderBy(col("cosine_similarity").desc, col("post_id").asc)
+        .limit(nPosts)
+  }
+
+  private val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+  private def day(d: Int) = new Timestamp(t0.getTime + d * 86400000L)
+  private val langs = Seq("en", "de", "fr")
+  private val ratings = Seq("7", "10", "3.5", "abc", "2026-02-03")
+
+  /** Seeded corpus over parquet: 90 chunks on posts 1..45, where posts
+    * 41..45 are missing from posts; posts 46..50 have no chunks; IDs 5 and
+    * 12 appear twice and one posts row has a NULL ID; postmeta repeats keys
+    * per post, has NULL post_ids and a NULL value, and rows for post 60. */
+  private lazy val eq: (DataFrame, DataFrame, DataFrame) = {
+    val r = new scala.util.Random(7)
+    val dir = java.nio.file.Files.createTempDirectory("graft_search_eq").toString
+    (1L to 90L).map { id =>
+      (id, 1L + r.nextInt(45), Array.fill(8)((math.round(r.nextGaussian() * 10) / 10.0).toFloat))
+    }.toDF("id", "post_id", "vector")
+      .withColumn("binary_code", packSignBits(col("vector")))
+      .withColumn("magnitude", vecMagnitude(col("vector")))
+      .write.parquet(s"$dir/emb")
+    val types = Seq("post", "page", "attachment")
+    val statuses = Seq("publish", "draft", "private")
+    def post(id: Option[Long]) = (id, types(r.nextInt(3)), statuses(r.nextInt(3)),
+      if (r.nextInt(6) == 0) None else Some(r.nextInt(200).toLong),
+      r.nextInt(9) - 4.0, day(r.nextInt(30)))
+    val postRows = ((1L to 40L) ++ (46L to 50L) ++ Seq(5L, 12L)).map(i => post(Some(i))) :+ post(None)
+    postRows.toDF("ID", "post_type", "post_status", "comment_count", "score", "created")
+      .write.parquet(s"$dir/posts")
+    val metaRows = ((1L to 50L) :+ 60L).flatMap { p =>
+      Seq.fill(1 + r.nextInt(2))((Option(p), "lang", Option(langs(r.nextInt(3))))) ++
+        Seq.fill(r.nextInt(3))((Option(p), "rating", Option(ratings(r.nextInt(5))))) ++
+        (if (r.nextInt(4) == 0) Seq((Option(p), "featured", Option("yes"))) else Nil)
+    } ++ Seq((None, "lang", Some("en")), (None, "rating", Some("99")), (Some(3L), "rating", None))
+    metaRows.toDF("post_id", "meta_key", "meta_value").write.parquet(s"$dir/meta")
+    (spark.read.parquet(s"$dir/emb"), spark.read.parquet(s"$dir/posts"),
+      spark.read.parquet(s"$dir/meta"))
+  }
+
+  private val ops = Seq(FilterOp.Eq, FilterOp.Ne, FilterOp.Gt, FilterOp.Lt, FilterOp.Ge,
+    FilterOp.Le, FilterOp.In, FilterOp.NotIn, FilterOp.Like, FilterOp.NotLike)
+
+  /** One random AND-of-OR builder over the [[eq]] corpus: meta and posts
+    * predicates mixed within groups, every operator, literals typed to
+    * their column (Like/NotLike on strings only), optional sorts. */
+  private def randomBuilder(r: scala.util.Random, sorted: Boolean): QueryBuilder = {
+    def pick[A](xs: Seq[A]): A = xs(r.nextInt(xs.size))
+    def list(v: => FilterValue) = FilterValue.L(Seq.fill(r.nextInt(3))(v))
+    def filter(): Filter = {
+      val op = pick(ops)
+      def typed(v: => FilterValue) =
+        if (op == FilterOp.In || op == FilterOp.NotIn) list(v) else v
+      if (r.nextInt(5) < 2) {
+        val (key, values) = pick(Seq("lang" -> langs, "rating" -> ratings, "featured" -> Seq("yes")))
+        Filter(key, op, typed(FilterValue.S(pick(values))), meta = true)
+      } else {
+        val textOnly = op == FilterOp.Like || op == FilterOp.NotLike
+        pick(if (textOnly) Seq(0, 1) else Seq(0, 1, 2, 3, 4)) match {
+          case 0 => Filter("post_type", op, typed(FilterValue.S(pick(Seq("post", "page", "age")))))
+          case 1 => Filter("post_status", op, typed(FilterValue.S(pick(Seq("publish", "draft")))))
+          case 2 => Filter("comment_count", op, typed(FilterValue.I(r.nextInt(200).toLong)))
+          case 3 => Filter("score", op, typed(FilterValue.F(r.nextInt(9) - 4.0)))
+          case _ => Filter("created", op, typed(FilterValue.T(day(r.nextInt(30)))))
+        }
+      }
+    }
+    def sort(): graft.query.Sort = {
+      val dir = if (r.nextBoolean()) SortDir.Asc else SortDir.Desc
+      pick(Seq(
+        () => graft.query.Sort("rating", dir, Some(pick(Seq(MetaCast.AsDecimal, MetaCast.AsText, MetaCast.AsDate)))),
+        () => graft.query.Sort("lang", dir, Some(MetaCast.AsText)),
+        () => graft.query.Sort("featured", dir, Some(MetaCast.AsText)),
+        () => graft.query.Sort(pick(Seq("comment_count", "score", "post_type")), dir)))()
+    }
+    QueryBuilder(
+      Seq.fill(1 + r.nextInt(3))(Seq.fill(1 + r.nextInt(3))(filter())),
+      if (sorted) Seq.fill(1 + r.nextInt(2))(sort()) else Nil)
+  }
+
+  private def bits(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case v => v
+  })
+
+  test("filtered search equals the flag-and-aggregate formulation on seeded random builders") {
+    val (emb, posts, meta) = eq
+    val noMeta = meta.limit(0)
+    val r = new scala.util.Random(20261017)
+    val q = Array.fill(8)(r.nextGaussian().toFloat)
+    val builders = (0 until 24).map(i => randomBuilder(r, sorted = i % 4 < 2))
+    val filters = builders.flatMap(_.groups.flatten)
+    assert(filters.map(_.op).toSet == ops.toSet, "every operator is exercised")
+    assert(filters.map(_.value.getClass).toSet.size == 5, "every literal type is exercised")
+    assert(filters.exists(_.meta) && filters.exists(!_.meta))
+    builders.zipWithIndex.foreach { case (b, i) =>
+      val pm = if (i % 5 == 4) noMeta else meta
+      val cfg = if (i % 2 == 1) SearchConfig(stage1Limit = Some(40L)) else SearchConfig()
+      val n = 2 + i % 3
+      val clue = s"builder $i: $b, cfg $cfg, empty postmeta ${i % 5 == 4}"
+      assert(QueryCompiler.candidatePosts(posts, pm, b).collect().toSet ==
+        Reference.candidatePosts(posts, pm, b).collect().toSet, clue)
+      assert(bits(SearchEngine.search(emb, posts, pm, q, n, b, cfg)) ==
+        bits(Reference.search(emb, posts, pm, q, n, b, cfg)), clue)
+      if (i % 3 == 0) {
+        val unsorted = b.copy(sorts = Nil)
+        assert(bits(SearchEngine.searchPosts(emb, posts, pm, q, n, unsorted, cfg)) ==
+          bits(Reference.searchPosts(Reference.search(emb, posts, pm, q, 5 * n, unsorted, cfg), n)),
+          s"searchPosts, $clue")
+      }
+    }
+  }
+
+  test("meta sort keys carry every column bit for bit and MAX-collapse per key on the cut frame") {
+    val cut = Seq((1L, 10L, 3, -0.0), (2L, 11L, 1, 0.5), (3L, 99L, 2, Double.NaN))
+      .toDF("id", "post_id", "hamming_distance", "cosine_similarity")
+    val pm = Seq((10L, "k", "9"), (10L, "k", "10"), (10L, "j", "a"), (11L, "j", "b"))
+      .toDF("post_id", "meta_key", "meta_value")
+    val out = QueryCompiler.withMetaSortKeys(cut, pm, Seq("k", "j"))
+    assert(out.columns.toSeq == cut.columns.toSeq ++ Seq("__meta_sort_k", "__meta_sort_j"))
+    val got = out.collect().map(r => r.getLong(0) -> r).toMap
+    assert(java.lang.Double.doubleToRawLongBits(got(1L).getDouble(3)) ==
+      java.lang.Double.doubleToRawLongBits(-0.0), "-0.0 passes through")
+    assert(got(3L).getDouble(3).isNaN)
+    assert((got(1L).getString(4), got(1L).getString(5)) == (("9", "a")), "string MAX per key")
+    assert((got(2L).getString(4), got(2L).getString(5)) == ((null, "b")))
+    assert((got(3L).getString(4), got(3L).getString(5)) == ((null, null)), "no meta rows")
   }
 }

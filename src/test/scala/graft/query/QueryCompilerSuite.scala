@@ -97,7 +97,7 @@ class QueryCompilerSuite extends AnyFunSuite {
   }
 
   test("meta-sort MAX-collapse picks MAX(meta_value) per post (VectorTable.php:203)") {
-    val out = QueryCompiler.withMetaSortKeys(posts, meta, Seq("score"), postIdCol = "ID")
+    val out = QueryCompiler.withMetaSortKeys(posts, meta, Seq("score"), postIdCol = "ID", rowKey = "ID")
     val scores = out.select($"ID", $"__meta_sort_score").collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(scores(1L) == Some("9"), "MAX('9','10') is lexicographic -> '9'")
@@ -107,7 +107,7 @@ class QueryCompilerSuite extends AnyFunSuite {
 
   test("T3/F5: AsDecimal cast makes meta sort numeric; AsText stays lexicographic") {
     val qb = QueryBuilder().withSort(Sort("score", SortDir.Desc, Some(MetaCast.AsDecimal)))
-    val frame = QueryCompiler.withMetaSortKeys(posts, meta, Seq("score"), postIdCol = "ID")
+    val frame = QueryCompiler.withMetaSortKeys(posts, meta, Seq("score"), postIdCol = "ID", rowKey = "ID")
     val ordered = frame
       .orderBy(QueryCompiler.sortColumns(qb, frame.apply) :+ $"ID".asc: _*)
       .select($"ID").collect().map(_.getLong(0)).toSeq
@@ -139,7 +139,7 @@ class QueryCompilerSuite extends AnyFunSuite {
   test("F5: AsDate cast on garbage meta yields null (documented MySQL divergence)") {
     val m = Seq((1L, "when", "2026-01-02"), (2L, "when", "not a date"))
       .toDF("post_id", "meta_key", "meta_value")
-    val frame = QueryCompiler.withMetaSortKeys(posts, m, Seq("when"), postIdCol = "ID")
+    val frame = QueryCompiler.withMetaSortKeys(posts, m, Seq("when"), postIdCol = "ID", rowKey = "ID")
     val cast = frame.select($"ID",
       QueryCompiler.castMeta($"__meta_sort_when", MetaCast.AsDate).as("d")).collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap

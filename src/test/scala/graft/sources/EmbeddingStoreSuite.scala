@@ -325,4 +325,46 @@ class EmbeddingStoreSuite extends AnyFunSuite {
     // the copy carries no hidden mutation debris (vacuumed pre-copy)
     assert(!new java.io.File(s"$dir/b/.staging").exists())
   }
+
+  test("read() passes the inferred schema: same fields in the same order, with and without prefixDims") {
+    val (plain, _) = freshStore()
+    val dir = Files.createTempDirectory("graft_store_schema").toString
+    val prefixed = new EmbeddingStore(spark, s"$dir/emb", numBuckets, prefixDims = Some(2))
+    prefixed.bulkLoad(raw((1L, 0, Seq(1f, -2f, 3f)), (2L, 0, Seq(-1f, -1f, 4f))))
+    for (store <- Seq(plain, prefixed)) {
+      val inferred = spark.read.parquet(store.storePath).schema.fields.toSeq
+      assert(store.read().schema.fields.toSeq == inferred)
+      assert(store.read().schema.fields.toSeq == inferred, "memoized schema drifted")
+    }
+    assert(prefixed.read().columns.contains("vector_prefix"))
+    assert(!plain.read().columns.contains("vector_prefix"))
+  }
+
+  test("read() sees every mutation through its memoized schema: second-handle overwrite, upsert, deleteMany") {
+    val (store, dir) = freshStore()
+    assert(store.count() == 6)
+    // a second handle overwrites the store with another row set and an
+    // extra column: both the rows and the new schema must show
+    new EmbeddingStore(spark, s"$dir/emb", numBuckets).bulkLoad(
+      raw((7L, 0, Seq(1f, 1f, 1f)), (8L, 0, Seq(2f, 2f, 2f))).withColumn("note", lit("x")))
+    assert(store.read().select("post_id").as[Long].collect().toSet == Set(7L, 8L))
+    assert(store.read().schema.fields.toSeq ==
+      spark.read.parquet(store.storePath).schema.fields.toSeq)
+    assert(store.read().columns.contains("note"))
+    store.upsert(raw((9L, 0, Seq(3f, 3f, 3f))).withColumn("note", lit("y")))
+    assert(store.read().select("post_id").as[Long].collect().toSet == Set(7L, 8L, 9L))
+    store.deleteMany(store.read().filter($"post_id" === 7L).select("id"))
+    assert(store.read().select("post_id").as[Long].collect().toSet == Set(8L, 9L))
+  }
+
+  test("read() restores a crashed swap's hidden bucket before reading, memoized schema or not") {
+    val (store, dir) = freshStore()
+    val want = keyIds(store) // warms the schema memo
+    val b = store.read().select(pmod(hash($"post_id"), lit(numBuckets))).as[Int].head()
+    val victim = java.nio.file.Paths.get(s"$dir/emb/bucket=$b")
+    val bak = victim.resolveSibling(s".bucket=$b.bak")
+    Files.move(victim, bak)
+    assert(keyIds(store) == want, "the hidden bucket's rows are back")
+    assert(!Files.exists(bak) && Files.exists(victim))
+  }
 }
