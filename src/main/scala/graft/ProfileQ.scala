@@ -11,7 +11,14 @@ import org.apache.spark.sql.functions._
   * final-plan `Explain` says nothing because the time lives in the
   * NUMBER of scheduled jobs, not any one plan. Runs the query once
   * untimed (codegen/JIT warm), then once profiled. Not part of the
-  * driver contract. */
+  * driver contract.
+  *
+  * Next to the job count it prints the Janino compiles of the profiled
+  * pass (`CodegenMetrics`' compile counter; its time histogram keeps a
+  * decaying sample, so no compile-time total is printed). The warm pass
+  * runs the same input, so only compiles a row does on EVERY run show —
+  * e.g. per-insert graph walks scoring fresh vectors — never the ones a
+  * new query input would add. */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(
@@ -42,9 +49,12 @@ object ProfileQ {
     }
     force(SparkEntry.queries(name)(spark, sfDir)) // warm, untimed
     done.clear(); starts.clear()
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = compiles.getCount
     val t0 = System.nanoTime()
     force(SparkEntry.queries(name)(spark, sfDir))
     val wall = (System.nanoTime() - t0) / 1e9
+    val compiled = compiles.getCount - c0
     import scala.jdk.CollectionConverters._
     val all = done.asScala.toSeq.sortBy(_._1)
     all.foreach { case (id, s, site) =>
@@ -54,7 +64,7 @@ object ProfileQ {
       .map { case (site, js) => (site, js.size, js.map(_._2).sum) }
       .sortBy(-_._3)
       .foreach { case (site, n, s) => println(f"  $n%3d ${s}%8.3f  $site") }
-    println(f"PROFILE $name: ${all.size} jobs, " +
+    println(f"PROFILE $name: ${all.size} jobs, $compiled codegen compiles, " +
       f"${all.map(_._2).sum}%.3f s summed, ${wall}%.3f s wall")
     spark.stop()
   }

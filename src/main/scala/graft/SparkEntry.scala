@@ -2588,11 +2588,9 @@ object SparkEntry {
       val embs = t(s, d, "embeddings")
       val qv = embs.filter(col("vec_id") === 0L)
         .select(col("embedding")).head().getSeq[Float](0).toArray
-      val qMag = SearchEngine.magnitudeOf(qv)
       val res = embs.select(col("vec_id").as("doc_id"),
-        (vecDot(col("embedding"), lit(qv).cast(ArrayType(FloatType))) /
-          (vecMagnitude(col("embedding")) * lit(qMag) +
-            lit(graft.functions.VectorFunctions.CosineEps))).as("rscore"))
+        vecCosine(col("embedding"),
+          lit(qv).cast(ArrayType(FloatType))).as("rscore"))
       SearchEngine.rescoreWindow(
         idx.bm25Ranked(Seq("sort", "merge", "spark")), res,
         windowSize = 30, k = 20, wq = 1.0, wr = 2.0)

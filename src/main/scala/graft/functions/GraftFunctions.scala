@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Add, Divide, Expression, ExpressionInfo, Literal, Multiply, Sqrt}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Sqrt}
+import org.apache.spark.sql.types.DoubleType
 
 /** SQL registration for the engine's codegen vector expressions, so
   * `spark.sql("SELECT vec_dot(a, b) ...")` works alongside the Column API
@@ -17,8 +18,6 @@ import org.apache.spark.sql.catalyst.expressions.{Add, Divide, Expression, Expre
   */
 object GraftFunctions {
 
-  private def magnitude(v: Expression): Expression = Sqrt(DotProductFloat(v, v))
-
   private[functions] def fns: Seq[(String, Seq[Expression] => Expression)] = vecFns ++
     PipelineSqlFunctions.fns // text/dedup/sampling pipeline kernels (§2.12)
 
@@ -28,15 +27,18 @@ object GraftFunctions {
     "pack_sign_bits" -> (args => PackSignBits(args(0))),
     "simhash64" -> (args => SimHash64(args(0))),
     "nfc_normalize" -> (args => NfcNormalize(args(0))),
-    // composites built as raw Catalyst trees (the Column->Expression
-    // bridge leaves unresolved nodes behind when used inside a registry
-    // builder); epsilon matches VectorFunctions.CosineEps so SQL and
-    // Column callers cannot diverge
-    "vec_magnitude" -> (args => magnitude(args(0))),
-    "vec_cosine" -> (args => Divide(
-      DotProductFloat(args(0), args(1)),
-      Add(Multiply(magnitude(args(0)), magnitude(args(1))),
-        Literal(VectorFunctions.CosineEps)))))
+    // vec_magnitude is a raw Catalyst tree (the Column->Expression bridge
+    // leaves unresolved nodes behind when used inside a registry builder);
+    // vec_cosine is the fused kernel VectorFunctions.vecCosine builds, so
+    // SQL and Column callers share one expression: vec_cosine(v, q), or
+    // vec_cosine(v, q, v_magnitude) with the row's stored magnitude
+    "vec_magnitude" -> (args => Sqrt(DotProductFloat(args(0), args(0)))),
+    "vec_cosine" -> {
+      case Seq(v, q) => CosineFloat(v, q)
+      case Seq(v, q, m) => CosineFloatStored(v, q, Cast(m, DoubleType))
+      case args => throw new IllegalArgumentException(
+        s"vec_cosine takes (v, q) or (v, q, v_magnitude), got ${args.size} arguments")
+    })
 
   def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
     spark.sessionState.functionRegistry.registerFunction(

@@ -54,6 +54,128 @@ case class DotProductFloat(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The one cosine kernel behind `vec_cosine` (`src/VectorTable.php:164-181`):
+  * `dot(v, q) / (|v|·|q| + CosineEps)` in a single pass over both arrays —
+  * dot over `min(len v, len q)`, `|v|²` over `len v` (unless the row's
+  * stored magnitude is given), `|q|²` over `len q`, each the index-ordered
+  * double fold of [[DotProductFloat]] — then the denominator in the
+  * composite tree's order, `sqrt(vv)·sqrt(qq) + eps` (`Sqrt`, `Multiply`,
+  * `Add`, `Divide`), so every result is bit-identical to
+  * `Divide(vec_dot(v, q), Add(Multiply(sqrt(vec_dot(v, v)),
+  * sqrt(vec_dot(q, q))), eps))`. A zero denominator — reachable only
+  * through a stored magnitude of exactly `-eps/|q|` — gives NULL.
+  *
+  * The query's magnitude is computed here rather than passed in: a
+  * `double` literal is inlined into generated Java as text, so a
+  * per-request `|q|` made every new query compile fresh classes. An array
+  * literal reaches generated code by reference, so two queries of the same
+  * shape share one compiled plan. */
+private object CosineKernel {
+  def eval(v: ArrayData, q: ArrayData, storedMag: Option[Double]): Any = {
+    val nv = v.numElements()
+    val nq = q.numElements()
+    val n = math.min(nv, nq)
+    var s = 0.0; var vv = 0.0; var qq = 0.0
+    var i = 0
+    while (i < n) {
+      val x = v.getFloat(i).toDouble
+      val y = q.getFloat(i).toDouble
+      s += x * y; vv += x * x; qq += y * y
+      i += 1
+    }
+    if (storedMag.isEmpty) while (i < nv) { val x = v.getFloat(i).toDouble; vv += x * x; i += 1 }
+    i = n
+    while (i < nq) { val y = q.getFloat(i).toDouble; qq += y * y; i += 1 }
+    val den = storedMag.getOrElse(math.sqrt(vv)) * math.sqrt(qq) + VectorFunctions.CosineEps
+    if (den == 0.0) null else s / den
+  }
+
+  def code(ctx: CodegenContext, ev: ExprCode, v: String, q: String,
+      storedMag: Option[String]): String = {
+    val Seq(nv, nq, n, i, x, y, s, vv, qq, den) =
+      Seq("nv", "nq", "n", "i", "x", "y", "s", "vv", "qq", "den").map(ctx.freshName)
+    val vTail = if (storedMag.isDefined) "" else
+      s"""for (; $i < $nv; $i++) {
+         |  double $x = (double) $v.getFloat($i);
+         |  $vv += $x * $x;
+         |}""".stripMargin
+    s"""
+       |int $nv = $v.numElements();
+       |int $nq = $q.numElements();
+       |int $n = java.lang.Math.min($nv, $nq);
+       |double $s = 0.0;
+       |double $vv = 0.0;
+       |double $qq = 0.0;
+       |int $i = 0;
+       |for (; $i < $n; $i++) {
+       |  double $x = (double) $v.getFloat($i);
+       |  double $y = (double) $q.getFloat($i);
+       |  $s += $x * $y;
+       |  $vv += $x * $x;
+       |  $qq += $y * $y;
+       |}
+       |$vTail
+       |for ($i = $n; $i < $nq; $i++) {
+       |  double $y = (double) $q.getFloat($i);
+       |  $qq += $y * $y;
+       |}
+       |double $den = ${storedMag.getOrElse(s"java.lang.Math.sqrt($vv)")}
+       |  * java.lang.Math.sqrt($qq) + ${VectorFunctions.CosineEps}D;
+       |if ($den == 0.0) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = $s / $den;
+       |}
+     """.stripMargin
+  }
+}
+
+/** `vec_cosine(v, q)`: cosine of a float vector against another (typically
+  * a query literal), both magnitudes computed in the pass. */
+case class CosineFloat(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "vec_cosine"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineKernel.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], None)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => CosineKernel.code(ctx, ev, a, b, None))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** `vec_cosine(v, q, v_magnitude)`: [[CosineFloat]] with the row's stored
+  * magnitude standing in for `sqrt(vec_dot(v, v))` (the store's
+  * `magnitude` column — the reference's stored `magnitude`,
+  * `src/VectorTable.php:173`). The magnitude must be a DOUBLE; the SQL
+  * and Column builders cast it. */
+case class CosineFloatStored(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression {
+
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "vec_cosine"
+
+  override protected def nullSafeEval(a: Any, b: Any, m: Any): Any =
+    CosineKernel.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      Some(m.asInstanceOf[Double]))
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b, m) => CosineKernel.code(ctx, ev, a, b, Some(m)))
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
 /** Hamming distance between two sign-bit sketches packed as long arrays.
   * Replaces the reference's char-by-char bitstring compare
   * (`src/VectorTable.php:126-139`) with XOR + popcount per 64-bit word. */

@@ -47,14 +47,16 @@ object VectorFunctions {
     vecNormalize(slice(v, 1, k))
   }
 
-  /** cosine(a, b) given precomputed magnitudes:
-    * dot / (magA * magB + 1e-12) (`src/VectorTable.php:173`). */
-  def vecCosine(a: Column, b: Column, magA: Column, magB: Column): Column =
-    vecDot(a, b) / (magA * magB + lit(CosineEps))
+  /** cosine(v, q) = dot / (|v|·|q| + 1e-12) (`src/VectorTable.php:173`):
+    * the fused one-pass [[CosineFloat]] kernel. Pass the query as an array
+    * literal (or column), never its magnitude: the plan then compiles once
+    * for every query of the same shape. */
+  def vecCosine(v: Column, q: Column): Column = col(CosineFloat(expr(v), expr(q)))
 
-  /** cosine(a, b) computing both magnitudes inline. */
-  def vecCosine(a: Column, b: Column): Column =
-    vecCosine(a, b, vecMagnitude(a), vecMagnitude(b))
+  /** cosine(v, q) with `v`'s stored magnitude standing in for |v|
+    * (the store's `magnitude` column): [[CosineFloatStored]]. */
+  def vecCosine(v: Column, q: Column, vMagnitude: Column): Column =
+    col(CosineFloatStored(expr(v), expr(q), expr(vMagnitude.cast(DoubleType))))
 
   /** Sign-binarize + pack into longs (`src/VectorTable.php:537-547`;
     * bit = v[i] > 0). 16 longs for 1024 dims, 1 long for 64 dims. */

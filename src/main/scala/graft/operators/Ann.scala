@@ -29,11 +29,8 @@ object Ann {
     * (`src/VectorTable.php:18-22`). */
   def bruteForceTopK(embs: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int): DataFrame = {
-    val q = lit(query).cast(ArrayType(FloatType))
-    val qMag = SearchEngine.magnitudeOf(query)
     embs
-      .withColumn("cosine",
-        vecDot(col(vecCol), q) / (vecMagnitude(col(vecCol)) * lit(qMag) + lit(CosineEps)))
+      .withColumn("cosine", vecCosine(col(vecCol), lit(query).cast(ArrayType(FloatType))))
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
       .select(col(idCol), round(col("cosine"), 6).as("cosine"))
@@ -625,7 +622,6 @@ object Ann {
         .map { case (c, i) => (i, dot(c, qv)) }
         .sortBy { case (i, d) => (-d, i) }.map(_._1)
       struct(lit(qid).as("qid"), lit(qv).cast(ArrayType(FloatType)).as("qv"),
-        lit(math.sqrt(dot(qv, qv))).as("qmag"),
         lit(order.toArray).as("order"))
     }
     val assigned = ivfAssign(
@@ -634,8 +630,7 @@ object Ann {
     val scored = assigned
       .withColumn("__q", explode(array(qStructs: _*)))
       .select(col("id"), col("__q.qid").as("qid"),
-        (vecDot(col("vector"), col("__q.qv")) /
-          (vecMagnitude(col("vector")) * col("__q.qmag") + lit(CosineEps))).as("cos"),
+        vecCosine(col("vector"), col("__q.qv")).as("cos"),
         array_position(col("__q.order"), col("ivf_list"))
           .cast(IntegerType).as("list_rank"))
     val perList = scored
@@ -703,11 +698,8 @@ object Ann {
     // contract above and the oracle's rel-DESC s1 step — excluded
     require(k >= 1 && k <= m, s"k must be in [1, m=$m], got $k")
     require(lambda > 0.0 && lambda <= 1.0, s"lambda must be in (0,1], got $lambda")
-    val q = lit(query).cast(ArrayType(FloatType))
-    val qMag = SearchEngine.magnitudeOf(query)
     val cand = embs
-      .withColumn("__rel",
-        vecDot(col(vecCol), q) / (vecMagnitude(col(vecCol)) * lit(qMag) + lit(CosineEps)))
+      .withColumn("__rel", vecCosine(col(vecCol), lit(query).cast(ArrayType(FloatType))))
       .orderBy(col("__rel").desc, col(idCol).asc)
       .limit(m)
       .select(col(idCol).cast(LongType).as("id"), col("__rel"),
@@ -807,11 +799,7 @@ object Ann {
     val v = col(vecCol)
     val maxes = queryTokens.zipWithIndex.map { case (qt, i) =>
       val q = lit(qt).cast(ArrayType(FloatType))
-      val sim =
-        if (normalized)
-          vecDot(v, q) / (vecMagnitude(v) * lit(SearchEngine.magnitudeOf(qt)) +
-            lit(CosineEps))
-        else vecDot(v, q)
+      val sim = if (normalized) vecCosine(v, q) else vecDot(v, q)
       max(sim).as(s"__m$i")
     }
     val perDoc = chunks

@@ -308,12 +308,11 @@ object GraphAnn {
     import spark.implicits._
     val nodes = embs.select(col(idCol).cast(LongType).as("id"),
       col(vecCol).as("v"))
-    val q = lit(query).cast(ArrayType(FloatType))
-    val qMag = SearchEngine.magnitudeOf(query)
+    // the one scoring expression both walks evaluate
+    val cos = vecCosine(col("v"), lit(query).cast(ArrayType(FloatType))).as("cos")
     def scoreIds(ids: DataFrame): DataFrame = ids
       .join(nodes, "id")
-      .select(col("id"), (vecDot(col("v"), q) /
-        (vecMagnitude(col("v")) * lit(qMag) + lit(CosineEps))).as("cos"))
+      .select(col("id"), cos)
     val bucketExpr: Column => Column =
       frontierBucket.getOrElse((_: Column) => lit(0))
     // Bounded beams walk DRIVER-SIDE (r22): the visited set of a
@@ -334,9 +333,7 @@ object GraphAnn {
       def score(ids: Seq[Long]): Seq[(Long, Double, Int)] =
         if (ids.isEmpty) Nil
         else nodes.filter(col("id").isin(ids: _*))
-          .select(col("id"), (vecDot(col("v"), q) /
-            (vecMagnitude(col("v")) * lit(qMag) + lit(CosineEps))).as("cos"),
-            bucketExpr(col("id")).cast(IntegerType).as("b"))
+          .select(col("id"), cos, bucketExpr(col("id")).cast(IntegerType).as("b"))
           .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
       val cosOf = scala.collection.mutable.HashMap.empty[Long, Double]
       val bucketIdOf = scala.collection.mutable.HashMap.empty[Long, Int]

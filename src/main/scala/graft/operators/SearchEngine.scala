@@ -24,7 +24,9 @@ import graft.query.{QueryBuilder, QueryCompiler}
   *            sketch, top-(10n) via orderBy+limit -> TakeOrderedAndProject
   *            (per-partition heap + single merge — the distributed version
   *            of the reference's SplMinHeap, `VectorTable.php:122-146`)
-  *   stage 3  exact cosine rerank over only 10n rows, top-(5n)
+  *   stage 3  exact cosine rerank over only 10n rows, top-(5n): the fused
+  *            `vec_cosine` kernel with the stored magnitude, the query an
+  *            array literal, so every query reuses one compiled plan
   *   stage 4  optional attribute sort (posts/meta keys), final limit n —
   *            on the single-partition top-5n frame, so no exchange
   *
@@ -80,7 +82,6 @@ object SearchEngine {
       cfg: SearchConfig = SearchConfig()): DataFrame = {
 
     val qBits = packQuery(queryVec)
-    val qMag = magnitudeOf(queryVec)
     val qVecLit = lit(queryVec).cast(ArrayType(FloatType))
     val qBitsLit = lit(qBits)
 
@@ -121,8 +122,7 @@ object SearchEngine {
       .select(col("id").as("__rid"), col("vector"), col("magnitude"))
       .join(broadcast(hamming), col("__rid") === hamming("id"), "inner")
       .select(col("id"), col("post_id"), col("hamming_distance"),
-        (vecDot(col("vector"), qVecLit) / (col("magnitude") * lit(qMag) + lit(CosineEps)))
-          .as("cosine_similarity"))
+        vecCosine(col("vector"), qVecLit, col("magnitude")).as("cosine_similarity"))
       .orderBy(col("cosine_similarity").desc, col("id").asc)
       .limit(cfg.stage3Factor * n)
 
@@ -197,12 +197,12 @@ object SearchEngine {
     * stage 4 attribute sorts are caller-composed query shapes, not fixed
     * stages — SQL callers add their own WHERE / ORDER BY around this.
     *
-    * Arithmetic parity with [[search]] is exact: the query literal, its
-    * magnitude, and the epsilon are interpolated from the SAME
-    * driver-computed values via shortest-round-trip repr (recomputing
-    * `sqrt(sum x^2)` in SQL could land one ulp away at a representation
-    * tie), and both orderings carry the id tiebreak. The plan compiles to
-    * the same two TakeOrderedAndProject heaps + broadcast-joined rerank. */
+    * Arithmetic parity with [[search]] is exact: the rerank is the same
+    * kernel, `vec_cosine(vector, q, magnitude)`, over the same float query
+    * literal (each element's shortest-round-trip repr reads back to the
+    * same float), and both orderings carry the id tiebreak. The plan
+    * compiles to the same two TakeOrderedAndProject heaps +
+    * broadcast-joined rerank. */
   def searchSqlText(queryVec: Array[Float], n: Int,
       embeddingsView: String = "embeddings",
       cfg: SearchConfig = SearchConfig()): String = {
@@ -210,8 +210,6 @@ object SearchEngine {
     require(queryVec.nonEmpty, "empty query vector")
     val qArr = queryVec.map(v => s"CAST('$v' AS FLOAT)")
       .mkString("array(", ", ", ")")
-    val qMag = s"CAST('${magnitudeOf(queryVec)}' AS DOUBLE)"
-    val eps = s"CAST('$CosineEps' AS DOUBLE)"
     s"""WITH ham AS (
        |  SELECT id, post_id,
        |         hamming_dist(binary_code, pack_sign_bits($qArr)) AS hamming_distance
@@ -221,8 +219,7 @@ object SearchEngine {
        |),
        |rr AS (
        |  SELECT e.id, e.post_id, h.hamming_distance,
-       |         vec_dot(e.vector, $qArr) / (e.magnitude * $qMag + $eps)
-       |           AS cosine_similarity
+       |         vec_cosine(e.vector, $qArr, e.magnitude) AS cosine_similarity
        |  FROM ham h JOIN $embeddingsView e ON e.id = h.id
        |  ORDER BY cosine_similarity DESC, id ASC
        |  LIMIT ${cfg.stage3Factor * n}

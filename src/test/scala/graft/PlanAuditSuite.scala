@@ -1032,9 +1032,9 @@ class PlanAuditSuite extends AnyFunSuite {
 
   private val searchQuery = Array.tabulate(8)(d => (d % 3 - 1).toFloat)
 
-  private def search(b: query.QueryBuilder): DataFrame = {
+  private def search(b: query.QueryBuilder, q: Array[Float] = searchQuery): DataFrame = {
     val (store, posts, meta) = searchFixture
-    operators.SearchEngine.search(store.read(), posts, meta, searchQuery, 5, b)
+    operators.SearchEngine.search(store.read(), posts, meta, q, 5, b)
   }
 
   /** The prepared, not yet executed, physical plan: its exchanges are plain
@@ -1106,5 +1106,81 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(f <= 6, s"filtered search launched $f jobs")
     val u = jobsOf(search(query.QueryBuilder()).collect())
     assert(u <= 2, s"unfiltered search launched $u jobs")
+  }
+
+  // ---- compile once: no per-request constant reaches generated code ------
+
+  /** Three distinct 8-d queries of one shape. */
+  private val fresh = Seq.tabulate(3)(k =>
+    Array.tabulate(8)(d => ((d * (k + 3) + k) % 7 - 3) * (0.37f + 0.11f * k)))
+
+  /** A 32-vector IVF index over 4 lists, registered as SQL views too. */
+  private lazy val ivfFixture = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val vecs = (1L to 32L).map(i => i -> Array.fill(8)(rnd.nextFloat() * 2f - 1f))
+    val dir = java.nio.file.Files.createTempDirectory("graft_compile_audit").toString
+    val idx = new sources.IvfIndex(spark, s"$dir/ivf")
+    idx.build(vecs.toDF("vec_id", "embedding"), "vec_id", "embedding", vecs.take(4).map(_._2))
+    new sources.StoreCatalog(spark).registerIvfIndex("compile_audit", s"$dir/ivf")
+    functions.GraftFunctions.register(spark)
+    idx
+  }
+
+  private def floatArray(q: Array[Float]): String =
+    q.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ", ", ")")
+
+  /** The benchmark's SQL IVF probe: pick the 2 best lists driver-side,
+    * then score them with `vec_cosine` over the registered views. */
+  private def sqlIvf(q: Array[Float]): DataFrame = {
+    val probes = ivfFixture.centroids().zipWithIndex
+      .map { case (c, i) => (i, c.zip(q).map { case (x, y) => x.toDouble * y }.sum) }
+      .sortBy { case (i, d) => (-d, i) }.take(2).map(_._1)
+    spark.sql(s"""SELECT id, round(vec_cosine(vector, ${floatArray(q)}), 6) AS cosine
+                 |FROM compile_audit_lists WHERE ivf_list IN (${probes.mkString(", ")})
+                 |ORDER BY vec_cosine(vector, ${floatArray(q)}) DESC, id ASC LIMIT 5""".stripMargin)
+  }
+
+  private def compiles(body: => Any): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = METRIC_COMPILATION_TIME.getCount
+    body
+    METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** Each serve plan compiles once: two queries run the same generated
+    * source, and once one has run, a query never seen before compiles
+    * nothing (Janino's class cache is keyed by the source text, so a
+    * literal inlined into it would compile every request afresh). */
+  for ((name, plan) <- Seq[(String, Array[Float] => DataFrame)](
+      "search" -> (q => search(query.QueryBuilder(), q)),
+      "filtered and sorted search" -> (q => search(filtered, q)),
+      "searchPosts" -> { q =>
+        val (store, posts, meta) = searchFixture
+        operators.SearchEngine.searchPosts(store.read(), posts, meta, q, 3)
+      },
+      "IvfIndex.search" -> (q => ivfFixture.search(q, k = 5, nprobe = 2)),
+      "searchSqlText" -> { q =>
+        searchFixture._1.read().createOrReplaceTempView("compile_audit_embeddings")
+        functions.GraftFunctions.register(spark)
+        spark.sql(operators.SearchEngine.searchSqlText(q, 5, "compile_audit_embeddings"))
+      },
+      "vec_cosine over registerIvfIndex views" -> sqlIvf)) {
+    test(s"compile once: $name runs one generated source for every query vector") {
+      def source(q: Array[Float]): Seq[String] = {
+        val frame = plan(q)
+        frame.collect()
+        frame.queryExecution.debug.codegenToSeq().map(_._2)
+      }
+      val Seq(q1, q2, q3) = fresh
+      val first = source(q1)
+      assert(first.nonEmpty, s"$name: no whole-stage code to compare")
+      val second = source(q2)
+      val diff = first.flatMap(_.linesIterator).zipAll(second.flatMap(_.linesIterator), "", "")
+        .find { case (a, b) => a != b }
+      assert(diff.isEmpty, s"$name: a new query vector changed the generated source: $diff")
+      val n = compiles(plan(q3).collect())
+      assert(n == 0, s"$name: a fresh query vector compiled $n classes after a warm call")
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Properties}
@@ -9,10 +11,14 @@ import org.scalacheck.Prop.forAll
 import graft.operators.SearchEngine
 
 /** ScalaCheck properties for the codegen vector expressions (SURVEY.md §5
-  * item 1). These exercise the interpreted `eval` path directly — no Spark
-  * session — so hundreds of generated cases run in milliseconds; the
-  * Spark-side (codegen) path of the same expressions is covered by the
-  * DataFrame suites and the DuckDB oracle queries (q30-q37). */
+  * item 1). No Spark session: most properties exercise the interpreted
+  * `eval` path directly, so hundreds of generated cases run in
+  * milliseconds; the Spark-side path of those is covered by the DataFrame
+  * suites and the DuckDB oracle queries (q30-q37). The `vec_cosine`
+  * kernel properties also run its generated code — one projection
+  * compiled per form with `GenerateUnsafeProjection` (the codegen path of
+  * `UnsafeProjection.create`, without its interpreted fallback) — and hold
+  * both paths bit for bit to the composite trees the kernel replaced. */
 object VectorExpressionProps extends Properties("VectorExpressions") {
 
   private def vecN(n: Int): Gen[Array[Float]] =
@@ -39,6 +45,82 @@ object VectorExpressionProps extends Properties("VectorExpressions") {
     HammingDistPacked(litL(a), litL(b)).eval().asInstanceOf[Int]
   private def simhash(hs: Array[Long]): Long =
     SimHash64(litL(hs)).eval().asInstanceOf[Long]
+
+  // ---- vec_cosine: the fused kernel vs the composite trees it replaced ---
+
+  private val vecType = ArrayType(FloatType, containsNull = false)
+  private val vRef = BoundReference(0, vecType, nullable = true)
+  private val qRef = BoundReference(1, vecType, nullable = true)
+  private val mRef = BoundReference(2, DoubleType, nullable = true)
+  private val eps = Literal(VectorFunctions.CosineEps)
+  private def mag(a: Expression): Expression = Sqrt(DotProductFloat(a, a))
+
+  /** (kernel, composite) pairs: the 2-argument form against
+    * `dot / (sqrt(dot(v,v))·sqrt(dot(q,q)) + eps)`, the stored-magnitude
+    * form against the same tree with the row's magnitude for |v|. */
+  private val twoArg = (CosineFloat(vRef, qRef),
+    Divide(DotProductFloat(vRef, qRef), Add(Multiply(mag(vRef), mag(qRef)), eps)))
+  private val stored = (CosineFloatStored(vRef, qRef, mRef),
+    Divide(DotProductFloat(vRef, qRef), Add(Multiply(mRef, mag(qRef)), eps)))
+
+  private lazy val compiled: Map[Expression, UnsafeProjection] =
+    Seq(twoArg, stored).flatMap { case (k, c) => Seq(k, c) }
+      .map(e => e -> GenerateUnsafeProjection.generate(Seq(e))).toMap
+
+  /** Raw long bits, so NaN payloads and signed zeros compare too; None is NULL. */
+  private def bits(d: Any): Option[Long] =
+    Option(d).map(x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double]))
+
+  /** One result per eval path: interpreted, then generated code. */
+  private def results(e: Expression, row: InternalRow): Seq[Option[Long]] = {
+    val out = compiled(e)(row)
+    Seq(bits(e.eval(row)), if (out.isNullAt(0)) None else bits(out.getDouble(0)))
+  }
+
+  private val element: Gen[Float] = Gen.frequency(
+    12 -> Gen.chooseNum(-8f, 8f), 1 -> Gen.const(Float.NaN),
+    1 -> Gen.oneOf(Float.PositiveInfinity, Float.NegativeInfinity), 1 -> Gen.const(0f))
+  /** Random, zero, empty and special-valued vectors of independent lengths
+    * (so the pair is usually mismatched), or null. */
+  private val anyVec: Gen[Option[Array[Float]]] = Gen.frequency(
+    10 -> Gen.choose(0, 40).flatMap(vecN).map(Some(_)),
+    3 -> Gen.choose(0, 40).flatMap(n => Gen.containerOfN[Array, Float](n, element)).map(Some(_)),
+    1 -> Gen.choose(0, 40).map(n => Some(Array.fill(n)(0f))),
+    1 -> Gen.const(None))
+  private val anyMag: Gen[Option[Double]] = Gen.frequency(
+    6 -> Gen.chooseNum(0.0, 50.0).map(Some(_)), 1 -> Gen.chooseNum(-50.0, 0.0).map(Some(_)),
+    1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, 0.0, -0.0).map(Some(_)),
+    1 -> Gen.const(None))
+
+  private def row(v: Option[Array[Float]], q: Option[Array[Float]], m: Option[Double]) =
+    InternalRow(v.map(a => new GenericArrayData(a)).orNull,
+      q.map(a => new GenericArrayData(a)).orNull, m.map(Double.box).orNull)
+
+  private def agrees(pair: (Expression, Expression), r: InternalRow): Boolean = {
+    val kernel = results(pair._1, r)
+    kernel.distinct.size == 1 && kernel == results(pair._2, r)
+  }
+
+  property("vec_cosine(v, q) is bit-identical to the composite tree, eval and codegen") =
+    forAll(anyVec, anyVec) { (v, q) => agrees(twoArg, row(v, q, None)) }
+
+  property("vec_cosine(v, q, mag) is bit-identical to the stored-magnitude tree") =
+    forAll(anyVec, anyVec, anyMag) { (v, q, m) => agrees(stored, row(v, q, m)) }
+
+  property("vec_cosine with a null vector, query or magnitude is null on both paths") =
+    forAll(anyVec, anyVec, anyMag, Gen.choose(0, 2)) { (v, q, m, hole) =>
+      val r = row(if (hole == 0) None else v, if (hole == 1) None else q, if (hole == 2) None else m)
+      (hole == 2 || results(twoArg._1, r).forall(_.isEmpty)) &&
+        results(stored._1, r).forall(_.isEmpty)
+    }
+
+  property("in-kernel |q| is SearchEngine.magnitudeOf(q): the old stage-3 tree, bit for bit") =
+    forAll(anyVec, anyVec, anyMag) { (v, q, m) =>
+      val r = row(v, q, m)
+      val oldStage3 = Divide(DotProductFloat(vRef, qRef),
+        Add(Multiply(mRef, Literal(q.map(SearchEngine.magnitudeOf).getOrElse(0.0))), eps))
+      q.isEmpty || results(stored._1, r).forall(_ == bits(oldStage3.eval(r)))
+    }
 
   property("dot matches sequential double accumulation") = forAll(pair) { case (a, b) =>
     val expected = a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x.toDouble * y.toDouble }

@@ -52,7 +52,7 @@ class VectorFunctionsSuite extends AnyFunSuite {
     val both = df.filter($"id" =!= 99L).as("a").crossJoin(df.filter($"id" === 1L).as("b"))
       .select(
         vecCosine($"a.v", $"b.v").as("c1"),
-        vecCosine($"a.v", $"b.v", vecMagnitude($"a.v"), vecMagnitude($"b.v")).as("c2"))
+        vecCosine($"a.v", $"b.v", vecMagnitude($"a.v")).as("c2"))
       .collect()
     both.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
