@@ -29,8 +29,8 @@ import graft.util.{DenseIds, StampedMemo}
   *  - the wide `vector` column is only read by stages that need it
   *    (Catalyst column pruning; see SearchEngine stage separation);
   *  - all path operations go through the Hadoop `FileSystem` API, so the
-  *    store works on HDFS/S3A/local alike (rename is atomic on HDFS and
-  *    local; on S3A the swap degrades to copy-and-delete but stays correct).
+  *    store works on HDFS/S3A/local alike (bucket swaps go through
+  *    [[LayoutFs]], which states the rename-atomicity caveat for S3A).
   */
 final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 64,
     prefixDims: Option[Int] = None) {
@@ -326,31 +326,17 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     rows.toDF("bucket", "n_files").orderBy(col("bucket"))
   }
 
-  /** Consistent on-disk SNAPSHOT of the whole store — bucket
-    * directories and the prefix-dims meta (the
-    * [[graft.sources.InvertedIndex.snapshot]] surface on the primary
-    * embedding table, completing backup coverage across every
-    * persisted layout): [[recoverAll]] quiesces the two-rename swaps
-    * and [[vacuum]] drops the hidden mutation debris first (debris is
-    * space, not state — a snapshot should not ship it), then the tree
-    * copies byte-faithfully. Restore is free by construction — open
-    * the copy (`new EmbeddingStore(spark, target)`) or copy it back.
-    * Crash protocol: hidden `.snapstaging` sibling + rename — the
-    * target either doesn't exist or is complete; debris never blocks
-    * a retry. */
-  def snapshot(targetPath: String): Unit = {
-    recoverAll()
-    vacuum()
-    val dst = new Path(targetPath)
-    require(!fs.exists(dst), s"snapshot target $targetPath already exists")
-    val staging = new Path(dst.getParent, s".${dst.getName}.snapstaging")
-    fs.delete(staging, true) // a crashed prior attempt's debris
-    if (!graft.util.TreeCopy.copy(fs, new Path(path), staging,
-        spark.sparkContext.hadoopConfiguration)) // file-parallel (r22)
-      sys.error(s"snapshot copy to $staging failed")
-    if (!fs.rename(staging, dst))
-      sys.error(s"could not publish snapshot $staging -> $targetPath")
-  }
+  /** Consistent on-disk snapshot of the whole store — bucket
+    * directories and the prefix-dims meta ([[LayoutFs.snapshot]]). The
+    * quiesce is [[recoverAll]] (crashed bucket swaps) then [[vacuum]]
+    * (hidden mutation debris is space, not state — a snapshot should
+    * not ship it). Open the copy with `new EmbeddingStore(spark, target)`. */
+  def snapshot(targetPath: String): Unit =
+    LayoutFs.snapshot(fs, new Path(path), targetPath,
+        spark.sparkContext.hadoopConfiguration) {
+      recoverAll()
+      vacuum()
+    }
 
   /** Bulk load: derive columns, assign ids, bucket, write. */
   def bulkLoad(raw: DataFrame): Unit = {
@@ -387,14 +373,14 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   private def rewriteBuckets(buckets: Set[Int])(f: (Int, DataFrame) => DataFrame): Unit = {
     buckets.foreach { b =>
       val dir = s"$path/bucket=$b"
-      recoverSwap(new Path(dir))
+      LayoutFs.recover(fs, new Path(dir))
       val cur =
         if (fs.exists(new Path(dir))) spark.read.parquet(dir)
         else read().filter(lit(false)).drop("bucket")
       val out = f(b, cur)
       val tmp = s"$path/.tmp_bucket_$b"
       out.coalesce(1).write.mode("overwrite").parquet(tmp)
-      atomicSwap(new Path(tmp), new Path(dir))
+      LayoutFs.swap(fs, new Path(tmp), new Path(dir))
     }
     schemaMemo.invalidate()
     // persist the prefix setting on stores that predate it (bulkLoad wrote
@@ -403,67 +389,14 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     effectivePrefixDims.filter(_ => !fs.exists(metaPath)).foreach(writeMeta)
   }
 
-  /** Dot-prefixed backup path: hidden files/dirs are skipped by Spark's
-    * file listing and partition discovery, so a crash mid-swap can never
-    * surface BOTH old and new rows (or a `bucket=N.bak` partition value)
-    * to readers. */
-  private def bakPath(dst: Path): Path = new Path(dst.getParent, "." + dst.getName + ".bak")
-
   /** Sweep the WHOLE store for hidden swap backups left by a crashed
     * mutation and restore them eagerly. Runs at the top of [[read]] — i.e.
     * before ANY consumer (including upsert/insertAll, which compute maxId
     * and the existing-key join from read()) can observe the store. Without
     * the sweep, a bucket hidden in a `.bak` would make its keys look new to
     * the next upsert: id churn, lost created_at, and fresh ids colliding
-    * with the hidden bucket's ids store-wide. One listStatus of the store
-    * root per call — a single NameNode/S3 LIST, negligible next to the
-    * file listing that follows. */
-  private def recoverAll(): Unit = {
-    val matches = Option(fs.globStatus(new Path(path, ".bucket=*.bak")))
-    matches.toSeq.flatten.foreach { st =>
-      val name = st.getPath.getName // ".bucket=N.bak"
-      val dst = new Path(st.getPath.getParent, name.stripPrefix(".").stripSuffix(".bak"))
-      recoverSwap(dst)
-    }
-  }
-
-  /** Crash recovery for the two-rename swap: if a previous mutation died
-    * between its renames, the live dir is missing and the hidden backup
-    * holds the pre-mutation rows — restore it before proceeding. (A crash
-    * AFTER the second rename leaves a stale hidden backup: deleted here.) */
-  private def recoverSwap(dst: Path): Unit = {
-    val bak = bakPath(dst)
-    if (fs.exists(bak)) {
-      if (!fs.exists(dst)) {
-        if (!fs.rename(bak, dst))
-          throw new java.io.IOException(s"cannot recover $dst from $bak")
-      } else fs.delete(bak, true)
-    }
-  }
-
-  /** Swap `tmp` into place via the Hadoop FileSystem API (HDFS/S3A/local —
-    * not java.nio, which only works on a local disk). Two renames, not one
-    * atomic op; the hidden backup + [[recoverSwap]] close the crash
-    * window: at every instant readers see either only-old or only-new.
-    *
-    * Atomicity assumption, stated once for the engine's whole
-    * two-rename/marker family: each `rename` is assumed to be an ATOMIC
-    * O(1) metadata operation that either fully happens or not at all —
-    * true on HDFS and POSIX local filesystems. On an object store
-    * without atomic rename (plain S3), `FileSystem.rename` degrades to
-    * copy-then-delete: correctness survives (recovery re-walks the
-    * state-checked steps) but a crash mid-copy can expose a partially
-    * copied directory to the recovery scan, and the O(1)-metadata cost
-    * model breaks — on such stores the commit primitive should be a
-    * manifest/pointer flip (the [[graft.sources.NgramLm]] versioned-
-    * pointer pattern) rather than directory renames. */
-  private def atomicSwap(tmp: Path, dst: Path): Unit = {
-    val bak = bakPath(dst)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dst) && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"cannot back up $dst")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"cannot swap $tmp into $dst")
-    if (fs.exists(bak)) fs.delete(bak, true)
-  }
+    * with the hidden bucket's ids store-wide. One glob of the store root
+    * per call — a single NameNode/S3 LIST, negligible next to the file
+    * listing that follows. */
+  private def recoverAll(): Unit = LayoutFs.recoverUnder(fs, new Path(path), "bucket=*")
 }

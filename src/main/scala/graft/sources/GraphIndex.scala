@@ -27,9 +27,9 @@ import graft.operators.GraphAnn
   *    live one.
   *  - [[append]] is the FreshDiskANN INSERT: beam-search candidates
   *    over the current graph, RobustPrune to the new node's out-edges,
-  *    reverse edges under the degree cap — applied as bucket-grouped
-  *    rewrites under the two-rename + hidden-backup crash protocol
-  *    (every read path recovers first), request-sized batches only.
+  *    reverse edges under the degree cap — applied as one staged,
+  *    marker-committed batch of bucket rewrites (every read path rolls
+  *    a committed batch forward first), request-sized batches only.
   *  - [[delete]] is the FreshDiskANN lazy delete (Singh et al.,
   *    2105.09613): ids append to a tiny `tombstones/` table, O(batch)
   *    I/O, edge files untouched. Deleted nodes keep ROUTING — their
@@ -44,8 +44,7 @@ import graft.operators.GraphAnn
   *    the X300 build is rounds-bounded, and rebuild-on-cadence is the
   *    stated maintenance policy (the same answer EmbeddingStore gives
   *    for bucket skew).
-  *  - [[snapshot]] copies the whole tree via hidden staging + rename
-  *    (the engine-wide snapshot contract).
+  *  - [[snapshot]] copies the whole tree ([[LayoutFs.snapshot]]).
   */
 final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   require(buckets >= 1, s"buckets must be >= 1, got $buckets")
@@ -135,9 +134,10 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * and each chosen neighbor gains a reverse edge under the top-r
     * cosine degree cap (the build's reverse-insert rule). All edge
     * additions then apply as ONE bucket-grouped rewrite: only the
-    * touched `gbucket` directories are read and atomically swapped
-    * (two-rename + hidden backup — the engine-wide mutation crash
-    * protocol; every read path recovers first), so insert I/O is
+    * touched `gbucket` directories are read, staged as one batch, and
+    * committed by a marker before each swaps in ([[LayoutFs.swap]]);
+    * every read path rolls a committed batch forward first, so a crash
+    * leaves the old graph or the whole new one. Insert I/O is
     * ∝ touched-buckets/B of the edge mass, never the graph.
     *
     * `allEmbs` must contain BOTH the existing corpus and the new rows
@@ -218,12 +218,12 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   /** Apply edge additions bucket-by-bucket: read each touched bucket,
     * union the additions, dedup (src, dst) keeping the best cosine,
     * re-cap ONLY the nodes that actually gained an edge at top-r by
-    * cosine (the reverse-insert rule), and swap the rewritten directory
-    * in atomically. The cap is scoped to the touched srcs on purpose:
-    * re-capping the whole bucket at the CALLER'S r silently pruned
-    * untouched nodes' neighborhoods whenever r was smaller than the
-    * build degree (r20 ADVICE) — a node's stored edges may only change
-    * when an insert lands in its neighborhood. */
+    * cosine (the reverse-insert rule), and swap the rewritten
+    * directories in as one committed batch. The cap is scoped to the
+    * touched srcs on purpose: re-capping the whole bucket at the
+    * CALLER'S r silently pruned untouched nodes' neighborhoods whenever
+    * r was smaller than the build degree (r20 ADVICE) — a node's stored
+    * edges may only change when an insert lands in its neighborhood. */
   private def applyEdgeAdditions(adds: Seq[(Long, Long, Double)], r: Int): Unit = {
     if (adds.isEmpty) return
     import spark.implicits._
@@ -241,7 +241,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     val touchedSrcDf = addDf.select(col("src")).distinct()
       .withColumn("__touched", lit(true))
     val dirs = touched.map(b => b -> new Path(s"$edgesPath/gbucket=$b")).toMap
-    touched.foreach(b => recoverSwap(dirs(b)))
+    LayoutFs.recover(fs, touched.map(dirs): _*)
     val existing = touched.filter(b => fs.exists(dirs(b)))
     // ALL touched buckets rewrite in ONE partition-pruned read + ONE
     // partitioned write (r21): the previous per-bucket loop paid
@@ -269,42 +269,12 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     fs.delete(tmp, true)
     out.repartition(col("gbucket"))
       .write.mode("overwrite").partitionBy("gbucket").parquet(tmp.toString)
-    // publish bucket-by-bucket under the unchanged two-rename protocol:
-    // at every instant readers see only-old or only-new per bucket
-    touched.foreach { b =>
-      val staged = new Path(tmp, s"gbucket=$b")
-      if (fs.exists(staged)) atomicSwap(staged, dirs(b))
-    }
-    fs.delete(tmp, true)
+    // the commit point: from the marker on, [[recoverAll]] rolls the
+    // batch forward, so after a crash every reader sees the old graph or
+    // the whole new one, never a batch applied to some buckets only
+    fs.mkdirs(new Path(tmp, CommitMarker))
+    publishBatch(tmp)
     graft.util.Pins.release(addDf)
-  }
-
-  /** Two-rename swap + hidden-backup recovery — the
-    * [[EmbeddingStore]] mutation crash protocol on the edge buckets:
-    * at every instant readers see only-old or only-new (dot-prefixed
-    * paths are invisible to Spark's listing). */
-  private def bakPath(dst: Path): Path =
-    new Path(dst.getParent, "." + dst.getName + ".bak")
-
-  private def atomicSwap(tmp: Path, dst: Path): Unit = {
-    val bak = bakPath(dst)
-    if (fs.exists(dst) && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"cannot back up $dst")
-    if (!fs.rename(tmp, dst)) {
-      if (fs.exists(bak)) fs.rename(bak, dst) // roll back
-      throw new java.io.IOException(s"cannot publish $tmp -> $dst")
-    }
-    fs.delete(bak, true)
-  }
-
-  private def recoverSwap(dst: Path): Unit = {
-    val bak = bakPath(dst)
-    if (fs.exists(bak)) {
-      if (!fs.exists(dst)) {
-        if (!fs.rename(bak, dst))
-          throw new java.io.IOException(s"cannot recover $dst from $bak")
-      } else fs.delete(bak, true)
-    }
   }
 
   /** Crash recovery for read entry points OUTSIDE this class — the V2
@@ -316,15 +286,24 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   private[graft] def recoverForRead(): Unit = recoverAll()
 
   private def recoverAll(): Unit = {
-    val matches = Option(fs.globStatus(new Path(edgesPath, ".gbucket=*.bak")))
-    matches.toSeq.flatten.foreach { st =>
-      val name = st.getPath.getName
-      recoverSwap(new Path(st.getPath.getParent,
-        name.stripPrefix(".").stripSuffix(".bak")))
-    }
-    // a rewrite that died before its swap leaves hidden temp debris
+    // a committed batch rolls forward; one that died before its marker
+    // is hidden debris
     Option(fs.globStatus(new Path(edgesPath, ".tmp_gbucket_*"))).toSeq.flatten
-      .foreach(st => fs.delete(st.getPath, true))
+      .foreach { st =>
+        if (fs.exists(new Path(st.getPath, CommitMarker))) publishBatch(st.getPath)
+        else fs.delete(st.getPath, true)
+      }
+    LayoutFs.recoverUnder(fs, new Path(edgesPath), "gbucket=*")
+  }
+
+  private val CommitMarker = "_committed"
+
+  /** Swap every staged bucket of a committed batch in, then drop the
+    * batch — idempotent, since a swapped bucket leaves the staging. */
+  private def publishBatch(tmp: Path): Unit = {
+    fs.listStatus(tmp).filter(_.getPath.getName.startsWith("gbucket="))
+      .foreach(st => LayoutFs.swap(fs, st.getPath, new Path(edgesPath, st.getPath.getName)))
+    fs.delete(tmp, true)
   }
 
   /** Lazy delete: append ids to the tombstone table (O(batch)); the
@@ -432,22 +411,11 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       .toDF("check", "metric", "threshold", "rebuild_recommended")
   }
 
-  /** Consistent on-disk snapshot: hidden staging + rename, the
-    * engine-wide contract ([[EmbeddingStore.snapshot]]). Quiesces
-    * first — a crashed [[append]] swap's hidden backup must resolve
-    * before the tree copies, or the snapshot would ship a bucket in
-    * its mid-rename state; consistency then needs only the
-    * single-writer discipline all layouts share. */
-  def snapshot(targetPath: String): Unit = {
-    recoverAll()
-    val dst = new Path(targetPath)
-    require(!fs.exists(dst), s"snapshot target $targetPath already exists")
-    val staging = new Path(dst.getParent, s".${dst.getName}.snapstaging")
-    fs.delete(staging, true)
-    if (!graft.util.TreeCopy.copy(fs, new Path(path), staging,
-        spark.sparkContext.hadoopConfiguration)) // file-parallel (r22)
-      sys.error(s"snapshot copy to $staging failed")
-    if (!fs.rename(staging, dst))
-      sys.error(s"could not publish snapshot $staging -> $targetPath")
-  }
+  /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]). The quiesce
+    * is [[recoverAll]]: a crashed [[append]] swap's hidden backup must
+    * resolve before the tree copies, or the snapshot would ship a bucket
+    * in its mid-rename state. */
+  def snapshot(targetPath: String): Unit =
+    LayoutFs.snapshot(fs, new Path(path), targetPath,
+      spark.sparkContext.hadoopConfiguration)(recoverAll())
 }

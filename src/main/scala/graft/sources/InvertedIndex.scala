@@ -154,15 +154,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * touches postings, doclens or the census (the [[IvfIndex]]
     * recoverDir rule). */
   private def recover(): Unit = {
-    Seq(postingsPath, doclensPath, censusPath).foreach { live =>
-      val liveP = new Path(live)
-      val bak = new Path(liveP.getParent, s".${liveP.getName}.bak")
-      if (fs.exists(bak)) {
-        if (!fs.exists(liveP)) {
-          if (!fs.rename(bak, liveP)) sys.error(s"could not restore $bak")
-        } else fs.delete(bak, true)
-      }
-    }
+    LayoutFs.recover(fs,
+      Seq(postingsPath, doclensPath, censusPath).map(new Path(_)): _*)
     if (fs.exists(appendMarkerPath)) commitAppend()
     else fs.delete(appendStagingPath, true)
     // a crashed delta-apply left its marker: roll it forward (idempotent
@@ -461,7 +454,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * UUID, so staged names can never collide with live ones. The
     * renames run sequentially on the driver: each is assumed an ATOMIC
     * O(1) metadata op (HDFS/local — the engine-wide assumption, see
-    * [[EmbeddingStore]]'s swap core), so the loop costs file-count
+    * [[LayoutFs]]), so the loop costs file-count
     * metadata calls, batch-proportional; on an object store without
     * atomic rename the whole marker protocol needs a manifest-flip
     * commit primitive instead. */
@@ -630,10 +623,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
       if (!fs.rename(stag, new Path(censusDeltaPath)))
         sys.error(s"could not publish census delta under $censusPath")
     }
-    stageSwap(postingsPath, Some("tbucket")) { live =>
+    LayoutFs.stageRewrite(spark, postingsPath, Some("tbucket")) { live =>
       val surv = live.join(ts, Seq("doc_id"), "left_anti")
       if (compactToo) surv.repartition(col("tbucket")) else surv }
-    stageSwap(doclensPath, None) { live =>
+    LayoutFs.stageRewrite(spark, doclensPath, None) { live =>
       val surv = live.join(ts, Seq("doc_id"), "left_anti")
       if (compactToo) surv.repartition(1) else surv }
     if (hasCensus)
@@ -667,22 +660,15 @@ final class InvertedIndex(spark: SparkSession, path: String,
         .groupBy(col("term")).agg(sum(col("df")).cast(LongType).as("df")),
       delta)
 
-  /** Two-rename swap of the WHOLE census directory to `{base: newBase}`
-    * — pending_delta (if any) vanishes atomically with the base
-    * replacement. */
+  /** [[LayoutFs.swap]] of the WHOLE census directory to
+    * `{base: newBase}` — pending_delta (if any) vanishes atomically with
+    * the base replacement. */
   private def swapCensus(newBase: DataFrame,
       onePerPrefix: Boolean = false): Unit = {
     val staging = new Path(path, ".census.staging")
     fs.delete(staging, true)
     writeCensusBase(newBase, new Path(staging, "base").toString, onePerPrefix)
-    val live = new Path(censusPath)
-    val bak = new Path(path, ".census.bak")
-    fs.delete(bak, true)
-    if (fs.exists(live) && !fs.rename(live, bak))
-      sys.error(s"could not back up $live for swap")
-    if (!fs.rename(staging, live))
-      sys.error(s"could not swap $staging into $live (backup at $bak)")
-    fs.delete(bak, true)
+    LayoutFs.swap(fs, staging, new Path(censusPath))
   }
 
   /** LIVE (term, df) vocabulary census — the serving input for
@@ -795,9 +781,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(doclensFiles >= 1, s"doclensFiles must be >= 1, got $doclensFiles")
     invalidateLiveCount()
     recover()
-    stageSwap(postingsPath, Some("tbucket")) { live =>
+    LayoutFs.stageRewrite(spark, postingsPath, Some("tbucket")) { live =>
       live.repartition(col("tbucket")) }
-    stageSwap(doclensPath, None) { live =>
+    LayoutFs.stageRewrite(spark, doclensPath, None) { live =>
       live.repartition(doclensFiles) }
     // census base accretes files per append too — merge-sum it to one
     // file per tprefix partition (vocabulary-sized job). Skipped while
@@ -1232,39 +1218,6 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(headLen >= 1, s"headLen must be positive, got $headLen")
     recover()
     rebuildDerived(Seq("forward", "fielded", "blockmax"), headLen)
-  }
-
-  /** Stage `transform(live)` as a hidden sibling of `live`, then swap it
-    * in via backup-rename + staged-rename (the engine-wide two-rename
-    * discipline; atomic-rename assumption documented on
-    * [[EmbeddingStore]]'s swap core). A transform that deletes EVERY row still stages a
-    * schema-carrying empty file so later whole-layout reads can infer
-    * the schema (the [[IvfIndex]] emptied-partition rule). */
-  private def stageSwap(live: String, partCol: Option[String])(
-      transform: DataFrame => DataFrame): Unit = {
-    val liveP = new Path(live)
-    val staging = new Path(liveP.getParent, s".${liveP.getName}.staging")
-    fs.delete(staging, true)
-    val survivors = transform(spark.read.parquet(live))
-    partCol match {
-      case Some(c) => survivors.write.partitionBy(c).parquet(staging.toString)
-      case None    => survivors.write.parquet(staging.toString)
-    }
-    val hasData = fs.listStatus(staging)
-      .exists(s => !s.getPath.getName.startsWith("_"))
-    if (!hasData) partCol match {
-      case Some(c) => survivors.drop(c).limit(0).coalesce(1)
-        .write.parquet(new Path(staging, s"$c=0").toString)
-      case None => survivors.limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-    }
-    val bak = new Path(liveP.getParent, s".${liveP.getName}.bak")
-    fs.delete(bak, true)
-    if (!fs.rename(liveP, bak))
-      sys.error(s"could not back up $live for swap")
-    if (!fs.rename(staging, liveP))
-      sys.error(s"could not swap $staging into $live (backup at $bak)")
-    fs.delete(bak, true)
   }
 
   /** BM25 top-k over the index (X173): tf from the PRUNED postings
@@ -2881,43 +2834,16 @@ final class InvertedIndex(spark: SparkSession, path: String,
     (bmLeg, prfLeg, perDoc)
   }
 
-  /** Consistent on-disk SNAPSHOT of the whole index (X248 — the ES
-    * snapshot/restore ops surface, the backup primitive a 100 TB
-    * deployment runs on a schedule): [[recover]] quiesces the layout
-    * first (every marker rolls forward, every unmarked staging dir is
-    * discarded — after it, under the engine-wide single-writer
-    * assumption, the tree is immutable for the copy), then the
-    * directory tree copies byte-faithfully — INCLUDING pending
-    * tombstones and sidecar deltas, so the snapshot answers exactly
-    * like the source at snapshot time (tombstone masks, maintenance
-    * debt and all travel with it; a later vacuum on either side leaves
-    * the other untouched). Restore is free by construction: a snapshot
-    * IS a complete index directory — open it (`new InvertedIndex(spark,
-    * target)`) or copy it back over a damaged layout with the same
-    * call. Cost ∝ index bytes (driver-side stream copy on local/HDFS);
-    * incremental/hard-link snapshots are a filesystem concern outside
-    * the layout contract.
-    *
-    * Crash protocol (the engine's staging-rename discipline, applied
-    * to the one layout mutation that historically lacked it): the tree
-    * copies to a HIDDEN sibling (`.<name>.snapstaging`) and renames
-    * into place, so `targetPath` either doesn't exist or is a complete
-    * byte-faithful snapshot — a crash mid-copy leaves only hidden
-    * staging debris (invisible to opens, discarded by the next
-    * attempt), never a valid-looking silently-smaller tree, and the
-    * exists-refusal can never block a clean retry. */
-  def snapshot(targetPath: String): Unit = {
-    recover()
-    val dst = new Path(targetPath)
-    require(!fs.exists(dst), s"snapshot target $targetPath already exists")
-    val staging = new Path(dst.getParent, s".${dst.getName}.snapstaging")
-    fs.delete(staging, true) // a crashed prior attempt's debris
-    if (!graft.util.TreeCopy.copy(fs, new Path(path), staging,
-        spark.sparkContext.hadoopConfiguration)) // file-parallel (r22)
-      sys.error(s"snapshot copy to $staging failed")
-    if (!fs.rename(staging, dst))
-      sys.error(s"could not publish snapshot $staging -> $targetPath")
-  }
+  /** Consistent on-disk snapshot of the whole index (X248 — the ES
+    * snapshot/restore ops surface; [[LayoutFs.snapshot]]). The quiesce
+    * is [[recover]]: every marker rolls forward and every unmarked
+    * staging dir is discarded. Pending tombstones and sidecar deltas
+    * travel with the copy, so it answers exactly like the source at
+    * snapshot time; a later vacuum on either side leaves the other
+    * untouched. Open it with `new InvertedIndex(spark, target)`. */
+  def snapshot(targetPath: String): Unit =
+    LayoutFs.snapshot(fs, new Path(path), targetPath,
+      spark.sparkContext.hadoopConfiguration)(recover())
 
   /** The postings of exactly `terms`, read from their pruned bucket
     * directories only — schema-identical to an in-memory

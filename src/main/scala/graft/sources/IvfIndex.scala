@@ -240,11 +240,11 @@ final class IvfIndex(spark: SparkSession, path: String,
     rewriteDirs(base, partCol, touched,
       read => read.join(ids, Seq("id"), "left_anti"))
 
-  /** The shared staged-rewrite + per-dir two-rename swap behind
-    * [[rewriteTouched]] (anti-join survivors) and [[compact]] (identity
-    * + repartition): one partition-pruned read, one `transform`, one
-    * partitioned write into hidden staging, then each touched directory
-    * swaps under its own `.bak` crash contract. */
+  /** The shared staged rewrite behind [[rewriteTouched]] (anti-join
+    * survivors), [[compact]] (identity + repartition) and
+    * [[cleanAssignPairs]] (pair anti-join): one partition-pruned read,
+    * one `transform`, one partitioned write into hidden staging, then
+    * each touched directory goes through its own [[LayoutFs.swap]]. */
   private def rewriteDirs(base: String, partCol: String,
       touched: Seq[Int], transform: DataFrame => DataFrame): Unit = {
     if (touched.isEmpty) return
@@ -260,14 +260,7 @@ final class IvfIndex(spark: SparkSession, path: String,
         // fully-deleted partition: stage a schema-carrying empty file, so a
         // later whole-layout read can still infer the schema
         survivors.drop(partCol).limit(0).coalesce(1).write.parquet(staged.toString)
-      val dir = new Path(base, dirName)
-      val bak = new Path(base, s".$dirName.bak")
-      fs.delete(bak, true)
-      if (!fs.rename(dir, bak))
-        sys.error(s"could not back up $dir for swap")
-      if (!fs.rename(staged, dir))
-        sys.error(s"could not swap $staged into $dir (backup at $bak)")
-      fs.delete(bak, true)
+      LayoutFs.swap(fs, staged, new Path(base, dirName))
     }
     fs.delete(staging, true)
   }
@@ -371,42 +364,24 @@ final class IvfIndex(spark: SparkSession, path: String,
       .orderBy(col("action"), col("target"))
   }
 
-  /** Consistent on-disk SNAPSHOT of the whole index — raw lists, PQ
+  /** Consistent on-disk snapshot of the whole index — raw lists, PQ
     * codes, codebooks, centroids, both assignment sidecars and their
-    * meta (the [[graft.sources.InvertedIndex.snapshot]] surface on the
-    * vector layout; the reference's flagship funnel serves from THIS
-    * store, so it is the first layout a deployment needs to back up).
-    * Quiesce first: every pending merge/split marker rolls forward and
-    * every two-rename backup resolves across BOTH layouts and all
-    * sidecars — after it, under the engine-wide single-writer
-    * assumption, the tree is immutable for the copy. The copy is
-    * byte-faithful, so the snapshot answers exactly like the source at
-    * snapshot time (same centroids, same pending compaction debt);
-    * restore is free by construction — a snapshot IS a complete index
-    * root: open it (`new IvfIndex(spark, target)`) or copy it back
-    * over a damaged layout. Cost ∝ index bytes.
-    *
-    * Crash protocol (the staging-rename discipline): copy to a HIDDEN
-    * sibling (`.<name>.snapstaging`), rename into place — `targetPath`
-    * either doesn't exist or is a complete snapshot; a crash mid-copy
-    * leaves only hidden debris the next attempt discards, and the
-    * exists-refusal can never block a clean retry. */
-  def snapshot(targetPath: String): Unit = {
-    recoverMerge(listsPath); recoverSplit(listsPath)
-    recoverDir(listsPath); recoverDir(assignPath)
-    if (fs.exists(new Path(codesPath))) recoverDir(codesPath)
-    if (fs.exists(new Path(assignPqPath))) recoverDir(assignPqPath)
-    recoverDir(path)
-    val dst = new Path(targetPath)
-    require(!fs.exists(dst), s"snapshot target $targetPath already exists")
-    val staging = new Path(dst.getParent, s".${dst.getName}.snapstaging")
-    fs.delete(staging, true) // a crashed prior attempt's debris
-    if (!graft.util.TreeCopy.copy(fs, new Path(path), staging,
-        spark.sparkContext.hadoopConfiguration)) // file-parallel (r22)
-      sys.error(s"snapshot copy to $staging failed")
-    if (!fs.rename(staging, dst))
-      sys.error(s"could not publish snapshot $staging -> $targetPath")
-  }
+    * meta ([[LayoutFs.snapshot]]; the reference's flagship funnel serves
+    * from THIS store, so it is the first layout a deployment needs to
+    * back up). The quiesce rolls every pending merge/split marker
+    * forward and resolves every swap backup across BOTH layouts, all
+    * sidecars and the centroid pointer. The copy answers exactly like
+    * the source at snapshot time (same centroids, same pending
+    * compaction debt); open it with `new IvfIndex(spark, target)`. */
+  def snapshot(targetPath: String): Unit =
+    LayoutFs.snapshot(fs, new Path(path), targetPath,
+        spark.sparkContext.hadoopConfiguration) {
+      recoverMerge(listsPath); recoverSplit(listsPath)
+      recoverDir(listsPath); recoverDir(assignPath)
+      if (fs.exists(new Path(codesPath))) recoverDir(codesPath)
+      if (fs.exists(new Path(assignPqPath))) recoverDir(assignPqPath)
+      recoverDir(path)
+    }
 
   private def requireDirs(base: String, partCol: String, ids: Seq[Int]): Unit =
     ids.foreach { n =>
@@ -458,15 +433,14 @@ final class IvfIndex(spark: SparkSession, path: String,
     *  1. sidecar rows (moved id → new list) APPEND — the superset
     *     invariant: from here a delete of a moved id anti-joins the new
     *     list too, whichever directory the row is in;
-    *  2. centroid swap (two-rename via `.centroids.bak`, recovered in
-    *     [[centroids]]) — a probe of the still-empty new list reads no
-    *     rows, harmless;
-    *  3. data move: both halves staged, then a PENDING MARKER commits
-    *     the split — [[recoverSplit]] rolls FORWARD from the marker
-    *     (re-running any missed rename idempotently), and a crash
-    *     BEFORE the marker just drops the orphan staging (the live list
-    *     is untouched until the marker exists);
-    *  4. stale sidecar pairs (moved id → old list) removed — a crash
+    *  2. both halves and the grown centroid set staged, then a PENDING
+    *     MARKER commits the split — [[recoverSplit]] rolls FORWARD from
+    *     the marker (the centroid swap, then the halves, each re-run
+    *     idempotently), and a crash BEFORE the marker just drops the
+    *     orphan staging (the live lists and centroids are untouched until
+    *     the marker exists, so every reader sees the old index or the
+    *     whole new one);
+    *  3. stale sidecar pairs (moved id → old list) removed — a crash
     *     leaves a superset, never an under-approximation.
     *
     * A degenerate list (all vectors identical, or a single row — 2-means
@@ -521,9 +495,8 @@ final class IvfIndex(spark: SparkSession, path: String,
       writeAssign(mi.select(col("id"), lit(newId).as("ivf_list")),
         assignPqPath, assignPqMetaPath, overwrite = false)
     }
-    // 2. centroid swap: listId tightens to sub-centroid 0, newId = sub 1
-    writeCentroids(cs.updated(listId, sub(0)) :+ sub(1))
-    // 3. data move, staged then marker-committed
+    // 2. data move and centroid set (listId tightens to sub-centroid 0,
+    // newId = sub 1), staged then marker-committed
     val staging = new Path(listsPath, stagingSplitName)
     fs.delete(staging, true)
     assigned.withColumn("ivf_list",
@@ -542,9 +515,10 @@ final class IvfIndex(spark: SparkSession, path: String,
           cl.limit(0).coalesce(1).write.parquet(staged.toString)
       }
     }
+    writeCentroids(cs.updated(listId, sub(0)) :+ sub(1), new Path(staging, "_centroids"))
     fs.mkdirs(new Path(listsPath, s".split_pending_${listId}_$newId"))
     completeSplit(listsPath, listId, newId)
-    // 4. drop the stale (moved id, old list) sidecar pairs
+    // 3. drop the stale (moved id, old list) sidecar pairs
     cleanAssignPairs(moved.select(col("id"), lit(listId).as("ivf_list")))
     codesMovedIds.foreach { mi =>
       cleanAssignPairs(mi.select(col("id"), lit(listId).as("ivf_list")),
@@ -678,10 +652,7 @@ final class IvfIndex(spark: SparkSession, path: String,
           cu.limit(0).coalesce(1).write.parquet(staged.toString)
       }
     }
-    import spark.implicits._
-    newCs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cid", "centroid")
-      .coalesce(1).write.parquet(new Path(staging, "_centroids").toString)
+    writeCentroids(newCs, new Path(staging, "_centroids"))
     // 2. sidecar superset: moved ids also map to their new lists — BOTH
     // sidecars when the compressed layout exists
     writeAssign(sourceIds.select(col("id"), lit(target).as("ivf_list"))
@@ -719,29 +690,10 @@ final class IvfIndex(spark: SparkSession, path: String,
   private def completeMerge(base: String, target: Int, vacated: Int,
       last: Int): Unit = {
     val staging = new Path(base, stagingMergeName)
-    val stagedCents = new Path(staging, "_centroids")
-    if (fs.exists(stagedCents)) {
-      val live = new Path(centroidsPath)
-      val bak = new Path(path, ".centroids.bak")
-      fs.delete(bak, true)
-      if (fs.exists(live) && !fs.rename(live, bak))
-        sys.error(s"could not back up $live")
-      if (!fs.rename(stagedCents, live))
-        sys.error(s"could not swap $stagedCents into $live (backup at $bak)")
-      fs.delete(bak, true)
-    }
-    def swapIn(stagingRoot: Path, liveBase: String, n: Int): Unit = {
-      val staged = new Path(stagingRoot, s"ivf_list=$n")
-      val live = new Path(liveBase, s"ivf_list=$n")
-      val bak = new Path(liveBase, s".ivf_list=$n.bak")
-      if (fs.exists(staged)) {
-        if (fs.exists(live) && !fs.exists(bak))
-          if (!fs.rename(live, bak)) sys.error(s"could not back up $live")
-        if (!fs.rename(staged, live))
-          sys.error(s"could not swap $staged into $live")
-      }
-      fs.delete(bak, true)
-    }
+    swapCentroids(staging)
+    def swapIn(stagingRoot: Path, liveBase: String, n: Int): Unit =
+      LayoutFs.swap(fs, new Path(stagingRoot, s"ivf_list=$n"),
+        new Path(liveBase, s"ivf_list=$n"))
     swapIn(staging, base, target)
     if (vacated != last) swapIn(staging, base, vacated)
     fs.delete(new Path(base, s"ivf_list=$last"), true)
@@ -778,28 +730,17 @@ final class IvfIndex(spark: SparkSession, path: String,
       fs.delete(new Path(base, stagingMergeName), true)
   }
 
-  /** Finish a marker-committed split: every step is a state-checked
-    * rename, so this is idempotent from ANY crash point at or after the
-    * marker write. */
+  /** Finish a marker-committed split: every step is a
+    * [[LayoutFs.swap]], so this is idempotent from ANY crash point at or
+    * after the marker write. */
   private def completeSplit(base: String, listId: Int, newId: Int): Unit = {
     val staging = new Path(base, stagingSplitName)
-    def swapHalves(stagingRoot: Path, liveBase: String): Unit = {
-      val liveOld = new Path(liveBase, s"ivf_list=$listId")
-      val bakOld = new Path(liveBase, s".ivf_list=$listId.bak")
-      val stagedOld = new Path(stagingRoot, s"ivf_list=$listId")
-      val liveNew = new Path(liveBase, s"ivf_list=$newId")
-      val stagedNew = new Path(stagingRoot, s"ivf_list=$newId")
-      if (fs.exists(stagedOld)) {
-        if (fs.exists(liveOld) && !fs.exists(bakOld))
-          if (!fs.rename(liveOld, bakOld)) sys.error(s"could not back up $liveOld")
-        if (!fs.rename(stagedOld, liveOld))
-          sys.error(s"could not swap $stagedOld into $liveOld")
+    swapCentroids(staging)
+    def swapHalves(stagingRoot: Path, liveBase: String): Unit =
+      Seq(listId, newId).foreach { n =>
+        LayoutFs.swap(fs, new Path(stagingRoot, s"ivf_list=$n"),
+          new Path(liveBase, s"ivf_list=$n"))
       }
-      if (fs.exists(stagedNew) && !fs.exists(liveNew))
-        if (!fs.rename(stagedNew, liveNew))
-          sys.error(s"could not move $stagedNew to $liveNew")
-      fs.delete(bakOld, true)
-    }
     swapHalves(staging, base)
     // a split that carried the compressed layout staged its code halves
     // under _codes — same state-checked swaps against the codes dirs
@@ -827,84 +768,48 @@ final class IvfIndex(spark: SparkSession, path: String,
 
   /** Remove exact (id, ivf_list) PAIRS from the sidecar — the stale-row
     * cleanup after a split moved those ids elsewhere. Same bucket-pruned
-    * read + two-rename swap as a delete, but the anti-join keys on the
-    * pair, so the id's row for its NEW list survives. */
+    * [[rewriteDirs]] as a delete, but the anti-join keys on the pair, so
+    * the id's row for its NEW list survives. */
   private def cleanAssignPairs(pairs: DataFrame,
       assignBase: String = assignPath,
       metaPath: String = assignMetaPath): Unit = {
     if (!fs.exists(new Path(metaPath))) return
     recoverDir(assignBase)
     val b = readAssignBuckets(metaPath)
-    val keyed = pairs.select(col("id"), col("ivf_list"),
-      bucketOf(col("id"), b).as("abucket"))
-    val buckets = keyed.select(col("abucket")).distinct()
+    val buckets = pairs.select(bucketOf(col("id"), b)).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
       .filter(n => fs.exists(new Path(assignBase, s"abucket=$n")))
-    if (buckets.isEmpty) return
-    val staging = new Path(assignBase, ".staging_swap")
-    fs.delete(staging, true)
-    val survivors = spark.read.parquet(assignBase)
-      .filter(col("abucket").isin(buckets: _*))
-      .join(keyed.select(col("id"), col("ivf_list")),
-        Seq("id", "ivf_list"), "left_anti")
-    survivors.write.partitionBy("abucket").parquet(staging.toString)
-    buckets.foreach { n =>
-      val dirName = s"abucket=$n"
-      val staged = new Path(staging, dirName)
-      if (!fs.exists(staged))
-        survivors.drop("abucket").limit(0).coalesce(1).write.parquet(staged.toString)
-      val dir = new Path(assignBase, dirName)
-      val bak = new Path(assignBase, s".$dirName.bak")
-      fs.delete(bak, true)
-      if (!fs.rename(dir, bak)) sys.error(s"could not back up $dir for swap")
-      if (!fs.rename(staged, dir)) sys.error(s"could not swap $staged into $dir")
-      fs.delete(bak, true)
-    }
-    fs.delete(staging, true)
+    rewriteDirs(assignBase, "abucket", buckets,
+      _.join(pairs.select(col("id"), col("ivf_list")),
+        Seq("id", "ivf_list"), "left_anti"))
   }
 
-  /** Two-rename centroid-file swap (recovered in [[centroids]]): the
-    * centroid set is the index's root pointer, so an overwrite-in-place
-    * (delete-then-write) would brick the index on a crash mid-write. */
-  private def writeCentroids(cs: Seq[Array[Float]]): Unit = {
+  /** Stage a centroid set as a (cid, centroid) table at `dir`. */
+  private def writeCentroids(cs: Seq[Array[Float]], dir: Path): Unit = {
     import spark.implicits._
-    val staged = new Path(path, ".centroids.staged")
-    fs.delete(staged, true)
     cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toDF("cid", "centroid")
-      .coalesce(1).write.parquet(staged.toString)
-    val live = new Path(centroidsPath)
-    val bak = new Path(path, ".centroids.bak")
-    fs.delete(bak, true)
-    if (fs.exists(live) && !fs.rename(live, bak))
-      sys.error(s"could not back up $live")
-    if (!fs.rename(staged, live))
-      sys.error(s"could not swap $staged into $live (backup at $bak)")
-    fs.delete(bak, true)
+      .coalesce(1).write.parquet(dir.toString)
+  }
+
+  /** Swap a merge's or split's staged `_centroids` in (recovered in
+    * [[centroids]]): the centroid set is the index's root pointer, so it
+    * is never overwritten in place. */
+  private def swapCentroids(staging: Path): Unit = {
+    LayoutFs.swap(fs, new Path(staging, "_centroids"), new Path(centroidsPath))
     centroidsMemo.invalidate()
   }
 
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Crash recovery for [[rewriteTouched]]'s two-rename swaps under `base`: a
-    * hidden `.<dir>.bak` with no live dir means the crash hit between
-    * the renames — restore the backup; with a live dir present the crash
-    * hit after the second rename — drop the stale backup. Runs at the
-    * top of every entry point that reads or writes the layout. */
+  /** Crash recovery for every [[LayoutFs.swap]] under `base`. Runs at
+    * the top of every entry point that reads or writes the layout. */
   private def recoverDir(base: String): Unit =
-    Option(fs.globStatus(new Path(base, ".*.bak")))
-      .toSeq.flatten.foreach { st =>
-        val live = new Path(base,
-          st.getPath.getName.stripPrefix(".").stripSuffix(".bak"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            sys.error(s"could not restore ${st.getPath} to $live")
-        } else fs.delete(st.getPath, true)
-      }
+    LayoutFs.recoverUnder(fs, new Path(base), "*")
 
   /** The stored centroids, ordered by cid. [[recoverDir]] over the index
-    * root first: a crash mid-[[writeCentroids]] leaves `.centroids.bak`
+    * root first: a crash mid-[[swapCentroids]] leaves `.centroids.bak`
     * to restore — the root pointer must never read as missing. */
   private lazy val centroidsMemo =
     new graft.util.StampedMemo[Seq[Array[Float]]](() => fs,
@@ -912,7 +817,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   def centroids(): Seq[Array[Float]] = {
     recoverDir(path)
     // memoized per instance, stamped by the centroids dir: every
-    // mutation goes through [[writeCentroids]]'s two-rename swap, which
+    // mutation goes through [[swapCentroids]], which
     // replaces the directory (fresh mtime) — and the k-vector table is
     // small by the coarse-quantizer contract (√n-ish), so holding it on
     // the driver costs what one probe already costs. r22 profile: this

@@ -22,7 +22,7 @@ import graft.operators.TextAnalysis
   * directory — build(A) then append(B) is bit-identical to build(A ∪ B)
   * (suite-pinned). Versions are blue/green: a version directory is
   * immutable once the pointer names it, the pointer is a one-row parquet
-  * swapped under the two-rename `.bak` discipline (the
+  * swapped by [[LayoutFs.swap]] (the
   * [[IvfIndex]] centroid-pointer contract: the root pointer can never
   * read as missing — recovery runs at every read), and a crashed append
   * leaves at worst an orphan unreferenced version directory —
@@ -40,31 +40,15 @@ final class NgramLm(spark: SparkSession, path: String) {
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Restore a half-done pointer swap (the [[IvfIndex]] recoverDir rule:
-    * a `.bak` with no live pointer means the crash hit between renames —
-    * restore it; with a live pointer present, drop the stale backup). */
-  private def recoverPointer(): Unit = {
-    val bak = new Path(path, ".current.bak")
-    if (fs.exists(bak)) {
-      if (!fs.exists(pointerLive)) {
-        if (!fs.rename(bak, pointerLive))
-          sys.error(s"could not restore $bak to $pointerLive")
-      } else fs.delete(bak, true)
-    }
-  }
+  /** Restore a half-done pointer swap ([[LayoutFs.recover]]). */
+  private def recoverPointer(): Unit = LayoutFs.recover(fs, pointerLive)
 
   private def writePointer(v: Int): Unit = {
     import spark.implicits._
     val staged = new Path(path, ".current.staged")
     fs.delete(staged, true)
     Seq(v).toDF("version").coalesce(1).write.parquet(staged.toString)
-    val bak = new Path(path, ".current.bak")
-    fs.delete(bak, true)
-    if (fs.exists(pointerLive) && !fs.rename(pointerLive, bak))
-      sys.error(s"could not back up $pointerLive")
-    if (!fs.rename(staged, pointerLive))
-      sys.error(s"could not swap $staged into $pointerLive (backup at $bak)")
-    fs.delete(bak, true)
+    LayoutFs.swap(fs, staged, pointerLive)
   }
 
   /** The version the pointer currently names — memoized per instance,
@@ -195,28 +179,17 @@ final class NgramLm(spark: SparkSession, path: String) {
     }
   }
 
-  /** Consistent on-disk SNAPSHOT — the cross-location copy the
-    * blue/green versioning alone cannot give (versions protect against
-    * crashes, not against losing the location): [[recoverPointer]]
-    * quiesces the pointer swap, then the tree — every version
-    * directory plus the pointer — copies byte-faithfully, so the copy
-    * serves the same current version and still carries the superseded
-    * versions its in-flight-reader retention contract promises (run
-    * [[vacuum]] on either side independently). Restore = open the copy
-    * (`new NgramLm(spark, target)`). Crash protocol: the engine-wide
-    * hidden `.snapstaging` + rename discipline. */
-  def snapshot(targetPath: String): Unit = {
-    recoverPointer()
-    val dst = new Path(targetPath)
-    require(!fs.exists(dst), s"snapshot target $targetPath already exists")
-    val staging = new Path(dst.getParent, s".${dst.getName}.snapstaging")
-    fs.delete(staging, true) // a crashed prior attempt's debris
-    if (!graft.util.TreeCopy.copy(fs, new Path(path), staging,
-        spark.sparkContext.hadoopConfiguration)) // file-parallel (r22)
-      sys.error(s"snapshot copy to $staging failed")
-    if (!fs.rename(staging, dst))
-      sys.error(s"could not publish snapshot $staging -> $targetPath")
-  }
+  /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]) — the
+    * cross-location copy the blue/green versioning alone cannot give
+    * (versions protect against crashes, not against losing the
+    * location). The quiesce is [[recoverPointer]]; every version
+    * directory travels with the pointer, so the copy serves the same
+    * current version and still carries the superseded versions its
+    * in-flight-reader retention contract promises (run [[vacuum]] on
+    * either side independently). */
+  def snapshot(targetPath: String): Unit =
+    LayoutFs.snapshot(fs, new Path(path), targetPath,
+      spark.sparkContext.hadoopConfiguration)(recoverPointer())
 
   /** Maintenance policy as code (X186, the versioned-artifact member of
     * the family: [[graft.sources.InvertedIndex.maintain]] /

@@ -74,19 +74,9 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   private def readBuckets(): Int =
     bucketsMemo(spark.read.parquet(metaPath).head().getInt(0))
 
-  /** Roll back a crashed [[vacuum]] swap (the [[InvertedIndex]] recover
-    * rule: visible `.bak` with the live dir missing ⇒ restore; with the
-    * live dir present ⇒ drop the stale backup). */
+  /** Resolve a crashed [[vacuum]]/[[compact]] swap ([[LayoutFs.recover]]). */
   private def recover(): Unit =
-    Seq(clausesPath, totalsPath).foreach { live =>
-      val liveP = new Path(live)
-      val bak = new Path(liveP.getParent, s".${liveP.getName}.bak")
-      if (fs.exists(bak)) {
-        if (!fs.exists(liveP)) {
-          if (!fs.rename(bak, liveP)) sys.error(s"could not restore $bak")
-        } else fs.delete(bak, true)
-      }
-    }
+    LayoutFs.recover(fs, new Path(clausesPath), new Path(totalsPath))
 
   /** Crash recovery alone — the [[graft.sources.v2.GraftLayoutSource]]
     * scan-build hook (the engine rule: every read entry point recovers
@@ -157,36 +147,6 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
       df.join(tombstoneIds(), Seq("query_id"), "left_anti")
     else df
 
-  /** Two-rename layout swap (the engine's crash discipline): write the
-    * replacement under a hidden staging sibling, back the live dir up,
-    * rename staging into place, drop the backup — [[recover]] rolls a
-    * crash at any point forward or back. Shared by [[vacuum]] and
-    * [[compact]]. */
-  private def swapLayout(live: String, partCol: Option[String],
-      replacement: DataFrame): Unit = {
-    val liveP = new Path(live)
-    val staging = new Path(liveP.getParent, s".${liveP.getName}.staging")
-    fs.delete(staging, true)
-    partCol match {
-      case Some(c) => replacement.write.partitionBy(c).parquet(staging.toString)
-      case None    => replacement.write.parquet(staging.toString)
-    }
-    val hasData = fs.listStatus(staging)
-      .exists(s => !s.getPath.getName.startsWith("_"))
-    if (!hasData) partCol match {
-      case Some(c) => replacement.drop(c).limit(0).coalesce(1)
-        .write.parquet(new Path(staging, s"$c=0").toString)
-      case None => replacement.limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-    }
-    val bak = new Path(liveP.getParent, s".${liveP.getName}.bak")
-    fs.delete(bak, true)
-    if (!fs.rename(liveP, bak)) sys.error(s"could not back up $live")
-    if (!fs.rename(staging, liveP))
-      sys.error(s"could not swap $staging into $live (backup at $bak)")
-    fs.delete(bak, true)
-  }
-
   /** Physically drop tombstoned queries: one anti-join rewrite each of
     * clauses (partition layout preserved) and totals, two-rename
     * swapped; tombstones cleared LAST so a crash anywhere leaves reads
@@ -201,14 +161,12 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     recover()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
-    val clauseSurv = spark.read.parquet(clausesPath)
-      .join(ts, Seq("query_id"), "left_anti")
-    swapLayout(clausesPath, Some("tbucket"),
-      if (compactToo) clauseSurv.repartition(col("tbucket")) else clauseSurv)
-    val totalsSurv = spark.read.parquet(totalsPath)
-      .join(ts, Seq("query_id"), "left_anti")
-    swapLayout(totalsPath, None,
-      if (compactToo) totalsSurv.coalesce(1) else totalsSurv)
+    LayoutFs.stageRewrite(spark, clausesPath, Some("tbucket")) { live =>
+      val surv = live.join(ts, Seq("query_id"), "left_anti")
+      if (compactToo) surv.repartition(col("tbucket")) else surv }
+    LayoutFs.stageRewrite(spark, totalsPath, None) { live =>
+      val surv = live.join(ts, Seq("query_id"), "left_anti")
+      if (compactToo) surv.coalesce(1) else surv }
     fs.delete(new Path(tombstonesPath), true)
   }
 
@@ -230,15 +188,14 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   }
 
   /** Rewrite the clause layout to ONE file per bucket (and totals to
-    * one file) under the [[swapLayout]] crash discipline — the
+    * one file) through [[LayoutFs.stageRewrite]] — the
     * amortized answer to append's per-batch part-file accretion.
     * Answers are bit-identical (pure layout). */
   def compact(): Unit = {
     recover()
-    swapLayout(clausesPath, Some("tbucket"),
-      spark.read.parquet(clausesPath).repartition(col("tbucket")))
-    swapLayout(totalsPath, None,
-      spark.read.parquet(totalsPath).coalesce(1))
+    LayoutFs.stageRewrite(spark, clausesPath, Some("tbucket"))(
+      _.repartition(col("tbucket")))
+    LayoutFs.stageRewrite(spark, totalsPath, None)(_.coalesce(1))
   }
 
   /** Maintenance policy as code — the [[InvertedIndex.maintain]] X186
@@ -304,33 +261,14 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
       .toDF("action", "metric", "threshold", "acted", "metric_after")
   }
 
-  /** Consistent on-disk SNAPSHOT of the whole store — clauses, totals,
-    * meta and pending tombstones (the
-    * [[graft.sources.InvertedIndex.snapshot]] surface on the stored-
-    * query layout): [[recover]] quiesces the two-rename swaps first, so
-    * under the engine-wide single-writer assumption the tree is
-    * immutable for the copy; the copy is byte-faithful, so the snapshot
-    * percolates exactly like the source at snapshot time (tombstone
-    * masks and maintenance debt travel with it). Restore is free by
-    * construction — a snapshot IS a complete store root: open it
-    * (`new QueryStore(spark, target)`) or copy it back over a damaged
-    * layout. Crash protocol: copy to a HIDDEN sibling
-    * (`.<name>.snapstaging`), rename into place — `targetPath` either
-    * doesn't exist or is complete; mid-copy crash debris is hidden and
-    * discarded by the next attempt, and the exists-refusal can never
-    * block a clean retry. */
-  def snapshot(targetPath: String): Unit = {
-    recover()
-    val dst = new Path(targetPath)
-    require(!fs.exists(dst), s"snapshot target $targetPath already exists")
-    val staging = new Path(dst.getParent, s".${dst.getName}.snapstaging")
-    fs.delete(staging, true) // a crashed prior attempt's debris
-    if (!graft.util.TreeCopy.copy(fs, new Path(path), staging,
-        spark.sparkContext.hadoopConfiguration)) // file-parallel (r22)
-      sys.error(s"snapshot copy to $staging failed")
-    if (!fs.rename(staging, dst))
-      sys.error(s"could not publish snapshot $staging -> $targetPath")
-  }
+  /** Consistent on-disk snapshot of the whole store — clauses, totals,
+    * meta and pending tombstones ([[LayoutFs.snapshot]]). The quiesce is
+    * [[recover]]; tombstone masks and maintenance debt travel with the
+    * copy, so it percolates exactly like the source at snapshot time.
+    * Open it with `new QueryStore(spark, target)`. */
+  def snapshot(targetPath: String): Unit =
+    LayoutFs.snapshot(fs, new Path(path), targetPath,
+      spark.sparkContext.hadoopConfiguration)(recover())
 
   /** The full LIVE clause frame (tombstones masked), `tbucket` kept as
     * the pruning surface — the SQL-registration view behind

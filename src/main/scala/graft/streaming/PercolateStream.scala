@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.TextAnalysis
-import graft.sources.QueryStore
+import graft.sources.{LayoutFs, QueryStore}
 
 /** Streaming percolation (X210 — the serving loop of X208): document
   * files stream in, each micro-batch matches against a stored-query
@@ -191,16 +191,9 @@ object PercolateStream {
       batch: DataFrame, idCol: String): DataFrame = {
     val fs = new Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // roll back a crashed compactSeen swap: a visible backup with the
-    // live dir missing means the crash hit between the two renames —
-    // losing the sidecar here would re-match the whole history
-    val bak = new Path(new Path(seenDir(outDir)).getParent, "._seen.bak")
-    if (fs.exists(bak)) {
-      if (!fs.exists(new Path(seenDir(outDir)))) {
-        if (!fs.rename(bak, new Path(seenDir(outDir))))
-          sys.error(s"could not restore $bak")
-      } else fs.delete(bak, true)
-    }
+    // resolve a crashed compactSeen swap — losing the sidecar here
+    // would re-match the whole history
+    LayoutFs.recover(fs, new Path(seenDir(outDir)))
     if (!fs.exists(new Path(seenDir(outDir)))) batch
     else {
       val keys = batch.select(col(idCol), col("__fp")).distinct()
@@ -211,8 +204,8 @@ object PercolateStream {
   }
 
   /** Keep the seen sidecar's file count flat: past the threshold,
-    * rewrite it as one distinct file (staging + two renames, the
-    * engine's swap discipline — a crash leaves either the old files or
+    * rewrite it as one distinct file (staged, then [[LayoutFs.swap]] —
+    * a crash leaves either the old files or
     * the compacted one, both correct supersets of nothing). */
   private def compactSeen(spark: SparkSession, outDir: String,
       maxFiles: Int = 64): Unit = {
@@ -226,11 +219,6 @@ object PercolateStream {
     fs.delete(staging, true)
     spark.read.parquet(dir.toString).distinct().coalesce(1)
       .write.parquet(staging.toString)
-    val bak = new Path(dir.getParent, "._seen.bak")
-    fs.delete(bak, true)
-    if (!fs.rename(dir, bak)) sys.error(s"could not back up $dir")
-    if (!fs.rename(staging, dir))
-      sys.error(s"could not swap $staging into $dir (backup at $bak)")
-    fs.delete(bak, true)
+    LayoutFs.swap(fs, staging, dir)
   }
 }

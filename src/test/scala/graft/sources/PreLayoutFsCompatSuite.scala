@@ -1,0 +1,98 @@
+package graft.sources
+
+import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** Layouts written before the commit protocol moved behind [[LayoutFs]]
+  * (`src/test/resources/pre_layoutfs`, produced by
+  * [[PreLayoutFsFixture.main]] at that commit) open and answer the same:
+  * an embedding store and an IVF index, a snapshot of each, and a copy
+  * of each left mid-swap (a live directory renamed to its hidden
+  * `.bak`) that the first read must restore. */
+class PreLayoutFsCompatSuite extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  test("layouts and snapshots written before LayoutFs open and answer the same") {
+    val src = Paths.get(getClass.getResource("/pre_layoutfs").toURI)
+    val dir = Files.createTempDirectory("graft_pre_layoutfs")
+    val w = Files.walk(src)
+    try w.forEach { p =>
+      val d = dir.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(d)
+      else Files.copy(p, d, StandardCopyOption.COPY_ATTRIBUTES)
+    } finally w.close()
+    val want = new String(Files.readAllBytes(dir.resolve("answers.txt")), "UTF-8")
+    for (layout <- Seq("", "_snap", "_crashed")) {
+      val got = PreLayoutFsFixture.answers(spark,
+        dir.resolve(s"store$layout").toString, dir.resolve(s"ivf$layout").toString)
+      assert(got == want, s"layouts '$layout' answer differently")
+    }
+    assert(!Files.exists(dir.resolve("store_crashed/.bucket=1.bak")) &&
+      !Files.exists(dir.resolve("ivf_crashed/lists/.ivf_list=0.bak")),
+      "the read must restore the crashed swaps' backups")
+  }
+}
+
+/** Writes the compatibility fixture: `main(outDir)`. */
+object PreLayoutFsFixture {
+  private val rnd = new scala.util.Random(3)
+  private val vecs = (1L to 24L).map(i => (i, (i + 1) / 2, (i % 2).toInt,
+    Seq.fill(4)(rnd.nextFloat() * 2f - 1f)))
+  private val queries = Seq(Array(0.5f, -0.25f, 0.1f, 0.9f), Array(-1f, 0.2f, 0.3f, -0.4f))
+
+  /** Every row of the store and every IVF probe answer, one per line. */
+  def answers(spark: SparkSession, store: String, ivf: String): String = {
+    val rows = new EmbeddingStore(spark, store, numBuckets = 4).read()
+      .select("id", "post_id", "sequence_no", "vector", "bucket").orderBy("id")
+      .collect().map(_.mkString("|"))
+    val idx = new IvfIndex(spark, ivf, assignBuckets = 4)
+    val hits = queries.flatMap(q => Seq(1, 3).map(np =>
+      idx.search(q, k = 5, nprobe = np).collect().map(_.mkString("|")).mkString(" ")))
+    (rows ++ hits).mkString("\n")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val out = Paths.get(args(0))
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val raw = vecs.toDF("id", "post_id", "sequence_no", "vector")
+      .withColumn("vector", col("vector").cast(ArrayType(FloatType)))
+    val store = new EmbeddingStore(spark, out.resolve("store").toString, numBuckets = 4)
+    store.bulkLoad(raw.drop("id"))
+    store.upsert(raw.filter(col("id") <= 3).drop("id")
+      .withColumn("vector", transform(col("vector"), _ * 2f)))
+    store.deleteMany(Seq(7L, 12L))
+    val ivf = new IvfIndex(spark, out.resolve("ivf").toString, assignBuckets = 4)
+    ivf.build(raw.filter(col("id") <= 16), "id", "vector", vecs.take(3).map(_._4.toArray))
+    ivf.append(raw.filter(col("id") > 16), "id", "vector")
+    ivf.delete(Seq(5L, 20L).toDF("id"))
+    store.snapshot(out.resolve("store_snap").toString)
+    ivf.snapshot(out.resolve("ivf_snap").toString)
+    Files.write(out.resolve("answers.txt"), answers(spark,
+      out.resolve("store").toString, out.resolve("ivf").toString).getBytes("UTF-8"))
+    def crashedCopy(name: String, live: String): Unit = {
+      val from = out.resolve(name)
+      val to = out.resolve(s"${name}_crashed")
+      val w = Files.walk(from)
+      try w.forEach { p =>
+        val d = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(d) else Files.copy(p, d)
+      } finally w.close()
+      val l: JPath = to.resolve(live)
+      Files.move(l, l.resolveSibling(s".${l.getFileName}.bak"))
+    }
+    crashedCopy("store", "bucket=1")
+    crashedCopy("ivf", "lists/ivf_list=0")
+    // checksum sidecars are a property of the writing filesystem client
+    val w = Files.walk(out)
+    try w.filter(_.getFileName.toString.endsWith(".crc")).toArray
+      .foreach(p => Files.delete(p.asInstanceOf[JPath]))
+    finally w.close()
+  }
+}

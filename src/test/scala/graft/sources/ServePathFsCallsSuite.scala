@@ -1,0 +1,75 @@
+package graft.sources
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** The benchmark's read paths run layout recovery on every call, so a
+  * change to the commit protocol must not add metadata round-trips to
+  * them. The bounds are the counts measured on a warm call before the
+  * protocol moved behind [[LayoutFs]]. */
+class ServePathFsCallsSuite extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val Kinds = Seq("rename", "delete", "exists", "globStatus", "listStatus")
+
+  private val rnd = new scala.util.Random(5)
+  private val vecs = (1L to 40L).map(i => (i, (i + 1) / 2, (i % 2).toInt,
+    Seq.fill(8)(rnd.nextFloat() * 2f - 1f)))
+  private val query = Array.fill(8)(0.25f)
+
+  private lazy val fixture = {
+    FaultyFs.install(spark)
+    val root = Files.createTempDirectory("graft_serve_fs_calls").toString
+    val raw = vecs.toDF("id", "post_id", "sequence_no", "vector")
+      .withColumn("vector", col("vector").cast(ArrayType(FloatType)))
+    val store = new EmbeddingStore(spark, FaultyFs.uri(s"$root/store"), numBuckets = 2)
+    store.bulkLoad(raw.drop("id"))
+    val ivf = new IvfIndex(spark, FaultyFs.uri(s"$root/ivf"), assignBuckets = 4)
+    ivf.build(raw, "id", "vector", vecs.take(4).map(_._4.toArray))
+    new StoreCatalog(spark).registerIvfIndex("fs_calls", FaultyFs.uri(s"$root/ivf"))
+    graft.functions.GraftFunctions.register(spark)
+    (root, store, ivf)
+  }
+
+  /** Calls of each kind under the fixture root during one warm `body`. */
+  private def calls(body: => Any): Map[String, Long] = {
+    val plan = FaultyFs.plan(fixture._1)
+    body
+    plan.reset()
+    body
+    Kinds.map(k => k -> plan.count(k)).toMap
+  }
+
+  private def check(name: String, bound: Map[String, Long])(body: => Any): Unit =
+    test(s"serve path makes no more filesystem metadata calls than before: $name") {
+      val got = calls(body)
+      info(s"$name: $got")
+      Kinds.foreach { k =>
+        assert(got(k) <= bound(k), s"$name: $k calls ${got(k)} > ${bound(k)}")
+      }
+    }
+
+  check("EmbeddingStore.read()", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 3L,
+      "globStatus" -> 1L, "listStatus" -> 4L)) {
+    fixture._2.read().collect()
+  }
+
+  check("IvfIndex.search", Map("rename" -> 0L, "delete" -> 2L, "exists" -> 3L,
+      "globStatus" -> 4L, "listStatus" -> 9L)) {
+    fixture._3.search(query, k = 5, nprobe = 2).collect()
+  }
+
+  check("SQL scan over registerIvfIndex views", Map("rename" -> 0L, "delete" -> 2L,
+      "exists" -> 1L, "globStatus" -> 4L, "listStatus" -> 9L)) {
+    val q = query.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ", ", ")")
+    spark.sql(s"""SELECT id, vec_cosine(vector, $q) AS cosine FROM fs_calls_lists
+                 |WHERE ivf_list IN (0, 2) ORDER BY cosine DESC, id LIMIT 5""".stripMargin)
+      .collect()
+  }
+}
