@@ -52,9 +52,12 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   // ones — a split-schema store). The dims are persisted in a one-line
   // metadata file at the store root on first load and read back as the
   // default; an explicit constructor value must agree with the stored one.
+  // The file is staged under a hidden name and published by
+  // [[LayoutFs.swap]], so a crash never leaves a truncated meta.
   private val metaPath = new Path(path, "_graft_meta")
 
-  private def readStoredPrefixDims(): Option[Int] =
+  private def readStoredPrefixDims(): Option[Int] = {
+    LayoutFs.recover(fs, metaPath)
     if (!fs.exists(metaPath)) None
     else {
       val in = fs.open(metaPath)
@@ -64,11 +67,14 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
         "\"prefixDims\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
       } finally in.close()
     }
+  }
 
   private def writeMeta(dims: Int): Unit = {
-    val out = fs.create(metaPath, true)
+    val staged = new Path(path, s".${metaPath.getName}.staging")
+    val out = fs.create(staged, true)
     try out.write(s"""{"prefixDims": $dims}""".getBytes("UTF-8"))
     finally out.close()
+    LayoutFs.swap(fs, staged, metaPath)
   }
 
   /** Constructor value if given (validated against disk), else whatever a

@@ -492,9 +492,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * tens of millions of ids). Within the gate reads pay one broadcast
     * anti-join; past it [[tombstoneIds]] drops the hint and reads
     * degrade gracefully to a shuffled anti-join (correct, never an
-    * OOM) until the next vacuum restores the fast path. The SQL surface
-    * ([[graft.sources.v2.GraftLayoutSource]]) masks through the same
-    * plan-level anti-join and shares this contract. —
+    * OOM) until the next vacuum restores the fast path. The SQL views
+    * ([[graft.sources.StoreCatalog.registerInvertedIndex]]) mask through
+    * the same plan-level anti-join and share this contract. —
     * O(batch) I/O, no postings or doclens files touched. Deleting an id
     * that is not in the index is a harmless no-op (the anti-join finds
     * nothing to mask). Takes effect on the very next read; [[vacuum]]
@@ -934,9 +934,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * and a listing+head job pair per read — 12 jobs per q277-class
     * maintenance walk for 8 bytes of bookkeeping. Readers fall back to
     * the old parquet form for layouts written before this round
-    * (snapshots travel byte-faithfully). Staging+rename publish: a
-    * crash leaves either the old meta or the new one — and a MISSING
-    * meta is safe anyway (counts as fully stale, one rebuild adopts). */
+    * (snapshots travel byte-faithfully). Staged under a hidden name and
+    * published by [[LayoutFs.swap]]: a crash leaves either the old meta
+    * or the new one (a MISSING meta would be safe anyway — it counts as
+    * fully stale, one rebuild adopts). */
   private def writeDerivedMeta(name: String,
       knownLive: Option[Long] = None): Unit = {
     val n = knownLive.getOrElse(liveDocCount())
@@ -946,15 +947,15 @@ final class InvertedIndex(spark: SparkSession, path: String,
     fs.mkdirs(tmp)
     val out = fs.create(new Path(tmp, "built_n_docs.txt"), true)
     try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(dir, true)
-    if (!fs.rename(tmp, dir))
-      sys.error(s"could not publish derived meta under $dir")
+    LayoutFs.swap(fs, tmp, dir)
   }
 
   /** The live doc count `name` was last built against — text fast path,
-    * parquet fallback for pre-r22 layouts, 0 for a missing meta. */
+    * parquet fallback for pre-r22 layouts, 0 for a missing meta. Resolves
+    * a crashed [[writeDerivedMeta]] swap first. */
   private def readDerivedMeta(name: String): Long = {
     val dir = new Path(derivedMetaPath(name))
+    LayoutFs.recover(fs, dir)
     val txt = new Path(dir, "built_n_docs.txt")
     if (fs.exists(txt)) {
       val in = fs.open(txt)
@@ -1532,9 +1533,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * predicate documented on [[livePostings]]. */
   def bucketCount: Int = { recover(); readBuckets() }
 
-  /** Crash recovery alone — the [[graft.sources.v2.GraftLayoutSource]]
-    * scan-build hook (a V2 scan is a read entry point like any other,
-    * so it recovers first; the engine-wide rule). */
+  /** Crash recovery alone — run by [[graft.sources.v2.GraftLayoutSource]]
+    * in `newScanBuilder`, before it lists the files of each SQL scan
+    * (a V2 scan is a read entry point like any other, so it recovers
+    * first; the engine-wide rule). */
   private[graft] def recoverForRead(): Unit = recover()
 
   /** Dirichlet query-likelihood ranking (X197; Zhai & Lafferty, SIGIR

@@ -872,9 +872,10 @@ final class IvfIndex(spark: SparkSession, path: String,
     spark.read.parquet(listsPath)
   }
 
-  /** Crash recovery alone (lists + centroid pointer) — the
-    * [[graft.sources.v2.GraftLayoutSource]] scan-build hook: a V2 scan
-    * is a read entry point like any other, so it recovers first. */
+  /** Crash recovery alone (lists + centroid pointer) — run by
+    * [[graft.sources.v2.GraftLayoutSource]] in `newScanBuilder`, before
+    * it lists the files of each SQL scan: a V2 scan is a read entry
+    * point like any other, so it recovers first. */
   private[graft] def recoverForRead(): Unit = {
     recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
     recoverDir(path)

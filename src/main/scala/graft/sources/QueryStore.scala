@@ -78,9 +78,9 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   private def recover(): Unit =
     LayoutFs.recover(fs, new Path(clausesPath), new Path(totalsPath))
 
-  /** Crash recovery alone — the [[graft.sources.v2.GraftLayoutSource]]
-    * scan-build hook (the engine rule: every read entry point recovers
-    * first). */
+  /** Crash recovery alone — run by [[graft.sources.v2.GraftLayoutSource]]
+    * in `newScanBuilder`, before it lists the files of each SQL scan
+    * (the engine rule: every read entry point recovers first). */
   private[graft] def recoverForRead(): Unit = recover()
 
   private def totalsOf(c: DataFrame): DataFrame =

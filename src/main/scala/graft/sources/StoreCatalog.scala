@@ -55,12 +55,9 @@ final class StoreCatalog(spark: SparkSession) {
 
   private val providerClass = classOf[graft.sources.v2.GraftLayoutSource].getName
 
-  private def layoutTable(path: String, table: String,
-      masked: Boolean = false) = {
-    val r = spark.read.format(providerClass)
-      .option("path", path).option("table", table)
-    (if (masked) r.option("masked", "true") else r).load()
-  }
+  private def layoutTable(path: String, table: String) =
+    spark.read.format(providerClass)
+      .option("path", path).option("table", table).load()
 
   /** SQL-surface a persisted [[InvertedIndex]] (X189, LIVE since X200):
     * register `<name>_postings` (tombstone-masked postings, `tbucket`
@@ -73,16 +70,16 @@ final class StoreCatalog(spark: SparkSession) {
     *
     * The views are backed by the [[graft.sources.v2.GraftLayoutSource]]
     * DataSource V2 provider: every query's scan build re-runs crash
-    * recovery, re-lists the live files and re-snapshots the tombstone
-    * set, so delete/vacuum/append/compact are visible to the NEXT SQL
-    * statement with no re-registration (round-13's snapshot rule is
-    * gone). Bucket pruning is declared V2 filter pushdown — a
-    * constant-folded `tbucket` predicate prunes the directory listing
-    * itself. The vocab view carries [[InvertedIndex.vocab]]'s exact
-    * serving rule in fixed SQL over hidden `<name>__*` raw-table
-    * views: census base sum, minus the stored pending delta when a
-    * vacuum is mid-flight, else minus a live recomputation restricted
-    * to the tombstone set (empty tombstones ⇒ AQE's empty-relation
+    * recovery and re-lists the live files (the tombstone table's
+    * included), so delete/vacuum/append/compact are visible to the NEXT
+    * SQL statement with no re-registration (round-13's snapshot rule is
+    * gone). Bucket pruning is Spark's own parquet scan: a
+    * constant-folded `tbucket` predicate becomes its `PartitionFilters`,
+    * so only that bucket's files are opened. The vocab view carries
+    * [[InvertedIndex.vocab]]'s exact serving rule in fixed SQL over
+    * hidden `<name>__*` raw-table views: census base sum, minus the
+    * stored pending delta when a vacuum is mid-flight, else minus a
+    * live recomputation restricted to the tombstone set (empty tombstones ⇒ AQE's empty-relation
     * propagation skips the postings branch), zero-df terms dropped. */
   def registerInvertedIndex(name: String, path: String): Seq[String] = {
     requireName(name)
@@ -95,15 +92,14 @@ final class StoreCatalog(spark: SparkSession) {
       .createOrReplaceTempView(s"${name}__postings_raw")
     layoutTable(path, "doclens")
       .createOrReplaceTempView(s"${name}__doclens_raw")
-    // the tombstone mask as a PLAN-LEVEL anti-join (not the provider's
-    // collected per-row Set): correct and bounded for ANY tombstone
-    // mass — with no tombstones the right side reads empty and AQE
-    // collapses the join away; small sets broadcast by AQE's own
-    // size decision; a pre-vacuum takedown batch degrades to a
-    // shuffled anti-join instead of a driver collect (the size-gate
-    // rule on [[graft.sources.InvertedIndex.delete]]). Both sides are
-    // live V2 scans, so the delete-visible-to-the-next-statement
-    // contract is unchanged.
+    // the tombstone mask as a PLAN-LEVEL anti-join: correct and
+    // bounded for ANY tombstone mass — with no tombstones the right
+    // side reads empty and AQE collapses the join away; small sets
+    // broadcast by AQE's own size decision; a pre-vacuum takedown
+    // batch degrades to a shuffled anti-join instead of a driver
+    // collect (the size-gate rule on [[graft.sources.InvertedIndex.delete]]).
+    // Both sides are live V2 scans, so the delete-visible-to-the-next-
+    // statement contract is unchanged.
     spark.sql(
       s"""CREATE OR REPLACE TEMPORARY VIEW ${name}_postings AS
           SELECT p.* FROM ${name}__postings_raw p
@@ -163,9 +159,9 @@ final class StoreCatalog(spark: SparkSession) {
 
   /** SQL-surface a persisted [[GraphIndex]] (X304): register
     * `<name>_edges` (gbucket-partitioned (src, dst, cosine) — a
-    * `WHERE gbucket IN (...)` hop prunes at the directory listing
-    * exactly like [[GraphIndex.searchTopK]]'s per-hop reads, declared
-    * V2 pushdown) and `<name>_tombstones` as live session temp views.
+    * `WHERE gbucket IN (...)` hop becomes the scan's `PartitionFilters`,
+    * pruned exactly like [[GraphIndex.searchTopK]]'s per-hop reads) and
+    * `<name>_tombstones` as live session temp views.
     * The edges view is deliberately RAW — tombstoned nodes keep
     * ROUTING (the FreshDiskANN lazy-delete rule), so masking edges
     * would change traversal semantics; a SQL reader excludes
@@ -182,8 +178,8 @@ final class StoreCatalog(spark: SparkSession) {
 
   /** SQL-surface a persisted [[IvfIndex]] (X189, LIVE since X200):
     * register `<name>_lists` (ivf_list-partitioned (id, vector) — a
-    * `WHERE ivf_list IN (...)` probe prunes at the directory listing
-    * exactly like the Scala search, declared as V2 pushdown) and
+    * `WHERE ivf_list IN (...)` probe becomes the scan's
+    * `PartitionFilters`, pruned exactly like the Scala search) and
     * `<name>_centroids` ((cid, centroid) — the probe-selection input)
     * as session temp views over the live provider: IVF deletes are
     * physical rewrites and appends/splits/merges are directory

@@ -1,71 +1,40 @@
 package graft.sources.v2
 
+import java.io.FileNotFoundException
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.example.data.Group
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType, Type => PType}
-import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
+import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 `TableProvider` over the engine's persisted layouts —
-  * the LIVE SQL surface behind [[graft.sources.StoreCatalog]]'s
-  * registrations (round-13 gap: the snapshot temp views froze the file
-  * listing AND the tombstone existence at registration time, so a SQL
-  * reader could see resurrected docs after a delete, and appends were
-  * invisible until re-registration).
+  * the LIVE SQL surface behind [[graft.sources.StoreCatalog]]'s views.
+  * Spark calls [[SupportsRead.newScanBuilder]] at every query's
+  * planning: it runs the owning layout's crash recovery, then lists the
+  * live part-files afresh on the driver, so delete/vacuum/append/compact
+  * are visible to the very next SQL statement with no re-registration.
+  * Decoding, partition pruning (a `tbucket`/`ivf_list` predicate becomes
+  * the scan's `PartitionFilters`), data-filter pushdown, column pruning
+  * and split packing are Spark's own parquet scan. This provider never
+  * masks tombstones: the registered views anti-join the live
+  * `tombstones` table (see [[graft.sources.StoreCatalog]]).
   *
-  * Liveness comes from the V2 contract itself: a registered view holds
-  * only a `DataSourceV2Relation` over this provider's [[Table]], and
-  * Spark calls [[SupportsRead.newScanBuilder]] at EVERY query's
-  * planning — each scan re-runs the layout's crash recovery, re-lists
-  * the live part-files, and re-snapshots the tombstone set, so
-  * delete/vacuum/append/compact are visible to the very next SQL
-  * statement with no re-registration.
-  *
-  * Scale shape mirrors the Scala read paths: partition-column filters
-  * (`tbucket` / `ivf_list` EqualTo/In) push down into the DIRECTORY
-  * listing — only the named partitions' files are ever opened (the
-  * PartitionFilters guarantee, now declared through V2 pushdown instead
-  * of relying on constant folding) — and column pruning reaches the
-  * parquet projection. Tombstone masking on the REGISTERED views is a
-  * plan-level anti-join against the live `tombstones` table (scale-safe
-  * for any tombstone mass; AQE broadcasts it only when actually small —
-  * see the vacuum-cadence contract on
-  * [[graft.sources.InvertedIndex.delete]]); the provider's own
-  * `masked=true` per-row Set mask remains for embedded single-table
-  * scans and is SIZE-GATED (`graft.mask.broadcast.maxBytes`) — an
-  * over-threshold tombstone table makes it fail fast rather than
-  * collect unboundedly. Rows decode through parquet-hadoop's Group
-  * reader — a non-vectorized path, acceptable because the registered
-  * serving queries read either pruned slices (postings buckets) or
-  * narrow tables (doclens, census); bulk analytics should read the
-  * layout directly with `spark.read.parquet`.
-  *
-  * Options: `path` (layout root), `table` (one of `postings`,
-  * `doclens`, `census`, `census_delta`, `tombstones`, `ivf_lists`,
-  * `ivf_centroids`), `masked` (`true` on postings/doclens applies the
-  * live-tombstone mask). `tombstones`/`census_delta` read EMPTY when
-  * their directory does not exist — the view SQL composes them without
-  * existence checks. */
+  * Options: `path` (layout root) and `table` (a key of
+  * `GraftLayoutSource.layouts`). A table whose directory does not exist
+  * (`tombstones`, `census_delta` before their first write) reads empty. */
 final class GraftLayoutSource extends TableProvider {
 
   override def supportsExternalMetadata(): Boolean = false
@@ -80,192 +49,106 @@ final class GraftLayoutSource extends TableProvider {
 
 private[v2] object GraftLayoutSource {
 
-  /** (relative dir, partition column, maskable) per logical table. */
-  private val layouts: Map[String, (String, Option[String], Boolean)] = Map(
-    "postings" -> (("postings", Some("tbucket"), true)),
-    "doclens" -> (("doclens", None, true)),
-    "census" -> (("census/base", Some("tprefix"), false)),
-    "census_delta" -> (("census/pending_delta", None, false)),
-    "tombstones" -> (("tombstones", None, false)),
-    "ivf_lists" -> (("lists", Some("ivf_list"), false)),
-    "ivf_centroids" -> (("centroids", None, false)),
-    "query_clauses" -> (("clauses", Some("tbucket"), false)),
-    "query_totals" -> (("totals", None, false)),
-    "query_tombstones" -> (("tombstones", None, false)),
-    "graph_edges" -> (("edges", Some("gbucket"), false)),
-    "graph_tombstones" -> (("tombstones", None, false)))
+  /** (relative dir, partition column, canonical data columns) per logical
+    * table. The canonical columns are what an EMPTY layout registers with
+    * (doc ids BIGINT, the engine's default id width). */
+  private val layouts: Map[String, (String, Option[String], String)] = Map(
+    "postings" -> (("postings", Some("tbucket"), "doc_id BIGINT, pos INT, term STRING")),
+    "doclens" -> (("doclens", None, "doc_id BIGINT, dl BIGINT")),
+    "census" -> (("census/base", Some("tprefix"), "term STRING, df BIGINT")),
+    "census_delta" -> (("census/pending_delta", None, "term STRING, df BIGINT")),
+    "tombstones" -> (("tombstones", None, "doc_id BIGINT")),
+    "ivf_lists" -> (("lists", Some("ivf_list"), "id BIGINT, vector ARRAY<FLOAT>")),
+    "ivf_centroids" -> (("centroids", None, "cid INT, centroid ARRAY<FLOAT>")),
+    "query_clauses" -> (("clauses", Some("tbucket"), "query_id STRING, term STRING, clause STRING")),
+    "query_totals" -> (("totals", None, "query_id STRING, n_must BIGINT, n_should BIGINT")),
+    "query_tombstones" -> (("tombstones", None, "query_id STRING")),
+    "graph_edges" -> (("edges", Some("gbucket"), "src BIGINT, dst BIGINT, cosine DOUBLE")),
+    "graph_tombstones" -> (("tombstones", None, "id BIGINT")))
 
   def tableFor(props: JMap[String, String]): LayoutTable = {
     val m = props.asScala
+    if (m.keys.exists(_.equalsIgnoreCase("masked")))
+      throw new IllegalArgumentException("graft layout source: the 'masked' " +
+        "option was removed; query the tombstone-masked anti-join views " +
+        "StoreCatalog registers (registerInvertedIndex: <name>_postings, " +
+        "<name>_doclens; registerQueryStore: <name>_clauses, <name>_totals)")
     val root = m.getOrElse("path",
       throw new IllegalArgumentException("graft layout source needs a 'path'"))
-    val table = m.getOrElse("table",
-      throw new IllegalArgumentException(
-        s"graft layout source needs a 'table' (one of ${layouts.keys.toSeq.sorted})"))
-    val (rel, partCol, maskable) = layouts.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"unknown table '$table' (one of ${layouts.keys.toSeq.sorted})"))
-    val masked = m.get("masked").exists(_.toBoolean)
-    require(!masked || maskable, s"table '$table' does not support masking")
-    new LayoutTable(root, table, s"$root/$rel", partCol, masked)
+    val table = m.getOrElse("table", "")
+    val (rel, partCol, canonical) = layouts.getOrElse(table,
+      throw new IllegalArgumentException(s"graft layout source needs a 'table' " +
+        s"(one of ${layouts.keys.toSeq.sorted}), got '$table'"))
+    new LayoutTable(root, table, s"$root/$rel", partCol, StructType.fromDDL(canonical))
   }
 
   /** Run the owning layout's crash recovery — the engine rule that every
-    * read entry point recovers first, now holding for SQL scans too. */
+    * read entry point recovers first, holding for SQL scans too. */
   def recover(root: String, table: String): Unit = {
     val spark = SparkSession.active
-    if (table.startsWith("ivf_"))
-      new graft.sources.IvfIndex(spark, root).recoverForRead()
-    else if (table.startsWith("query_"))
-      new graft.sources.QueryStore(spark, root).recoverForRead()
-    else if (table.startsWith("graph_"))
-      // append rewrites edge buckets under the two-rename swap, so graph
-      // tables DO have mid-crash states to heal (r20 ADVICE): resolve
-      // hidden .gbucket=N.bak backups before the scan lists files
-      new graft.sources.GraphIndex(spark, root).recoverForRead()
-    else
-      new graft.sources.InvertedIndex(spark, root).recoverForRead()
+    table.takeWhile(_ != '_') match {
+      case "ivf" => new graft.sources.IvfIndex(spark, root).recoverForRead()
+      case "query" => new graft.sources.QueryStore(spark, root).recoverForRead()
+      case "graph" => new graft.sources.GraphIndex(spark, root).recoverForRead()
+      case _ => new graft.sources.InvertedIndex(spark, root).recoverForRead()
+    }
   }
 
-  def fileSystemFor(path: String): FileSystem =
-    new Path(path).getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-
-  /** All data part-files under `dir`, grouped by partition value when a
-    * partition column is present (directory layout `col=N/part-*`). */
-  def listFiles(dir: String, partCol: Option[String]): Seq[(Option[Int], Path)] = {
-    val fs = fileSystemFor(dir)
+  /** The live part-files under `dir`, listed on the driver: the root, then
+    * each `col=N` directory when partitioned; hidden (`.`/`_`) names are
+    * skipped and a missing root lists none. Spark's own listing would run
+    * a job per query once a root holds more partition directories than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`. */
+  def liveFiles(dir: String, partCol: Option[String]): Array[FileStatus] = {
     val root = new Path(dir)
-    if (!fs.exists(root)) return Nil
-    def dataFiles(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(_.getPath)
-    partCol match {
-      case None => dataFiles(root).map(p => (None, p))
-      case Some(c) =>
-        fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$c="))
-          .flatMap { d =>
-            val v = d.getPath.getName.stripPrefix(s"$c=").toInt
-            dataFiles(d.getPath).map(p => (Some(v), p))
-          }
+    val fs = root.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    def list(p: Path) = fs.listStatus(p).filterNot(s =>
+      s.getPath.getName.startsWith(".") || s.getPath.getName.startsWith("_"))
+    val top = try list(root) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+    partCol.fold(top.filter(_.isFile))(c => top
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$c="))
+      .flatMap(d => list(d.getPath).filter(_.isFile)))
+  }
+
+  /** The data columns of the first part-file under `dir`, as Spark reads
+    * them, but with every field and array element nullable: Spark writes
+    * non-null columns as parquet `required`, and a later rebuild of the
+    * layout may carry nulls the pinned schema must admit. None when the
+    * directory holds no file. */
+  def footerSchema(dir: String, partCol: Option[String]): Option[StructType] =
+    liveFiles(dir, partCol).headOption.map { file =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(file.getPath,
+        SparkSession.active.sparkContext.hadoopConfiguration))
+      val message = try r.getFooter.getFileMetaData.getSchema finally r.close()
+      def nullable(t: DataType): DataType = t match {
+        case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+        case other => other
+      }
+      StructType(new ParquetToSparkSchemaConverter(SQLConf.get).convert(message)
+        .map(f => StructField(f.name, nullable(f.dataType))))
     }
-  }
-
-  /** Parquet file schema → Spark StructType for the layout column set:
-    * primitives plus LIST-of-FLOAT (the embedding vector columns). */
-  def toSparkSchema(message: MessageType): StructType =
-    StructType(message.getFields.asScala.toSeq.map(f =>
-      StructField(f.getName, toSparkType(f), nullable = true)))
-
-  private def toSparkType(t: PType): DataType = t match {
-    case p: PrimitiveType => p.getPrimitiveTypeName match {
-      case INT32 => IntegerType
-      case INT64 => LongType
-      case FLOAT => FloatType
-      case DOUBLE => DoubleType
-      case BOOLEAN => BooleanType
-      case BINARY
-        if p.getLogicalTypeAnnotation ==
-          LogicalTypeAnnotation.stringType() => StringType
-      case other => throw new IllegalArgumentException(
-        s"unsupported parquet type $other for layout column ${t.getName}")
-    }
-    case g: GroupType
-      if g.getLogicalTypeAnnotation == LogicalTypeAnnotation.listType() =>
-      // Spark-written LIST: group (LIST) { repeated group list { element } }
-      val elem = g.getType(0).asGroupType().getType(0)
-      ArrayType(toSparkType(elem), containsNull = true)
-    case other => throw new IllegalArgumentException(
-      s"unsupported parquet group ${other.getName} in a layout file")
-  }
-
-  def footerSchema(file: Path): MessageType = {
-    val in = HadoopInputFile.fromPath(file,
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    val r = ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-
-  /** The canonical (data) column set per logical table — the schema an
-    * EMPTY layout registers with (doc ids LONG, the engine's default
-    * id width; a layout built with a different physical id type must
-    * register after its first build to pick it up from the footers). */
-  def canonicalSchema(table: String): StructType = table match {
-    case "postings" => StructType(Seq(
-      StructField("doc_id", LongType), StructField("pos", IntegerType),
-      StructField("term", StringType)))
-    case "doclens" => StructType(Seq(
-      StructField("doc_id", LongType), StructField("dl", LongType)))
-    case "census" | "census_delta" => StructType(Seq(
-      StructField("term", StringType), StructField("df", LongType)))
-    case "tombstones" => StructType(Seq(StructField("doc_id", LongType)))
-    case "query_clauses" => StructType(Seq(
-      StructField("query_id", StringType), StructField("term", StringType),
-      StructField("clause", StringType)))
-    case "query_totals" => StructType(Seq(
-      StructField("query_id", StringType), StructField("n_must", LongType),
-      StructField("n_should", LongType)))
-    case "query_tombstones" =>
-      StructType(Seq(StructField("query_id", StringType)))
-    case "ivf_lists" => StructType(Seq(
-      StructField("id", LongType),
-      StructField("vector", ArrayType(FloatType, containsNull = true))))
-    case "ivf_centroids" => StructType(Seq(
-      StructField("cid", IntegerType),
-      StructField("centroid", ArrayType(FloatType, containsNull = true))))
-    case "graph_edges" => StructType(Seq(
-      StructField("src", LongType), StructField("dst", LongType),
-      StructField("cosine", DoubleType)))
-    case "graph_tombstones" => StructType(Seq(StructField("id", LongType)))
-    case other => throw new IllegalArgumentException(
-      s"no canonical schema for layout table '$other'")
-  }
 }
 
-/** One persisted-layout table. DATA is live per scan (every
-  * [[newScanBuilder]] re-recovers, re-lists, re-snapshots), but the
-  * SCHEMA is pinned at registration: Spark resolves a
-  * `DataSourceV2Relation`'s output once, so a layout later rebuilt with
-  * a DIFFERENT doc_id/id physical type keeps serving the registered
-  * schema until re-registration — the one piece of the view that is
-  * NOT live (class doc of [[GraftLayoutSource]]). A still-empty layout
-  * registers with the engine's canonical column set (doc ids LONG) and
-  * starts serving rows as soon as files appear, provided they carry
-  * those canonical types. */
+/** One persisted-layout table. DATA is live per scan, but the SCHEMA is
+  * pinned at registration: Spark resolves a `DataSourceV2Relation`'s
+  * output once, so a layout later rebuilt with a DIFFERENT doc_id/id
+  * physical type keeps serving the registered schema until
+  * re-registration. A still-empty layout registers with a sibling
+  * layout's footer types where one exists, else the canonical columns. */
 final class LayoutTable(root: String, tableName: String, dir: String,
-    partCol: Option[String], masked: Boolean) extends Table with SupportsRead {
+    partCol: Option[String], canonical: StructType) extends Table with SupportsRead {
+  import GraftLayoutSource._
 
   override def name(): String = s"graft:$tableName($root)"
 
   override lazy val schema: StructType = {
-    GraftLayoutSource.recover(root, tableName)
-    val files = GraftLayoutSource.listFiles(dir, partCol)
-    val fileSchema = files.headOption match {
-      case Some((_, p)) =>
-        GraftLayoutSource.toSparkSchema(GraftLayoutSource.footerSchema(p))
-      case None => tableName match {
-        // absent-dir / not-yet-built tables read empty; prefer deriving
-        // from a sibling layout file (exact physical id type), fall
-        // back to the canonical fixed column set so registering a fresh
-        // layout never throws
-        case "tombstones" =>
-          GraftLayoutSource.listFiles(s"$root/doclens", None).headOption
-            .map(dl => StructType(GraftLayoutSource.toSparkSchema(
-              GraftLayoutSource.footerSchema(dl._2)).filter(_.name == "doc_id")))
-            .getOrElse(GraftLayoutSource.canonicalSchema(tableName))
-        case "census_delta" =>
-          GraftLayoutSource.listFiles(s"$root/census/base", None).headOption
-            .map(cb => GraftLayoutSource.toSparkSchema(
-              GraftLayoutSource.footerSchema(cb._2)))
-            .getOrElse(GraftLayoutSource.canonicalSchema(tableName))
-        case "query_tombstones" =>
-          GraftLayoutSource.canonicalSchema(tableName)
-        case other => GraftLayoutSource.canonicalSchema(other)
-      }
-    }
+    recover(root, tableName)
+    val fileSchema = footerSchema(dir, partCol).orElse(tableName match {
+      case "tombstones" => footerSchema(s"$root/doclens", None)
+        .map(dl => StructType(dl.filter(_.name == "doc_id")))
+      case "census_delta" => footerSchema(s"$root/census/base", Some("tprefix"))
+      case _ => None
+    }).getOrElse(canonical)
     partCol.fold(fileSchema)(c =>
       StructType(fileSchema.fields :+ StructField(c, IntegerType, nullable = false)))
   }
@@ -273,314 +156,18 @@ final class LayoutTable(root: String, tableName: String, dir: String,
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LayoutScanBuilder(root, tableName, dir, partCol, masked, schema)
-}
-
-/** Scan builder: partition-column filters prune the directory listing
-  * (declared pushdown), column pruning reaches the parquet projection.
-  * Everything else stays a Spark-side filter on top. */
-final class LayoutScanBuilder(root: String, tableName: String, dir: String,
-    partCol: Option[String], masked: Boolean, tableSchema: StructType)
-  extends ScanBuilder with SupportsPushDownFilters
-  with SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  private var partitionKeep: Option[Set[Int]] = None
-  private var required: StructType = tableSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, rejected) = filters.partition {
-      case EqualTo(c, v: Int) if partCol.contains(c) => true
-      case In(c, vs) if partCol.contains(c) && vs.forall(_.isInstanceOf[Int]) => true
-      case _ => false
-    }
-    pushed = accepted
-    val keeps = accepted.map {
-      case EqualTo(_, v: Int) => Set(v)
-      case In(_, vs) => vs.map(_.asInstanceOf[Int]).toSet
-    }
-    partitionKeep = keeps.reduceOption(_ intersect _)
-    rejected
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = {
-    // scan build = the read entry point: recover, snapshot the live
-    // listing and the tombstone set NOW (per query, not per register)
-    GraftLayoutSource.recover(root, tableName)
-    val files = GraftLayoutSource.listFiles(dir, partCol)
-      .filter { case (pv, _) =>
-        partitionKeep.forall(keep => pv.forall(keep.contains)) }
-    val tombstones: Set[Any] =
-      if (!masked) Set.empty
-      else {
-        val ts = GraftLayoutSource.listFiles(s"$root/tombstones", None)
-        if (ts.isEmpty) Set.empty
-        else {
-          // size gate (graft.mask.broadcast.maxBytes): the per-row Set
-          // mask collects the tombstone table to the driver and ships
-          // it in every task closure, so it is only sound while the
-          // table is broadcast-sized — the same vacuum-cadence bound as
-          // the Scala read paths (InvertedIndex.delete). Past the gate,
-          // refuse loudly: the scale-safe route is the plan-level
-          // anti-join view StoreCatalog registers (masked=false data +
-          // the live `tombstones` table), which AQE broadcasts only
-          // when actually small.
-          val fs = GraftLayoutSource.fileSystemFor(root)
-          val bytes = ts.map(f => fs.getFileStatus(f._2).getLen).sum
-          val gate = graft.sources.InvertedIndex
-            .maskBroadcastBytes(SparkSession.active)
-          if (bytes > gate) throw new IllegalStateException(
-            s"tombstone table of $root is $bytes bytes (> $gate, " +
-              s"${graft.sources.InvertedIndex.MaskBroadcastKey}): too large " +
-              "for the collected per-row mask — query the registered " +
-              "anti-join view (or vacuum) instead of a masked=true scan")
-          SparkSession.active.read
-            .parquet(s"$root/tombstones")
-            .select("doc_id").distinct().collect()
-            .map(r => LayoutScan.normalizeId(r.get(0))).toSet
-        }
-      }
-    new LayoutScan(tableName, files, partCol, required, tombstones,
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration))
-  }
-}
-
-object LayoutScan {
-  /** Tombstone ids normalize to Long (integral) or String so the mask
-    * compares by value across physical widths. */
-  def normalizeId(v: Any): Any = v match {
-    case i: java.lang.Integer => i.longValue(): java.lang.Long
-    case l: java.lang.Long => l
-    case s: String => s
-    case other => other
-  }
-}
-
-final class LayoutScan(tableName: String, files: Seq[(Option[Int], Path)],
-    partCol: Option[String], required: StructType, tombstones: Set[Any],
-    conf: SerializableHadoopConf) extends Scan with Batch {
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"graft:$tableName ${files.size} files" +
-      (if (tombstones.nonEmpty) s", ${tombstones.size} tombstones" else "")
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map { case (pv, p) =>
-      LayoutInputPartition(p.toString, pv): InputPartition }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LayoutReaderFactory(required, partCol, tombstones, conf)
-}
-
-final case class LayoutInputPartition(file: String, partValue: Option[Int])
-  extends InputPartition
-
-final class LayoutReaderFactory(required: StructType, partCol: Option[String],
-    tombstones: Set[Any], conf: SerializableHadoopConf)
-  extends PartitionReaderFactory {
-
-  // UNMASKED scans (the registered raw views — masking is the
-  // plan-level anti-join since round 15) read COLUMNAR through Spark's
-  // own vectorized parquet reader, so bulk SQL analytics over a
-  // registered layout pays the same decode path as spark.read.parquet
-  // (round-14 "What's missing" #3: the Group-reader route was
-  // row-at-a-time). The per-row Set mask keeps the row-based reader:
-  // filtering a ColumnarBatch per row would rebuild the batch, and the
-  // masked route is the pruned-serving/small-set path by contract.
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    tombstones.isEmpty
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new LayoutPartitionReader(
-      partition.asInstanceOf[LayoutInputPartition], required, partCol,
-      tombstones, conf.value)
-
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new LayoutColumnarReader(
-      partition.asInstanceOf[LayoutInputPartition], required, partCol,
-      conf.value)
-}
-
-/** Vectorized reader for unmasked layout scans: Spark's
-  * `VectorizedParquetRecordReader` decodes whole column batches (the
-  * exact engine `spark.read.parquet` runs on), with the requested
-  * columns pushed as the parquet projection and the directory's
-  * partition value appended as a constant vector via `initBatch`. */
-final class LayoutColumnarReader(part: LayoutInputPartition,
-    required: StructType, partCol: Option[String], conf: Configuration)
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
-
-  private val dataSchema =
-    StructType(required.filterNot(f => partCol.contains(f.name)))
-
-  private val reader = {
-    val readConf = new Configuration(conf)
-    readConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
-    readConf.set("parquet.read.support.class",
-      classOf[ParquetReadSupport].getName)
-    // the SQLConf-derived keys Spark's file-source path always plants
-    // in the hadoop conf before handing it to this reader
-    readConf.setBoolean("spark.sql.parquet.binaryAsString", false)
-    readConf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
-    readConf.setBoolean("spark.sql.caseSensitive", false)
-    readConf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
-    readConf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
-    readConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
-    val r = new VectorizedParquetRecordReader(false, 4096)
-    val p = new Path(part.file)
-    // mapred.FileSplit (which extends the mapreduce one) — the base
-    // reader casts to it for its length/offset bookkeeping
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      p, 0, p.getFileSystem(readConf).getFileStatus(p).getLen,
-      Array.empty[String])
-    r.initialize(split,
-      new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-        readConf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
-    val (pCols, pVals) = partCol match {
-      case Some(c) if required.fieldNames.contains(c) =>
-        (StructType(Seq(required(c))),
-          InternalRow(part.partValue.map(Int.box).orNull))
-      case _ => (new StructType(), InternalRow.empty)
-    }
-    r.initBatch(pCols, pVals)
-    r.enableReturningBatches()
-    r
-  }
-
-  override def next(): Boolean = reader.nextBatch()
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-    reader.getCurrentValue.asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
-
-  override def close(): Unit = reader.close()
-}
-
-/** Row-group reader: parquet-hadoop Group records → InternalRow, with
-  * the file projection = requested columns (+ doc_id while masking),
-  * the partition column synthesized from the directory value, and the
-  * tombstone mask applied per row. */
-final class LayoutPartitionReader(part: LayoutInputPartition,
-    required: StructType, partCol: Option[String], tombstones: Set[Any],
-    conf: Configuration) extends PartitionReader[InternalRow] {
-
-  private val filePath = new Path(part.file)
-
-  private val fileMessage: MessageType = {
-    val in = HadoopInputFile.fromPath(filePath, conf)
-    val r = ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-
-  // columns the FILE must yield: requested minus the partition column,
-  // plus doc_id when a mask must evaluate on unprojected ids
-  private val fileCols: Seq[String] = {
-    val req = required.fieldNames.toSeq.filterNot(partCol.contains)
-    if (tombstones.nonEmpty && !req.contains("doc_id")) req :+ "doc_id" else req
-  }
-
-  private val projection: MessageType = {
-    val kept = fileMessage.getFields.asScala.filter(f => fileCols.contains(f.getName))
-    new MessageType(fileMessage.getName, kept.toList.asJava)
-  }
-
-  private val reader = {
-    val readConf = new Configuration(conf)
-    readConf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projection.toString)
-    org.apache.parquet.hadoop.ParquetReader
-      .builder(new GroupReadSupport(), filePath)
-      .withConf(readConf)
-      .build()
-  }
-
-  private val docIdIdx = projection.getFields.asScala.indexWhere(_.getName == "doc_id")
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    while (g != null && masked(g)) g = reader.read()
-    current = g
-    g != null
-  }
-
-  private def masked(g: Group): Boolean =
-    tombstones.nonEmpty && docIdIdx >= 0 && {
-      val id = LayoutScan.normalizeId(value(g, docIdIdx,
-        projection.getFields.get(docIdIdx)))
-      id != null && tombstones.contains(id)
-    }
-
-  override def get(): InternalRow = {
-    val vals = required.fields.map { f =>
-      if (partCol.contains(f.name)) part.partValue.map(Int.box).orNull
-      else {
-        val i = projection.getFields.asScala.indexWhere(_.getName == f.name)
-        sparkValue(value(current, i, projection.getFields.get(i)), f.dataType)
-      }
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
-
-  private def value(g: Group, idx: Int, t: PType): Any = {
-    if (g.getFieldRepetitionCount(idx) == 0) return null
-    t match {
-      case p: PrimitiveType => p.getPrimitiveTypeName match {
-        case INT32 => g.getInteger(idx, 0)
-        case INT64 => g.getLong(idx, 0)
-        case FLOAT => g.getFloat(idx, 0)
-        case DOUBLE => g.getDouble(idx, 0)
-        case BOOLEAN => g.getBoolean(idx, 0)
-        case BINARY => g.getString(idx, 0)
-        case other => throw new IllegalArgumentException(s"unsupported $other")
-      }
-      case _: GroupType =>
-        // LIST wrapper: repeated group list { element }
-        val wrapper = g.getGroup(idx, 0)
-        val n = wrapper.getFieldRepetitionCount(0)
-        (0 until n).map { i =>
-          val e = wrapper.getGroup(0, i)
-          if (e.getFieldRepetitionCount(0) == 0) null
-          else value(e, 0, e.getType.getType(0))
-        }
-    }
-  }
-
-  private def sparkValue(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (s: String, StringType) => UTF8String.fromString(s)
-    case (seq: Seq[_], ArrayType(et, _)) =>
-      new GenericArrayData(seq.map(sparkValue(_, et)).toArray)
-    case (other, _) => other
-  }
-
-  override def close(): Unit = reader.close()
-}
-
-/** Hadoop `Configuration` is not `Serializable`; readers on executors
-  * need it for the filesystem — ship it via its own writable codec. */
-final class SerializableHadoopConf(@transient var value: Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
+  /** Recover, then hand Spark a file index seeded with [[liveFiles]]:
+    * partition inference and pruning are Spark's, the listing is not. */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    recover(root, tableName)
+    val files = liveFiles(dir, partCol)
+    val index = new InMemoryFileIndex(SparkSession.active, Seq(new Path(dir)),
+      Map.empty, Some(schema), new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Some(files)
+        override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      })
+    ParquetScanBuilder(SparkSession.active, index, schema,
+      StructType(schema.filterNot(f => partCol.contains(f.name))), options)
   }
 }

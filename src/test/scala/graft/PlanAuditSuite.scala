@@ -1108,6 +1108,34 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(u <= 2, s"unfiltered search launched $u jobs")
   }
 
+  test("job counts: registering and planning SQL views over more partition dirs than the parallel-listing threshold start no job") {
+    import spark.implicits._
+    val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val parts = threshold + 8
+    val rnd = new scala.util.Random(11)
+    val vecs = (0 until 2 * parts).map(i => i.toLong -> Array.fill(8)(rnd.nextFloat() * 2f - 1f))
+    val dir = java.nio.file.Files.createTempDirectory("graft_wide_listing").toString
+    new sources.IvfIndex(spark, s"$dir/ivf").build(vecs.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", vecs.take(parts).map(_._2))
+    new sources.InvertedIndex(spark, s"$dir/inv", buckets = parts).build(
+      (0 until 40).map(d => d.toLong -> (0 until 30).map(t => s"w${d * 30 + t}").mkString(" "))
+        .toDF("doc_id", "text"), "doc_id", $"text")
+    def dirs(p: String, col: String) =
+      new java.io.File(p).listFiles().count(_.getName.startsWith(s"$col="))
+    assert(dirs(s"$dir/ivf/lists", "ivf_list") > threshold &&
+      dirs(s"$dir/inv/postings", "tbucket") > threshold, "fixture must exceed the threshold")
+    val catalog = new sources.StoreCatalog(spark)
+    assert(jobsOf(catalog.registerIvfIndex("wide_listing", s"$dir/ivf")) == 0)
+    assert(jobsOf(catalog.registerInvertedIndex("wide_listing_inv", s"$dir/inv")) == 0)
+    for (sql <- Seq("SELECT id FROM wide_listing_lists WHERE ivf_list IN (0, 1)",
+        "SELECT doc_id, pos FROM wide_listing_inv_postings WHERE tbucket = 3",
+        "SELECT term, df FROM wide_listing_inv_vocab WHERE term = 'w7'")) {
+      val frame = spark.sql(sql)
+      assert(jobsOf(frame.queryExecution.executedPlan) == 0, s"planning `$sql` started a job")
+      assert(frame.count() > 0, s"`$sql` must read rows")
+    }
+  }
+
   // ---- compile once: no per-request constant reaches generated code ------
 
   /** Three distinct 8-d queries of one shape. */
@@ -1130,15 +1158,51 @@ class PlanAuditSuite extends AnyFunSuite {
   private def floatArray(q: Array[Float]): String =
     q.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ", ", ")")
 
-  /** The benchmark's SQL IVF probe: pick the 2 best lists driver-side,
-    * then score them with `vec_cosine` over the registered views. */
-  private def sqlIvf(q: Array[Float]): DataFrame = {
-    val probes = ivfFixture.centroids().zipWithIndex
+  /** The 2 lists whose centroids best match `q`, picked driver-side. */
+  private def sqlIvfProbes(q: Array[Float]): Seq[Int] =
+    ivfFixture.centroids().zipWithIndex
       .map { case (c, i) => (i, c.zip(q).map { case (x, y) => x.toDouble * y }.sum) }
       .sortBy { case (i, d) => (-d, i) }.take(2).map(_._1)
+
+  /** The benchmark's SQL IVF probe: score the probed lists with
+    * `vec_cosine` over the registered views. */
+  private def sqlIvf(q: Array[Float]): DataFrame =
     spark.sql(s"""SELECT id, round(vec_cosine(vector, ${floatArray(q)}), 6) AS cosine
-                 |FROM compile_audit_lists WHERE ivf_list IN (${probes.mkString(", ")})
+                 |FROM compile_audit_lists WHERE ivf_list IN (${sqlIvfProbes(q).mkString(", ")})
                  |ORDER BY vec_cosine(vector, ${floatArray(q)}) DESC, id ASC LIMIT 5""".stripMargin)
+
+  test("SQL IVF probe over registerIvfIndex views: vectorized parquet scan, probe lists pruned as PartitionFilters") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec}
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+    val frame = sqlIvf(fresh.head)
+    frame.collect()
+    val plan = frame.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(plan.collect { case c: ColumnarToRowExec => c }.nonEmpty,
+      s"the lists scan must decode vectorized:\n$plan")
+    assert(plan.collect { case f: FilterExec => f }.isEmpty,
+      s"ivf_list must not survive as a Filter above the scan:\n$plan")
+    val scans = plan.collect { case b: BatchScanExec => b.scan }
+      .collect { case s: ParquetScan => s }
+    assert(scans.size == 1, s"one parquet scan of the lists:\n$plan")
+    val scan = scans.head
+    assert(scan.partitionFilters.nonEmpty &&
+      scan.partitionFilters.forall(_.references.map(_.name).toSet == Set("ivf_list")),
+      s"the probe must be the scan's PartitionFilters: ${scan.partitionFilters}")
+    assert(scan.dataFilters.isEmpty, s"no data filter expected: ${scan.dataFilters}")
+    val listsDir = scan.fileIndex.rootPaths.head.toUri.getPath
+    val probedFiles = sqlIvfProbes(fresh.head).flatMap(l =>
+      Option(new java.io.File(s"$listsDir/ivf_list=$l").listFiles()).toSeq.flatten)
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(_.getName).toSet
+    val planned = scan.planInputPartitions()
+      .flatMap(_.asInstanceOf[FilePartition].files.map(_.toPath.getName)).toSet
+    assert(planned.nonEmpty && planned == probedFiles,
+      s"the scan must open exactly the probed lists' files: $planned vs $probedFiles")
   }
 
   private def compiles(body: => Any): Long = {

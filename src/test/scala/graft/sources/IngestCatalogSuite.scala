@@ -11,6 +11,18 @@ class IngestCatalogSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The parquet scans of `df`'s physical plan whose root is `dir`. */
+  private def layoutScans(df: org.apache.spark.sql.DataFrame, dir: String) =
+    df.queryExecution.sparkPlan
+      .collect { case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s.scan }
+      .collect { case s: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+        if s.fileIndex.rootPaths.exists(_.getName == dir) => s }
+
+  /** Files a parquet scan will open, over all its packed splits. */
+  private def plannedFiles(s: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan) =
+    s.planInputPartitions().flatMap(_.asInstanceOf[
+      org.apache.spark.sql.execution.datasources.FilePartition].files.map(_.filePath)).distinct.length
+
   test("V7: JSON-lines ingest parses the reference wire format; egress round-trips") {
     val dir = Files.createTempDirectory("graft_ingest").toString
     val lines = Seq(
@@ -77,21 +89,18 @@ class IngestCatalogSuite extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(sqlPhrase.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       === viaScala, "SQL phrase over the views must equal the Scala serving path")
-    // the bucket predicate constant-folds, pushes into the V2 scan and
-    // prunes the directory listing: each postings scan plans only the
-    // one queried bucket's files (the PartitionFilters audit, preserved
-    // through the live provider)
-    val scans = sqlPhrase.queryExecution.sparkPlan
-      .collect { case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s }
-      .map(_.scan).collect { case s: graft.sources.v2.LayoutScan => s }
-      .filter(_.description().startsWith("graft:postings"))
-    assert(scans.nonEmpty, "postings must read through the V2 provider")
+    // the bucket predicate constant-folds into the parquet scan's
+    // PartitionFilters: each postings scan plans only the one queried
+    // bucket's files
+    val scans = layoutScans(sqlPhrase, "postings")
+    assert(scans.nonEmpty, "postings must read through Spark's parquet scan")
     val allBuckets = new java.io.File(s"$dir/inv/postings").listFiles()
       .count(_.getName.startsWith("tbucket="))
     scans.foreach { s =>
-      val planned = s.planInputPartitions().length
+      assert(s.partitionFilters.nonEmpty, s"no PartitionFilters on ${s.description()}")
+      val planned = plannedFiles(s)
       assert(planned < allBuckets,
-        s"bucket pushdown must prune the listing: planned $planned files " +
+        s"bucket pruning must cut the listing: planned $planned files " +
           s"vs $allBuckets bucket dirs (${s.description()})")
     }
     // vocab view = census-served live vocabulary
@@ -167,20 +176,18 @@ class IngestCatalogSuite extends AnyFunSuite {
         live().queryExecution.executedPlan.toString).isDefined,
       "no V2 scan may carry a collected tombstone set")
     // over-threshold: the VIEW keeps answering identically (anti-join
-    // scales), while a direct masked=true scan refuses to collect
+    // scales); the provider itself never masks, so the removed masked
+    // option is refused rather than silently serving tombstoned rows
     spark.conf.set(InvertedIndex.MaskBroadcastKey, "0")
     try {
       assert(live().collect().map(_.getLong(0)).toSet == want,
         "anti-join view must be unaffected by the gate")
-      val maskedScan = spark.read
+      val e = intercept[IllegalArgumentException](spark.read
         .format(classOf[graft.sources.v2.GraftLayoutSource].getName)
         .option("path", s"$dir/inv").option("table", "doclens")
-        .option("masked", "true").load()
-      val e = intercept[Exception](maskedScan.collect())
-      def rootMsg(t: Throwable): String =
-        if (t.getCause != null) rootMsg(t.getCause) else String.valueOf(t.getMessage)
-      assert(rootMsg(e).contains("too large"),
-        s"expected the size-gate refusal, got: ${rootMsg(e)}")
+        .option("masked", "true").load())
+      assert(e.getMessage.contains("<name>_postings") && e.getMessage.contains("<name>_doclens"),
+        s"the refusal must name the anti-join views: ${e.getMessage}")
     } finally spark.conf.unset(InvertedIndex.MaskBroadcastKey)
   }
 
@@ -198,7 +205,9 @@ class IngestCatalogSuite extends AnyFunSuite {
     val wide = spark.sql(
       "SELECT doc_id, pos, term, tbucket FROM catvec__postings_raw")
     assert(wide.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      s"unmasked V2 scan must be vectorized:\n${wide.queryExecution.executedPlan}")
+      s"the raw view scan must be vectorized:\n${wide.queryExecution.executedPlan}")
+    assert(layoutScans(wide, "postings").nonEmpty,
+      s"the raw view must read through Spark's parquet scan:\n${wide.queryExecution.executedPlan}")
     val viaV2 = wide.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getInt(3))).toSet
     val viaParquet = spark.read.parquet(s"$dir/inv/postings")
@@ -212,15 +221,6 @@ class IngestCatalogSuite extends AnyFunSuite {
       .head().getLong(0) ==
       TextAnalysis.positionalPostings(docs, "doc_id", col("text"))
         .filter(col("term") === "sort").count())
-    // the per-row Set mask keeps the row-based reader and still answers
-    idx.delete(Seq(3L).toDF("doc_id"))
-    val masked = spark.read
-      .format(classOf[graft.sources.v2.GraftLayoutSource].getName)
-      .option("path", s"$dir/inv").option("table", "doclens")
-      .option("masked", "true").load()
-    assert(!masked.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      "masked scans stay on the row-based reader")
-    assert(masked.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
   test("registering a fresh, never-built layout serves the canonical empty schema") {
@@ -236,6 +236,14 @@ class IngestCatalogSuite extends AnyFunSuite {
     val idx = new InvertedIndex(spark, s"$dir/inv", buckets = 8)
     idx.build(Seq((1L, "hello world")).toDF("doc_id", "text"), "doc_id", col("text"))
     assert(spark.sql("SELECT COUNT(*) FROM catfresh_doclens").head().getLong(0) == 1L)
+  }
+
+  test("a never-built partitioned layout scans empty, partition column included") {
+    val dir = Files.createTempDirectory("graft_cat_fresh_scan").toString
+    new StoreCatalog(spark).registerIvfIndex("catfreshivf", s"$dir/ivf")
+    assert(spark.sql("SELECT * FROM catfreshivf_lists").collect().isEmpty)
+    assert(spark.sql(
+      "SELECT id FROM catfreshivf_lists WHERE ivf_list IN (0, 1)").collect().isEmpty)
   }
 
   test("X200: IVF views are LIVE — physical delete and append visible with NO re-registration") {

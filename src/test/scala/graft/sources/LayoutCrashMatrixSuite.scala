@@ -162,6 +162,20 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
   private def observeStore(p: String): State =
     byKey(store(p).read().select("bucket", "post_id", "sequence_no", "vector"), "bucket")
 
+  // a prefixed store whose meta file is missing (written before the meta
+  // existed): the next bucket rewrite publishes the meta
+  private def buildPrefixedStore(p: String): Unit = {
+    new EmbeddingStore(spark, p, numBuckets = 4, prefixDims = Some(2)).bulkLoad(storeRaw)
+    val meta = new Path(p, "_graft_meta")
+    meta.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(meta, false)
+  }
+  private def observeStoreMeta(p: String): State = {
+    val derived = store(p).withDerived(storeRaw)
+    observeStore(p) + ("meta" ->
+      (if (derived.columns.contains("vector_prefix")) fingerprint(derived.select("vector_prefix"))
+       else Set("no prefixDims")))
+  }
+
   private lazy val cents: Seq[Array[Float]] = vecs.take(3).map(_._2.toArray)
   private def ivf(p: String) = new IvfIndex(spark, p, assignBuckets = 4)
   private def buildIvf(p: String): Unit = {
@@ -196,6 +210,17 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
     Map("vocab" -> fingerprint(idx.vocab()), "stats" -> fingerprint(idx.stats()),
       "appended" -> fingerprint(idx.appendedIds))
   }
+
+  // block-max built, then an append its file-grain rows cover: the next
+  // maintenance pass adopts it by rewriting its derived meta alone
+  private def buildInvBlockMax(p: String): Unit = {
+    inv(p).build(docsA, "doc_id", col("text"))
+    inv(p).buildBlockMax()
+    inv(p).append(docsB, "doc_id", col("text"))
+  }
+  private def observeInvMeta(p: String): State =
+    whole(observeInv(p)) + ("meta" -> fingerprint(inv(p)
+      .maintainDerivedVerbose(Double.MaxValue).select("artifact", "built_n_docs")))
 
   private def qs(p: String) = new QueryStore(spark, p, buckets = 4)
   private def buildQs(p: String): Unit = {
@@ -251,6 +276,9 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
     p => store(p).deleteMany(Seq(1L, 6L, 11L, 17L)), observeStore))
   row("EmbeddingStore.deleteWhere")(sweep(buildStore,
     p => store(p).deleteWhere(col("post_id") > 9), observeStore))
+  row("EmbeddingStore.deleteMany (publishes the prefixDims meta)")(sweep(buildPrefixedStore,
+    p => new EmbeddingStore(spark, p, numBuckets = 4, prefixDims = Some(2))
+      .deleteMany(Seq(1L, 6L)), observeStoreMeta))
 
   private val ivfIds = Seq(2L, 9L, 14L, 21L).toDF("id")
   row("IvfIndex.delete")(sweep(buildIvf, p => ivf(p).delete(ivfIds), observeIvf))
@@ -264,6 +292,9 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
 
   row("InvertedIndex.vacuum")(sweep(buildInv, p => inv(p).vacuum(), p => whole(observeInv(p))))
   row("InvertedIndex.compact")(sweep(buildInv, p => inv(p).compact(), p => whole(observeInv(p))))
+  row("InvertedIndex.maintainDerived (block-max meta adopt)")(sweep(buildInvBlockMax,
+    p => assert(inv(p).maintainDerivedVerbose().filter(col("mode") === "adopt").count() == 1),
+    observeInvMeta))
   row("InvertedIndex.append")(sweep(buildInv, p => inv(p).append(
     Seq((8L, "fresh merge words"), (9L, "sort again")).toDF("doc_id", "text"),
     "doc_id", col("text")), p => whole(observeInv(p))))

@@ -8,10 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The benchmark's read paths run layout recovery on every call, so a
-  * change to the commit protocol must not add metadata round-trips to
-  * them. The bounds are the counts measured on a warm call before the
-  * protocol moved behind [[LayoutFs]]. */
+/** The benchmark's read paths and the SQL views run layout recovery on
+  * every call, so a change to the commit protocol or to the SQL source
+  * must not add metadata round-trips to them. The bounds are the counts
+  * measured on a warm call before the protocol moved behind [[LayoutFs]];
+  * the inverted-index SQL row's, before the SQL source moved onto
+  * Spark's parquet scan. */
 class ServePathFsCallsSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -34,7 +36,13 @@ class ServePathFsCallsSuite extends AnyFunSuite {
     ivf.build(raw, "id", "vector", vecs.take(4).map(_._4.toArray))
     new StoreCatalog(spark).registerIvfIndex("fs_calls", FaultyFs.uri(s"$root/ivf"))
     graft.functions.GraftFunctions.register(spark)
-    (root, store, ivf)
+    val inv = new InvertedIndex(spark, FaultyFs.uri(s"$root/inv"), buckets = 4)
+    inv.build(Seq((1L, "merge sort beats bubble sort"), (2L, "sort merge join"),
+      (3L, "unrelated text"), (4L, "another sort document")).toDF("doc_id", "text"),
+      "doc_id", col("text"))
+    inv.delete(Seq(4L).toDF("doc_id"))
+    new StoreCatalog(spark).registerInvertedIndex("fs_calls_inv", FaultyFs.uri(s"$root/inv"))
+    (root, store, ivf, inv)
   }
 
   /** Calls of each kind under the fixture root during one warm `body`. */
@@ -70,6 +78,13 @@ class ServePathFsCallsSuite extends AnyFunSuite {
     val q = query.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ", ", ")")
     spark.sql(s"""SELECT id, vec_cosine(vector, $q) AS cosine FROM fs_calls_lists
                  |WHERE ivf_list IN (0, 2) ORDER BY cosine DESC, id LIMIT 5""".stripMargin)
+      .collect()
+  }
+
+  check("SQL scan over registerInvertedIndex views", Map("rename" -> 0L, "delete" -> 6L,
+      "exists" -> 14L, "globStatus" -> 0L, "listStatus" -> 6L)) {
+    spark.sql(s"""SELECT doc_id, pos FROM fs_calls_inv_postings
+                 |WHERE term = 'sort' AND tbucket = ${fixture._4.bucketOf("sort", 4)}""".stripMargin)
       .collect()
   }
 }
