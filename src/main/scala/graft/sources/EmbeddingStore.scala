@@ -22,14 +22,14 @@ import graft.util.{DenseIds, StampedMemo}
   * Scale notes (100 TB design point):
   *  - the store is hash-bucketed by `post_id` into `numBuckets` directory
   *    partitions (`bucket=NNN`), so point mutations rewrite only the touched
-  *    bucket, not the whole table — the Parquet analogue of the reference's
-  *    per-row UPDATE;
+  *    buckets, not the whole table, and commit them as one batch — the
+  *    Parquet analogue of the reference's per-row UPDATE statement;
   *  - reads are plain `spark.read.parquet` with pushdown: filters on
   *    `bucket`/`post_id`/`id` prune partitions and row groups;
   *  - the wide `vector` column is only read by stages that need it
   *    (Catalyst column pruning; see SearchEngine stage separation);
   *  - all path operations go through the Hadoop `FileSystem` API, so the
-  *    store works on HDFS/S3A/local alike (bucket swaps go through
+  *    store works on HDFS/S3A/local alike (bucket rewrites commit through
   *    [[LayoutFs]], which states the rename-atomicity caveat for S3A).
   */
 final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 64,
@@ -195,10 +195,11 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * documented bug) — all derived columns are recomputed. Rows matching an
     * existing key KEEP that key's id (the reference's UPDATE branch returns
     * the existing id, `VectorTable.php:370`); new keys get fresh ids past
-    * the current max, assigned ONCE before any bucket is rewritten. Each
-    * touched bucket then receives only ITS rows (hash(post_id) % buckets),
-    * so a multi-bucket upsert can neither duplicate rows across bucket
-    * directories nor misplace them. */
+    * the current max. Each row lands in its own bucket
+    * (hash(post_id) % buckets), and every touched bucket is rewritten in
+    * the same committed batch ([[rewrite]]), so a multi-bucket upsert can
+    * neither duplicate rows across bucket directories nor land in some
+    * buckets only. */
   def upsert(updates: DataFrame): Unit = {
     val prepared = withDerived(updates)
     val existing = read().select(col("post_id"), col("sequence_no"),
@@ -213,63 +214,48 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
       .drop("__old_id", "__old_created_at")
     val fresh = assignIds(
       joined.filter(col("__old_id").isNull).drop("__old_id", "__old_created_at"), maxId + 1)
-    writeStaged(kept.unionByName(fresh)) { staged =>
-      val buckets = staged.select(bucketOf(col("post_id")).as("b")).distinct()
-        .as[Int].collect().toSet
-      rewriteBuckets(buckets) { (b, cur) =>
-        val mine = staged.filter(bucketOf(col("post_id")) === b)
-        val newKeys = mine.select(col("post_id").as("__np"), col("sequence_no").as("__ns")).distinct()
-        val untouched = cur.join(broadcast(newKeys),
+    val newKeys = updates.select(col("post_id").as("__np"), col("sequence_no").as("__ns")).distinct()
+    rewrite(bucketSet(updates.select(bucketOf(col("post_id"))))) { cur =>
+      cur.join(broadcast(newKeys),
           cur("post_id") === col("__np") && cur("sequence_no") === col("__ns"), "left_anti")
-        untouched.unionByName(mine.select(untouched.columns.map(col).toSeq: _*))
-      }
+        .unionByName(withBucket(kept.unionByName(fresh)).select(cur.columns.map(col).toSeq: _*))
     }
   }
 
   /** S8 replace-all-per-key: delete post's rows then insert the new set
     * (`VectorTable.php:401-425` does DELETE + row-at-a-time inserts).
-    * Like upsert: ids assigned once up front, each bucket gets only its
-    * own rows. */
+    * Like upsert: ids assigned past the current max, one committed batch
+    * over the post's bucket and the new rows' buckets. */
   def insertAll(postId: Long, rows: DataFrame): Unit = {
     val maxId = Option(read().agg(max(col("id"))).first().get(0)).fold(0L)(_.asInstanceOf[Long])
-    writeStaged(assignIds(withDerived(rows), maxId + 1)) { staged =>
-      val buckets = (staged.select(bucketOf(col("post_id")).as("b"))
-        .union(read().filter(col("post_id") === postId).select(bucketOf(col("post_id")).as("b"))))
-        .distinct().as[Int].collect().toSet
-      rewriteBuckets(buckets) { (b, cur) =>
-        val mine = staged.filter(bucketOf(col("post_id")) === b)
-        cur.filter(col("post_id") =!= postId)
-          .unionByName(mine.select(cur.columns.map(col).toSeq: _*), allowMissingColumns = true)
-      }
+    val fresh = withBucket(assignIds(withDerived(rows), maxId + 1))
+    // the post's bucket in the store's own post_id type (hash is type-sensitive)
+    val postBucket = spark.range(1)
+      .select(bucketOf(lit(postId).cast(read().schema("post_id").dataType)))
+    rewrite(bucketSet(rows.select(bucketOf(col("post_id"))).union(postBucket))) { cur =>
+      cur.filter(col("post_id") =!= postId)
+        .unionByName(fresh.select(cur.columns.map(col).toSeq: _*), allowMissingColumns = true)
     }
   }
 
   /** S9 point delete (anti-join rewrite of the touched bucket). */
-  def delete(id: Long): Unit = {
-    val buckets = read().filter(col("id") === id)
-      .select(bucketOf(col("post_id")).as("b")).distinct().as[Int].collect().toSet
-    rewriteBuckets(buckets)((_, cur) => cur.filter(col("id") =!= id))
-  }
+  def delete(id: Long): Unit =
+    rewrite(bucketSet(read().filter(col("id") === id).select(col("bucket"))))(
+      _.filter(col("id") =!= id))
 
-  /** S9 at pipeline scale: set-oriented bulk delete. Groups the id set by
-    * bucket and rewrites each TOUCHED bucket once — a per-id [[delete]]
-    * loop costs |ids| read+rewrite passes, this costs |touched buckets|
-    * regardless of how many ids fall in each (a crawl decommission deletes
-    * millions of ids, not one). The resolved (id, bucket) set is pinned to
-    * the hidden staging dir before any swap so the rewrite loop never
-    * re-reads files it is replacing; only the matching ids travel — never
-    * vectors — and untouched buckets are never opened. */
+  /** S9 at pipeline scale: set-oriented bulk delete. Resolves the buckets
+    * holding the id set, then rewrites each TOUCHED bucket once, all in
+    * one job and one committed batch — a per-id [[delete]] loop costs
+    * |ids| read+rewrite passes, this costs one pass over the touched
+    * buckets regardless of how many ids fall in each (a crawl
+    * decommission deletes millions of ids, not one). Only ids travel —
+    * never vectors — and untouched buckets are never opened. */
   def deleteMany(ids: DataFrame): Unit = {
     require(ids.columns.contains("id"),
       s"deleteMany needs an `id` column, got [${ids.columns.mkString(",")}]")
-    val targets = read().join(ids.select(col("id")), Seq("id"), "left_semi")
-      .select(col("id"), bucketOf(col("post_id")).as("__b"))
-    writeStaged(targets) { staged =>
-      val buckets = staged.select(col("__b")).distinct().as[Int].collect().toSet
-      rewriteBuckets(buckets) { (b, cur) =>
-        cur.join(staged.filter(col("__b") === b).select(col("id")), Seq("id"), "left_anti")
-      }
-    }
+    val idSet = ids.select(col("id"))
+    rewrite(bucketSet(read().join(idSet, Seq("id"), "left_semi").select(col("bucket"))))(
+      _.join(idSet, Seq("id"), "left_anti"))
   }
 
   /** [[deleteMany]] over a driver-side id list (the small-batch admin path). */
@@ -284,21 +270,14 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   def deleteWhere(predicate: Column): Unit =
     deleteMany(read().filter(predicate).select(col("id")))
 
-  /** Sweep crash leftovers that the two-rename recovery cannot see:
-    * `.tmp_bucket_*` dirs from a rewrite that died BEFORE its swap (its
-    * backup/restore pair never existed) and a `.staging` dir from a
-    * mutation that died before its finally-cleanup. Both are hidden
-    * (dot-prefixed) so readers never see them — this is a SPACE leak,
-    * not a correctness one — but a mutation-heavy store accretes them
-    * forever without a vacuum. Never runs concurrently with a mutation
-    * (same single-writer discipline as the mutations themselves).
-    * Returns the number of directories removed. */
-  def vacuum(): Int = {
-    val stale = Seq(
-      Option(fs.globStatus(new Path(path, ".tmp_bucket_*"))).toSeq.flatten,
-      Option(fs.globStatus(new Path(path, ".staging"))).toSeq.flatten).flatten
-    stale.count(st => fs.delete(st.getPath, true))
-  }
+  /** Discard the staging a mutation that died before its commit left
+    * behind ([[LayoutFs.discardBatch]]; a committed batch rolls forward
+    * instead). It is hidden, so readers never see it — a SPACE leak, not
+    * a correctness one — and the next mutation discards it too; this is
+    * the call for a store that stops mutating. Never runs concurrently
+    * with a mutation (same single-writer discipline as the mutations
+    * themselves). Returns the number of directories removed. */
+  def vacuum(): Int = if (LayoutFs.discardBatch(fs, new Path(path))) 1 else 0
 
   /** Per-bucket part-file counts — the [[graft.sources.IvfIndex.fileStats]]
     * observability surface on the primary table, making the store's
@@ -308,13 +287,12 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * (IvfIndex, InvertedIndex, QueryStore, NgramLm) carries one: those
     * layouts grow by APPENDING part-files into live directories, so
     * steady-state mutation accretes files until a compactor folds them.
-    * This store's mutations ([[rewriteBuckets]]) instead READ the whole
-    * touched bucket, transform it, and atomically SWAP a freshly
-    * written directory into place — every mutation IS a compaction of
-    * the buckets it touches, so per-bucket file count is bounded by the
-    * writer's partitioning of one bucket's rows (one file per touched
-    * bucket under the staged single-partition writes the mutations use)
-    * and never grows with mutation count. A sustained imbalance here
+    * This store's mutations ([[rewrite]]) instead READ the whole touched
+    * buckets, transform them, and atomically swap freshly written
+    * directories into place — every mutation IS a compaction of the
+    * buckets it touches: the rewrite is repartitioned by bucket, so each
+    * touched bucket comes back as exactly one file, and file count never
+    * grows with mutation count. A sustained imbalance here
     * means bucket skew (one post_id hash bucket outgrowing the rest),
     * answered by re-bucketing into a new store, not by compaction.
     * Recovers crashed swaps first, like every sibling stats call — a
@@ -334,15 +312,13 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
 
   /** Consistent on-disk snapshot of the whole store — bucket
     * directories and the prefix-dims meta ([[LayoutFs.snapshot]]). The
-    * quiesce is [[recoverAll]] (crashed bucket swaps) then [[vacuum]]
-    * (hidden mutation debris is space, not state — a snapshot should
-    * not ship it). Open the copy with `new EmbeddingStore(spark, target)`. */
+    * quiesce is [[recoverAll]] (crashed swaps, a committed batch); the
+    * snapshot then discards an uncommitted batch (hidden mutation debris
+    * is space, not state — a snapshot should not ship it). Open the copy
+    * with `new EmbeddingStore(spark, target)`. */
   def snapshot(targetPath: String): Unit =
     LayoutFs.snapshot(fs, new Path(path), targetPath,
-        spark.sparkContext.hadoopConfiguration) {
-      recoverAll()
-      vacuum()
-    }
+      spark.sparkContext.hadoopConfiguration)(recoverAll())
 
   /** Bulk load: derive columns, assign ids, bucket, write. */
   def bulkLoad(raw: DataFrame): Unit = {
@@ -353,41 +329,28 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     effectivePrefixDims.foreach(writeMeta)
   }
 
-  /** Materialize a mutation set to a staging dir inside the store before
-    * rewriting buckets: the rewrite loop swaps the very files a lazy plan
-    * would re-read, so the update set must be pinned down first. (This is
-    * also what bounds memory: the staged set streams from disk per bucket,
-    * never through the driver.) */
-  private def writeStaged(df: DataFrame)(use: DataFrame => Unit): Unit = {
-    val staging = s"$path/.staging"
-    df.write.mode("overwrite").parquet(staging)
-    try use(spark.read.parquet(staging))
-    finally fs.delete(new Path(staging), true)
-  }
+  private def withBucket(df: DataFrame): DataFrame =
+    df.withColumn("bucket", bucketOf(col("post_id")))
 
-  /** Rewrite only the given buckets: read bucket dir, transform, write to
-    * temp, atomic swap. The untouched (numBuckets - |buckets|) directories
-    * are never read or written — at 100 TB that's the difference between a
-    * point update and a full-table rewrite.
-    *
-    * The rewrite coalesces to ONE file per bucket: a bucket is the unit
-    * the numBuckets sizing contract keeps single-task-sized (point
-    * lookups read it whole), so the union/join feeding the rewrite runs
-    * fine in one partition, and the swap then IS a compaction — file
-    * count per touched bucket is exactly 1 after any mutation, never a
-    * function of mutation history ([[fileStats]] makes this checkable). */
-  private def rewriteBuckets(buckets: Set[Int])(f: (Int, DataFrame) => DataFrame): Unit = {
-    buckets.foreach { b =>
-      val dir = s"$path/bucket=$b"
-      LayoutFs.recover(fs, new Path(dir))
-      val cur =
-        if (fs.exists(new Path(dir))) spark.read.parquet(dir)
-        else read().filter(lit(false)).drop("bucket")
-      val out = f(b, cur)
-      val tmp = s"$path/.tmp_bucket_$b"
-      out.coalesce(1).write.mode("overwrite").parquet(tmp)
-      LayoutFs.swap(fs, new Path(tmp), new Path(dir))
-    }
+  private def bucketSet(buckets: DataFrame): Seq[Int] =
+    buckets.distinct().as[Int].collect().toSeq.sorted
+
+  /** Rewrite the given buckets as ONE committed batch
+    * ([[LayoutFs.rewriteParts]]): one partition-pruned read of exactly
+    * those buckets, `transform`, and one write repartitioned by bucket.
+    * The untouched (numBuckets - |buckets|) directories are never read
+    * or written — at 100 TB that's the difference between a point update
+    * and a full-table rewrite. A bucket is the unit the numBuckets sizing
+    * contract keeps single-task-sized (point lookups read it whole), so
+    * each one lands wholly in one task and comes back as ONE file: the
+    * rewrite IS a compaction, and file count per touched bucket is
+    * exactly 1 after any mutation, never a function of mutation history
+    * ([[fileStats]] makes this checkable). The live buckets stay in
+    * place until the write has finished, so the transform may read the
+    * store freely. */
+  private def rewrite(buckets: Seq[Int])(transform: DataFrame => DataFrame): Unit = {
+    LayoutFs.rewriteParts(fs, new Path(path), "", "bucket", buckets, read())(
+      cur => transform(cur).repartition(col("bucket")))
     schemaMemo.invalidate()
     // persist the prefix setting on stores that predate it (bulkLoad wrote
     // it for fresh stores) so LATER handles without the parameter keep
@@ -396,13 +359,14 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   }
 
   /** Sweep the WHOLE store for hidden swap backups left by a crashed
-    * mutation and restore them eagerly. Runs at the top of [[read]] — i.e.
-    * before ANY consumer (including upsert/insertAll, which compute maxId
-    * and the existing-key join from read()) can observe the store. Without
-    * the sweep, a bucket hidden in a `.bak` would make its keys look new to
+    * mutation and restore them eagerly, and roll a committed batch
+    * forward. Runs at the top of [[read]] — i.e. before ANY consumer
+    * (including upsert/insertAll, which compute maxId and the
+    * existing-key join from read()) can observe the store. Without the
+    * sweep, a bucket hidden in a `.bak` would make its keys look new to
     * the next upsert: id churn, lost created_at, and fresh ids colliding
     * with the hidden bucket's ids store-wide. One glob of the store root
-    * per call — a single NameNode/S3 LIST, negligible next to the file
-    * listing that follows. */
+    * per call ([[LayoutFs.recoverUnder]]) — a single NameNode/S3 LIST,
+    * negligible next to the file listing that follows. */
   private def recoverAll(): Unit = LayoutFs.recoverUnder(fs, new Path(path), "bucket=*")
 }

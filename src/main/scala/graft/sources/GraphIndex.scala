@@ -27,8 +27,8 @@ import graft.operators.GraphAnn
   *    live one.
   *  - [[append]] is the FreshDiskANN INSERT: beam-search candidates
   *    over the current graph, RobustPrune to the new node's out-edges,
-  *    reverse edges under the degree cap — applied as one staged,
-  *    marker-committed batch of bucket rewrites (every read path rolls
+  *    reverse edges under the degree cap — applied as one committed
+  *    batch of bucket rewrites ([[LayoutFs.Batch]]; every read path rolls
   *    a committed batch forward first), request-sized batches only.
   *  - [[delete]] is the FreshDiskANN lazy delete (Singh et al.,
   *    2105.09613): ids append to a tiny `tombstones/` table, O(batch)
@@ -65,6 +65,8 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     val cols = adj.columns.toSeq
     require(cols.contains("src") && cols.contains("dst"),
       s"adjacency needs (src, dst[, cosine]) columns, got $cols")
+    // a batch still committed here would roll forward over the new build
+    recoverAll()
     val hasCosine = cols.contains("cosine")
     val keep = Seq("src", "dst") ++ (if (hasCosine) Seq("cosine") else Nil)
     adj.select(keep.map(col): _*)
@@ -134,10 +136,9 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * and each chosen neighbor gains a reverse edge under the top-r
     * cosine degree cap (the build's reverse-insert rule). All edge
     * additions then apply as ONE bucket-grouped rewrite: only the
-    * touched `gbucket` directories are read, staged as one batch, and
-    * committed by a marker before each swaps in ([[LayoutFs.swap]]);
-    * every read path rolls a committed batch forward first, so a crash
-    * leaves the old graph or the whole new one. Insert I/O is
+    * touched `gbucket` directories are read, and they commit as one
+    * [[LayoutFs.Batch]]; every read path rolls a committed batch forward
+    * first, so a crash leaves the old graph or the whole new one. Insert I/O is
     * ∝ touched-buckets/B of the edge mass, never the graph.
     *
     * `allEmbs` must contain BOTH the existing corpus and the new rows
@@ -240,70 +241,44 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     // srcs would explode the expression tree and the driver (r21 verdict)
     val touchedSrcDf = addDf.select(col("src")).distinct()
       .withColumn("__touched", lit(true))
-    val dirs = touched.map(b => b -> new Path(s"$edgesPath/gbucket=$b")).toMap
-    LayoutFs.recover(fs, touched.map(dirs): _*)
-    val existing = touched.filter(b => fs.exists(dirs(b)))
     // ALL touched buckets rewrite in ONE partition-pruned read + ONE
     // partitioned write (r21): the previous per-bucket loop paid
     // read+window+write jobs PER bucket — ~3×|touched| driver-scheduled
     // jobs for the same rows. repartition(gbucket) keeps the one-file-
     // per-bucket rule (each bucket lands wholly in one task).
-    val cur =
-      if (existing.isEmpty)
-        Seq.empty[(Int, Long, Long, Double)].toDF("gbucket", "src", "dst", "cosine")
-      else spark.read.parquet(edgesPath)
-        .filter(col("gbucket").isin(existing: _*))
-        .select(col("gbucket"), col("src"), col("dst"), col("cosine"))
-    val out = cur.unionByName(addDf.select(
-        col("gbucket"), col("src"), col("dst"), col("cosine")))
-      .groupBy(col("gbucket"), col("src"), col("dst"))
-      .agg(max(col("cosine")).as("cosine"))
-      .withColumn("__rk", row_number().over(Window.partitionBy(col("src"))
-        .orderBy(col("cosine").desc, col("dst").asc)))
-      .join(org.apache.spark.sql.functions.broadcast(touchedSrcDf),
-        Seq("src"), "left")
-      .filter(col("__rk") <= r || col("__touched").isNull)
-      .select(col("gbucket"), col("src"), col("dst"),
-        round(col("cosine"), 6).as("cosine"))
-    val tmp = new Path(s"$edgesPath/.tmp_gbucket_batch")
-    fs.delete(tmp, true)
-    out.repartition(col("gbucket"))
-      .write.mode("overwrite").partitionBy("gbucket").parquet(tmp.toString)
-    // the commit point: from the marker on, [[recoverAll]] rolls the
-    // batch forward, so after a crash every reader sees the old graph or
-    // the whole new one, never a batch applied to some buckets only
-    fs.mkdirs(new Path(tmp, CommitMarker))
-    publishBatch(tmp)
+    LayoutFs.rewriteParts(fs, new Path(path), "edges", "gbucket", touched,
+        spark.read.parquet(edgesPath)
+          .select(col("gbucket"), col("src"), col("dst"), col("cosine"))) { cur =>
+      cur.unionByName(addDf.select(
+          col("gbucket"), col("src"), col("dst"), col("cosine")))
+        .groupBy(col("gbucket"), col("src"), col("dst"))
+        .agg(max(col("cosine")).as("cosine"))
+        .withColumn("__rk", row_number().over(Window.partitionBy(col("src"))
+          .orderBy(col("cosine").desc, col("dst").asc)))
+        .join(org.apache.spark.sql.functions.broadcast(touchedSrcDf),
+          Seq("src"), "left")
+        .filter(col("__rk") <= r || col("__touched").isNull)
+        .select(col("gbucket"), col("src"), col("dst"),
+          round(col("cosine"), 6).as("cosine"))
+        .repartition(col("gbucket"))
+    }
     graft.util.Pins.release(addDf)
   }
 
   /** Crash recovery for read entry points OUTSIDE this class — the V2
     * SQL layout source (the IvfIndex/QueryStore recoverForRead
-    * precedent). [[append]] mutates edge buckets under the two-rename
-    * swap, so a `graph_*` SQL view that read the directory raw could
-    * silently serve a graph missing one bucket's edges (hidden as
-    * `.gbucket=N.bak`) until the next Scala-side read healed it. */
+    * precedent). [[append]] commits edge buckets as one batch of swaps,
+    * so a `graph_*` SQL view that read the directory raw could silently
+    * serve a graph missing a committed batch's buckets (still staged, or
+    * hidden as `.gbucket=N.bak`) until the next Scala-side read healed
+    * it. */
   private[graft] def recoverForRead(): Unit = recoverAll()
 
+  /** Roll a committed append batch forward (it is rooted at the graph
+    * root), then resolve crashed edge-bucket swaps. */
   private def recoverAll(): Unit = {
-    // a committed batch rolls forward; one that died before its marker
-    // is hidden debris
-    Option(fs.globStatus(new Path(edgesPath, ".tmp_gbucket_*"))).toSeq.flatten
-      .foreach { st =>
-        if (fs.exists(new Path(st.getPath, CommitMarker))) publishBatch(st.getPath)
-        else fs.delete(st.getPath, true)
-      }
+    LayoutFs.recoverUnder(fs, new Path(path), "*")
     LayoutFs.recoverUnder(fs, new Path(edgesPath), "gbucket=*")
-  }
-
-  private val CommitMarker = "_committed"
-
-  /** Swap every staged bucket of a committed batch in, then drop the
-    * batch — idempotent, since a swapped bucket leaves the staging. */
-  private def publishBatch(tmp: Path): Unit = {
-    fs.listStatus(tmp).filter(_.getPath.getName.startsWith("gbucket="))
-      .foreach(st => LayoutFs.swap(fs, st.getPath, new Path(edgesPath, st.getPath.getName)))
-    fs.delete(tmp, true)
   }
 
   /** Lazy delete: append ids to the tombstone table (O(batch)); the
@@ -412,9 +387,9 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   }
 
   /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]). The quiesce
-    * is [[recoverAll]]: a crashed [[append]] swap's hidden backup must
-    * resolve before the tree copies, or the snapshot would ship a bucket
-    * in its mid-rename state. */
+    * is [[recoverAll]]: a committed [[append]] batch must roll forward,
+    * and a crashed swap's hidden backup resolve, before the tree copies,
+    * or the snapshot would ship buckets in their mid-commit state. */
   def snapshot(targetPath: String): Unit =
     LayoutFs.snapshot(fs, new Path(path), targetPath,
       spark.sparkContext.hadoopConfiguration)(recoverAll())

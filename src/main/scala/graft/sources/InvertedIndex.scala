@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.io.IOException
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -152,7 +154,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * staging without the marker is an uncommitted crash — discard it,
     * the live layout was never touched. Run at every entry point that
     * touches postings, doclens or the census (the [[IvfIndex]]
-    * recoverDir rule). */
+    * recover rule). */
   private def recover(): Unit = {
     LayoutFs.recover(fs,
       Seq(postingsPath, doclensPath, censusPath).map(new Path(_)): _*)
@@ -215,24 +217,6 @@ final class InvertedIndex(spark: SparkSession, path: String,
     graft.util.Pins.release(postings)
   }
 
-  /** Append new documents' postings, doclens and census rows —
-    * directory-additive, work ∝ the batch. Uses the STORED bucket
-    * count, not this instance's. New doc_ids must be disjoint from the
-    * stored ones — including TOMBSTONED ids (a re-sent live doc would
-    * double its postings and doclens row; a re-sent tombstoned id would
-    * stay masked until [[vacuum]] clears the tombstone — run vacuum
-    * before re-inserting a deleted id). Disjointness is also what makes
-    * the census additive: a batch's per-term distinct-doc counts sum
-    * exactly with the stored ones.
-    *
-    * The batch is ATOMIC under crashes: all three tables stage under a
-    * hidden sibling, a marker commits the batch, and the staged files
-    * then move into the live directories (postings first, doclens last,
-    * so the replay-guard surface [[appendedIds]] recognizes a doc only
-    * once its postings are all live). [[recover]] rolls a marked batch
-    * forward and discards an unmarked one, so every read — including a
-    * streaming replay guard ([[graft.streaming.IndexIngest]]) — sees
-    * the batch fully applied or not at all, never a torn half. */
   /** One-time layout migration: a census base written before the
     * `tprefix=` partitioning (X226) holds its data files FLAT at the
     * base root. [[commitAppend]] moves only `tprefix=` subdirectories,
@@ -263,6 +247,24 @@ final class InvertedIndex(spark: SparkSession, path: String,
     }
   }
 
+  /** Append new documents' postings, doclens and census rows —
+    * directory-additive, work ∝ the batch. Uses the STORED bucket
+    * count, not this instance's. New doc_ids must be disjoint from the
+    * stored ones — including TOMBSTONED ids (a re-sent live doc would
+    * double its postings and doclens row; a re-sent tombstoned id would
+    * stay masked until [[vacuum]] clears the tombstone — run vacuum
+    * before re-inserting a deleted id). Disjointness is also what makes
+    * the census additive: a batch's per-term distinct-doc counts sum
+    * exactly with the stored ones.
+    *
+    * The batch is ATOMIC under crashes: all three tables stage under a
+    * hidden sibling, a marker commits the batch, and the staged files
+    * then move into the live directories (postings first, doclens last,
+    * so the replay-guard surface [[appendedIds]] recognizes a doc only
+    * once its postings are all live). [[recover]] rolls a marked batch
+    * forward and discards an unmarked one, so every read — including a
+    * streaming replay guard ([[graft.streaming.IndexIngest]]) — sees
+    * the batch fully applied or not at all, never a torn half. */
   def append(docs: DataFrame, idCol: String, text: Column): Unit = {
     invalidateLiveCount()
     recover()
@@ -464,7 +466,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
       .foreach { s =>
         if (!fs.rename(s.getPath, new Path(to, s.getPath.getName)))
-          sys.error(s"could not move ${s.getPath} into $to")
+          throw new IOException(s"could not move ${s.getPath} into $to")
       }
   }
 
@@ -621,7 +623,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         .write.parquet(stag.toString)
       fs.delete(new Path(censusDeltaPath), true)
       if (!fs.rename(stag, new Path(censusDeltaPath)))
-        sys.error(s"could not publish census delta under $censusPath")
+        throw new IOException(s"could not publish census delta under $censusPath")
     }
     LayoutFs.stageRewrite(spark, postingsPath, Some("tbucket")) { live =>
       val surv = live.join(ts, Seq("doc_id"), "left_anti")
@@ -870,10 +872,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * accreted pending deltas with O(delta-files) metadata moves instead
     * of a full rebuild whenever they provably cover the drift
     * (doc-count equality, no pending tombstones). Work here is ∝ the
-    * batch (two or three map-side aggregates of the already-pinned
-    * batch postings), replacing full-corpus rebuild scans later. */
-  /** `tfDocTerm` is the batch's (doc_id, term, tf) aggregate, computed
-    * once by the caller and shared with the block-max staging. */
+    * batch, replacing full-corpus rebuild scans later: the forward delta
+    * is `tfDocTerm`, the batch's (doc_id, term, tf) aggregate, computed
+    * once by the caller and shared with the block-max staging; the
+    * fielded delta adds two map-side aggregates of the already-pinned
+    * batch postings. */
   private def stageDerivedDeltas(postings: DataFrame, tfDocTerm: DataFrame,
       b: Int): Unit = {
     if (fs.exists(new Path(forwardPath)))
@@ -1111,10 +1114,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   /** Delta-apply when the pending forward delta covers the drift
-    * (O(delta) check + O(files) metadata moves), else full rebuild —
-    * the stale delta is dropped FIRST so a crash can never leave a
-    * consumed-and-still-pending delta to double-apply. */
-  /** Delta-apply when the pending delta covers the drift, else drop
+    * (O(delta) check + O(files) metadata moves), else drop
     * the stale delta (FIRST — a crash can never leave a
     * consumed-and-still-pending delta to double-apply) and report None:
     * the caller batches the rebuild with its siblings'

@@ -109,6 +109,8 @@ final class IvfIndex(spark: SparkSession, path: String,
       centroids: Seq[Array[Float]]): Unit = {
     require(centroids.nonEmpty, "need at least one centroid")
     import spark.implicits._
+    // a batch still committed here would roll forward over the new build
+    recover()
     // the assignment pass feeds BOTH the sidecar and the lists write:
     // lazily checkpointed so the corpus is scanned and argmax-scored
     // once, not once per consumer (two full passes at corpus scale)
@@ -138,9 +140,9 @@ final class IvfIndex(spark: SparkSession, path: String,
     * files are never touched, so a crashed append leaves at worst
     * orphan part-files in probed directories — re-run with the same
     * batch after dedup, never rebuild. The sidecar lands BEFORE the
-    * list files (the superset invariant), and [[recoverDir]] runs first
-    * so a half-done delete swap is restored before new files land in
-    * its directory.
+    * list files (the superset invariant), and [[recover]] runs first so
+    * a half-done delete is resolved before new files land in its
+    * directory.
     *
     * Same scale shape as [[build]]: one broadcast-assignment pass over
     * the batch, shuffle-free partitioned writes proportional to the
@@ -149,8 +151,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * index); a drifted coarse quantizer degrades recall, not the
     * within-probed-lists exactness. */
   def append(embs: DataFrame, idCol: String, vecCol: String): Unit = {
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath); recoverDir(assignPath)
-    val cs = centroids()
+    recover(listsPath, assignPath)
+    val cs = loadCentroids()
     // shared only when the sidecar will actually be written (a
     // pre-sidecar layout keeps the single fused pass); released only
     // when WE checkpointed — Pins.release on a fused frame would walk
@@ -169,9 +171,9 @@ final class IvfIndex(spark: SparkSession, path: String,
   }
 
   /** Delete ids from the index in place (X129; the other half of
-    * steady-state maintenance next to [[append]]): anti-join each TOUCHED
-    * inverted list against the id set and swap in the rewritten
-    * directory. Work ∝ the lists the deleted ids live in — untouched
+    * steady-state maintenance next to [[append]]): anti-join the TOUCHED
+    * inverted lists against the id set and swap the rewritten
+    * directories in as one committed batch. Work ∝ the lists the deleted ids live in — untouched
     * `ivf_list=N` directories are never read or written, and touched-list
     * DISCOVERY reads only the deletion set's hash buckets of the
     * assignment sidecar (partition-pruned; plan-audited), so discovery
@@ -182,16 +184,15 @@ final class IvfIndex(spark: SparkSession, path: String,
     * `ids` is a single-column (`id`) frame, so a corpus-scale deletion
     * set never collects to the driver; only the touched-list NUMBERS and
     * bucket NUMBERS do (bounded by k and B, the bounded-scalar-anchor
-    * class). Each list swap is the two-rename discipline with a hidden
-    * `.bak` (crash between renames leaves either the old or the new
-    * directory plus a hidden backup — never both visible; [[recoverDir]]
-    * restores a half-done swap before the next read). Lists rewrite
-    * BEFORE sidecar buckets, keeping the sidecar a superset under any
-    * crash. A list whose every row is deleted remains as an empty
-    * directory — harmless to partition discovery. */
+    * class). The touched lists commit as one [[LayoutFs.Batch]] (a crash
+    * leaves all of them old or all new; [[recover]] rolls a committed
+    * batch forward before the next read). Lists rewrite BEFORE sidecar
+    * buckets, keeping the sidecar a superset under any crash. A list
+    * whose every row is deleted remains as an empty directory — harmless
+    * to partition discovery. */
   def delete(ids: DataFrame): Unit = {
-    recoverMerge(listsPath); recoverSplit(listsPath)
-    deleteFrom(listsPath, assignPath, assignMetaPath, ids)
+    recover(listsPath, assignPath)
+    deleteFrom("lists", "assign", assignMetaPath, ids)
   }
 
   /** The (ivf_list, abucket) pairs the deletion set touches, read from
@@ -205,65 +206,41 @@ final class IvfIndex(spark: SparkSession, path: String,
       .join(ids, Seq("id"))
       .select(col("ivf_list"), col("abucket")).distinct()
 
-  private def deleteFrom(base: String, assignBase: String,
+  private def deleteFrom(rel: String, assignRel: String,
       metaPath: String, ids: DataFrame): Unit = {
     require(ids.columns.toSeq == Seq("id"),
       s"ids must be a single-column (id) frame, got ${ids.columns.toSeq}")
-    recoverDir(base); recoverDir(assignBase)
+    val antiJoin = (read: DataFrame) => read.join(ids, Seq("id"), "left_anti")
     if (fs.exists(new Path(metaPath))) {
       val b = readAssignBuckets(metaPath)
       val buckets = ids.select(bucketOf(col("id"), b).as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      val hits = touchedFrame(ids, assignBase, buckets).collect()
-      rewriteTouched(base, "ivf_list", hits.map(_.getInt(0)).distinct.sorted, ids)
-      rewriteTouched(assignBase, "abucket", hits.map(_.getInt(1)).distinct.sorted, ids)
+      val hits = touchedFrame(ids, s"$path/$assignRel", buckets).collect()
+      rewrite(rel, "ivf_list", hits.map(_.getInt(0)).distinct.sorted.toSeq)(antiJoin)
+      rewrite(assignRel, "abucket", hits.map(_.getInt(1)).distinct.sorted.toSeq)(antiJoin)
     } else {
       // pre-sidecar layout: full-index id-column discovery (the documented
       // fallback — O(index file listing), which is why the sidecar exists)
-      val touched = spark.read.parquet(base).join(ids, Seq("id"))
+      val touched = spark.read.parquet(s"$path/$rel").join(ids, Seq("id"))
         .select(col("ivf_list")).distinct().collect().map(_.getInt(0)).toSeq.sorted
-      rewriteTouched(base, "ivf_list", touched, ids)
+      rewrite(rel, "ivf_list", touched)(antiJoin)
     }
   }
 
-  /** Rewrite every touched `partCol=N` directory under `base` in ONE
-    * Spark job: a partition-pruned read of exactly the touched
-    * directories, one anti-join, one partitioned write into a hidden
-    * staging root — then each directory individually swaps in via the
-    * two-rename discipline (the per-dir crash contract is unchanged; the
-    * JOB count drops from |touched| to 1, which is what makes a
-    * wide-deletion batch k+B renames, not k+B Spark jobs). A partition
-    * whose every row is deleted gets no staged output — it swaps in an
-    * empty directory, preserving the emptied-list behavior. */
-  private def rewriteTouched(base: String, partCol: String,
-      touched: Seq[Int], ids: DataFrame): Unit =
-    rewriteDirs(base, partCol, touched,
-      read => read.join(ids, Seq("id"), "left_anti"))
-
-  /** The shared staged rewrite behind [[rewriteTouched]] (anti-join
-    * survivors), [[compact]] (identity + repartition) and
-    * [[cleanAssignPairs]] (pair anti-join): one partition-pruned read,
-    * one `transform`, one partitioned write into hidden staging, then
-    * each touched directory goes through its own [[LayoutFs.swap]]. */
-  private def rewriteDirs(base: String, partCol: String,
-      touched: Seq[Int], transform: DataFrame => DataFrame): Unit = {
-    if (touched.isEmpty) return
-    val staging = new Path(base, ".staging_swap")
-    fs.delete(staging, true)
-    val survivors = transform(spark.read.parquet(base)
-      .filter(col(partCol).isin(touched: _*)))
-    survivors.write.partitionBy(partCol).parquet(staging.toString)
-    touched.foreach { n =>
-      val dirName = s"$partCol=$n"
-      val staged = new Path(staging, dirName)
-      if (!fs.exists(staged))
-        // fully-deleted partition: stage a schema-carrying empty file, so a
-        // later whole-layout read can still infer the schema
-        survivors.drop(partCol).limit(0).coalesce(1).write.parquet(staged.toString)
-      LayoutFs.swap(fs, staged, new Path(base, dirName))
-    }
-    fs.delete(staging, true)
-  }
+  /** Rewrite the touched `partCol=N` directories of the layout at
+    * `path/rel` in ONE Spark job and ONE committed batch
+    * ([[LayoutFs.rewriteParts]]): a partition-pruned read of exactly the
+    * touched directories, one `transform` (anti-join survivors for
+    * [[delete]], identity + repartition for [[compact]], a pair anti-join
+    * for [[cleanAssignPairs]]), one partitioned write into the batch's
+    * hidden staging — so a wide-deletion batch costs k+B renames, not
+    * k+B Spark jobs, and a crash leaves every touched directory old or
+    * every one new. A partition whose every row is deleted swaps in as
+    * an empty directory, preserving the emptied-list behavior. */
+  private def rewrite(rel: String, partCol: String, touched: Seq[Int])(
+      transform: DataFrame => DataFrame): Unit =
+    LayoutFs.rewriteParts(fs, new Path(path), rel, partCol, touched,
+      spark.read.parquet(s"$path/$rel"))(transform)
 
   /** Small-file compaction for the raw lists layout (X166): every
     * [[append]] adds part-files to its touched `ivf_list=N` directories
@@ -271,49 +248,46 @@ final class IvfIndex(spark: SparkSession, path: String,
     * story), so a long-running ingest loop accretes files until open/seek
     * overhead dominates the probed read. `compact` rewrites the named
     * lists in ONE job — each directory's rows repartitioned to one
-    * output file — under the same per-dir two-rename swap as a delete, so
-    * a crash mid-compaction restores from `.bak` and search never sees a
-    * half-compacted list. Content is bit-identical (suite-pinned); WHICH
+    * output file — under the same committed batch as a delete, so a crash
+    * mid-compaction leaves every named list old or every one new, and
+    * search never sees a half-compacted list. Content is bit-identical (suite-pinned); WHICH
     * lists to compact is the caller's read of file counts, the
     * [[splitList]] monitoring convention. */
   def compact(listIds: Seq[Int]): Unit = {
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
+    recover(listsPath)
     requireDirs(listsPath, "ivf_list", listIds)
-    rewriteDirs(listsPath, "ivf_list", listIds,
-      read => read.repartition(col("ivf_list")))
+    rewrite("lists", "ivf_list", listIds)(_.repartition(col("ivf_list")))
   }
 
   /** [[compact]] for the PQ codes layout — appendPq accretes files the
     * same way. */
   def compactPq(listIds: Seq[Int]): Unit = {
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(codesPath)
+    recover(codesPath)
     requireDirs(codesPath, "ivf_list", listIds)
-    rewriteDirs(codesPath, "ivf_list", listIds,
-      read => read.repartition(col("ivf_list")))
+    rewrite("codes", "ivf_list", listIds)(_.repartition(col("ivf_list")))
   }
 
   /** Compact BOTH assignment sidecars' hash buckets (every append adds a
     * file per touched bucket; B is bounded, so this is always a small
     * job). No-op for a layout whose sidecar was never written. */
-  def compactAssign(): Unit =
-    Seq((assignPath, assignMetaPath), (assignPqPath, assignPqMetaPath))
-      .foreach { case (base, meta) =>
+  def compactAssign(): Unit = {
+    recover(assignPath, assignPqPath)
+    Seq(("assign", assignMetaPath), ("assign_pq", assignPqMetaPath))
+      .foreach { case (rel, meta) =>
         if (fs.exists(new Path(meta))) {
-          recoverDir(base)
-          val b = readAssignBuckets(meta)
-          // a bucket no id ever hashed to has no directory — skip it
-          val existing = (0 until b)
-            .filter(n => fs.exists(new Path(base, s"abucket=$n")))
-          rewriteDirs(base, "abucket", existing,
-            read => read.repartition(col("abucket")))
+          // a bucket no id ever hashed to has no directory — the rewrite
+          // leaves it absent
+          rewrite(rel, "abucket", 0 until readAssignBuckets(meta))(
+            _.repartition(col("abucket")))
         }
       }
+  }
 
   /** Part-file counts per `ivf_list=N` directory of the raw lists —
     * the [[compact]]-policy input, from the file listing alone (no data
     * read); the [[graft.sources.InvertedIndex.fileStats]] convention. */
   def fileStats(): DataFrame = {
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
+    recover(listsPath)
     import spark.implicits._
     dirFileCounts(listsPath, "ivf_list").toDF("ivf_list", "n_files")
   }
@@ -342,11 +316,11 @@ final class IvfIndex(spark: SparkSession, path: String,
       s"maxFilesPerList must be >= 1, got $maxFilesPerList")
     import spark.implicits._
     // recover BEFORE reading the listing (the InvertedIndex.maintain
-    // rule): a crashed marker-committed merge still lists the vacated
+    // rule): a crashed committed merge still lists the vacated
     // ivf_list=<last> dir — deciding on that stale listing would have
     // the inner compact() roll the merge forward mid-flight and then
     // fail requireDirs on the now-dropped directory
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
+    recover(listsPath)
     val listCounts = dirFileCounts(listsPath, "ivf_list")
     val toCompact = listCounts.filter(_._2 > maxFilesPerList)
       .map(_._1).sorted
@@ -368,20 +342,16 @@ final class IvfIndex(spark: SparkSession, path: String,
     * codes, codebooks, centroids, both assignment sidecars and their
     * meta ([[LayoutFs.snapshot]]; the reference's flagship funnel serves
     * from THIS store, so it is the first layout a deployment needs to
-    * back up). The quiesce rolls every pending merge/split marker
-    * forward and resolves every swap backup across BOTH layouts, all
-    * sidecars and the centroid pointer. The copy answers exactly like
+    * back up). The quiesce rolls a committed batch forward and resolves
+    * every swap backup across BOTH layouts, all sidecars and the centroid
+    * pointer; the snapshot then discards an uncommitted batch. The copy
+    * answers exactly like
     * the source at snapshot time (same centroids, same pending
     * compaction debt); open it with `new IvfIndex(spark, target)`. */
   def snapshot(targetPath: String): Unit =
     LayoutFs.snapshot(fs, new Path(path), targetPath,
-        spark.sparkContext.hadoopConfiguration) {
-      recoverMerge(listsPath); recoverSplit(listsPath)
-      recoverDir(listsPath); recoverDir(assignPath)
-      if (fs.exists(new Path(codesPath))) recoverDir(codesPath)
-      if (fs.exists(new Path(assignPqPath))) recoverDir(assignPqPath)
-      recoverDir(path)
-    }
+        spark.sparkContext.hadoopConfiguration)(
+      recover(listsPath, assignPath, codesPath, assignPqPath))
 
   private def requireDirs(base: String, partCol: String, ids: Seq[Int]): Unit =
     ids.foreach { n =>
@@ -407,10 +377,10 @@ final class IvfIndex(spark: SparkSession, path: String,
     * compressed layout is served. */
   def retrain(targetPath: String, iters: Int): IvfIndex = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
+    recover(listsPath)
     val vecs = spark.read.parquet(listsPath)
       .select(col("id"), col("vector"))
-    val cents = Ann.lloydRounds(vecs, "vector", centroids(), iters)
+    val cents = Ann.lloydRounds(vecs, "vector", loadCentroids(), iters)
     val next = new IvfIndex(spark, targetPath, assignBuckets)
     next.build(vecs, "id", "vector", cents)
     next
@@ -433,13 +403,12 @@ final class IvfIndex(spark: SparkSession, path: String,
     *  1. sidecar rows (moved id → new list) APPEND — the superset
     *     invariant: from here a delete of a moved id anti-joins the new
     *     list too, whichever directory the row is in;
-    *  2. both halves and the grown centroid set staged, then a PENDING
-    *     MARKER commits the split — [[recoverSplit]] rolls FORWARD from
-    *     the marker (the centroid swap, then the halves, each re-run
-    *     idempotently), and a crash BEFORE the marker just drops the
-    *     orphan staging (the live lists and centroids are untouched until
-    *     the marker exists, so every reader sees the old index or the
-    *     whole new one);
+    *  2. both halves and the grown centroid set staged and committed as
+    *     one [[LayoutFs.Batch]] — [[recover]] rolls a committed batch
+    *     FORWARD, and a batch that crashed before its commit is hidden
+    *     debris the next mutation discards (the live lists and centroids
+    *     are untouched until the commit, so every reader sees the old
+    *     index or the whole new one);
     *  3. stale sidecar pairs (moved id → old list) removed — a crash
     *     leaves a superset, never an under-approximation.
     *
@@ -448,14 +417,14 @@ final class IvfIndex(spark: SparkSession, path: String,
     * index is untouched. A PQ codes layout RIDES ALONG: the codes here
     * quantize the raw vector (no coarse residual), so the split is a
     * pure id-keyed move for the compressed layout — its halves stage
-    * beside the raw ones, swap under the same marker, and both sidecars
+    * beside the raw ones in the same batch, and both sidecars
     * keep the superset invariant; only [[retrain]] (which changes the
     * quantizer) still requires a [[buildPq]] rerun. Returns
     * Some((newListId, movedRows)) on success. */
   def splitList(listId: Int, lloydIters: Int = 1): Option[(Int, Long)] = {
     require(lloydIters >= 1, s"lloydIters must be >= 1, got $lloydIters")
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath); recoverDir(assignPath)
-    val cs = centroids()
+    recover(listsPath, assignPath, codesPath, assignPqPath)
+    val cs = loadCentroids()
     require(listId >= 0 && listId < cs.size,
       s"listId $listId out of range [0, ${cs.size})")
     val newId = cs.size
@@ -479,7 +448,6 @@ final class IvfIndex(spark: SparkSession, path: String,
     // PQ codes are list-independent, so the split is a pure id-keyed
     // move for codes — no re-encode, layout stays servable)
     val hasPq = fs.exists(new Path(codesPath))
-    if (hasPq) { recoverDir(codesPath); recoverDir(assignPqPath) }
     val movedIds = moved.select(col("id"))
     val codesList = if (hasPq)
       Some(spark.read.parquet(codesPath)
@@ -496,41 +464,30 @@ final class IvfIndex(spark: SparkSession, path: String,
         assignPqPath, assignPqMetaPath, overwrite = false)
     }
     // 2. data move and centroid set (listId tightens to sub-centroid 0,
-    // newId = sub 1), staged then marker-committed
-    val staging = new Path(listsPath, stagingSplitName)
-    fs.delete(staging, true)
-    assigned.withColumn("ivf_list",
-        when(col("ivf_list") === 0, lit(listId)).otherwise(lit(newId)))
-      .write.partitionBy("ivf_list").parquet(staging.toString)
+    // newId = sub 1), committed as one batch
+    val batch = LayoutFs.batch(fs, new Path(path))
+    val halves = Seq(listId, newId)
+    batch.stageParts("lists", "ivf_list", halves, assigned.withColumn("ivf_list",
+      when(col("ivf_list") === 0, lit(listId)).otherwise(lit(newId))))
     codesList.foreach { cl =>
-      val codesStaging = new Path(staging, "_codes")
-      cl.join(movedIds, Seq("id"), "left_anti")
-        .withColumn("ivf_list", lit(listId))
-        .unionByName(cl.join(movedIds, Seq("id"), "left_semi")
-          .withColumn("ivf_list", lit(newId)))
-        .write.partitionBy("ivf_list").parquet(codesStaging.toString)
-      Seq(listId, newId).foreach { n =>
-        val staged = new Path(codesStaging, s"ivf_list=$n")
-        if (!fs.exists(staged))
-          cl.limit(0).coalesce(1).write.parquet(staged.toString)
-      }
+      batch.stageParts("codes", "ivf_list", halves,
+        cl.join(movedIds, Seq("id"), "left_anti").withColumn("ivf_list", lit(listId))
+          .unionByName(cl.join(movedIds, Seq("id"), "left_semi")
+            .withColumn("ivf_list", lit(newId))))
     }
-    writeCentroids(cs.updated(listId, sub(0)) :+ sub(1), new Path(staging, "_centroids"))
-    fs.mkdirs(new Path(listsPath, s".split_pending_${listId}_$newId"))
-    completeSplit(listsPath, listId, newId)
+    batch.stage("centroids")(writeCentroids(cs.updated(listId, sub(0)) :+ sub(1), _))
+    batch.commit()
+    centroidsMemo.invalidate()
     // 3. drop the stale (moved id, old list) sidecar pairs
     cleanAssignPairs(moved.select(col("id"), lit(listId).as("ivf_list")))
     codesMovedIds.foreach { mi =>
       cleanAssignPairs(mi.select(col("id"), lit(listId).as("ivf_list")),
-        assignPqPath, assignPqMetaPath)
+        "assign_pq", assignPqMetaPath)
       graft.util.Pins.release(mi)
     }
     graft.util.Pins.release(assigned)
     Some((newId, nMoved))
   }
-
-  private def stagingSplitName = ".staging_split"
-  private def stagingMergeName = ".staging_merge"
 
   /** In-place merge of two underpopulated inverted lists (X185; the
     * DUAL of [[splitList]], closing the maintenance loop: heavy
@@ -548,37 +505,34 @@ final class IvfIndex(spark: SparkSession, path: String,
     * of [[graft.operators.Ann.ivfStats]] — the [[splitList]] monitoring
     * convention.
     *
-    * Crash protocol (roll-forward, the [[splitList]] marker discipline
-    * but with the marker FIRST — a merge shrinks the centroid set, so
-    * every subsequent step must be completable from disk alone):
-    *  1. data staged: union under the surviving slot, the last list's
-    *     rows under the vacated slot, the shrunken centroid set as a
-    *     `_centroids` sibling — all hidden, live layout untouched;
+    * Crash protocol (roll-forward, the [[splitList]] batch discipline —
+    * a merge shrinks the centroid set, so every step after the commit
+    * must be completable from disk alone):
+    *  1. data staged in one [[LayoutFs.Batch]]: union under the
+    *     surviving slot, the last list's rows under the vacated slot, the
+    *     shrunken centroid set, and the vacated last directory as a drop
+    *     — all hidden, live layout untouched;
     *  2. sidecar rows appended (absorbed ids → surviving slot, last
     *     list's ids → vacated slot) — the superset invariant: a delete
     *     of a moved id anti-joins its new list too, whichever directory
     *     the row is in at the crash point;
-    *  3. PENDING MARKER commits the merge — [[recoverMerge]] rolls
-    *     FORWARD from here (each rename is state-checked and
-    *     idempotent); a crash BEFORE the marker discards the orphan
-    *     staging, and the extra sidecar rows stay a harmless superset;
-    *  4. centroid swap (two-rename from the staged `_centroids`), then
-    *     the two directory swaps, then the vacated last directory
-    *     drops;
-    *  5. stale sidecar pairs removed — superset, never under.
+    *  3. the batch commits — [[recover]] rolls it FORWARD from here (the
+    *     swaps, then the drop, each idempotent); a crash BEFORE the
+    *     commit leaves staging the next mutation discards, and the extra
+    *     sidecar rows stay a harmless superset;
+    *  4. stale sidecar pairs removed — superset, never under.
     *
     * A PQ codes layout RIDES ALONG (the [[splitList]] rule: raw-vector
     * codes are list-independent, so the merge is pure renumbering for
-    * the compressed layout — staged, marker-committed and swapped with
+    * the compressed layout — staged and committed in the same batch as
     * the raw dirs; both sidecars keep the superset invariant). Returns
     * (survivingListId, absorbedRows):
     * normally `a` holding the union of `a` and `b`; when `a` is the
     * highest list id the roles swap (the union lands under `b`) so the
     * vacated slot is always the highest. */
   def mergeLists(a: Int, b: Int): (Int, Long) = {
-    recoverMerge(listsPath); recoverSplit(listsPath)
-    recoverDir(listsPath); recoverDir(assignPath)
-    val cs = centroids()
+    recover(listsPath, assignPath, codesPath, assignPqPath)
+    val cs = loadCentroids()
     require(a != b, s"cannot merge list $a with itself")
     Seq(a, b).foreach(i => require(i >= 0 && i < cs.size,
       s"list $i out of range [0, ${cs.size})"))
@@ -594,7 +548,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     val lastRows = if (source == last) union.limit(0)
       else lists.filter(col("ivf_list") === last)
         .select(col("id"), col("vector"))
-    // pinned: steps 4-5 mutate the directories these lazy frames read
+    // pinned: step 4 runs after the commit replaced the directories
+    // these lazy frames read
     val sourceIds = lists.filter(col("ivf_list") === source)
       .select(col("id")).localCheckpoint(true)
     val lastIds = lastRows.select(col("id")).localCheckpoint(true)
@@ -618,7 +573,6 @@ final class IvfIndex(spark: SparkSession, path: String,
     // codes — the same staged moves keep the layout servable instead of
     // invalidating it
     val hasPq = fs.exists(new Path(codesPath))
-    if (hasPq) { recoverDir(codesPath); recoverDir(assignPqPath) }
     val codesAll = if (hasPq) Some(spark.read.parquet(codesPath)) else None
     val codesUnion = codesAll.map(_.filter(col("ivf_list").isin(target, source))
       .select(col("id"), col("codes")))
@@ -629,30 +583,24 @@ final class IvfIndex(spark: SparkSession, path: String,
     val sourceIdsPq = codesAll.map(_.filter(col("ivf_list") === source)
       .select(col("id")).localCheckpoint(true))
     val lastIdsPq = codesLast.map(_.select(col("id")).localCheckpoint(true))
-    // 1. stage everything the roll-forward needs
-    val staging = new Path(listsPath, stagingMergeName)
-    fs.delete(staging, true)
-    union.withColumn("ivf_list", lit(target))
-      .unionByName(lastRows.withColumn("ivf_list", lit(vacated)))
-      .write.partitionBy("ivf_list").parquet(staging.toString)
+    // 1. stage everything the roll-forward needs. The vacated codes dir
+    // drops ONLY when this merge staged a codes half: a codes layout
+    // that came into existence after the commit (e.g. a buildPq before
+    // the roll-forward) was never renumbered, and dropping its last list
+    // would silently lose compressed-layout data
+    val batch = LayoutFs.batch(fs, new Path(path))
     val stagedSlots = Seq(target) ++ (if (source == last) Nil else Seq(vacated))
-    stagedSlots.foreach { n =>
-      val staged = new Path(staging, s"ivf_list=$n")
-      if (!fs.exists(staged))
-        union.limit(0).coalesce(1).write.parquet(staged.toString)
-    }
+    batch.stageParts("lists", "ivf_list", stagedSlots,
+      union.withColumn("ivf_list", lit(target))
+        .unionByName(lastRows.withColumn("ivf_list", lit(vacated))))
     codesUnion.foreach { cu =>
-      val codesStaging = new Path(staging, "_codes")
-      cu.withColumn("ivf_list", lit(target))
-        .unionByName(codesLast.get.withColumn("ivf_list", lit(vacated)))
-        .write.partitionBy("ivf_list").parquet(codesStaging.toString)
-      stagedSlots.foreach { n =>
-        val staged = new Path(codesStaging, s"ivf_list=$n")
-        if (!fs.exists(staged))
-          cu.limit(0).coalesce(1).write.parquet(staged.toString)
-      }
+      batch.stageParts("codes", "ivf_list", stagedSlots,
+        cu.withColumn("ivf_list", lit(target))
+          .unionByName(codesLast.get.withColumn("ivf_list", lit(vacated))))
+      batch.drop(s"codes/ivf_list=$last")
     }
-    writeCentroids(newCs, new Path(staging, "_centroids"))
+    batch.stage("centroids")(writeCentroids(newCs, _))
+    batch.drop(s"lists/ivf_list=$last")
     // 2. sidecar superset: moved ids also map to their new lists — BOTH
     // sidecars when the compressed layout exists
     writeAssign(sourceIds.select(col("id"), lit(target).as("ivf_list"))
@@ -664,17 +612,16 @@ final class IvfIndex(spark: SparkSession, path: String,
             .select(col("id"), lit(vacated).as("ivf_list"))),
         assignPqPath, assignPqMetaPath, overwrite = false)
     }
-    // 3. marker commits; 4. roll forward
-    fs.mkdirs(new Path(listsPath, s".merge_pending_${target}_${vacated}_$last"))
-    completeMerge(listsPath, target, vacated, last)
-    // 5. drop the stale (moved id, old list) sidecar pairs
+    // 3. the batch commits and rolls forward
+    batch.commit()
+    centroidsMemo.invalidate()
+    // 4. drop the stale (moved id, old list) sidecar pairs
     cleanAssignPairs(sourceIds.select(col("id"), lit(source).as("ivf_list"))
-      .unionByName(lastIds.select(col("id"), lit(last).as("ivf_list"))),
-      assignPath, assignMetaPath)
+      .unionByName(lastIds.select(col("id"), lit(last).as("ivf_list"))))
     sourceIdsPq.foreach { sp =>
       cleanAssignPairs(sp.select(col("id"), lit(source).as("ivf_list"))
         .unionByName(lastIdsPq.get.select(col("id"), lit(last).as("ivf_list"))),
-        assignPqPath, assignPqMetaPath)
+        "assign_pq", assignPqMetaPath)
       graft.util.Pins.release(sp)
       graft.util.Pins.release(lastIdsPq.get)
     }
@@ -683,106 +630,19 @@ final class IvfIndex(spark: SparkSession, path: String,
     (target, nAbsorbed)
   }
 
-  /** Finish a marker-committed merge: centroid swap from the staged
-    * `_centroids`, directory swaps, vacated-dir drop — every step
-    * state-checked, idempotent from ANY crash point at or after the
-    * marker write. */
-  private def completeMerge(base: String, target: Int, vacated: Int,
-      last: Int): Unit = {
-    val staging = new Path(base, stagingMergeName)
-    swapCentroids(staging)
-    def swapIn(stagingRoot: Path, liveBase: String, n: Int): Unit =
-      LayoutFs.swap(fs, new Path(stagingRoot, s"ivf_list=$n"),
-        new Path(liveBase, s"ivf_list=$n"))
-    swapIn(staging, base, target)
-    if (vacated != last) swapIn(staging, base, vacated)
-    fs.delete(new Path(base, s"ivf_list=$last"), true)
-    // the staged compressed layout (if the merge carried one) swaps the
-    // same way. The vacated codes dir drops ONLY when the merge
-    // demonstrably staged a codes half (the same guard as the swapIn
-    // calls): a merge staged before any codes layout existed must not
-    // delete a codes/ivf_list=<last> that came into existence in the
-    // crash window (e.g. a buildPq between marker commit and roll-
-    // forward) — that dir was never renumbered and deleting it would
-    // silently lose compressed-layout data
-    val codesStaging = new Path(staging, "_codes")
-    if (fs.exists(codesStaging)) {
-      swapIn(codesStaging, codesPath, target)
-      if (vacated != last) swapIn(codesStaging, codesPath, vacated)
-      fs.delete(new Path(codesPath, s"ivf_list=$last"), true)
-    }
-    fs.delete(staging, true)
-    fs.delete(new Path(base, s".merge_pending_${target}_${vacated}_$last"), true)
-  }
-
-  /** Roll a crashed [[mergeLists]] forward (marker present) or discard
-    * an uncommitted one (orphan staging, no marker) — the
-    * [[recoverSplit]] twin; runs before it at every lists-layout entry
-    * point. */
-  private[graft] def recoverMerge(base: String): Unit = {
-    val markers = Option(fs.globStatus(new Path(base, ".merge_pending_*")))
-      .toSeq.flatten
-    markers.foreach { st =>
-      val parts = st.getPath.getName.stripPrefix(".merge_pending_").split("_")
-      completeMerge(base, parts(0).toInt, parts(1).toInt, parts(2).toInt)
-    }
-    if (markers.isEmpty)
-      fs.delete(new Path(base, stagingMergeName), true)
-  }
-
-  /** Finish a marker-committed split: every step is a
-    * [[LayoutFs.swap]], so this is idempotent from ANY crash point at or
-    * after the marker write. */
-  private def completeSplit(base: String, listId: Int, newId: Int): Unit = {
-    val staging = new Path(base, stagingSplitName)
-    swapCentroids(staging)
-    def swapHalves(stagingRoot: Path, liveBase: String): Unit =
-      Seq(listId, newId).foreach { n =>
-        LayoutFs.swap(fs, new Path(stagingRoot, s"ivf_list=$n"),
-          new Path(liveBase, s"ivf_list=$n"))
-      }
-    swapHalves(staging, base)
-    // a split that carried the compressed layout staged its code halves
-    // under _codes — same state-checked swaps against the codes dirs
-    val codesStaging = new Path(staging, "_codes")
-    if (fs.exists(codesStaging)) swapHalves(codesStaging, codesPath)
-    fs.delete(staging, true)
-    fs.delete(new Path(base, s".split_pending_${listId}_$newId"), true)
-  }
-
-  /** Roll a crashed [[splitList]] forward (marker present) or discard an
-    * uncommitted one (orphan staging, no marker). Runs before
-    * [[recoverDir]] at every lists-layout entry point: the marker means
-    * the centroid set already references the new list, so forward is the
-    * only direction that converges. */
-  private[graft] def recoverSplit(base: String): Unit = {
-    val markers = Option(fs.globStatus(new Path(base, ".split_pending_*")))
-      .toSeq.flatten
-    markers.foreach { st =>
-      val parts = st.getPath.getName.stripPrefix(".split_pending_").split("_")
-      completeSplit(base, parts(0).toInt, parts(1).toInt)
-    }
-    if (markers.isEmpty)
-      fs.delete(new Path(base, stagingSplitName), true)
-  }
-
   /** Remove exact (id, ivf_list) PAIRS from the sidecar — the stale-row
-    * cleanup after a split moved those ids elsewhere. Same bucket-pruned
-    * [[rewriteDirs]] as a delete, but the anti-join keys on the pair, so
-    * the id's row for its NEW list survives. */
-  private def cleanAssignPairs(pairs: DataFrame,
-      assignBase: String = assignPath,
-      metaPath: String = assignMetaPath): Unit = {
-    if (!fs.exists(new Path(metaPath))) return
-    recoverDir(assignBase)
-    val b = readAssignBuckets(metaPath)
-    val buckets = pairs.select(bucketOf(col("id"), b)).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-      .filter(n => fs.exists(new Path(assignBase, s"abucket=$n")))
-    rewriteDirs(assignBase, "abucket", buckets,
-      _.join(pairs.select(col("id"), col("ivf_list")),
-        Seq("id", "ivf_list"), "left_anti"))
-  }
+    * cleanup after a split or merge moved those ids elsewhere. Same
+    * bucket-pruned [[rewrite]] as a delete, but the anti-join keys on the
+    * pair, so the id's row for its NEW list survives. */
+  private def cleanAssignPairs(pairs: DataFrame, assignRel: String = "assign",
+      metaPath: String = assignMetaPath): Unit =
+    if (fs.exists(new Path(metaPath))) {
+      val b = readAssignBuckets(metaPath)
+      val buckets = pairs.select(bucketOf(col("id"), b)).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      rewrite(assignRel, "abucket", buckets)(
+        _.join(pairs.select(col("id"), col("ivf_list")), Seq("id", "ivf_list"), "left_anti"))
+    }
 
   /** Stage a centroid set as a (cid, centroid) table at `dir`. */
   private def writeCentroids(cs: Seq[Array[Float]], dir: Path): Unit = {
@@ -792,40 +652,35 @@ final class IvfIndex(spark: SparkSession, path: String,
       .coalesce(1).write.parquet(dir.toString)
   }
 
-  /** Swap a merge's or split's staged `_centroids` in (recovered in
-    * [[centroids]]): the centroid set is the index's root pointer, so it
-    * is never overwritten in place. */
-  private def swapCentroids(staging: Path): Unit = {
-    LayoutFs.swap(fs, new Path(staging, "_centroids"), new Path(centroidsPath))
-    centroidsMemo.invalidate()
-  }
-
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Crash recovery for every [[LayoutFs.swap]] under `base`. Runs at
-    * the top of every entry point that reads or writes the layout. */
-  private def recoverDir(base: String): Unit =
-    LayoutFs.recoverUnder(fs, new Path(base), "*")
+  /** Crash recovery, run once at the top of every entry point: roll a
+    * committed batch forward and resolve a crashed centroid-pointer swap
+    * ([[LayoutFs.recoverUnder]] over the index root), then resolve
+    * crashed swaps under each named layout directory. Reads only — an
+    * uncommitted batch stays for the next mutation to discard. */
+  private def recover(dirs: String*): Unit =
+    (path +: dirs).foreach(d => LayoutFs.recoverUnder(fs, new Path(d), "*"))
 
-  /** The stored centroids, ordered by cid. [[recoverDir]] over the index
-    * root first: a crash mid-[[swapCentroids]] leaves `.centroids.bak`
-    * to restore — the root pointer must never read as missing. */
+  /** The stored centroids, ordered by cid, after [[recover]]: the root
+    * pointer must never read as missing or as a mutation's half. */
+  def centroids(): Seq[Array[Float]] = { recover(); loadCentroids() }
+
+  // memoized per instance, stamped by the centroids dir: every mutation
+  // replaces the directory (fresh mtime) — and the k-vector table is
+  // small by the coarse-quantizer contract (√n-ish), so holding it on
+  // the driver costs what one probe already costs. r22 profile: this
+  // read+collect pair scheduled 5x per q203 lifecycle walk.
   private lazy val centroidsMemo =
     new graft.util.StampedMemo[Seq[Array[Float]]](() => fs,
       Seq(centroidsPath))
-  def centroids(): Seq[Array[Float]] = {
-    recoverDir(path)
-    // memoized per instance, stamped by the centroids dir: every
-    // mutation goes through [[swapCentroids]], which
-    // replaces the directory (fresh mtime) — and the k-vector table is
-    // small by the coarse-quantizer contract (√n-ish), so holding it on
-    // the driver costs what one probe already costs. r22 profile: this
-    // read+collect pair scheduled 5x per q203 lifecycle walk.
+
+  /** [[centroids]] for entry points that already ran [[recover]]. */
+  private def loadCentroids(): Seq[Array[Float]] =
     centroidsMemo(
       spark.read.parquet(centroidsPath).orderBy(col("cid"))
         .collect().map(_.getSeq[Float](1).toArray).toSeq)
-  }
 
   /** Exact cosine top-k WITHIN the nprobe best lists for `query` —
     * [[graft.operators.Ann.ivfTopK]] semantics, but the probe set
@@ -834,7 +689,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   def search(query: Array[Float], k: Int, nprobe: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
+    recover(listsPath)
     val probed = spark.read.parquet(listsPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
     Ann.bruteForceTopK(probed, "id", "vector", query, k)
@@ -854,7 +709,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       pred: Column): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
+    recover(listsPath)
     val probed = spark.read.parquet(listsPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
       .filter(pred)
@@ -868,22 +723,19 @@ final class IvfIndex(spark: SparkSession, path: String,
     * like [[search]]) and scores with the registered `vec_cosine`
     * kernel. */
   def listsView: DataFrame = {
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
+    recover(listsPath)
     spark.read.parquet(listsPath)
   }
 
-  /** Crash recovery alone (lists + centroid pointer) — run by
-    * [[graft.sources.v2.GraftLayoutSource]] in `newScanBuilder`, before
-    * it lists the files of each SQL scan: a V2 scan is a read entry
-    * point like any other, so it recovers first. */
-  private[graft] def recoverForRead(): Unit = {
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(listsPath)
-    recoverDir(path)
-  }
+  /** Crash recovery alone (a committed batch, lists + centroid pointer)
+    * — run by [[graft.sources.v2.GraftLayoutSource]] in `newScanBuilder`,
+    * before it lists the files of each SQL scan: a V2 scan is a read
+    * entry point like any other, so it recovers first. */
+  private[graft] def recoverForRead(): Unit = recover(listsPath)
 
   /** See [[listsView]]. */
   def centroidsView: DataFrame = {
-    recoverDir(path)
+    recover()
     spark.read.parquet(centroidsPath)
   }
 
@@ -896,7 +748,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
       s
     }
-    centroids().zipWithIndex
+    loadCentroids().zipWithIndex
       .map { case (c, i) => (i, dot(c, query)) }
       .sortBy { case (i, d) => (-d, i) }
       .take(nprobe).map(_._1)
@@ -923,6 +775,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       coarse: Seq[Array[Float]], books: Pq.Codebooks): Unit = {
     require(coarse.nonEmpty, "need at least one coarse centroid")
     import spark.implicits._
+    recover()
     // shared assignment pass (the build() discipline)
     val assigned = Ann.ivfAssign(
       embs.select(col(idCol).as("id"), col(vecCol).as("vector")),
@@ -952,6 +805,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       coarse: Seq[Array[Float]], books: Pq.Codebooks): Unit = {
     require(coarse.nonEmpty, "need at least one coarse centroid")
     import spark.implicits._
+    recover()
     // one assignment pass feeds FOUR writes: raw sidecar, raw lists,
     // pq sidecar, encoded codes
     val assigned = Ann.ivfAssign(
@@ -987,9 +841,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * crash story as [[append]], sidecar first. Codebook/centroid drift
     * is [[graft.operators.Ann.ivfStats]]'s contract, as for [[append]]. */
   def appendPq(embs: DataFrame, idCol: String, vecCol: String): Unit = {
-    recoverMerge(listsPath); recoverSplit(listsPath)
-    recoverDir(codesPath); recoverDir(assignPqPath)
-    val coarse = centroids()
+    recover(codesPath, assignPqPath)
+    val coarse = loadCentroids()
     val books = codebooks()
     val assignedBase = Ann.ivfAssign(
       embs.select(col(idCol).as("id"), col(vecCol).as("vector")),
@@ -1006,13 +859,13 @@ final class IvfIndex(spark: SparkSession, path: String,
   }
 
   /** In-place deletion for the PQ codes layout (X130; the compressed
-    * half of X129): the same bucket-pruned sidecar discovery, per-list
-    * anti-join, and two-rename swap as [[delete]], walked over
+    * half of X129): the same bucket-pruned sidecar discovery, anti-join,
+    * and committed batch as [[delete]], walked over
     * `codes/ivf_list=N` — so a 100 TB deployment serving from the
     * compressed layout gets steady-state deletes without a rebuild. */
   def deletePq(ids: DataFrame): Unit = {
-    recoverMerge(listsPath); recoverSplit(listsPath)
-    deleteFrom(codesPath, assignPqPath, assignPqMetaPath, ids)
+    recover(codesPath, assignPqPath)
+    deleteFrom("codes", "assign_pq", assignPqMetaPath, ids)
   }
 
   /** The stored PQ codebooks, (subspace, code)-ordered. */
@@ -1030,7 +883,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   def searchPq(query: Array[Float], topK: Int, nprobe: Int): DataFrame = {
     require(topK >= 1, s"topK must be positive, got $topK")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(codesPath)
+    recover(codesPath)
     val probed = spark.read.parquet(codesPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
     Pq.adcTopK(probed, "id", "codes", codebooks(), query, topK)
@@ -1049,7 +902,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       pred: Column): DataFrame = {
     require(topK >= 1, s"topK must be positive, got $topK")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recoverMerge(listsPath); recoverSplit(listsPath); recoverDir(codesPath)
+    recover(codesPath)
     val probed = spark.read.parquet(codesPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
       .filter(pred)
@@ -1073,6 +926,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       refine: Int = 3): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(refine >= 1, s"refine must be >= 1, got $refine")
+    recover(listsPath)
     val cand = searchPq(query, topK = refine * k, nprobe)
       .select(col("id"))
     val probedRaw = spark.read.parquet(listsPath)

@@ -1,10 +1,12 @@
 package graft.sources
 
 import java.io.IOException
+import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The one crash-safe commit primitive every persisted layout shares.
   *
@@ -16,10 +18,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * value. A crash between the two renames leaves the backup and no live
   * directory; every read entry point runs [[recover]] or [[recoverUnder]]
   * first, which restores the backup when the live directory is missing
-  * and drops it otherwise. Layout-specific protocols (IVF merge/split
-  * markers, the inverted index's `.append_pending` batch marker, the
-  * derived-sidecar apply markers) stay in their layouts and call [[swap]]
-  * for each rename pair.
+  * and drops it otherwise.
+  *
+  * A mutation that replaces SEVERAL directories (bucket rewrites, IVF
+  * list deletes, compactions, splits and merges, graph edge batches)
+  * commits them as one [[Batch]]: every replacement stages under the
+  * hidden `<root>/.commit/` tree, which mirrors the live paths below the
+  * layout root, and a marker file naming the ordered swaps and drops is
+  * renamed to `<root>/.committed` — that rename is the commit point.
+  * Publishing swaps each entry in and then drops the batch. From the
+  * marker on, [[recoverUnder]] on the root rolls the batch forward, so a
+  * crash leaves the old directories or all the new ones. Readers never
+  * delete an uncommitted batch: only the next batch, [[discardBatch]]
+  * (a layout's vacuum) or a [[snapshot]] quiesce discards one. The
+  * inverted index's additive `.append_pending` batch and its derived-
+  * sidecar apply markers move files INTO live directories rather than
+  * replacing them, and stay in that layout.
   *
   * Atomicity assumption, stated once for the engine's whole two-rename
   * and marker family: each `rename` is an ATOMIC O(1) metadata
@@ -40,10 +54,10 @@ object LayoutFs {
     * backup first), rename `staged` into place, drop the backup.
     * Idempotent from any crash point: with `staged` already gone the
     * rename pair completed and only the backup drop remains, and with
-    * `live` missing the backup is kept until the rename lands — so the
-    * IVF merge/split roll-forwards re-run it freely. A failed rename
-    * throws and leaves the state to [[recover]] (no rollback: a real
-    * crash cannot roll back either). */
+    * `live` missing the backup is kept until the rename lands — so a
+    * [[Batch]] roll-forward re-runs it freely. A failed rename throws
+    * and leaves the state to [[recover]] (no rollback: a real crash
+    * cannot roll back either). */
   def swap(fs: FileSystem, staged: Path, live: Path): Unit = {
     val b = bak(live)
     if (fs.exists(staged)) {
@@ -66,23 +80,166 @@ object LayoutFs {
     }
 
   /** [[recover]] for every directory under `base` whose name matches
-    * `glob` (e.g. `bucket=*`), from one glob of their backups. */
-  def recoverUnder(fs: FileSystem, base: Path, glob: String): Unit =
-    Option(fs.globStatus(new Path(base, s".$glob.bak"))).toSeq.flatten
-      .foreach { st =>
-        restoreOrDrop(fs, st.getPath, new Path(base,
-          st.getPath.getName.stripPrefix(".").stripSuffix(".bak")))
-      }
+    * `glob` (e.g. `bucket=*`), from one glob of their backups. The same
+    * glob finds a [[Batch]] committed at `base`, which then rolls
+    * forward, and the commit markers that earlier versions of the IVF
+    * and graph layouts left mid-mutation: those fail the call with an
+    * `IOException` naming the marker, because this version no longer
+    * rolls them forward and a layout read past one serves a half-applied
+    * mutation. */
+  def recoverUnder(fs: FileSystem, base: Path, glob: String): Unit = {
+    val hits = Option(fs.globStatus(new Path(base,
+        (s".$glob.bak" +: Marker +: LegacyMarkers).mkString("{", ",", "}"))))
+      .toSeq.flatten.map(_.getPath)
+    val (committed, rest) = hits.partition(_.getName == Marker)
+    rest.foreach { p =>
+      if (p.getName.endsWith(".bak"))
+        restoreOrDrop(fs, p, new Path(base, p.getName.stripPrefix(".").stripSuffix(".bak")))
+      else refuseLegacy(fs, p)
+    }
+    if (committed.nonEmpty) publish(fs, base)
+  }
 
   private def restoreOrDrop(fs: FileSystem, b: Path, live: Path): Unit =
     if (!fs.exists(live)) {
       if (!fs.rename(b, live)) throw new IOException(s"cannot restore $live from $b")
     } else fs.delete(b, true)
 
+  /** The IVF split/merge markers and the graph edge batch, as the
+    * per-layout protocols that [[Batch]] replaced named them. */
+  private val LegacyMarkers = Seq(".split_pending_*", ".merge_pending_*", ".tmp_gbucket_batch")
+
+  /** Fail on a legacy marker. The graph batch directory is only a marker
+    * once its `_committed` child exists; before that it is hidden debris
+    * of a batch that never committed. */
+  private def refuseLegacy(fs: FileSystem, p: Path): Unit = {
+    val marker = if (p.getName == ".tmp_gbucket_batch") new Path(p, "_committed") else p
+    if (marker == p || fs.exists(marker))
+      throw new IOException(s"$marker: an earlier version of this layout " +
+        "committed a mutation and crashed before finishing it; open the " +
+        "layout once with that version to roll it forward, or restore a snapshot")
+  }
+
+  private val Staging = ".commit"
+  private val Marker = ".committed"
+
+  private def under(base: Path, rel: String): Path =
+    if (rel.isEmpty) base else new Path(base, rel)
+
+  /** Directory replacements under the layout root `root`, committed at
+    * once (the class doc's protocol). [[stage]] and [[stageParts]] add
+    * swaps in order, [[drop]] adds a deletion that runs after them, and
+    * [[commit]] commits and publishes the lot. Open one with [[batch]]. */
+  final class Batch private[LayoutFs] (fs: FileSystem, root: Path) {
+    private var swaps = Vector.empty[String]
+    private var drops = Vector.empty[String]
+
+    /** Where the replacement of the live `root/rel` stages. */
+    def staged(rel: String): Path = under(new Path(root, Staging), rel)
+
+    /** Stage `root/rel` as `write` writes it to the staging path. */
+    def stage(rel: String)(write: Path => Unit): Unit = {
+      write(staged(rel))
+      swaps :+= rel
+    }
+
+    /** Stage `rows`, partitioned by `partCol`, as the replacement of each
+      * `rel/partCol=N` with N in `parts`. A part that gets no rows but
+      * exists live stages a schema-carrying empty file, so it swaps to
+      * empty and a later read of the whole layout can still infer the
+      * schema; a part that exists nowhere stays absent. Rows outside
+      * `parts` abort the batch uncommitted: a rewrite must never replace
+      * a directory whose live rows it did not read. */
+    def stageParts(rel: String, partCol: String, parts: Seq[Int], rows: DataFrame): Unit = {
+      val dir = staged(rel)
+      rows.write.partitionBy(partCol).parquet(dir.toString)
+      val written = fs.listStatus(dir).map(_.getPath.getName)
+        .filter(_.startsWith(s"$partCol=")).toSet
+      val names = parts.map(n => s"$partCol=$n")
+      val stray = written -- names
+      if (stray.nonEmpty) throw new IllegalStateException(
+        s"rows for ${stray.toSeq.sorted.mkString(", ")} outside the rewritten " +
+          s"parts of ${under(root, rel)}")
+      names.filter(n => written(n) || fs.exists(new Path(under(root, rel), n)))
+        .foreach { n =>
+          if (!written(n)) emptyFile(rows.drop(partCol), new Path(dir, n))
+          swaps :+= (if (rel.isEmpty) n else s"$rel/$n")
+        }
+    }
+
+    /** Delete the live `root/rel` once every swap has landed. */
+    def drop(rel: String): Unit = drops :+= rel
+
+    /** Commit ([[markCommitted]]) and publish. */
+    def commit(): Unit = if (markCommitted()) publish(fs, root)
+
+    /** The commit point alone: write the swap and drop list under the
+      * staging tree and rename it to the marker. A batch with nothing to
+      * swap or drop commits nothing (false). */
+    private[sources] def markCommitted(): Boolean =
+      (swaps.nonEmpty || drops.nonEmpty) && {
+        val tmp = staged("_batch")
+        val out = fs.create(tmp, true)
+        try out.write((swaps.map("swap " + _) ++ drops.map("drop " + _))
+          .mkString("", "\n", "\n").getBytes(UTF_8))
+        finally out.close()
+        if (!fs.rename(tmp, new Path(root, Marker)))
+          throw new IOException(s"cannot commit the batch staged under $root")
+        true
+      }
+  }
+
+  /** Open a [[Batch]] under `root`. The caller owns the layout: a batch
+    * still committed there rolls forward, and an uncommitted one is
+    * discarded ([[discardBatch]]). */
+  def batch(fs: FileSystem, root: Path): Batch = {
+    discardBatch(fs, root)
+    new Batch(fs, root)
+  }
+
+  /** Discard the staging of an uncommitted [[Batch]] under `root` — a
+    * committed one rolls forward instead. Returns whether there was one
+    * to discard. Writers only (the next batch, a vacuum, a snapshot
+    * quiesce): readers leave an uncommitted batch alone. */
+  def discardBatch(fs: FileSystem, root: Path): Boolean =
+    if (fs.exists(new Path(root, Marker))) { publish(fs, root); false }
+    else fs.delete(new Path(root, Staging), true)
+
+  /** Run a committed batch's swaps, then its drops, then drop the marker
+    * and the staging. Idempotent: a swap whose staging is gone already
+    * landed, and a drop of a missing directory is a no-op. */
+  private def publish(fs: FileSystem, root: Path): Unit = {
+    val marker = new Path(root, Marker)
+    val in = fs.open(marker)
+    val entries = try new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), UTF_8).split("\n")
+      finally in.close()
+    entries.filter(_.nonEmpty).foreach {
+      case s"swap $rel" => swap(fs, new Path(new Path(root, Staging), rel), new Path(root, rel))
+      case s"drop $rel" => fs.delete(new Path(root, rel), true)
+      case e => throw new IOException(s"unknown entry '$e' in $marker")
+    }
+    fs.delete(marker, false)
+    fs.delete(new Path(root, Staging), true)
+  }
+
+  /** Rewrite the `partCol=N` directories of `root/rel`, N in `parts`, as
+    * one [[Batch]]: `transform` their live rows (`live`, the whole
+    * layout's frame, pruned to those parts — one partition-pruned read),
+    * stage the result with [[Batch.stageParts]] and commit. */
+  def rewriteParts(fs: FileSystem, root: Path, rel: String, partCol: String,
+      parts: Seq[Int], live: DataFrame)(transform: DataFrame => DataFrame): Unit =
+    if (parts.nonEmpty) {
+      val b = batch(fs, root)
+      b.stageParts(rel, partCol, parts, transform(live.filter(col(partCol).isin(parts: _*))))
+      b.commit()
+    }
+
   /** Consistent on-disk snapshot of the tree at `root`. `quiesce` runs
-    * first (the layout's recovery and marker roll-forwards — under the
+    * first (the layout's recovery, which rolls committed batches
+    * forward), then an uncommitted batch is discarded — under the
     * engine-wide single-writer assumption the tree is then immutable for
-    * the copy); the tree copies byte-faithfully into a hidden
+    * the copy; the tree copies byte-faithfully into a hidden
     * `.<name>.snapstaging` sibling of `target`, which is renamed into
     * place. `target` either doesn't exist or is a complete snapshot: a
     * crash mid-copy leaves only hidden debris that the next attempt
@@ -92,6 +249,7 @@ object LayoutFs {
   def snapshot(fs: FileSystem, root: Path, target: String,
       conf: Configuration)(quiesce: => Unit): Unit = {
     quiesce
+    discardBatch(fs, root)
     val dst = new Path(target)
     require(!fs.exists(dst), s"snapshot target $target already exists")
     val staging = new Path(dst.getParent, s".${dst.getName}.snapstaging")
@@ -114,18 +272,17 @@ object LayoutFs {
     val staging = new Path(liveP.getParent, s".${liveP.getName}.staging")
     fs.delete(staging, true)
     val rows = transform(spark.read.parquet(live))
-    partCol match {
-      case Some(c) => rows.write.partitionBy(c).parquet(staging.toString)
-      case None    => rows.write.parquet(staging.toString)
-    }
-    val hasData = fs.listStatus(staging)
-      .exists(s => !s.getPath.getName.startsWith("_"))
-    if (!hasData) partCol match {
-      case Some(c) => rows.drop(c).limit(0).coalesce(1)
-        .write.parquet(new Path(staging, s"$c=0").toString)
-      case None => rows.limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-    }
+    partCol.fold(rows.write)(c => rows.write.partitionBy(c)).parquet(staging.toString)
+    if (!fs.listStatus(staging).exists(s => !s.getPath.getName.startsWith("_")))
+      partCol match {
+        case Some(c) => emptyFile(rows.drop(c), new Path(staging, s"$c=0"))
+        case None => emptyFile(rows, staging)
+      }
     swap(fs, staging, liveP)
   }
+
+  /** A schema-carrying empty parquet file as the only content of `dir`:
+    * what a replacement directory whose every row is gone holds. */
+  private def emptyFile(rows: DataFrame, dir: Path): Unit =
+    rows.limit(0).coalesce(1).write.mode("overwrite").parquet(dir.toString)
 }

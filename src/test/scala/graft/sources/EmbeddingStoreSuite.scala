@@ -190,13 +190,16 @@ class EmbeddingStoreSuite extends AnyFunSuite {
     assert(store.count() == 4)
     assert(store.allForPost(4L).count() == 0 && store.allForPost(5L).count() == 0)
     assert(store.allForPost(1L).count() == 2, "non-matching posts untouched")
-    // plant the two kinds of crash leftovers a died mutation can leave
+    // plant the crash leftover a died mutation can leave: an uncommitted
+    // batch — a staged bucket and a half-written swap list, no marker
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/emb/.tmp_bucket_2"))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/emb/.staging"))
-    assert(store.vacuum() == 2, "both stale dirs removed")
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/emb/.commit/bucket=2"))
+    fs.create(new org.apache.hadoop.fs.Path(s"$dir/emb/.commit/_batch")).close()
+    assert(store.count() == 4, "reads leave an uncommitted batch alone")
+    assert(store.vacuum() == 1, "the stale batch removed")
     assert(store.vacuum() == 0, "idempotent")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/emb/.commit")))
     assert(store.count() == 4, "vacuum never touches live buckets")
   }
 

@@ -18,6 +18,8 @@ import org.apache.spark.sql.SparkSession
   * A plan armed with `failAt = k` throws on the k-th `rename` or
   * `delete` under its root and on every one after it — a crashed
   * process issues no further calls, so neither do `finally` cleanups.
+  * With `quietRenames` set, a failing rename returns `false` instead,
+  * the way `FileSystem.rename` reports most failures.
   * Calls whose paths lie inside Spark's committer directories
   * (`_temporary`, `.spark-staging-*`) are neither counted nor failed:
   * they belong to the output committer, not to a layout's commit
@@ -25,10 +27,8 @@ import org.apache.spark.sql.SparkSession
 class FaultyFs extends FilterFileSystem(new FaultyFs.Raw) {
   import FaultyFs._
 
-  override def rename(src: Path, dst: Path): Boolean = {
-    mutate("rename", src, dst)
-    super.rename(src, dst)
-  }
+  override def rename(src: Path, dst: Path): Boolean =
+    mutate("rename", src, dst) && super.rename(src, dst)
   override def delete(f: Path, recursive: Boolean): Boolean = {
     mutate("delete", f)
     super.delete(f, recursive)
@@ -63,6 +63,7 @@ object FaultyFs {
   /** Calls under one root directory. */
   final class Plan(val root: String) {
     @volatile var failAt: Long = 0L // 0 = never fail
+    @volatile var quietRenames = false
     @volatile var onCreate: Path => Unit = _ => ()
     val mutations = new AtomicLong
     private val counts = new ConcurrentHashMap[String, AtomicLong]
@@ -101,11 +102,14 @@ object FaultyFs {
 
   private def note(kind: String, p: Path): Unit = planOf(p).foreach(_.bump(kind))
 
-  private def mutate(kind: String, paths: Path*): Unit =
-    if (!committer(paths)) planOf(paths.head).foreach { pl =>
+  /** Count a rename or delete; false for a quietly failed rename. */
+  private def mutate(kind: String, paths: Path*): Boolean =
+    committer(paths) || planOf(paths.head).forall { pl =>
       pl.bump(kind)
       val n = pl.mutations.incrementAndGet()
-      if (pl.failAt > 0 && n >= pl.failAt)
+      val fail = pl.failAt > 0 && n >= pl.failAt
+      if (fail && !(kind == "rename" && pl.quietRenames))
         throw new IOException(s"injected failure at $kind #$n: ${paths.mkString(" -> ")}")
+      !fail
     }
 }

@@ -30,6 +30,29 @@ class IvfIndexSuite extends AnyFunSuite {
     idx
   }
 
+  private def rootOf(idx: IvfIndex) = new org.apache.hadoop.fs.Path(idx.indexPath)
+  private def fsOf(idx: IvfIndex) =
+    rootOf(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A batch that stages the index's live `rels` by moving them into its
+    * staging tree — the state a mutation that crashed after staging
+    * them leaves behind (commit it with `markCommitted`). */
+  private def stagedBatch(idx: IvfIndex, rels: String*): LayoutFs.Batch = {
+    val (root, fs) = (rootOf(idx), fsOf(idx))
+    val batch = LayoutFs.batch(fs, root)
+    rels.foreach(rel => batch.stage(rel) { staged =>
+      fs.mkdirs(staged.getParent)
+      assert(fs.rename(new org.apache.hadoop.fs.Path(root, rel), staged), s"test setup: stage $rel")
+    })
+    batch
+  }
+
+  private def hasBatch(idx: IvfIndex): (Boolean, Boolean) = {
+    val (root, fs) = (rootOf(idx), fsOf(idx))
+    (fs.exists(new org.apache.hadoop.fs.Path(root, ".commit")),
+      fs.exists(new org.apache.hadoop.fs.Path(root, ".committed")))
+  }
+
   test("stored centroids round-trip in cid order") {
     val got = freshIndex().centroids()
     assert(got.size == cents.size)
@@ -630,31 +653,27 @@ class IvfIndexSuite extends AnyFunSuite {
     val want = idx.search(query, 64, 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val wantCents = idx.centroids().map(_.toSeq)
-    val lists = s"${idx.indexPath}/lists"
-    val fs = new Path(lists).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // reconstruct the worst committed-crash state: marker present,
-    // union + renumbered dirs and the shrunken centroid set all still
-    // staged, live layout still pre-merge-shaped (old dirs present)
-    val staging = new Path(lists, ".staging_merge")
-    fs.mkdirs(staging)
-    assert(fs.rename(new Path(lists, s"ivf_list=$target"),
-      new Path(staging, s"ivf_list=$target")))
-    assert(fs.rename(new Path(lists, "ivf_list=2"),
-      new Path(staging, "ivf_list=2")))
-    assert(fs.rename(new Path(s"${idx.indexPath}/centroids"),
-      new Path(staging, "_centroids")))
-    fs.mkdirs(new Path(lists, s".merge_pending_${target}_2_3"))
+    // reconstruct the worst committed-crash state: batch committed, union
+    // + renumbered dirs and the shrunken centroid set all still staged,
+    // none of them live
+    val batch = stagedBatch(idx, s"lists/ivf_list=$target", "lists/ivf_list=2", "centroids")
+    batch.drop("lists/ivf_list=3")
+    assert(batch.markCommitted())
     val got = idx.search(query, 64, 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want, "recovery must roll the committed merge forward")
     assert(idx.centroids().map(_.toSeq) == wantCents)
-    assert(!fs.exists(new Path(lists, s".merge_pending_${target}_2_3")))
-    assert(!fs.exists(staging))
-    // an orphan staging with NO marker is discarded, index unaffected
-    fs.mkdirs(new Path(staging, "ivf_list=99"))
+    assert(hasBatch(idx) == ((false, false)))
+    // an UNCOMMITTED batch survives a search, which answers unchanged;
+    // the next mutation discards it
+    fsOf(idx).mkdirs(new Path(rootOf(idx), ".commit/lists/ivf_list=99"))
     assert(idx.search(query, 64, 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == want)
-    assert(!fs.exists(staging))
+    assert(hasBatch(idx) == ((true, false)), "a read never deletes a writer's staging")
+    idx.compact(Seq(0))
+    assert(hasBatch(idx) == ((false, false)))
+    assert(idx.search(query, 64, 3)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == want)
   }
 
   test("searchPqRefined: exact rerank of the ADC shortlist; wide refine converges to exact (X205)") {
@@ -688,29 +707,24 @@ class IvfIndexSuite extends AnyFunSuite {
     val (target, _) = idx.mergeLists(1, 2)
     val want = idx.search(query, 64, 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val lists = s"${idx.indexPath}/lists"
-    val fs = new Path(lists).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = (rootOf(idx), fsOf(idx))
     // reconstruct the committed-crash state (the mergeLists crash test's
-    // setup): marker present, union + renumbered dirs staged, live
-    // layout still pre-merge-shaped — the stale listing would name the
-    // vacated ivf_list=3 dir, and a maintain() deciding on THAT listing
+    // setup) with the live layout still pre-merge-shaped: the vacated
+    // ivf_list=3 dir is still live — deciding on THAT stale listing
     // used to die in requireDirs after the inner compact rolled the
     // merge forward under it
-    val staging = new Path(lists, ".staging_merge")
-    fs.mkdirs(staging)
-    assert(fs.rename(new Path(lists, s"ivf_list=$target"),
-      new Path(staging, s"ivf_list=$target")))
-    assert(fs.rename(new Path(lists, "ivf_list=2"),
-      new Path(staging, "ivf_list=2")))
-    assert(fs.rename(new Path(s"${idx.indexPath}/centroids"),
-      new Path(staging, "_centroids")))
-    fs.mkdirs(new Path(lists, s".merge_pending_${target}_2_3"))
+    val batch = stagedBatch(idx, s"lists/ivf_list=$target", "lists/ivf_list=2", "centroids")
+    batch.drop("lists/ivf_list=3")
+    assert(batch.markCommitted())
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(root, ".commit/lists/ivf_list=2"),
+      fs, new Path(root, "lists/ivf_list=3"), false, spark.sparkContext.hadoopConfiguration)
     // threshold 1 forces compacts on any multi-file list — the decision
     // pass must run on the RECOVERED listing and complete cleanly
     val report = idx.maintain(maxFilesPerList = 1)
     assert(report.columns.toSeq ==
       Seq("action", "target", "metric", "threshold", "acted"))
-    assert(!fs.exists(new Path(lists, s".merge_pending_${target}_2_3")))
+    assert(hasBatch(idx) == ((false, false)))
+    assert(!fs.exists(new Path(root, "lists/ivf_list=3")))
     val got = idx.search(query, 64, 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want, "maintain must leave the rolled-forward merge intact")
@@ -720,26 +734,21 @@ class IvfIndexSuite extends AnyFunSuite {
     import org.apache.hadoop.fs.Path
     val idx = freshIndex() // NO PQ layout at merge time
     val (target, _) = idx.mergeLists(1, 2)
-    val lists = s"${idx.indexPath}/lists"
-    val fs = new Path(lists).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // committed-crash state again, but with no _codes half staged (the
-    // merge predates any compressed layout)...
-    val staging = new Path(lists, ".staging_merge")
-    fs.mkdirs(staging)
-    assert(fs.rename(new Path(lists, s"ivf_list=$target"),
-      new Path(staging, s"ivf_list=$target")))
-    assert(fs.rename(new Path(lists, "ivf_list=2"),
-      new Path(staging, "ivf_list=2")))
-    fs.mkdirs(new Path(lists, s".merge_pending_${target}_2_3"))
+    val (root, fs) = (rootOf(idx), fsOf(idx))
+    // committed-crash state again, but with no codes half staged (the
+    // merge predates any compressed layout), so no codes drop either...
+    val batch = stagedBatch(idx, s"lists/ivf_list=$target", "lists/ivf_list=2")
+    batch.drop("lists/ivf_list=3")
+    assert(batch.markCommitted())
     // ...and a codes/ivf_list=3 that came into existence IN the crash
-    // window (a buildPq between marker commit and roll-forward) — the
+    // window (a buildPq between commit and roll-forward) — the
     // roll-forward must not delete data it never renumbered
-    val orphanCodes = new Path(s"${idx.indexPath}/codes/ivf_list=3")
+    val orphanCodes = new Path(root, "codes/ivf_list=3")
     fs.mkdirs(orphanCodes)
     val sentinel = new Path(orphanCodes, "part-sentinel.parquet")
     fs.create(sentinel).close()
-    idx.search(query, 64, 3).collect() // triggers recoverMerge
-    assert(!fs.exists(new Path(lists, s".merge_pending_${target}_2_3")))
+    idx.search(query, 64, 3).collect() // rolls the batch forward
+    assert(hasBatch(idx) == ((false, false)))
     assert(fs.exists(sentinel),
       "an unstaged codes list must survive merge roll-forward")
   }
@@ -750,26 +759,23 @@ class IvfIndexSuite extends AnyFunSuite {
     val Some((newId, nMoved)) = idx.splitList(0)
     val want = idx.search(query, 64, idx.centroids().size)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // reconstruct the between-renames crash: new list staged but not live,
-    // marker present — exactly the state after step 3's marker write
-    val lists = s"${idx.indexPath}/lists"
-    val fs = new Path(lists).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(lists, s"ivf_list=$newId")
-    val staged = new Path(s"$lists/.staging_split", s"ivf_list=$newId")
-    fs.mkdirs(new Path(s"$lists/.staging_split"))
-    assert(fs.rename(live, staged), "test setup: stage the live new list")
-    fs.mkdirs(new Path(lists, s".split_pending_0_$newId"))
+    // reconstruct the crash right after the commit point: the new list
+    // staged but not live, the batch committed
+    assert(stagedBatch(idx, s"lists/ivf_list=$newId").markCommitted())
     // the next read entry point must complete the split, not lose rows
     val got = idx.search(query, 64, idx.centroids().size)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want, "recovery must roll the committed split forward")
-    assert(!fs.exists(new Path(lists, s".split_pending_0_$newId")))
-    // an orphan staging with NO marker is discarded, index unaffected
-    fs.mkdirs(new Path(s"$lists/.staging_split/ivf_list=99"))
+    assert(hasBatch(idx) == ((false, false)))
+    // an UNCOMMITTED batch survives a search, which answers unchanged;
+    // the next mutation discards it
+    fsOf(idx).mkdirs(new Path(rootOf(idx), ".commit/lists/ivf_list=99"))
     val again = idx.search(query, 64, idx.centroids().size)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(again == want)
-    assert(!fs.exists(new Path(s"$lists/.staging_split")))
+    assert(hasBatch(idx) == ((true, false)), "a read never deletes a writer's staging")
+    idx.delete(Seq(want.head._1).toDF("id"))
+    assert(hasBatch(idx) == ((false, false)))
   }
 
   test("searchPqWhere: pre-filter inside the ADC probe — parity with brute ADC over (probed ∩ filter) (X294)") {
@@ -843,25 +849,27 @@ class IvfIndexSuite extends AnyFunSuite {
   test("snapshot quiesces first: a marker-committed merge rolls forward, copy opens clean") {
     import org.apache.hadoop.fs.Path
     val idx = freshIndex()
-    val lists = s"${idx.indexPath}/lists"
-    val fs = new Path(lists)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val want = idx.search(query, 64, idx.centroids().size)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // stage a merge to its commit marker, crash before the swap-in:
-    // snapshot must roll it forward BEFORE copying, so the copy holds a
-    // resolved layout, not a marker the reader would have to honor
-    idx.mergeLists(0, 1)
-    // fabricate debris only: an orphan staging dir with no marker — the
-    // discard path — then snapshot and verify the copy has no staging
-    fs.mkdirs(new Path(s"$lists/.staging_merge/ivf_list=0"))
+    def answers(i: IvfIndex) = i.search(query, 64, i.centroids().size)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // a merge crashed right after its commit point: snapshot must roll it
+    // forward BEFORE copying, so the copy holds a resolved layout, not a
+    // batch the reader would have to honor
+    val (target, _) = idx.mergeLists(0, 1)
+    val batch = stagedBatch(idx, s"lists/ivf_list=$target", "lists/ivf_list=1", "centroids")
+    batch.drop("lists/ivf_list=3")
+    assert(batch.markCommitted())
     idx.snapshot(s"${idx.indexPath}_snap")
     val snap = new IvfIndex(spark, s"${idx.indexPath}_snap")
-    assert(snap.search(query, 64, snap.centroids().size)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq === want,
-      "post-merge snapshot must answer like the source")
-    assert(!new java.io.File(
-      s"${idx.indexPath}_snap/lists/.staging_merge").exists(),
-      "quiesce must resolve staging before the copy")
+    assert(answers(snap) === want, "post-merge snapshot must answer like the source")
+    assert(hasBatch(snap) == ((false, false)), "quiesce must resolve the batch before the copy")
+    // an uncommitted batch is debris: the quiesce discards it, so the
+    // copy never ships it
+    fsOf(idx).mkdirs(new Path(rootOf(idx), ".commit/lists/ivf_list=0"))
+    idx.snapshot(s"${idx.indexPath}_snap2")
+    val snap2 = new IvfIndex(spark, s"${idx.indexPath}_snap2")
+    assert(answers(snap2) === want)
+    assert(hasBatch(snap2) == ((false, false)) && hasBatch(idx) == ((false, false)))
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.io.IOException
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.Executors
 
@@ -27,14 +28,20 @@ import graft.operators.GraphAnn
   * and the next call must recover and succeed: a state that is not yet
   * the new one is driven there by re-running the mutation.
   *
-  * Commit units: marker- and pointer-committed mutations (IVF
-  * merge/split, inverted-index append, n-gram versions, graph append)
-  * and single-directory swaps commit the whole layout at once. Bucket
-  * rewrites (embedding-store upsert/delete, IVF list deletes and
-  * compactions) commit one directory at a time — a crash between two
-  * bucket swaps leaves some buckets new and the rest old, each whole —
-  * so their rows are compared bucket by bucket. Snapshots either exist
-  * complete or not at all. */
+  * Commit units: every mutation commits the whole layout at once —
+  * multi-directory rewrites (embedding-store upsert/delete, IVF list
+  * deletes, compactions, merges and splits, graph append) as one
+  * [[LayoutFs.Batch]], the inverted-index append and n-gram versions by
+  * their own markers and pointers, single-directory rewrites by one
+  * swap — so a row compares the whole layout's rows, old or new (the IVF
+  * compactions, which change no rows, compare part-file counts too). A
+  * separately published piece (a store's prefix-dims meta, an inverted
+  * index's derived meta) is its own unit. Snapshots either exist
+  * complete or not at all.
+  *
+  * A row run with `quietRenames` fails each rename by returning `false`
+  * rather than throwing, and checks that the mutation turns that into an
+  * `IOException`. */
 class LayoutCrashMatrixSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -87,7 +94,7 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
     * given `faulty:` path, `mutate` applies the operation to a layout at
     * a path, `observe` reads a layout at a path through fresh handles. */
   private def sweep(build: String => Unit, mutate: String => Unit,
-      observe: String => State): Int = {
+      observe: String => State, quietRenames: Boolean = false): Int = {
     nCase += 1
     val tmpl = s"$base/c$nCase"
     build(FaultyFs.uri(s"$tmpl/L"))
@@ -96,8 +103,10 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
       copyTree(tmpl, root)
       val plan = FaultyFs.plan(root)
       plan.failAt = k
+      plan.quietRenames = quietRenames
       val res = Try(mutate(FaultyFs.uri(s"$root/L")))
       plan.failAt = 0L
+      plan.quietRenames = false
       val calls = plan.mutations.get
       (observe(FaultyFs.uri(s"$root/L")), res, calls, root)
     }
@@ -109,6 +118,8 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
     def crashAt(k: Long): Unit = {
       val (got, res, _, root) = run(k)
       assert(res.isFailure, s"call #$k of $n must fail")
+      assert(!quietRenames || res.failed.get.isInstanceOf[IOException],
+        s"a failed call #$k of $n must surface as an IOException, got ${res.failed.get}")
       for (key <- old.keySet ++ fresh.keySet ++ got.keySet) {
         val g = got.getOrElse(key, Set.empty)
         assert(g == old.getOrElse(key, Set.empty) || g == fresh.getOrElse(key, Set.empty),
@@ -171,7 +182,7 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
   }
   private def observeStoreMeta(p: String): State = {
     val derived = store(p).withDerived(storeRaw)
-    observeStore(p) + ("meta" ->
+    whole(observeStore(p)) + ("meta" ->
       (if (derived.columns.contains("vector_prefix")) fingerprint(derived.select("vector_prefix"))
        else Set("no prefixDims")))
   }
@@ -192,6 +203,17 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
       .map { case (k, v) => s"codes/$k" -> v }
     lists ++ codes + ("centroids" -> idx.centroids().map(_.mkString(",")).zipWithIndex
       .map { case (c, i) => s"$i:$c" }.toSet)
+  }
+
+  // part-file counts per list directory (after observeIvf recovered):
+  // a compaction changes no rows, only these
+  private def ivfFiles(p: String): State = {
+    val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Map("files" -> Seq("lists", "codes").flatMap { d =>
+      fs.listStatus(new Path(p, d)).filter(_.getPath.getName.startsWith("ivf_list="))
+        .map(s => s"$d/${s.getPath.getName}:" +
+          fs.listStatus(s.getPath).count(_.getPath.getName.startsWith("part-")))
+    }.toSet)
   }
 
   private val docsA = Seq((1L, "merge sort beats bubble sort"), (2L, "sort merge join strategy"),
@@ -271,33 +293,36 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
 
   row("EmbeddingStore.upsert")(sweep(buildStore, p => store(p).upsert(
     vecs.take(5).map { case (i, v) => (if (i == 5) 99L else (i + 1) / 2, (i % 2).toInt,
-      v.map(_ * 2f)) }.toDF("post_id", "sequence_no", "vector")), observeStore))
+      v.map(_ * 2f)) }.toDF("post_id", "sequence_no", "vector")), p => whole(observeStore(p))))
   row("EmbeddingStore.deleteMany")(sweep(buildStore,
-    p => store(p).deleteMany(Seq(1L, 6L, 11L, 17L)), observeStore))
+    p => store(p).deleteMany(Seq(1L, 6L, 11L, 17L)), p => whole(observeStore(p))))
   row("EmbeddingStore.deleteWhere")(sweep(buildStore,
-    p => store(p).deleteWhere(col("post_id") > 9), observeStore))
+    p => store(p).deleteWhere(col("post_id") > 9), p => whole(observeStore(p))))
   row("EmbeddingStore.deleteMany (publishes the prefixDims meta)")(sweep(buildPrefixedStore,
     p => new EmbeddingStore(spark, p, numBuckets = 4, prefixDims = Some(2))
       .deleteMany(Seq(1L, 6L)), observeStoreMeta))
 
   private val ivfIds = Seq(2L, 9L, 14L, 21L).toDF("id")
-  row("IvfIndex.delete")(sweep(buildIvf, p => ivf(p).delete(ivfIds), observeIvf))
-  row("IvfIndex.deletePq")(sweep(buildIvf, p => ivf(p).deletePq(ivfIds), observeIvf))
-  row("IvfIndex.compact")(sweep(buildIvf, p => ivf(p).compact(Seq(0, 1, 2)), observeIvf))
-  row("IvfIndex.compactPq")(sweep(buildIvf, p => ivf(p).compactPq(Seq(0, 1, 2)), observeIvf))
+  row("IvfIndex.delete")(sweep(buildIvf, p => ivf(p).delete(ivfIds), p => whole(observeIvf(p))))
+  row("IvfIndex.deletePq")(sweep(buildIvf, p => ivf(p).deletePq(ivfIds), p => whole(observeIvf(p))))
+  row("IvfIndex.compact")(sweep(buildIvf, p => ivf(p).compact(Seq(0, 1, 2)),
+    p => whole(observeIvf(p) ++ ivfFiles(p))))
+  row("IvfIndex.compactPq")(sweep(buildIvf, p => ivf(p).compactPq(Seq(0, 1, 2)),
+    p => whole(observeIvf(p) ++ ivfFiles(p))))
   row("IvfIndex.mergeLists (centroid rewrite)")(sweep(buildIvf,
     p => ivf(p).mergeLists(0, 1), p => whole(observeIvf(p))))
   row("IvfIndex.splitList (centroid rewrite)")(sweep(buildIvf,
     p => assert(ivf(p).splitList(0).nonEmpty), p => whole(observeIvf(p))))
 
-  row("InvertedIndex.vacuum")(sweep(buildInv, p => inv(p).vacuum(), p => whole(observeInv(p))))
+  row("InvertedIndex.vacuum")(sweep(buildInv, p => inv(p).vacuum(), p => whole(observeInv(p)),
+    quietRenames = true))
   row("InvertedIndex.compact")(sweep(buildInv, p => inv(p).compact(), p => whole(observeInv(p))))
   row("InvertedIndex.maintainDerived (block-max meta adopt)")(sweep(buildInvBlockMax,
     p => assert(inv(p).maintainDerivedVerbose().filter(col("mode") === "adopt").count() == 1),
     observeInvMeta))
   row("InvertedIndex.append")(sweep(buildInv, p => inv(p).append(
     Seq((8L, "fresh merge words"), (9L, "sort again")).toDF("doc_id", "text"),
-    "doc_id", col("text")), p => whole(observeInv(p))))
+    "doc_id", col("text")), p => whole(observeInv(p)), quietRenames = true))
 
   row("QueryStore.vacuum")(sweep(buildQs, p => qs(p).vacuum(), p => whole(observeQs(p))))
   row("QueryStore.compact")(sweep(buildQs, p => qs(p).compact(), p => whole(observeQs(p))))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.io.IOException
 import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
@@ -14,11 +15,15 @@ import graft.TestSpark
   * [[PreLayoutFsFixture.main]] at that commit) open and answer the same:
   * an embedding store and an IVF index, a snapshot of each, and a copy
   * of each left mid-swap (a live directory renamed to its hidden
-  * `.bak`) that the first read must restore. */
+  * `.bak`) that the first read must restore. Roots left mid-mutation by
+  * the per-layout commit markers that [[LayoutFs.Batch]] replaced (IVF
+  * split and merge, graph append) refuse to open with an `IOException`
+  * naming the marker, for readers and writers alike. */
 class PreLayoutFsCompatSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  import spark.implicits._
 
-  test("layouts and snapshots written before LayoutFs open and answer the same") {
+  private def fixtureCopy(): JPath = {
     val src = Paths.get(getClass.getResource("/pre_layoutfs").toURI)
     val dir = Files.createTempDirectory("graft_pre_layoutfs")
     val w = Files.walk(src)
@@ -27,6 +32,16 @@ class PreLayoutFsCompatSuite extends AnyFunSuite {
       if (Files.isDirectory(p)) Files.createDirectories(d)
       else Files.copy(p, d, StandardCopyOption.COPY_ATTRIBUTES)
     } finally w.close()
+    dir
+  }
+
+  private def refused(marker: String)(body: => Any): Unit = {
+    val e = intercept[IOException](body)
+    assert(e.getMessage.contains(marker), s"the failure must name $marker: ${e.getMessage}")
+  }
+
+  test("layouts and snapshots written before LayoutFs open and answer the same") {
+    val dir = fixtureCopy()
     val want = new String(Files.readAllBytes(dir.resolve("answers.txt")), "UTF-8")
     for (layout <- Seq("", "_snap", "_crashed")) {
       val got = PreLayoutFsFixture.answers(spark,
@@ -36,6 +51,40 @@ class PreLayoutFsCompatSuite extends AnyFunSuite {
     assert(!Files.exists(dir.resolve("store_crashed/.bucket=1.bak")) &&
       !Files.exists(dir.resolve("ivf_crashed/lists/.ivf_list=0.bak")),
       "the read must restore the crashed swaps' backups")
+  }
+
+  /** The IVF fixture with a legacy marker (and its staging) planted under
+    * `lists`: a search and a delete must both refuse it. */
+  private def legacyIvf(marker: String, staging: String): Unit = {
+    val dir = fixtureCopy()
+    val lists = dir.resolve("ivf/lists")
+    Files.createDirectories(lists.resolve(s"$staging/ivf_list=1"))
+    Files.createDirectories(lists.resolve(marker))
+    val idx = new IvfIndex(spark, dir.resolve("ivf").toString, assignBuckets = 4)
+    refused(marker)(idx.search(Array(0.5f, -0.25f, 0.1f, 0.9f), k = 5, nprobe = 3).collect())
+    refused(marker)(idx.delete(Seq(1L).toDF("id")))
+  }
+
+  test("an IVF root left mid-split by the split marker refuses to open, naming it") {
+    legacyIvf(".split_pending_0_3", ".staging_split")
+  }
+
+  test("an IVF root left mid-merge by the merge marker refuses to open, naming it") {
+    legacyIvf(".merge_pending_0_1_2", ".staging_merge")
+  }
+
+  test("a graph root left mid-append by the committed batch marker refuses to open, naming it") {
+    val dir = Files.createTempDirectory("graft_pre_layoutfs_graph")
+    val g = new GraphIndex(spark, dir.resolve("g").toString, buckets = 2)
+    g.build(Seq((1L, 2L, 0.5), (2L, 1L, 0.5), (2L, 3L, 0.25), (3L, 2L, 0.25))
+      .toDF("src", "dst", "cosine"))
+    val want = g.edges().collect().toSet
+    // an uncommitted batch is hidden debris: reads ignore it
+    val batch = dir.resolve("g/edges/.tmp_gbucket_batch")
+    Files.createDirectories(batch.resolve("gbucket=0"))
+    assert(g.edges().collect().toSet == want)
+    Files.createDirectories(batch.resolve("_committed"))
+    refused(".tmp_gbucket_batch/_committed")(g.edges().collect())
   }
 }
 
