@@ -1883,7 +1883,7 @@ object SparkEntry {
       // X190 census lifecycle (the q220 pattern on the stats side):
       // build on half the corpus, append the other half (additive
       // census rows), tombstone a seventh (read-side subtraction),
-      // vacuum (the crash-consistent pending_delta swap), compact
+      // vacuum (postings, doclens and census in one batch), compact
       // (merge-sum) — then serve fuzzy suggestions from the census.
       // The oracle recounts the SURVIVING corpus's vocabulary, so a
       // census drift anywhere in the walk breaks the hash; the serve

@@ -202,20 +202,22 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * buckets only. */
   def upsert(updates: DataFrame): Unit = {
     val prepared = withDerived(updates)
-    val existing = read().select(col("post_id"), col("sequence_no"),
-      col("id").as("__old_id"), col("created_at").as("__old_created_at"))
     val maxId = Option(read().agg(max(col("id"))).first().get(0)).fold(0L)(_.asInstanceOf[Long])
-    val joined = prepared.join(existing, Seq("post_id", "sequence_no"), "left")
-    val kept = joined.filter(col("__old_id").isNotNull)
-      .withColumn("id", col("__old_id"))
-      // an UPDATE keeps the row's original creation time (only updated_at
-      // moves — the reference's timestamp semantics, VectorTable.php:478-479)
-      .withColumn("created_at", coalesce(col("__old_created_at"), col("created_at")))
-      .drop("__old_id", "__old_created_at")
-    val fresh = assignIds(
-      joined.filter(col("__old_id").isNull).drop("__old_id", "__old_created_at"), maxId + 1)
     val newKeys = updates.select(col("post_id").as("__np"), col("sequence_no").as("__ns")).distinct()
     rewrite(bucketSet(updates.select(bucketOf(col("post_id"))))) { cur =>
+      // every existing row of an updated key lives in a touched bucket,
+      // so the key join reads the rewrite's own pruned buckets only
+      val existing = cur.select(col("post_id"), col("sequence_no"),
+        col("id").as("__old_id"), col("created_at").as("__old_created_at"))
+      val joined = prepared.join(existing, Seq("post_id", "sequence_no"), "left")
+      val kept = joined.filter(col("__old_id").isNotNull)
+        .withColumn("id", col("__old_id"))
+        // an UPDATE keeps the row's original creation time (only updated_at
+        // moves — the reference's timestamp semantics, VectorTable.php:478-479)
+        .withColumn("created_at", coalesce(col("__old_created_at"), col("created_at")))
+        .drop("__old_id", "__old_created_at")
+      val fresh = assignIds(
+        joined.filter(col("__old_id").isNull).drop("__old_id", "__old_created_at"), maxId + 1)
       cur.join(broadcast(newKeys),
           cur("post_id") === col("__np") && cur("sequence_no") === col("__ns"), "left_anti")
         .unionByName(withBucket(kept.unionByName(fresh)).select(cur.columns.map(col).toSeq: _*))

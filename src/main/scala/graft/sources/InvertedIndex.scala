@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.io.IOException
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,11 +39,8 @@ import graft.operators.TextAnalysis
   * bit-identical to an index rebuilt without the deleted docs
   * (suite-pinned; q217 gates it against q214's oracle + a WHERE).
   * [[vacuum]] amortizes the physical removal: one anti-join rewrite of
-  * postings and doclens staged next to the live dirs, swapped in by the
-  * engine's two-rename crash contract (`.bak` visible ⇒ [[recover]]
-  * rolls back or completes), tombstones cleared LAST — a crash anywhere
-  * leaves reads correct, because an anti-join against already-removed
-  * ids is a no-op.
+  * postings, doclens and the census, committed with the tombstone drop
+  * as one batch.
   *
   * The serving surface on top of the layout: [[termPostings]] (pruned
   * slices feeding phrase/proximity), [[bm25]] (+ msm), [[qlTopK]]
@@ -61,13 +56,16 @@ import graft.operators.TextAnalysis
   * appended doc_ids are disjoint from stored ones — the append
   * contract), [[vacuum]] subtracts the removed docs' contributions, and
   * [[vocab]] serves from the sidecar without touching the postings
-  * layout at all when no tombstones are pending (plan-audited). The
-  * vacuum-time adjustment is crash-consistent through a
-  * `census/pending_delta` table: the tombstoned docs' per-term df is
-  * published BEFORE any data rewrite, read-side adjustment prefers the
-  * stored delta over a live recomputation, and the final census swap
-  * removes base and delta in ONE directory rename — every crash window
-  * leaves [[vocab]] exact (see [[vacuum]]). */
+  * layout at all when no tombstones are pending (plan-audited).
+  *
+  * Every mutation that touches more than one file commits through ONE
+  * [[LayoutFs.Batch]] on the index root: [[append]] and [[mergeFrom]]
+  * stage their files and list moves into the live directories, the
+  * derived-delta apply lists moves out of the pending delta dirs,
+  * [[vacuum]] and [[compact]] stage replacement postings, doclens and
+  * census. A crash leaves the old layout or the new one whole, so no
+  * read ever sees postings and census out of step; readers roll a
+  * committed batch forward and never delete an uncommitted one. */
 final class InvertedIndex(spark: SparkSession, path: String,
     buckets: Int = 16) {
   require(buckets >= 1, s"buckets must be >= 1, got $buckets")
@@ -117,7 +115,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
 
   /** Write a (term, df) census frame as the `tprefix=N`-partitioned
     * base layout — the single write shape every census producer
-    * ([[build]], [[append]] staging, [[swapCensus]], [[prunedCopy]])
+    * ([[build]], [[append]] staging, [[stageCensus]], [[prunedCopy]])
     * shares. `onePerPrefix` pre-shuffles one task per partition value
     * (the [[compact]] merge target: one file per tprefix dir). */
   private[graft] def writeCensusBase(census: DataFrame, dir: String,
@@ -140,37 +138,21 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def tombstonesPath = s"$path/tombstones"
   private def censusPath = s"$path/census"
   private def censusBasePath = s"$censusPath/base"
-  private def censusDeltaPath = s"$censusPath/pending_delta"
-  private def appendStagingPath = new Path(path, ".append_staging")
-  private def appendMarkerPath = new Path(path, ".append_pending")
+  private def root = new Path(path)
 
-  /** Roll a crashed mutation forward or back: a visible `.<dir>.bak`
-    * with the live dir missing means the crash hit between the two
-    * renames — restore the backup; with the live dir present the swap
-    * completed — drop the stale backup. An `.append_pending` marker
-    * means a staged [[append]] batch was fully written but not yet
-    * committed — roll it FORWARD (every file move is state-checked, so
-    * this is idempotent from any crash point at or after the marker);
-    * staging without the marker is an uncommitted crash — discard it,
-    * the live layout was never touched. Run at every entry point that
-    * touches postings, doclens or the census (the [[IvfIndex]]
-    * recover rule). */
-  private def recover(): Unit = {
-    LayoutFs.recover(fs,
-      Seq(postingsPath, doclensPath, censusPath).map(new Path(_)): _*)
-    if (fs.exists(appendMarkerPath)) commitAppend()
-    else fs.delete(appendStagingPath, true)
-    // a crashed delta-apply left its marker: roll it forward (idempotent
-    // file moves ending in the meta refresh) so no read sees the
-    // half-applied artifact past this entry
-    Seq("forward", "fielded").foreach { name =>
-      if (fs.exists(applyMarkerPath(name))) completeDeltaApply(name)
-    }
-    // a crash mid-write of the vacuum delta (before its publish rename)
-    // or mid-write of a census swap leaves only these orphans — the
-    // live layout never saw either
-    fs.delete(new Path(censusPath, ".pending_delta.staging"), true)
-    fs.delete(new Path(path, ".census.staging"), true)
+  /** Roll a committed [[LayoutFs.Batch]] forward and resolve a crashed
+    * two-rename swap of a top-level directory, from one glob of the root
+    * ([[LayoutFs.recoverUnder]]). An uncommitted batch is left alone:
+    * the next mutation discards it. Run at every entry point that
+    * touches the layout (the [[IvfIndex]] recover rule). */
+  private def recover(): Unit = LayoutFs.recoverUnder(fs, root, "*")
+
+  /** [[recover]] for the entry points that read or rewrite the census:
+    * a census delta left by an earlier version's crashed vacuum fails
+    * them ([[LayoutFs.refuseCensusDelta]]). */
+  private def recoverCensus(): Unit = {
+    recover()
+    LayoutFs.refuseCensusDelta(fs, new Path(censusPath))
   }
 
   /** Tokenize and write the partitioned postings layout plus the
@@ -219,31 +201,20 @@ final class InvertedIndex(spark: SparkSession, path: String,
 
   /** One-time layout migration: a census base written before the
     * `tprefix=` partitioning (X226) holds its data files FLAT at the
-    * base root. [[commitAppend]] moves only `tprefix=` subdirectories,
-    * so appending onto a flat base would commit a mixed flat+partitioned
-    * directory that Spark's partition discovery rejects — detect the old
-    * layout at the mutation entry points and rewrite it once through the
-    * partitioned writer (same rows, two-rename swapped), after which
-    * every append is directory-additive again. No-op on current layouts
-    * (one listStatus). */
+    * base root. Appending `tprefix=` subdirectories onto a flat base
+    * would commit a mixed flat+partitioned directory that Spark's
+    * partition discovery rejects — detect the old layout at the
+    * mutation entry points and rewrite it once through the partitioned
+    * writer (same rows, one batch), after which every append is
+    * directory-additive again. No-op on current layouts (one
+    * listStatus). */
   private def migrateFlatCensusBase(): Unit = {
     val baseP = new Path(censusBasePath)
-    if (!fs.exists(baseP)) return
-    val flat = fs.listStatus(baseP).exists(s =>
-      s.isFile && !s.getPath.getName.startsWith("_"))
-    if (flat) {
-      // swapCensus replaces the WHOLE census dir — a pending vacuum
-      // delta would vanish with it, silently un-masking tombstoned
-      // docs' df. That state can't arise from this engine (deltas
-      // postdate the partitioned layout), so fail fast rather than
-      // guess.
-      require(!fs.exists(new Path(censusDeltaPath)),
-        s"flat census base at $censusBasePath with a pending vacuum " +
-          "delta — finish the vacuum (any read runs recover) or rebuild " +
-          "the census before appending")
-      swapCensus(spark.read.parquet(censusBasePath)
-        .groupBy(col("term")).agg(sum(col("df")).cast(LongType).as("df")),
-        onePerPrefix = true)
+    if (fs.exists(baseP) && fs.listStatus(baseP).exists(s =>
+        s.isFile && !s.getPath.getName.startsWith("_"))) {
+      val batch = LayoutFs.batch(fs, root)
+      stageCensus(batch, censusSummed(), onePerPrefix = true)
+      batch.commit()
     }
   }
 
@@ -257,19 +228,20 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * the census additive: a batch's per-term distinct-doc counts sum
     * exactly with the stored ones.
     *
-    * The batch is ATOMIC under crashes: all three tables stage under a
-    * hidden sibling, a marker commits the batch, and the staged files
-    * then move into the live directories (postings first, doclens last,
-    * so the replay-guard surface [[appendedIds]] recognizes a doc only
-    * once its postings are all live). [[recover]] rolls a marked batch
-    * forward and discards an unmarked one, so every read — including a
-    * streaming replay guard ([[graft.streaming.IndexIngest]]) — sees
-    * the batch fully applied or not at all, never a torn half. */
+    * The batch is ATOMIC under crashes: postings, census, the derived
+    * sidecars' deltas and doclens stage in one [[LayoutFs.Batch]] whose
+    * moves publish them in that order (doclens LAST, so the replay-guard
+    * surface [[appendedIds]] recognizes a doc only once its postings are
+    * all live). Every read rolls a committed batch forward, so every
+    * read — including a streaming replay guard
+    * ([[graft.streaming.IndexIngest]]) — sees the batch fully applied
+    * or not at all, never a torn half. */
   def append(docs: DataFrame, idCol: String, text: Column): Unit = {
     invalidateLiveCount()
-    recover()
+    recoverCensus()
     migrateFlatCensusBase()
     val b = readBuckets()
+    val batch = LayoutFs.batch(fs, root)
     val postings = TextAnalysis.positionalPostings(docs, idCol, text)
       .localCheckpoint(true)
     // the batch's (doc, dl) and (doc, term, tf) aggregates feed up to
@@ -291,8 +263,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       postings.groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).as("tf")),
       (if (hasBm) 1 else 0) + (if (hasFwd) 1 else 0))
-    fs.delete(appendStagingPath, true)
-    postings
+    batch.add("postings")(dir => postings
       .withColumn("tbucket", bucketCol(col("term"), b))
       // repartition by tbucket (the mergeFrom/compact discipline) so
       // each staged bucket is ONE task's file: without it, a (term,
@@ -302,42 +273,39 @@ final class InvertedIndex(spark: SparkSession, path: String,
       // per-file tf IS the doc's exact tf (X228's skip could then drop
       // a true top-k doc). Structural beats incidental.
       .repartition(col("tbucket"))
-      .write.partitionBy("tbucket")
-      .parquet(new Path(appendStagingPath, "postings").toString)
-    dl.write.parquet(new Path(appendStagingPath, "doclens").toString)
+      .write.partitionBy("tbucket").parquet(dir.toString))
     if (fs.exists(new Path(censusBasePath)))
-      writeCensusBase(postings.groupBy(col("term"))
-        .agg(count_distinct(col("doc_id")).as("df")),
-        new Path(appendStagingPath, "census").toString)
+      batch.add("census/base")(dir => writeCensusBase(postings.groupBy(col("term"))
+        .agg(count_distinct(col("doc_id")).as("df")), dir.toString))
     // block-max maintenance: the batch's bound rows land BEFORE the
     // batch commits — a crash between the two leaves the sidecar
     // covering docs that never became visible (bounds loose, safe);
     // the reverse order could leave a live doc whose tf exceeds every
     // stored bound (unsound skip). Max/min-merge at read time absorbs
     // the accreted files.
-    if (fs.exists(new Path(blockmaxPath))) {
+    if (hasBm) {
       tfDocTerm.join(dl, Seq("doc_id"))
         .groupBy(col("term"))
         .agg(max(col("tf")).cast(LongType).as("max_tf"),
           min(col("dl")).cast(LongType).as("min_dl"))
         .write.mode("append").parquet(blockmaxPath)
     }
-    stageFileBlockMax(dl)
-    stageDerivedDeltas(postings, tfDocTerm, b)
+    stageFileBlockMax(batch, dl)
+    stageDerivedDeltas(batch, postings, tfDocTerm, b)
+    batch.add("doclens")(dir => dl.write.parquet(dir.toString))
     graft.util.Pins.release(postings)
     graft.util.Pins.release(dl)
     graft.util.Pins.release(tfDocTerm)
-    fs.mkdirs(appendMarkerPath)
-    commitAppend()
+    batch.commit()
   }
 
   /** Merge ANOTHER index's corpus into this one (X238 — the Lucene
     * segment-merge shape at layout grain): adopt the other layout's
     * postings, doclens and census rows directory-additively through
-    * the SAME staging + marker protocol as [[append]], so the merge is
-    * atomic under crashes and batch- (i.e. source-) proportional —
-    * never a rewrite of this index. The source is read, not mutated
-    * (the non-destructive merge); its rows land as fresh files.
+    * the SAME one-batch commit as [[append]], so the merge is atomic
+    * under crashes and batch- (i.e. source-) proportional — never a
+    * rewrite of this index. The source is read, not mutated (the
+    * non-destructive merge); its rows land as fresh files.
     *
     * Contracts: equal bucket counts (tbucket values carry over
     * verbatim — a re-bucketing merge is a rebuild, not a merge); doc
@@ -346,14 +314,14 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * pending tombstones (run its vacuum first — adopting rows its
     * reads were masking would resurrect its deletes). THIS index's
     * tombstones stay in force unchanged. Block-max term-grain bounds
-    * for the adopted rows land BEFORE the commit marker (the
+    * for the adopted rows land BEFORE the batch commits (the
     * [[append]] ordering — a crash between leaves bounds loose,
     * safe); derived sidecars (forward/fielded/file-grain block-max)
     * go stale exactly as after an append — [[maintainDerived]]'s
     * policy covers the rebuild. */
   def mergeFrom(other: InvertedIndex): Unit = {
     invalidateLiveCount()
-    recover()
+    recoverCensus()
     other.recover()
     migrateFlatCensusBase()
     val b = readBuckets()
@@ -362,7 +330,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         "a re-bucketing merge is a rebuild")
     require(!other.fs.exists(new Path(other.tombstonesPath)),
       s"source ${other.indexPath} has pending tombstones — vacuum it first")
-    fs.delete(appendStagingPath, true)
+    val batch = LayoutFs.batch(fs, root)
     val srcPostings = spark.read.parquet(other.postingsPath)
     // repartition by tbucket (the compact() discipline) so each staged
     // bucket is ONE task's file: a plain read→write can split a
@@ -371,15 +339,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
     // same bucket dir — which would break buildBlockMax's file-grain
     // invariant that per-file tf IS the doc's exact tf (X228's file
     // skip would then undercount ceilings and could drop a top-k doc)
-    srcPostings
+    batch.add("postings")(dir => srcPostings
       .repartition(col("tbucket"))
-      .write.partitionBy("tbucket")
-      .parquet(new Path(appendStagingPath, "postings").toString)
+      .write.partitionBy("tbucket").parquet(dir.toString))
     val srcDoclens = spark.read.parquet(other.doclensPath)
-    srcDoclens.write.parquet(new Path(appendStagingPath, "doclens").toString)
     if (fs.exists(new Path(censusBasePath)))
-      writeCensusBase(other.vocab(),
-        new Path(appendStagingPath, "census").toString)
+      batch.add("census/base")(dir => writeCensusBase(other.vocab(), dir.toString))
     // shared (doc, term, tf) aggregate — the block-max bounds and the
     // forward delta both consume it (the append-path discipline);
     // checkpointed only when both actually exist on this target
@@ -396,78 +361,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
         .agg(max(col("tf")).cast(LongType).as("max_tf"),
           min(col("dl")).cast(LongType).as("min_dl"))
         .write.mode("append").parquet(blockmaxPath)
-    stageFileBlockMax(srcDoclens.select(col("doc_id"), col("dl")))
-    stageDerivedDeltas(srcPostings.select(col("doc_id"), col("term"),
+    stageFileBlockMax(batch, srcDoclens.select(col("doc_id"), col("dl")))
+    stageDerivedDeltas(batch, srcPostings.select(col("doc_id"), col("term"),
       col("pos")), srcTf, b)
+    batch.add("doclens")(dir => srcDoclens.write.parquet(dir.toString))
     graft.util.Pins.release(srcTf)
-    fs.mkdirs(appendMarkerPath)
-    commitAppend()
-  }
-
-  /** Move a fully-staged append batch into the live layout — idempotent
-    * from any crash point at or after the marker write (each move
-    * skips files already gone). Order: postings buckets, census, then
-    * doclens LAST, because doclens ids are the replay-guard membership
-    * surface — a doc becomes "ingested" only after everything else of
-    * its batch is live. */
-  private def commitAppend(): Unit = {
-    val stagedPostings = new Path(appendStagingPath, "postings")
-    if (fs.exists(stagedPostings))
-      fs.listStatus(stagedPostings)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("tbucket="))
-        .foreach { d =>
-          moveDataFiles(d.getPath, new Path(postingsPath, d.getPath.getName)) }
-    val stagedCensus = new Path(appendStagingPath, "census")
-    if (fs.exists(stagedCensus))
-      fs.listStatus(stagedCensus)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("tprefix="))
-        .foreach { d =>
-          moveDataFiles(d.getPath, new Path(censusBasePath, d.getPath.getName)) }
-    // derived-sidecar deltas commit to PENDING dirs, not the live
-    // artifacts: reads keep the documented stale-until-maintenance
-    // contract, and maintainDerived applies or discards the pending
-    // mass in one decision
-    val stagedFwd = new Path(appendStagingPath, "forward_delta")
-    if (fs.exists(stagedFwd))
-      fs.listStatus(stagedFwd)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("dbucket="))
-        .foreach { d =>
-          moveDataFiles(d.getPath,
-            new Path(forwardDeltaPath, d.getPath.getName)) }
-    val stagedFldP = new Path(appendStagingPath, "fielded_delta_postings")
-    if (fs.exists(stagedFldP))
-      fs.listStatus(stagedFldP)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("tbucket="))
-        .foreach { d =>
-          moveDataFiles(d.getPath,
-            new Path(fieldedDeltaPostingsPath, d.getPath.getName)) }
-    val stagedFldD = new Path(appendStagingPath, "fielded_delta_doclens")
-    if (fs.exists(stagedFldD))
-      moveDataFiles(stagedFldD, new Path(fieldedDeltaDoclensPath))
-    val stagedDoclens = new Path(appendStagingPath, "doclens")
-    if (fs.exists(stagedDoclens))
-      moveDataFiles(stagedDoclens, new Path(doclensPath))
-    fs.delete(appendStagingPath, true)
-    fs.delete(appendMarkerPath, true)
-  }
-
-  /** Rename every data part-file from `from` into `to` (created if
-    * missing), keeping names — parquet task files carry a unique job
-    * UUID, so staged names can never collide with live ones. The
-    * renames run sequentially on the driver: each is assumed an ATOMIC
-    * O(1) metadata op (HDFS/local — the engine-wide assumption, see
-    * [[LayoutFs]]), so the loop costs file-count
-    * metadata calls, batch-proportional; on an object store without
-    * atomic rename the whole marker protocol needs a manifest-flip
-    * commit primitive instead. */
-  private def moveDataFiles(from: Path, to: Path): Unit = {
-    fs.mkdirs(to)
-    fs.listStatus(from)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .foreach { s =>
-        if (!fs.rename(s.getPath, new Path(to, s.getPath.getName)))
-          throw new IOException(s"could not move ${s.getPath} into $to")
-      }
+    batch.commit()
   }
 
   /** Every doc_id ever appended — the doclens key set, tombstoned docs
@@ -585,14 +484,15 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   /** Physically remove tombstoned docs (X175): ONE anti-join rewrite
-    * each of postings (partition layout preserved) and doclens, staged
-    * as hidden siblings then swapped in by the two-rename crash
-    * contract; tombstones are cleared LAST, so a crash at ANY point
-    * leaves reads correct — [[recover]] completes or rolls back a
-    * half-done swap, and an anti-join against already-vacuumed ids is a
-    * no-op. Run when the tombstone set has grown enough that the
-    * broadcast + read-side anti-join is worth amortizing away (the
-    * caller's policy, like [[IvfIndex.compact]]). */
+    * each of postings (partition layout preserved) and doclens, plus a
+    * census base with the removed docs' df subtracted (counted from the
+    * still-live postings), staged and committed with the drop of the
+    * tombstones and of the pending sidecar deltas as ONE
+    * [[LayoutFs.Batch]] — a crash at ANY point leaves the old layout or
+    * the vacuumed one whole, so [[vocab]] stays exact across it. Run
+    * when the tombstone set has grown enough that the broadcast +
+    * read-side anti-join is worth amortizing away (the caller's policy,
+    * like [[IvfIndex.compact]]). */
   def vacuum(): Unit = vacuumImpl(compactToo = false)
 
   /** [[vacuum]], optionally folding [[compact]]'s layout normalization
@@ -601,48 +501,27 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * layout twice back-to-back for the identical end state. */
   private def vacuumImpl(compactToo: Boolean): Unit = {
     invalidateLiveCount()
-    recover()
+    recoverCensus()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
-    val hasCensus = fs.exists(new Path(censusBasePath))
-    if (hasCensus && !fs.exists(new Path(censusDeltaPath))) {
-      // 1. publish the census delta (the removed docs' per-term df)
-      // BEFORE any data rewrite, computed from the still-live postings.
-      // From here until the census swap below, [[vocab]] subtracts the
-      // STORED delta — correct whether or not the postings rewrite has
-      // happened yet (a live recomputation would read 0 after it). A
-      // delta already stored is a crashed vacuum's — still exact for
-      // the current tombstone set (single writer), and it MUST be
-      // reused: recomputing after the postings rewrite would read 0.
-      val stag = new Path(censusPath, ".pending_delta.staging")
-      fs.delete(stag, true)
-      spark.read.parquet(postingsPath)
+    val batch = LayoutFs.batch(fs, root)
+    val postings = spark.read.parquet(postingsPath)
+    if (fs.exists(new Path(censusBasePath)))
+      stageCensus(batch, minusDelta(censusSummed(), postings
         .join(ts, Seq("doc_id"), "left_semi")
         .groupBy(col("term"))
-        .agg(count_distinct(col("doc_id")).as("df"))
-        .write.parquet(stag.toString)
-      fs.delete(new Path(censusDeltaPath), true)
-      if (!fs.rename(stag, new Path(censusDeltaPath)))
-        throw new IOException(s"could not publish census delta under $censusPath")
-    }
-    LayoutFs.stageRewrite(spark, postingsPath, Some("tbucket")) { live =>
-      val surv = live.join(ts, Seq("doc_id"), "left_anti")
-      if (compactToo) surv.repartition(col("tbucket")) else surv }
-    LayoutFs.stageRewrite(spark, doclensPath, None) { live =>
-      val surv = live.join(ts, Seq("doc_id"), "left_anti")
-      if (compactToo) surv.repartition(1) else surv }
-    if (hasCensus)
-      // 3. one directory swap replaces base with (base − delta) and
-      // drops pending_delta in the same rename — the adjustment and its
-      // marker can never be observed out of step
-      swapCensus(censusAdjusted(
-        spark.read.parquet(censusDeltaPath)), onePerPrefix = compactToo)
+        .agg(count_distinct(col("doc_id")).as("df"))), onePerPrefix = compactToo)
+    val survPostings = postings.join(ts, Seq("doc_id"), "left_anti")
+    batch.stageRows("postings", Some("tbucket"),
+      if (compactToo) survPostings.repartition(col("tbucket")) else survPostings)
+    val survDoclens = spark.read.parquet(doclensPath).join(ts, Seq("doc_id"), "left_anti")
+    batch.stageRows("doclens", None,
+      if (compactToo) survDoclens.repartition(1) else survDoclens)
     // pending sidecar deltas may describe docs this vacuum just removed
     // — applying them later would resurrect ghosts; drop them and let
     // maintainDerived fall back to the full rebuild
-    fs.delete(new Path(forwardDeltaPath), true)
-    fs.delete(new Path(fieldedDeltaPath), true)
-    fs.delete(new Path(tombstonesPath), true)
+    Seq("forward_delta", "fielded_delta", "tombstones").foreach(batch.drop)
+    batch.commit()
   }
 
   /** `base` minus a (term, df) delta, zero-df terms dropped — the
@@ -655,23 +534,16 @@ final class InvertedIndex(spark: SparkSession, path: String,
       .filter(col("df") > 0)
       .select(col("term"), col("df"))
 
-  /** Stored census minus a (term, df) delta, zero-df terms dropped. */
-  private def censusAdjusted(delta: DataFrame): DataFrame =
-    minusDelta(
-      spark.read.parquet(censusBasePath)
-        .groupBy(col("term")).agg(sum(col("df")).cast(LongType).as("df")),
-      delta)
+  /** The stored census base, one (term, df) row per term. */
+  private def censusSummed(): DataFrame =
+    spark.read.parquet(censusBasePath)
+      .groupBy(col("term")).agg(sum(col("df")).cast(LongType).as("df"))
 
-  /** [[LayoutFs.swap]] of the WHOLE census directory to
-    * `{base: newBase}` — pending_delta (if any) vanishes atomically with
-    * the base replacement. */
-  private def swapCensus(newBase: DataFrame,
-      onePerPrefix: Boolean = false): Unit = {
-    val staging = new Path(path, ".census.staging")
-    fs.delete(staging, true)
-    writeCensusBase(newBase, new Path(staging, "base").toString, onePerPrefix)
-    LayoutFs.swap(fs, staging, new Path(censusPath))
-  }
+  /** Stage the WHOLE census directory as `{base: newBase}` in `batch`. */
+  private def stageCensus(batch: LayoutFs.Batch, newBase: DataFrame,
+      onePerPrefix: Boolean): Unit =
+    batch.stage("census")(dir =>
+      writeCensusBase(newBase, new Path(dir, "base").toString, onePerPrefix))
 
   /** LIVE (term, df) vocabulary census — the serving input for
     * [[graft.operators.TextAnalysis.fuzzySuggestVocab]] ("did you
@@ -679,13 +551,13 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * term, tombstones excluded. Served from the additive census sidecar
     * — a vocabulary-sized read that never opens the postings layout
     * when no tombstones are pending (plan-audited). With tombstones
-    * pending, the masked docs' contribution subtracts out: from the
-    * STORED pending_delta if a [[vacuum]] is mid-flight (crash-window
-    * exact — see [[vacuum]]), otherwise from one column-pruned
-    * (term, doc_id) pass over the postings restricted to the tombstone
-    * set — the transient cost [[vacuum]] amortizes away, exactly like
-    * [[liveOnly]]'s anti-join. A pre-census layout falls back to the
-    * full live-postings census (documented fallback, the [[IvfIndex]]
+    * pending, the masked docs' contribution subtracts out through one
+    * column-pruned (term, doc_id) pass over the postings restricted to
+    * the tombstone set — the transient cost [[vacuum]] amortizes away,
+    * exactly like [[liveOnly]]'s anti-join. A [[vacuum]] rewrites
+    * postings, census and tombstones in one commit, so the two sides
+    * never disagree. A pre-census layout falls back to the full
+    * live-postings census (documented fallback, the [[IvfIndex]]
     * pre-sidecar rule). */
   def vocab(): DataFrame = vocabSlice(None)
 
@@ -698,10 +570,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * the exact prefix matches (every term whose first character
     * hash-collides into the same bucket), so downstream `startswith`/
     * regex filters apply exactly as over [[vocab]] — identical
-    * results, ≤ |prefixes|/B of the census read. Delta adjustments
-    * (pending vacuum, live tombstones) mask with the same bucket
-    * restriction, so the crash-window exactness contract of [[vocab]]
-    * carries over unchanged. */
+    * results, ≤ |prefixes|/B of the census read. The live-tombstone
+    * adjustment masks with the same bucket restriction, so the
+    * exactness contract of [[vocab]] carries over unchanged. */
   def vocabForPrefixes(prefixes: Seq[String]): DataFrame = {
     require(prefixes.nonEmpty, "no prefixes")
     require(prefixes.forall(_.nonEmpty), s"empty prefix in $prefixes")
@@ -709,7 +580,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   private def vocabSlice(buckets: Option[Seq[Int]]): DataFrame = {
-    recover()
+    recoverCensus()
     // base rows prune by the PARTITION column (file-listing prune);
     // delta/fallback rows — tiny by the vacuum-cadence contract —
     // recompute the bucket from the term on the fly
@@ -722,9 +593,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         .groupBy(col("term"))
         .agg(count_distinct(col("doc_id")).as("df")))
     val delta =
-      if (fs.exists(new Path(censusDeltaPath)))
-        Some(maskTerm(spark.read.parquet(censusDeltaPath)))
-      else if (fs.exists(new Path(tombstonesPath)))
+      if (fs.exists(new Path(tombstonesPath)))
         Some(maskTerm(spark.read.parquet(postingsPath)
           .join(tombstoneIds(), Seq("doc_id"), "left_semi")
           .groupBy(col("term"))
@@ -773,8 +642,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * compaction is therefore the WHOLE layout: one job rewrites postings
     * to a single file per term bucket (rows hash to one shuffle
     * partition per bucket value) and doclens to `doclensFiles` files
-    * (1 for tests; size it ∝ corpus at scale), each swapped in under
-    * the same two-rename crash contract as [[vacuum]]. Content is
+    * (1 for tests; size it ∝ corpus at scale), committed with the
+    * merge-summed census as one batch, like [[vacuum]]. Content is
     * bit-identical (suite-pinned); running [[vacuum]] then compact is
     * the classic merge step a segment-based index performs. WHEN to
     * compact is the caller's read of file counts (the [[IvfIndex]]
@@ -782,20 +651,17 @@ final class InvertedIndex(spark: SparkSession, path: String,
   def compact(doclensFiles: Int = 1): Unit = {
     require(doclensFiles >= 1, s"doclensFiles must be >= 1, got $doclensFiles")
     invalidateLiveCount()
-    recover()
-    LayoutFs.stageRewrite(spark, postingsPath, Some("tbucket")) { live =>
-      live.repartition(col("tbucket")) }
-    LayoutFs.stageRewrite(spark, doclensPath, None) { live =>
-      live.repartition(doclensFiles) }
+    recoverCensus()
+    val batch = LayoutFs.batch(fs, root)
+    batch.stageRows("postings", Some("tbucket"),
+      spark.read.parquet(postingsPath).repartition(col("tbucket")))
+    batch.stageRows("doclens", None,
+      spark.read.parquet(doclensPath).repartition(doclensFiles))
     // census base accretes files per append too — merge-sum it to one
-    // file per tprefix partition (vocabulary-sized job). Skipped while
-    // a vacuum's pending_delta is in flight: that vacuum's own census
-    // swap rewrites the base anyway.
-    if (fs.exists(new Path(censusBasePath)) &&
-        !fs.exists(new Path(censusDeltaPath)))
-      swapCensus(spark.read.parquet(censusBasePath)
-        .groupBy(col("term")).agg(sum(col("df")).cast(LongType).as("df")),
-        onePerPrefix = true)
+    // file per tprefix partition (vocabulary-sized job)
+    if (fs.exists(new Path(censusBasePath)))
+      stageCensus(batch, censusSummed(), onePerPrefix = true)
+    batch.commit()
   }
 
   /** Maintenance policy as code (X186): the ops loop [[fileStats]] /
@@ -858,18 +724,16 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def fieldedDeltaPath = s"$path/fielded_delta"
   private def fieldedDeltaPostingsPath = s"$fieldedDeltaPath/postings"
   private def fieldedDeltaDoclensPath = s"$fieldedDeltaPath/doclens"
-  private def applyMarkerPath(name: String) =
-    new Path(path, s".derived_apply_pending_$name")
 
-  /** Stage the batch's DERIVED-SIDECAR DELTAS under the append staging
-    * (so they commit atomically with the batch, or not at all): for an
+  /** Stage the batch's DERIVED-SIDECAR DELTAS in the append's `batch`
+    * (so they commit atomically with it, or not at all): for an
     * existing forward sidecar, the batch's (doc_id, term, tf) rows in
     * their `dbucket` partitions; for an existing fielded sidecar, the
     * batch's per-field tf rows (the STORED headLen) plus per-doc field
     * lengths. Per-(doc, term) rows are disjoint from the stored
     * artifacts' by the append doc-disjointness contract, so the deltas
     * are pure directory additions — [[maintainDerived]] APPLIES the
-    * accreted pending deltas with O(delta-files) metadata moves instead
+    * accreted pending deltas with O(delta-files) file moves instead
     * of a full rebuild whenever they provably cover the drift
     * (doc-count equality, no pending tombstones). Work here is ∝ the
     * batch, replacing full-corpus rebuild scans later: the forward delta
@@ -877,47 +741,43 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * once by the caller and shared with the block-max staging; the
     * fielded delta adds two map-side aggregates of the already-pinned
     * batch postings. */
-  private def stageDerivedDeltas(postings: DataFrame, tfDocTerm: DataFrame,
-      b: Int): Unit = {
+  private def stageDerivedDeltas(batch: LayoutFs.Batch, postings: DataFrame,
+      tfDocTerm: DataFrame, b: Int): Unit = {
     if (fs.exists(new Path(forwardPath)))
-      tfDocTerm
+      batch.add("forward_delta")(dir => tfDocTerm
         .withColumn("dbucket", bucketCol(col("doc_id").cast(StringType), b))
-        .write.partitionBy("dbucket")
-        .parquet(new Path(appendStagingPath, "forward_delta").toString)
+        .write.partitionBy("dbucket").parquet(dir.toString))
     if (fs.exists(new Path(fieldedPostingsPath))) {
-      // NOT fieldedHeadLen — that entry point recovers, and recover()
-      // discards the unmarked staging this very call is building
-      val hl = readFieldedHeadLen()
-      postings.groupBy(col("doc_id"), col("term"))
+      val hl = fieldedHeadLen
+      batch.add("fielded_delta/postings")(dir => postings
+        .groupBy(col("doc_id"), col("term"))
         .agg(count(when(col("pos") < hl, 1)).as("tf_head"),
           count(when(col("pos") >= hl, 1)).as("tf_body"))
         .withColumn("tbucket", bucketCol(col("term"), b))
-        .write.partitionBy("tbucket")
-        .parquet(new Path(appendStagingPath, "fielded_delta_postings").toString)
-      postings.groupBy(col("doc_id"))
+        .write.partitionBy("tbucket").parquet(dir.toString))
+      batch.add("fielded_delta/doclens")(dir => postings.groupBy(col("doc_id"))
         .agg(count(when(col("pos") < hl, 1)).cast(LongType).as("dlh"),
           count(when(col("pos") >= hl, 1)).cast(LongType).as("dlb"))
-        .write
-        .parquet(new Path(appendStagingPath, "fielded_delta_doclens").toString)
+        .write.parquet(dir.toString))
     }
   }
 
   /** Append EXACT (term, file)-grain block-max rows for the batch's
     * staged postings files into the live sidecar. The staged files keep
-    * their names through [[commitAppend]]'s moves, a (term, doc) is
+    * their names through the batch's moves, a (term, doc) is
     * file-local in them (one input row → one task → one file per
     * bucket), and the docs are NEW (append disjointness) so `dl` comes
     * wholly from the batch — the rows are the exact [[buildBlockMax]]
-    * file-grain bounds for those files. They land BEFORE the commit
-    * marker (the term-grain ordering rule): a crash between leaves
+    * file-grain bounds for those files. They land BEFORE the batch
+    * commits (the term-grain ordering rule): a crash between leaves
     * bounds for file names that never became live, which the
     * listing-driven X228 skip simply never tests — loose, safe. After
     * the commit the sidecar covers the new files exactly, so
     * [[maintainDerived]] can ADOPT it (meta refresh, no rebuild). */
-  private def stageFileBlockMax(batchDoclens: DataFrame): Unit = {
+  private def stageFileBlockMax(batch: LayoutFs.Batch,
+      batchDoclens: DataFrame): Unit = {
     if (!fs.exists(new Path(blockmaxFilesPath))) return
-    val staged = spark.read
-      .parquet(new Path(appendStagingPath, "postings").toString)
+    val staged = spark.read.parquet(batch.staged("postings").toString)
       .withColumn("__fname", substring_index(input_file_name(), "/", -1))
     staged.groupBy(col("term"), col("tbucket"), col("__fname"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
@@ -937,28 +797,32 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * and a listing+head job pair per read — 12 jobs per q277-class
     * maintenance walk for 8 bytes of bookkeeping. Readers fall back to
     * the old parquet form for layouts written before this round
-    * (snapshots travel byte-faithfully). Staged under a hidden name and
-    * published by [[LayoutFs.swap]]: a crash leaves either the old meta
-    * or the new one (a MISSING meta would be safe anyway — it counts as
-    * fully stale, one rebuild adopts). */
+    * (snapshots travel byte-faithfully). Committed as one batch: a
+    * crash leaves either the old meta or the new one (a MISSING meta
+    * would be safe anyway — it counts as fully stale, one rebuild
+    * adopts). */
   private def writeDerivedMeta(name: String,
       knownLive: Option[Long] = None): Unit = {
+    val batch = LayoutFs.batch(fs, root)
+    stageDerivedMeta(batch, name, knownLive)
+    batch.commit()
+  }
+
+  /** Stage `derived_meta/<name>` in `batch` ([[writeDerivedMeta]]). */
+  private def stageDerivedMeta(batch: LayoutFs.Batch, name: String,
+      knownLive: Option[Long]): Unit = {
     val n = knownLive.getOrElse(liveDocCount())
-    val dir = new Path(derivedMetaPath(name))
-    val tmp = new Path(dir.getParent, s".${dir.getName}.metastaging")
-    fs.delete(tmp, true)
-    fs.mkdirs(tmp)
-    val out = fs.create(new Path(tmp, "built_n_docs.txt"), true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-    LayoutFs.swap(fs, tmp, dir)
+    fs.mkdirs(new Path(derivedMetaPath(name)).getParent)
+    batch.stage(s"derived_meta/$name") { dir =>
+      val out = fs.create(new Path(dir, "built_n_docs.txt"), true)
+      try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+    }
   }
 
   /** The live doc count `name` was last built against — text fast path,
-    * parquet fallback for pre-r22 layouts, 0 for a missing meta. Resolves
-    * a crashed [[writeDerivedMeta]] swap first. */
+    * parquet fallback for pre-r22 layouts, 0 for a missing meta. */
   private def readDerivedMeta(name: String): Long = {
     val dir = new Path(derivedMetaPath(name))
-    LayoutFs.recover(fs, dir)
     val txt = new Path(dir, "built_n_docs.txt")
     if (fs.exists(txt)) {
       val in = fs.open(txt)
@@ -1078,54 +942,18 @@ final class InvertedIndex(spark: SparkSession, path: String,
     built + deltaDocs == liveDocs
   }
 
-  /** Move every pending delta file of `name` into its live artifact,
-    * refresh the derived meta, drop the marker — idempotent from any
-    * crash point at or after the marker write ([[moveDataFiles]] moves
-    * whatever is still staged; a second run over a consumed delta is a
-    * set of no-ops ending in the same meta write), so [[recover]] can
-    * roll a crashed apply forward and no read ever sees the
-    * half-applied window for longer than one entry. */
-  private def completeDeltaApply(name: String,
-      knownLive: Option[Long] = None): Unit = {
-    name match {
-      case "forward" =>
-        val d = new Path(forwardDeltaPath)
-        if (fs.exists(d))
-          fs.listStatus(d)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("dbucket="))
-            .foreach { x =>
-              moveDataFiles(x.getPath, new Path(forwardPath, x.getPath.getName)) }
-        fs.delete(d, true)
-      case "fielded" =>
-        val p = new Path(fieldedDeltaPostingsPath)
-        if (fs.exists(p))
-          fs.listStatus(p)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("tbucket="))
-            .foreach { x =>
-              moveDataFiles(x.getPath,
-                new Path(fieldedPostingsPath, x.getPath.getName)) }
-        val dl = new Path(fieldedDeltaDoclensPath)
-        if (fs.exists(dl)) moveDataFiles(dl, new Path(fieldedDoclensPath))
-        fs.delete(new Path(fieldedDeltaPath), true)
-      case other => sys.error(s"no delta apply for artifact $other")
-    }
-    writeDerivedMeta(name, knownLive)
-    fs.delete(applyMarkerPath(name), true)
-  }
-
   /** Delta-apply when the pending forward delta covers the drift
-    * (O(delta) check + O(files) metadata moves), else drop
-    * the stale delta (FIRST — a crash can never leave a
-    * consumed-and-still-pending delta to double-apply) and report None:
-    * the caller batches the rebuild with its siblings'
-    * ([[rebuildDerived]]). */
+    * (O(delta) check + O(files) moves, committed with the derived meta
+    * and the delta dir's drop as one batch), else drop the stale delta
+    * (FIRST — a crash can never leave a consumed-and-still-pending delta
+    * to double-apply) and report None: the caller batches the rebuild
+    * with its siblings' ([[rebuildDerived]]). */
   private def maintainForwardCheap(built: Long, live: Long): Option[String] =
     if (fs.exists(new Path(forwardDeltaPath)) &&
         deltaCovers("forward",
           spark.read.parquet(forwardDeltaPath)
             .select(col("doc_id")).distinct().count(), built, live)) {
-      fs.mkdirs(applyMarkerPath("forward"))
-      completeDeltaApply("forward", Some(live))
+      applyDelta("forward", Seq("forward_delta" -> "forward"), live)
       Some("delta_apply")
     } else {
       fs.delete(new Path(forwardDeltaPath), true)
@@ -1137,13 +965,25 @@ final class InvertedIndex(spark: SparkSession, path: String,
         deltaCovers("fielded",
           spark.read.parquet(fieldedDeltaDoclensPath)
             .select(col("doc_id")).distinct().count(), built, live)) {
-      fs.mkdirs(applyMarkerPath("fielded"))
-      completeDeltaApply("fielded", Some(live))
+      applyDelta("fielded", Seq("fielded_delta/postings" -> "fielded/postings",
+        "fielded_delta/doclens" -> "fielded/doclens"), live)
       Some("delta_apply")
     } else {
       fs.delete(new Path(fieldedDeltaPath), true)
       None
     }
+
+  /** Move every pending delta file of `name` into its live artifact,
+    * refresh its derived meta and drop the delta dir — one batch, so
+    * no read ever sees the artifact half-applied. */
+  private def applyDelta(name: String, moves: Seq[(String, String)],
+      live: Long): Unit = {
+    val batch = LayoutFs.batch(fs, root)
+    moves.foreach { case (src, dst) => batch.move(src, dst) }
+    stageDerivedMeta(batch, name, Some(live))
+    batch.drop(s"${name}_delta")
+    batch.commit()
+  }
 
   /** The block-max sidecars maintain themselves THROUGH appends (term
     * grain max/min-merges at read; file grain gets exact staged rows
@@ -1533,11 +1373,18 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * predicate documented on [[livePostings]]. */
   def bucketCount: Int = { recover(); readBuckets() }
 
-  /** Crash recovery alone — run by [[graft.sources.v2.GraftLayoutSource]]
-    * in `newScanBuilder`, before it lists the files of each SQL scan
-    * (a V2 scan is a read entry point like any other, so it recovers
-    * first; the engine-wide rule). */
-  private[graft] def recoverForRead(): Unit = recover()
+  /** Crash recovery for a SQL scan of `table` — run by
+    * [[graft.sources.v2.GraftLayoutSource]] when a view registers (the
+    * full [[recover]]) and in `newScanBuilder`, before it lists the
+    * files of each scan (`scan`: the roll-forward of a committed batch
+    * alone, one probe). Every mutation of this version commits through a
+    * batch, so a backup or a legacy marker at the root can only predate
+    * the registration's full check. A census scan also refuses an
+    * earlier version's census delta, like [[vocab]]. */
+  private[graft] def recoverForRead(table: String, scan: Boolean): Unit = {
+    if (scan) LayoutFs.rollForward(fs, root) else recover()
+    if (table == "census") LayoutFs.refuseCensusDelta(fs, new Path(censusPath))
+  }
 
   /** Dirichlet query-likelihood ranking (X197; Zhai & Lafferty, SIGIR
     * '01 — THE classic LM ranker next to BM25): top-k docs by
@@ -2295,20 +2142,16 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * it); text fast path, parquet fallback for pre-r22 layouts. */
   private lazy val fieldedHeadMemo =
     new graft.util.StampedMemo[Int](() => fs, Seq(s"$fieldedPath/meta"))
-  /** Non-recovering reader — [[append]]'s staging path must not run
-    * recover() mid-stage (it would discard the unmarked staging the
-    * call is building). */
-  private def readFieldedHeadLen(): Int = fieldedHeadMemo {
-    val txt = new Path(s"$fieldedPath/meta", "head_len.txt")
-    if (fs.exists(txt)) {
-      val in = fs.open(txt)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
-    } else spark.read.parquet(s"$fieldedPath/meta").head().getInt(0)
-  }
   def fieldedHeadLen: Int = {
     recover()
-    readFieldedHeadLen()
+    fieldedHeadMemo {
+      val txt = new Path(s"$fieldedPath/meta", "head_len.txt")
+      if (fs.exists(txt)) {
+        val in = fs.open(txt)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
+        finally in.close()
+      } else spark.read.parquet(s"$fieldedPath/meta").head().getInt(0)
+    }
   }
 
   /** BM25F top-k served from the [[buildFielded]] sidecar (X225): the
@@ -2838,11 +2681,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
 
   /** Consistent on-disk snapshot of the whole index (X248 — the ES
     * snapshot/restore ops surface; [[LayoutFs.snapshot]]). The quiesce
-    * is [[recover]]: every marker rolls forward and every unmarked
-    * staging dir is discarded. Pending tombstones and sidecar deltas
-    * travel with the copy, so it answers exactly like the source at
-    * snapshot time; a later vacuum on either side leaves the other
-    * untouched. Open it with `new InvertedIndex(spark, target)`. */
+    * is [[recover]], which rolls a committed batch forward; the
+    * snapshot then discards an uncommitted one. Pending tombstones and
+    * sidecar deltas travel with the copy, so it answers exactly like
+    * the source at snapshot time; a later vacuum on either side leaves
+    * the other untouched. Open it with `new InvertedIndex(spark,
+    * target)`. */
   def snapshot(targetPath: String): Unit =
     LayoutFs.snapshot(fs, new Path(path), targetPath,
       spark.sparkContext.hadoopConfiguration)(recover())

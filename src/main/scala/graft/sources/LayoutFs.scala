@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** The one crash-safe commit primitive every persisted layout shares.
@@ -20,20 +20,22 @@ import org.apache.spark.sql.functions.col
   * first, which restores the backup when the live directory is missing
   * and drops it otherwise.
   *
-  * A mutation that replaces SEVERAL directories (bucket rewrites, IVF
-  * list deletes, compactions, splits and merges, graph edge batches)
-  * commits them as one [[Batch]]: every replacement stages under the
-  * hidden `<root>/.commit/` tree, which mirrors the live paths below the
-  * layout root, and a marker file naming the ordered swaps and drops is
-  * renamed to `<root>/.committed` — that rename is the commit point.
-  * Publishing swaps each entry in and then drops the batch. From the
+  * A mutation that touches SEVERAL directories (bucket rewrites, IVF
+  * list deletes, compactions, splits and merges, graph edge batches,
+  * every inverted-index and query-store mutation) commits them as one
+  * [[Batch]]: every replacement or addition stages under the hidden
+  * `<root>/.commit/` tree, which mirrors the live paths below the layout
+  * root, and a marker file naming the ordered entries is renamed to
+  * `<root>/.committed` — that rename is the commit point. An entry is a
+  * `swap` (replace a live directory with its staged one), a `move` (an
+  * additive entry: rename every data file of a directory under the root
+  * into a live directory, keeping the file names) or a `drop` (delete a
+  * live directory). Publishing runs the swaps and moves in the order
+  * they were listed, then the drops, then drops the batch. From the
   * marker on, [[recoverUnder]] on the root rolls the batch forward, so a
   * crash leaves the old directories or all the new ones. Readers never
   * delete an uncommitted batch: only the next batch, [[discardBatch]]
-  * (a layout's vacuum) or a [[snapshot]] quiesce discards one. The
-  * inverted index's additive `.append_pending` batch and its derived-
-  * sidecar apply markers move files INTO live directories rather than
-  * replacing them, and stay in that layout.
+  * (a layout's vacuum) or a [[snapshot]] quiesce discards one.
   *
   * Atomicity assumption, stated once for the engine's whole two-rename
   * and marker family: each `rename` is an ATOMIC O(1) metadata
@@ -82,11 +84,11 @@ object LayoutFs {
   /** [[recover]] for every directory under `base` whose name matches
     * `glob` (e.g. `bucket=*`), from one glob of their backups. The same
     * glob finds a [[Batch]] committed at `base`, which then rolls
-    * forward, and the commit markers that earlier versions of the IVF
-    * and graph layouts left mid-mutation: those fail the call with an
-    * `IOException` naming the marker, because this version no longer
-    * rolls them forward and a layout read past one serves a half-applied
-    * mutation. */
+    * forward, and the commit markers that earlier versions of the IVF,
+    * graph and inverted-index layouts left mid-mutation: those fail the
+    * call with an `IOException` naming the marker, because this version
+    * no longer rolls them forward and a layout read past one serves a
+    * half-applied mutation. */
   def recoverUnder(fs: FileSystem, base: Path, glob: String): Unit = {
     val hits = Option(fs.globStatus(new Path(base,
         (s".$glob.bak" +: Marker +: LegacyMarkers).mkString("{", ",", "}"))))
@@ -105,9 +107,20 @@ object LayoutFs {
       if (!fs.rename(b, live)) throw new IOException(s"cannot restore $live from $b")
     } else fs.delete(b, true)
 
-  /** The IVF split/merge markers and the graph edge batch, as the
-    * per-layout protocols that [[Batch]] replaced named them. */
-  private val LegacyMarkers = Seq(".split_pending_*", ".merge_pending_*", ".tmp_gbucket_batch")
+  /** The IVF split/merge markers, the graph edge batch and the inverted
+    * index's append and derived-delta apply markers, as the per-layout
+    * protocols that [[Batch]] replaced named them. */
+  private val LegacyMarkers = Seq(".split_pending_*", ".merge_pending_*", ".tmp_gbucket_batch",
+    ".append_pending", ".derived_apply_pending_*")
+
+  /** Fail on the census delta an earlier version of the inverted index
+    * published under its `census` directory mid-vacuum ([[refuseLegacy]]).
+    * It lies below the root, where [[recoverUnder]]'s one glob does not
+    * look, so the census readers and writers check it themselves. */
+  def refuseCensusDelta(fs: FileSystem, census: Path): Unit = {
+    val delta = new Path(census, "pending_delta")
+    if (fs.exists(delta)) refuseLegacy(fs, delta)
+  }
 
   /** Fail on a legacy marker. The graph batch directory is only a marker
     * once its `_committed` child exists; before that it is hidden debris
@@ -126,12 +139,14 @@ object LayoutFs {
   private def under(base: Path, rel: String): Path =
     if (rel.isEmpty) base else new Path(base, rel)
 
-  /** Directory replacements under the layout root `root`, committed at
-    * once (the class doc's protocol). [[stage]] and [[stageParts]] add
-    * swaps in order, [[drop]] adds a deletion that runs after them, and
-    * [[commit]] commits and publishes the lot. Open one with [[batch]]. */
+  /** Directory replacements and additions under the layout root
+    * `root`, committed at once (the class doc's protocol). [[stage]],
+    * [[stageRows]] and [[stageParts]] add swaps, [[add]] and [[move]]
+    * add moves, all in call order; [[drop]] adds a deletion that runs
+    * after them, and [[commit]] commits and publishes the lot. Open one
+    * with [[batch]]. */
   final class Batch private[LayoutFs] (fs: FileSystem, root: Path) {
-    private var swaps = Vector.empty[String]
+    private var entries = Vector.empty[String]
     private var drops = Vector.empty[String]
 
     /** Where the replacement of the live `root/rel` stages. */
@@ -140,8 +155,22 @@ object LayoutFs {
     /** Stage `root/rel` as `write` writes it to the staging path. */
     def stage(rel: String)(write: Path => Unit): Unit = {
       write(staged(rel))
-      swaps :+= rel
+      entries :+= s"swap $rel"
     }
+
+    /** Stage `rows` as the whole replacement of `root/rel`, partitioned
+      * by `partCol` if given. With every row gone it stages a
+      * schema-carrying empty file (under `<partCol>=0` for a partitioned
+      * layout), so later whole-layout reads can still infer the schema. */
+    def stageRows(rel: String, partCol: Option[String], rows: DataFrame): Unit =
+      stage(rel) { dir =>
+        partCol.fold(rows.write)(c => rows.write.partitionBy(c)).parquet(dir.toString)
+        if (!fs.listStatus(dir).exists(s => !s.getPath.getName.startsWith("_")))
+          partCol match {
+            case Some(c) => emptyFile(rows.drop(c), new Path(dir, s"$c=0"))
+            case None => emptyFile(rows, dir)
+          }
+      }
 
     /** Stage `rows`, partitioned by `partCol`, as the replacement of each
       * `rel/partCol=N` with N in `parts`. A part that gets no rows but
@@ -163,24 +192,38 @@ object LayoutFs {
       names.filter(n => written(n) || fs.exists(new Path(under(root, rel), n)))
         .foreach { n =>
           if (!written(n)) emptyFile(rows.drop(partCol), new Path(dir, n))
-          swaps :+= (if (rel.isEmpty) n else s"$rel/$n")
+          entries :+= s"swap ${if (rel.isEmpty) n else s"$rel/$n"}"
         }
     }
 
-    /** Delete the live `root/rel` once every swap has landed. */
+    /** Stage additions to the live `root/rel` as `write` writes them to
+      * the staging path: at publish each staged data file moves to the
+      * same place under `root/rel` ([[move]]). */
+    def add(rel: String)(write: Path => Unit): Unit = {
+      write(staged(rel))
+      move(s"$Staging/$rel", rel)
+    }
+
+    /** Move every data file of `root/src` into `root/dst` at publish,
+      * keeping file names and `col=N` subdirectories. Parquet task files
+      * carry a unique job id, so a moved name never collides with a live
+      * one. */
+    def move(src: String, dst: String): Unit = entries :+= s"move $src $dst"
+
+    /** Delete the live `root/rel` once every swap and move has landed. */
     def drop(rel: String): Unit = drops :+= rel
 
     /** Commit ([[markCommitted]]) and publish. */
     def commit(): Unit = if (markCommitted()) publish(fs, root)
 
-    /** The commit point alone: write the swap and drop list under the
-      * staging tree and rename it to the marker. A batch with nothing to
-      * swap or drop commits nothing (false). */
+    /** The commit point alone: write the entry list under the staging
+      * tree and rename it to the marker. A batch with no entry commits
+      * nothing (false). */
     private[sources] def markCommitted(): Boolean =
-      (swaps.nonEmpty || drops.nonEmpty) && {
+      (entries.nonEmpty || drops.nonEmpty) && {
         val tmp = staged("_batch")
         val out = fs.create(tmp, true)
-        try out.write((swaps.map("swap " + _) ++ drops.map("drop " + _))
+        try out.write((entries ++ drops.map("drop " + _))
           .mkString("", "\n", "\n").getBytes(UTF_8))
         finally out.close()
         if (!fs.rename(tmp, new Path(root, Marker)))
@@ -202,12 +245,17 @@ object LayoutFs {
     * to discard. Writers only (the next batch, a vacuum, a snapshot
     * quiesce): readers leave an uncommitted batch alone. */
   def discardBatch(fs: FileSystem, root: Path): Boolean =
-    if (fs.exists(new Path(root, Marker))) { publish(fs, root); false }
-    else fs.delete(new Path(root, Staging), true)
+    !rollForward(fs, root) && fs.delete(new Path(root, Staging), true)
 
-  /** Run a committed batch's swaps, then its drops, then drop the marker
-    * and the staging. Idempotent: a swap whose staging is gone already
-    * landed, and a drop of a missing directory is a no-op. */
+  /** Roll a [[Batch]] committed under `root` forward, from one probe of
+    * its marker; true when there was one. */
+  def rollForward(fs: FileSystem, root: Path): Boolean =
+    fs.exists(new Path(root, Marker)) && { publish(fs, root); true }
+
+  /** Run a committed batch's swaps and moves in order, then its drops,
+    * then drop the marker and the staging. Idempotent: a swap whose
+    * staging is gone already landed, a move only finds the files it has
+    * not moved yet, and a drop of a missing directory is a no-op. */
   private def publish(fs: FileSystem, root: Path): Unit = {
     val marker = new Path(root, Marker)
     val in = fs.open(marker)
@@ -216,12 +264,28 @@ object LayoutFs {
       finally in.close()
     entries.filter(_.nonEmpty).foreach {
       case s"swap $rel" => swap(fs, new Path(new Path(root, Staging), rel), new Path(root, rel))
+      case s"move $src $dst" => moveFiles(fs, new Path(root, src), new Path(root, dst))
       case s"drop $rel" => fs.delete(new Path(root, rel), true)
       case e => throw new IOException(s"unknown entry '$e' in $marker")
     }
     fs.delete(marker, false)
     fs.delete(new Path(root, Staging), true)
   }
+
+  /** Rename every data file of `src` into `dst` (created if missing),
+    * recursing into subdirectories; hidden (`.`/`_`) names stay. A
+    * missing `src` is a no-op, so a roll-forward re-runs it freely. */
+  private def moveFiles(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (fs.exists(src)) {
+      fs.mkdirs(dst)
+      fs.listStatus(src).filterNot(s => s.getPath.getName.startsWith(".") ||
+          s.getPath.getName.startsWith("_")).foreach { s =>
+        val to = new Path(dst, s.getPath.getName)
+        if (s.isDirectory) moveFiles(fs, s.getPath, to)
+        else if (!fs.rename(s.getPath, to))
+          throw new IOException(s"cannot move ${s.getPath} into $dst")
+      }
+    }
 
   /** Rewrite the `partCol=N` directories of `root/rel`, N in `parts`, as
     * one [[Batch]]: `transform` their live rows (`live`, the whole
@@ -258,27 +322,6 @@ object LayoutFs {
       throw new IOException(s"snapshot copy to $staging failed")
     if (!fs.rename(staging, dst))
       throw new IOException(s"cannot publish snapshot $staging -> $target")
-  }
-
-  /** Stage `transform(live rows)` as the hidden sibling
-    * `.<name>.staging` of `live` and [[swap]] it in. A transform that
-    * drops EVERY row still stages a schema-carrying empty file (under
-    * `<partCol>=0` for a partitioned layout), so later whole-layout
-    * reads can infer the schema. */
-  def stageRewrite(spark: SparkSession, live: String, partCol: Option[String])(
-      transform: DataFrame => DataFrame): Unit = {
-    val liveP = new Path(live)
-    val fs = liveP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(liveP.getParent, s".${liveP.getName}.staging")
-    fs.delete(staging, true)
-    val rows = transform(spark.read.parquet(live))
-    partCol.fold(rows.write)(c => rows.write.partitionBy(c)).parquet(staging.toString)
-    if (!fs.listStatus(staging).exists(s => !s.getPath.getName.startsWith("_")))
-      partCol match {
-        case Some(c) => emptyFile(rows.drop(c), new Path(staging, s"$c=0"))
-        case None => emptyFile(rows, staging)
-      }
-    swap(fs, staging, liveP)
   }
 
   /** A schema-carrying empty parquet file as the only content of `dir`:

@@ -37,8 +37,10 @@ import graft.operators.TextAnalysis
   * unsubscribe: O(batch), clause files untouched, effective on the
   * next read via the size-gated anti-join — the
   * [[InvertedIndex.delete]] vacuum-cadence contract); [[vacuum]]
-  * rewrites clauses and totals without the tombstoned queries under
-  * the engine's two-rename crash discipline. Reads are LIVE per
+  * rewrites clauses and totals without the tombstoned queries. Each of
+  * append, vacuum and compact commits clauses and totals together as
+  * one [[LayoutFs.Batch]], so a crash never leaves clause rows without
+  * their totals row. Reads are LIVE per
   * action: [[percolate]] re-lists the directories every call, so a
   * just-appended alert matches the very next batch —
   * [[graft.streaming.PercolateStream.startStored]] leans on exactly
@@ -74,9 +76,11 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   private def readBuckets(): Int =
     bucketsMemo(spark.read.parquet(metaPath).head().getInt(0))
 
-  /** Resolve a crashed [[vacuum]]/[[compact]] swap ([[LayoutFs.recover]]). */
-  private def recover(): Unit =
-    LayoutFs.recover(fs, new Path(clausesPath), new Path(totalsPath))
+  private def root = new Path(path)
+
+  /** Roll a committed batch forward and resolve a crashed swap of a
+    * top-level directory ([[LayoutFs.recoverUnder]]). */
+  private def recover(): Unit = LayoutFs.recoverUnder(fs, root, "*")
 
   /** Crash recovery alone — run by [[graft.sources.v2.GraftLayoutSource]]
     * in `newScanBuilder`, before it lists the files of each SQL scan
@@ -108,16 +112,19 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * New query_ids must be disjoint from stored ones (including
     * tombstoned ids until [[vacuum]] clears them) — the
     * [[InvertedIndex.append]] disjointness contract, which is also what
-    * keeps the totals sidecar additive. */
+    * keeps the totals sidecar additive. Clause and totals rows stage in
+    * one batch and move into the live directories together. */
   def append(clauses: DataFrame): Unit = {
     recover()
     val b = readBuckets()
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true)
-    c.withColumn("tbucket", bucketCol(col("term"), b))
-      .write.mode("append").partitionBy("tbucket").parquet(clausesPath)
-    totalsOf(c).write.mode("append").parquet(totalsPath)
+    val batch = LayoutFs.batch(fs, root)
+    batch.add("clauses")(dir => c.withColumn("tbucket", bucketCol(col("term"), b))
+      .write.partitionBy("tbucket").parquet(dir.toString))
+    batch.add("totals")(dir => totalsOf(c).write.parquet(dir.toString))
     graft.util.Pins.release(c)
+    batch.commit()
   }
 
   /** Unsubscribe: tombstone the query ids — O(batch) I/O, clause files
@@ -148,9 +155,8 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     else df
 
   /** Physically drop tombstoned queries: one anti-join rewrite each of
-    * clauses (partition layout preserved) and totals, two-rename
-    * swapped; tombstones cleared LAST so a crash anywhere leaves reads
-    * correct. */
+    * clauses (partition layout preserved) and totals, committed with the
+    * tombstones' drop as one batch. */
   def vacuum(): Unit = vacuumImpl(compactToo = false)
 
   /** [[vacuum]], optionally folding [[compact]]'s one-file-per-bucket
@@ -161,13 +167,14 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     recover()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
-    LayoutFs.stageRewrite(spark, clausesPath, Some("tbucket")) { live =>
-      val surv = live.join(ts, Seq("query_id"), "left_anti")
-      if (compactToo) surv.repartition(col("tbucket")) else surv }
-    LayoutFs.stageRewrite(spark, totalsPath, None) { live =>
-      val surv = live.join(ts, Seq("query_id"), "left_anti")
-      if (compactToo) surv.coalesce(1) else surv }
-    fs.delete(new Path(tombstonesPath), true)
+    val batch = LayoutFs.batch(fs, root)
+    val clauses = spark.read.parquet(clausesPath).join(ts, Seq("query_id"), "left_anti")
+    batch.stageRows("clauses", Some("tbucket"),
+      if (compactToo) clauses.repartition(col("tbucket")) else clauses)
+    val totals = spark.read.parquet(totalsPath).join(ts, Seq("query_id"), "left_anti")
+    batch.stageRows("totals", None, if (compactToo) totals.coalesce(1) else totals)
+    batch.drop("tombstones")
+    batch.commit()
   }
 
   /** Per-bucket file-accretion health: (tbucket, n_files, n_bytes) from
@@ -188,14 +195,16 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   }
 
   /** Rewrite the clause layout to ONE file per bucket (and totals to
-    * one file) through [[LayoutFs.stageRewrite]] — the
-    * amortized answer to append's per-batch part-file accretion.
-    * Answers are bit-identical (pure layout). */
+    * one file), committed as one batch — the amortized answer to
+    * append's per-batch part-file accretion. Answers are bit-identical
+    * (pure layout). */
   def compact(): Unit = {
     recover()
-    LayoutFs.stageRewrite(spark, clausesPath, Some("tbucket"))(
-      _.repartition(col("tbucket")))
-    LayoutFs.stageRewrite(spark, totalsPath, None)(_.coalesce(1))
+    val batch = LayoutFs.batch(fs, root)
+    batch.stageRows("clauses", Some("tbucket"),
+      spark.read.parquet(clausesPath).repartition(col("tbucket")))
+    batch.stageRows("totals", None, spark.read.parquet(totalsPath).coalesce(1))
+    batch.commit()
   }
 
   /** Maintenance policy as code — the [[InvertedIndex.maintain]] X186

@@ -77,15 +77,15 @@ final class StoreCatalog(spark: SparkSession) {
     * constant-folded `tbucket` predicate becomes its `PartitionFilters`,
     * so only that bucket's files are opened. The vocab view carries
     * [[InvertedIndex.vocab]]'s exact serving rule in fixed SQL over
-    * hidden `<name>__*` raw-table views: census base sum, minus the
-    * stored pending delta when a vacuum is mid-flight, else minus a
-    * live recomputation restricted to the tombstone set (empty tombstones ⇒ AQE's empty-relation
-    * propagation skips the postings branch), zero-df terms dropped. */
+    * hidden `<name>__*` raw-table views: census base sum minus a live
+    * recomputation restricted to the tombstone set (empty tombstones ⇒
+    * AQE's empty-relation propagation skips the postings branch),
+    * zero-df terms dropped. Every index mutation commits as one batch
+    * and each scan build rolls a committed batch forward, so census,
+    * postings and tombstones are read from one committed state. */
   def registerInvertedIndex(name: String, path: String): Seq[String] = {
     requireName(name)
     layoutTable(path, "census").createOrReplaceTempView(s"${name}__census_raw")
-    layoutTable(path, "census_delta")
-      .createOrReplaceTempView(s"${name}__census_delta")
     layoutTable(path, "tombstones")
       .createOrReplaceTempView(s"${name}__tombstones")
     layoutTable(path, "postings")
@@ -112,16 +112,11 @@ final class StoreCatalog(spark: SparkSession) {
       s"""CREATE OR REPLACE TEMPORARY VIEW ${name}_vocab AS
           WITH base AS (SELECT term, CAST(SUM(df) AS BIGINT) AS df
               FROM ${name}__census_raw GROUP BY term),
-            sub AS (SELECT term, df FROM ${name}__census_delta
-              UNION ALL
-              SELECT p.term, COUNT(DISTINCT p.doc_id) AS df
-                FROM ${name}__postings_raw p
-                JOIN (SELECT DISTINCT doc_id FROM ${name}__tombstones) t
-                  ON p.doc_id = t.doc_id
-                WHERE NOT EXISTS (SELECT 1 FROM ${name}__census_delta)
-                GROUP BY p.term),
-            s AS (SELECT term, CAST(SUM(df) AS BIGINT) AS d
-              FROM sub GROUP BY term)
+            s AS (SELECT p.term, CAST(COUNT(DISTINCT p.doc_id) AS BIGINT) AS d
+              FROM ${name}__postings_raw p
+              JOIN (SELECT DISTINCT doc_id FROM ${name}__tombstones) t
+                ON p.doc_id = t.doc_id
+              GROUP BY p.term)
           SELECT base.term, CAST(base.df - COALESCE(s.d, 0) AS BIGINT) AS df
           FROM base LEFT JOIN s ON base.term = s.term
           WHERE base.df - COALESCE(s.d, 0) > 0""")

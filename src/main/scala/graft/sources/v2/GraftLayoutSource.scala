@@ -34,7 +34,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Options: `path` (layout root) and `table` (a key of
   * `GraftLayoutSource.layouts`). A table whose directory does not exist
-  * (`tombstones`, `census_delta` before their first write) reads empty. */
+  * (`tombstones` before its first write) reads empty. */
 final class GraftLayoutSource extends TableProvider {
 
   override def supportsExternalMetadata(): Boolean = false
@@ -56,7 +56,6 @@ private[v2] object GraftLayoutSource {
     "postings" -> (("postings", Some("tbucket"), "doc_id BIGINT, pos INT, term STRING")),
     "doclens" -> (("doclens", None, "doc_id BIGINT, dl BIGINT")),
     "census" -> (("census/base", Some("tprefix"), "term STRING, df BIGINT")),
-    "census_delta" -> (("census/pending_delta", None, "term STRING, df BIGINT")),
     "tombstones" -> (("tombstones", None, "doc_id BIGINT")),
     "ivf_lists" -> (("lists", Some("ivf_list"), "id BIGINT, vector ARRAY<FLOAT>")),
     "ivf_centroids" -> (("centroids", None, "cid INT, centroid ARRAY<FLOAT>")),
@@ -83,14 +82,16 @@ private[v2] object GraftLayoutSource {
   }
 
   /** Run the owning layout's crash recovery — the engine rule that every
-    * read entry point recovers first, holding for SQL scans too. */
-  def recover(root: String, table: String): Unit = {
+    * read entry point recovers first, holding for SQL scans too: at
+    * registration and at each `scan` build (the inverted index checks
+    * for legacy state at registration only, see its `recoverForRead`). */
+  def recover(root: String, table: String, scan: Boolean): Unit = {
     val spark = SparkSession.active
     table.takeWhile(_ != '_') match {
       case "ivf" => new graft.sources.IvfIndex(spark, root).recoverForRead()
       case "query" => new graft.sources.QueryStore(spark, root).recoverForRead()
       case "graph" => new graft.sources.GraphIndex(spark, root).recoverForRead()
-      case _ => new graft.sources.InvertedIndex(spark, root).recoverForRead()
+      case _ => new graft.sources.InvertedIndex(spark, root).recoverForRead(table, scan)
     }
   }
 
@@ -142,11 +143,10 @@ final class LayoutTable(root: String, tableName: String, dir: String,
   override def name(): String = s"graft:$tableName($root)"
 
   override lazy val schema: StructType = {
-    recover(root, tableName)
+    recover(root, tableName, scan = false)
     val fileSchema = footerSchema(dir, partCol).orElse(tableName match {
       case "tombstones" => footerSchema(s"$root/doclens", None)
         .map(dl => StructType(dl.filter(_.name == "doc_id")))
-      case "census_delta" => footerSchema(s"$root/census/base", Some("tprefix"))
       case _ => None
     }).getOrElse(canonical)
     partCol.fold(fileSchema)(c =>
@@ -159,7 +159,7 @@ final class LayoutTable(root: String, tableName: String, dir: String,
   /** Recover, then hand Spark a file index seeded with [[liveFiles]]:
     * partition inference and pruning are Spark's, the listing is not. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    recover(root, tableName)
+    recover(root, tableName, scan = true)
     val files = liveFiles(dir, partCol)
     val index = new InMemoryFileIndex(SparkSession.active, Seq(new Path(dir)),
       Map.empty, Some(schema), new FileStatusCache {

@@ -19,7 +19,7 @@ import graft.sources.InvertedIndex
   * micro-batch (or a crawler re-fetching a page) never doubles a doc's
   * postings or doclens row. The guard is crash-exact because the append
   * itself is: [[InvertedIndex.append]] stages the whole batch and
-  * marker-commits it (doclens moved LAST), so a driver death anywhere
+  * commits it as one batch (doclens moved LAST), so a driver death anywhere
   * mid-append leaves — after the index's own recovery — either the full
   * batch (replay drops it) or none of it (replay re-appends it), never
   * postings without their doclens rows. The guard's plan is scale-shaped: the

@@ -3,7 +3,10 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -12,7 +15,7 @@ import graft.TestSpark
   * bucket-rewrite correctness bugs the per-bucket design can hide:
   * multi-bucket upsert must neither duplicate rows across bucket dirs nor
   * misplace them, updated keys keep ids, fresh ids continue past max. */
-class EmbeddingStoreSuite extends AnyFunSuite {
+class EmbeddingStoreSuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -270,6 +273,45 @@ class EmbeddingStoreSuite extends AnyFunSuite {
       "key hidden by the crash keeps its id through the next upsert")
     assert(store.read().groupBy("id").count().filter($"count" > 1).count() == 0)
     assert(store.count() == 6)
+  }
+
+  /** The file scans of every query `body` executed, AQE stages included. */
+  private def scansDuring(body: => Unit): Seq[FileSourceScanExec] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.TestListenerBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+      .flatMap(collectWithSubqueries(_) { case s: FileSourceScanExec => s })
+  }
+
+  test("upsert plans its key join over the touched bucket's files only") {
+    val dir = Files.createTempDirectory("graft_store_pruned_upsert").toString
+    val store = new EmbeddingStore(spark, s"$dir/emb", numBuckets = 8)
+    store.bulkLoad(raw((1L to 16L).map(p => (p, 0, Seq(p.toFloat, 1f, 0f))): _*))
+    val bucket = store.byId(keyIds(store)((3L, 0))).select("bucket").as[Int].head()
+    val before = keyIds(store)
+    val scans = scansDuring(store.upsert(raw((3L, 0, Seq(9f, 9f, 9f)), (3L, 1, Seq(1f, 1f, 1f)))))
+    // the store scans that read the key columns: the rewrite's own read
+    // of the touched bucket, which now also feeds the key join (the
+    // global max(id) reads the id column alone)
+    val keyScans = scans.filter(s => s.output.exists(_.name == "sequence_no") &&
+      s.relation.location.rootPaths.exists(_.toString.endsWith("/emb")))
+    assert(keyScans.nonEmpty, "the upsert must scan the store's key columns")
+    keyScans.foreach { s =>
+      val pf = s.metadata("PartitionFilters")
+      val buckets = """bucket#\d+ = (\d+)""".r.findAllMatchIn(pf).map(_.group(1).toInt).toSet
+      assert(buckets == Set(bucket), s"the key join must read bucket $bucket only: $pf")
+    }
+    val after = keyIds(store)
+    assert(after((3L, 0)) == before((3L, 0)), "the updated key keeps its id")
+    assert(after((3L, 1)) == 17L, "the fresh key continues past the global max id")
+    assert(after.size == 17)
   }
 
   test("upsert on rows spanning ALL buckets keeps per-bucket row sets disjoint") {

@@ -24,6 +24,23 @@ class InvertedIndexSuite extends AnyFunSuite {
     (4L, "another sort merge document"),
     (5L, "no match here")).toDF("doc_id", "text")
 
+  private def rootOf(idx: InvertedIndex) = new org.apache.hadoop.fs.Path(idx.indexPath)
+  private def fsOf(idx: InvertedIndex) =
+    rootOf(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Whether the index root holds batch staging and a committed marker. */
+  private def hasBatch(idx: InvertedIndex): (Boolean, Boolean) =
+    (new java.io.File(s"${idx.indexPath}/.commit").exists(),
+      new java.io.File(s"${idx.indexPath}/.committed").exists())
+
+  /** Move the directory `from` to a batch's staging path — the state a
+    * mutation that crashed after staging leaves behind. */
+  private def stageDir(fs: org.apache.hadoop.fs.FileSystem, from: String)(
+      staged: org.apache.hadoop.fs.Path): Unit = {
+    fs.mkdirs(staged.getParent)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(from), staged), s"test setup: stage $from")
+  }
+
   private def phrase(idx: InvertedIndex, terms: Seq[String]) =
     TextAnalysis.phraseMatch(idx.termPostings(terms), terms)
       .orderBy(col("doc_id")).collect()
@@ -335,8 +352,9 @@ class InvertedIndexSuite extends AnyFunSuite {
     idx.vacuum()
     assert(vocabRows(idx) === expectedVocab(survivors),
       "vacuum's census swap must bake the subtraction in")
-    assert(!new java.io.File(s"$dir/inv/census/pending_delta").exists(),
-      "the census swap removes pending_delta with the base")
+    assert(new java.io.File(s"$dir/inv/census").list().toSet === Set("base"),
+      "the census holds its base alone")
+    assert(hasBatch(idx) === ((false, false)), "the vacuum's batch published whole")
     idx.compact()
     assert(vocabRows(idx) === expectedVocab(survivors))
     val prefixDirs = new java.io.File(s"$dir/inv/census/base").listFiles()
@@ -421,63 +439,70 @@ class InvertedIndexSuite extends AnyFunSuite {
     idx.build(docsA.union(docsB), "doc_id", col("text"))
     idx.delete(Seq(2L).toDF("doc_id"))
     val survivors = docsA.union(docsB).filter(col("doc_id") =!= 2L)
-    // window A: a vacuum published its delta then crashed before any
-    // data rewrite — replicate the publish by hand
-    val postings = spark.read.parquet(s"$dir/inv/postings")
-    postings.join(spark.read.parquet(s"$dir/inv/tombstones").distinct(),
-        Seq("doc_id"), "left_semi")
-      .groupBy(col("term")).agg(count_distinct(col("doc_id")).as("df"))
-      .write.parquet(s"$dir/inv/census/pending_delta")
+    // a vacuum that committed its batch: the vacuumed postings, doclens
+    // and census (a sibling index built over the survivors) staged, the
+    // tombstones' drop listed
+    val ref = new InvertedIndex(spark, s"$dir/ref", buckets = 8)
+    ref.build(survivors, "doc_id", col("text"))
+    val want = phrase(ref, Seq("sort", "merge"))
+    val fs = fsOf(idx)
+    val batch = LayoutFs.batch(fs, rootOf(idx))
+    batch.stage("census")(stageDir(fs, s"$dir/ref/census"))
+    batch.stage("postings")(stageDir(fs, s"$dir/ref/postings"))
+    batch.stage("doclens")(stageDir(fs, s"$dir/ref/doclens"))
+    batch.drop("tombstones")
+    assert(batch.markCommitted())
+    // crash window: the publish swapped the census, not yet the postings
+    // — the read must finish the batch, never subtract the tombstones
+    // twice
+    LayoutFs.swap(fs, batch.staged("census"), new org.apache.hadoop.fs.Path(s"$dir/inv/census"))
     assert(vocabRows(idx) === expectedVocab(survivors),
-      "with a stored delta the served census must subtract it")
-    // the re-run vacuum must REUSE the stored delta (a recompute after
-    // the data rewrite would read 0) and converge
-    idx.vacuum()
-    assert(vocabRows(idx) === expectedVocab(survivors))
-    assert(!new java.io.File(s"$dir/inv/census/pending_delta").exists())
+      "a read rolls the committed vacuum forward: census exact")
+    assert(hasBatch(idx) === ((false, false)))
+    assert(!new java.io.File(s"$dir/inv/tombstones").exists())
+    assert(phrase(idx, Seq("sort", "merge")) === want)
     // window after the census swap, before the tombstone delete: base
     // already adjusted, tombstones visible, postings clean — the live
     // delta reads 0 and the census must come out exact, not doubly cut
     Seq(2L).toDF("doc_id").write.parquet(s"$dir/inv/tombstones")
     assert(vocabRows(idx) === expectedVocab(survivors),
       "an already-vacuumed tombstone set must be a census no-op")
+    idx.vacuum()
+    assert(vocabRows(idx) === expectedVocab(survivors))
   }
 
   test("append is atomic: marker rolls the staged batch forward, no marker discards it") {
     val dir = Files.createTempDirectory("graft_inv_atomic").toString
     val idx = new InvertedIndex(spark, s"$dir/inv", buckets = 8)
     idx.build(docsA, "doc_id", col("text"))
-    // orphan staging without a marker: the crash hit before commit —
-    // the batch must vanish, not half-apply
-    val junk = new java.io.File(s"$dir/inv/.append_staging/doclens")
-    Seq((99L, 1L)).toDF("doc_id", "dl").write.parquet(junk.toString)
-    assert(phrase(idx, Seq("sort", "merge")) ===
-      phrase(idx, Seq("sort", "merge")))
-    assert(!new java.io.File(s"$dir/inv/.append_staging").exists(),
-      "uncommitted staging must be discarded at the next entry point")
-    assert(spark.read.parquet(s"$dir/inv/doclens")
-      .filter(col("doc_id") === 99L).count() === 0)
-    // marker-committed staging: replicate a fully-staged batch (via a
-    // sibling index with the same bucket count) then crash pre-commit
+    val before = phrase(idx, Seq("sort", "merge"))
+    val fs = fsOf(idx)
+    // an uncommitted batch (the crash hit before the commit): reads
+    // answer unchanged and leave it alone
+    LayoutFs.batch(fs, rootOf(idx)).add("doclens")(d =>
+      Seq((99L, 1L)).toDF("doc_id", "dl").write.parquet(d.toString))
+    assert(phrase(idx, Seq("sort", "merge")) === before)
+    assert(idx.appendedIds.filter(col("doc_id") === 99L).count() === 0)
+    assert(hasBatch(idx) === ((true, false)), "a read never deletes a writer's staging")
+    // the next batch discards it, then stages docsB's layout (a sibling
+    // index with the same bucket count) as an append's moves and commits
+    // without publishing: the crash right after the commit point
+    val batch = LayoutFs.batch(fs, rootOf(idx))
+    assert(!new java.io.File(s"$dir/inv/.commit/doclens").exists(),
+      "the next mutation discards the uncommitted batch")
     val tmp = new InvertedIndex(spark, s"$dir/stage_src", buckets = 8)
     tmp.build(docsB, "doc_id", col("text"))
-    val staging = new java.io.File(s"$dir/inv/.append_staging")
-    assert(staging.mkdirs())
-    assert(new java.io.File(s"$dir/stage_src/postings")
-      .renameTo(new java.io.File(staging, "postings")))
-    assert(new java.io.File(s"$dir/stage_src/doclens")
-      .renameTo(new java.io.File(staging, "doclens")))
-    assert(new java.io.File(s"$dir/stage_src/census/base")
-      .renameTo(new java.io.File(staging, "census")))
-    assert(new java.io.File(s"$dir/inv/.append_pending").mkdirs())
+    batch.add("postings")(stageDir(fs, s"$dir/stage_src/postings"))
+    batch.add("census/base")(stageDir(fs, s"$dir/stage_src/census/base"))
+    batch.add("doclens")(stageDir(fs, s"$dir/stage_src/doclens"))
+    assert(batch.markCommitted())
     // the next read rolls the batch forward: docsB fully visible
     val full = new InvertedIndex(spark, s"$dir/full", buckets = 8)
     full.build(docsA.union(docsB), "doc_id", col("text"))
     assert(phrase(idx, Seq("sort", "merge")) === phrase(full, Seq("sort", "merge")))
     assert(vocabRows(idx) === vocabRows(full),
       "the staged census rows must commit with the batch")
-    assert(!new java.io.File(s"$dir/inv/.append_pending").exists())
-    assert(!new java.io.File(s"$dir/inv/.append_staging").exists())
+    assert(hasBatch(idx) === ((false, false)))
   }
 
   test("delete casts ids to the stored id type (no mixed tombstone schemas)") {
@@ -1267,14 +1292,24 @@ class InvertedIndexSuite extends AnyFunSuite {
     idx.build(docsA, "doc_id", col("text"))
     idx.buildForward()
     idx.append(docsB, "doc_id", col("text"))
-    // simulate a crash mid-apply: the marker exists, no files moved yet
-    val marker = new java.io.File(s"$dir/inv/.derived_apply_pending_forward")
-    assert(marker.mkdirs())
-    // ANY entry point recovers: the delta applies, the marker clears
+    // a crash right after the apply's commit point: the delta's moves,
+    // the refreshed meta (5 live docs) and the delta's drop listed,
+    // nothing published yet
+    val fs = fsOf(idx)
+    val batch = LayoutFs.batch(fs, rootOf(idx))
+    batch.move("forward_delta", "forward")
+    batch.stage("derived_meta/forward") { d =>
+      val out = fs.create(new org.apache.hadoop.fs.Path(d, "built_n_docs.txt"), true)
+      try out.write("5".getBytes("UTF-8")) finally out.close()
+    }
+    batch.drop("forward_delta")
+    assert(batch.markCommitted())
+    // ANY entry point recovers: the delta applies, the batch clears
     val ids = idx.docTerms(Seq(1L, 4L)).select(col("doc_id"))
       .distinct().collect().map(_.getLong(0)).toSet
     assert(ids === Set(1L, 4L), "rolled-forward delta must serve the appended doc")
-    assert(!marker.exists, "the apply marker must clear on roll-forward")
+    assert(hasBatch(idx) === ((false, false)), "the batch must clear on roll-forward")
+    assert(!new java.io.File(s"$dir/inv/forward_delta").exists())
     // and the artifact is no longer stale: maintenance settles to no-op
     val settled = idx.maintainDerived(maxStaleFrac = 0.1)
       .collect().map(r => r.getString(0) -> r.getBoolean(5)).toMap

@@ -29,15 +29,15 @@ import graft.operators.GraphAnn
   * the new one is driven there by re-running the mutation.
   *
   * Commit units: every mutation commits the whole layout at once —
-  * multi-directory rewrites (embedding-store upsert/delete, IVF list
-  * deletes, compactions, merges and splits, graph append) as one
-  * [[LayoutFs.Batch]], the inverted-index append and n-gram versions by
-  * their own markers and pointers, single-directory rewrites by one
-  * swap — so a row compares the whole layout's rows, old or new (the IVF
-  * compactions, which change no rows, compare part-file counts too). A
-  * separately published piece (a store's prefix-dims meta, an inverted
-  * index's derived meta) is its own unit. Snapshots either exist
-  * complete or not at all.
+  * multi-directory rewrites and additions (embedding-store
+  * upsert/delete, IVF list deletes, compactions, merges and splits,
+  * graph append, every inverted-index and query-store mutation) as one
+  * [[LayoutFs.Batch]], n-gram versions by their pointer — so a row
+  * compares the whole layout's rows, old or new (the IVF compactions,
+  * which change no rows, compare part-file counts too). A separately
+  * published piece (a store's prefix-dims meta, the derived meta a
+  * block-max adopt rewrites alone) is its own unit. Snapshots either
+  * exist complete or not at all.
   *
   * A row run with `quietRenames` fails each rename by returning `false`
   * rather than throwing, and checks that the mutation turns that into an
@@ -244,6 +244,27 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
     whole(observeInv(p)) + ("meta" -> fingerprint(inv(p)
       .maintainDerivedVerbose(Double.MaxValue).select("artifact", "built_n_docs")))
 
+  // a forward sidecar built, then an append whose forward delta the next
+  // maintenance pass applies: the delta's moves, the meta and the
+  // delta's drop commit together
+  private def buildInvForward(p: String): Unit = {
+    inv(p).build(docsA, "doc_id", col("text"))
+    inv(p).buildForward()
+    inv(p).append(docsB, "doc_id", col("text"))
+  }
+  private def observeInvForward(p: String): State =
+    whole(observeInv(p) + ("forward" -> fingerprint(inv(p).docTerms(1L to 7L))) +
+      ("meta" -> fingerprint(inv(p).maintainDerivedVerbose(Double.MaxValue)
+        .select("artifact", "built_n_docs"))))
+
+  // the merge source lives beside the target, inside the copied fixture
+  private def mergeSrc(p: String) = inv(p.stripSuffix("/L") + "/S")
+  private def buildInvMerge(p: String): Unit = {
+    buildInv(p)
+    mergeSrc(p).build(Seq((8L, "fresh merge words"), (9L, "sort again"))
+      .toDF("doc_id", "text"), "doc_id", col("text"))
+  }
+
   private def qs(p: String) = new QueryStore(spark, p, buckets = 4)
   private def buildQs(p: String): Unit = {
     qs(p).build(Seq(("a1", "sort", "must"), ("a1", "merge", "must"), ("a1", "spark", "should"),
@@ -324,6 +345,15 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
     Seq((8L, "fresh merge words"), (9L, "sort again")).toDF("doc_id", "text"),
     "doc_id", col("text")), p => whole(observeInv(p)), quietRenames = true))
 
+  row("InvertedIndex.mergeFrom")(sweep(buildInvMerge, p => inv(p).mergeFrom(mergeSrc(p)),
+    p => whole(observeInv(p))))
+  row("InvertedIndex.maintainDerived (forward delta apply)")(sweep(buildInvForward,
+    p => assert(inv(p).maintainDerivedVerbose().filter(col("mode") === "delta_apply").count() == 1),
+    observeInvForward))
+
+  row("QueryStore.append")(sweep(buildQs, p => qs(p).append(Seq(("a7", "sort", "must"),
+    ("a7", "join", "should"), ("a8", "bubble", "must")).toDF("query_id", "term", "clause")),
+    p => whole(observeQs(p))))
   row("QueryStore.vacuum")(sweep(buildQs, p => qs(p).vacuum(), p => whole(observeQs(p))))
   row("QueryStore.compact")(sweep(buildQs, p => qs(p).compact(), p => whole(observeQs(p))))
 

@@ -17,8 +17,10 @@ import graft.TestSpark
   * of each left mid-swap (a live directory renamed to its hidden
   * `.bak`) that the first read must restore. Roots left mid-mutation by
   * the per-layout commit markers that [[LayoutFs.Batch]] replaced (IVF
-  * split and merge, graph append) refuse to open with an `IOException`
-  * naming the marker, for readers and writers alike. */
+  * split and merge, graph append, the inverted index's append and
+  * derived-delta apply markers and its vacuum's census delta) refuse to
+  * open with an `IOException` naming the marker, for readers and
+  * writers alike. */
 class PreLayoutFsCompatSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -38,6 +40,66 @@ class PreLayoutFsCompatSuite extends AnyFunSuite {
   private def refused(marker: String)(body: => Any): Unit = {
     val e = intercept[IOException](body)
     assert(e.getMessage.contains(marker), s"the failure must name $marker: ${e.getMessage}")
+  }
+
+  /** A built inverted index (one tombstone pending) and its answers:
+    * phrase hits, the census and the appended ids. */
+  private def builtInv(): (InvertedIndex, JPath, () => String) = {
+    val dir = Files.createTempDirectory("graft_pre_layoutfs_inv")
+    val idx = new InvertedIndex(spark, dir.resolve("inv").toString, buckets = 4)
+    idx.build(Seq((1L, "merge sort beats bubble sort"), (2L, "sort merge join"),
+      (3L, "unrelated text")).toDF("doc_id", "text"), "doc_id", col("text"))
+    idx.delete(Seq(3L).toDF("doc_id"))
+    def answers() = Seq(idx.bm25(Seq("sort", "merge"), k = 5), idx.vocab(), idx.appendedIds)
+      .map(_.collect().map(_.mkString("|")).sorted.mkString(" ")).mkString("\n")
+    (idx, dir.resolve("inv"), () => answers())
+  }
+
+  private val moreDocs = Seq((8L, "fresh sort words")).toDF("doc_id", "text")
+
+  test("an inverted-index root left mid-append by the append marker refuses to open, naming it") {
+    val (idx, root, _) = builtInv()
+    Files.createDirectories(root.resolve(".append_staging/doclens"))
+    Files.createDirectories(root.resolve(".append_pending"))
+    refused(".append_pending")(idx.vocab().collect())
+    refused(".append_pending")(idx.append(moreDocs, "doc_id", col("text")))
+  }
+
+  test("an inverted-index root with bare append staging ignores it and answers unchanged") {
+    val (idx, root, answers) = builtInv()
+    val want = answers()
+    Files.createDirectories(root.resolve(".append_staging/doclens"))
+    assert(answers() == want, "an unmarked staging dir is hidden debris")
+    idx.append(moreDocs, "doc_id", col("text"))
+    assert(idx.appendedIds.collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 8L))
+  }
+
+  test("an inverted-index root left mid-apply by a derived-delta apply marker refuses to open, naming it") {
+    val (idx, root, _) = builtInv()
+    idx.buildForward()
+    Files.createDirectories(root.resolve(".derived_apply_pending_forward"))
+    refused(".derived_apply_pending_forward")(idx.docTerms(Seq(1L)).collect())
+    refused(".derived_apply_pending_forward")(idx.maintainDerived())
+  }
+
+  test("an inverted-index root left mid-vacuum with a census delta refuses its vocab, naming it") {
+    val (idx, root, _) = builtInv()
+    new StoreCatalog(spark).registerInvertedIndex("pre_layoutfs_inv", root.toString)
+    Seq(("sort", 1L)).toDF("term", "df").write.parquet(root.resolve("census/pending_delta").toString)
+    refused("census/pending_delta")(idx.vocab().collect())
+    val e = intercept[Exception](spark.sql("SELECT * FROM pre_layoutfs_inv_vocab").collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IOException] &&
+        c.getMessage.contains("census/pending_delta")),
+      s"the SQL vocab view must fail on the census delta: $e")
+  }
+
+  test("an inverted-index root left mid-swap restores the postings backup") {
+    val (_, root, answers) = builtInv()
+    val want = answers()
+    Files.move(root.resolve("postings"), root.resolve(".postings.bak"))
+    assert(answers() == want, "the read must restore the backup")
+    assert(Files.exists(root.resolve("postings")) && !Files.exists(root.resolve(".postings.bak")))
   }
 
   test("layouts and snapshots written before LayoutFs open and answer the same") {
