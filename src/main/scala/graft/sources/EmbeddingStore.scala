@@ -52,12 +52,11 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   // ones — a split-schema store). The dims are persisted in a one-line
   // metadata file at the store root on first load and read back as the
   // default; an explicit constructor value must agree with the stored one.
-  // The file is staged under a hidden name and published by
-  // [[LayoutFs.swap]], so a crash never leaves a truncated meta.
+  // The file commits in the same batch as the buckets it describes.
   private val metaPath = new Path(path, "_graft_meta")
 
   private def readStoredPrefixDims(): Option[Int] = {
-    LayoutFs.recover(fs, metaPath)
+    recoverAll()
     if (!fs.exists(metaPath)) None
     else {
       val in = fs.open(metaPath)
@@ -69,13 +68,13 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     }
   }
 
-  private def writeMeta(dims: Int): Unit = {
-    val staged = new Path(path, s".${metaPath.getName}.staging")
-    val out = fs.create(staged, true)
-    try out.write(s"""{"prefixDims": $dims}""".getBytes("UTF-8"))
-    finally out.close()
-    LayoutFs.swap(fs, staged, metaPath)
-  }
+  /** Stage the meta file in `b`. */
+  private def stageMeta(b: LayoutFs.Batch, dims: Int): Unit =
+    b.stage(metaPath.getName) { p =>
+      val out = fs.create(p, true)
+      try out.write(s"""{"prefixDims": $dims}""".getBytes("UTF-8"))
+      finally out.close()
+    }
 
   /** Constructor value if given (validated against disk), else whatever a
     * previous handle persisted. Evaluated lazily so a store handle can be
@@ -322,13 +321,15 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     LayoutFs.snapshot(fs, new Path(path), targetPath,
       spark.sparkContext.hadoopConfiguration)(recoverAll())
 
-  /** Bulk load: derive columns, assign ids, bucket, write. */
+  /** Bulk load: derive columns, assign ids, bucket, and replace the
+    * whole store — every bucket and the meta — as one committed batch. */
   def bulkLoad(raw: DataFrame): Unit = {
-    val df = assignIds(withDerived(raw))
-      .withColumn("bucket", bucketOf(col("post_id")))
-    df.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    val df = withBucket(assignIds(withDerived(raw)))
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      b.stageRows("", Some("bucket"), df)
+      effectivePrefixDims.foreach(stageMeta(b, _))
+    }
     schemaMemo.invalidate()
-    effectivePrefixDims.foreach(writeMeta)
   }
 
   private def withBucket(df: DataFrame): DataFrame =
@@ -338,7 +339,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     buckets.distinct().as[Int].collect().toSeq.sorted
 
   /** Rewrite the given buckets as ONE committed batch
-    * ([[LayoutFs.rewriteParts]]): one partition-pruned read of exactly
+    * ([[LayoutFs.Batch.rewriteParts]]): one partition-pruned read of exactly
     * those buckets, `transform`, and one write repartitioned by bucket.
     * The untouched (numBuckets - |buckets|) directories are never read
     * or written — at 100 TB that's the difference between a point update
@@ -351,24 +352,27 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * place until the write has finished, so the transform may read the
     * store freely. */
   private def rewrite(buckets: Seq[Int])(transform: DataFrame => DataFrame): Unit = {
-    LayoutFs.rewriteParts(fs, new Path(path), "", "bucket", buckets, read())(
-      cur => transform(cur).repartition(col("bucket")))
+    val live = read()
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      b.rewriteParts("", "bucket", buckets, live)(cur => transform(cur).repartition(col("bucket")))
+      // persist the prefix setting on stores that predate it (bulkLoad
+      // wrote it for fresh stores) so LATER handles without the parameter
+      // keep deriving the column instead of splitting the schema
+      effectivePrefixDims.filter(_ => !fs.exists(metaPath)).foreach(stageMeta(b, _))
+    }
     schemaMemo.invalidate()
-    // persist the prefix setting on stores that predate it (bulkLoad wrote
-    // it for fresh stores) so LATER handles without the parameter keep
-    // deriving the column instead of splitting the schema
-    effectivePrefixDims.filter(_ => !fs.exists(metaPath)).foreach(writeMeta)
   }
 
-  /** Sweep the WHOLE store for hidden swap backups left by a crashed
-    * mutation and restore them eagerly, and roll a committed batch
-    * forward. Runs at the top of [[read]] — i.e. before ANY consumer
+  /** Roll a committed batch forward and restore the hidden backups
+    * (`.bucket=N.bak`, `._graft_meta.bak`) an earlier version's swaps
+    * left behind. Runs at the top of [[read]] — i.e. before ANY consumer
     * (including upsert/insertAll, which compute maxId and the
-    * existing-key join from read()) can observe the store. Without the
-    * sweep, a bucket hidden in a `.bak` would make its keys look new to
-    * the next upsert: id churn, lost created_at, and fresh ids colliding
-    * with the hidden bucket's ids store-wide. One glob of the store root
-    * per call ([[LayoutFs.recoverUnder]]) — a single NameNode/S3 LIST,
-    * negligible next to the file listing that follows. */
-  private def recoverAll(): Unit = LayoutFs.recoverUnder(fs, new Path(path), "bucket=*")
+    * existing-key join from read()) can observe the store. Without it,
+    * a bucket hidden in a `.bak` or a staged batch would make its keys
+    * look new to the next upsert: id churn, lost created_at, and fresh
+    * ids colliding with the hidden bucket's ids store-wide. One glob of
+    * the store root per call ([[LayoutFs.recoverUnder]]) — a single
+    * NameNode/S3 LIST, negligible next to the file listing that
+    * follows. */
+  private def recoverAll(): Unit = LayoutFs.recoverUnder(fs, new Path(path), "*")
 }

@@ -21,21 +21,18 @@ import graft.operators.GraphAnn
   * Lifecycle, honestly scoped:
   *  - [[build]] validates and writes the partitioned edges + a one-row
   *    meta (bucket count) and clears tombstones (fresh build = fresh
-  *    live set). Build follows the [[EmbeddingStore.bulkLoad]]
-  *    precedent — a direct overwrite, no two-rename: a crashed build
-  *    is an incomplete NEW store the caller re-runs, not a corrupted
-  *    live one.
+  *    live set), all as one committed batch.
   *  - [[append]] is the FreshDiskANN INSERT: beam-search candidates
   *    over the current graph, RobustPrune to the new node's out-edges,
   *    reverse edges under the degree cap — applied as one committed
   *    batch of bucket rewrites ([[LayoutFs.Batch]]; every read path rolls
   *    a committed batch forward first), request-sized batches only.
   *  - [[delete]] is the FreshDiskANN lazy delete (Singh et al.,
-  *    2105.09613): ids append to a tiny `tombstones/` table, O(batch)
-  *    I/O, edge files untouched. Deleted nodes keep ROUTING — their
-  *    edges still carry the walk, which is what preserves
-  *    navigability — but never RETURN ([[searchTopK]] anti-joins the
-  *    broadcast tombstone set before the final cut).
+  *    2105.09613): ids append to a tiny `tombstones/` table in one
+  *    committed batch, O(batch) I/O, edge files untouched. Deleted
+  *    nodes keep ROUTING — their edges still carry the walk, which is
+  *    what preserves navigability — but never RETURN ([[searchTopK]]
+  *    anti-joins the broadcast tombstone set before the final cut).
   *  - There is deliberately NO edge-rewriting vacuum/compact: removing
   *    a tombstoned node's edges without re-patching its neighbors'
   *    neighborhoods (FreshDiskANN's StreamingMerge) breaks the graph
@@ -65,24 +62,22 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     val cols = adj.columns.toSeq
     require(cols.contains("src") && cols.contains("dst"),
       s"adjacency needs (src, dst[, cosine]) columns, got $cols")
-    // a batch still committed here would roll forward over the new build
-    recoverAll()
     val hasCosine = cols.contains("cosine")
     val keep = Seq("src", "dst") ++ (if (hasCosine) Seq("cosine") else Nil)
-    adj.select(keep.map(col): _*)
-      .withColumn("src", col("src").cast(LongType))
-      .withColumn("dst", col("dst").cast(LongType))
-      .withColumn("gbucket", bucketOf(col("src")))
-      .write.mode("overwrite").partitionBy("gbucket").parquet(edgesPath)
-    // meta records what append must know WITHOUT a corpus-sized job:
-    // has_cosine comes from the schema (free); the build DEGREE is
-    // deliberately NOT persisted — measuring it is a full groupBy over
-    // the adjacency, and append no longer needs it (its re-cap touches
-    // only the nodes whose neighborhoods actually change).
-    spark.range(1).select(lit(buckets).as("buckets"),
-        lit(hasCosine).as("has_cosine"))
-      .write.mode("overwrite").parquet(metaPath)
-    fs.delete(new Path(tombstonesPath), true)
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      b.stageRows("edges", Some("gbucket"), adj.select(keep.map(col): _*)
+        .withColumn("src", col("src").cast(LongType))
+        .withColumn("dst", col("dst").cast(LongType))
+        .withColumn("gbucket", bucketOf(col("src"))))
+      // meta records what append must know WITHOUT a corpus-sized job:
+      // has_cosine comes from the schema (free); the build DEGREE is
+      // deliberately NOT persisted — measuring it is a full groupBy over
+      // the adjacency, and append no longer needs it (its re-cap touches
+      // only the nodes whose neighborhoods actually change).
+      b.stageRows("meta", None, spark.range(1).select(lit(buckets).as("buckets"),
+        lit(hasCosine).as("has_cosine")))
+      b.drop("tombstones")
+    }
   }
 
   /** Stored bucket count — a reopened handle must agree with the
@@ -246,9 +241,9 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     // read+window+write jobs PER bucket — ~3×|touched| driver-scheduled
     // jobs for the same rows. repartition(gbucket) keeps the one-file-
     // per-bucket rule (each bucket lands wholly in one task).
-    LayoutFs.rewriteParts(fs, new Path(path), "edges", "gbucket", touched,
-        spark.read.parquet(edgesPath)
-          .select(col("gbucket"), col("src"), col("dst"), col("cosine"))) { cur =>
+    val live = spark.read.parquet(edgesPath)
+      .select(col("gbucket"), col("src"), col("dst"), col("cosine"))
+    LayoutFs.commit(fs, new Path(path))(_.rewriteParts("edges", "gbucket", touched, live) { cur =>
       cur.unionByName(addDf.select(
           col("gbucket"), col("src"), col("dst"), col("cosine")))
         .groupBy(col("gbucket"), col("src"), col("dst"))
@@ -261,33 +256,34 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
         .select(col("gbucket"), col("src"), col("dst"),
           round(col("cosine"), 6).as("cosine"))
         .repartition(col("gbucket"))
-    }
+    })
     graft.util.Pins.release(addDf)
   }
 
-  /** Crash recovery for read entry points OUTSIDE this class — the V2
-    * SQL layout source (the IvfIndex/QueryStore recoverForRead
-    * precedent). [[append]] commits edge buckets as one batch of swaps,
-    * so a `graph_*` SQL view that read the directory raw could silently
-    * serve a graph missing a committed batch's buckets (still staged, or
-    * hidden as `.gbucket=N.bak`) until the next Scala-side read healed
-    * it. */
-  private[graft] def recoverForRead(): Unit = recoverAll()
+  /** Crash recovery for a SQL scan — run by
+    * [[graft.sources.v2.GraftLayoutSource]] when a view registers and in
+    * `newScanBuilder` before it lists the files of each scan. Both run
+    * the full [[recoverAll]]: a `graph_*` view heals an edge-bucket
+    * backup that appears after its registration too, rather than serve
+    * the graph minus that bucket. */
+  private[graft] def recoverForRead(scan: Boolean): Unit = recoverAll()
 
-  /** Roll a committed append batch forward (it is rooted at the graph
-    * root), then resolve crashed edge-bucket swaps. */
+  /** Roll a committed batch forward (it is rooted at the graph root),
+    * then restore a backup an earlier version's swap left, at the root
+    * or under the edges. */
   private def recoverAll(): Unit = {
     LayoutFs.recoverUnder(fs, new Path(path), "*")
     LayoutFs.recoverUnder(fs, new Path(edgesPath), "gbucket=*")
   }
 
-  /** Lazy delete: append ids to the tombstone table (O(batch)); the
-    * nodes keep routing but stop returning on the next search. */
+  /** Lazy delete: add ids to the tombstone table in one committed batch
+    * (O(batch)); the nodes keep routing but stop returning on the next
+    * search. */
   def delete(ids: DataFrame): Unit = {
     require(ids.columns.toSeq == Seq("id"),
       s"ids must be a single-column (id) frame, got ${ids.columns.toSeq}")
-    ids.select(col("id").cast(LongType))
-      .write.mode("append").parquet(tombstonesPath)
+    LayoutFs.commit(fs, new Path(path))(_.add("tombstones")(dir =>
+      ids.select(col("id").cast(LongType)).write.parquet(dir.toString)))
   }
 
   private def tombstoneIds(): Option[DataFrame] =

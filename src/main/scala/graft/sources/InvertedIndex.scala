@@ -58,14 +58,14 @@ import graft.operators.TextAnalysis
   * [[vocab]] serves from the sidecar without touching the postings
   * layout at all when no tombstones are pending (plan-audited).
   *
-  * Every mutation that touches more than one file commits through ONE
-  * [[LayoutFs.Batch]] on the index root: [[append]] and [[mergeFrom]]
-  * stage their files and list moves into the live directories, the
-  * derived-delta apply lists moves out of the pending delta dirs,
-  * [[vacuum]] and [[compact]] stage replacement postings, doclens and
-  * census. A crash leaves the old layout or the new one whole, so no
-  * read ever sees postings and census out of step; readers roll a
-  * committed batch forward and never delete an uncommitted one. */
+  * Every mutation commits through ONE [[LayoutFs.Batch]] on the index
+  * root: [[build]], the derived builders, [[vacuum]] and [[compact]]
+  * stage replacement directories, [[append]], [[mergeFrom]] and
+  * [[delete]] stage their files and list moves into the live
+  * directories, and the derived-delta apply lists moves out of the
+  * pending delta dirs. A crash leaves the old layout or the new one
+  * whole, so no read ever sees postings and census out of step; readers
+  * roll a committed batch forward and never delete an uncommitted one. */
 final class InvertedIndex(spark: SparkSession, path: String,
     buckets: Int = 16) {
   require(buckets >= 1, s"buckets must be >= 1, got $buckets")
@@ -166,37 +166,29 @@ final class InvertedIndex(spark: SparkSession, path: String,
     import spark.implicits._
     invalidateLiveCount()
     recover()
-    fs.delete(new Path(tombstonesPath), true) // fresh build = fresh live set
-    // old block-max bounds would under-bound a NEW corpus (the unsafe
-    // direction) — drop them; rebuild via buildBlockMax on the cadence
-    fs.delete(new Path(blockmaxPath), true)
-    fs.delete(new Path(blockmaxFilesPath), true)
-    // a stale fielded sidecar would silently serve the OLD corpus's
-    // per-field tfs — drop it; rebuild via buildFielded on the cadence
-    fs.delete(new Path(fieldedPath), true)
-    fs.delete(new Path(derivedMetaPath("fielded")), true)
-    fs.delete(new Path(derivedMetaPath("blockmax")), true)
-    // pending sidecar deltas describe the OLD corpus's append batches
-    fs.delete(new Path(forwardDeltaPath), true)
-    fs.delete(new Path(fieldedDeltaPath), true)
-    Seq(buckets).toDF("n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath)
-    val postings = TextAnalysis.positionalPostings(docs, idCol, text)
-      .localCheckpoint(true) // three consumers: layout write, doclens, census
-    postings
-      .withColumn("tbucket", bucketCol(col("term"), buckets))
-      // tbucket repartition: the same structural file-locality guarantee
-      // append/mergeFrom carry — a later buildBlockMax derives per-file
-      // tf bounds from THIS layout, and a (term, doc) split across two
-      // files of one bucket would make those bounds unsound
-      .repartition(col("tbucket"))
-      .write.mode("overwrite").partitionBy("tbucket").parquet(postingsPath)
-    postings.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      .write.mode("overwrite").parquet(doclensPath)
-    fs.delete(new Path(censusPath), true)
-    writeCensusBase(postings.groupBy(col("term"))
-      .agg(count_distinct(col("doc_id")).as("df")), censusBasePath)
-    graft.util.Pins.release(postings)
+    LayoutFs.commit(fs, root) { batch =>
+      batch.stageRows("meta", None, Seq(buckets).toDF("n_buckets").coalesce(1))
+      val postings = TextAnalysis.positionalPostings(docs, idCol, text)
+        .localCheckpoint(true) // three consumers: layout write, doclens, census
+      batch.stageRows("postings", Some("tbucket"), postings
+        .withColumn("tbucket", bucketCol(col("term"), buckets))
+        // tbucket repartition: the same structural file-locality guarantee
+        // append/mergeFrom carry — a later buildBlockMax derives per-file
+        // tf bounds from THIS layout, and a (term, doc) split across two
+        // files of one bucket would make those bounds unsound
+        .repartition(col("tbucket")))
+      batch.stageRows("doclens", None, postings.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
+      stageCensus(batch, postings.groupBy(col("term"))
+        .agg(count_distinct(col("doc_id")).as("df")), onePerPrefix = false)
+      graft.util.Pins.release(postings)
+      // a fresh build is a fresh live set: old block-max bounds would
+      // under-bound the NEW corpus (the unsafe direction), a stale
+      // fielded sidecar would serve the OLD corpus's per-field tfs, and
+      // pending sidecar deltas describe the OLD corpus's append batches —
+      // rebuild the derived artifacts on the cadence
+      Seq("tombstones", "blockmax", "blockmax_files", "fielded", "derived_meta/fielded",
+        "derived_meta/blockmax", "forward_delta", "fielded_delta").foreach(batch.drop)
+    }
   }
 
   /** One-time layout migration: a census base written before the
@@ -212,9 +204,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val baseP = new Path(censusBasePath)
     if (fs.exists(baseP) && fs.listStatus(baseP).exists(s =>
         s.isFile && !s.getPath.getName.startsWith("_"))) {
-      val batch = LayoutFs.batch(fs, root)
-      stageCensus(batch, censusSummed(), onePerPrefix = true)
-      batch.commit()
+      LayoutFs.commit(fs, root)(stageCensus(_, censusSummed(), onePerPrefix = true))
     }
   }
 
@@ -241,62 +231,53 @@ final class InvertedIndex(spark: SparkSession, path: String,
     recoverCensus()
     migrateFlatCensusBase()
     val b = readBuckets()
-    val batch = LayoutFs.batch(fs, root)
-    val postings = TextAnalysis.positionalPostings(docs, idCol, text)
-      .localCheckpoint(true)
-    // the batch's (doc, dl) and (doc, term, tf) aggregates feed up to
-    // FOUR staged artifacts (doclens, term-grain block-max, file-grain
-    // block-max join, forward delta) — aggregated ONCE each and lazily
-    // checkpointed (the first consumer's job materializes them; no
-    // extra action) WHEN more than one consumer exists; a single
-    // consumer keeps the fused pipeline (checkpoint storage would be
-    // pure overhead)
-    val hasBm = fs.exists(new Path(blockmaxPath))
-    val hasBmFiles = fs.exists(new Path(blockmaxFilesPath))
-    val hasFwd = fs.exists(new Path(forwardPath))
-    def shared(df: DataFrame, consumers: Int): DataFrame =
-      if (consumers >= 2) df.localCheckpoint(false) else df
-    val dl = shared(
-      postings.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")),
-      1 + (if (hasBm) 1 else 0) + (if (hasBmFiles) 1 else 0))
-    val tfDocTerm = shared(
-      postings.groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf")),
-      (if (hasBm) 1 else 0) + (if (hasFwd) 1 else 0))
-    batch.add("postings")(dir => postings
-      .withColumn("tbucket", bucketCol(col("term"), b))
-      // repartition by tbucket (the mergeFrom/compact discipline) so
-      // each staged bucket is ONE task's file: without it, a (term,
-      // doc)'s rows staying file-local depends on explode locality in
-      // the upstream plan plus maxRecordsPerFile=0 — incidental, and a
-      // split would break buildBlockMax's file-grain invariant that
-      // per-file tf IS the doc's exact tf (X228's skip could then drop
-      // a true top-k doc). Structural beats incidental.
-      .repartition(col("tbucket"))
-      .write.partitionBy("tbucket").parquet(dir.toString))
-    if (fs.exists(new Path(censusBasePath)))
-      batch.add("census/base")(dir => writeCensusBase(postings.groupBy(col("term"))
-        .agg(count_distinct(col("doc_id")).as("df")), dir.toString))
-    // block-max maintenance: the batch's bound rows land BEFORE the
-    // batch commits — a crash between the two leaves the sidecar
-    // covering docs that never became visible (bounds loose, safe);
-    // the reverse order could leave a live doc whose tf exceeds every
-    // stored bound (unsound skip). Max/min-merge at read time absorbs
-    // the accreted files.
-    if (hasBm) {
-      tfDocTerm.join(dl, Seq("doc_id"))
-        .groupBy(col("term"))
-        .agg(max(col("tf")).cast(LongType).as("max_tf"),
-          min(col("dl")).cast(LongType).as("min_dl"))
-        .write.mode("append").parquet(blockmaxPath)
+    LayoutFs.commit(fs, root) { batch =>
+      val postings = TextAnalysis.positionalPostings(docs, idCol, text)
+        .localCheckpoint(true)
+      // the batch's (doc, dl) and (doc, term, tf) aggregates feed up to
+      // FOUR staged artifacts (doclens, term-grain block-max, file-grain
+      // block-max join, forward delta) — aggregated ONCE each and lazily
+      // checkpointed (the first consumer's job materializes them; no
+      // extra action) WHEN more than one consumer exists; a single
+      // consumer keeps the fused pipeline (checkpoint storage would be
+      // pure overhead)
+      val hasBm = fs.exists(new Path(blockmaxPath))
+      val hasBmFiles = fs.exists(new Path(blockmaxFilesPath))
+      val hasFwd = fs.exists(new Path(forwardPath))
+      def shared(df: DataFrame, consumers: Int): DataFrame =
+        if (consumers >= 2) df.localCheckpoint(false) else df
+      val dl = shared(
+        postings.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")),
+        1 + (if (hasBm) 1 else 0) + (if (hasBmFiles) 1 else 0))
+      val tfDocTerm = shared(
+        postings.groupBy(col("doc_id"), col("term"))
+          .agg(count(lit(1)).as("tf")),
+        (if (hasBm) 1 else 0) + (if (hasFwd) 1 else 0))
+      batch.add("postings")(dir => postings
+        .withColumn("tbucket", bucketCol(col("term"), b))
+        // repartition by tbucket (the mergeFrom/compact discipline) so
+        // each staged bucket is ONE task's file: without it, a (term,
+        // doc)'s rows staying file-local depends on explode locality in
+        // the upstream plan plus maxRecordsPerFile=0 — incidental, and a
+        // split would break buildBlockMax's file-grain invariant that
+        // per-file tf IS the doc's exact tf (X228's skip could then drop
+        // a true top-k doc). Structural beats incidental.
+        .repartition(col("tbucket"))
+        .write.partitionBy("tbucket").parquet(dir.toString))
+      if (fs.exists(new Path(censusBasePath)))
+        batch.add("census/base")(dir => writeCensusBase(postings.groupBy(col("term"))
+          .agg(count_distinct(col("doc_id")).as("df")), dir.toString))
+      // block-max maintenance: the batch's bound rows join the sidecar
+      // in the same commit as the docs they bound; max/min-merge at read
+      // time absorbs the accreted files
+      if (hasBm) batch.add("blockmax")(dir => termBounds(tfDocTerm, dl).write.parquet(dir.toString))
+      stageFileBlockMax(batch, dl)
+      stageDerivedDeltas(batch, postings, tfDocTerm, b)
+      batch.add("doclens")(dir => dl.write.parquet(dir.toString))
+      graft.util.Pins.release(postings)
+      graft.util.Pins.release(dl)
+      graft.util.Pins.release(tfDocTerm)
     }
-    stageFileBlockMax(batch, dl)
-    stageDerivedDeltas(batch, postings, tfDocTerm, b)
-    batch.add("doclens")(dir => dl.write.parquet(dir.toString))
-    graft.util.Pins.release(postings)
-    graft.util.Pins.release(dl)
-    graft.util.Pins.release(tfDocTerm)
-    batch.commit()
   }
 
   /** Merge ANOTHER index's corpus into this one (X238 — the Lucene
@@ -314,9 +295,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * pending tombstones (run its vacuum first — adopting rows its
     * reads were masking would resurrect its deletes). THIS index's
     * tombstones stay in force unchanged. Block-max term-grain bounds
-    * for the adopted rows land BEFORE the batch commits (the
-    * [[append]] ordering — a crash between leaves bounds loose,
-    * safe); derived sidecars (forward/fielded/file-grain block-max)
+    * for the adopted rows commit in the same batch (the [[append]]
+    * rule); derived sidecars (forward/fielded/file-grain block-max)
     * go stale exactly as after an append — [[maintainDerived]]'s
     * policy covers the rebuild. */
   def mergeFrom(other: InvertedIndex): Unit = {
@@ -330,43 +310,38 @@ final class InvertedIndex(spark: SparkSession, path: String,
         "a re-bucketing merge is a rebuild")
     require(!other.fs.exists(new Path(other.tombstonesPath)),
       s"source ${other.indexPath} has pending tombstones — vacuum it first")
-    val batch = LayoutFs.batch(fs, root)
-    val srcPostings = spark.read.parquet(other.postingsPath)
-    // repartition by tbucket (the compact() discipline) so each staged
-    // bucket is ONE task's file: a plain read→write can split a
-    // multi-row-group source file across tasks at row-group boundaries,
-    // scattering one (term, doc)'s position rows over two files of the
-    // same bucket dir — which would break buildBlockMax's file-grain
-    // invariant that per-file tf IS the doc's exact tf (X228's file
-    // skip would then undercount ceilings and could drop a top-k doc)
-    batch.add("postings")(dir => srcPostings
-      .repartition(col("tbucket"))
-      .write.partitionBy("tbucket").parquet(dir.toString))
-    val srcDoclens = spark.read.parquet(other.doclensPath)
-    if (fs.exists(new Path(censusBasePath)))
-      batch.add("census/base")(dir => writeCensusBase(other.vocab(), dir.toString))
-    // shared (doc, term, tf) aggregate — the block-max bounds and the
-    // forward delta both consume it (the append-path discipline);
-    // checkpointed only when both actually exist on this target
-    val srcTfBase = srcPostings.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val srcTf =
-      if (fs.exists(new Path(blockmaxPath)) &&
-          fs.exists(new Path(forwardPath))) srcTfBase.localCheckpoint(false)
-      else srcTfBase
-    if (fs.exists(new Path(blockmaxPath)))
-      srcTf
-        .join(srcDoclens, Seq("doc_id"))
-        .groupBy(col("term"))
-        .agg(max(col("tf")).cast(LongType).as("max_tf"),
-          min(col("dl")).cast(LongType).as("min_dl"))
-        .write.mode("append").parquet(blockmaxPath)
-    stageFileBlockMax(batch, srcDoclens.select(col("doc_id"), col("dl")))
-    stageDerivedDeltas(batch, srcPostings.select(col("doc_id"), col("term"),
-      col("pos")), srcTf, b)
-    batch.add("doclens")(dir => srcDoclens.write.parquet(dir.toString))
-    graft.util.Pins.release(srcTf)
-    batch.commit()
+    LayoutFs.commit(fs, root) { batch =>
+      val srcPostings = spark.read.parquet(other.postingsPath)
+      // repartition by tbucket (the compact() discipline) so each staged
+      // bucket is ONE task's file: a plain read→write can split a
+      // multi-row-group source file across tasks at row-group boundaries,
+      // scattering one (term, doc)'s position rows over two files of the
+      // same bucket dir — which would break buildBlockMax's file-grain
+      // invariant that per-file tf IS the doc's exact tf (X228's file
+      // skip would then undercount ceilings and could drop a top-k doc)
+      batch.add("postings")(dir => srcPostings
+        .repartition(col("tbucket"))
+        .write.partitionBy("tbucket").parquet(dir.toString))
+      val srcDoclens = spark.read.parquet(other.doclensPath)
+      if (fs.exists(new Path(censusBasePath)))
+        batch.add("census/base")(dir => writeCensusBase(other.vocab(), dir.toString))
+      // shared (doc, term, tf) aggregate — the block-max bounds and the
+      // forward delta both consume it (the append-path discipline);
+      // checkpointed only when both actually exist on this target
+      val srcTfBase = srcPostings.groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("tf"))
+      val srcTf =
+        if (fs.exists(new Path(blockmaxPath)) &&
+            fs.exists(new Path(forwardPath))) srcTfBase.localCheckpoint(false)
+        else srcTfBase
+      if (fs.exists(new Path(blockmaxPath)))
+        batch.add("blockmax")(dir => termBounds(srcTf, srcDoclens).write.parquet(dir.toString))
+      stageFileBlockMax(batch, srcDoclens.select(col("doc_id"), col("dl")))
+      stageDerivedDeltas(batch, srcPostings.select(col("doc_id"), col("term"),
+        col("pos")), srcTf, b)
+      batch.add("doclens")(dir => srcDoclens.write.parquet(dir.toString))
+      graft.util.Pins.release(srcTf)
+    }
   }
 
   /** Every doc_id ever appended — the doclens key set, tombstoned docs
@@ -381,7 +356,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     spark.read.parquet(doclensPath).select(col("doc_id"))
   }
 
-  /** Logical deletion (X175): append the ids to the tombstone table.
+  /** Logical deletion (X175): add the ids to the tombstone table, one
+    * committed batch.
     *
     * '''Vacuum cadence — the tombstone-bound contract.''' Every read
     * masks tombstones with an anti-join whose cost (and, on the fast
@@ -409,8 +385,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     // different integer widths must not leave conflicting parquet
     // schemas in the tombstone dir (the next read would mis-infer)
     val idType = spark.read.parquet(doclensPath).schema("doc_id").dataType
-    ids.select(col("doc_id").cast(idType))
-      .write.mode("append").parquet(tombstonesPath)
+    LayoutFs.commit(fs, root)(_.add("tombstones")(dir =>
+      ids.select(col("doc_id").cast(idType)).write.parquet(dir.toString)))
   }
 
   /** Total on-disk bytes of the tombstone table — the size-gate input
@@ -504,24 +480,24 @@ final class InvertedIndex(spark: SparkSession, path: String,
     recoverCensus()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
-    val batch = LayoutFs.batch(fs, root)
-    val postings = spark.read.parquet(postingsPath)
-    if (fs.exists(new Path(censusBasePath)))
-      stageCensus(batch, minusDelta(censusSummed(), postings
-        .join(ts, Seq("doc_id"), "left_semi")
-        .groupBy(col("term"))
-        .agg(count_distinct(col("doc_id")).as("df"))), onePerPrefix = compactToo)
-    val survPostings = postings.join(ts, Seq("doc_id"), "left_anti")
-    batch.stageRows("postings", Some("tbucket"),
-      if (compactToo) survPostings.repartition(col("tbucket")) else survPostings)
-    val survDoclens = spark.read.parquet(doclensPath).join(ts, Seq("doc_id"), "left_anti")
-    batch.stageRows("doclens", None,
-      if (compactToo) survDoclens.repartition(1) else survDoclens)
-    // pending sidecar deltas may describe docs this vacuum just removed
-    // — applying them later would resurrect ghosts; drop them and let
-    // maintainDerived fall back to the full rebuild
-    Seq("forward_delta", "fielded_delta", "tombstones").foreach(batch.drop)
-    batch.commit()
+    LayoutFs.commit(fs, root) { batch =>
+      val postings = spark.read.parquet(postingsPath)
+      if (fs.exists(new Path(censusBasePath)))
+        stageCensus(batch, minusDelta(censusSummed(), postings
+          .join(ts, Seq("doc_id"), "left_semi")
+          .groupBy(col("term"))
+          .agg(count_distinct(col("doc_id")).as("df"))), onePerPrefix = compactToo)
+      val survPostings = postings.join(ts, Seq("doc_id"), "left_anti")
+      batch.stageRows("postings", Some("tbucket"),
+        if (compactToo) survPostings.repartition(col("tbucket")) else survPostings)
+      val survDoclens = spark.read.parquet(doclensPath).join(ts, Seq("doc_id"), "left_anti")
+      batch.stageRows("doclens", None,
+        if (compactToo) survDoclens.repartition(1) else survDoclens)
+      // pending sidecar deltas may describe docs this vacuum just removed
+      // — applying them later would resurrect ghosts; drop them and let
+      // maintainDerived fall back to the full rebuild
+      Seq("forward_delta", "fielded_delta", "tombstones").foreach(batch.drop)
+    }
   }
 
   /** `base` minus a (term, df) delta, zero-df terms dropped — the
@@ -652,16 +628,16 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(doclensFiles >= 1, s"doclensFiles must be >= 1, got $doclensFiles")
     invalidateLiveCount()
     recoverCensus()
-    val batch = LayoutFs.batch(fs, root)
-    batch.stageRows("postings", Some("tbucket"),
-      spark.read.parquet(postingsPath).repartition(col("tbucket")))
-    batch.stageRows("doclens", None,
-      spark.read.parquet(doclensPath).repartition(doclensFiles))
-    // census base accretes files per append too — merge-sum it to one
-    // file per tprefix partition (vocabulary-sized job)
-    if (fs.exists(new Path(censusBasePath)))
-      stageCensus(batch, censusSummed(), onePerPrefix = true)
-    batch.commit()
+    LayoutFs.commit(fs, root) { batch =>
+      batch.stageRows("postings", Some("tbucket"),
+        spark.read.parquet(postingsPath).repartition(col("tbucket")))
+      batch.stageRows("doclens", None,
+        spark.read.parquet(doclensPath).repartition(doclensFiles))
+      // census base accretes files per append too — merge-sum it to one
+      // file per tprefix partition (vocabulary-sized job)
+      if (fs.exists(new Path(censusBasePath)))
+        stageCensus(batch, censusSummed(), onePerPrefix = true)
+    }
   }
 
   /** Maintenance policy as code (X186): the ops loop [[fileStats]] /
@@ -722,7 +698,6 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def derivedMetaPath(name: String) = s"$path/derived_meta/$name"
   private def forwardDeltaPath = s"$path/forward_delta"
   private def fieldedDeltaPath = s"$path/fielded_delta"
-  private def fieldedDeltaPostingsPath = s"$fieldedDeltaPath/postings"
   private def fieldedDeltaDoclensPath = s"$fieldedDeltaPath/doclens"
 
   /** Stage the batch's DERIVED-SIDECAR DELTAS in the append's `batch`
@@ -762,53 +737,53 @@ final class InvertedIndex(spark: SparkSession, path: String,
     }
   }
 
-  /** Append EXACT (term, file)-grain block-max rows for the batch's
-    * staged postings files into the live sidecar. The staged files keep
-    * their names through the batch's moves, a (term, doc) is
+  /** Add EXACT (term, file)-grain block-max rows for the batch's staged
+    * postings files to the live sidecar, in the same batch. The staged
+    * files keep their names through the batch's moves, a (term, doc) is
     * file-local in them (one input row → one task → one file per
     * bucket), and the docs are NEW (append disjointness) so `dl` comes
     * wholly from the batch — the rows are the exact [[buildBlockMax]]
-    * file-grain bounds for those files. They land BEFORE the batch
-    * commits (the term-grain ordering rule): a crash between leaves
-    * bounds for file names that never became live, which the
-    * listing-driven X228 skip simply never tests — loose, safe. After
-    * the commit the sidecar covers the new files exactly, so
-    * [[maintainDerived]] can ADOPT it (meta refresh, no rebuild). */
+    * file-grain bounds for those files. After the commit the sidecar
+    * covers the new files exactly, so [[maintainDerived]] can ADOPT it
+    * (meta refresh, no rebuild). */
   private def stageFileBlockMax(batch: LayoutFs.Batch,
       batchDoclens: DataFrame): Unit = {
     if (!fs.exists(new Path(blockmaxFilesPath))) return
     val staged = spark.read.parquet(batch.staged("postings").toString)
       .withColumn("__fname", substring_index(input_file_name(), "/", -1))
-    staged.groupBy(col("term"), col("tbucket"), col("__fname"), col("doc_id"))
+    batch.add("blockmax_files")(dir => fileBounds(staged, batchDoclens)
+      .write.partitionBy("tbucket").parquet(dir.toString))
+  }
+
+  /** Term-grain block-max rows: each term's max tf and min dl over the
+    * docs of `tf` ((doc_id, term, tf)) joined to `dl` ((doc_id, dl)). */
+  private def termBounds(tf: DataFrame, dl: DataFrame): DataFrame =
+    tf.join(dl, Seq("doc_id"))
+      .groupBy(col("term"))
+      .agg(max(col("tf")).cast(LongType).as("max_tf"),
+        min(col("dl")).cast(LongType).as("min_dl"))
+
+  /** (term, file)-grain block-max rows of a postings scan carrying
+    * `__fname`: each (term, file)'s max tf and min dl. */
+  private def fileBounds(post: DataFrame, dl: DataFrame): DataFrame =
+    post.groupBy(col("term"), col("tbucket"), col("__fname"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
-      .join(batchDoclens, Seq("doc_id"))
+      .join(dl, Seq("doc_id"))
       .groupBy(col("term"), col("tbucket"), col("__fname"))
       .agg(max(col("tf")).cast(LongType).as("max_tf"),
         min(col("dl")).cast(LongType).as("min_dl"))
       .select(col("term"), col("tbucket"), col("__fname").as("fname"),
         col("max_tf"), col("min_dl"))
-      .write.mode("append").partitionBy("tbucket").parquet(blockmaxFilesPath)
-  }
 
-  /** Record the live doc count a derived artifact was built against —
+  /** Stage `derived_meta/<name>` in `batch`: the live doc count a
+    * derived artifact was built against (`knownLive`, else counted) —
     * the staleness input [[maintainDerived]] reads. Stored as a plain
     * one-line text file written driver-side: the r22 profile showed the
     * previous one-row parquet costing a Spark WRITE job per artifact
     * and a listing+head job pair per read — 12 jobs per q277-class
     * maintenance walk for 8 bytes of bookkeeping. Readers fall back to
     * the old parquet form for layouts written before this round
-    * (snapshots travel byte-faithfully). Committed as one batch: a
-    * crash leaves either the old meta or the new one (a MISSING meta
-    * would be safe anyway — it counts as fully stale, one rebuild
-    * adopts). */
-  private def writeDerivedMeta(name: String,
-      knownLive: Option[Long] = None): Unit = {
-    val batch = LayoutFs.batch(fs, root)
-    stageDerivedMeta(batch, name, knownLive)
-    batch.commit()
-  }
-
-  /** Stage `derived_meta/<name>` in `batch` ([[writeDerivedMeta]]). */
+    * (snapshots travel byte-faithfully). */
   private def stageDerivedMeta(batch: LayoutFs.Batch, name: String,
       knownLive: Option[Long]): Unit = {
     val n = knownLive.getOrElse(liveDocCount())
@@ -871,7 +846,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     // never changes inside a maintain pass (appends committed it
     // earlier; delta-applies move ARTIFACT files), so the live count
     // and each artifact's built count thread through to deltaCovers /
-    // writeDerivedMeta instead of being re-counted per decision — the
+    // stageDerivedMeta instead of being re-counted per decision — the
     // r21 profile showed 5 identical count jobs per q277 pass
     val live = liveDocCount()
     def builtCount(name: String): Long = readDerivedMeta(name)
@@ -956,7 +931,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       applyDelta("forward", Seq("forward_delta" -> "forward"), live)
       Some("delta_apply")
     } else {
-      fs.delete(new Path(forwardDeltaPath), true)
+      if (fs.exists(new Path(forwardDeltaPath))) LayoutFs.commit(fs, root)(_.drop("forward_delta"))
       None
     }
 
@@ -969,7 +944,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         "fielded_delta/doclens" -> "fielded/doclens"), live)
       Some("delta_apply")
     } else {
-      fs.delete(new Path(fieldedDeltaPath), true)
+      if (fs.exists(new Path(fieldedDeltaPath))) LayoutFs.commit(fs, root)(_.drop("fielded_delta"))
       None
     }
 
@@ -978,11 +953,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * no read ever sees the artifact half-applied. */
   private def applyDelta(name: String, moves: Seq[(String, String)],
       live: Long): Unit = {
-    val batch = LayoutFs.batch(fs, root)
-    moves.foreach { case (src, dst) => batch.move(src, dst) }
-    stageDerivedMeta(batch, name, Some(live))
-    batch.drop(s"${name}_delta")
-    batch.commit()
+    LayoutFs.commit(fs, root) { batch =>
+      moves.foreach { case (src, dst) => batch.move(src, dst) }
+      stageDerivedMeta(batch, name, Some(live))
+      batch.drop(s"${name}_delta")
+    }
   }
 
   /** The block-max sidecars maintain themselves THROUGH appends (term
@@ -1011,7 +986,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
         .collect().map(r => (r.getInt(0), r.getString(1))).toSet
       live.subsetOf(sidecar)
     }
-    if (covered) { writeDerivedMeta("blockmax", Some(live)); Some("adopt") }
+    if (covered) {
+      LayoutFs.commit(fs, root)(stageDerivedMeta(_, "blockmax", Some(live)))
+      Some("adopt")
+    }
     else None
   }
 
@@ -1373,18 +1351,15 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * predicate documented on [[livePostings]]. */
   def bucketCount: Int = { recover(); readBuckets() }
 
-  /** Crash recovery for a SQL scan of `table` — run by
+  /** Crash recovery for a SQL scan — run by
     * [[graft.sources.v2.GraftLayoutSource]] when a view registers (the
     * full [[recover]]) and in `newScanBuilder`, before it lists the
     * files of each scan (`scan`: the roll-forward of a committed batch
     * alone, one probe). Every mutation of this version commits through a
     * batch, so a backup or a legacy marker at the root can only predate
-    * the registration's full check. A census scan also refuses an
-    * earlier version's census delta, like [[vocab]]. */
-  private[graft] def recoverForRead(table: String, scan: Boolean): Unit = {
+    * the registration's full check. */
+  private[graft] def recoverForRead(scan: Boolean): Unit =
     if (scan) LayoutFs.rollForward(fs, root) else recover()
-    if (table == "census") LayoutFs.refuseCensusDelta(fs, new Path(censusPath))
-  }
 
   /** Dirichlet query-likelihood ranking (X197; Zhai & Lafferty, SIGIR
     * '01 — THE classic LM ranker next to BM25): top-k docs by
@@ -1747,19 +1722,14 @@ final class InvertedIndex(spark: SparkSession, path: String,
       .filter(col("__rk") <= keepPerTerm)
       .select(col("term"), col("doc_id"))
     val target = new InvertedIndex(spark, targetPath, b)
-    Seq(b).toDF("n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$targetPath/meta")
-    live.join(keep, Seq("term", "doc_id"), "left_semi")
-      .select(col("doc_id"), col("pos"), col("term"))
-      .withColumn("tbucket", bucketCol(col("term"), b))
-      .write.mode("overwrite").partitionBy("tbucket")
-      .parquet(s"$targetPath/postings")
-    liveOnly(spark.read.parquet(doclensPath))
-      .write.mode("overwrite").parquet(s"$targetPath/doclens")
-    val tFs = new Path(targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    tFs.delete(new Path(s"$targetPath/census"), true)
-    writeCensusBase(vocab(), s"$targetPath/census/base")
+    LayoutFs.commit(target.fs, target.root) { batch =>
+      batch.stageRows("meta", None, Seq(b).toDF("n_buckets").coalesce(1))
+      batch.stageRows("postings", Some("tbucket"), live.join(keep, Seq("term", "doc_id"), "left_semi")
+        .select(col("doc_id"), col("pos"), col("term"))
+        .withColumn("tbucket", bucketCol(col("term"), b)))
+      batch.stageRows("doclens", None, liveOnly(spark.read.parquet(doclensPath)))
+      stageCensus(batch, vocab(), onePerPrefix = false)
+    }
     target
   }
 
@@ -1814,9 +1784,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * maintenance cadence, never required for correctness — every
     * consumer falls back to plain [[bm25]] when it is absent), with one
     * crucial invariant: the stored bounds must UPPER-bound the current
-    * live corpus at all times. [[append]] therefore writes the batch's
-    * bound rows BEFORE committing the batch (a crash between the two
-    * leaves bounds loose — safe), [[vacuum]] leaves the rows untouched
+    * live corpus at all times. [[append]] therefore adds the batch's
+    * bound rows in the same commit as its docs, [[vacuum]] leaves the rows untouched
     * (bounds over a superset are loose — safe; rebuild to re-tighten),
     * and [[build]] DELETES the sidecar (a fresh corpus invalidates old
     * bounds in the unsafe direction). Reads max/min-merge across the
@@ -1834,41 +1803,29 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val post = shared.getOrElse(
       livePostingsScan()
         .localCheckpoint(true)) // two grains aggregate from one read
-    try {
-      val dls = liveOnly(spark.read.parquet(doclensPath))
-      tfShared.getOrElse(
-          post.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
-        .join(dls, Seq("doc_id"))
-        .groupBy(col("term"))
-        .agg(max(col("tf")).cast(LongType).as("max_tf"),
-          min(col("dl")).cast(LongType).as("min_dl"))
-        .write.mode("overwrite").parquet(blockmaxPath)
-      // (term, file)-grain rows (Ding & Suel SIGIR'11 — true block-max):
-      // a (term, doc) pair is file-local (one input row → one task →
-      // one file per bucket; the append-disjointness contract forbids
-      // re-sent docs), so the per-file tf is the doc's exact tf and
-      // partial(max_tf_F, min_dl_F) ceilings every doc in F. File
-      // identity is (tbucket, fname) — parquet task files carry a job
-      // UUID, so a REWRITTEN layout (vacuum/compact) never aliases an
-      // old name: its new files are simply uncovered (no skip, sound)
-      // until the next buildBlockMax re-tightens.
-      // tbucket-partitioned like the postings themselves: the sidecar
-      // is postings-scale ((term, file) pairs), so the serve-time
-      // lookup must prune at the file listing to the ESSENTIAL terms'
-      // buckets — an unpartitioned sidecar would cost a full scan per
-      // query at corpus scale
-      post.groupBy(col("term"), col("tbucket"), col("__fname"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"))
-        .join(dls, Seq("doc_id"))
-        .groupBy(col("term"), col("tbucket"), col("__fname"))
-        .agg(max(col("tf")).cast(LongType).as("max_tf"),
-          min(col("dl")).cast(LongType).as("min_dl"))
-        .select(col("term"), col("tbucket"), col("__fname").as("fname"),
-          col("max_tf"), col("min_dl"))
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(blockmaxFilesPath)
-    } finally if (own) graft.util.Pins.release(post)
-    writeDerivedMeta("blockmax")
+    LayoutFs.commit(fs, root) { batch =>
+      try {
+        val dls = liveOnly(spark.read.parquet(doclensPath))
+        batch.stageRows("blockmax", None, termBounds(tfShared.getOrElse(
+          post.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))), dls))
+        // (term, file)-grain rows (Ding & Suel SIGIR'11 — true block-max):
+        // a (term, doc) pair is file-local (one input row → one task →
+        // one file per bucket; the append-disjointness contract forbids
+        // re-sent docs), so the per-file tf is the doc's exact tf and
+        // partial(max_tf_F, min_dl_F) ceilings every doc in F. File
+        // identity is (tbucket, fname) — parquet task files carry a job
+        // UUID, so a REWRITTEN layout (vacuum/compact) never aliases an
+        // old name: its new files are simply uncovered (no skip, sound)
+        // until the next buildBlockMax re-tightens.
+        // tbucket-partitioned like the postings themselves: the sidecar
+        // is postings-scale ((term, file) pairs), so the serve-time
+        // lookup must prune at the file listing to the ESSENTIAL terms'
+        // buckets — an unpartitioned sidecar would cost a full scan per
+        // query at corpus scale
+        batch.stageRows("blockmax_files", Some("tbucket"), fileBounds(post, dls))
+      } finally if (own) graft.util.Pins.release(post)
+      stageDerivedMeta(batch, "blockmax", None)
+    }
   }
 
   /** BM25 top-k with the MaxScore cut (X211) — bit-identical results to
@@ -2105,36 +2062,33 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(headLen >= 1, s"headLen must be positive, got $headLen")
     import spark.implicits._
     val b = readBuckets()
-    val fs2 = fs
-    // rebuild covers the pending batches — and a headLen CHANGE makes
-    // deltas cut at the old boundary wrong, never just redundant
-    fs2.delete(new Path(fieldedDeltaPath), true)
-    fs2.delete(new Path(fieldedPath), true)
     val own = shared.isEmpty
     val live = shared.getOrElse(
       liveOnly(spark.read.parquet(postingsPath))
         .localCheckpoint(true)) // two consumers: fielded postings + doclens
-    try {
-      live.groupBy(col("doc_id"), col("term"))
-        .agg(count(when(col("pos") < headLen, 1)).as("tf_head"),
-          count(when(col("pos") >= headLen, 1)).as("tf_body"))
-        .withColumn("tbucket", bucketCol(col("term"), b))
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(fieldedPostingsPath)
-      live.groupBy(col("doc_id"))
-        .agg(count(when(col("pos") < headLen, 1)).cast(LongType).as("dlh"),
-          count(when(col("pos") >= headLen, 1)).cast(LongType).as("dlb"))
-        .write.mode("overwrite").parquet(fieldedDoclensPath)
-    } finally if (own) graft.util.Pins.release(live)
-    // head_len meta: a plain text file written driver-side (the
-    // derived-meta rule — one integer of bookkeeping is not worth a
-    // Spark write job + a listing/head job pair per read); readers
-    // fall back to the pre-r22 one-row parquet form
-    val metaDir = new Path(s"$fieldedPath/meta")
-    fs2.mkdirs(metaDir)
-    val out = fs2.create(new Path(metaDir, "head_len.txt"), true)
-    try out.write(headLen.toString.getBytes("UTF-8")) finally out.close()
-    writeDerivedMeta("fielded")
+    LayoutFs.commit(fs, root) { batch =>
+      try batch.stage("fielded") { dir =>
+        live.groupBy(col("doc_id"), col("term"))
+          .agg(count(when(col("pos") < headLen, 1)).as("tf_head"),
+            count(when(col("pos") >= headLen, 1)).as("tf_body"))
+          .withColumn("tbucket", bucketCol(col("term"), b))
+          .write.partitionBy("tbucket").parquet(s"$dir/postings")
+        live.groupBy(col("doc_id"))
+          .agg(count(when(col("pos") < headLen, 1)).cast(LongType).as("dlh"),
+            count(when(col("pos") >= headLen, 1)).cast(LongType).as("dlb"))
+          .write.parquet(s"$dir/doclens")
+        // head_len meta: a plain text file written driver-side (the
+        // derived-meta rule — one integer of bookkeeping is not worth a
+        // Spark write job + a listing/head job pair per read); readers
+        // fall back to the pre-r22 one-row parquet form
+        val out = fs.create(new Path(dir, "meta/head_len.txt"), true)
+        try out.write(headLen.toString.getBytes("UTF-8")) finally out.close()
+      } finally if (own) graft.util.Pins.release(live)
+      stageDerivedMeta(batch, "fielded", None)
+      // the rebuild covers the pending batches — and a headLen CHANGE
+      // makes deltas cut at the old boundary wrong, never just redundant
+      batch.drop("fielded_delta")
+    }
   }
 
   /** The headLen the fielded sidecar was built with — memoized per
@@ -2259,16 +2213,17 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * path. */
   private def buildForwardFrom(shared: Option[DataFrame],
       tfShared: Option[DataFrame]): Unit = {
-    // a full rebuild covers every appended doc — a pending delta kept
-    // around would double-apply on the next maintenance pass
-    fs.delete(new Path(forwardDeltaPath), true)
     val b = readBuckets()
-    tfShared.getOrElse(
-        shared.getOrElse(liveOnly(spark.read.parquet(postingsPath)))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
-      .withColumn("dbucket", bucketCol(col("doc_id").cast(StringType), b))
-      .write.mode("overwrite").partitionBy("dbucket").parquet(forwardPath)
-    writeDerivedMeta("forward")
+    LayoutFs.commit(fs, root) { batch =>
+      batch.stageRows("forward", Some("dbucket"), tfShared.getOrElse(
+          shared.getOrElse(liveOnly(spark.read.parquet(postingsPath)))
+            .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
+        .withColumn("dbucket", bucketCol(col("doc_id").cast(StringType), b)))
+      stageDerivedMeta(batch, "forward", None)
+      // a full rebuild covers every appended doc — a pending delta kept
+      // around would double-apply on the next maintenance pass
+      batch.drop("forward_delta")
+    }
   }
 
   /** The (doc_id, term, tf) term vectors of exactly `docIds`, read from

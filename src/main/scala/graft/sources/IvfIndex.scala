@@ -42,13 +42,11 @@ import graft.operators.{Ann, Pq}
   * re-training centroids; like any IVF, a stale index degrades recall,
   * not correctness of the "within probed lists" contract.
   *
-  * Crash-safety invariant shared by every mutation: the sidecar is an
-  * advisory SUPERSET of the data layout's ids — appends write the
-  * sidecar BEFORE the data files, deletes rewrite the data lists BEFORE
-  * the sidecar buckets, so a crash at any point leaves the sidecar
-  * over-approximating (a later delete anti-joins a list needlessly — a
-  * no-op) and never under-approximating (which would let a row survive
-  * its own deletion). Search never reads the sidecar. */
+  * Every mutation — build, append, delete, compaction, split, merge —
+  * commits its data, sidecar and centroid changes as ONE
+  * [[LayoutFs.Batch]] on the index root, so a crash leaves the whole
+  * index old or whole new, and the sidecar always maps exactly the
+  * live lists' ids. Search never reads the sidecar. */
 final class IvfIndex(spark: SparkSession, path: String,
     assignBuckets: Int = 16) {
   require(assignBuckets >= 1, s"assignBuckets must be >= 1, got $assignBuckets")
@@ -68,12 +66,6 @@ final class IvfIndex(spark: SparkSession, path: String,
   private def bucketOf(id: org.apache.spark.sql.Column, b: Int) =
     pmod(hash(id.cast(StringType)), lit(b)).cast(IntegerType)
 
-  private def writeAssignMeta(metaPath: String): Unit = {
-    import spark.implicits._
-    Seq(assignBuckets).toDF("n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath)
-  }
-
   // sidecar bucket counts: written once per sidecar lifetime — memoized
   // per instance, stamped by the meta dir (r22 profile: this one-row
   // read scheduled as 16 jobs per q231-class lifecycle walk)
@@ -84,21 +76,10 @@ final class IvfIndex(spark: SparkSession, path: String,
       new graft.util.StampedMemo[Int](() => fs, Seq(metaPath)))
       .apply(spark.read.parquet(metaPath).head().getInt(0))
 
-  /** Write (id, ivf_list) sidecar rows for an assigned batch. Overwrite
-    * mode stamps a fresh B; append mode reuses the stored B (and is a
-    * documented no-op on a pre-sidecar index, which then keeps the
-    * full-scan discovery fallback). */
-  private def writeAssign(assigned: DataFrame, assignBase: String,
-      metaPath: String, overwrite: Boolean): Unit = {
-    val b =
-      if (overwrite) { writeAssignMeta(metaPath); assignBuckets }
-      else if (fs.exists(new Path(metaPath))) readAssignBuckets(metaPath)
-      else return
-    assigned
-      .select(col("id"), col("ivf_list"), bucketOf(col("id"), b).as("abucket"))
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy("abucket").parquet(assignBase)
-  }
+  /** The (id, ivf_list, abucket) sidecar rows of assigned rows, for a
+    * B-bucket sidecar. */
+  private def sidecarRows(assigned: DataFrame, b: Int): DataFrame =
+    assigned.select(col("id"), col("ivf_list"), bucketOf(col("id"), b).as("abucket"))
 
   /** Assign every row to its list and write the partitioned layout.
     * One broadcast-assignment pass over `embs`, one shuffle-free write
@@ -106,25 +87,42 @@ final class IvfIndex(spark: SparkSession, path: String,
     * (keep it far below the row count — the usual √n-ish
     * coarse-quantizer sizing). */
   def build(embs: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Array[Float]]): Unit = {
-    require(centroids.nonEmpty, "need at least one centroid")
+      centroids: Seq[Array[Float]]): Unit =
+    buildLayouts(embs, idCol, vecCol, centroids, raw = true, books = None)
+
+  /** Build the raw lists (`raw`) and/or the PQ codes (`books`) with their
+    * sidecars and the centroid table from ONE assignment pass, committed
+    * as one batch that replaces them: [[build]], [[buildPq]] and
+    * [[buildWithPq]] are its three shapes. The assignment feeds every
+    * staged write, so it is lazily checkpointed — the corpus is scanned
+    * and argmax-scored once, not once per consumer. */
+  private def buildLayouts(embs: DataFrame, idCol: String, vecCol: String,
+      coarse: Seq[Array[Float]], raw: Boolean, books: Option[Pq.Codebooks]): Unit = {
+    require(coarse.nonEmpty, "need at least one coarse centroid")
     import spark.implicits._
-    // a batch still committed here would roll forward over the new build
-    recover()
-    // the assignment pass feeds BOTH the sidecar and the lists write:
-    // lazily checkpointed so the corpus is scanned and argmax-scored
-    // once, not once per consumer (two full passes at corpus scale)
     val assigned = Ann.ivfAssign(
       embs.select(col(idCol).as("id"), col(vecCol).as("vector")),
-      "vector", centroids).localCheckpoint(false)
-    writeAssign(assigned.select(col("id"), col("ivf_list")),
-      assignPath, assignMetaPath, overwrite = true)
-    assigned
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(listsPath)
-    graft.util.Pins.release(assigned)
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(centroidsPath)
+      "vector", coarse).localCheckpoint(false)
+    def stageSidecar(b: LayoutFs.Batch, rel: String): Unit = {
+      b.stageRows(s"${rel}_meta", None, Seq(assignBuckets).toDF("n_buckets").coalesce(1))
+      b.stageRows(rel, Some("abucket"), sidecarRows(assigned, assignBuckets))
+    }
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      if (raw) {
+        stageSidecar(b, "assign")
+        b.stageRows("lists", Some("ivf_list"), assigned)
+      }
+      books.foreach { bk =>
+        stageSidecar(b, "assign_pq")
+        b.stageRows("codes", Some("ivf_list"), Pq.encode(assigned, "vector", bk)
+          .select(col("id"), col("codes"), col("ivf_list")))
+        b.stage("codebooks")(dir => bk.zipWithIndex.flatMap { case (cents, j) =>
+          cents.zipWithIndex.map { case (c, code) => (j, code, c.toSeq) }
+        }.toSeq.toDF("subspace", "code", "centroid").coalesce(1).write.parquet(dir.toString))
+      }
+      graft.util.Pins.release(assigned)
+      b.stage("centroids")(writeCentroids(coarse, _))
+    }
   }
 
   /** Incremental append (X124): assign NEW rows against the FROZEN
@@ -136,13 +134,11 @@ final class IvfIndex(spark: SparkSession, path: String,
     * an index built on A then appended with B is file-layout-append but
     * RESULT-identical to one built on A ∪ B with the same centroids —
     * search parity is suite-pinned across an (nprobe, k) grid and
-    * oracle-gated (q167). Parquet append is directory-additive: existing
-    * files are never touched, so a crashed append leaves at worst
-    * orphan part-files in probed directories — re-run with the same
-    * batch after dedup, never rebuild. The sidecar lands BEFORE the
-    * list files (the superset invariant), and [[recover]] runs first so
-    * a half-done delete is resolved before new files land in its
-    * directory.
+    * oracle-gated (q167). The append is directory-additive: the new
+    * list files and their sidecar rows stage beside the layout and move
+    * into the live `ivf_list=N` and `abucket=N` directories as one
+    * committed batch, so existing files are never touched and a crashed
+    * append leaves the index as it was — re-run it with the same batch.
     *
     * Same scale shape as [[build]]: one broadcast-assignment pass over
     * the batch, shuffle-free partitioned writes proportional to the
@@ -152,6 +148,15 @@ final class IvfIndex(spark: SparkSession, path: String,
     * within-probed-lists exactness. */
   def append(embs: DataFrame, idCol: String, vecCol: String): Unit = {
     recover(listsPath, assignPath)
+    appendTo("lists", "assign", embs, idCol, vecCol)(identity)
+  }
+
+  /** Assign `embs` against the stored centroids and add `rows` of the
+    * assignment to the `rel` lists, with their sidecar rows (under the
+    * stored B; a pre-sidecar index keeps the full-scan discovery
+    * fallback and gets none), as one committed batch. */
+  private def appendTo(rel: String, assignRel: String, embs: DataFrame, idCol: String,
+      vecCol: String)(rows: DataFrame => DataFrame): Unit = {
     val cs = loadCentroids()
     // shared only when the sidecar will actually be written (a
     // pre-sidecar layout keeps the single fused pass); released only
@@ -160,13 +165,15 @@ final class IvfIndex(spark: SparkSession, path: String,
     val assignedBase = Ann.ivfAssign(
       embs.select(col(idCol).as("id"), col(vecCol).as("vector")),
       "vector", cs)
-    val share = fs.exists(new Path(assignMetaPath))
+    val metaPath = s"$path/${assignRel}_meta"
+    val share = fs.exists(new Path(metaPath))
     val assigned =
       if (share) assignedBase.localCheckpoint(false) else assignedBase
-    writeAssign(assigned.select(col("id"), col("ivf_list")),
-      assignPath, assignMetaPath, overwrite = false)
-    assigned
-      .write.mode("append").partitionBy("ivf_list").parquet(listsPath)
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      if (share) b.add(assignRel)(dir => sidecarRows(assigned, readAssignBuckets(metaPath))
+        .write.partitionBy("abucket").parquet(dir.toString))
+      b.add(rel)(dir => rows(assigned).write.partitionBy("ivf_list").parquet(dir.toString))
+    }
     if (share) graft.util.Pins.release(assigned)
   }
 
@@ -184,12 +191,11 @@ final class IvfIndex(spark: SparkSession, path: String,
     * `ids` is a single-column (`id`) frame, so a corpus-scale deletion
     * set never collects to the driver; only the touched-list NUMBERS and
     * bucket NUMBERS do (bounded by k and B, the bounded-scalar-anchor
-    * class). The touched lists commit as one [[LayoutFs.Batch]] (a crash
-    * leaves all of them old or all new; [[recover]] rolls a committed
-    * batch forward before the next read). Lists rewrite BEFORE sidecar
-    * buckets, keeping the sidecar a superset under any crash. A list
-    * whose every row is deleted remains as an empty directory — harmless
-    * to partition discovery. */
+    * class). The touched lists and sidecar buckets commit as one
+    * [[LayoutFs.Batch]] (a crash leaves all of them old or all new;
+    * [[recover]] rolls a committed batch forward before the next read).
+    * A list whose every row is deleted remains as an empty directory —
+    * harmless to partition discovery. */
   def delete(ids: DataFrame): Unit = {
     recover(listsPath, assignPath)
     deleteFrom("lists", "assign", assignMetaPath, ids)
@@ -211,43 +217,45 @@ final class IvfIndex(spark: SparkSession, path: String,
     require(ids.columns.toSeq == Seq("id"),
       s"ids must be a single-column (id) frame, got ${ids.columns.toSeq}")
     val antiJoin = (read: DataFrame) => read.join(ids, Seq("id"), "left_anti")
-    if (fs.exists(new Path(metaPath))) {
+    val (lists, buckets) = if (fs.exists(new Path(metaPath))) {
       val b = readAssignBuckets(metaPath)
       val buckets = ids.select(bucketOf(col("id"), b).as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
       val hits = touchedFrame(ids, s"$path/$assignRel", buckets).collect()
-      rewrite(rel, "ivf_list", hits.map(_.getInt(0)).distinct.sorted.toSeq)(antiJoin)
-      rewrite(assignRel, "abucket", hits.map(_.getInt(1)).distinct.sorted.toSeq)(antiJoin)
+      (hits.map(_.getInt(0)).distinct.sorted.toSeq, hits.map(_.getInt(1)).distinct.sorted.toSeq)
     } else {
       // pre-sidecar layout: full-index id-column discovery (the documented
       // fallback — O(index file listing), which is why the sidecar exists)
-      val touched = spark.read.parquet(s"$path/$rel").join(ids, Seq("id"))
-        .select(col("ivf_list")).distinct().collect().map(_.getInt(0)).toSeq.sorted
-      rewrite(rel, "ivf_list", touched)(antiJoin)
+      (spark.read.parquet(s"$path/$rel").join(ids, Seq("id"))
+        .select(col("ivf_list")).distinct().collect().map(_.getInt(0)).toSeq.sorted, Nil)
+    }
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      rewrite(b, rel, "ivf_list", lists)(antiJoin)
+      rewrite(b, assignRel, "abucket", buckets)(antiJoin)
     }
   }
 
-  /** Rewrite the touched `partCol=N` directories of the layout at
-    * `path/rel` in ONE Spark job and ONE committed batch
-    * ([[LayoutFs.rewriteParts]]): a partition-pruned read of exactly the
-    * touched directories, one `transform` (anti-join survivors for
-    * [[delete]], identity + repartition for [[compact]], a pair anti-join
-    * for [[cleanAssignPairs]]), one partitioned write into the batch's
-    * hidden staging — so a wide-deletion batch costs k+B renames, not
-    * k+B Spark jobs, and a crash leaves every touched directory old or
-    * every one new. A partition whose every row is deleted swaps in as
-    * an empty directory, preserving the emptied-list behavior. */
-  private def rewrite(rel: String, partCol: String, touched: Seq[Int])(
+  /** Stage a rewrite of the touched `partCol=N` directories of the
+    * layout at `path/rel` in `b`, in ONE Spark job
+    * ([[LayoutFs.Batch.rewriteParts]]): a partition-pruned read of
+    * exactly the touched directories, one `transform` (anti-join
+    * survivors for [[delete]], identity + repartition for [[compact]], a
+    * pair relabel for [[relabelAssign]]), one partitioned write into the
+    * batch's hidden staging — so a wide-deletion batch costs k+B
+    * renames, not k+B Spark jobs. A partition whose every row is deleted
+    * swaps in as an empty directory, preserving the emptied-list
+    * behavior. Nothing touched reads nothing. */
+  private def rewrite(b: LayoutFs.Batch, rel: String, partCol: String, touched: Seq[Int])(
       transform: DataFrame => DataFrame): Unit =
-    LayoutFs.rewriteParts(fs, new Path(path), rel, partCol, touched,
-      spark.read.parquet(s"$path/$rel"))(transform)
+    if (touched.nonEmpty)
+      b.rewriteParts(rel, partCol, touched, spark.read.parquet(s"$path/$rel"))(transform)
 
   /** Small-file compaction for the raw lists layout (X166): every
     * [[append]] adds part-files to its touched `ivf_list=N` directories
-    * (parquet append is directory-additive by design — that IS the crash
-    * story), so a long-running ingest loop accretes files until open/seek
-    * overhead dominates the probed read. `compact` rewrites the named
-    * lists in ONE job — each directory's rows repartitioned to one
+    * (directory-additive by design), so a long-running ingest loop
+    * accretes files until open/seek overhead dominates the probed read.
+    * `compact` rewrites the named lists in ONE job — each directory's
+    * rows repartitioned to one
     * output file — under the same committed batch as a delete, so a crash
     * mid-compaction leaves every named list old or every one new, and
     * search never sees a half-compacted list. Content is bit-identical (suite-pinned); WHICH
@@ -256,7 +264,8 @@ final class IvfIndex(spark: SparkSession, path: String,
   def compact(listIds: Seq[Int]): Unit = {
     recover(listsPath)
     requireDirs(listsPath, "ivf_list", listIds)
-    rewrite("lists", "ivf_list", listIds)(_.repartition(col("ivf_list")))
+    LayoutFs.commit(fs, new Path(path))(
+      rewrite(_, "lists", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
   }
 
   /** [[compact]] for the PQ codes layout — appendPq accretes files the
@@ -264,7 +273,8 @@ final class IvfIndex(spark: SparkSession, path: String,
   def compactPq(listIds: Seq[Int]): Unit = {
     recover(codesPath)
     requireDirs(codesPath, "ivf_list", listIds)
-    rewrite("codes", "ivf_list", listIds)(_.repartition(col("ivf_list")))
+    LayoutFs.commit(fs, new Path(path))(
+      rewrite(_, "codes", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
   }
 
   /** Compact BOTH assignment sidecars' hash buckets (every append adds a
@@ -272,15 +282,16 @@ final class IvfIndex(spark: SparkSession, path: String,
     * job). No-op for a layout whose sidecar was never written. */
   def compactAssign(): Unit = {
     recover(assignPath, assignPqPath)
-    Seq(("assign", assignMetaPath), ("assign_pq", assignPqMetaPath))
-      .foreach { case (rel, meta) =>
-        if (fs.exists(new Path(meta))) {
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      Seq(("assign", assignMetaPath), ("assign_pq", assignPqMetaPath))
+        .filter { case (_, meta) => fs.exists(new Path(meta)) }
+        .foreach { case (rel, meta) =>
           // a bucket no id ever hashed to has no directory — the rewrite
           // leaves it absent
-          rewrite(rel, "abucket", 0 until readAssignBuckets(meta))(
+          rewrite(b, rel, "abucket", 0 until readAssignBuckets(meta))(
             _.repartition(col("abucket")))
         }
-      }
+    }
   }
 
   /** Part-file counts per `ivf_list=N` directory of the raw lists —
@@ -399,27 +410,18 @@ final class IvfIndex(spark: SparkSession, path: String,
     * monitoring contract — so the operation's work is ∝ the one list,
     * never the index.
     *
-    * Crash protocol (roll-forward, strictly ordered):
-    *  1. sidecar rows (moved id → new list) APPEND — the superset
-    *     invariant: from here a delete of a moved id anti-joins the new
-    *     list too, whichever directory the row is in;
-    *  2. both halves and the grown centroid set staged and committed as
-    *     one [[LayoutFs.Batch]] — [[recover]] rolls a committed batch
-    *     FORWARD, and a batch that crashed before its commit is hidden
-    *     debris the next mutation discards (the live lists and centroids
-    *     are untouched until the commit, so every reader sees the old
-    *     index or the whole new one);
-    *  3. stale sidecar pairs (moved id → old list) removed — a crash
-    *     leaves a superset, never an under-approximation.
+    * Both halves, the moved ids' sidecar rows and the grown centroid set
+    * stage and commit as one [[LayoutFs.Batch]], so every reader sees
+    * the old index or the whole new one.
     *
     * A degenerate list (all vectors identical, or a single row — 2-means
     * cannot produce two non-empty halves) aborts cleanly with None; the
     * index is untouched. A PQ codes layout RIDES ALONG: the codes here
     * quantize the raw vector (no coarse residual), so the split is a
-    * pure id-keyed move for the compressed layout — its halves stage
-    * beside the raw ones in the same batch, and both sidecars
-    * keep the superset invariant; only [[retrain]] (which changes the
-    * quantizer) still requires a [[buildPq]] rerun. Returns
+    * pure id-keyed move for the compressed layout — its halves and
+    * sidecar rows stage beside the raw ones in the same batch; only
+    * [[retrain]] (which changes the quantizer) still requires a
+    * [[buildPq]] rerun. Returns
     * Some((newListId, movedRows)) on success. */
   def splitList(listId: Int, lloydIters: Int = 1): Option[(Int, Long)] = {
     require(lloydIters >= 1, s"lloydIters must be >= 1, got $lloydIters")
@@ -435,9 +437,9 @@ final class IvfIndex(spark: SparkSession, path: String,
       .map(_.getSeq[Float](1).toArray).toSeq
     if (init.size < 2) return None
     val sub = Ann.lloydRounds(rows, "vector", init, lloydIters)
-    // pinned: every later step re-reads this frame, and step 3 MUTATES
-    // the directory the lazy plan would re-scan — the assignment must be
-    // computed exactly once, before any write (released before return)
+    // pinned: every staged write re-reads this frame, and the commit
+    // replaces the directory the lazy plan would re-scan — the assignment
+    // must be computed exactly once (released before return)
     val assigned = Ann.ivfAssign(rows, "vector", sub).localCheckpoint(true)
     val moved = assigned.filter(col("ivf_list") === 1).drop("ivf_list")
     val nMoved = moved.count()
@@ -455,36 +457,24 @@ final class IvfIndex(spark: SparkSession, path: String,
     else None
     val codesMovedIds = codesList.map(_.join(movedIds, Seq("id"), "left_semi")
       .select(col("id")).localCheckpoint(true))
-    // 1. sidecar superset: moved ids now ALSO map to the new list (both
-    // sidecars when the compressed layout exists)
-    writeAssign(moved.select(col("id"), lit(newId).as("ivf_list")),
-      assignPath, assignMetaPath, overwrite = false)
-    codesMovedIds.foreach { mi =>
-      writeAssign(mi.select(col("id"), lit(newId).as("ivf_list")),
-        assignPqPath, assignPqMetaPath, overwrite = false)
+    // data move, sidecar rows and centroid set (listId tightens to
+    // sub-centroid 0, newId = sub 1), committed as one batch
+    LayoutFs.commit(fs, new Path(path)) { batch =>
+      val halves = Seq(listId, newId)
+      batch.stageParts("lists", "ivf_list", halves, assigned.withColumn("ivf_list",
+        when(col("ivf_list") === 0, lit(listId)).otherwise(lit(newId))))
+      codesList.foreach { cl =>
+        batch.stageParts("codes", "ivf_list", halves,
+          cl.join(movedIds, Seq("id"), "left_anti").withColumn("ivf_list", lit(listId))
+            .unionByName(cl.join(movedIds, Seq("id"), "left_semi")
+              .withColumn("ivf_list", lit(newId))))
+      }
+      batch.stage("centroids")(writeCentroids(cs.updated(listId, sub(0)) :+ sub(1), _))
+      relabelAssign(batch, "assign", moves(movedIds, listId, newId))
+      codesMovedIds.foreach(mi => relabelAssign(batch, "assign_pq", moves(mi, listId, newId)))
     }
-    // 2. data move and centroid set (listId tightens to sub-centroid 0,
-    // newId = sub 1), committed as one batch
-    val batch = LayoutFs.batch(fs, new Path(path))
-    val halves = Seq(listId, newId)
-    batch.stageParts("lists", "ivf_list", halves, assigned.withColumn("ivf_list",
-      when(col("ivf_list") === 0, lit(listId)).otherwise(lit(newId))))
-    codesList.foreach { cl =>
-      batch.stageParts("codes", "ivf_list", halves,
-        cl.join(movedIds, Seq("id"), "left_anti").withColumn("ivf_list", lit(listId))
-          .unionByName(cl.join(movedIds, Seq("id"), "left_semi")
-            .withColumn("ivf_list", lit(newId))))
-    }
-    batch.stage("centroids")(writeCentroids(cs.updated(listId, sub(0)) :+ sub(1), _))
-    batch.commit()
     centroidsMemo.invalidate()
-    // 3. drop the stale (moved id, old list) sidecar pairs
-    cleanAssignPairs(moved.select(col("id"), lit(listId).as("ivf_list")))
-    codesMovedIds.foreach { mi =>
-      cleanAssignPairs(mi.select(col("id"), lit(listId).as("ivf_list")),
-        "assign_pq", assignPqMetaPath)
-      graft.util.Pins.release(mi)
-    }
+    codesMovedIds.foreach(graft.util.Pins.release)
     graft.util.Pins.release(assigned)
     Some((newId, nMoved))
   }
@@ -505,27 +495,15 @@ final class IvfIndex(spark: SparkSession, path: String,
     * of [[graft.operators.Ann.ivfStats]] — the [[splitList]] monitoring
     * convention.
     *
-    * Crash protocol (roll-forward, the [[splitList]] batch discipline —
-    * a merge shrinks the centroid set, so every step after the commit
-    * must be completable from disk alone):
-    *  1. data staged in one [[LayoutFs.Batch]]: union under the
-    *     surviving slot, the last list's rows under the vacated slot, the
-    *     shrunken centroid set, and the vacated last directory as a drop
-    *     — all hidden, live layout untouched;
-    *  2. sidecar rows appended (absorbed ids → surviving slot, last
-    *     list's ids → vacated slot) — the superset invariant: a delete
-    *     of a moved id anti-joins its new list too, whichever directory
-    *     the row is in at the crash point;
-    *  3. the batch commits — [[recover]] rolls it FORWARD from here (the
-    *     swaps, then the drop, each idempotent); a crash BEFORE the
-    *     commit leaves staging the next mutation discards, and the extra
-    *     sidecar rows stay a harmless superset;
-    *  4. stale sidecar pairs removed — superset, never under.
+    * One [[LayoutFs.Batch]] commits the union under the surviving slot,
+    * the last list's rows under the vacated slot, the moved ids' sidecar
+    * rows, the shrunken centroid set and the vacated last directory's
+    * drop, so every reader sees the old index or the whole new one.
     *
     * A PQ codes layout RIDES ALONG (the [[splitList]] rule: raw-vector
     * codes are list-independent, so the merge is pure renumbering for
     * the compressed layout — staged and committed in the same batch as
-    * the raw dirs; both sidecars keep the superset invariant). Returns
+    * the raw dirs, with its sidecar). Returns
     * (survivingListId, absorbedRows):
     * normally `a` holding the union of `a` and `b`; when `a` is the
     * highest list id the roles swap (the union lands under `b`) so the
@@ -548,8 +526,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     val lastRows = if (source == last) union.limit(0)
       else lists.filter(col("ivf_list") === last)
         .select(col("id"), col("vector"))
-    // pinned: step 4 runs after the commit replaced the directories
-    // these lazy frames read
+    // pinned: counted here, then read twice by the sidecar relabel
     val sourceIds = lists.filter(col("ivf_list") === source)
       .select(col("id")).localCheckpoint(true)
     val lastIds = lastRows.select(col("id")).localCheckpoint(true)
@@ -583,45 +560,27 @@ final class IvfIndex(spark: SparkSession, path: String,
     val sourceIdsPq = codesAll.map(_.filter(col("ivf_list") === source)
       .select(col("id")).localCheckpoint(true))
     val lastIdsPq = codesLast.map(_.select(col("id")).localCheckpoint(true))
-    // 1. stage everything the roll-forward needs. The vacated codes dir
-    // drops ONLY when this merge staged a codes half: a codes layout
-    // that came into existence after the commit (e.g. a buildPq before
-    // the roll-forward) was never renumbered, and dropping its last list
-    // would silently lose compressed-layout data
-    val batch = LayoutFs.batch(fs, new Path(path))
-    val stagedSlots = Seq(target) ++ (if (source == last) Nil else Seq(vacated))
-    batch.stageParts("lists", "ivf_list", stagedSlots,
-      union.withColumn("ivf_list", lit(target))
-        .unionByName(lastRows.withColumn("ivf_list", lit(vacated))))
-    codesUnion.foreach { cu =>
-      batch.stageParts("codes", "ivf_list", stagedSlots,
-        cu.withColumn("ivf_list", lit(target))
-          .unionByName(codesLast.get.withColumn("ivf_list", lit(vacated))))
-      batch.drop(s"codes/ivf_list=$last")
+    // the vacated codes dir drops only when this merge staged a codes half
+    LayoutFs.commit(fs, new Path(path)) { batch =>
+      val stagedSlots = Seq(target) ++ (if (source == last) Nil else Seq(vacated))
+      batch.stageParts("lists", "ivf_list", stagedSlots,
+        union.withColumn("ivf_list", lit(target))
+          .unionByName(lastRows.withColumn("ivf_list", lit(vacated))))
+      codesUnion.foreach { cu =>
+        batch.stageParts("codes", "ivf_list", stagedSlots,
+          cu.withColumn("ivf_list", lit(target))
+            .unionByName(codesLast.get.withColumn("ivf_list", lit(vacated))))
+        batch.drop(s"codes/ivf_list=$last")
+      }
+      batch.stage("centroids")(writeCentroids(newCs, _))
+      batch.drop(s"lists/ivf_list=$last")
+      relabelAssign(batch, "assign",
+        moves(sourceIds, source, target).unionByName(moves(lastIds, last, vacated)))
+      sourceIdsPq.foreach(sp => relabelAssign(batch, "assign_pq",
+        moves(sp, source, target).unionByName(moves(lastIdsPq.get, last, vacated))))
     }
-    batch.stage("centroids")(writeCentroids(newCs, _))
-    batch.drop(s"lists/ivf_list=$last")
-    // 2. sidecar superset: moved ids also map to their new lists — BOTH
-    // sidecars when the compressed layout exists
-    writeAssign(sourceIds.select(col("id"), lit(target).as("ivf_list"))
-        .unionByName(lastIds.select(col("id"), lit(vacated).as("ivf_list"))),
-      assignPath, assignMetaPath, overwrite = false)
-    sourceIdsPq.foreach { sp =>
-      writeAssign(sp.select(col("id"), lit(target).as("ivf_list"))
-          .unionByName(lastIdsPq.get
-            .select(col("id"), lit(vacated).as("ivf_list"))),
-        assignPqPath, assignPqMetaPath, overwrite = false)
-    }
-    // 3. the batch commits and rolls forward
-    batch.commit()
     centroidsMemo.invalidate()
-    // 4. drop the stale (moved id, old list) sidecar pairs
-    cleanAssignPairs(sourceIds.select(col("id"), lit(source).as("ivf_list"))
-      .unionByName(lastIds.select(col("id"), lit(last).as("ivf_list"))))
     sourceIdsPq.foreach { sp =>
-      cleanAssignPairs(sp.select(col("id"), lit(source).as("ivf_list"))
-        .unionByName(lastIdsPq.get.select(col("id"), lit(last).as("ivf_list"))),
-        "assign_pq", assignPqMetaPath)
       graft.util.Pins.release(sp)
       graft.util.Pins.release(lastIdsPq.get)
     }
@@ -630,19 +589,25 @@ final class IvfIndex(spark: SparkSession, path: String,
     (target, nAbsorbed)
   }
 
-  /** Remove exact (id, ivf_list) PAIRS from the sidecar — the stale-row
-    * cleanup after a split or merge moved those ids elsewhere. Same
-    * bucket-pruned [[rewrite]] as a delete, but the anti-join keys on the
-    * pair, so the id's row for its NEW list survives. */
-  private def cleanAssignPairs(pairs: DataFrame, assignRel: String = "assign",
-      metaPath: String = assignMetaPath): Unit =
+  /** The (id, from, to) moves of the ids in `ids` from list `from` to
+    * list `to`. */
+  private def moves(ids: DataFrame, from: Int, to: Int): DataFrame =
+    ids.select(col("id"), lit(from).as("from"), lit(to).as("to"))
+
+  /** Stage the sidecar side of a split or merge in `b`: each moved id's
+    * (id, from) row becomes (id, to) — the same bucket-pruned [[rewrite]]
+    * as a delete, keyed on the pair. A pre-sidecar index has no sidecar
+    * to relabel. */
+  private def relabelAssign(b: LayoutFs.Batch, assignRel: String, moves: DataFrame): Unit = {
+    val metaPath = s"$path/${assignRel}_meta"
     if (fs.exists(new Path(metaPath))) {
-      val b = readAssignBuckets(metaPath)
-      val buckets = pairs.select(bucketOf(col("id"), b)).distinct()
+      val buckets = moves.select(bucketOf(col("id"), readAssignBuckets(metaPath))).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      rewrite(assignRel, "abucket", buckets)(
-        _.join(pairs.select(col("id"), col("ivf_list")), Seq("id", "ivf_list"), "left_anti"))
+      val m = moves.select(col("id"), col("from").as("ivf_list"), col("to").as("__to"))
+      rewrite(b, assignRel, "abucket", buckets)(_.join(m, Seq("id", "ivf_list"), "left")
+        .select(col("id"), coalesce(col("__to"), col("ivf_list")).as("ivf_list"), col("abucket")))
     }
+  }
 
   /** Stage a centroid set as a (cid, centroid) table at `dir`. */
   private def writeCentroids(cs: Seq[Array[Float]], dir: Path): Unit = {
@@ -656,10 +621,10 @@ final class IvfIndex(spark: SparkSession, path: String,
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Crash recovery, run once at the top of every entry point: roll a
-    * committed batch forward and resolve a crashed centroid-pointer swap
-    * ([[LayoutFs.recoverUnder]] over the index root), then resolve
-    * crashed swaps under each named layout directory. Reads only — an
-    * uncommitted batch stays for the next mutation to discard. */
+    * committed batch forward and restore a backup an earlier version's
+    * swap left at the index root ([[LayoutFs.recoverUnder]]), then under
+    * each named layout directory. Reads only — an uncommitted batch
+    * stays for the next mutation to discard. */
   private def recover(dirs: String*): Unit =
     (path +: dirs).foreach(d => LayoutFs.recoverUnder(fs, new Path(d), "*"))
 
@@ -727,11 +692,15 @@ final class IvfIndex(spark: SparkSession, path: String,
     spark.read.parquet(listsPath)
   }
 
-  /** Crash recovery alone (a committed batch, lists + centroid pointer)
-    * — run by [[graft.sources.v2.GraftLayoutSource]] in `newScanBuilder`,
-    * before it lists the files of each SQL scan: a V2 scan is a read
-    * entry point like any other, so it recovers first. */
-  private[graft] def recoverForRead(): Unit = recover(listsPath)
+  /** Crash recovery for a SQL scan — run by
+    * [[graft.sources.v2.GraftLayoutSource]] when a view registers (the
+    * full [[recover]] of the root and the lists) and in `newScanBuilder`
+    * before it lists the files of each scan (`scan`: the root's one
+    * glob, which rolls a committed batch forward). Every mutation of
+    * this version commits through a batch, so a backup under the lists
+    * can only predate the registration's full check. */
+  private[graft] def recoverForRead(scan: Boolean): Unit =
+    if (scan) recover() else recover(listsPath)
 
   /** See [[listsView]]. */
   def centroidsView: DataFrame = {
@@ -772,63 +741,17 @@ final class IvfIndex(spark: SparkSession, path: String,
     * assignment sidecar (`assign_pq`) so the compressed layout gets the
     * same bucket-pruned delete discovery as the raw one. */
   def buildPq(embs: DataFrame, idCol: String, vecCol: String,
-      coarse: Seq[Array[Float]], books: Pq.Codebooks): Unit = {
-    require(coarse.nonEmpty, "need at least one coarse centroid")
-    import spark.implicits._
-    recover()
-    // shared assignment pass (the build() discipline)
-    val assigned = Ann.ivfAssign(
-      embs.select(col(idCol).as("id"), col(vecCol).as("vector")),
-      "vector", coarse).localCheckpoint(false)
-    writeAssign(assigned.select(col("id"), col("ivf_list")),
-      assignPqPath, assignPqMetaPath, overwrite = true)
-    Pq.encode(assigned, "vector", books)
-      .select(col("id"), col("codes"), col("ivf_list"))
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(codesPath)
-    graft.util.Pins.release(assigned)
-    books.zipWithIndex.flatMap { case (cents, j) =>
-      cents.zipWithIndex.map { case (c, code) => (j, code, c.toSeq) }
-    }.toSeq.toDF("subspace", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(booksPath)
-    coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(centroidsPath)
-  }
+      coarse: Seq[Array[Float]], books: Pq.Codebooks): Unit =
+    buildLayouts(embs, idCol, vecCol, coarse, raw = false, Some(books))
 
   /** [[build]] + [[buildPq]] from ONE shared assignment pass — the
     * dual-layout deployment that maintains the raw lists AND the
-    * compressed codes over one coarse quantizer (r22: the two
-    * standalone builders each ran their own full corpus scan + argmax,
-    * and each rewrote the centroid table). Artifact rows are
-    * byte-identical to the two standalone calls (suite-pinned). */
+    * compressed codes over one coarse quantizer, in one committed batch.
+    * Artifact rows are byte-identical to the two standalone calls
+    * (suite-pinned). */
   def buildWithPq(embs: DataFrame, idCol: String, vecCol: String,
-      coarse: Seq[Array[Float]], books: Pq.Codebooks): Unit = {
-    require(coarse.nonEmpty, "need at least one coarse centroid")
-    import spark.implicits._
-    recover()
-    // one assignment pass feeds FOUR writes: raw sidecar, raw lists,
-    // pq sidecar, encoded codes
-    val assigned = Ann.ivfAssign(
-      embs.select(col(idCol).as("id"), col(vecCol).as("vector")),
-      "vector", coarse).localCheckpoint(false)
-    writeAssign(assigned.select(col("id"), col("ivf_list")),
-      assignPath, assignMetaPath, overwrite = true)
-    assigned
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(listsPath)
-    writeAssign(assigned.select(col("id"), col("ivf_list")),
-      assignPqPath, assignPqMetaPath, overwrite = true)
-    Pq.encode(assigned, "vector", books)
-      .select(col("id"), col("codes"), col("ivf_list"))
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(codesPath)
-    graft.util.Pins.release(assigned)
-    books.zipWithIndex.flatMap { case (cents, j) =>
-      cents.zipWithIndex.map { case (c, code) => (j, code, c.toSeq) }
-    }.toSeq.toDF("subspace", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(booksPath)
-    coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(centroidsPath)
-  }
+      coarse: Seq[Array[Float]], books: Pq.Codebooks): Unit =
+    buildLayouts(embs, idCol, vecCol, coarse, raw = true, Some(books))
 
   /** Incremental append for the PQ codes layout (X130; the compressed
     * half of X124): assign the batch against the FROZEN stored coarse
@@ -837,25 +760,15 @@ final class IvfIndex(spark: SparkSession, path: String,
     * deterministic per row and independent across rows, so
     * buildPq(A) + appendPq(B) is RESULT-identical to buildPq(A ∪ B)
     * with the same coarse/books (suite-pinned grid; oracle-gated q175).
-    * Batch-proportional, directory-additive — the same economics and
-    * crash story as [[append]], sidecar first. Codebook/centroid drift
-    * is [[graft.operators.Ann.ivfStats]]'s contract, as for [[append]]. */
+    * Batch-proportional and directory-additive, committed as one batch
+    * with its sidecar rows — the same economics and crash story as
+    * [[append]]. Codebook/centroid drift is
+    * [[graft.operators.Ann.ivfStats]]'s contract, as for [[append]]. */
   def appendPq(embs: DataFrame, idCol: String, vecCol: String): Unit = {
     recover(codesPath, assignPqPath)
-    val coarse = loadCentroids()
     val books = codebooks()
-    val assignedBase = Ann.ivfAssign(
-      embs.select(col(idCol).as("id"), col(vecCol).as("vector")),
-      "vector", coarse)
-    val share = fs.exists(new Path(assignPqMetaPath))
-    val assigned =
-      if (share) assignedBase.localCheckpoint(false) else assignedBase
-    writeAssign(assigned.select(col("id"), col("ivf_list")),
-      assignPqPath, assignPqMetaPath, overwrite = false)
-    Pq.encode(assigned, "vector", books)
-      .select(col("id"), col("codes"), col("ivf_list"))
-      .write.mode("append").partitionBy("ivf_list").parquet(codesPath)
-    if (share) graft.util.Pins.release(assigned)
+    appendTo("codes", "assign_pq", embs, idCol, vecCol)(
+      Pq.encode(_, "vector", books).select(col("id"), col("codes"), col("ivf_list")))
   }
 
   /** In-place deletion for the PQ codes layout (X130; the compressed

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.IOException
+import java.io.{FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
@@ -8,43 +8,36 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** The one crash-safe commit primitive every persisted layout shares.
+/** The one crash-safe commit primitive every persisted layout shares:
+  * every write of a layout — a build, an append, a tombstone, a
+  * rewrite, a pointer flip — commits as one [[Batch]] on the layout
+  * root ([[commit]]).
   *
-  * A layout replaces a directory by writing the replacement under a
-  * hidden (dot-prefixed) staging path, then [[swap]]ping it in with two
-  * renames through a hidden `.<name>.bak` backup. Hidden paths are
-  * skipped by Spark's file listing and partition discovery, so no reader
-  * can see both the old and the new rows, or a `bucket=N.bak` partition
-  * value. A crash between the two renames leaves the backup and no live
-  * directory; every read entry point runs [[recover]] or [[recoverUnder]]
-  * first, which restores the backup when the live directory is missing
-  * and drops it otherwise.
-  *
-  * A mutation that touches SEVERAL directories (bucket rewrites, IVF
-  * list deletes, compactions, splits and merges, graph edge batches,
-  * every inverted-index and query-store mutation) commits them as one
-  * [[Batch]]: every replacement or addition stages under the hidden
+  * Every replacement or addition stages under the hidden
   * `<root>/.commit/` tree, which mirrors the live paths below the layout
   * root, and a marker file naming the ordered entries is renamed to
   * `<root>/.committed` — that rename is the commit point. An entry is a
-  * `swap` (replace a live directory with its staged one), a `move` (an
-  * additive entry: rename every data file of a directory under the root
-  * into a live directory, keeping the file names) or a `drop` (delete a
-  * live directory). Publishing runs the swaps and moves in the order
-  * they were listed, then the drops, then drops the batch. From the
-  * marker on, [[recoverUnder]] on the root rolls the batch forward, so a
-  * crash leaves the old directories or all the new ones. Readers never
-  * delete an uncommitted batch: only the next batch, [[discardBatch]]
-  * (a layout's vacuum) or a [[snapshot]] quiesce discards one.
+  * `swap` (replace a live directory or file with its staged one through
+  * a hidden `.<name>.bak` backup), a `move` (an additive entry: rename
+  * every data file of a directory under the root into a live directory,
+  * keeping the file names) or a `drop` (delete a live directory).
+  * Publishing runs the swaps and moves in the order they were listed,
+  * then the drops, then drops the batch. From the marker on,
+  * [[rollForward]] (or [[recoverUnder]]) on the root finishes the batch,
+  * so a crash leaves the old layout or the whole new one. Hidden paths
+  * are skipped by Spark's file listing and partition discovery, so no
+  * reader sees staged files or a `bucket=N.bak` partition value.
+  * Readers never delete an uncommitted batch: only the next batch,
+  * [[discardBatch]] (a layout's vacuum) or a [[snapshot]] quiesce
+  * discards one.
   *
-  * Atomicity assumption, stated once for the engine's whole two-rename
-  * and marker family: each `rename` is an ATOMIC O(1) metadata
-  * operation that either fully happens or not at all — true on HDFS and
-  * POSIX local filesystems. On an object store without atomic rename
-  * (plain S3), `FileSystem.rename` degrades to copy-then-delete:
-  * correctness survives (recovery re-walks the state-checked steps) but
-  * a crash mid-copy can expose a partially copied directory to the
-  * recovery scan, and the O(1)-metadata cost model breaks — on such
+  * Atomicity assumption, stated once for the engine: each `rename` is
+  * an ATOMIC O(1) metadata operation that either fully happens or not
+  * at all — true on HDFS and POSIX local filesystems. On an object
+  * store without atomic rename (plain S3), `FileSystem.rename` degrades
+  * to copy-then-delete: correctness survives (the roll-forward re-walks
+  * the state-checked steps) but a crash mid-copy can expose a partially
+  * copied directory, and the O(1)-metadata cost model breaks — on such
   * stores this object is the one place to replace with a manifest or
   * pointer flip. */
 object LayoutFs {
@@ -58,9 +51,8 @@ object LayoutFs {
     * rename pair completed and only the backup drop remains, and with
     * `live` missing the backup is kept until the rename lands — so a
     * [[Batch]] roll-forward re-runs it freely. A failed rename throws
-    * and leaves the state to [[recover]] (no rollback: a real crash
-    * cannot roll back either). */
-  def swap(fs: FileSystem, staged: Path, live: Path): Unit = {
+    * (no rollback: a real crash cannot roll back either). */
+  private[sources] def swap(fs: FileSystem, staged: Path, live: Path): Unit = {
     val b = bak(live)
     if (fs.exists(staged)) {
       if (fs.exists(live)) {
@@ -73,22 +65,16 @@ object LayoutFs {
     fs.delete(b, true)
   }
 
-  /** Resolve a crashed [[swap]] of each named directory: restore the
-    * backup if the live directory is missing, else drop it. */
-  def recover(fs: FileSystem, lives: Path*): Unit =
-    lives.foreach { live =>
-      val b = bak(live)
-      if (fs.exists(b)) restoreOrDrop(fs, b, live)
-    }
-
-  /** [[recover]] for every directory under `base` whose name matches
-    * `glob` (e.g. `bucket=*`), from one glob of their backups. The same
-    * glob finds a [[Batch]] committed at `base`, which then rolls
-    * forward, and the commit markers that earlier versions of the IVF,
-    * graph and inverted-index layouts left mid-mutation: those fail the
-    * call with an `IOException` naming the marker, because this version
-    * no longer rolls them forward and a layout read past one serves a
-    * half-applied mutation. */
+  /** The full recovery of the layout directory `base`, from one glob:
+    * restore the backup `.<name>.bak` of every entry whose name matches
+    * `glob` (e.g. `bucket=*`) when the live entry is missing, else drop
+    * it — a backup only an earlier version's lone swap leaves behind
+    * once the batch that made it has finished — and roll a [[Batch]]
+    * committed at `base` forward. The same glob finds the commit markers
+    * that earlier versions of the IVF, graph and inverted-index layouts
+    * left mid-mutation: those fail the call with an `IOException` naming
+    * the marker, because this version no longer rolls them forward and
+    * a layout read past one serves a half-applied mutation. */
   def recoverUnder(fs: FileSystem, base: Path, glob: String): Unit = {
     val hits = Option(fs.globStatus(new Path(base,
         (s".$glob.bak" +: Marker +: LegacyMarkers).mkString("{", ",", "}"))))
@@ -139,12 +125,14 @@ object LayoutFs {
   private def under(base: Path, rel: String): Path =
     if (rel.isEmpty) base else new Path(base, rel)
 
+  private def relOf(dir: String, name: String): String =
+    if (dir.isEmpty) name else if (name.isEmpty) dir else s"$dir/$name"
+
   /** Directory replacements and additions under the layout root
     * `root`, committed at once (the class doc's protocol). [[stage]],
-    * [[stageRows]] and [[stageParts]] add swaps, [[add]] and [[move]]
-    * add moves, all in call order; [[drop]] adds a deletion that runs
-    * after them, and [[commit]] commits and publishes the lot. Open one
-    * with [[batch]]. */
+    * [[stageRows]], [[stageParts]] and [[rewriteParts]] add swaps,
+    * [[add]] and [[move]] add moves, all in call order; [[drop]] adds a
+    * deletion that runs after them. Open one with [[LayoutFs.commit]]. */
   final class Batch private[LayoutFs] (fs: FileSystem, root: Path) {
     private var entries = Vector.empty[String]
     private var drops = Vector.empty[String]
@@ -152,7 +140,8 @@ object LayoutFs {
     /** Where the replacement of the live `root/rel` stages. */
     def staged(rel: String): Path = under(new Path(root, Staging), rel)
 
-    /** Stage `root/rel` as `write` writes it to the staging path. */
+    /** Stage `root/rel` — a directory or a file — as `write` writes it to
+      * the staging path. */
     def stage(rel: String)(write: Path => Unit): Unit = {
       write(staged(rel))
       entries :+= s"swap $rel"
@@ -161,16 +150,26 @@ object LayoutFs {
     /** Stage `rows` as the whole replacement of `root/rel`, partitioned
       * by `partCol` if given. With every row gone it stages a
       * schema-carrying empty file (under `<partCol>=0` for a partitioned
-      * layout), so later whole-layout reads can still infer the schema. */
-    def stageRows(rel: String, partCol: Option[String], rows: DataFrame): Unit =
-      stage(rel) { dir =>
-        partCol.fold(rows.write)(c => rows.write.partitionBy(c)).parquet(dir.toString)
-        if (!fs.listStatus(dir).exists(s => !s.getPath.getName.startsWith("_")))
-          partCol match {
-            case Some(c) => emptyFile(rows.drop(c), new Path(dir, s"$c=0"))
-            case None => emptyFile(rows, dir)
-          }
+      * layout), so later whole-layout reads can still infer the schema.
+      * The root itself (an empty `rel`) cannot swap, so a layout
+      * partitioned at its root is replaced part by part: each staged part
+      * swaps in, and each live part that got no rows drops. */
+    def stageRows(rel: String, partCol: Option[String], rows: DataFrame): Unit = {
+      require(rel.nonEmpty || partCol.nonEmpty, s"only a partitioned layout can replace its root $root")
+      val dir = staged(rel)
+      partCol.fold(rows.write)(c => rows.write.partitionBy(c)).parquet(dir.toString)
+      if (!fs.listStatus(dir).exists(s => !s.getPath.getName.startsWith("_")))
+        partCol match {
+          case Some(c) => emptyFile(rows.drop(c), new Path(dir, s"$c=0"))
+          case None => emptyFile(rows, dir)
+        }
+      if (rel.nonEmpty) entries :+= s"swap $rel"
+      else partCol.foreach { c =>
+        val parts = partsIn(dir, c)
+        parts.toSeq.sorted.foreach(n => entries :+= s"swap $n")
+        (partsIn(root, c) -- parts).toSeq.sorted.foreach(drop)
       }
+    }
 
     /** Stage `rows`, partitioned by `partCol`, as the replacement of each
       * `rel/partCol=N` with N in `parts`. A part that gets no rows but
@@ -182,8 +181,7 @@ object LayoutFs {
     def stageParts(rel: String, partCol: String, parts: Seq[Int], rows: DataFrame): Unit = {
       val dir = staged(rel)
       rows.write.partitionBy(partCol).parquet(dir.toString)
-      val written = fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.startsWith(s"$partCol=")).toSet
+      val written = partsIn(dir, partCol)
       val names = parts.map(n => s"$partCol=$n")
       val stray = written -- names
       if (stray.nonEmpty) throw new IllegalStateException(
@@ -192,16 +190,28 @@ object LayoutFs {
       names.filter(n => written(n) || fs.exists(new Path(under(root, rel), n)))
         .foreach { n =>
           if (!written(n)) emptyFile(rows.drop(partCol), new Path(dir, n))
-          entries :+= s"swap ${if (rel.isEmpty) n else s"$rel/$n"}"
+          entries :+= s"swap ${relOf(rel, n)}"
         }
     }
 
-    /** Stage additions to the live `root/rel` as `write` writes them to
-      * the staging path: at publish each staged data file moves to the
-      * same place under `root/rel` ([[move]]). */
+    /** Rewrite the `partCol=N` directories of `root/rel`, N in `parts`:
+      * `transform` their live rows (`live`, the whole layout's frame,
+      * pruned to those parts — one partition-pruned read) and stage the
+      * result with [[stageParts]]. */
+    def rewriteParts(rel: String, partCol: String, parts: Seq[Int], live: DataFrame)(
+        transform: DataFrame => DataFrame): Unit =
+      if (parts.nonEmpty)
+        stageParts(rel, partCol, parts, transform(live.filter(col(partCol).isin(parts: _*))))
+
+    /** Stage additions to the live `root/rel` (the root itself for an
+      * empty `rel`) as `write` writes them to the staging path: at
+      * publish each staged data file moves to the same place under
+      * `root/rel` ([[move]]). An addition to the root stages at the
+      * staging root, so it must be the batch's first staged write, and
+      * the batch's other staged paths must be hidden (`_`-prefixed). */
     def add(rel: String)(write: Path => Unit): Unit = {
       write(staged(rel))
-      move(s"$Staging/$rel", rel)
+      move(relOf(Staging, rel), rel)
     }
 
     /** Move every data file of `root/src` into `root/dst` at publish,
@@ -214,7 +224,7 @@ object LayoutFs {
     def drop(rel: String): Unit = drops :+= rel
 
     /** Commit ([[markCommitted]]) and publish. */
-    def commit(): Unit = if (markCommitted()) publish(fs, root)
+    private[sources] def commit(): Unit = if (markCommitted()) publish(fs, root)
 
     /** The commit point alone: write the entry list under the staging
       * tree and rename it to the marker. A batch with no entry commits
@@ -230,12 +240,27 @@ object LayoutFs {
           throw new IOException(s"cannot commit the batch staged under $root")
         true
       }
+
+    /** The `<partCol>=N` directory names under `dir` (none if missing). */
+    private def partsIn(dir: Path, partCol: String): Set[String] =
+      try fs.listStatus(dir).map(_.getPath.getName).filter(_.startsWith(s"$partCol=")).toSet
+      catch { case _: FileNotFoundException => Set.empty }
   }
 
-  /** Open a [[Batch]] under `root`. The caller owns the layout: a batch
-    * still committed there rolls forward, and an uncommitted one is
-    * discarded ([[discardBatch]]). */
-  def batch(fs: FileSystem, root: Path): Batch = {
+  /** The one way a layout writes: open a [[Batch]] on the layout root
+    * `root`, let `body` stage its entries, then commit and publish it.
+    * The caller owns the layout: a batch still committed there rolls
+    * forward first, and an uncommitted one is discarded
+    * ([[discardBatch]]). A `body` that throws leaves its staging
+    * uncommitted — hidden debris the next batch discards. */
+  def commit(fs: FileSystem, root: Path)(body: Batch => Unit): Unit = {
+    val b = batch(fs, root)
+    body(b)
+    b.commit()
+  }
+
+  /** Open a [[Batch]] under `root` ([[commit]]'s first step). */
+  private[sources] def batch(fs: FileSystem, root: Path): Batch = {
     discardBatch(fs, root)
     new Batch(fs, root)
   }
@@ -263,9 +288,9 @@ object LayoutFs {
         org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), UTF_8).split("\n")
       finally in.close()
     entries.filter(_.nonEmpty).foreach {
-      case s"swap $rel" => swap(fs, new Path(new Path(root, Staging), rel), new Path(root, rel))
-      case s"move $src $dst" => moveFiles(fs, new Path(root, src), new Path(root, dst))
-      case s"drop $rel" => fs.delete(new Path(root, rel), true)
+      case s"swap $rel" => swap(fs, under(new Path(root, Staging), rel), under(root, rel))
+      case s"move $src $dst" => moveFiles(fs, under(root, src), under(root, dst))
+      case s"drop $rel" => fs.delete(under(root, rel), true)
       case e => throw new IOException(s"unknown entry '$e' in $marker")
     }
     fs.delete(marker, false)
@@ -285,18 +310,6 @@ object LayoutFs {
         else if (!fs.rename(s.getPath, to))
           throw new IOException(s"cannot move ${s.getPath} into $dst")
       }
-    }
-
-  /** Rewrite the `partCol=N` directories of `root/rel`, N in `parts`, as
-    * one [[Batch]]: `transform` their live rows (`live`, the whole
-    * layout's frame, pruned to those parts — one partition-pruned read),
-    * stage the result with [[Batch.stageParts]] and commit. */
-  def rewriteParts(fs: FileSystem, root: Path, rel: String, partCol: String,
-      parts: Seq[Int], live: DataFrame)(transform: DataFrame => DataFrame): Unit =
-    if (parts.nonEmpty) {
-      val b = batch(fs, root)
-      b.stageParts(rel, partCol, parts, transform(live.filter(col(partCol).isin(parts: _*))))
-      b.commit()
     }
 
   /** Consistent on-disk snapshot of the tree at `root`. `quiesce` runs

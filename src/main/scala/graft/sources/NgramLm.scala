@@ -21,12 +21,11 @@ import graft.operators.TextAnalysis
   * with the stored tables by summation, and writes a NEW version
   * directory — build(A) then append(B) is bit-identical to build(A ∪ B)
   * (suite-pinned). Versions are blue/green: a version directory is
-  * immutable once the pointer names it, the pointer is a one-row parquet
-  * swapped by [[LayoutFs.swap]] (the
-  * [[IvfIndex]] centroid-pointer contract: the root pointer can never
-  * read as missing — recovery runs at every read), and a crashed append
-  * leaves at worst an orphan unreferenced version directory —
-  * [[vacuum]] drops everything but the current version.
+  * immutable once the pointer names it, and the pointer is a one-row
+  * parquet published in the same [[LayoutFs.Batch]] as the version it
+  * names — so a crash leaves the old model or the new one, the pointer
+  * can never read as missing (recovery runs at every read), and
+  * [[vacuum]] drops every version but the current one.
   *
   * Scale shape: tables are vocabulary-sized (metadata next to the
   * corpus); the merge is three map-side-combined union-sums; scoring
@@ -40,24 +39,18 @@ final class NgramLm(spark: SparkSession, path: String) {
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Restore a half-done pointer swap ([[LayoutFs.recover]]). */
-  private def recoverPointer(): Unit = LayoutFs.recover(fs, pointerLive)
-
-  private def writePointer(v: Int): Unit = {
-    import spark.implicits._
-    val staged = new Path(path, ".current.staged")
-    fs.delete(staged, true)
-    Seq(v).toDF("version").coalesce(1).write.parquet(staged.toString)
-    LayoutFs.swap(fs, staged, pointerLive)
-  }
+  /** Roll a committed batch forward and restore a backup an earlier
+    * version's pointer swap left (`.current.bak`), from one glob of the
+    * root ([[LayoutFs.recoverUnder]]). */
+  private def recover(): Unit = LayoutFs.recoverUnder(fs, new Path(path), "*")
 
   /** The version the pointer currently names — memoized per instance,
-    * stamped by the pointer dir (every flip goes through
-    * [[writePointer]]'s two-rename swap, a fresh directory). */
+    * stamped by the pointer dir (every flip swaps in a fresh
+    * directory). */
   private lazy val versionMemo =
     new graft.util.StampedMemo[Int](() => fs, Seq(pointerLive.toString))
   def currentVersion(): Int = {
-    recoverPointer()
+    recover()
     versionMemo(spark.read.parquet(pointerLive.toString).head().getInt(0))
   }
 
@@ -81,19 +74,28 @@ final class NgramLm(spark: SparkSession, path: String) {
     toks)
   }
 
-  private def writeVersion(v: Int,
-      tri: DataFrame, bi: DataFrame, uni: DataFrame): Unit = {
-    tri.write.mode("overwrite").parquet(s"${verDir(v)}/tri")
-    bi.write.mode("overwrite").parquet(s"${verDir(v)}/bi")
-    uni.write.mode("overwrite").parquet(s"${verDir(v)}/uni")
+  /** Publish the three tables as version `v` and flip the pointer to it,
+    * one committed batch; `toks` is released once the tables are
+    * written. */
+  private def publish(v: Int, tri: DataFrame, bi: DataFrame, uni: DataFrame,
+      toks: DataFrame): Unit = {
+    import spark.implicits._
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      b.stage(s"v=$v") { dir =>
+        tri.write.parquet(s"$dir/tri")
+        bi.write.parquet(s"$dir/bi")
+        uni.write.parquet(s"$dir/uni")
+      }
+      graft.util.Pins.release(toks)
+      b.stage(pointerLive.getName)(dir =>
+        Seq(v).toDF("version").coalesce(1).write.parquet(dir.toString))
+    }
   }
 
   /** Count the reference corpus and publish version 1. */
   def build(refDocs: DataFrame, idCol: String, text: Column): Unit = {
     val (tri, bi, uni, toks) = counts(refDocs, idCol, text)
-    writeVersion(1, tri, bi, uni)
-    graft.util.Pins.release(toks)
-    writePointer(1)
+    publish(1, tri, bi, uni, toks)
   }
 
   private def readTables(v: Int) = (
@@ -116,12 +118,10 @@ final class NgramLm(spark: SparkSession, path: String) {
       stored.select(keys.map(col) :+ col(cnt): _*)
         .unionByName(delta.select(keys.map(col) :+ col(cnt): _*))
         .groupBy(keys.map(col): _*).agg(sum(col(cnt)).cast("long").as(cnt))
-    writeVersion(v + 1,
+    publish(v + 1,
       merge(sTri, dTri, Seq("w1", "w2", "w3"), "c3"),
       merge(sBi, dBi, Seq("w1", "w2"), "c2"),
-      merge(sUni, dUni, Seq("term"), "c1"))
-    graft.util.Pins.release(toks)
-    writePointer(v + 1)
+      merge(sUni, dUni, Seq("term"), "c1"), toks)
   }
 
   /** Subtract a REMOVED batch's counts — the dual of [[append]], and
@@ -150,12 +150,10 @@ final class NgramLm(spark: SparkSession, path: String) {
           (col(cnt) - coalesce(col("__d"), lit(0L))).cast("long"))
         .filter(col(cnt) > 0)
         .select(keys.map(col) :+ col(cnt): _*)
-    writeVersion(v + 1,
+    publish(v + 1,
       unmerge(sTri, dTri, Seq("w1", "w2", "w3"), "c3"),
       unmerge(sBi, dBi, Seq("w1", "w2"), "c2"),
-      unmerge(sUni, dUni, Seq("term"), "c1"))
-    graft.util.Pins.release(toks)
-    writePointer(v + 1)
+      unmerge(sUni, dUni, Seq("term"), "c1"), toks)
   }
 
   /** Score a corpus against the CURRENT stored model — the exact
@@ -169,27 +167,27 @@ final class NgramLm(spark: SparkSession, path: String) {
       lambda)
   }
 
-  /** Drop every version directory except the current one (orphans from
-    * crashed appends included). */
+  /** Drop every version directory except the current one, as one
+    * committed batch. */
   def vacuum(): Unit = {
     val keep = currentVersion()
-    Option(fs.globStatus(new Path(path, "v=*"))).toSeq.flatten.foreach { st =>
-      val v = st.getPath.getName.stripPrefix("v=").toInt
-      if (v != keep) fs.delete(st.getPath, true)
+    LayoutFs.commit(fs, new Path(path)) { b =>
+      Option(fs.globStatus(new Path(path, "v=*"))).toSeq.flatten.map(_.getPath.getName)
+        .filter(_ != s"v=$keep").foreach(b.drop)
     }
   }
 
   /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]) — the
     * cross-location copy the blue/green versioning alone cannot give
     * (versions protect against crashes, not against losing the
-    * location). The quiesce is [[recoverPointer]]; every version
+    * location). The quiesce is [[recover]]; every version
     * directory travels with the pointer, so the copy serves the same
     * current version and still carries the superseded versions its
     * in-flight-reader retention contract promises (run [[vacuum]] on
     * either side independently). */
   def snapshot(targetPath: String): Unit =
     LayoutFs.snapshot(fs, new Path(path), targetPath,
-      spark.sparkContext.hadoopConfiguration)(recoverPointer())
+      spark.sparkContext.hadoopConfiguration)(recover())
 
   /** Maintenance policy as code (X186, the versioned-artifact member of
     * the family: [[graft.sources.InvertedIndex.maintain]] /

@@ -37,10 +37,9 @@ import graft.operators.TextAnalysis
   * unsubscribe: O(batch), clause files untouched, effective on the
   * next read via the size-gated anti-join — the
   * [[InvertedIndex.delete]] vacuum-cadence contract); [[vacuum]]
-  * rewrites clauses and totals without the tombstoned queries. Each of
-  * append, vacuum and compact commits clauses and totals together as
-  * one [[LayoutFs.Batch]], so a crash never leaves clause rows without
-  * their totals row. Reads are LIVE per
+  * rewrites clauses and totals without the tombstoned queries. Every
+  * mutation commits as one [[LayoutFs.Batch]], so a crash never leaves
+  * clause rows without their totals row. Reads are LIVE per
   * action: [[percolate]] re-lists the directories every call, so a
   * just-appended alert matches the very next batch —
   * [[graft.streaming.PercolateStream.startStored]] leans on exactly
@@ -82,10 +81,15 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * top-level directory ([[LayoutFs.recoverUnder]]). */
   private def recover(): Unit = LayoutFs.recoverUnder(fs, root, "*")
 
-  /** Crash recovery alone — run by [[graft.sources.v2.GraftLayoutSource]]
-    * in `newScanBuilder`, before it lists the files of each SQL scan
-    * (the engine rule: every read entry point recovers first). */
-  private[graft] def recoverForRead(): Unit = recover()
+  /** Crash recovery for a SQL scan — run by
+    * [[graft.sources.v2.GraftLayoutSource]] when a view registers (the
+    * full [[recover]]) and in `newScanBuilder` before it lists the files
+    * of each scan (`scan`: the roll-forward of a committed batch alone,
+    * one probe of its marker). Every mutation of this version commits
+    * through a batch, so a backup can only predate the registration's
+    * full check. */
+  private[graft] def recoverForRead(scan: Boolean): Unit =
+    if (scan) LayoutFs.rollForward(fs, root) else recover()
 
   private def totalsOf(c: DataFrame): DataFrame =
     c.groupBy(col("query_id")).agg(
@@ -98,13 +102,13 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     recover()
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true) // two consumers: layout write + totals
-    fs.delete(new Path(tombstonesPath), true)
     import spark.implicits._
-    Seq(buckets).toDF("n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath)
-    c.withColumn("tbucket", bucketCol(col("term"), buckets))
-      .write.mode("overwrite").partitionBy("tbucket").parquet(clausesPath)
-    totalsOf(c).write.mode("overwrite").parquet(totalsPath)
+    LayoutFs.commit(fs, root) { b =>
+      b.stageRows("meta", None, Seq(buckets).toDF("n_buckets").coalesce(1))
+      b.stageRows("clauses", Some("tbucket"), c.withColumn("tbucket", bucketCol(col("term"), buckets)))
+      b.stageRows("totals", None, totalsOf(c))
+      b.drop("tombstones")
+    }
     graft.util.Pins.release(c)
   }
 
@@ -119,16 +123,17 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     val b = readBuckets()
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true)
-    val batch = LayoutFs.batch(fs, root)
-    batch.add("clauses")(dir => c.withColumn("tbucket", bucketCol(col("term"), b))
-      .write.partitionBy("tbucket").parquet(dir.toString))
-    batch.add("totals")(dir => totalsOf(c).write.parquet(dir.toString))
-    graft.util.Pins.release(c)
-    batch.commit()
+    LayoutFs.commit(fs, root) { batch =>
+      batch.add("clauses")(dir => c.withColumn("tbucket", bucketCol(col("term"), b))
+        .write.partitionBy("tbucket").parquet(dir.toString))
+      batch.add("totals")(dir => totalsOf(c).write.parquet(dir.toString))
+      graft.util.Pins.release(c)
+    }
   }
 
-  /** Unsubscribe: tombstone the query ids — O(batch) I/O, clause files
-    * untouched, effective on the very next read. Same vacuum-cadence
+  /** Unsubscribe: tombstone the query ids in one committed batch —
+    * O(batch) I/O, clause files untouched, effective on the very next
+    * read. Same vacuum-cadence
     * contract as [[InvertedIndex.delete]]: run [[vacuum]] often enough
     * that the mask stays inside the `graft.mask.broadcast.maxBytes`
     * gate. */
@@ -136,8 +141,8 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     require(queryIds.columns.toSeq == Seq("query_id"),
       s"ids must be a single-column (query_id) frame, got ${queryIds.columns.toSeq}")
     recover()
-    queryIds.select(col("query_id").cast(StringType))
-      .write.mode("append").parquet(tombstonesPath)
+    LayoutFs.commit(fs, root)(_.add("tombstones")(dir =>
+      queryIds.select(col("query_id").cast(StringType)).write.parquet(dir.toString)))
   }
 
   private def tombstoneIds(): DataFrame = {
@@ -167,14 +172,14 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     recover()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
-    val batch = LayoutFs.batch(fs, root)
-    val clauses = spark.read.parquet(clausesPath).join(ts, Seq("query_id"), "left_anti")
-    batch.stageRows("clauses", Some("tbucket"),
-      if (compactToo) clauses.repartition(col("tbucket")) else clauses)
-    val totals = spark.read.parquet(totalsPath).join(ts, Seq("query_id"), "left_anti")
-    batch.stageRows("totals", None, if (compactToo) totals.coalesce(1) else totals)
-    batch.drop("tombstones")
-    batch.commit()
+    LayoutFs.commit(fs, root) { batch =>
+      val clauses = spark.read.parquet(clausesPath).join(ts, Seq("query_id"), "left_anti")
+      batch.stageRows("clauses", Some("tbucket"),
+        if (compactToo) clauses.repartition(col("tbucket")) else clauses)
+      val totals = spark.read.parquet(totalsPath).join(ts, Seq("query_id"), "left_anti")
+      batch.stageRows("totals", None, if (compactToo) totals.coalesce(1) else totals)
+      batch.drop("tombstones")
+    }
   }
 
   /** Per-bucket file-accretion health: (tbucket, n_files, n_bytes) from
@@ -200,11 +205,11 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * (pure layout). */
   def compact(): Unit = {
     recover()
-    val batch = LayoutFs.batch(fs, root)
-    batch.stageRows("clauses", Some("tbucket"),
-      spark.read.parquet(clausesPath).repartition(col("tbucket")))
-    batch.stageRows("totals", None, spark.read.parquet(totalsPath).coalesce(1))
-    batch.commit()
+    LayoutFs.commit(fs, root) { batch =>
+      batch.stageRows("clauses", Some("tbucket"),
+        spark.read.parquet(clausesPath).repartition(col("tbucket")))
+      batch.stageRows("totals", None, spark.read.parquet(totalsPath).coalesce(1))
+    }
   }
 
   /** Maintenance policy as code — the [[InvertedIndex.maintain]] X186

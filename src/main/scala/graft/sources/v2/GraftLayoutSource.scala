@@ -20,6 +20,8 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.LayoutFs
+
 /** DataSource V2 `TableProvider` over the engine's persisted layouts —
   * the LIVE SQL surface behind [[graft.sources.StoreCatalog]]'s views.
   * Spark calls [[SupportsRead.newScanBuilder]] at every query's
@@ -82,16 +84,23 @@ private[v2] object GraftLayoutSource {
   }
 
   /** Run the owning layout's crash recovery — the engine rule that every
-    * read entry point recovers first, holding for SQL scans too: at
-    * registration and at each `scan` build (the inverted index checks
-    * for legacy state at registration only, see its `recoverForRead`). */
+    * read entry point recovers first, holding for SQL scans too: the
+    * full recovery at registration, and at each `scan` build the
+    * roll-forward of a committed batch (each layout's
+    * `recoverForRead`). A census scan also refuses an earlier version's
+    * census delta, like `InvertedIndex.vocab`. */
   def recover(root: String, table: String, scan: Boolean): Unit = {
     val spark = SparkSession.active
-    table.takeWhile(_ != '_') match {
-      case "ivf" => new graft.sources.IvfIndex(spark, root).recoverForRead()
-      case "query" => new graft.sources.QueryStore(spark, root).recoverForRead()
-      case "graph" => new graft.sources.GraphIndex(spark, root).recoverForRead()
-      case _ => new graft.sources.InvertedIndex(spark, root).recoverForRead(table, scan)
+    val layout: Boolean => Unit = table.takeWhile(_ != '_') match {
+      case "ivf" => new graft.sources.IvfIndex(spark, root).recoverForRead
+      case "query" => new graft.sources.QueryStore(spark, root).recoverForRead
+      case "graph" => new graft.sources.GraphIndex(spark, root).recoverForRead
+      case _ => new graft.sources.InvertedIndex(spark, root).recoverForRead
+    }
+    layout(scan)
+    if (table == "census") {
+      val census = new Path(root, "census")
+      LayoutFs.refuseCensusDelta(census.getFileSystem(spark.sparkContext.hadoopConfiguration), census)
     }
   }
 

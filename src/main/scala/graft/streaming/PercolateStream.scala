@@ -40,13 +40,11 @@ import graft.sources.{LayoutFs, QueryStore}
   * self-compacts when its file count passes a threshold, so per-batch
   * guard cost stays flat over the stream's life.
   *
-  * Delivery: the checkpoint gives at-least-once file delivery; match
-  * rows append BEFORE the batch's seen-keys land, so a crash between
-  * the two re-matches that one batch on replay and can duplicate ITS
-  * match rows (at-least-once in the one-batch crash window,
-  * exactly-once otherwise) — the standard append-sink streaming trade,
-  * stated honestly; dedup on (query_id, doc_id, fp) downstream for
-  * strict exactly-once. */
+  * Delivery: the checkpoint gives at-least-once file delivery, and each
+  * micro-batch's match rows, seen-keys and sidecar compaction commit
+  * as ONE [[graft.sources.LayoutFs.Batch]] on `outDir` — a batch that
+  * fails before its commit leaves nothing behind, and its replay
+  * matches again, so every match row lands exactly once. */
 object PercolateStream {
 
   /** One micro-batch's percolation against pre-validated clauses —
@@ -163,10 +161,11 @@ object PercolateStream {
         try {
           if (!fresh.isEmpty) {
             val out = matcher(fresh.drop("__fp"))
-            out.write.mode("append").parquet(outDir)
-            fresh.select(col(idCol), col("__fp"))
-              .write.mode("append").parquet(seenDir(outDir))
-            compactSeen(spark, outDir)
+            val root = new Path(outDir)
+            LayoutFs.commit(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root) { b =>
+              b.add("")(dir => out.write.parquet(dir.toString))
+              stageSeen(spark, b, outDir, fresh.select(col(idCol), col("__fp")))
+            }
             // a matcher may return a frame backed by a BATCH-lived pin
             // (percolateScored's staging) — release once every write
             // materialized, or pins accrete across micro-batches. Only
@@ -191,9 +190,10 @@ object PercolateStream {
       batch: DataFrame, idCol: String): DataFrame = {
     val fs = new Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // resolve a crashed compactSeen swap — losing the sidecar here
-    // would re-match the whole history
-    LayoutFs.recover(fs, new Path(seenDir(outDir)))
+    // finish a committed batch and restore a sidecar backup an earlier
+    // version's compaction swap left — losing the sidecar here would
+    // re-match the whole history
+    LayoutFs.recoverUnder(fs, new Path(outDir), "_seen")
     if (!fs.exists(new Path(seenDir(outDir)))) batch
     else {
       val keys = batch.select(col(idCol), col("__fp")).distinct()
@@ -203,22 +203,17 @@ object PercolateStream {
     }
   }
 
-  /** Keep the seen sidecar's file count flat: past the threshold,
-    * rewrite it as one distinct file (staged, then [[LayoutFs.swap]] —
-    * a crash leaves either the old files or
-    * the compacted one, both correct supersets of nothing). */
-  private def compactSeen(spark: SparkSession, outDir: String,
-      maxFiles: Int = 64): Unit = {
+  /** Stage the batch's seen-keys in `b`: an addition to the sidecar,
+    * or — once it holds `maxFiles` files — its rewrite as one distinct
+    * file with the keys folded in, which keeps its file count flat. */
+  private def stageSeen(spark: SparkSession, b: LayoutFs.Batch, outDir: String,
+      keys: DataFrame, maxFiles: Int = 64): Unit = {
     val dir = new Path(seenDir(outDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val nFiles = fs.listStatus(dir)
+    val nFiles = if (!fs.exists(dir)) 0 else fs.listStatus(dir)
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    if (nFiles <= maxFiles) return
-    val staging = new Path(dir.getParent, "._seen.staging")
-    fs.delete(staging, true)
-    spark.read.parquet(dir.toString).distinct().coalesce(1)
-      .write.parquet(staging.toString)
-    LayoutFs.swap(fs, staging, dir)
+    if (nFiles < maxFiles) b.add("_seen")(d => keys.write.parquet(d.toString))
+    else b.stageRows("_seen", None,
+      spark.read.parquet(dir.toString).unionByName(keys).distinct().coalesce(1))
   }
 }

@@ -8,19 +8,36 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The commit decision lives in one module: a layout that publishes
-  * files lists a swap or a move in a [[LayoutFs.Batch]], so no main
-  * source file other than `sources/LayoutFs.scala` calls `.rename(`. */
+  * files lists a swap, a move or a drop in a [[LayoutFs.Batch]], so no
+  * main source file other than `sources/LayoutFs.scala` calls
+  * `.rename(`, and no layout writes or deletes behind the batch's back. */
 class CommitModuleSuite extends AnyFunSuite {
+  private val main = Paths.get("src/main/scala")
+
+  private def source(rel: String): String =
+    new String(Files.readAllBytes(main.resolve(rel)), UTF_8)
+
   test("no main source file outside LayoutFs renames a path") {
-    val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
     val w = Files.walk(main)
     val offenders = try w.iterator().asScala.toSeq
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => main.relativize(p).toString)
       .filter(_ != "graft/sources/LayoutFs.scala")
-      .filter(rel => new String(Files.readAllBytes(main.resolve(rel)), UTF_8).contains(".rename("))
+      .filter(rel => source(rel).contains(".rename("))
     finally w.close()
     assert(offenders.isEmpty, s"files that rename outside LayoutFs: ${offenders.sorted.mkString(", ")}")
+  }
+
+  test("no layout writes through a Spark save mode or deletes a path itself") {
+    assert(Files.isDirectory(main), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val layouts = Seq("EmbeddingStore", "IvfIndex", "InvertedIndex", "QueryStore", "GraphIndex", "NgramLm")
+      .map(n => s"graft/sources/$n.scala")
+    val offenders = for {
+      rel <- layouts
+      call <- Seq(".write.mode(", ".delete(")
+      if source(rel).contains(call)
+    } yield s"$rel: $call"
+    assert(offenders.isEmpty, s"layout writes outside LayoutFs.Batch: ${offenders.mkString(", ")}")
   }
 }

@@ -28,16 +28,13 @@ import graft.operators.GraphAnn
   * and the next call must recover and succeed: a state that is not yet
   * the new one is driven there by re-running the mutation.
   *
-  * Commit units: every mutation commits the whole layout at once —
-  * multi-directory rewrites and additions (embedding-store
-  * upsert/delete, IVF list deletes, compactions, merges and splits,
-  * graph append, every inverted-index and query-store mutation) as one
-  * [[LayoutFs.Batch]], n-gram versions by their pointer — so a row
-  * compares the whole layout's rows, old or new (the IVF compactions,
-  * which change no rows, compare part-file counts too). A separately
-  * published piece (a store's prefix-dims meta, the derived meta a
-  * block-max adopt rewrites alone) is its own unit. Snapshots either
-  * exist complete or not at all.
+  * Commit units: every mutation — builds, appends, tombstones,
+  * rewrites, n-gram versions with their pointer — commits the whole
+  * layout at once as one [[LayoutFs.Batch]], so a row compares the
+  * whole layout's rows, old or new (the IVF compactions, which change
+  * no rows, compare part-file counts too). A separately published
+  * piece (the derived meta a block-max adopt rewrites alone) is its
+  * own unit. Snapshots either exist complete or not at all.
   *
   * A row run with `quietRenames` fails each rename by returning `false`
   * rather than throwing, and checks that the mutation turns that into an
@@ -182,10 +179,15 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
   }
   private def observeStoreMeta(p: String): State = {
     val derived = store(p).withDerived(storeRaw)
-    whole(observeStore(p)) + ("meta" ->
+    whole(observeStore(p) + ("meta" ->
       (if (derived.columns.contains("vector_prefix")) fingerprint(derived.select("vector_prefix"))
-       else Set("no prefixDims")))
+       else Set("no prefixDims"))))
   }
+
+  // a prefixed store loaded whole, then loaded again with other rows
+  private def prefixedStore(p: String) = new EmbeddingStore(spark, p, numBuckets = 4, prefixDims = Some(2))
+  private def reloadRaw = vecs.drop(6).map { case (i, v) => (i / 3, (i % 3).toInt, v.map(_ * 3f)) }
+    .toDF("post_id", "sequence_no", "vector")
 
   private lazy val cents: Seq[Array[Float]] = vecs.take(3).map(_._2.toArray)
   private def ivf(p: String) = new IvfIndex(spark, p, assignBuckets = 4)
@@ -204,6 +206,17 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
     lists ++ codes + ("centroids" -> idx.centroids().map(_.mkString(",")).zipWithIndex
       .map { case (c, i) => s"$i:$c" }.toSet)
   }
+
+  // the IVF layouts and both assignment sidecars
+  private def observeIvfAll(p: String): State = {
+    val rows = observeIvf(p)
+    rows ++ Seq("assign", "assign_pq").flatMap { d =>
+      byKey(spark.read.parquet(s"$p/$d").select("abucket", "id", "ivf_list"), "abucket")
+        .map { case (k, v) => s"$d/$k" -> v }
+    }
+  }
+  private val moreVecs: Seq[(Long, Seq[Float])] =
+    (25L to 30L).map(i => i -> Seq.fill(4)(rnd.nextFloat() * 2f - 1f))
 
   // part-file counts per list directory (after observeIvf recovered):
   // a compaction changes no rows, only these
@@ -252,6 +265,13 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
     inv(p).buildForward()
     inv(p).append(docsB, "doc_id", col("text"))
   }
+  // the block-max sidecars' rows beside the index's answers; a file-grain
+  // row's file name carries its write job's id, so a retried append names
+  // its files afresh
+  private def observeInvBlockMax(p: String): State =
+    whole(observeInv(p) + ("blockmax" -> fingerprint(spark.read.parquet(s"$p/blockmax"))) +
+      ("blockmax_files" -> fingerprint(spark.read.parquet(s"$p/blockmax_files").drop("fname"))))
+
   private def observeInvForward(p: String): State =
     whole(observeInv(p) + ("forward" -> fingerprint(inv(p).docTerms(1L to 7L))) +
       ("meta" -> fingerprint(inv(p).maintainDerivedVerbose(Double.MaxValue)
@@ -301,6 +321,13 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
   private def observeGraph(p: String): State = {
     graph(p).edges().collect() // recovers
     byKey(spark.read.parquet(s"$p/edges").select("gbucket", "src", "dst", "cosine"), "gbucket")
+  }
+  private def observeGraphTombstones(p: String): State = {
+    val edges = observeGraph(p)
+    val t = new Path(s"$p/tombstones")
+    edges + ("tombstones" ->
+      (if (t.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(t))
+        fingerprint(spark.read.parquet(t.toString)) else Set.empty[String]))
   }
 
   // ---- the matrix ----------------------------------------------------------
@@ -367,6 +394,33 @@ class LayoutCrashMatrixSuite extends AnyFunSuite {
   row("GraphIndex.append")(sweep(buildGraph, p => graph(p).append(embs, "id", "vector",
     Seq(21L, 22L).toDF("id"), r = 4, searchBeam = 8, entryId = Some(1L)),
     p => whole(observeGraph(p))))
+
+  // ---- builds, appends and tombstones: one batch each ----------------------
+
+  row("EmbeddingStore.bulkLoad (over a loaded store, with the prefixDims meta)")(sweep(
+    prefixedStore(_).bulkLoad(storeRaw), prefixedStore(_).bulkLoad(reloadRaw), observeStoreMeta))
+  row("IvfIndex.buildWithPq (over a built index)")(sweep(buildIvf, { p =>
+    val books = graft.operators.Pq.seedCodebooks(vecDf(vecs.map(_._1)), "id", "vector", m = 2, k = 4)
+    ivf(p).buildWithPq(vecDf(vecs.map(_._1).filter(_ % 3 != 0)), "id", "vector",
+      vecs.drop(5).take(3).map(_._2.toArray), books)
+  }, p => whole(observeIvfAll(p))))
+  row("IvfIndex.append")(sweep(buildIvf,
+    p => ivf(p).append(vecDf(moreVecs.map(_._1), moreVecs), "id", "vector"),
+    p => whole(observeIvfAll(p))))
+  row("IvfIndex.appendPq")(sweep(buildIvf,
+    p => ivf(p).appendPq(vecDf(moreVecs.map(_._1), moreVecs), "id", "vector"),
+    p => whole(observeIvfAll(p))))
+  row("InvertedIndex.append (over a block-max index)")(sweep(buildInvBlockMax, p => inv(p).append(
+    Seq((8L, "fresh merge words"), (9L, "sort sort again")).toDF("doc_id", "text"),
+    "doc_id", col("text")), observeInvBlockMax))
+  row("InvertedIndex.buildForward (over a forward index)")(sweep(buildInvForward,
+    p => inv(p).buildForward(), observeInvForward))
+  row("InvertedIndex.delete")(sweep(buildInv, p => inv(p).delete(Seq(3L, 7L).toDF("doc_id")),
+    p => whole(observeInv(p))))
+  row("QueryStore.delete")(sweep(buildQs, p => qs(p).delete(Seq("a1", "a3").toDF("query_id")),
+    p => whole(observeQs(p))))
+  row("GraphIndex.delete")(sweep(buildGraph, p => graph(p).delete(Seq(3L, 5L).toDF("id")),
+    p => whole(observeGraphTombstones(p))))
 
   row("snapshot: EmbeddingStore")(sweepSnapshot(buildStore, store(_).snapshot(_), observeStore))
   row("snapshot: IvfIndex")(sweepSnapshot(buildIvf, ivf(_).snapshot(_), observeIvf))

@@ -18,7 +18,10 @@ import graft.TestSpark
   * and deleted two staging directories on every read; the inverted-index
   * SQL row's, once every index mutation committed through the batch and
   * a scan build's recovery became one probe of its marker (it made 6
-  * `exists` and 3 `delete` calls per scan build before). */
+  * `exists` and 3 `delete` calls per scan build before); the IVF SQL
+  * row's, once every IVF write committed through the batch and a scan
+  * build's recovery became the root's one glob (it globbed the lists
+  * too before). */
 class ServePathFsCallsSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -79,7 +82,7 @@ class ServePathFsCallsSuite extends AnyFunSuite {
   }
 
   check("SQL scan over registerIvfIndex views", Map("rename" -> 0L, "delete" -> 0L,
-      "exists" -> 0L, "globStatus" -> 2L, "listStatus" -> 7L)) {
+      "exists" -> 0L, "globStatus" -> 1L, "listStatus" -> 6L)) {
     val q = query.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ", ", ")")
     spark.sql(s"""SELECT id, vec_cosine(vector, $q) AS cosine FROM fs_calls_lists
                  |WHERE ivf_list IN (0, 2) ORDER BY cosine DESC, id LIMIT 5""".stripMargin)
