@@ -56,7 +56,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   private val metaPath = new Path(path, "_graft_meta")
 
   private def readStoredPrefixDims(): Option[Int] = {
-    recoverAll()
+    recover()
     if (!fs.exists(metaPath)) None
     else {
       val in = fs.open(metaPath)
@@ -134,7 +134,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * call; only the schema comes from [[schemaMemo]], so a read launches
     * no Spark job. */
   def read(): DataFrame = {
-    recoverAll()
+    recover()
     spark.read.schema(schemaMemo(spark.read.parquet(path).schema)).parquet(path)
   }
 
@@ -300,7 +300,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * listing taken mid-crash-window would count a hidden backup's
     * absence as an empty bucket. */
   def fileStats(): DataFrame = {
-    recoverAll()
+    recover()
     import spark.implicits._
     val rows = Option(fs.listStatus(new Path(path))).toSeq.flatten
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
@@ -312,14 +312,15 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   }
 
   /** Consistent on-disk snapshot of the whole store — bucket
-    * directories and the prefix-dims meta ([[LayoutFs.snapshot]]). The
-    * quiesce is [[recoverAll]] (crashed swaps, a committed batch); the
-    * snapshot then discards an uncommitted batch (hidden mutation debris
+    * directories and the prefix-dims meta ([[LayoutFs.snapshot]]), after
+    * [[recover]] (crashed swaps, a committed batch); the snapshot then
+    * discards an uncommitted batch (hidden mutation debris
     * is space, not state — a snapshot should not ship it). Open the copy
     * with `new EmbeddingStore(spark, target)`. */
-  def snapshot(targetPath: String): Unit =
-    LayoutFs.snapshot(fs, new Path(path), targetPath,
-      spark.sparkContext.hadoopConfiguration)(recoverAll())
+  def snapshot(targetPath: String): Unit = {
+    recover()
+    LayoutFs.snapshot(fs, new Path(path), targetPath, spark.sparkContext.hadoopConfiguration)
+  }
 
   /** Bulk load: derive columns, assign ids, bucket, and replace the
     * whole store — every bucket and the meta — as one committed batch. */
@@ -363,16 +364,16 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     schemaMemo.invalidate()
   }
 
-  /** Roll a committed batch forward and restore the hidden backups
-    * (`.bucket=N.bak`, `._graft_meta.bak`) an earlier version's swaps
-    * left behind. Runs at the top of [[read]] — i.e. before ANY consumer
+  /** Crash recovery, at the top of [[read]] — i.e. before ANY consumer
     * (including upsert/insertAll, which compute maxId and the
-    * existing-key join from read()) can observe the store. Without it,
-    * a bucket hidden in a `.bak` or a staged batch would make its keys
+    * existing-key join from read()) can observe the store: the first call
+    * opens the store, every later one rolls a committed batch forward
+    * and restores a bucket or meta backup (`.bucket=N.bak`,
+    * `._graft_meta.bak`) an earlier version's swap left, from one glob of
+    * the store root ([[LayoutFs.Recovery]]) — a single NameNode/S3 LIST,
+    * negligible next to the file listing that follows. Without it, a
+    * bucket hidden in a `.bak` or a staged batch would make its keys
     * look new to the next upsert: id churn, lost created_at, and fresh
-    * ids colliding with the hidden bucket's ids store-wide. One glob of
-    * the store root per call ([[LayoutFs.recoverUnder]]) — a single
-    * NameNode/S3 LIST, negligible next to the file listing that
-    * follows. */
-  private def recoverAll(): Unit = LayoutFs.recoverUnder(fs, new Path(path), "*")
+    * ids colliding with the hidden bucket's ids store-wide. */
+  private val recover = new LayoutFs.Recovery(() => fs, path)
 }

@@ -113,7 +113,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * parity tests; serving goes through the pruned per-hop reads.
     * Recovers crashed append swaps first (the read-path rule). */
   def edges(): DataFrame = {
-    recoverAll()
+    recover()
     spark.read.parquet(edgesPath).select(col("src"), col("dst"))
   }
 
@@ -157,7 +157,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       s"append needs a cosine-scored adjacency: the store at $path was " +
       "built from a (src, dst)-only edge set (build-only); rebuild with " +
       "cosine to enable inserts")
-    recoverAll()
+    recover()
     import org.apache.spark.sql.functions.broadcast
     val nodes = allEmbs.select(col(idCol).cast(LongType).as("id"),
       col(vecCol).as("v"))
@@ -260,21 +260,12 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     graft.util.Pins.release(addDf)
   }
 
-  /** Crash recovery for a SQL scan — run by
-    * [[graft.sources.v2.GraftLayoutSource]] when a view registers and in
-    * `newScanBuilder` before it lists the files of each scan. Both run
-    * the full [[recoverAll]]: a `graph_*` view heals an edge-bucket
-    * backup that appears after its registration too, rather than serve
-    * the graph minus that bucket. */
-  private[graft] def recoverForRead(scan: Boolean): Unit = recoverAll()
-
-  /** Roll a committed batch forward (it is rooted at the graph root),
-    * then restore a backup an earlier version's swap left, at the root
-    * or under the edges. */
-  private def recoverAll(): Unit = {
-    LayoutFs.recoverUnder(fs, new Path(path), "*")
-    LayoutFs.recoverUnder(fs, new Path(edgesPath), "gbucket=*")
-  }
+  /** Crash recovery, run at the top of every read and mutation
+    * ([[LayoutFs.Recovery]]): the first call opens the graph — under the
+    * root and the edges, where an earlier version's swaps left bucket
+    * backups — and every later call probes the root once, rolling a
+    * committed batch forward. */
+  private[graft] val recover = new LayoutFs.Recovery(() => fs, path, "edges")
 
   /** Lazy delete: add ids to the tombstone table in one committed batch
     * (O(batch)); the nodes keep routing but stop returning on the next
@@ -296,7 +287,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * coalesce to one file per touched bucket (the [[EmbeddingStore]]
     * rule — mutation count never inflates file count). */
   def fileStats(): DataFrame = {
-    recoverAll()
+    recover()
     import spark.implicits._
     val rows = Option(fs.listStatus(new Path(edgesPath))).toSeq.flatten
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gbucket="))
@@ -337,7 +328,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       entryId: Option[Long],
       resultFilter: DataFrame => DataFrame): DataFrame = {
     storedBuckets()
-    recoverAll()
+    recover()
     // the frontier's bucket set arrives from beamCore's per-hop digest
     // (collected in the same action that materializes the hop, ≤
     // `buckets` ints) and rides the edge read as a partition isin
@@ -364,7 +355,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   def maintain(maxTombstoneFrac: Double = 0.2): DataFrame = {
     require(maxTombstoneFrac > 0.0,
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
-    recoverAll()
+    recover()
     import spark.implicits._
     val nNodes = edges().select(col("src")).distinct().count()
     val nTomb = tombstoneIds().map(_.count()).getOrElse(0L)
@@ -382,11 +373,12 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       .toDF("check", "metric", "threshold", "rebuild_recommended")
   }
 
-  /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]). The quiesce
-    * is [[recoverAll]]: a committed [[append]] batch must roll forward,
-    * and a crashed swap's hidden backup resolve, before the tree copies,
-    * or the snapshot would ship buckets in their mid-commit state. */
-  def snapshot(targetPath: String): Unit =
-    LayoutFs.snapshot(fs, new Path(path), targetPath,
-      spark.sparkContext.hadoopConfiguration)(recoverAll())
+  /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]), after
+    * [[recover]]: a committed [[append]] batch must roll forward, and a
+    * crashed swap's hidden backup resolve, before the tree copies, or
+    * the snapshot would ship buckets in their mid-commit state. */
+  def snapshot(targetPath: String): Unit = {
+    recover()
+    LayoutFs.snapshot(fs, new Path(path), targetPath, spark.sparkContext.hadoopConfiguration)
+  }
 }

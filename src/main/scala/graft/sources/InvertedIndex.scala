@@ -142,18 +142,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
 
   /** Roll a committed [[LayoutFs.Batch]] forward and resolve a crashed
     * two-rename swap of a top-level directory, from one glob of the root
-    * ([[LayoutFs.recoverUnder]]). An uncommitted batch is left alone:
-    * the next mutation discards it. Run at every entry point that
+    * ([[LayoutFs.Recovery]]), which also fails on a census delta an
+    * earlier version's crashed vacuum left. An uncommitted batch is left
+    * alone: the next mutation discards it. Run at every entry point that
     * touches the layout (the [[IvfIndex]] recover rule). */
-  private def recover(): Unit = LayoutFs.recoverUnder(fs, root, "*")
-
-  /** [[recover]] for the entry points that read or rewrite the census:
-    * a census delta left by an earlier version's crashed vacuum fails
-    * them ([[LayoutFs.refuseCensusDelta]]). */
-  private def recoverCensus(): Unit = {
-    recover()
-    LayoutFs.refuseCensusDelta(fs, new Path(censusPath))
-  }
+  private[graft] val recover = new LayoutFs.Recovery(() => fs, path)
 
   /** Tokenize and write the partitioned postings layout plus the
     * (doc_id, dl) doclens table — the corpus-stat side BM25 needs
@@ -228,7 +221,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * or not at all, never a torn half. */
   def append(docs: DataFrame, idCol: String, text: Column): Unit = {
     invalidateLiveCount()
-    recoverCensus()
+    recover()
     migrateFlatCensusBase()
     val b = readBuckets()
     LayoutFs.commit(fs, root) { batch =>
@@ -301,7 +294,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * policy covers the rebuild. */
   def mergeFrom(other: InvertedIndex): Unit = {
     invalidateLiveCount()
-    recoverCensus()
+    recover()
     other.recover()
     migrateFlatCensusBase()
     val b = readBuckets()
@@ -430,34 +423,16 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * serve surface counts the live doclens in several entry points
     * (hot-term elision, MLT idf, PRF idf, JLH background) and a single
     * SERP-class query composes several of them — r22 profiling showed
-    * the same count job scheduled 2-4× per query. The count is cached
-    * on THIS instance keyed by the (doclens, tombstones) directory
-    * mtimes — every mutation path replaces or touches those
-    * directories (append moves files in, delete appends a tombstone
-    * file, vacuum/compact swap whole dirs), so a stamp mismatch forces
-    * a fresh count; mutation methods additionally invalidate
-    * explicitly (belt and braces against coarse mtime granularity
-    * within one instance). Nothing persists across instances or runs —
-    * a new `InvertedIndex(...)` always counts afresh. */
-  private var liveCountCache: Option[((Long, Long), Long)] = None
-  private def layoutStamp(): (Long, Long) = {
-    def m(p: String): Long = {
-      val pp = new Path(p)
-      if (fs.exists(pp)) fs.getFileStatus(pp).getModificationTime else -1L
-    }
-    (m(doclensPath), m(tombstonesPath))
-  }
-  private def invalidateLiveCount(): Unit = liveCountCache = None
-  private def liveDocCount(): Long = {
-    val k = layoutStamp()
-    liveCountCache match {
-      case Some((k0, n)) if k0 == k => n
-      case _ =>
-        val n = liveOnly(spark.read.parquet(doclensPath)).count()
-        liveCountCache = Some((k, n))
-        n
-    }
-  }
+    * the same count job scheduled 2-4× per query. The count is memoized
+    * on THIS instance, stamped by the doclens and tombstones directories
+    * ([[graft.util.StampedMemo]]): append moves files in, delete adds a
+    * tombstone file and vacuum/compact swap whole directories, and the
+    * mutation methods invalidate it too. */
+  private lazy val liveCountMemo =
+    new graft.util.StampedMemo[Long](() => fs, Seq(doclensPath, tombstonesPath))
+  private def invalidateLiveCount(): Unit = liveCountMemo.invalidate()
+  private def liveDocCount(): Long =
+    liveCountMemo(liveOnly(spark.read.parquet(doclensPath)).count())
 
   /** Physically remove tombstoned docs (X175): ONE anti-join rewrite
     * each of postings (partition layout preserved) and doclens, plus a
@@ -477,7 +452,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * layout twice back-to-back for the identical end state. */
   private def vacuumImpl(compactToo: Boolean): Unit = {
     invalidateLiveCount()
-    recoverCensus()
+    recover()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
     LayoutFs.commit(fs, root) { batch =>
@@ -556,7 +531,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   private def vocabSlice(buckets: Option[Seq[Int]]): DataFrame = {
-    recoverCensus()
+    recover()
     // base rows prune by the PARTITION column (file-listing prune);
     // delta/fallback rows — tiny by the vacuum-cadence contract —
     // recompute the bucket from the term on the fly
@@ -627,7 +602,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   def compact(doclensFiles: Int = 1): Unit = {
     require(doclensFiles >= 1, s"doclensFiles must be >= 1, got $doclensFiles")
     invalidateLiveCount()
-    recoverCensus()
+    recover()
     LayoutFs.commit(fs, root) { batch =>
       batch.stageRows("postings", Some("tbucket"),
         spark.read.parquet(postingsPath).repartition(col("tbucket")))
@@ -1350,16 +1325,6 @@ final class InvertedIndex(spark: SparkSession, path: String,
   /** The stored bucket count B — the SQL caller's input to the pruning
     * predicate documented on [[livePostings]]. */
   def bucketCount: Int = { recover(); readBuckets() }
-
-  /** Crash recovery for a SQL scan — run by
-    * [[graft.sources.v2.GraftLayoutSource]] when a view registers (the
-    * full [[recover]]) and in `newScanBuilder`, before it lists the
-    * files of each scan (`scan`: the roll-forward of a committed batch
-    * alone, one probe). Every mutation of this version commits through a
-    * batch, so a backup or a legacy marker at the root can only predate
-    * the registration's full check. */
-  private[graft] def recoverForRead(scan: Boolean): Unit =
-    if (scan) LayoutFs.rollForward(fs, root) else recover()
 
   /** Dirichlet query-likelihood ranking (X197; Zhai & Lafferty, SIGIR
     * '01 — THE classic LM ranker next to BM25): top-k docs by
@@ -2368,13 +2333,13 @@ final class InvertedIndex(spark: SparkSession, path: String,
     // ONE aggregate job for both corpus-side counts (was two identical
     // scans of the live doclens); the background count seeds the
     // instance's live-count cache for any later serve in the same walk
-    val stamp = layoutStamp()
-    val dls = liveOnly(spark.read.parquet(doclensPath))
-    val cts = dls.agg(count(lit(1)).as("__bg"),
-      count(when(col("doc_id").isin(fgIds: _*), lit(1))).as("__fg")).head()
-    val nBg = cts.getLong(0)
-    val nFg = cts.getLong(1)
-    liveCountCache = Some((stamp, nBg))
+    var nFg = 0L
+    val nBg = liveCountMemo.refresh {
+      val cts = liveOnly(spark.read.parquet(doclensPath)).agg(count(lit(1)).as("__bg"),
+        count(when(col("doc_id").isin(fgIds: _*), lit(1))).as("__fg")).head()
+      nFg = cts.getLong(1)
+      cts.getLong(0)
+    }
     val empty = spark.read.parquet(doclensPath).limit(0)
       .select(col("doc_id").cast(StringType).as("term"),
         lit(0L).as("df_fg"), lit(0L).as("df_bg"), lit(0.0).as("score"))
@@ -2635,16 +2600,17 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   /** Consistent on-disk snapshot of the whole index (X248 — the ES
-    * snapshot/restore ops surface; [[LayoutFs.snapshot]]). The quiesce
-    * is [[recover]], which rolls a committed batch forward; the
-    * snapshot then discards an uncommitted one. Pending tombstones and
+    * snapshot/restore ops surface; [[LayoutFs.snapshot]]), after
+    * [[recover]], which rolls a committed batch forward; the snapshot
+    * then discards an uncommitted one. Pending tombstones and
     * sidecar deltas travel with the copy, so it answers exactly like
     * the source at snapshot time; a later vacuum on either side leaves
     * the other untouched. Open it with `new InvertedIndex(spark,
     * target)`. */
-  def snapshot(targetPath: String): Unit =
-    LayoutFs.snapshot(fs, new Path(path), targetPath,
-      spark.sparkContext.hadoopConfiguration)(recover())
+  def snapshot(targetPath: String): Unit = {
+    recover()
+    LayoutFs.snapshot(fs, root, targetPath, spark.sparkContext.hadoopConfiguration)
+  }
 
   /** The postings of exactly `terms`, read from their pruned bucket
     * directories only — schema-identical to an in-memory

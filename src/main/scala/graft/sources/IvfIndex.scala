@@ -147,7 +147,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * index); a drifted coarse quantizer degrades recall, not the
     * within-probed-lists exactness. */
   def append(embs: DataFrame, idCol: String, vecCol: String): Unit = {
-    recover(listsPath, assignPath)
+    recover()
     appendTo("lists", "assign", embs, idCol, vecCol)(identity)
   }
 
@@ -197,7 +197,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * A list whose every row is deleted remains as an empty directory —
     * harmless to partition discovery. */
   def delete(ids: DataFrame): Unit = {
-    recover(listsPath, assignPath)
+    recover()
     deleteFrom("lists", "assign", assignMetaPath, ids)
   }
 
@@ -262,7 +262,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * lists to compact is the caller's read of file counts, the
     * [[splitList]] monitoring convention. */
   def compact(listIds: Seq[Int]): Unit = {
-    recover(listsPath)
+    recover()
     requireDirs(listsPath, "ivf_list", listIds)
     LayoutFs.commit(fs, new Path(path))(
       rewrite(_, "lists", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
@@ -271,7 +271,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   /** [[compact]] for the PQ codes layout — appendPq accretes files the
     * same way. */
   def compactPq(listIds: Seq[Int]): Unit = {
-    recover(codesPath)
+    recover()
     requireDirs(codesPath, "ivf_list", listIds)
     LayoutFs.commit(fs, new Path(path))(
       rewrite(_, "codes", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
@@ -281,7 +281,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * file per touched bucket; B is bounded, so this is always a small
     * job). No-op for a layout whose sidecar was never written. */
   def compactAssign(): Unit = {
-    recover(assignPath, assignPqPath)
+    recover()
     LayoutFs.commit(fs, new Path(path)) { b =>
       Seq(("assign", assignMetaPath), ("assign_pq", assignPqMetaPath))
         .filter { case (_, meta) => fs.exists(new Path(meta)) }
@@ -298,7 +298,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * the [[compact]]-policy input, from the file listing alone (no data
     * read); the [[graft.sources.InvertedIndex.fileStats]] convention. */
   def fileStats(): DataFrame = {
-    recover(listsPath)
+    recover()
     import spark.implicits._
     dirFileCounts(listsPath, "ivf_list").toDF("ivf_list", "n_files")
   }
@@ -331,7 +331,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     // ivf_list=<last> dir — deciding on that stale listing would have
     // the inner compact() roll the merge forward mid-flight and then
     // fail requireDirs on the now-dropped directory
-    recover(listsPath)
+    recover()
     val listCounts = dirFileCounts(listsPath, "ivf_list")
     val toCompact = listCounts.filter(_._2 > maxFilesPerList)
       .map(_._1).sorted
@@ -353,16 +353,14 @@ final class IvfIndex(spark: SparkSession, path: String,
     * codes, codebooks, centroids, both assignment sidecars and their
     * meta ([[LayoutFs.snapshot]]; the reference's flagship funnel serves
     * from THIS store, so it is the first layout a deployment needs to
-    * back up). The quiesce rolls a committed batch forward and resolves
-    * every swap backup across BOTH layouts, all sidecars and the centroid
-    * pointer; the snapshot then discards an uncommitted batch. The copy
-    * answers exactly like
-    * the source at snapshot time (same centroids, same pending
-    * compaction debt); open it with `new IvfIndex(spark, target)`. */
-  def snapshot(targetPath: String): Unit =
-    LayoutFs.snapshot(fs, new Path(path), targetPath,
-        spark.sparkContext.hadoopConfiguration)(
-      recover(listsPath, assignPath, codesPath, assignPqPath))
+    * back up). [[recover]] first rolls a committed batch forward; the
+    * snapshot then discards an uncommitted batch. The copy answers
+    * exactly like the source at snapshot time (same centroids, same
+    * pending compaction debt); open it with `new IvfIndex(spark, target)`. */
+  def snapshot(targetPath: String): Unit = {
+    recover()
+    LayoutFs.snapshot(fs, new Path(path), targetPath, spark.sparkContext.hadoopConfiguration)
+  }
 
   private def requireDirs(base: String, partCol: String, ids: Seq[Int]): Unit =
     ids.foreach { n =>
@@ -388,7 +386,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * compressed layout is served. */
   def retrain(targetPath: String, iters: Int): IvfIndex = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    recover(listsPath)
+    recover()
     val vecs = spark.read.parquet(listsPath)
       .select(col("id"), col("vector"))
     val cents = Ann.lloydRounds(vecs, "vector", loadCentroids(), iters)
@@ -425,7 +423,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * Some((newListId, movedRows)) on success. */
   def splitList(listId: Int, lloydIters: Int = 1): Option[(Int, Long)] = {
     require(lloydIters >= 1, s"lloydIters must be >= 1, got $lloydIters")
-    recover(listsPath, assignPath, codesPath, assignPqPath)
+    recover()
     val cs = loadCentroids()
     require(listId >= 0 && listId < cs.size,
       s"listId $listId out of range [0, ${cs.size})")
@@ -509,7 +507,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * highest list id the roles swap (the union lands under `b`) so the
     * vacated slot is always the highest. */
   def mergeLists(a: Int, b: Int): (Int, Long) = {
-    recover(listsPath, assignPath, codesPath, assignPqPath)
+    recover()
     val cs = loadCentroids()
     require(a != b, s"cannot merge list $a with itself")
     Seq(a, b).foreach(i => require(i >= 0 && i < cs.size,
@@ -620,13 +618,15 @@ final class IvfIndex(spark: SparkSession, path: String,
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Crash recovery, run once at the top of every entry point: roll a
-    * committed batch forward and restore a backup an earlier version's
-    * swap left at the index root ([[LayoutFs.recoverUnder]]), then under
-    * each named layout directory. Reads only — an uncommitted batch
-    * stays for the next mutation to discard. */
-  private def recover(dirs: String*): Unit =
-    (path +: dirs).foreach(d => LayoutFs.recoverUnder(fs, new Path(d), "*"))
+  /** Crash recovery, run once at the top of every entry point
+    * ([[LayoutFs.Recovery]]): the first call opens the index — under the
+    * root and the `lists`, `codes`, `assign` and `assign_pq` directories,
+    * where an earlier version's swaps left backups and its split/merge
+    * markers — and every later call probes the root once, rolling a
+    * committed batch forward. An uncommitted batch stays for the next
+    * mutation to discard. */
+  private[graft] val recover =
+    new LayoutFs.Recovery(() => fs, path, "lists", "codes", "assign", "assign_pq")
 
   /** The stored centroids, ordered by cid, after [[recover]]: the root
     * pointer must never read as missing or as a mutation's half. */
@@ -654,7 +654,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   def search(query: Array[Float], k: Int, nprobe: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recover(listsPath)
+    recover()
     val probed = spark.read.parquet(listsPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
     Ann.bruteForceTopK(probed, "id", "vector", query, k)
@@ -674,7 +674,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       pred: Column): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recover(listsPath)
+    recover()
     val probed = spark.read.parquet(listsPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
       .filter(pred)
@@ -688,19 +688,9 @@ final class IvfIndex(spark: SparkSession, path: String,
     * like [[search]]) and scores with the registered `vec_cosine`
     * kernel. */
   def listsView: DataFrame = {
-    recover(listsPath)
+    recover()
     spark.read.parquet(listsPath)
   }
-
-  /** Crash recovery for a SQL scan — run by
-    * [[graft.sources.v2.GraftLayoutSource]] when a view registers (the
-    * full [[recover]] of the root and the lists) and in `newScanBuilder`
-    * before it lists the files of each scan (`scan`: the root's one
-    * glob, which rolls a committed batch forward). Every mutation of
-    * this version commits through a batch, so a backup under the lists
-    * can only predate the registration's full check. */
-  private[graft] def recoverForRead(scan: Boolean): Unit =
-    if (scan) recover() else recover(listsPath)
 
   /** See [[listsView]]. */
   def centroidsView: DataFrame = {
@@ -765,7 +755,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * [[append]]. Codebook/centroid drift is
     * [[graft.operators.Ann.ivfStats]]'s contract, as for [[append]]. */
   def appendPq(embs: DataFrame, idCol: String, vecCol: String): Unit = {
-    recover(codesPath, assignPqPath)
+    recover()
     val books = codebooks()
     appendTo("codes", "assign_pq", embs, idCol, vecCol)(
       Pq.encode(_, "vector", books).select(col("id"), col("codes"), col("ivf_list")))
@@ -777,7 +767,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * `codes/ivf_list=N` — so a 100 TB deployment serving from the
     * compressed layout gets steady-state deletes without a rebuild. */
   def deletePq(ids: DataFrame): Unit = {
-    recover(codesPath, assignPqPath)
+    recover()
     deleteFrom("codes", "assign_pq", assignPqMetaPath, ids)
   }
 
@@ -796,7 +786,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   def searchPq(query: Array[Float], topK: Int, nprobe: Int): DataFrame = {
     require(topK >= 1, s"topK must be positive, got $topK")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recover(codesPath)
+    recover()
     val probed = spark.read.parquet(codesPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
     Pq.adcTopK(probed, "id", "codes", codebooks(), query, topK)
@@ -815,7 +805,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       pred: Column): DataFrame = {
     require(topK >= 1, s"topK must be positive, got $topK")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recover(codesPath)
+    recover()
     val probed = spark.read.parquet(codesPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
       .filter(pred)
@@ -839,7 +829,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       refine: Int = 3): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    recover(listsPath)
+    recover()
     val cand = searchPq(query, topK = refine * k, nprobe)
       .select(col("id"))
     val probedRaw = spark.read.parquet(listsPath)

@@ -23,13 +23,20 @@ import org.apache.spark.sql.functions.col
   * keeping the file names) or a `drop` (delete a live directory).
   * Publishing runs the swaps and moves in the order they were listed,
   * then the drops, then drops the batch. From the marker on,
-  * [[rollForward]] (or [[recoverUnder]]) on the root finishes the batch,
-  * so a crash leaves the old layout or the whole new one. Hidden paths
-  * are skipped by Spark's file listing and partition discovery, so no
-  * reader sees staged files or a `bucket=N.bak` partition value.
-  * Readers never delete an uncommitted batch: only the next batch,
-  * [[discardBatch]] (a layout's vacuum) or a [[snapshot]] quiesce
-  * discards one.
+  * [[rollForward]] on the root finishes the batch, so a crash leaves the
+  * old layout or the whole new one. Hidden paths are skipped by Spark's
+  * file listing and partition discovery, so no reader sees staged files
+  * or a `bucket=N.bak` partition value.
+  *
+  * Recovery is split by where its state can come from. A layout
+  * handle [[open]]s its layout once, at its first call, which also looks
+  * under the layout directories where an earlier version's lone swaps
+  * left backups and its commit markers. Every later call of the handle,
+  * read or write, makes one glob of the root ([[Recovery]]), and every
+  * SQL scan build and every new batch makes the batch's own probe
+  * ([[rollForward]]), which lists nothing. Readers never delete an
+  * uncommitted batch: only the next batch or [[discardBatch]] (a
+  * layout's vacuum or a [[snapshot]]) discards one.
   *
   * Atomicity assumption, stated once for the engine: each `rename` is
   * an ATOMIC O(1) metadata operation that either fully happens or not
@@ -65,62 +72,84 @@ object LayoutFs {
     fs.delete(b, true)
   }
 
-  /** The full recovery of the layout directory `base`, from one glob:
-    * restore the backup `.<name>.bak` of every entry whose name matches
-    * `glob` (e.g. `bucket=*`) when the live entry is missing, else drop
-    * it — a backup only an earlier version's lone swap leaves behind
-    * once the batch that made it has finished — and roll a [[Batch]]
-    * committed at `base` forward. The same glob finds the commit markers
-    * that earlier versions of the IVF, graph and inverted-index layouts
-    * left mid-mutation: those fail the call with an `IOException` naming
-    * the marker, because this version no longer rolls them forward and
-    * a layout read past one serves a half-applied mutation. */
-  def recoverUnder(fs: FileSystem, base: Path, glob: String): Unit = {
-    val hits = Option(fs.globStatus(new Path(base,
-        (s".$glob.bak" +: Marker +: LegacyMarkers).mkString("{", ",", "}"))))
-      .toSeq.flatten.map(_.getPath)
-    val (committed, rest) = hits.partition(_.getName == Marker)
-    rest.foreach { p =>
-      if (p.getName.endsWith(".bak"))
-        restoreOrDrop(fs, p, new Path(base, p.getName.stripPrefix(".").stripSuffix(".bak")))
-      else refuseLegacy(fs, p)
-    }
-    if (committed.nonEmpty) publish(fs, base)
-  }
-
-  private def restoreOrDrop(fs: FileSystem, b: Path, live: Path): Unit =
-    if (!fs.exists(live)) {
-      if (!fs.rename(b, live)) throw new IOException(s"cannot restore $live from $b")
-    } else fs.delete(b, true)
-
-  /** The IVF split/merge markers, the graph edge batch and the inverted
-    * index's append and derived-delta apply markers, as the per-layout
-    * protocols that [[Batch]] replaced named them. */
-  private val LegacyMarkers = Seq(".split_pending_*", ".merge_pending_*", ".tmp_gbucket_batch",
-    ".append_pending", ".derived_apply_pending_*")
-
-  /** Fail on the census delta an earlier version of the inverted index
-    * published under its `census` directory mid-vacuum ([[refuseLegacy]]).
-    * It lies below the root, where [[recoverUnder]]'s one glob does not
-    * look, so the census readers and writers check it themselves. */
-  def refuseCensusDelta(fs: FileSystem, census: Path): Unit = {
-    val delta = new Path(census, "pending_delta")
-    if (fs.exists(delta)) refuseLegacy(fs, delta)
-  }
-
-  /** Fail on a legacy marker. The graph batch directory is only a marker
-    * once its `_committed` child exists; before that it is hidden debris
-    * of a batch that never committed. */
-  private def refuseLegacy(fs: FileSystem, p: Path): Unit = {
-    val marker = if (p.getName == ".tmp_gbucket_batch") new Path(p, "_committed") else p
-    if (marker == p || fs.exists(marker))
-      throw new IOException(s"$marker: an earlier version of this layout " +
-        "committed a mutation and crashed before finishing it; open the " +
-        "layout once with that version to roll it forward, or restore a snapshot")
-  }
-
   private val Staging = ".commit"
   private val Marker = ".committed"
+
+  /** Open the layout at `root`: what a layout handle runs once, at its
+    * first call ([[Recovery]]). One glob of the root ([[RootProbe]])
+    * finds what [[rollForward]] finds, a backup `.<name>.bak` an earlier
+    * version's lone swap left at the root and the legacy markers there;
+    * one glob of each directory of `dirs` (relative to `root`) finds the
+    * same under it. Each glob's finds are finished by [[recoverIn]]. This
+    * version swaps only inside a batch publish, so once the layout is
+    * open, a backup under `dirs` can only be a publish's, which the
+    * root's marker covers. */
+  def open(fs: FileSystem, root: Path, dirs: String*): Unit = {
+    recoverIn(fs, root, RootProbe)
+    dirs.foreach(d => recoverIn(fs, new Path(root, d), DirProbe))
+  }
+
+  /** The probe every SQL scan build and every new batch makes: one glob
+    * of the root for its committed [[Batch]], rolled forward (true when
+    * there was one), and for the two legacy markers an earlier version
+    * left below the root — the inverted index's census delta (published
+    * mid-vacuum) and the graph's committed edge batch — which fail the
+    * call with an `IOException` naming the marker. The names are
+    * literal, so Hadoop's globber looks each one up and lists nothing. */
+  def rollForward(fs: FileSystem, root: Path): Boolean = recoverIn(fs, root, Probe)
+
+  /** A layout handle's one recovery call: the first call opens the
+    * layout ([[open]]); every later one globs the root alone
+    * ([[RootProbe]]: a committed batch, a root backup, a legacy marker)
+    * — one listing of the root, so a live handle still restores a root
+    * backup or refuses a legacy marker that appears after it opened. An
+    * open that fails (on a legacy marker) runs again at the next call. */
+  final class Recovery(fs: () => FileSystem, root: String, dirs: String*) {
+    @volatile private var opened = false
+    def apply(): Unit =
+      if (opened) recoverIn(fs(), new Path(root), RootProbe)
+      else { open(fs(), new Path(root), dirs: _*); opened = true }
+  }
+
+  private val Nested = "census/pending_delta,edges/.tmp_gbucket_batch/_committed"
+
+  /** What a glob of a layout directory looks for: a committed batch,
+    * backups, and the IVF split/merge markers and the inverted index's
+    * append and derived-delta apply markers, as the per-layout protocols
+    * that [[Batch]] replaced named them. */
+  private val DirProbe = Seq(Marker, ".*.bak", ".split_pending_*", ".merge_pending_*",
+    ".append_pending", ".derived_apply_pending_*").mkString("{", ",", "}")
+
+  /** [[DirProbe]] at the root and the nested markers: Hadoop's globber
+    * expands the outer braces into three patterns, so the one
+    * `globStatus` lists the root once and looks up the nested paths. */
+  private val RootProbe = s"{$DirProbe,$Nested}"
+
+  private val Probe = s"{$Marker,$Nested}"
+
+  /** Finish what one glob of `pattern` under `base` finds: refuse a
+    * legacy marker — a layout read past one serves a half-applied
+    * mutation, and this version no longer rolls those forward — then
+    * roll a committed batch forward, then restore each backup whose
+    * live entry is missing and drop the others. The batch goes first: its
+    * publish renames a swap's staged entry straight into the live path
+    * its crash left missing. True when a batch was rolled forward. */
+  private def recoverIn(fs: FileSystem, base: Path, pattern: String): Boolean = {
+    val hits = Option(fs.globStatus(new Path(base, pattern))).toSeq.flatten.map(_.getPath)
+    val (batch, rest) = hits.partition(_.getName == Marker)
+    val (baks, markers) = rest.partition(_.getName.endsWith(".bak"))
+    markers.headOption.foreach(m => throw new IOException(s"$m: an earlier version of this " +
+      "layout committed a mutation and crashed before finishing it; open the " +
+      "layout once with that version to roll it forward, or restore a snapshot"))
+    batch.foreach(_ => publish(fs, base))
+    baks.foreach { b =>
+      val live = new Path(base, b.getName.stripPrefix(".").stripSuffix(".bak"))
+      if (!fs.exists(live)) {
+        if (!fs.rename(b, live)) throw new IOException(s"cannot restore $live from $b")
+      } else fs.delete(b, true)
+    }
+    batch.nonEmpty
+  }
 
   private def under(base: Path, rel: String): Path =
     if (rel.isEmpty) base else new Path(base, rel)
@@ -267,15 +296,10 @@ object LayoutFs {
 
   /** Discard the staging of an uncommitted [[Batch]] under `root` — a
     * committed one rolls forward instead. Returns whether there was one
-    * to discard. Writers only (the next batch, a vacuum, a snapshot
-    * quiesce): readers leave an uncommitted batch alone. */
+    * to discard. Writers only (the next batch, a vacuum, a snapshot):
+    * readers leave an uncommitted batch alone. */
   def discardBatch(fs: FileSystem, root: Path): Boolean =
     !rollForward(fs, root) && fs.delete(new Path(root, Staging), true)
-
-  /** Roll a [[Batch]] committed under `root` forward, from one probe of
-    * its marker; true when there was one. */
-  def rollForward(fs: FileSystem, root: Path): Boolean =
-    fs.exists(new Path(root, Marker)) && { publish(fs, root); true }
 
   /** Run a committed batch's swaps and moves in order, then its drops,
     * then drop the marker and the staging. Idempotent: a swap whose
@@ -312,11 +336,11 @@ object LayoutFs {
       }
     }
 
-  /** Consistent on-disk snapshot of the tree at `root`. `quiesce` runs
-    * first (the layout's recovery, which rolls committed batches
-    * forward), then an uncommitted batch is discarded — under the
-    * engine-wide single-writer assumption the tree is then immutable for
-    * the copy; the tree copies byte-faithfully into a hidden
+  /** Consistent on-disk snapshot of the tree at `root`, which its layout
+    * has opened: a committed batch rolls forward and an uncommitted one
+    * is discarded ([[discardBatch]]) — under the engine-wide
+    * single-writer assumption the tree is then immutable for the copy;
+    * the tree copies byte-faithfully into a hidden
     * `.<name>.snapstaging` sibling of `target`, which is renamed into
     * place. `target` either doesn't exist or is a complete snapshot: a
     * crash mid-copy leaves only hidden debris that the next attempt
@@ -324,8 +348,7 @@ object LayoutFs {
     * is free by construction — a snapshot IS a complete layout root:
     * open it, or copy it back over a damaged layout. */
   def snapshot(fs: FileSystem, root: Path, target: String,
-      conf: Configuration)(quiesce: => Unit): Unit = {
-    quiesce
+      conf: Configuration): Unit = {
     discardBatch(fs, root)
     val dst = new Path(target)
     require(!fs.exists(dst), s"snapshot target $target already exists")

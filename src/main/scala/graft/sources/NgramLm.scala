@@ -41,8 +41,8 @@ final class NgramLm(spark: SparkSession, path: String) {
 
   /** Roll a committed batch forward and restore a backup an earlier
     * version's pointer swap left (`.current.bak`), from one glob of the
-    * root ([[LayoutFs.recoverUnder]]). */
-  private def recover(): Unit = LayoutFs.recoverUnder(fs, new Path(path), "*")
+    * root ([[LayoutFs.Recovery]]). */
+  private val recover = new LayoutFs.Recovery(() => fs, path)
 
   /** The version the pointer currently names — memoized per instance,
     * stamped by the pointer dir (every flip swaps in a fresh
@@ -180,14 +180,15 @@ final class NgramLm(spark: SparkSession, path: String) {
   /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]) — the
     * cross-location copy the blue/green versioning alone cannot give
     * (versions protect against crashes, not against losing the
-    * location). The quiesce is [[recover]]; every version
+    * location). It runs after [[recover]]; every version
     * directory travels with the pointer, so the copy serves the same
     * current version and still carries the superseded versions its
     * in-flight-reader retention contract promises (run [[vacuum]] on
     * either side independently). */
-  def snapshot(targetPath: String): Unit =
-    LayoutFs.snapshot(fs, new Path(path), targetPath,
-      spark.sparkContext.hadoopConfiguration)(recover())
+  def snapshot(targetPath: String): Unit = {
+    recover()
+    LayoutFs.snapshot(fs, new Path(path), targetPath, spark.sparkContext.hadoopConfiguration)
+  }
 
   /** Maintenance policy as code (X186, the versioned-artifact member of
     * the family: [[graft.sources.InvertedIndex.maintain]] /

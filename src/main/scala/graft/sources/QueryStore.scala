@@ -78,18 +78,9 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   private def root = new Path(path)
 
   /** Roll a committed batch forward and resolve a crashed swap of a
-    * top-level directory ([[LayoutFs.recoverUnder]]). */
-  private def recover(): Unit = LayoutFs.recoverUnder(fs, root, "*")
-
-  /** Crash recovery for a SQL scan — run by
-    * [[graft.sources.v2.GraftLayoutSource]] when a view registers (the
-    * full [[recover]]) and in `newScanBuilder` before it lists the files
-    * of each scan (`scan`: the roll-forward of a committed batch alone,
-    * one probe of its marker). Every mutation of this version commits
-    * through a batch, so a backup can only predate the registration's
-    * full check. */
-  private[graft] def recoverForRead(scan: Boolean): Unit =
-    if (scan) LayoutFs.rollForward(fs, root) else recover()
+    * top-level directory, from one glob of the root
+    * ([[LayoutFs.Recovery]]). */
+  private[graft] val recover = new LayoutFs.Recovery(() => fs, path)
 
   private def totalsOf(c: DataFrame): DataFrame =
     c.groupBy(col("query_id")).agg(
@@ -276,13 +267,14 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   }
 
   /** Consistent on-disk snapshot of the whole store — clauses, totals,
-    * meta and pending tombstones ([[LayoutFs.snapshot]]). The quiesce is
+    * meta and pending tombstones ([[LayoutFs.snapshot]]), after
     * [[recover]]; tombstone masks and maintenance debt travel with the
     * copy, so it percolates exactly like the source at snapshot time.
     * Open it with `new QueryStore(spark, target)`. */
-  def snapshot(targetPath: String): Unit =
-    LayoutFs.snapshot(fs, new Path(path), targetPath,
-      spark.sparkContext.hadoopConfiguration)(recover())
+  def snapshot(targetPath: String): Unit = {
+    recover()
+    LayoutFs.snapshot(fs, root, targetPath, spark.sparkContext.hadoopConfiguration)
+  }
 
   /** The full LIVE clause frame (tombstones masked), `tbucket` kept as
     * the pruning surface — the SQL-registration view behind

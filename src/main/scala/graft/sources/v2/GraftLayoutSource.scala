@@ -24,10 +24,11 @@ import graft.sources.LayoutFs
 
 /** DataSource V2 `TableProvider` over the engine's persisted layouts —
   * the LIVE SQL surface behind [[graft.sources.StoreCatalog]]'s views.
-  * Spark calls [[SupportsRead.newScanBuilder]] at every query's
-  * planning: it runs the owning layout's crash recovery, then lists the
-  * live part-files afresh on the driver, so delete/vacuum/append/compact
-  * are visible to the very next SQL statement with no re-registration.
+  * Registration opens the owning layout (its crash recovery), and Spark
+  * calls [[SupportsRead.newScanBuilder]] at every query's planning: it
+  * probes the layout root once, then lists the live part-files afresh
+  * on the driver, so delete/vacuum/append/compact are visible to the
+  * very next SQL statement with no re-registration.
   * Decoding, partition pruning (a `tbucket`/`ivf_list` predicate becomes
   * the scan's `PartitionFilters`), data-filter pushdown, column pruning
   * and split packing are Spark's own parquet scan. This provider never
@@ -83,24 +84,17 @@ private[v2] object GraftLayoutSource {
     new LayoutTable(root, table, s"$root/$rel", partCol, StructType.fromDDL(canonical))
   }
 
-  /** Run the owning layout's crash recovery — the engine rule that every
-    * read entry point recovers first, holding for SQL scans too: the
-    * full recovery at registration, and at each `scan` build the
-    * roll-forward of a committed batch (each layout's
-    * `recoverForRead`). A census scan also refuses an earlier version's
-    * census delta, like `InvertedIndex.vocab`. */
-  def recover(root: String, table: String, scan: Boolean): Unit = {
+  /** Open the owning layout, as a handle of it opens at its first call
+    * ([[LayoutFs.open]]): the engine rule that every read recovers first,
+    * holding for SQL views too. Each scan build then makes the batch's
+    * probe alone ([[LayoutFs.rollForward]]), which lists nothing. */
+  def open(root: String, table: String): Unit = {
     val spark = SparkSession.active
-    val layout: Boolean => Unit = table.takeWhile(_ != '_') match {
-      case "ivf" => new graft.sources.IvfIndex(spark, root).recoverForRead
-      case "query" => new graft.sources.QueryStore(spark, root).recoverForRead
-      case "graph" => new graft.sources.GraphIndex(spark, root).recoverForRead
-      case _ => new graft.sources.InvertedIndex(spark, root).recoverForRead
-    }
-    layout(scan)
-    if (table == "census") {
-      val census = new Path(root, "census")
-      LayoutFs.refuseCensusDelta(census.getFileSystem(spark.sparkContext.hadoopConfiguration), census)
+    table.takeWhile(_ != '_') match {
+      case "ivf" => new graft.sources.IvfIndex(spark, root).recover()
+      case "query" => new graft.sources.QueryStore(spark, root).recover()
+      case "graph" => new graft.sources.GraphIndex(spark, root).recover()
+      case _ => new graft.sources.InvertedIndex(spark, root).recover()
     }
   }
 
@@ -152,7 +146,7 @@ final class LayoutTable(root: String, tableName: String, dir: String,
   override def name(): String = s"graft:$tableName($root)"
 
   override lazy val schema: StructType = {
-    recover(root, tableName, scan = false)
+    open(root, tableName)
     val fileSchema = footerSchema(dir, partCol).orElse(tableName match {
       case "tombstones" => footerSchema(s"$root/doclens", None)
         .map(dl => StructType(dl.filter(_.name == "doc_id")))
@@ -165,10 +159,13 @@ final class LayoutTable(root: String, tableName: String, dir: String,
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
-  /** Recover, then hand Spark a file index seeded with [[liveFiles]]:
-    * partition inference and pruning are Spark's, the listing is not. */
+  /** Probe the layout root, then hand Spark a file index seeded with
+    * [[liveFiles]]: partition inference and pruning are Spark's, the
+    * listing is not. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    recover(root, tableName, scan = true)
+    val rootPath = new Path(root)
+    LayoutFs.rollForward(rootPath.getFileSystem(
+      SparkSession.active.sparkContext.hadoopConfiguration), rootPath)
     val files = liveFiles(dir, partCol)
     val index = new InMemoryFileIndex(SparkSession.active, Seq(new Path(dir)),
       Map.empty, Some(schema), new FileStatusCache {

@@ -146,6 +146,11 @@ object PercolateStream {
       schema: Option[org.apache.spark.sql.types.StructType],
       releaseOut: Boolean)(
       matcher: DataFrame => DataFrame): StreamingQuery = {
+    // finish a committed batch and restore a sidecar backup an earlier
+    // version's compaction swap left — losing the sidecar would re-match
+    // the whole history
+    val recover = new LayoutFs.Recovery(
+      () => new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration), outDir)
     spark.readStream
       .schema(schema.getOrElse(spark.read.parquet(docsDir).schema))
       .option("maxFilesPerTrigger", 1)
@@ -156,6 +161,7 @@ object PercolateStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val keyed = batch.dropDuplicates(idCol)
           .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
+        recover()
         val fresh = freshDocs(spark, outDir, keyed, idCol)
           .localCheckpoint(true) // consumed twice: matcher + seen append
         try {
@@ -190,10 +196,6 @@ object PercolateStream {
       batch: DataFrame, idCol: String): DataFrame = {
     val fs = new Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // finish a committed batch and restore a sidecar backup an earlier
-    // version's compaction swap left — losing the sidecar here would
-    // re-match the whole history
-    LayoutFs.recoverUnder(fs, new Path(outDir), "_seen")
     if (!fs.exists(new Path(seenDir(outDir)))) batch
     else {
       val keys = batch.select(col(idCol), col("__fp")).distinct()

@@ -1,5 +1,7 @@
 package graft.util
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Per-instance memo for tiny layout-metadata reads (bucket counts,
@@ -17,22 +19,29 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * so bench timings never inherit another run's work. */
 final class StampedMemo[T](fs: () => FileSystem, watched: Seq[String]) {
   @volatile private var cell: Option[(Seq[Long], T)] = None
+  /** One metadata call per watched path: its modification time, -1 when
+    * it is missing. */
   private def stamp(): Seq[Long] = {
     val f = fs()
     watched.map { p =>
-      val pp = new Path(p)
-      if (f.exists(pp)) f.getFileStatus(pp).getModificationTime else -1L
+      try f.getFileStatus(new Path(p)).getModificationTime
+      catch { case _: FileNotFoundException => -1L }
     }
   }
   def apply(compute: => T): T = {
     val k = stamp()
     cell match {
       case Some((k0, v)) if k0 == k => v
-      case _ =>
-        val v = compute
-        cell = Some((k, v))
-        v
+      case _ => keep(k, compute)
     }
+  }
+  /** Compute afresh and keep the value — for a caller whose own job
+    * yields it as a by-product. */
+  def refresh(compute: => T): T = keep(stamp(), compute)
+  private def keep(k: Seq[Long], compute: => T): T = {
+    val v = compute
+    cell = Some((k, v))
+    v
   }
   def invalidate(): Unit = cell = None
 }

@@ -228,6 +228,20 @@ class EmbeddingStoreSuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(ds.count() == 6)
   }
 
+  /** The store's root and filesystem. */
+  private def rootOf(store: EmbeddingStore) = {
+    val root = new org.apache.hadoop.fs.Path(store.storePath)
+    (root, root.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  /** Leave `bucket=b` between its publish swap's two renames
+    * ([[CrashStates.midSwap]]): the live dir gone, its rows parked in
+    * the hidden backup and staged in a committed batch. */
+  private def crashMidSwap(store: EmbeddingStore, b: Int): Unit = {
+    val (root, fs) = rootOf(store)
+    CrashStates.midSwap(fs, root, s"bucket=$b")
+  }
+
   test("crash recovery: a swap that died between renames is restored on the next mutation") {
     val (store, dir) = freshStore()
     val before = store.count()
@@ -237,12 +251,9 @@ class EmbeddingStoreSuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .select("b", "post_id").collect().map(r => r.getInt(0) -> r.getLong(1))
     val (b, postInBucket) = byBucket.head
     val nPostRows = byBucket.count(_._2 == postInBucket)
-    // simulate a crash between atomicSwap's two renames: live dir gone,
-    // pre-mutation rows parked in the hidden backup
-    val victim = java.nio.file.Paths.get(s"$dir/emb/bucket=$b")
-    val bak = victim.resolveSibling("." + victim.getFileName.toString + ".bak")
-    java.nio.file.Files.move(victim, bak)
-    // any mutation touching that bucket must first restore it
+    val bak = java.nio.file.Paths.get(s"$dir/emb/.bucket=$b.bak")
+    crashMidSwap(store, b)
+    // any mutation touching that bucket must first roll it forward
     store.insertAll(postInBucket, raw((postInBucket, 0, Seq(1f, 1f, 1f))))
     assert(store.count() == before - nPostRows + 1,
       "recovered rows participate in the mutation; nothing else lost")
@@ -257,16 +268,15 @@ class EmbeddingStoreSuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .select("b", "post_id", "sequence_no").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getInt(2)))
     val (b, hiddenPost, hiddenSeq) = byBucket.head
-    val victim = java.nio.file.Paths.get(s"$dir/emb/bucket=$b")
-    val bak = victim.resolveSibling("." + victim.getFileName.toString + ".bak")
-    java.nio.file.Files.move(victim, bak)
+    val bak = java.nio.file.Paths.get(s"$dir/emb/.bucket=$b.bak")
+    crashMidSwap(store, b)
     // a plain read must already see the recovered rows (no mutation needed)
-    assert(store.count() == 6, "read() sweeps and restores the hidden backup")
+    assert(store.count() == 6, "read() rolls the batch forward and drops the backup")
     assert(!java.nio.file.Files.exists(bak))
 
     // and after a crash, upserting the ONCE-HIDDEN key must treat it as
     // existing: same id, no id churn / collision with fresh ids
-    java.nio.file.Files.move(java.nio.file.Paths.get(s"$dir/emb/bucket=$b"), bak)
+    crashMidSwap(store, b)
     store.upsert(raw((hiddenPost, hiddenSeq, Seq(8f, 8f, 8f))))
     val after = keyIds(store)
     assert(after((hiddenPost, hiddenSeq)) == before((hiddenPost, hiddenSeq)),
@@ -408,8 +418,26 @@ class EmbeddingStoreSuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val b = store.read().select(pmod(hash($"post_id"), lit(numBuckets))).as[Int].head()
     val victim = java.nio.file.Paths.get(s"$dir/emb/bucket=$b")
     val bak = victim.resolveSibling(s".bucket=$b.bak")
-    Files.move(victim, bak)
+    crashMidSwap(store, b)
     assert(keyIds(store) == want, "the hidden bucket's rows are back")
     assert(!Files.exists(bak) && Files.exists(victim))
+  }
+
+  test("a store left between a publish swap's two renames opens with one rename") {
+    FaultyFs.install(spark)
+    val dir = Files.createTempDirectory("graft_store_midswap").toString
+    val plan = FaultyFs.plan(dir)
+    val path = FaultyFs.uri(s"$dir/emb")
+    val store = new EmbeddingStore(spark, path, numBuckets)
+    store.bulkLoad(raw((1L, 0, Seq(1f, -2f, 3f)), (2L, 0, Seq(-1f, -1f, 4f))))
+    val want = keyIds(store)
+    crashMidSwap(store, store.read().select("bucket").as[Int].head())
+    plan.reset()
+    // publishing first renames the staged bucket into the missing live
+    // path; restoring the backup first would rename it back, then back
+    // it up again for the swap: 3 renames
+    assert(keyIds(new EmbeddingStore(spark, path, numBuckets)) == want)
+    assert(plan.count("rename") == 1L, s"renames: ${plan.count("rename")}")
+    FaultyFs.drop(dir)
   }
 }

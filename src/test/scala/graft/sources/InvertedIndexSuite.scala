@@ -213,13 +213,13 @@ class InvertedIndexSuite extends AnyFunSuite {
       "vacuum must clear the tombstone table")
     idx.vacuum() // idempotent on a clean index
     assert(phrase(idx, Seq("sort", "merge")) === before)
-    // crash simulation: the swap's first rename happened, the second did
-    // not — live dir gone, backup visible; the next read must restore it
-    val live = new java.io.File(s"$dir/inv/postings")
-    val bak = new java.io.File(s"$dir/inv/.postings.bak")
-    assert(live.renameTo(bak))
+    // crash simulation: the publish swap's first rename happened, the
+    // second did not — live dir gone, backup visible, the batch
+    // committed; the next read must roll it forward
+    CrashStates.midSwap(fsOf(idx), rootOf(idx), "postings")
     assert(phrase(idx, Seq("sort", "merge")) === before,
-      "recover() must roll a half-done swap back before reading")
+      "recover() must finish a half-done swap before reading")
+    assert(!new java.io.File(s"$dir/inv/.postings.bak").exists())
   }
 
   test("vacuum after deleting every doc leaves a readable empty index") {
@@ -271,11 +271,11 @@ class InvertedIndexSuite extends AnyFunSuite {
       "compact leaves one file per bucket directory")
     assert(phrase(idx, Seq("sort", "merge")) === before)
     assert(idx.bm25(Seq("sort", "merge"), k = 10).collect().toSeq === bmBefore)
-    // crash between doclens' two renames: backup visible, live missing
-    val live = new java.io.File(s"$dir/inv/doclens")
-    assert(live.renameTo(new java.io.File(s"$dir/inv/.doclens.bak")))
+    // crash between doclens' two publish renames: backup visible, live
+    // missing, the batch committed
+    CrashStates.midSwap(fsOf(idx), rootOf(idx), "doclens")
     assert(idx.bm25(Seq("sort", "merge"), k = 10).collect().toSeq === bmBefore,
-      "recover() must restore a half-swapped doclens")
+      "recover() must finish a half-swapped doclens")
     intercept[IllegalArgumentException](idx.compact(doclensFiles = 0))
   }
 

@@ -197,8 +197,11 @@ class IvfIndexSuite extends AnyFunSuite {
     val lists = s"$dir/ivf/lists"
     assert(fs.rename(new Path(lists, s"ivf_list=$victim"),
       new Path(lists, s".ivf_list=$victim.bak")))
-    idx.append(Seq(200L -> newVec).toDF("vec_id", "embedding"), "vec_id", "embedding")
-    val got = idx.search(query, 65, 4).collect().map(_.getLong(0)).toSet
+    // an earlier version's lone swap left the backup: a process of this
+    // version opens the index afresh
+    val reopened = new IvfIndex(spark, s"$dir/ivf")
+    reopened.append(Seq(200L -> newVec).toDF("vec_id", "embedding"), "vec_id", "embedding")
+    val got = reopened.search(query, 65, 4).collect().map(_.getLong(0)).toSet
     assert(members.subsetOf(got),
       "pre-crash rows of the backed-up list must survive the append")
     assert(got.contains(200L), "the appended row must be probe-reachable")
@@ -216,7 +219,9 @@ class IvfIndexSuite extends AnyFunSuite {
     val lists = s"$dir/ivf/lists"
     val victim = fs.globStatus(new Path(lists, "ivf_list=*")).head.getPath
     assert(fs.rename(victim, new Path(lists, "." + victim.getName + ".bak")))
-    val after = idx.search(query, 10, 4)
+    // an earlier version's lone swap left the backup: a process of this
+    // version opens the index afresh
+    val after = new IvfIndex(spark, s"$dir/ivf").search(query, 10, 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after == before, "search must restore the backed-up list first")
   }
@@ -377,8 +382,11 @@ class IvfIndexSuite extends AnyFunSuite {
     val codes = s"$dir/ivf/codes"
     assert(fs.rename(new Path(codes, s"ivf_list=$victim"),
       new Path(codes, s".ivf_list=$victim.bak")))
-    idx.appendPq(Seq(200L -> newVec).toDF("vec_id", "embedding"), "vec_id", "embedding")
-    val got = idx.searchPq(query, 65, 4).collect().map(_.getLong(0)).toSet
+    // an earlier version's lone swap left the backup: a process of this
+    // version opens the index afresh
+    val reopened = new IvfIndex(spark, s"$dir/ivf")
+    reopened.appendPq(Seq(200L -> newVec).toDF("vec_id", "embedding"), "vec_id", "embedding")
+    val got = reopened.searchPq(query, 65, 4).collect().map(_.getLong(0)).toSet
     assert(members.subsetOf(got),
       "pre-crash rows of the backed-up code list must survive the append")
     assert(got.contains(200L), "the appended row must be probe-reachable")
@@ -396,7 +404,9 @@ class IvfIndexSuite extends AnyFunSuite {
     val codes = s"$dir/ivf/codes"
     val victim = fs.globStatus(new Path(codes, "ivf_list=*")).head.getPath
     assert(fs.rename(victim, new Path(codes, "." + victim.getName + ".bak")))
-    val after = idx.searchPq(query, 10, 4)
+    // an earlier version's lone swap left the backup: a process of this
+    // version opens the index afresh
+    val after = new IvfIndex(spark, s"$dir/ivf").searchPq(query, 10, 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after == before, "searchPq must restore the backed-up list first")
   }

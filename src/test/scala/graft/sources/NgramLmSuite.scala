@@ -113,10 +113,12 @@ class NgramLmSuite extends AnyFunSuite {
     val lm = new NgramLm(spark, s"$dir/lm")
     lm.build(refA, "doc_id", col("text"))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash between the two renames: live pointer gone, backup present
-    assert(fs.rename(new Path(s"$dir/lm/current"), new Path(s"$dir/lm/.current.bak")))
-    assert(lm.currentVersion() == 1, "reader must restore the backed-up pointer")
+    // crash between the publish swap's two renames: live pointer gone,
+    // backup present, the batch committed
+    CrashStates.midSwap(fs, new Path(s"$dir/lm"), "current")
+    assert(lm.currentVersion() == 1, "reader must finish the pointer swap")
     assert(fs.exists(new Path(s"$dir/lm/current")))
+    assert(!fs.exists(new Path(s"$dir/lm/.current.bak")))
   }
 
   test("snapshot: cross-location copy scores identically, versions travel, sides independent (X290)") {
