@@ -176,6 +176,71 @@ case class CosineFloatStored(first: Expression, second: Expression, third: Expre
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
+/** `vec_normalize(v)`: `v / |v|` with the reference's zero-magnitude guard
+  * (`src/VectorTable.php:584-590`) in two passes over `v` — `|v|²` as the
+  * index-ordered double fold of [[DotProductFloat]], then one divide per
+  * element — bit-identical to the composite it replaces,
+  * `transform(v, x -> double(x) / (m == 0 ? ZeroMagEps : m))` with
+  * `m = sqrt(vec_dot(v, v))`: there Catalyst re-evaluated `m` inside the
+  * lambda for every element, so a row cost O(d²). A null element stays
+  * null (and counts as its stored 0 in `|v|²`, as in `vec_dot`). */
+case class NormalizeFloat(child: Expression) extends UnaryExpression {
+
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def prettyName: String = "vec_normalize"
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val v = input.asInstanceOf[ArrayData]
+    val n = v.numElements()
+    var ss = 0.0
+    var i = 0
+    while (i < n) { val x = v.getFloat(i).toDouble; ss += x * x; i += 1 }
+    val mag = math.sqrt(ss)
+    val safe = if (mag == 0.0) VectorFunctions.ZeroMagEps else mag
+    val out = new Array[Any](n)
+    i = 0
+    while (i < n) { if (!v.isNullAt(i)) out(i) = v.getFloat(i).toDouble / safe; i += 1 }
+    new GenericArrayData(out)
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v => {
+      val Seq(n, i, x, ss, mag, safe, out, nulls, boxed) =
+        Seq("n", "i", "x", "ss", "mag", "safe", "out", "nulls", "boxed").map(ctx.freshName)
+      val unsafe = classOf[UnsafeArrayData].getName
+      val gad = classOf[GenericArrayData].getName
+      s"""
+         |int $n = $v.numElements();
+         |double $ss = 0.0;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  double $x = (double) $v.getFloat($i);
+         |  $ss += $x * $x;
+         |}
+         |double $mag = java.lang.Math.sqrt($ss);
+         |double $safe = $mag == 0.0 ? ${VectorFunctions.ZeroMagEps}D : $mag;
+         |double[] $out = new double[$n];
+         |boolean $nulls = false;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if ($v.isNullAt($i)) $nulls = true;
+         |  else $out[$i] = (double) $v.getFloat($i) / $safe;
+         |}
+         |if ($nulls) {
+         |  Object[] $boxed = new Object[$n];
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    if (!$v.isNullAt($i)) $boxed[$i] = $out[$i];
+         |  }
+         |  ${ev.value} = new $gad($boxed);
+         |} else {
+         |  ${ev.value} = $unsafe.fromPrimitiveArray($out);
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** Hamming distance between two sign-bit sketches packed as long arrays.
   * Replaces the reference's char-by-char bitstring compare
   * (`src/VectorTable.php:126-139`) with XOR + popcount per 64-bit word. */

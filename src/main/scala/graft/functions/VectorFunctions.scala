@@ -29,12 +29,9 @@ object VectorFunctions {
   def vecMagnitude(v: Column): Column = sqrt(vecDot(v, v))
 
   /** Unit-normalize with the reference's zero-magnitude guard
-    * (`src/VectorTable.php:584-590`: mag==0 -> 1e-10). */
-  def vecNormalize(v: Column): Column = {
-    val mag = vecMagnitude(v)
-    val safe = when(mag === 0.0, lit(ZeroMagEps)).otherwise(mag)
-    transform(v, x => x.cast(DoubleType) / safe)
-  }
+    * (`src/VectorTable.php:584-590`: mag==0 -> 1e-10): the one-pass
+    * [[NormalizeFloat]] kernel. */
+  def vecNormalize(v: Column): Column = col(NormalizeFloat(expr(v)))
 
   /** Matryoshka truncation (Kusupati et al. 2022, arXiv:2205.13147):
     * keep the first k dimensions and re-normalize — the cheap low-dim

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions._
-import graft.util.{DenseIds, StampedMemo}
+import graft.util.DenseIds
 
 /** Parquet-backed embedding store (SURVEY.md §2.1 S1-S12).
   *
@@ -24,8 +24,9 @@ import graft.util.{DenseIds, StampedMemo}
   *    partitions (`bucket=NNN`), so point mutations rewrite only the touched
   *    buckets, not the whole table, and commit them as one batch — the
   *    Parquet analogue of the reference's per-row UPDATE statement;
-  *  - reads are plain `spark.read.parquet` with pushdown: filters on
-  *    `bucket`/`post_id`/`id` prune partitions and row groups;
+  *  - reads are parquet scans with a pinned schema ([[LayoutFs.Live]])
+  *    and pushdown: filters on `bucket`/`post_id`/`id` prune partitions
+  *    and row groups;
   *  - the wide `vector` column is only read by stages that need it
   *    (Catalyst column pruning; see SearchEngine stage separation);
   *  - all path operations go through the Hadoop `FileSystem` API, so the
@@ -125,17 +126,16 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   def assignIds(df: DataFrame, startAt: Long = 1L): DataFrame =
     DenseIds.assign(df, "id", startAt, col("post_id"), col("sequence_no"))
 
-  /** The store's schema, memoized: inferring it reads parquet footers in a
-    * Spark job, and it can only change when the store root does. Keyed on
-    * the root's modification time and invalidated by every mutation. */
-  private val schemaMemo = new StampedMemo[StructType](() => fs, Seq(path))
+  /** The store's reads and commits ([[LayoutFs.Live]]: a read pins the
+    * schema memoized for the root). */
+  private val layout = new LayoutFs.Live(spark, () => fs, path)
 
   /** The live store. Recovers crashed swaps and lists the files on every
-    * call; only the schema comes from [[schemaMemo]], so a read launches
-    * no Spark job. */
+    * call; the schema is pinned ([[layout]]), so a read launches no Spark
+    * job. */
   def read(): DataFrame = {
     recover()
-    spark.read.schema(schemaMemo(spark.read.parquet(path).schema)).parquet(path)
+    layout(path)
   }
 
   /** Typed view of the store (SURVEY.md §1.3: `Dataset[Embedding]` where
@@ -326,11 +326,10 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * whole store — every bucket and the meta — as one committed batch. */
   def bulkLoad(raw: DataFrame): Unit = {
     val df = withBucket(assignIds(withDerived(raw)))
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       b.stageRows("", Some("bucket"), df)
       effectivePrefixDims.foreach(stageMeta(b, _))
     }
-    schemaMemo.invalidate()
   }
 
   private def withBucket(df: DataFrame): DataFrame =
@@ -354,14 +353,13 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * store freely. */
   private def rewrite(buckets: Seq[Int])(transform: DataFrame => DataFrame): Unit = {
     val live = read()
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       b.rewriteParts("", "bucket", buckets, live)(cur => transform(cur).repartition(col("bucket")))
       // persist the prefix setting on stores that predate it (bulkLoad
       // wrote it for fresh stores) so LATER handles without the parameter
       // keep deriving the column instead of splitting the schema
       effectivePrefixDims.filter(_ => !fs.exists(metaPath)).foreach(stageMeta(b, _))
     }
-    schemaMemo.invalidate()
   }
 
   /** Crash recovery, at the top of [[read]] — i.e. before ANY consumer

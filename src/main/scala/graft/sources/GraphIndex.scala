@@ -53,6 +53,10 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Reads of the live layout directories, with pinned schemas, and
+    * commits ([[LayoutFs.Live]]). */
+  private val layout = new LayoutFs.Live(spark, () => fs, path)
+
   private def bucketOf(c: Column): Column = pmod(hash(c), lit(buckets))
 
   /** Persist a `(src, dst[, cosine])` adjacency (e.g.
@@ -64,7 +68,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       s"adjacency needs (src, dst[, cosine]) columns, got $cols")
     val hasCosine = cols.contains("cosine")
     val keep = Seq("src", "dst") ++ (if (hasCosine) Seq("cosine") else Nil)
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       b.stageRows("edges", Some("gbucket"), adj.select(keep.map(col): _*)
         .withColumn("src", col("src").cast(LongType))
         .withColumn("dst", col("dst").cast(LongType))
@@ -88,13 +92,13 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   private lazy val metaMemo =
     new graft.util.StampedMemo[(Int, Boolean)](() => fs, Seq(metaPath))
   private def storedMeta(): (Int, Boolean) = metaMemo {
-    val m = spark.read.parquet(metaPath)
+    val m = layout(metaPath)
     val row = m.select(col("buckets") +:
       (if (m.columns.contains("has_cosine")) Seq(col("has_cosine"))
        else Nil): _*).head()
     val hasCos =
       if (m.columns.contains("has_cosine")) row.getBoolean(1)
-      else spark.read.parquet(edgesPath).columns.contains("cosine")
+      else layout(edgesPath).columns.contains("cosine")
     (row.getInt(0), hasCos)
   }
 
@@ -114,7 +118,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * Recovers crashed append swaps first (the read-path rule). */
   def edges(): DataFrame = {
     recover()
-    spark.read.parquet(edgesPath).select(col("src"), col("dst"))
+    layout(edgesPath).select(col("src"), col("dst"))
   }
 
   /** [[append]]'s batch bound: each new node runs one candidate beam
@@ -241,9 +245,9 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     // read+window+write jobs PER bucket — ~3×|touched| driver-scheduled
     // jobs for the same rows. repartition(gbucket) keeps the one-file-
     // per-bucket rule (each bucket lands wholly in one task).
-    val live = spark.read.parquet(edgesPath)
+    val live = layout(edgesPath)
       .select(col("gbucket"), col("src"), col("dst"), col("cosine"))
-    LayoutFs.commit(fs, new Path(path))(_.rewriteParts("edges", "gbucket", touched, live) { cur =>
+    layout.commit(_.rewriteParts("edges", "gbucket", touched, live) { cur =>
       cur.unionByName(addDf.select(
           col("gbucket"), col("src"), col("dst"), col("cosine")))
         .groupBy(col("gbucket"), col("src"), col("dst"))
@@ -273,13 +277,13 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   def delete(ids: DataFrame): Unit = {
     require(ids.columns.toSeq == Seq("id"),
       s"ids must be a single-column (id) frame, got ${ids.columns.toSeq}")
-    LayoutFs.commit(fs, new Path(path))(_.add("tombstones")(dir =>
+    layout.commit(_.add("tombstones")(dir =>
       ids.select(col("id").cast(LongType)).write.parquet(dir.toString)))
   }
 
   private def tombstoneIds(): Option[DataFrame] =
     if (fs.exists(new Path(tombstonesPath)))
-      Some(spark.read.parquet(tombstonesPath).select(col("id")).distinct())
+      Some(layout(tombstonesPath).select(col("id")).distinct())
     else None
 
   /** Per-bucket part-file counts (the sibling observability surface):
@@ -333,7 +337,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     // (collected in the same action that materializes the hop, ≤
     // `buckets` ints) and rides the edge read as a partition isin
     val hopEdges = (_: DataFrame, bs: Seq[Int]) =>
-      spark.read.parquet(edgesPath)
+      layout(edgesPath)
         .filter(col("gbucket").isin(bs: _*))
         .select(col("src"), col("dst"))
     GraphAnn.beamCore(hopEdges, Some(bucketOf), resultFilter, embs, idCol,

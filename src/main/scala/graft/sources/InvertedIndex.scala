@@ -81,6 +81,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Reads of the live layout directories, with pinned schemas, and
+    * commits ([[LayoutFs.Live]]). */
+  private val layout = new LayoutFs.Live(spark, () => fs, path)
+
   /** The engine-wide 28-bit md5 bucket (the minhash/sidecar idiom) —
     * Column form for writes, Scala form for query-time pruning; the
     * suite pins their agreement. */
@@ -132,7 +136,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private lazy val bucketsMemo =
     new graft.util.StampedMemo[Int](() => fs, Seq(metaPath))
   private def readBuckets(): Int =
-    bucketsMemo(spark.read.parquet(metaPath).head().getInt(0))
+    bucketsMemo(layout(metaPath).head().getInt(0))
 
   private def doclensPath = s"$path/doclens"
   private def tombstonesPath = s"$path/tombstones"
@@ -159,7 +163,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     import spark.implicits._
     invalidateLiveCount()
     recover()
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       batch.stageRows("meta", None, Seq(buckets).toDF("n_buckets").coalesce(1))
       val postings = TextAnalysis.positionalPostings(docs, idCol, text)
         .localCheckpoint(true) // three consumers: layout write, doclens, census
@@ -197,7 +201,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val baseP = new Path(censusBasePath)
     if (fs.exists(baseP) && fs.listStatus(baseP).exists(s =>
         s.isFile && !s.getPath.getName.startsWith("_"))) {
-      LayoutFs.commit(fs, root)(stageCensus(_, censusSummed(), onePerPrefix = true))
+      layout.commit(stageCensus(_, censusSummed(), onePerPrefix = true))
     }
   }
 
@@ -224,7 +228,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     recover()
     migrateFlatCensusBase()
     val b = readBuckets()
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       val postings = TextAnalysis.positionalPostings(docs, idCol, text)
         .localCheckpoint(true)
       // the batch's (doc, dl) and (doc, term, tf) aggregates feed up to
@@ -303,8 +307,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
         "a re-bucketing merge is a rebuild")
     require(!other.fs.exists(new Path(other.tombstonesPath)),
       s"source ${other.indexPath} has pending tombstones — vacuum it first")
-    LayoutFs.commit(fs, root) { batch =>
-      val srcPostings = spark.read.parquet(other.postingsPath)
+    layout.commit { batch =>
+      val srcPostings = other.layout(other.postingsPath)
       // repartition by tbucket (the compact() discipline) so each staged
       // bucket is ONE task's file: a plain read→write can split a
       // multi-row-group source file across tasks at row-group boundaries,
@@ -315,7 +319,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       batch.add("postings")(dir => srcPostings
         .repartition(col("tbucket"))
         .write.partitionBy("tbucket").parquet(dir.toString))
-      val srcDoclens = spark.read.parquet(other.doclensPath)
+      val srcDoclens = other.layout(other.doclensPath)
       if (fs.exists(new Path(censusBasePath)))
         batch.add("census/base")(dir => writeCensusBase(other.vocab(), dir.toString))
       // shared (doc, term, tf) aggregate — the block-max bounds and the
@@ -346,7 +350,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * guard is deliberately NOT [[liveOnly]]-filtered. */
   def appendedIds: DataFrame = {
     recover()
-    spark.read.parquet(doclensPath).select(col("doc_id"))
+    layout(doclensPath).select(col("doc_id"))
   }
 
   /** Logical deletion (X175): add the ids to the tombstone table, one
@@ -377,8 +381,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     // cast to the stored doclens id type: two delete batches with
     // different integer widths must not leave conflicting parquet
     // schemas in the tombstone dir (the next read would mis-infer)
-    val idType = spark.read.parquet(doclensPath).schema("doc_id").dataType
-    LayoutFs.commit(fs, root)(_.add("tombstones")(dir =>
+    val idType = layout(doclensPath).schema("doc_id").dataType
+    layout.commit(_.add("tombstones")(dir =>
       ids.select(col("doc_id").cast(idType)).write.parquet(dir.toString)))
   }
 
@@ -398,7 +402,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * next vacuum degrades to a shuffled anti-join instead of a driver
     * OOM — reads stay correct and bounded either way. */
   private def tombstoneIds(): DataFrame = {
-    val ts = spark.read.parquet(tombstonesPath)
+    val ts = layout(tombstonesPath)
       .select(col("doc_id")).distinct()
     if (tombstoneBytes() <= InvertedIndex.maskBroadcastBytes(spark))
       broadcast(ts)
@@ -414,10 +418,15 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * a query frame must not straddle a concurrent [[vacuum]] (which
     * deletes the tombstone dir) — the engine-wide
     * single-maintenance-writer assumption every layout here shares. */
-  private def liveOnly(df: DataFrame): DataFrame =
-    if (fs.exists(new Path(tombstonesPath)))
-      df.join(tombstoneIds(), Seq("doc_id"), "left_anti")
-    else df
+  private def liveOnly(df: DataFrame): DataFrame = liveMask()(df)
+
+  /** [[liveOnly]] as a mask, from one probe of the tombstones directory:
+    * what a call that masks several frames applies to each of them. */
+  private def liveMask(): DataFrame => DataFrame =
+    if (fs.exists(new Path(tombstonesPath))) {
+      val ts = tombstoneIds()
+      _.join(ts, Seq("doc_id"), "left_anti")
+    } else identity
 
   /** One LIVE doc count per layout state, not per serve call. The
     * serve surface counts the live doclens in several entry points
@@ -432,7 +441,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     new graft.util.StampedMemo[Long](() => fs, Seq(doclensPath, tombstonesPath))
   private def invalidateLiveCount(): Unit = liveCountMemo.invalidate()
   private def liveDocCount(): Long =
-    liveCountMemo(liveOnly(spark.read.parquet(doclensPath)).count())
+    liveCountMemo(liveOnly(layout(doclensPath)).count())
 
   /** Physically remove tombstoned docs (X175): ONE anti-join rewrite
     * each of postings (partition layout preserved) and doclens, plus a
@@ -455,8 +464,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     recover()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
-    LayoutFs.commit(fs, root) { batch =>
-      val postings = spark.read.parquet(postingsPath)
+    layout.commit { batch =>
+      val postings = layout(postingsPath)
       if (fs.exists(new Path(censusBasePath)))
         stageCensus(batch, minusDelta(censusSummed(), postings
           .join(ts, Seq("doc_id"), "left_semi")
@@ -465,7 +474,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       val survPostings = postings.join(ts, Seq("doc_id"), "left_anti")
       batch.stageRows("postings", Some("tbucket"),
         if (compactToo) survPostings.repartition(col("tbucket")) else survPostings)
-      val survDoclens = spark.read.parquet(doclensPath).join(ts, Seq("doc_id"), "left_anti")
+      val survDoclens = layout(doclensPath).join(ts, Seq("doc_id"), "left_anti")
       batch.stageRows("doclens", None,
         if (compactToo) survDoclens.repartition(1) else survDoclens)
       // pending sidecar deltas may describe docs this vacuum just removed
@@ -487,7 +496,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
 
   /** The stored census base, one (term, df) row per term. */
   private def censusSummed(): DataFrame =
-    spark.read.parquet(censusBasePath)
+    layout(censusBasePath)
       .groupBy(col("term")).agg(sum(col("df")).cast(LongType).as("df"))
 
   /** Stage the WHOLE census directory as `{base: newBase}` in `batch`. */
@@ -540,17 +549,17 @@ final class InvertedIndex(spark: SparkSession, path: String,
     def maskTerm(df: DataFrame) =
       buckets.fold(df)(bs => df.filter(tprefixCol(col("term")).isin(bs: _*)))
     if (!fs.exists(new Path(censusBasePath)))
-      return maskTerm(liveOnly(spark.read.parquet(postingsPath))
+      return maskTerm(liveOnly(layout(postingsPath))
         .groupBy(col("term"))
         .agg(count_distinct(col("doc_id")).as("df")))
     val delta =
       if (fs.exists(new Path(tombstonesPath)))
-        Some(maskTerm(spark.read.parquet(postingsPath)
+        Some(maskTerm(layout(postingsPath)
           .join(tombstoneIds(), Seq("doc_id"), "left_semi")
           .groupBy(col("term"))
           .agg(count_distinct(col("doc_id")).as("df"))))
       else None
-    val base = maskBase(spark.read.parquet(censusBasePath))
+    val base = maskBase(layout(censusBasePath))
       .groupBy(col("term")).agg(sum(col("df")).cast(LongType).as("df"))
     delta.fold(base)(d => minusDelta(base, d))
   }
@@ -564,7 +573,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * it is the monitoring pass, run at monitoring cadence. */
   def stats(): DataFrame = {
     recover()
-    liveOnly(spark.read.parquet(postingsPath))
+    liveOnly(layout(postingsPath))
       .groupBy(col("tbucket"))
       .agg(count(lit(1)).as("n_postings"),
         count_distinct(col("term")).as("n_terms"),
@@ -603,11 +612,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(doclensFiles >= 1, s"doclensFiles must be >= 1, got $doclensFiles")
     invalidateLiveCount()
     recover()
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       batch.stageRows("postings", Some("tbucket"),
-        spark.read.parquet(postingsPath).repartition(col("tbucket")))
+        layout(postingsPath).repartition(col("tbucket")))
       batch.stageRows("doclens", None,
-        spark.read.parquet(doclensPath).repartition(doclensFiles))
+        layout(doclensPath).repartition(doclensFiles))
       // census base accretes files per append too — merge-sum it to one
       // file per tprefix partition (vocabulary-sized job)
       if (fs.exists(new Path(censusBasePath)))
@@ -649,9 +658,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val tombFrac =
       if (!fs.exists(new Path(tombstonesPath))) 0.0
       else {
-        val nDocs = spark.read.parquet(doclensPath).count()
+        val nDocs = layout(doclensPath).count()
         if (nDocs == 0L) 1.0
-        else spark.read.parquet(tombstonesPath)
+        else layout(tombstonesPath)
           .select(col("doc_id")).distinct().count().toDouble / nDocs
       }
     val maxFiles = fileStats().agg(max(col("n_files"))).head() match {
@@ -779,7 +788,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
       finally in.close()
     } else if (fs.exists(dir))
-      spark.read.parquet(derivedMetaPath(name)).head().getLong(0)
+      layout(derivedMetaPath(name)).head().getLong(0)
     else 0L
   }
 
@@ -901,25 +910,25 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def maintainForwardCheap(built: Long, live: Long): Option[String] =
     if (fs.exists(new Path(forwardDeltaPath)) &&
         deltaCovers("forward",
-          spark.read.parquet(forwardDeltaPath)
+          layout(forwardDeltaPath)
             .select(col("doc_id")).distinct().count(), built, live)) {
       applyDelta("forward", Seq("forward_delta" -> "forward"), live)
       Some("delta_apply")
     } else {
-      if (fs.exists(new Path(forwardDeltaPath))) LayoutFs.commit(fs, root)(_.drop("forward_delta"))
+      if (fs.exists(new Path(forwardDeltaPath))) layout.commit(_.drop("forward_delta"))
       None
     }
 
   private def maintainFieldedCheap(built: Long, live: Long): Option[String] =
     if (fs.exists(new Path(fieldedDeltaDoclensPath)) &&
         deltaCovers("fielded",
-          spark.read.parquet(fieldedDeltaDoclensPath)
+          layout(fieldedDeltaDoclensPath)
             .select(col("doc_id")).distinct().count(), built, live)) {
       applyDelta("fielded", Seq("fielded_delta/postings" -> "fielded/postings",
         "fielded_delta/doclens" -> "fielded/doclens"), live)
       Some("delta_apply")
     } else {
-      if (fs.exists(new Path(fieldedDeltaPath))) LayoutFs.commit(fs, root)(_.drop("fielded_delta"))
+      if (fs.exists(new Path(fieldedDeltaPath))) layout.commit(_.drop("fielded_delta"))
       None
     }
 
@@ -928,7 +937,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * no read ever sees the artifact half-applied. */
   private def applyDelta(name: String, moves: Seq[(String, String)],
       live: Long): Unit = {
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       moves.foreach { case (src, dst) => batch.move(src, dst) }
       stageDerivedMeta(batch, name, Some(live))
       batch.drop(s"${name}_delta")
@@ -956,13 +965,13 @@ final class InvertedIndex(spark: SparkSession, path: String,
               !s.getPath.getName.startsWith("."))
             .map(f => (bk, f.getPath.getName))
         }.toSet
-      val sidecar = spark.read.parquet(blockmaxFilesPath)
+      val sidecar = layout(blockmaxFilesPath)
         .select(col("tbucket"), col("fname")).distinct()
         .collect().map(r => (r.getInt(0), r.getString(1))).toSet
       live.subsetOf(sidecar)
     }
     if (covered) {
-      LayoutFs.commit(fs, root)(stageDerivedMeta(_, "blockmax", Some(live)))
+      layout.commit(stageDerivedMeta(_, "blockmax", Some(live)))
       Some("adopt")
     }
     else None
@@ -971,7 +980,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   /** The LIVE postings scan every derived builder aggregates from,
     * carrying the file-identity column block-max's file grain needs. */
   private def livePostingsScan(): DataFrame =
-    liveOnly(spark.read.parquet(postingsPath)
+    liveOnly(layout(postingsPath)
       .withColumn("__fname", substring_index(input_file_name(), "/", -1)))
 
   /** Rebuild the named derived artifacts from ONE shared live-postings
@@ -1066,7 +1075,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         count(when(col("term") === t, 1)).as(s"tf$i") },
         members.tail.map { case (t, i) =>
           count(when(col("term") === t, 1)).as(s"tf$i") }: _*)
-    val dls = liveOnly(spark.read.parquet(doclensPath))
+    val dls = liveOnly(layout(doclensPath))
     // match-only inner join (the bm25PerDoc contract): scored rows
     // bounded by the member terms' postings; N/avgdl stay corpus-wide
     // through the broadcast stats row
@@ -1219,7 +1228,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   /** Zero-row (doc_id, dl, score) frame with the stored doc_id type —
     * what a fully-elided query ranks to. */
   private def emptyBm25Frame(): DataFrame =
-    spark.read.parquet(doclensPath).limit(0)
+    layout(doclensPath).limit(0)
       .select(col("doc_id"), col("dl"), lit(0.0).as("score"))
 
   /** The shared front half of [[bm25]] and [[bm25Page]]: per-doc tf
@@ -1244,13 +1253,14 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(msm >= 1 && msm <= queryTerms.size,
       s"msm must be in [1, ${queryTerms.size}], got $msm")
     val terms = queryTerms.zipWithIndex
-    val tf = termPostings(queryTerms)
+    val (slice, live) = termSlice(queryTerms)
+    val tf = slice
       .groupBy(col("doc_id"))
       .agg(terms.head match { case (t, i) =>
         count(when(col("term") === t, 1)).as(s"tf$i") },
         terms.tail.map { case (t, i) =>
           count(when(col("term") === t, 1)).as(s"tf$i") }: _*)
-    val dls = liveOnly(spark.read.parquet(doclensPath))
+    val dls = live(layout(doclensPath))
     val perDoc = dls.join(tf, Seq("doc_id"))
     val stats = dls.agg(
       count(lit(1)).as("n_docs"),
@@ -1312,14 +1322,14 @@ final class InvertedIndex(spark: SparkSession, path: String,
     *         AS BIGINT), B) AS INT) }}} */
   def livePostings: DataFrame = {
     recover()
-    liveOnly(spark.read.parquet(postingsPath))
+    liveOnly(layout(postingsPath))
   }
 
   /** The LIVE (doc_id, dl) doclens frame — [[livePostings]]' stats-side
     * sibling for the SQL surface. */
   def liveDoclens: DataFrame = {
     recover()
-    liveOnly(spark.read.parquet(doclensPath))
+    liveOnly(layout(doclensPath))
   }
 
   /** The stored bucket count B — the SQL caller's input to the pruning
@@ -1368,7 +1378,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         count(when(col("term") === t, 1)).as(s"cf$i") },
       terms.tail.map { case (t, i) =>
         count(when(col("term") === t, 1)).as(s"cf$i") }: _*)
-    val totals = liveOnly(spark.read.parquet(doclensPath))
+    val totals = liveOnly(layout(doclensPath))
       .agg(sum(col("dl")).cast(LongType).as("__c"))
     val stats = cfs.crossJoin(totals)
     val dlD = col("dl").cast(DoubleType)
@@ -1465,7 +1475,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val dfs =
       if (censusDf) vocab().filter(col("term").isin(terms: _*))
       else tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val dls = liveOnly(spark.read.parquet(doclensPath))
+    val dls = liveOnly(layout(doclensPath))
     val stats = dls.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
     val tfD = col("tf").cast(DoubleType)
@@ -1532,7 +1542,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       // every batch term is stop-class: no candidates anywhere — the
       // typed empty frame (doc_id from the stored layout)
       return q0.limit(0).select(col("query_id"))
-        .crossJoin(spark.read.parquet(doclensPath).limit(0)
+        .crossJoin(layout(doclensPath).limit(0)
           .select(col("doc_id")))
         .withColumn("score", lit(0.0))
         .withColumn("rank", lit(1))
@@ -1546,7 +1556,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val tf = slice.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val cfs = slice.groupBy(col("term")).agg(count(lit(1)).as("cf"))
-    val dls = liveOnly(spark.read.parquet(doclensPath))
+    val dls = liveOnly(layout(doclensPath))
     val totals = dls.agg(sum(col("dl")).cast(LongType).as("__c"))
     val cand = q.join(tf.select(col("term"), col("doc_id")), Seq("term"))
       .select(col("query_id"), col("doc_id")).distinct()
@@ -1617,7 +1627,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val (m, s, n) = (must.filterNot(hot), should.filterNot(hot),
       mustNot.filterNot(hot))
     if (m.isEmpty && s.isEmpty)
-      return spark.read.parquet(doclensPath).limit(0)
+      return layout(doclensPath).limit(0)
         .select(col("doc_id"), lit(0L).as("n_should"))
     TextAnalysis.booleanMatch(termPostings(m ++ s ++ n),
       m, s, n, if (s.isEmpty) 1 else minShould.min(s.size))
@@ -1637,7 +1647,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(termA.nonEmpty && termB.nonEmpty, "empty term")
     val survivors = elideHot(Seq(termA, termB).distinct, maxDfFrac)
     if (survivors.size < Seq(termA, termB).distinct.size)
-      return spark.read.parquet(doclensPath).limit(0)
+      return layout(doclensPath).limit(0)
         .select(col("doc_id"), lit(0L).as("n_pairs"),
           lit(0).cast(IntegerType).as("min_dist"))
     TextAnalysis.proximityMatch(termPostings(Seq(termA, termB).distinct),
@@ -1678,7 +1688,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     import spark.implicits._
     recover()
     val b = readBuckets()
-    val live = liveOnly(spark.read.parquet(postingsPath))
+    val live = liveOnly(layout(postingsPath))
     val keep = live
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("__tf"))
       .withColumn("__rk", row_number().over(
@@ -1687,12 +1697,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
       .filter(col("__rk") <= keepPerTerm)
       .select(col("term"), col("doc_id"))
     val target = new InvertedIndex(spark, targetPath, b)
-    LayoutFs.commit(target.fs, target.root) { batch =>
+    target.layout.commit { batch =>
       batch.stageRows("meta", None, Seq(b).toDF("n_buckets").coalesce(1))
       batch.stageRows("postings", Some("tbucket"), live.join(keep, Seq("term", "doc_id"), "left_semi")
         .select(col("doc_id"), col("pos"), col("term"))
         .withColumn("tbucket", bucketCol(col("term"), b)))
-      batch.stageRows("doclens", None, liveOnly(spark.read.parquet(doclensPath)))
+      batch.stageRows("doclens", None, liveOnly(layout(doclensPath)))
       stageCensus(batch, vocab(), onePerPrefix = false)
     }
     target
@@ -1768,9 +1778,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val post = shared.getOrElse(
       livePostingsScan()
         .localCheckpoint(true)) // two grains aggregate from one read
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       try {
-        val dls = liveOnly(spark.read.parquet(doclensPath))
+        val dls = liveOnly(layout(doclensPath))
         batch.stageRows("blockmax", None, termBounds(tfShared.getOrElse(
           post.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))), dls))
         // (term, file)-grain rows (Ding & Suel SIGIR'11 — true block-max):
@@ -1838,7 +1848,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     recover()
     def fallback() = bm25(queryTerms, k, k1, b)
     if (!fs.exists(new Path(blockmaxPath))) return fallback()
-    val dls = liveOnly(spark.read.parquet(doclensPath))
+    val dls = liveOnly(layout(doclensPath))
     // stats with the exact bm25Scored expression shapes, so the scalar
     // values broadcast into scoring are bit-equal to the plain path's
     val statsRow = dls.agg(count(lit(1)).as("n_docs"),
@@ -1848,7 +1858,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val avgdl = statsRow.getDouble(1)
     val dfs = vocab().filter(col("term").isin(queryTerms: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bounds = spark.read.parquet(blockmaxPath)
+    val bounds = layout(blockmaxPath)
       .filter(col("term").isin(queryTerms: _*))
       .groupBy(col("term"))
       .agg(max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"))
@@ -1905,7 +1915,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         // pruned at the file listing to the essential buckets — the
         // sidecar is postings-scale; coverage only needs the files OF
         // those buckets (the only (bucket, fname) keys ever tested)
-        val fileSidecar = spark.read.parquet(blockmaxFilesPath)
+        val fileSidecar = layout(blockmaxFilesPath)
           .filter(col("tbucket").isin(essBuckets: _*))
         val covered = fileSidecar.select(col("tbucket"), col("fname"))
           .distinct().collect()
@@ -1939,8 +1949,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         else {
           val paths = keep.toSeq.sorted.map { case (bk, f) =>
             new Path(new Path(postingsPath, s"tbucket=$bk"), f).toString }
-          liveOnly(spark.read.option("basePath", postingsPath)
-            .parquet(paths: _*)
+          liveOnly(layout.files(postingsPath, paths)
             .filter(col("term").isin(essential: _*))
             .select(col("doc_id"), col("pos"), col("term")))
         }
@@ -2029,9 +2038,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val b = readBuckets()
     val own = shared.isEmpty
     val live = shared.getOrElse(
-      liveOnly(spark.read.parquet(postingsPath))
+      liveOnly(layout(postingsPath))
         .localCheckpoint(true)) // two consumers: fielded postings + doclens
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       try batch.stage("fielded") { dir =>
         live.groupBy(col("doc_id"), col("term"))
           .agg(count(when(col("pos") < headLen, 1)).as("tf_head"),
@@ -2069,7 +2078,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         val in = fs.open(txt)
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
         finally in.close()
-      } else spark.read.parquet(s"$fieldedPath/meta").head().getInt(0)
+      } else layout(s"$fieldedPath/meta").head().getInt(0)
     }
   }
 
@@ -2095,7 +2104,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val b = readBuckets()
     val terms = queryTerms.zipWithIndex
     val bs = queryTerms.map(bucketOf(_, b)).distinct.sorted
-    val slice = liveOnly(spark.read.parquet(fieldedPostingsPath)
+    val slice = liveOnly(layout(fieldedPostingsPath)
       .filter(col("tbucket").isin(bs: _*))
       .filter(col("term").isin(queryTerms: _*))
       .select(col("doc_id"), col("term"), col("tf_head"), col("tf_body")))
@@ -2103,7 +2112,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       sum(when(col("term") === t, col("tf_head"))).as(s"tfh$i"),
       sum(when(col("term") === t, col("tf_body"))).as(s"tfb$i")) }
     val tf = slice.groupBy(col("doc_id")).agg(aggCols.head, aggCols.tail: _*)
-    val perDoc = liveOnly(spark.read.parquet(fieldedDoclensPath))
+    val perDoc = liveOnly(layout(fieldedDoclensPath))
       .join(tf, Seq("doc_id"), "left")
       .na.fill(0L, terms.flatMap { case (_, i) => Seq(s"tfh$i", s"tfb$i") })
     TextAnalysis.bm25fRank(perDoc, queryTerms.size, k,
@@ -2135,7 +2144,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val bkts = readBuckets()
     val bs = queryTerms.map(bucketOf(_, bkts)).distinct.sorted
     val terms = queryTerms.zipWithIndex
-    val slice = liveOnly(spark.read.parquet(fieldedPostingsPath)
+    val slice = liveOnly(layout(fieldedPostingsPath)
       .filter(col("tbucket").isin(bs: _*))
       .filter(col("term").isin(queryTerms: _*))
       .filter(col(tfCol) > 0)
@@ -2145,7 +2154,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         sum(when(col("term") === t, col("__tf"))).as(s"tf$i") },
         terms.tail.map { case (t, i) =>
           sum(when(col("term") === t, col("__tf"))).as(s"tf$i") }: _*)
-    val dls = liveOnly(spark.read.parquet(fieldedDoclensPath))
+    val dls = liveOnly(layout(fieldedDoclensPath))
       .filter(col(dlCol) > 0)
       .select(col("doc_id"), col(dlCol).as("dl"))
     val perDoc = dls.join(tf, Seq("doc_id"))
@@ -2179,9 +2188,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def buildForwardFrom(shared: Option[DataFrame],
       tfShared: Option[DataFrame]): Unit = {
     val b = readBuckets()
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       batch.stageRows("forward", Some("dbucket"), tfShared.getOrElse(
-          shared.getOrElse(liveOnly(spark.read.parquet(postingsPath)))
+          shared.getOrElse(liveOnly(layout(postingsPath)))
             .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
         .withColumn("dbucket", bucketCol(col("doc_id").cast(StringType), b)))
       stageDerivedMeta(batch, "forward", None)
@@ -2199,7 +2208,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     recover()
     val b = readBuckets()
     val bs = docIds.map(id => bucketOf(id.toString, b)).distinct.sorted
-    spark.read.parquet(forwardPath)
+    layout(forwardPath)
       .filter(col("dbucket").isin(bs: _*))
       .filter(col("doc_id").isin(docIds: _*))
       .select(col("doc_id"), col("term"), col("tf"))
@@ -2335,12 +2344,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
     // instance's live-count cache for any later serve in the same walk
     var nFg = 0L
     val nBg = liveCountMemo.refresh {
-      val cts = liveOnly(spark.read.parquet(doclensPath)).agg(count(lit(1)).as("__bg"),
+      val cts = liveOnly(layout(doclensPath)).agg(count(lit(1)).as("__bg"),
         count(when(col("doc_id").isin(fgIds: _*), lit(1))).as("__fg")).head()
       nFg = cts.getLong(1)
       cts.getLong(0)
     }
-    val empty = spark.read.parquet(doclensPath).limit(0)
+    val empty = layout(doclensPath).limit(0)
       .select(col("doc_id").cast(StringType).as("term"),
         lit(0L).as("df_fg"), lit(0L).as("df_bg"), lit(0.0).as("score"))
       .limit(0)
@@ -2390,7 +2399,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
     recover()
     val nBg = liveDocCount()
-    val empty = spark.read.parquet(doclensPath).limit(0)
+    val empty = layout(doclensPath).limit(0)
       .select(col("doc_id").cast(StringType).as("term"),
         lit(0L).as("df_fg"), lit(0L).as("df_bg"), lit(0.0).as("score"))
     // pinned: the deduped foreground has two consumers (the nFg count
@@ -2499,7 +2508,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       .orderBy(col("df").desc, col("term").asc)
       .limit(maxExpansions)
       .select(col("term")).collect().map(_.getString(0)).toSeq
-    val emptyOut = spark.read.parquet(doclensPath).limit(0)
+    val emptyOut = layout(doclensPath).limit(0)
       .select(col("doc_id"), lit(0L).as("n_matches"))
     if (expanded.isEmpty) return emptyOut
     val slice = termPostings((phrase ++ expanded).distinct)
@@ -2616,16 +2625,21 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * directories only — schema-identical to an in-memory
     * [[TextAnalysis.positionalPostings]] slice, so phrase/proximity
     * operators compose unchanged. */
-  def termPostings(terms: Seq[String]): DataFrame = {
+  def termPostings(terms: Seq[String]): DataFrame = termSlice(terms)._1
+
+  /** [[termPostings]] and the tombstone mask it applied ([[liveMask]]),
+    * for a caller that masks more frames of the same call. */
+  private def termSlice(terms: Seq[String]): (DataFrame, DataFrame => DataFrame) = {
     require(terms.nonEmpty, "need at least one term")
     require(terms.forall(_.nonEmpty), s"empty term in $terms")
     recover()
     val b = readBuckets()
     val bs = terms.map(bucketOf(_, b)).distinct.sorted
-    liveOnly(spark.read.parquet(postingsPath)
+    val live = liveMask()
+    (live(layout(postingsPath)
       .filter(col("tbucket").isin(bs: _*))
       .filter(col("term").isin(terms: _*))
-      .select(col("doc_id"), col("pos"), col("term")))
+      .select(col("doc_id"), col("pos"), col("term"))), live)
   }
 }
 

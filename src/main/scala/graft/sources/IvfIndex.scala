@@ -74,7 +74,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   private def readAssignBuckets(metaPath: String): Int =
     assignBucketsMemo.getOrElseUpdate(metaPath,
       new graft.util.StampedMemo[Int](() => fs, Seq(metaPath)))
-      .apply(spark.read.parquet(metaPath).head().getInt(0))
+      .apply(layout(metaPath).head().getInt(0))
 
   /** The (id, ivf_list, abucket) sidecar rows of assigned rows, for a
     * B-bucket sidecar. */
@@ -107,7 +107,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       b.stageRows(s"${rel}_meta", None, Seq(assignBuckets).toDF("n_buckets").coalesce(1))
       b.stageRows(rel, Some("abucket"), sidecarRows(assigned, assignBuckets))
     }
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       if (raw) {
         stageSidecar(b, "assign")
         b.stageRows("lists", Some("ivf_list"), assigned)
@@ -169,7 +169,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     val share = fs.exists(new Path(metaPath))
     val assigned =
       if (share) assignedBase.localCheckpoint(false) else assignedBase
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       if (share) b.add(assignRel)(dir => sidecarRows(assigned, readAssignBuckets(metaPath))
         .write.partitionBy("abucket").parquet(dir.toString))
       b.add(rel)(dir => rows(assigned).write.partitionBy("ivf_list").parquet(dir.toString))
@@ -207,7 +207,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * the data layout. */
   private[graft] def touchedFrame(ids: DataFrame, assignBase: String,
       buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(assignBase)
+    layout(assignBase)
       .filter(col("abucket").isin(buckets: _*))
       .join(ids, Seq("id"))
       .select(col("ivf_list"), col("abucket")).distinct()
@@ -226,10 +226,10 @@ final class IvfIndex(spark: SparkSession, path: String,
     } else {
       // pre-sidecar layout: full-index id-column discovery (the documented
       // fallback — O(index file listing), which is why the sidecar exists)
-      (spark.read.parquet(s"$path/$rel").join(ids, Seq("id"))
+      (layout(s"$path/$rel").join(ids, Seq("id"))
         .select(col("ivf_list")).distinct().collect().map(_.getInt(0)).toSeq.sorted, Nil)
     }
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       rewrite(b, rel, "ivf_list", lists)(antiJoin)
       rewrite(b, assignRel, "abucket", buckets)(antiJoin)
     }
@@ -248,7 +248,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   private def rewrite(b: LayoutFs.Batch, rel: String, partCol: String, touched: Seq[Int])(
       transform: DataFrame => DataFrame): Unit =
     if (touched.nonEmpty)
-      b.rewriteParts(rel, partCol, touched, spark.read.parquet(s"$path/$rel"))(transform)
+      b.rewriteParts(rel, partCol, touched, layout(s"$path/$rel"))(transform)
 
   /** Small-file compaction for the raw lists layout (X166): every
     * [[append]] adds part-files to its touched `ivf_list=N` directories
@@ -264,7 +264,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   def compact(listIds: Seq[Int]): Unit = {
     recover()
     requireDirs(listsPath, "ivf_list", listIds)
-    LayoutFs.commit(fs, new Path(path))(
+    layout.commit(
       rewrite(_, "lists", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
   }
 
@@ -273,7 +273,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   def compactPq(listIds: Seq[Int]): Unit = {
     recover()
     requireDirs(codesPath, "ivf_list", listIds)
-    LayoutFs.commit(fs, new Path(path))(
+    layout.commit(
       rewrite(_, "codes", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
   }
 
@@ -282,7 +282,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * job). No-op for a layout whose sidecar was never written. */
   def compactAssign(): Unit = {
     recover()
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       Seq(("assign", assignMetaPath), ("assign_pq", assignPqMetaPath))
         .filter { case (_, meta) => fs.exists(new Path(meta)) }
         .foreach { case (rel, meta) =>
@@ -387,7 +387,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   def retrain(targetPath: String, iters: Int): IvfIndex = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     recover()
-    val vecs = spark.read.parquet(listsPath)
+    val vecs = layout(listsPath)
       .select(col("id"), col("vector"))
     val cents = Ann.lloydRounds(vecs, "vector", loadCentroids(), iters)
     val next = new IvfIndex(spark, targetPath, assignBuckets)
@@ -428,7 +428,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     require(listId >= 0 && listId < cs.size,
       s"listId $listId out of range [0, ${cs.size})")
     val newId = cs.size
-    val rows = spark.read.parquet(listsPath)
+    val rows = layout(listsPath)
       .filter(col("ivf_list") === listId)
       .select(col("id"), col("vector"))
     val init = rows.orderBy(col("id")).limit(2).collect()
@@ -450,14 +450,14 @@ final class IvfIndex(spark: SparkSession, path: String,
     val hasPq = fs.exists(new Path(codesPath))
     val movedIds = moved.select(col("id"))
     val codesList = if (hasPq)
-      Some(spark.read.parquet(codesPath)
+      Some(layout(codesPath)
         .filter(col("ivf_list") === listId).select(col("id"), col("codes")))
     else None
     val codesMovedIds = codesList.map(_.join(movedIds, Seq("id"), "left_semi")
       .select(col("id")).localCheckpoint(true))
     // data move, sidecar rows and centroid set (listId tightens to
     // sub-centroid 0, newId = sub 1), committed as one batch
-    LayoutFs.commit(fs, new Path(path)) { batch =>
+    layout.commit { batch =>
       val halves = Seq(listId, newId)
       batch.stageParts("lists", "ivf_list", halves, assigned.withColumn("ivf_list",
         when(col("ivf_list") === 0, lit(listId)).otherwise(lit(newId))))
@@ -518,7 +518,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     // into b
     val (target, source) = if (a == last) (b, a) else (a, b)
     val vacated = if (source == last) last else source
-    val lists = spark.read.parquet(listsPath)
+    val lists = layout(listsPath)
     val union = lists.filter(col("ivf_list").isin(target, source))
       .select(col("id"), col("vector"))
     val lastRows = if (source == last) union.limit(0)
@@ -548,7 +548,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     // codes — the same staged moves keep the layout servable instead of
     // invalidating it
     val hasPq = fs.exists(new Path(codesPath))
-    val codesAll = if (hasPq) Some(spark.read.parquet(codesPath)) else None
+    val codesAll = if (hasPq) Some(layout(codesPath)) else None
     val codesUnion = codesAll.map(_.filter(col("ivf_list").isin(target, source))
       .select(col("id"), col("codes")))
     val codesLast = codesAll.map { c =>
@@ -559,7 +559,7 @@ final class IvfIndex(spark: SparkSession, path: String,
       .select(col("id")).localCheckpoint(true))
     val lastIdsPq = codesLast.map(_.select(col("id")).localCheckpoint(true))
     // the vacated codes dir drops only when this merge staged a codes half
-    LayoutFs.commit(fs, new Path(path)) { batch =>
+    layout.commit { batch =>
       val stagedSlots = Seq(target) ++ (if (source == last) Nil else Seq(vacated))
       batch.stageParts("lists", "ivf_list", stagedSlots,
         union.withColumn("ivf_list", lit(target))
@@ -618,6 +618,11 @@ final class IvfIndex(spark: SparkSession, path: String,
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Every read of a live index directory and every commit
+    * ([[LayoutFs.Live]]): a read pins the directory's schema, so it
+    * launches no footer-inference job. */
+  private val layout = new LayoutFs.Live(spark, () => fs, path)
+
   /** Crash recovery, run once at the top of every entry point
     * ([[LayoutFs.Recovery]]): the first call opens the index — under the
     * root and the `lists`, `codes`, `assign` and `assign_pq` directories,
@@ -644,18 +649,21 @@ final class IvfIndex(spark: SparkSession, path: String,
   /** [[centroids]] for entry points that already ran [[recover]]. */
   private def loadCentroids(): Seq[Array[Float]] =
     centroidsMemo(
-      spark.read.parquet(centroidsPath).orderBy(col("cid"))
+      layout(centroidsPath).orderBy(col("cid"))
         .collect().map(_.getSeq[Float](1).toArray).toSeq)
 
   /** Exact cosine top-k WITHIN the nprobe best lists for `query` —
     * [[graft.operators.Ann.ivfTopK]] semantics, but the probe set
     * becomes a partition filter: only `nprobe` of the k list
-    * directories are listed, opened, or decoded. */
+    * directories are listed, opened, or decoded. A warm call launches
+    * ONE Spark job, the scoring scan itself: the centroids come from
+    * their memo and the lists read with a pinned schema
+    * ([[LayoutFs.Live]]), so no job infers a parquet footer. */
   def search(query: Array[Float], k: Int, nprobe: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
     recover()
-    val probed = spark.read.parquet(listsPath)
+    val probed = layout(listsPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
     Ann.bruteForceTopK(probed, "id", "vector", query, k)
   }
@@ -675,7 +683,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     require(k >= 1, s"k must be positive, got $k")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
     recover()
-    val probed = spark.read.parquet(listsPath)
+    val probed = layout(listsPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
       .filter(pred)
     Ann.bruteForceTopK(probed, "id", "vector", query, k)
@@ -689,13 +697,13 @@ final class IvfIndex(spark: SparkSession, path: String,
     * kernel. */
   def listsView: DataFrame = {
     recover()
-    spark.read.parquet(listsPath)
+    layout(listsPath)
   }
 
   /** See [[listsView]]. */
   def centroidsView: DataFrame = {
     recover()
-    spark.read.parquet(centroidsPath)
+    layout(centroidsPath)
   }
 
   /** The nprobe best coarse lists for a query — k driver-side dot
@@ -771,14 +779,19 @@ final class IvfIndex(spark: SparkSession, path: String,
     deleteFrom("codes", "assign_pq", assignPqMetaPath, ids)
   }
 
-  /** The stored PQ codebooks, (subspace, code)-ordered. */
-  def codebooks(): Pq.Codebooks = {
-    val rows = spark.read.parquet(booksPath)
+  /** The stored PQ codebooks, (subspace, code)-ordered — memoized like
+    * the centroids, stamped by their directory, which every rebuild
+    * replaces. */
+  def codebooks(): Pq.Codebooks = booksMemo {
+    val rows = layout(booksPath)
       .orderBy(col("subspace"), col("code")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
     rows.groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3)).toArray
   }
+
+  private lazy val booksMemo =
+    new graft.util.StampedMemo[Pq.Codebooks](() => fs, Seq(booksPath))
 
   /** ADC top-k over the probed CODE lists — [[graft.operators.Pq
     * .ivfAdcTopK]] semantics with the probe as a partition filter and
@@ -787,7 +800,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     require(topK >= 1, s"topK must be positive, got $topK")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
     recover()
-    val probed = spark.read.parquet(codesPath)
+    val probed = layout(codesPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
     Pq.adcTopK(probed, "id", "codes", codebooks(), query, topK)
   }
@@ -806,7 +819,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     require(topK >= 1, s"topK must be positive, got $topK")
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
     recover()
-    val probed = spark.read.parquet(codesPath)
+    val probed = layout(codesPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
       .filter(pred)
     Pq.adcTopK(probed, "id", "codes", codebooks(), query, topK)
@@ -832,7 +845,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     recover()
     val cand = searchPq(query, topK = refine * k, nprobe)
       .select(col("id"))
-    val probedRaw = spark.read.parquet(listsPath)
+    val probedRaw = layout(listsPath)
       .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
       .join(broadcast(cand), Seq("id"), "left_semi")
     Ann.bruteForceTopK(probedRaw, "id", "vector", query, k)

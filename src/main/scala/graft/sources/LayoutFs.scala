@@ -2,11 +2,13 @@ package graft.sources
 
 import java.io.{FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The one crash-safe commit primitive every persisted layout shares:
   * every write of a layout — a build, an append, a tombstone, a
@@ -36,7 +38,8 @@ import org.apache.spark.sql.functions.col
   * SQL scan build and every new batch makes the batch's own probe
   * ([[rollForward]]), which lists nothing. Readers never delete an
   * uncommitted batch: only the next batch or [[discardBatch]] (a
-  * layout's vacuum or a [[snapshot]]) discards one.
+  * layout's vacuum or a [[snapshot]]) discards one. A handle reads its
+  * live directories and commits its batches through one [[Live]].
   *
   * Atomicity assumption, stated once for the engine: each `rename` is
   * an ATOMIC O(1) metadata operation that either fully happens or not
@@ -111,6 +114,75 @@ object LayoutFs {
       else { open(fs(), new Path(root), dirs: _*); opened = true }
   }
 
+  /** A layout handle's reads of its live directories, and its commits.
+    * Each read pins its directory's schema (`spark.read.schema(s)`), so
+    * it lists the files and launches no Spark job: inferring a schema
+    * reads parquet footers in a job of its own. The schema of each
+    * directory is Spark's own inference, memoized and stamped by the
+    * layout ROOT's modification time: every write of every layout
+    * commits through a [[Batch]], whose marker renames into the root,
+    * so the root's mtime moves with every commit of any handle, and a
+    * schema stays exact until then.
+    *
+    * The handle's own batches ([[commit]]) keep their stamps good: every
+    * root stamp seen while its batch is open is its own staging's or
+    * commit's, so a schema stamped by one of them stays valid through the
+    * batch, and after it the batch drops the schema of each directory it
+    * replaced whole and re-stamps the others. A directory holds one
+    * schema — a reader infers it from any one footer — so rewriting some
+    * of its partitions or adding files to it cannot change it. */
+  final class Live(spark: SparkSession, fs: () => FileSystem, root: String) {
+    /** dir -> (the root's mtime when inferred, the schema). */
+    private val schemas = new ConcurrentHashMap[String, (Long, StructType)]
+    /** The root stamps this handle's open batch made, empty between batches. */
+    @volatile private var own = Set.empty[Long]
+    private val rootPath = new Path(root).toUri.getPath
+
+    private def stamp(): Long =
+      try fs().getFileStatus(new Path(root)).getModificationTime
+      catch { case _: FileNotFoundException => -1L }
+
+    /** The live directory `dir` of the layout. */
+    def apply(dir: String): DataFrame = spark.read.schema(schema(dir)).parquet(dir)
+
+    /** The part-files `files` of the live directory `dir`, with `dir`'s
+      * partition columns. */
+    def files(dir: String, files: Seq[String]): DataFrame =
+      spark.read.schema(schema(dir)).option("basePath", dir).parquet(files: _*)
+
+    /** The schema of the live directory `dir`. */
+    private def schema(dir: String): StructType = {
+      val k = stamp()
+      if (own.nonEmpty) own += k
+      Option(schemas.get(dir)) match {
+        case Some((k0, s)) if k0 == k || own(k0) => s
+        case _ =>
+          val s = spark.read.parquet(dir).schema
+          schemas.put(dir, (k, s))
+          s
+      }
+    }
+
+    /** [[LayoutFs.commit]] on the root; then drop the schemas of the
+      * directories the batch replaced whole, and re-stamp the others. */
+    def commit(body: Batch => Unit): Unit = {
+      val b = batch(fs(), new Path(root))
+      own = Set(stamp())
+      try { body(b); b.commit() }
+      finally {
+        val k = stamp()
+        schemas.forEach { (dir, e) =>
+          val p = new Path(dir).toUri.getPath
+          if (p != rootPath && !p.startsWith(rootPath + "/") ||
+              b.replaces(p.stripPrefix(rootPath).stripPrefix("/")))
+            schemas.remove(dir)
+          else if (own(e._1)) schemas.put(dir, (k, e._2))
+        }
+        own = Set.empty
+      }
+    }
+  }
+
   private val Nested = "census/pending_delta,edges/.tmp_gbucket_batch/_committed"
 
   /** What a glob of a layout directory looks for: a committed batch,
@@ -165,6 +237,13 @@ object LayoutFs {
   final class Batch private[LayoutFs] (fs: FileSystem, root: Path) {
     private var entries = Vector.empty[String]
     private var drops = Vector.empty[String]
+    /** The paths under the root whose whole content this batch replaces
+      * or drops ("" for the root itself). */
+    private var replaced = Vector.empty[String]
+
+    /** Whether the batch replaces or drops `rel`, or a directory holding it. */
+    private[LayoutFs] def replaces(rel: String): Boolean =
+      replaced.exists(r => r.isEmpty || rel == r || rel.startsWith(r + "/"))
 
     /** Where the replacement of the live `root/rel` stages. */
     def staged(rel: String): Path = under(new Path(root, Staging), rel)
@@ -174,6 +253,7 @@ object LayoutFs {
     def stage(rel: String)(write: Path => Unit): Unit = {
       write(staged(rel))
       entries :+= s"swap $rel"
+      replaced :+= rel
     }
 
     /** Stage `rows` as the whole replacement of `root/rel`, partitioned
@@ -185,6 +265,7 @@ object LayoutFs {
       * swaps in, and each live part that got no rows drops. */
     def stageRows(rel: String, partCol: Option[String], rows: DataFrame): Unit = {
       require(rel.nonEmpty || partCol.nonEmpty, s"only a partitioned layout can replace its root $root")
+      replaced :+= rel
       val dir = staged(rel)
       partCol.fold(rows.write)(c => rows.write.partitionBy(c)).parquet(dir.toString)
       if (!fs.listStatus(dir).exists(s => !s.getPath.getName.startsWith("_")))
@@ -250,7 +331,7 @@ object LayoutFs {
     def move(src: String, dst: String): Unit = entries :+= s"move $src $dst"
 
     /** Delete the live `root/rel` once every swap and move has landed. */
-    def drop(rel: String): Unit = drops :+= rel
+    def drop(rel: String): Unit = { drops :+= rel; replaced :+= rel }
 
     /** Commit ([[markCommitted]]) and publish. */
     private[sources] def commit(): Unit = if (markCommitted()) publish(fs, root)

@@ -39,6 +39,10 @@ final class NgramLm(spark: SparkSession, path: String) {
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Reads of the live layout directories, with pinned schemas, and
+    * commits ([[LayoutFs.Live]]). */
+  private val layout = new LayoutFs.Live(spark, () => fs, path)
+
   /** Roll a committed batch forward and restore a backup an earlier
     * version's pointer swap left (`.current.bak`), from one glob of the
     * root ([[LayoutFs.Recovery]]). */
@@ -51,7 +55,7 @@ final class NgramLm(spark: SparkSession, path: String) {
     new graft.util.StampedMemo[Int](() => fs, Seq(pointerLive.toString))
   def currentVersion(): Int = {
     recover()
-    versionMemo(spark.read.parquet(pointerLive.toString).head().getInt(0))
+    versionMemo(layout(pointerLive.toString).head().getInt(0))
   }
 
   /** The three count tables from ONE tokenize pass (r22): tri, bi and
@@ -80,7 +84,7 @@ final class NgramLm(spark: SparkSession, path: String) {
   private def publish(v: Int, tri: DataFrame, bi: DataFrame, uni: DataFrame,
       toks: DataFrame): Unit = {
     import spark.implicits._
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       b.stage(s"v=$v") { dir =>
         tri.write.parquet(s"$dir/tri")
         bi.write.parquet(s"$dir/bi")
@@ -99,9 +103,9 @@ final class NgramLm(spark: SparkSession, path: String) {
   }
 
   private def readTables(v: Int) = (
-    spark.read.parquet(s"${verDir(v)}/tri"),
-    spark.read.parquet(s"${verDir(v)}/bi"),
-    spark.read.parquet(s"${verDir(v)}/uni"))
+    layout(s"${verDir(v)}/tri"),
+    layout(s"${verDir(v)}/bi"),
+    layout(s"${verDir(v)}/uni"))
 
   /** Merge a NEW batch's counts into the model: count only the batch,
     * outer-sum against the stored tables, publish as the next version,
@@ -171,7 +175,7 @@ final class NgramLm(spark: SparkSession, path: String) {
     * committed batch. */
   def vacuum(): Unit = {
     val keep = currentVersion()
-    LayoutFs.commit(fs, new Path(path)) { b =>
+    layout.commit { b =>
       Option(fs.globStatus(new Path(path, "v=*"))).toSeq.flatten.map(_.getPath.getName)
         .filter(_ != s"v=$keep").foreach(b.drop)
     }

@@ -57,6 +57,10 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   private def fs =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Reads of the live layout directories, with pinned schemas, and
+    * commits ([[LayoutFs.Live]]). */
+  private val layout = new LayoutFs.Live(spark, () => fs, path)
+
   private def bucketCol(term: Column, b: Int): Column =
     pmod(conv(substring(md5(term), 1, 7), 16, 10).cast(LongType), lit(b.toLong))
       .cast(IntegerType)
@@ -73,7 +77,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   private lazy val bucketsMemo =
     new graft.util.StampedMemo[Int](() => fs, Seq(metaPath))
   private def readBuckets(): Int =
-    bucketsMemo(spark.read.parquet(metaPath).head().getInt(0))
+    bucketsMemo(layout(metaPath).head().getInt(0))
 
   private def root = new Path(path)
 
@@ -94,7 +98,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true) // two consumers: layout write + totals
     import spark.implicits._
-    LayoutFs.commit(fs, root) { b =>
+    layout.commit { b =>
       b.stageRows("meta", None, Seq(buckets).toDF("n_buckets").coalesce(1))
       b.stageRows("clauses", Some("tbucket"), c.withColumn("tbucket", bucketCol(col("term"), buckets)))
       b.stageRows("totals", None, totalsOf(c))
@@ -114,7 +118,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     val b = readBuckets()
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true)
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       batch.add("clauses")(dir => c.withColumn("tbucket", bucketCol(col("term"), b))
         .write.partitionBy("tbucket").parquet(dir.toString))
       batch.add("totals")(dir => totalsOf(c).write.parquet(dir.toString))
@@ -132,12 +136,12 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     require(queryIds.columns.toSeq == Seq("query_id"),
       s"ids must be a single-column (query_id) frame, got ${queryIds.columns.toSeq}")
     recover()
-    LayoutFs.commit(fs, root)(_.add("tombstones")(dir =>
+    layout.commit(_.add("tombstones")(dir =>
       queryIds.select(col("query_id").cast(StringType)).write.parquet(dir.toString)))
   }
 
   private def tombstoneIds(): DataFrame = {
-    val ts = spark.read.parquet(tombstonesPath)
+    val ts = layout(tombstonesPath)
       .select(col("query_id")).distinct()
     val bytes = fs.listStatus(new Path(tombstonesPath))
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
@@ -163,11 +167,11 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     recover()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
-    LayoutFs.commit(fs, root) { batch =>
-      val clauses = spark.read.parquet(clausesPath).join(ts, Seq("query_id"), "left_anti")
+    layout.commit { batch =>
+      val clauses = layout(clausesPath).join(ts, Seq("query_id"), "left_anti")
       batch.stageRows("clauses", Some("tbucket"),
         if (compactToo) clauses.repartition(col("tbucket")) else clauses)
-      val totals = spark.read.parquet(totalsPath).join(ts, Seq("query_id"), "left_anti")
+      val totals = layout(totalsPath).join(ts, Seq("query_id"), "left_anti")
       batch.stageRows("totals", None, if (compactToo) totals.coalesce(1) else totals)
       batch.drop("tombstones")
     }
@@ -196,10 +200,10 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * (pure layout). */
   def compact(): Unit = {
     recover()
-    LayoutFs.commit(fs, root) { batch =>
+    layout.commit { batch =>
       batch.stageRows("clauses", Some("tbucket"),
-        spark.read.parquet(clausesPath).repartition(col("tbucket")))
-      batch.stageRows("totals", None, spark.read.parquet(totalsPath).coalesce(1))
+        layout(clausesPath).repartition(col("tbucket")))
+      batch.stageRows("totals", None, layout(totalsPath).coalesce(1))
     }
   }
 
@@ -233,9 +237,9 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     def tombFracNow(): Double =
       if (!fs.exists(new Path(tombstonesPath))) 0.0
       else {
-        val nQueries = spark.read.parquet(totalsPath).count()
+        val nQueries = layout(totalsPath).count()
         if (nQueries == 0L) 1.0
-        else spark.read.parquet(tombstonesPath)
+        else layout(tombstonesPath)
           .select(col("query_id")).distinct().count().toDouble / nQueries
       }
     def maxFilesNow(): Int =
@@ -281,13 +285,13 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * [[StoreCatalog.registerQueryStore]]. */
   def liveClauses: DataFrame = {
     recover()
-    liveOnly(spark.read.parquet(clausesPath))
+    liveOnly(layout(clausesPath))
   }
 
   /** The LIVE (query_id, n_must, n_should) totals frame. */
   def liveTotals: DataFrame = {
     recover()
-    liveOnly(spark.read.parquet(totalsPath))
+    liveOnly(layout(totalsPath))
   }
 
   /** The stored clause rows of exactly the given terms' buckets — the
@@ -304,7 +308,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   def clausesForBuckets(bucketIds: Seq[Int]): DataFrame = {
     require(bucketIds.nonEmpty, "need at least one bucket")
     recover()
-    liveOnly(spark.read.parquet(clausesPath)
+    liveOnly(layout(clausesPath)
       .filter(col("tbucket").isin(bucketIds: _*))
       .select(col("query_id"), col("term"), col("clause")))
   }

@@ -1044,18 +1044,24 @@ class PlanAuditSuite extends AnyFunSuite {
     case p => p
   }
 
-  /** Spark jobs launched by `body`, counted under a job group of its own. A
-    * marker job after it flushes the listener queue (events arrive in
-    * order), so the count is final when it is read. */
-  private def jobsOf(body: => Any): Int = {
+  /** Spark jobs launched by `body`, counted under a job group of its own. */
+  private def jobsOf(body: => Any): Int = jobNamesOf(body).size
+
+  /** The names of the Spark jobs `body` launches (each its first stage's
+    * call site, e.g. `collect at IvfIndex.scala:NNN`), collected under a
+    * job group of its own. A marker job after it flushes the listener
+    * queue (events arrive in order), so the list is final when it is
+    * read. */
+  private def jobNamesOf(body: => Any): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"audit-${java.util.UUID.randomUUID()}"
-    val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val names = new java.util.concurrent.ConcurrentHashMap[String, Vector[String]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => counts.merge(g, 1, (a: Integer, b: Integer) => a + b))
+          .foreach(g => names.merge(g, Vector(e.stageInfos.map(_.name).headOption.getOrElse("")),
+            (a: Vector[String], b: Vector[String]) => a ++ b))
     }
     sc.addSparkListener(listener)
     try {
@@ -1064,11 +1070,164 @@ class PlanAuditSuite extends AnyFunSuite {
       sc.setJobGroup(s"$group-marker", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30000000000L
-      while (!counts.containsKey(s"$group-marker") && System.nanoTime() < deadline)
+      while (!names.containsKey(s"$group-marker") && System.nanoTime() < deadline)
         Thread.sleep(10)
-      assert(counts.containsKey(s"$group-marker"), "listener never saw the marker job")
-      Option(counts.get(group)).fold(0)(_.intValue)
+      assert(names.containsKey(s"$group-marker"), "listener never saw the marker job")
+      Option(names.get(group)).getOrElse(Vector.empty)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The jobs of `names` that infer a parquet schema: reading a directory
+    * with no schema runs a job named after the `parquet` call (so is a
+    * parquet write's; the serve paths audited with it write nothing). */
+  private def footerJobs(names: Seq[String]): Seq[String] = names.filter(_.startsWith("parquet at "))
+
+  /** A 48-vector IVF index over 4 lists with raw lists and PQ codes. */
+  private lazy val pqFixture = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(9)
+    val vecs = (1L to 48L).map(i => i -> Array.fill(8)(rnd.nextFloat() * 2f - 1f))
+    val embs = vecs.toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_jobs").toString
+    val idx = new sources.IvfIndex(spark, s"$dir/ivf")
+    idx.buildWithPq(embs, "vec_id", "embedding", vecs.take(4).map(_._2),
+      operators.Pq.seedCodebooks(embs, "vec_id", "embedding", m = 4, k = 4))
+    idx
+  }
+
+  for ((name, probe) <- Seq[(String, sources.IvfIndex => DataFrame)](
+      "search" -> (_.search(fresh.head, k = 5, nprobe = 2)),
+      "searchWhere" -> (_.searchWhere(fresh.head, k = 5, nprobe = 2,
+        org.apache.spark.sql.functions.col("id") > 3)),
+      "searchPq" -> (_.searchPq(fresh.head, topK = 5, nprobe = 2)))) {
+    test(s"job counts: a warm IvfIndex.$name runs one job, and no job infers a parquet schema") {
+      probe(pqFixture).collect()
+      val names = jobNamesOf(probe(pqFixture).collect())
+      assert(names.size <= 1, s"a warm $name launched ${names.size} jobs: $names")
+      assert(footerJobs(names).isEmpty, s"a warm $name inferred a schema: $names")
+    }
+  }
+
+  test("job counts: a warm InvertedIndex.bm25 runs no footer-inference job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_jobs").toString
+    val inv = new sources.InvertedIndex(spark, s"$dir/inv", buckets = 4)
+    inv.build(Seq((1L, "merge sort beats bubble sort"), (2L, "sort merge join"),
+      (3L, "unrelated text"), (4L, "another sort document")).toDF("doc_id", "text"),
+      "doc_id", $"text")
+    inv.delete(Seq(4L).toDF("doc_id"))
+    inv.bm25(Seq("sort", "merge"), k = 3).collect()
+    val names = jobNamesOf(inv.bm25(Seq("sort", "merge"), k = 3).collect())
+    assert(names.nonEmpty && footerJobs(names).isEmpty, s"a warm bm25 inferred a schema: $names")
+  }
+
+  test("job counts: a layout's own partition rewrites and appends keep its pinned schemas") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = java.nio.file.Files.createTempDirectory("graft_own_commit_jobs").toString
+    val rnd = new scala.util.Random(13)
+    def raw(from: Long, n: Int) = (from until from + n).map(i => (i, 0, Array.fill(8)(rnd.nextFloat() * 2f - 1f).toSeq))
+      .toDF("post_id", "sequence_no", "vector").withColumn("vector", col("vector").cast("array<float>"))
+      .withColumn("vector_type", lit("t"))
+    val store = new sources.EmbeddingStore(spark, s"$dir/store", numBuckets = 2)
+    store.bulkLoad(raw(0L, 40))
+    val idx = new sources.IvfIndex(spark, s"$dir/ivf", assignBuckets = 4)
+    idx.build(store.read(), "id", "vector", store.read().orderBy("id").limit(3)
+      .select("vector").collect().map(_.getSeq[Float](0).toArray).toSeq)
+    store.read(); idx.listsView // schemas pinned
+    // building a frame launches no job but its schema's inference
+    store.upsert(raw(100L, 5))
+    assert(jobsOf(store.read()) == 0, "an upsert's bucket rewrite must keep the store's schema")
+    val added = store.read().filter(col("post_id") >= 100L).select(col("id"), col("vector")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq.toDF("id", "vector")
+    idx.append(added, "id", "vector")
+    assert(jobsOf(idx.listsView) == 0, "an append must keep the lists' schema")
+    idx.delete(added.select(col("id")).limit(2))
+    assert(jobsOf(idx.listsView) == 0, "a delete's list rewrite must keep the lists' schema")
+    store.deleteMany(Seq(1L, 2L))
+    assert(jobsOf(store.read()) == 0, "a delete's bucket rewrite must keep the store's schema")
+  }
+
+  // ---- a pinned schema follows the layout: its own and others' rebuilds --
+
+  /** Each layout: `build(path, handle, wide)` writes it through `handle`
+    * with the narrow schema (Int ids) or a changed one (Long ids, or a
+    * retyped column); `read(handle)` is a live-directory read; `changed`
+    * holds for the changed schema's frame. A stale pinned schema fails
+    * the read: parquet cannot decode a Long column as Int, nor a double
+    * or string column as Long. */
+  private case class Rebuild[H](layout: String, open: String => H, build: (String, H, Boolean) => Unit,
+      read: H => DataFrame, changed: DataFrame => Boolean)
+
+  private def idType(c: String)(f: DataFrame): Boolean =
+    f.schema(c).dataType == org.apache.spark.sql.types.LongType
+
+  private def rebuilds: Seq[Rebuild[_]] = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    def ids(wide: Boolean) = (1 to 24).toDF("i").select(
+      (if (wide) col("i").cast("long") else col("i")).as("id"),
+      (col("i") % 3).cast("long").as("post_id"))
+    val rnd = new scala.util.Random(3)
+    val vec = (1 to 24).map(i => i -> Array.fill(8)(rnd.nextFloat() * 2f - 1f)).toMap
+    val vecCol = org.apache.spark.sql.functions.udf((i: Int) => vec(i).toSeq)
+    def embs(wide: Boolean) = ids(wide).withColumn("vector",
+      vecCol(col("id").cast("int")).cast("array<float>"))
+    def docs(wide: Boolean) = ids(wide).select(col("id").as("doc_id"),
+      org.apache.spark.sql.functions.concat(lit("sort merge w"), col("id").cast("string")).as("text"))
+    /** Replace the live `rel` under `root` through a committed batch: a
+      * writer that changes a column's type where the layout's own API
+      * cannot. */
+    def replace(root: String, rel: String, partCol: Option[String])(rows: DataFrame): Unit = {
+      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      sources.LayoutFs.commit(fs, new org.apache.hadoop.fs.Path(root))(_.stageRows(rel, partCol, rows))
+    }
+    Seq(
+      Rebuild[sources.EmbeddingStore]("EmbeddingStore", new sources.EmbeddingStore(spark, _, numBuckets = 2),
+        (_, h, wide) => h.bulkLoad(embs(wide).drop("id").withColumn("post_id",
+            if (wide) col("post_id") else col("post_id").cast("int"))
+            .withColumn("sequence_no", lit(0)).withColumn("vector_type", lit("t"))),
+        _.read(), idType("post_id")),
+      Rebuild[sources.IvfIndex]("IvfIndex", new sources.IvfIndex(spark, _),
+        (_, h, wide) => h.build(embs(wide), "id", "vector", vec.values.take(2).toSeq),
+        _.search(fresh.head, k = 5, nprobe = 2), idType("id")),
+      Rebuild[sources.InvertedIndex]("InvertedIndex", new sources.InvertedIndex(spark, _, buckets = 2),
+        (_, h, wide) => h.build(docs(wide), "doc_id", col("text")),
+        _.bm25(Seq("sort", "merge"), k = 3), idType("doc_id")),
+      Rebuild[sources.QueryStore]("QueryStore", new sources.QueryStore(spark, _, buckets = 2),
+        (_, h, wide) => h.build(ids(wide)
+          .select(col("id").as("query_id"), lit("sort").as("term"), lit("must").as("clause"))),
+        _.liveClauses, idType("query_id")),
+      Rebuild[sources.GraphIndex]("GraphIndex", new sources.GraphIndex(spark, _, buckets = 2),
+        (p, h, wide) => {
+          h.build(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
+          if (wide) replace(p, "edges", Some("gbucket"))(Seq(("1", "2", 0)).toDF("src", "dst", "gbucket"))
+        },
+        _.edges(), _.schema("src").dataType == org.apache.spark.sql.types.StringType),
+      Rebuild[sources.NgramLm]("NgramLm", new sources.NgramLm(spark, _),
+        (p, h, wide) => {
+          h.build(docs(wide = false), "doc_id", col("text"))
+          if (wide) replace(p, "v=1/uni", None)(Seq(("sort", 1.5)).toDF("term", "c1"))
+        },
+        _.score(docs(wide = false), "doc_id", col("text")), _ => true))
+  }
+
+  for (layout <- Seq("EmbeddingStore", "IvfIndex", "InvertedIndex", "QueryStore", "GraphIndex", "NgramLm");
+       own <- Seq(false, true))
+    test(s"pinned schema: $layout reads the schema ${if (own) "its own" else "another handle's"} rebuild wrote") {
+    def run[H](r: Rebuild[H]): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_schema_follow").toString
+      val p = s"$dir/${r.layout}"
+      val first = r.open(p)
+      r.build(p, first, false)
+      assert(r.read(first).collect().nonEmpty, s"${r.layout}: the narrow layout reads rows")
+      Thread.sleep(5) // a commit in a later millisecond: the root's mtime moves
+      r.build(p, if (own) first else r.open(p), true)
+      val again = r.read(first)
+      assert(r.changed(again), s"${r.layout}: the first handle kept the old schema: ${again.schema}")
+      assert(again.collect().nonEmpty, s"${r.layout}: the first handle reads the rebuilt layout")
+    }
+    run(rebuilds.find(_.layout == layout).get)
   }
 
   test("filtered search with a meta filter and a meta sort plans no shuffle exchange") {

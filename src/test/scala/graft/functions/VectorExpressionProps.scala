@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -120,6 +120,56 @@ object VectorExpressionProps extends Properties("VectorExpressions") {
       val oldStage3 = Divide(DotProductFloat(vRef, qRef),
         Add(Multiply(mRef, Literal(q.map(SearchEngine.magnitudeOf).getOrElse(0.0))), eps))
       q.isEmpty || results(stored._1, r).forall(_ == bits(oldStage3.eval(r)))
+    }
+
+  // ---- vec_normalize: the fused kernel vs the composite it replaced ------
+
+  private val nullableVecType = ArrayType(FloatType, containsNull = true)
+  private val nRef = BoundReference(0, nullableVecType, nullable = true)
+  /** `transform(v, x -> double(x) / (m == 0 ? ZeroMagEps : m))`,
+    * `m = sqrt(vec_dot(v, v))`: the old `vecNormalize` tree, resolved. */
+  private val normalizeComposite: Expression = {
+    val x = NamedLambdaVariable("x", FloatType, nullable = true)
+    val m = mag(nRef)
+    ArrayTransform(nRef, LambdaFunction(
+      Divide(Cast(x, DoubleType, Some("UTC")),
+        CaseWhen(Seq(EqualTo(m, Literal(0.0)) -> Literal(VectorFunctions.ZeroMagEps)), m)),
+      Seq(x)))
+  }
+  private val normalizeKernel: Expression = NormalizeFloat(nRef)
+  private lazy val normalizeCompiled: Map[Expression, UnsafeProjection] = Seq(normalizeKernel, normalizeComposite)
+    .map(e => e -> GenerateUnsafeProjection.generate(Seq(e))).toMap
+
+  /** Each element's raw bits (None for a null element), or None for a null
+    * array, from one eval path's array result. */
+  private def arrayBits(a: ArrayData): Option[Seq[Option[Long]]] =
+    Option(a).map(arr => (0 until arr.numElements()).map(i =>
+      if (arr.isNullAt(i)) None else bits(arr.getDouble(i))))
+
+  private def normalizeResults(e: Expression, row: InternalRow): Seq[Option[Seq[Option[Long]]]] = {
+    val out = normalizeCompiled(e)(row)
+    Seq(arrayBits(e.eval(row).asInstanceOf[ArrayData]),
+      if (out.isNullAt(0)) None else arrayBits(out.getArray(0)))
+  }
+
+  /** [[anyVec]] with some elements nulled. */
+  private val holedVec: Gen[Option[Array[java.lang.Float]]] = for {
+    v <- anyVec
+    holes <- Gen.frequency(3 -> Gen.const(0.0), 1 -> Gen.choose(0.1, 0.5))
+    seed <- Gen.long
+  } yield v.map { a =>
+    val rnd = new scala.util.Random(seed)
+    a.map(x => if (rnd.nextDouble() < holes) null else java.lang.Float.valueOf(x))
+  }
+
+  property("vec_normalize has the composite's result type") =
+    forAll(Gen.const(())) { _ => normalizeKernel.dataType == normalizeComposite.dataType }
+
+  property("vec_normalize(v) is bit-identical to the composite tree, eval and codegen") =
+    forAll(holedVec) { v =>
+      val r = InternalRow(v.map(a => new GenericArrayData(a.map(x => x: Any))).orNull)
+      val kernel = normalizeResults(normalizeKernel, r)
+      kernel.distinct.size == 1 && kernel == normalizeResults(normalizeComposite, r)
     }
 
   property("dot matches sequential double accumulation") = forAll(pair) { case (a, b) =>

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The commit decision lives in one module: a layout that publishes
   * files lists a swap, a move or a drop in a [[LayoutFs.Batch]], so no
   * main source file other than `sources/LayoutFs.scala` calls
-  * `.rename(`, and no layout writes or deletes behind the batch's back. */
+  * `.rename(`, and no layout writes or deletes behind the batch's back.
+  * Reads live there too: a layout reads its live directories through
+  * [[LayoutFs.Live]], which pins their schemas. */
 class CommitModuleSuite extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
 
@@ -29,15 +31,32 @@ class CommitModuleSuite extends AnyFunSuite {
     assert(offenders.isEmpty, s"files that rename outside LayoutFs: ${offenders.sorted.mkString(", ")}")
   }
 
+  private val layouts = Seq("EmbeddingStore", "IvfIndex", "InvertedIndex", "QueryStore", "GraphIndex", "NgramLm")
+    .map(n => s"graft/sources/$n.scala")
+
   test("no layout writes through a Spark save mode or deletes a path itself") {
     assert(Files.isDirectory(main), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
-    val layouts = Seq("EmbeddingStore", "IvfIndex", "InvertedIndex", "QueryStore", "GraphIndex", "NgramLm")
-      .map(n => s"graft/sources/$n.scala")
     val offenders = for {
       rel <- layouts
       call <- Seq(".write.mode(", ".delete(")
       if source(rel).contains(call)
     } yield s"$rel: $call"
     assert(offenders.isEmpty, s"layout writes outside LayoutFs.Batch: ${offenders.mkString(", ")}")
+  }
+
+  /** The reads a layout makes with `spark.read` itself: each one reads a
+    * batch's staged `.commit/` files, not a live directory. */
+  private val stagedReads = Seq("spark.read.parquet(batch.staged(")
+
+  test("every live-directory read of a layout pins its schema through LayoutFs.Live") {
+    assert(Files.isDirectory(main), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val offenders = for {
+      rel <- layouts
+      (line, n) <- source(rel).linesIterator.zipWithIndex
+      if (line.contains("spark.read") || line.contains("read.parquet(")) &&
+        !stagedReads.exists(line.contains)
+    } yield s"$rel:${n + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      s"layout reads outside LayoutFs.Live:\n${offenders.mkString("\n")}")
   }
 }

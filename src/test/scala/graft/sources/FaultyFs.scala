@@ -34,6 +34,9 @@ class FaultyFs extends FilterFileSystem(new FaultyFs.Raw) {
     super.delete(f, recursive)
   }
   override def exists(f: Path): Boolean = { note("exists", f); super.exists(f) }
+  override def getFileStatus(f: Path): FileStatus = {
+    note("getFileStatus", f); super.getFileStatus(f)
+  }
   override def globStatus(p: Path): Array[FileStatus] = {
     note("globStatus", p); super.globStatus(p)
   }

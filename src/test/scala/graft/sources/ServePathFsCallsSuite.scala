@@ -14,16 +14,18 @@ import graft.TestSpark
   * measured on a warm call once a layout handle recovered at its first
   * call and made one glob of its root on each later one, and a SQL scan
   * build made the batch's one probe, which lists nothing
-  * ([[LayoutFs.Recovery]], [[LayoutFs.rollForward]]). The memo stamps
-  * make one `getFileStatus` per watched path, which this filesystem
-  * does not count. A glob counts as one `globStatus` plus the
-  * `listStatus` calls Hadoop's globber makes through the same
-  * filesystem for its wildcards. */
+  * ([[LayoutFs.Recovery]], [[LayoutFs.rollForward]]). A glob counts as
+  * one `globStatus` plus the `listStatus` calls Hadoop's globber makes
+  * through the same filesystem for its wildcards and the
+  * `getFileStatus` calls it makes for literal names. `getFileStatus`
+  * counts every status lookup: the memo stamps' (one per watched path,
+  * [[graft.util.StampedMemo]]), the one inside each `exists`, Spark's
+  * and the globber's. */
 class ServePathFsCallsSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val Kinds = Seq("rename", "delete", "exists", "globStatus", "listStatus")
+  private val Kinds = Seq("rename", "delete", "exists", "globStatus", "listStatus", "getFileStatus")
 
   private val rnd = new scala.util.Random(5)
   private val vecs = (1L to 40L).map(i => (i, (i + 1) / 2, (i % 2).toInt,
@@ -73,27 +75,27 @@ class ServePathFsCallsSuite extends AnyFunSuite {
     }
 
   check("EmbeddingStore.read()", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 2L,
-      "globStatus" -> 1L, "listStatus" -> 4L)) {
+      "globStatus" -> 1L, "listStatus" -> 4L, "getFileStatus" -> 8L)) {
     fixture._2.read().collect()
   }
 
   check("IvfIndex.search", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 2L,
-      "globStatus" -> 1L, "listStatus" -> 6L)) {
+      "globStatus" -> 1L, "listStatus" -> 6L, "getFileStatus" -> 15L)) {
     fixture._3.search(query, k = 5, nprobe = 2).collect()
   }
 
-  check("InvertedIndex.bm25", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 10L,
-      "globStatus" -> 1L, "listStatus" -> 11L)) {
+  check("InvertedIndex.bm25", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 7L,
+      "globStatus" -> 1L, "listStatus" -> 9L, "getFileStatus" -> 22L)) {
     fixture._4.bm25(Seq("sort", "merge"), k = 3).collect()
   }
 
   check("SQL scan over registerGraphIndex views", Map("rename" -> 0L, "delete" -> 0L,
-      "exists" -> 0L, "globStatus" -> 1L, "listStatus" -> 3L)) {
+      "exists" -> 0L, "globStatus" -> 1L, "listStatus" -> 3L, "getFileStatus" -> 5L)) {
     spark.sql("SELECT COUNT(*) FROM fs_calls_graph_edges WHERE gbucket = 1").collect()
   }
 
   check("SQL scan over registerIvfIndex views", Map("rename" -> 0L, "delete" -> 0L,
-      "exists" -> 0L, "globStatus" -> 1L, "listStatus" -> 5L)) {
+      "exists" -> 0L, "globStatus" -> 1L, "listStatus" -> 5L, "getFileStatus" -> 10L)) {
     val q = query.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ", ", ")")
     spark.sql(s"""SELECT id, vec_cosine(vector, $q) AS cosine FROM fs_calls_lists
                  |WHERE ivf_list IN (0, 2) ORDER BY cosine DESC, id LIMIT 5""".stripMargin)
@@ -101,7 +103,7 @@ class ServePathFsCallsSuite extends AnyFunSuite {
   }
 
   check("SQL scan over registerInvertedIndex views", Map("rename" -> 0L, "delete" -> 0L,
-      "exists" -> 0L, "globStatus" -> 2L, "listStatus" -> 6L)) {
+      "exists" -> 0L, "globStatus" -> 2L, "listStatus" -> 6L, "getFileStatus" -> 8L)) {
     spark.sql(s"""SELECT doc_id, pos FROM fs_calls_inv_postings
                  |WHERE term = 'sort' AND tbucket = ${fixture._4.bucketOf("sort", 4)}""".stripMargin)
       .collect()
