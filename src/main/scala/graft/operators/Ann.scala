@@ -568,18 +568,26 @@ object Ann {
         round(col("__np").cast(DoubleType) / n, 6).as("frac_pos"))
   }
 
-  def ivfTopK(embs: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Array[Float]], query: Array[Float], k: Int, nprobe: Int): DataFrame = {
+  /** Every list id, best first, for `query`: by the dot product with
+    * its centroid (over the shorter of the two lengths) descending, the
+    * lower id first on ties — the probe order every IVF search takes
+    * its `nprobe` lists from. k driver-side dot products. */
+  def probeOrder(centroids: Seq[Array[Float]], query: Array[Float]): Seq[Int] = {
     def dot(a: Array[Float], b: Array[Float]): Double = {
       var s = 0.0; var i = 0
       val n = math.min(a.length, b.length)
       while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
       s
     }
-    val probes = centroids.zipWithIndex
+    centroids.zipWithIndex
       .map { case (c, i) => (i, dot(c, query)) }
       .sortBy { case (i, d) => (-d, i) }
-      .take(nprobe).map(_._1)
+      .map(_._1)
+  }
+
+  def ivfTopK(embs: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[Array[Float]], query: Array[Float], k: Int, nprobe: Int): DataFrame = {
+    val probes = probeOrder(centroids, query).take(nprobe)
     bruteForceTopK(embs.filter(col("ivf_list").isin(probes: _*)), idCol, vecCol, query, k)
   }
 
@@ -611,16 +619,8 @@ object Ann {
     require(queries.map(_._1).distinct.size == queries.size, "duplicate query ids")
     require(nprobes.nonEmpty && nprobes.forall(n => n >= 1 && n <= centroids.size),
       s"nprobes must lie in [1, ${centroids.size}], got $nprobes")
-    def dot(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
     val qStructs = queries.map { case (qid, qv) =>
-      val order = centroids.zipWithIndex
-        .map { case (c, i) => (i, dot(c, qv)) }
-        .sortBy { case (i, d) => (-d, i) }.map(_._1)
+      val order = probeOrder(centroids, qv)
       struct(lit(qid).as("qid"), lit(qv).cast(ArrayType(FloatType)).as("qv"),
         lit(order.toArray).as("order"))
     }

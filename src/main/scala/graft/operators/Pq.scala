@@ -130,6 +130,8 @@ object Pq {
       nprobe: Int, topK: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= coarse.length,
       s"nprobe ($nprobe) must be in [1, ${coarse.length}]")
+    // not Ann.probeOrder: this dot runs over the query's length, so a
+    // query longer than the centroids throws here instead of probing
     def dot(a: Array[Float], b: Array[Float]): Double = {
       var acc = 0.0
       var i = 0

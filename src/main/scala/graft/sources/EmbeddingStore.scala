@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -43,8 +43,20 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
 
   private def bucketOf(c: Column) = pmod(hash(c), lit(numBuckets))
 
-  private def fs: FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The store's one handle on its root ([[LayoutFs.Live]]): recovery,
+    * reads with pinned schemas, and commits. Crash recovery runs at the
+    * top of [[read]] — i.e. before ANY consumer (including
+    * upsert/insertAll, which compute maxId and the existing-key join from
+    * read()) can observe the store: the first call opens the store, every
+    * later one rolls a committed batch forward and restores a bucket or
+    * meta backup (`.bucket=N.bak`, `._graft_meta.bak`) an earlier
+    * version's swap left, from one glob of the store root — a single
+    * NameNode/S3 LIST, negligible next to the file listing that follows.
+    * Without it, a bucket hidden in a `.bak` or a staged batch would make
+    * its keys look new to the next upsert: id churn, lost created_at, and
+    * fresh ids colliding with the hidden bucket's ids store-wide. */
+  private val layout = new LayoutFs.Live(spark, path)
+  import layout.fs
 
   // ---- store metadata ----------------------------------------------------
   // prefixDims must SURVIVE the handle: a store written with a prefix and
@@ -57,7 +69,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   private val metaPath = new Path(path, "_graft_meta")
 
   private def readStoredPrefixDims(): Option[Int] = {
-    recover()
+    layout.recover()
     if (!fs.exists(metaPath)) None
     else {
       val in = fs.open(metaPath)
@@ -126,15 +138,11 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   def assignIds(df: DataFrame, startAt: Long = 1L): DataFrame =
     DenseIds.assign(df, "id", startAt, col("post_id"), col("sequence_no"))
 
-  /** The store's reads and commits ([[LayoutFs.Live]]: a read pins the
-    * schema memoized for the root). */
-  private val layout = new LayoutFs.Live(spark, () => fs, path)
-
   /** The live store. Recovers crashed swaps and lists the files on every
     * call; the schema is pinned ([[layout]]), so a read launches no Spark
     * job. */
   def read(): DataFrame = {
-    recover()
+    layout.recover()
     layout(path)
   }
 
@@ -300,27 +308,18 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * listing taken mid-crash-window would count a hidden backup's
     * absence as an empty bucket. */
   def fileStats(): DataFrame = {
-    recover()
-    import spark.implicits._
-    val rows = Option(fs.listStatus(new Path(path))).toSeq.flatten
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map { s =>
-        (s.getPath.getName.stripPrefix("bucket=").toInt,
-          fs.listStatus(s.getPath).count(_.getPath.getName.startsWith("part-")))
-      }
-    rows.toDF("bucket", "n_files").orderBy(col("bucket"))
+    layout.recover()
+    layout.partFiles(path, "bucket").map(r => (r._1, r._2)).toDF("bucket", "n_files")
+      .orderBy(col("bucket"))
   }
 
   /** Consistent on-disk snapshot of the whole store — bucket
-    * directories and the prefix-dims meta ([[LayoutFs.snapshot]]), after
-    * [[recover]] (crashed swaps, a committed batch); the snapshot then
+    * directories and the prefix-dims meta ([[LayoutFs.Live.snapshot]]),
+    * after recovery (crashed swaps, a committed batch); the snapshot then
     * discards an uncommitted batch (hidden mutation debris
     * is space, not state — a snapshot should not ship it). Open the copy
     * with `new EmbeddingStore(spark, target)`. */
-  def snapshot(targetPath: String): Unit = {
-    recover()
-    LayoutFs.snapshot(fs, new Path(path), targetPath, spark.sparkContext.hadoopConfiguration)
-  }
+  def snapshot(targetPath: String): Unit = layout.snapshot(targetPath)
 
   /** Bulk load: derive columns, assign ids, bucket, and replace the
     * whole store — every bucket and the meta — as one committed batch. */
@@ -361,17 +360,4 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
       effectivePrefixDims.filter(_ => !fs.exists(metaPath)).foreach(stageMeta(b, _))
     }
   }
-
-  /** Crash recovery, at the top of [[read]] — i.e. before ANY consumer
-    * (including upsert/insertAll, which compute maxId and the
-    * existing-key join from read()) can observe the store: the first call
-    * opens the store, every later one rolls a committed batch forward
-    * and restores a bucket or meta backup (`.bucket=N.bak`,
-    * `._graft_meta.bak`) an earlier version's swap left, from one glob of
-    * the store root ([[LayoutFs.Recovery]]) — a single NameNode/S3 LIST,
-    * negligible next to the file listing that follows. Without it, a
-    * bucket hidden in a `.bak` or a staged batch would make its keys
-    * look new to the next upsert: id churn, lost created_at, and fresh
-    * ids colliding with the hidden bucket's ids store-wide. */
-  private val recover = new LayoutFs.Recovery(() => fs, path)
 }

@@ -50,12 +50,14 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   private def metaPath = s"$path/meta"
   private def tombstonesPath = s"$path/tombstones"
 
-  private def fs =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Reads of the live layout directories, with pinned schemas, and
-    * commits ([[LayoutFs.Live]]). */
-  private val layout = new LayoutFs.Live(spark, () => fs, path)
+  /** The graph's one handle on its root ([[LayoutFs.Live]]): reads of
+    * the live layout directories with pinned schemas, memos and commits.
+    * Its recovery runs at the top of every read and mutation: the first
+    * call opens the graph — under the root and the edges, where an
+    * earlier version's swaps left bucket backups — and every later call
+    * probes the root once, rolling a committed batch forward. */
+  private[graft] val layout = new LayoutFs.Live(spark, path, "edges")
+  import layout.fs
 
   private def bucketOf(c: Column): Column = pmod(hash(c), lit(buckets))
 
@@ -86,12 +88,10 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
 
   /** Stored bucket count — a reopened handle must agree with the
     * layout on disk or every hop would prune the WRONG directories. */
-  // meta is written once per build() — memoized per instance, stamped
-  // by the meta dir (r22 profile: 8 jobs per q352 append for the same
-  // two-field row)
-  private lazy val metaMemo =
-    new graft.util.StampedMemo[(Int, Boolean)](() => fs, Seq(metaPath))
-  private def storedMeta(): (Int, Boolean) = metaMemo {
+  // meta is written once per build() — memoized per instance (r22
+  // profile: 8 jobs per q352 append for the same two-field row)
+  private val metaMemo = layout.memo[(Int, Boolean)]("meta")
+  private[graft] def storedMeta(): (Int, Boolean) = metaMemo {
     val m = layout(metaPath)
     val row = m.select(col("buckets") +:
       (if (m.columns.contains("has_cosine")) Seq(col("has_cosine"))
@@ -117,7 +117,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * parity tests; serving goes through the pruned per-hop reads.
     * Recovers crashed append swaps first (the read-path rule). */
   def edges(): DataFrame = {
-    recover()
+    layout.recover()
     layout(edgesPath).select(col("src"), col("dst"))
   }
 
@@ -161,7 +161,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       s"append needs a cosine-scored adjacency: the store at $path was " +
       "built from a (src, dst)-only edge set (build-only); rebuild with " +
       "cosine to enable inserts")
-    recover()
+    layout.recover()
     import org.apache.spark.sql.functions.broadcast
     val nodes = allEmbs.select(col(idCol).cast(LongType).as("id"),
       col(vecCol).as("v"))
@@ -264,13 +264,6 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     graft.util.Pins.release(addDf)
   }
 
-  /** Crash recovery, run at the top of every read and mutation
-    * ([[LayoutFs.Recovery]]): the first call opens the graph — under the
-    * root and the edges, where an earlier version's swaps left bucket
-    * backups — and every later call probes the root once, rolling a
-    * committed batch forward. */
-  private[graft] val recover = new LayoutFs.Recovery(() => fs, path, "edges")
-
   /** Lazy delete: add ids to the tombstone table in one committed batch
     * (O(batch)); the nodes keep routing but stop returning on the next
     * search. */
@@ -291,15 +284,10 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * coalesce to one file per touched bucket (the [[EmbeddingStore]]
     * rule — mutation count never inflates file count). */
   def fileStats(): DataFrame = {
-    recover()
+    layout.recover()
     import spark.implicits._
-    val rows = Option(fs.listStatus(new Path(edgesPath))).toSeq.flatten
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gbucket="))
-      .map { s =>
-        (s.getPath.getName.stripPrefix("gbucket=").toInt,
-          fs.listStatus(s.getPath).count(_.getPath.getName.startsWith("part-")))
-      }
-    rows.toDF("gbucket", "n_files").orderBy(col("gbucket"))
+    layout.partFiles(edgesPath, "gbucket").map(r => (r._1, r._2)).toDF("gbucket", "n_files")
+      .orderBy(col("gbucket"))
   }
 
   /** Beam search served from the persisted layout: the X301 loop with
@@ -332,7 +320,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       entryId: Option[Long],
       resultFilter: DataFrame => DataFrame): DataFrame = {
     storedBuckets()
-    recover()
+    layout.recover()
     // the frontier's bucket set arrives from beamCore's per-hop digest
     // (collected in the same action that materializes the hop, ≤
     // `buckets` ints) and rides the edge read as a partition isin
@@ -359,7 +347,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   def maintain(maxTombstoneFrac: Double = 0.2): DataFrame = {
     require(maxTombstoneFrac > 0.0,
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
-    recover()
+    layout.recover()
     import spark.implicits._
     val nNodes = edges().select(col("src")).distinct().count()
     val nTomb = tombstoneIds().map(_.count()).getOrElse(0L)
@@ -377,12 +365,9 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       .toDF("check", "metric", "threshold", "rebuild_recommended")
   }
 
-  /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]), after
-    * [[recover]]: a committed [[append]] batch must roll forward, and a
+  /** Consistent on-disk snapshot ([[LayoutFs.Live.snapshot]]), after
+    * recovery: a committed [[append]] batch must roll forward, and a
     * crashed swap's hidden backup resolve, before the tree copies, or
     * the snapshot would ship buckets in their mid-commit state. */
-  def snapshot(targetPath: String): Unit = {
-    recover()
-    LayoutFs.snapshot(fs, new Path(path), targetPath, spark.sparkContext.hadoopConfiguration)
-  }
+  def snapshot(targetPath: String): Unit = layout.snapshot(targetPath)
 }

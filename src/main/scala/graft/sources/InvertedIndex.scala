@@ -78,12 +78,16 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def postingsPath = s"$path/postings"
   private def metaPath = s"$path/meta"
 
-  private def fs =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Reads of the live layout directories, with pinned schemas, and
-    * commits ([[LayoutFs.Live]]). */
-  private val layout = new LayoutFs.Live(spark, () => fs, path)
+  /** The index's one handle on its root ([[LayoutFs.Live]]): reads of
+    * the live layout directories, with pinned schemas, memos and
+    * commits. Its recovery — a committed [[LayoutFs.Batch]] rolled
+    * forward and a crashed two-rename swap of a top-level directory
+    * resolved, from one glob of the root, which also fails on a census
+    * delta an earlier version's crashed vacuum left — runs at every entry
+    * point that touches the layout (the [[IvfIndex]] recover rule). An
+    * uncommitted batch is left alone: the next mutation discards it. */
+  private[graft] val layout = new LayoutFs.Live(spark, path)
+  import layout.fs
 
   /** The engine-wide 28-bit md5 bucket (the minhash/sidecar idiom) —
     * Column form for writes, Scala form for query-time pruning; the
@@ -131,10 +135,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   // stored bucket count: immutable between build()s — memoized per
-  // instance, stamped by the meta dir ([[graft.util.StampedMemo]]; the
-  // r22 profile showed this one-row read scheduled 6x per SERP query)
-  private lazy val bucketsMemo =
-    new graft.util.StampedMemo[Int](() => fs, Seq(metaPath))
+  // instance (the r22 profile showed this one-row read scheduled 6x per
+  // SERP query)
+  private val bucketsMemo = layout.memo[Int]("meta")
   private def readBuckets(): Int =
     bucketsMemo(layout(metaPath).head().getInt(0))
 
@@ -142,15 +145,6 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def tombstonesPath = s"$path/tombstones"
   private def censusPath = s"$path/census"
   private def censusBasePath = s"$censusPath/base"
-  private def root = new Path(path)
-
-  /** Roll a committed [[LayoutFs.Batch]] forward and resolve a crashed
-    * two-rename swap of a top-level directory, from one glob of the root
-    * ([[LayoutFs.Recovery]]), which also fails on a census delta an
-    * earlier version's crashed vacuum left. An uncommitted batch is left
-    * alone: the next mutation discards it. Run at every entry point that
-    * touches the layout (the [[IvfIndex]] recover rule). */
-  private[graft] val recover = new LayoutFs.Recovery(() => fs, path)
 
   /** Tokenize and write the partitioned postings layout plus the
     * (doc_id, dl) doclens table — the corpus-stat side BM25 needs
@@ -161,8 +155,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * later sessions and appends agree on the hash). */
   def build(docs: DataFrame, idCol: String, text: Column): Unit = {
     import spark.implicits._
-    invalidateLiveCount()
-    recover()
+    layout.recover()
     layout.commit { batch =>
       batch.stageRows("meta", None, Seq(buckets).toDF("n_buckets").coalesce(1))
       val postings = TextAnalysis.positionalPostings(docs, idCol, text)
@@ -224,8 +217,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * ([[graft.streaming.IndexIngest]]) — sees the batch fully applied
     * or not at all, never a torn half. */
   def append(docs: DataFrame, idCol: String, text: Column): Unit = {
-    invalidateLiveCount()
-    recover()
+    layout.recover()
     migrateFlatCensusBase()
     val b = readBuckets()
     layout.commit { batch =>
@@ -297,15 +289,14 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * go stale exactly as after an append — [[maintainDerived]]'s
     * policy covers the rebuild. */
   def mergeFrom(other: InvertedIndex): Unit = {
-    invalidateLiveCount()
-    recover()
-    other.recover()
+    layout.recover()
+    other.layout.recover()
     migrateFlatCensusBase()
     val b = readBuckets()
     require(other.readBuckets() == b,
       s"bucket-count mismatch: this=$b source=${other.readBuckets()} — " +
         "a re-bucketing merge is a rebuild")
-    require(!other.fs.exists(new Path(other.tombstonesPath)),
+    require(!other.layout.fs.exists(new Path(other.tombstonesPath)),
       s"source ${other.indexPath} has pending tombstones — vacuum it first")
     layout.commit { batch =>
       val srcPostings = other.layout(other.postingsPath)
@@ -349,7 +340,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * already-ingested (re-appending it would resurrect the doc), so the
     * guard is deliberately NOT [[liveOnly]]-filtered. */
   def appendedIds: DataFrame = {
-    recover()
+    layout.recover()
     layout(doclensPath).select(col("doc_id"))
   }
 
@@ -376,8 +367,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   def delete(ids: DataFrame): Unit = {
     require(ids.columns.toSeq == Seq("doc_id"),
       s"ids must be a single-column (doc_id) frame, got ${ids.columns.toSeq}")
-    invalidateLiveCount()
-    recover()
+    layout.recover()
     // cast to the stored doclens id type: two delete batches with
     // different integer widths must not leave conflicting parquet
     // schemas in the tombstone dir (the next read would mis-infer)
@@ -433,14 +423,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * (hot-term elision, MLT idf, PRF idf, JLH background) and a single
     * SERP-class query composes several of them — r22 profiling showed
     * the same count job scheduled 2-4× per query. The count is memoized
-    * on THIS instance, stamped by the doclens and tombstones directories
-    * ([[graft.util.StampedMemo]]): append moves files in, delete adds a
-    * tombstone file and vacuum/compact swap whole directories, and the
-    * mutation methods invalidate it too. */
-  private lazy val liveCountMemo =
-    new graft.util.StampedMemo[Long](() => fs, Seq(doclensPath, tombstonesPath))
-  private def invalidateLiveCount(): Unit = liveCountMemo.invalidate()
-  private def liveDocCount(): Long =
+    * on THIS instance ([[LayoutFs.Live.memo]]): any other handle's
+    * commit moves its stamp, and this handle's own append, delete,
+    * vacuum or compact touches the doclens or tombstones directory and
+    * drops it. */
+  private val liveCountMemo = layout.memo[Long]("doclens", "tombstones")
+  private[graft] def liveDocCount(): Long =
     liveCountMemo(liveOnly(layout(doclensPath)).count())
 
   /** Physically remove tombstoned docs (X175): ONE anti-join rewrite
@@ -460,8 +448,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * trigger at once, where vacuum-then-compact would rewrite the whole
     * layout twice back-to-back for the identical end state. */
   private def vacuumImpl(compactToo: Boolean): Unit = {
-    invalidateLiveCount()
-    recover()
+    layout.recover()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
     layout.commit { batch =>
@@ -540,7 +527,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   private def vocabSlice(buckets: Option[Seq[Int]]): DataFrame = {
-    recover()
+    layout.recover()
     // base rows prune by the PARTITION column (file-listing prune);
     // delta/fallback rows — tiny by the vacuum-cadence contract —
     // recompute the bucket from the term on the fly
@@ -572,7 +559,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * reports what queries actually see. One full-layout scan by design:
     * it is the monitoring pass, run at monitoring cadence. */
   def stats(): DataFrame = {
-    recover()
+    layout.recover()
     liveOnly(layout(postingsPath))
       .groupBy(col("tbucket"))
       .agg(count(lit(1)).as("n_postings"),
@@ -583,14 +570,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
   /** Part-file counts per bucket directory — the [[compact]]-policy
     * input, from the file listing alone (no data read). */
   def fileStats(): DataFrame = {
-    recover()
+    layout.recover()
     import spark.implicits._
-    fs.listStatus(new Path(postingsPath))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("tbucket="))
-      .map { s =>
-        (s.getPath.getName.stripPrefix("tbucket=").toInt,
-          fs.listStatus(s.getPath).count(_.getPath.getName.startsWith("part-")))
-      }.toSeq.toDF("tbucket", "n_files")
+    layout.partFiles(postingsPath, "tbucket").map(r => (r._1, r._2)).toDF("tbucket", "n_files")
   }
 
   /** Small-file compaction (X178): every [[append]] (and every
@@ -610,8 +592,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * monitoring convention). */
   def compact(doclensFiles: Int = 1): Unit = {
     require(doclensFiles >= 1, s"doclensFiles must be >= 1, got $doclensFiles")
-    invalidateLiveCount()
-    recover()
+    layout.recover()
     layout.commit { batch =>
       batch.stageRows("postings", Some("tbucket"),
         layout(postingsPath).repartition(col("tbucket")))
@@ -654,7 +635,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(maxTombstoneFrac > 0.0,
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
     import spark.implicits._
-    recover()
+    layout.recover()
     val tombFrac =
       if (!fs.exists(new Path(tombstonesPath))) 0.0
       else {
@@ -824,7 +805,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   def maintainDerivedVerbose(maxStaleFrac: Double = 0.1): DataFrame = {
     require(maxStaleFrac > 0.0,
       s"maxStaleFrac must be > 0, got $maxStaleFrac")
-    recover()
+    layout.recover()
     import spark.implicits._
     // one doclens count and one meta head PER PASS: the doclens table
     // never changes inside a maintain pass (appends committed it
@@ -1019,7 +1000,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * each re-aggregate the same (doc, term) tf table. */
   def buildDerived(headLen: Int): Unit = {
     require(headLen >= 1, s"headLen must be positive, got $headLen")
-    recover()
+    layout.recover()
     rebuildDerived(Seq("forward", "fielded", "blockmax"), headLen)
   }
 
@@ -1321,20 +1302,20 @@ final class InvertedIndex(spark: SparkSession, path: String,
     *       CAST(pmod(CAST(conv(substring(md5('x'), 1, 7), 16, 10)
     *         AS BIGINT), B) AS INT) }}} */
   def livePostings: DataFrame = {
-    recover()
+    layout.recover()
     liveOnly(layout(postingsPath))
   }
 
   /** The LIVE (doc_id, dl) doclens frame — [[livePostings]]' stats-side
     * sibling for the SQL surface. */
   def liveDoclens: DataFrame = {
-    recover()
+    layout.recover()
     liveOnly(layout(doclensPath))
   }
 
   /** The stored bucket count B — the SQL caller's input to the pruning
     * predicate documented on [[livePostings]]. */
-  def bucketCount: Int = { recover(); readBuckets() }
+  def bucketCount: Int = { layout.recover(); readBuckets() }
 
   /** Dirichlet query-likelihood ranking (X197; Zhai & Lafferty, SIGIR
     * '01 — THE classic LM ranker next to BM25): top-k docs by
@@ -1686,7 +1667,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(keepPerTerm >= 1, s"keepPerTerm must be >= 1, got $keepPerTerm")
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    recover()
+    layout.recover()
     val b = readBuckets()
     val live = liveOnly(layout(postingsPath))
     val keep = live
@@ -1766,7 +1747,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * bounds in the unsafe direction). Reads max/min-merge across the
     * accreted part files, so the serve-time lookup is one
     * vocabulary-sized pruned read. */
-  def buildBlockMax(): Unit = { recover(); buildBlockMaxFrom(None, None) }
+  def buildBlockMax(): Unit = { layout.recover(); buildBlockMaxFrom(None, None) }
 
   /** [[buildBlockMax]] over an optional shared live-postings scan
     * (must carry `__fname`) and shared (doc, term) tf aggregate —
@@ -1845,7 +1826,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(queryTerms.distinct.size == queryTerms.size,
       s"duplicate term in $queryTerms")
     require(maxCandidates >= 1, s"maxCandidates must be >= 1, got $maxCandidates")
-    recover()
+    layout.recover()
     def fallback() = bm25(queryTerms, k, k1, b)
     if (!fs.exists(new Path(blockmaxPath))) return fallback()
     val dls = liveOnly(layout(doclensPath))
@@ -2025,7 +2006,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * (documented). [[build]] deletes the sidecar — a fresh corpus would
     * otherwise serve the OLD corpus's fielded rows. */
   def buildFielded(headLen: Int): Unit = {
-    recover()
+    layout.recover()
     buildFieldedFrom(headLen, None)
   }
 
@@ -2066,12 +2047,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   /** The headLen the fielded sidecar was built with — memoized per
-    * instance, stamped by the meta dir (only [[buildFielded]] rewrites
-    * it); text fast path, parquet fallback for pre-r22 layouts. */
-  private lazy val fieldedHeadMemo =
-    new graft.util.StampedMemo[Int](() => fs, Seq(s"$fieldedPath/meta"))
+    * instance (only [[buildFielded]] rewrites it); text fast path,
+    * parquet fallback for pre-r22 layouts. */
+  private val fieldedHeadMemo = layout.memo[Int]("fielded/meta")
   def fieldedHeadLen: Int = {
-    recover()
+    layout.recover()
     fieldedHeadMemo {
       val txt = new Path(s"$fieldedPath/meta", "head_len.txt")
       if (fs.exists(txt)) {
@@ -2098,7 +2078,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(queryTerms.distinct.size == queryTerms.size,
       s"duplicate term in $queryTerms")
     require(k > 0, s"k must be positive, got $k")
-    recover()
+    layout.recover()
     require(fs.exists(new Path(fieldedPostingsPath)),
       s"no fielded sidecar under $path — run buildFielded first")
     val b = readBuckets()
@@ -2136,7 +2116,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(queryTerms.nonEmpty, "no query terms")
     require(queryTerms.distinct.size == queryTerms.size,
       s"duplicate term in $queryTerms")
-    recover()
+    layout.recover()
     require(fs.exists(new Path(fieldedPostingsPath)),
       s"no fielded sidecar under $path — run buildFielded first")
     val (tfCol, dlCol) =
@@ -2180,7 +2160,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * (tombstones resolved on the way in) with the stored bucket count;
     * a DERIVED artifact like [[prunedCopy]] — rebuild on the
     * maintenance cadence after append/vacuum, not mutated in place. */
-  def buildForward(): Unit = { recover(); buildForwardFrom(None, None) }
+  def buildForward(): Unit = { layout.recover(); buildForwardFrom(None, None) }
 
   /** [[buildForward]] over an optional shared live-postings scan and
     * shared (doc, term) tf aggregate — [[rebuildDerived]]'s one-scan
@@ -2205,7 +2185,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * have run). */
   def docTerms(docIds: Seq[Long]): DataFrame = {
     require(docIds.nonEmpty, "need at least one doc id")
-    recover()
+    layout.recover()
     val b = readBuckets()
     val bs = docIds.map(id => bucketOf(id.toString, b)).distinct.sorted
     layout(forwardPath)
@@ -2336,7 +2316,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(fgIds.nonEmpty, "need at least one foreground doc id")
     require(n > 0, s"n must be positive, got $n")
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
-    recover()
+    layout.recover()
     require(fs.exists(new Path(forwardPath)),
       s"no forward sidecar under $path — run buildForward first")
     // ONE aggregate job for both corpus-side counts (was two identical
@@ -2397,7 +2377,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       n: Int, minDf: Long = 1L): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
-    recover()
+    layout.recover()
     val nBg = liveDocCount()
     val empty = layout(doclensPath).limit(0)
       .select(col("doc_id").cast(StringType).as("term"),
@@ -2609,17 +2589,14 @@ final class InvertedIndex(spark: SparkSession, path: String,
   }
 
   /** Consistent on-disk snapshot of the whole index (X248 — the ES
-    * snapshot/restore ops surface; [[LayoutFs.snapshot]]), after
-    * [[recover]], which rolls a committed batch forward; the snapshot
+    * snapshot/restore ops surface; [[LayoutFs.Live.snapshot]]), after
+    * recovery, which rolls a committed batch forward; the snapshot
     * then discards an uncommitted one. Pending tombstones and
     * sidecar deltas travel with the copy, so it answers exactly like
     * the source at snapshot time; a later vacuum on either side leaves
     * the other untouched. Open it with `new InvertedIndex(spark,
     * target)`. */
-  def snapshot(targetPath: String): Unit = {
-    recover()
-    LayoutFs.snapshot(fs, root, targetPath, spark.sparkContext.hadoopConfiguration)
-  }
+  def snapshot(targetPath: String): Unit = layout.snapshot(targetPath)
 
   /** The postings of exactly `terms`, read from their pruned bucket
     * directories only — schema-identical to an in-memory
@@ -2632,7 +2609,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private def termSlice(terms: Seq[String]): (DataFrame, DataFrame => DataFrame) = {
     require(terms.nonEmpty, "need at least one term")
     require(terms.forall(_.nonEmpty), s"empty term in $terms")
-    recover()
+    layout.recover()
     val b = readBuckets()
     val bs = terms.map(bucketOf(_, b)).distinct.sorted
     val live = liveMask()

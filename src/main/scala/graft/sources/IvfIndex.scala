@@ -57,7 +57,18 @@ final class IvfIndex(spark: SparkSession, path: String,
   private def listsPath = s"$path/lists"
   private def centroidsPath = s"$path/centroids"
   private def assignPath = s"$path/assign"
-  private def assignMetaPath = s"$path/assign_meta"
+
+  /** The index's one handle on its root ([[LayoutFs.Live]]). Crash
+    * recovery runs once at the top of every entry point: the first call
+    * opens the index — under the root and the `lists`, `codes`, `assign`
+    * and `assign_pq` directories, where an earlier version's swaps left
+    * backups and its split/merge markers — and every later call probes
+    * the root once, rolling a committed batch forward. An uncommitted
+    * batch stays for the next mutation to discard. Every read of a live
+    * index directory pins its schema, so it launches no
+    * footer-inference job. */
+  private[graft] val layout = new LayoutFs.Live(spark, path, "lists", "codes", "assign", "assign_pq")
+  import layout.fs
 
   /** Bucket of an id in a B-bucket sidecar. The id is hashed through its
     * STRING form so the bucket is invariant to integer width (a LongType
@@ -67,14 +78,16 @@ final class IvfIndex(spark: SparkSession, path: String,
     pmod(hash(id.cast(StringType)), lit(b)).cast(IntegerType)
 
   // sidecar bucket counts: written once per sidecar lifetime — memoized
-  // per instance, stamped by the meta dir (r22 profile: this one-row
-  // read scheduled as 16 jobs per q231-class lifecycle walk)
+  // per sidecar (r22 profile: this one-row read scheduled as 16 jobs per
+  // q231-class lifecycle walk)
   private val assignBucketsMemo =
-    scala.collection.mutable.Map.empty[String, graft.util.StampedMemo[Int]]
-  private def readAssignBuckets(metaPath: String): Int =
-    assignBucketsMemo.getOrElseUpdate(metaPath,
-      new graft.util.StampedMemo[Int](() => fs, Seq(metaPath)))
-      .apply(layout(metaPath).head().getInt(0))
+    Seq("assign", "assign_pq").map(rel => rel -> layout.memo[Int](s"${rel}_meta")).toMap
+  private[graft] def readAssignBuckets(assignRel: String): Int =
+    assignBucketsMemo(assignRel)(layout(s"$path/${assignRel}_meta").head().getInt(0))
+
+  /** Whether the `assignRel` sidecar was written (a pre-sidecar index
+    * has none). */
+  private def hasSidecar(assignRel: String): Boolean = fs.exists(new Path(s"$path/${assignRel}_meta"))
 
   /** The (id, ivf_list, abucket) sidecar rows of assigned rows, for a
     * B-bucket sidecar. */
@@ -147,7 +160,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * index); a drifted coarse quantizer degrades recall, not the
     * within-probed-lists exactness. */
   def append(embs: DataFrame, idCol: String, vecCol: String): Unit = {
-    recover()
+    layout.recover()
     appendTo("lists", "assign", embs, idCol, vecCol)(identity)
   }
 
@@ -165,12 +178,11 @@ final class IvfIndex(spark: SparkSession, path: String,
     val assignedBase = Ann.ivfAssign(
       embs.select(col(idCol).as("id"), col(vecCol).as("vector")),
       "vector", cs)
-    val metaPath = s"$path/${assignRel}_meta"
-    val share = fs.exists(new Path(metaPath))
+    val share = hasSidecar(assignRel)
     val assigned =
       if (share) assignedBase.localCheckpoint(false) else assignedBase
     layout.commit { b =>
-      if (share) b.add(assignRel)(dir => sidecarRows(assigned, readAssignBuckets(metaPath))
+      if (share) b.add(assignRel)(dir => sidecarRows(assigned, readAssignBuckets(assignRel))
         .write.partitionBy("abucket").parquet(dir.toString))
       b.add(rel)(dir => rows(assigned).write.partitionBy("ivf_list").parquet(dir.toString))
     }
@@ -193,12 +205,12 @@ final class IvfIndex(spark: SparkSession, path: String,
     * bucket NUMBERS do (bounded by k and B, the bounded-scalar-anchor
     * class). The touched lists and sidecar buckets commit as one
     * [[LayoutFs.Batch]] (a crash leaves all of them old or all new;
-    * [[recover]] rolls a committed batch forward before the next read).
+    * recovery rolls a committed batch forward before the next read).
     * A list whose every row is deleted remains as an empty directory —
     * harmless to partition discovery. */
   def delete(ids: DataFrame): Unit = {
-    recover()
-    deleteFrom("lists", "assign", assignMetaPath, ids)
+    layout.recover()
+    deleteFrom("lists", "assign", ids)
   }
 
   /** The (ivf_list, abucket) pairs the deletion set touches, read from
@@ -212,13 +224,12 @@ final class IvfIndex(spark: SparkSession, path: String,
       .join(ids, Seq("id"))
       .select(col("ivf_list"), col("abucket")).distinct()
 
-  private def deleteFrom(rel: String, assignRel: String,
-      metaPath: String, ids: DataFrame): Unit = {
+  private def deleteFrom(rel: String, assignRel: String, ids: DataFrame): Unit = {
     require(ids.columns.toSeq == Seq("id"),
       s"ids must be a single-column (id) frame, got ${ids.columns.toSeq}")
     val antiJoin = (read: DataFrame) => read.join(ids, Seq("id"), "left_anti")
-    val (lists, buckets) = if (fs.exists(new Path(metaPath))) {
-      val b = readAssignBuckets(metaPath)
+    val (lists, buckets) = if (hasSidecar(assignRel)) {
+      val b = readAssignBuckets(assignRel)
       val buckets = ids.select(bucketOf(col("id"), b).as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
       val hits = touchedFrame(ids, s"$path/$assignRel", buckets).collect()
@@ -262,7 +273,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * lists to compact is the caller's read of file counts, the
     * [[splitList]] monitoring convention. */
   def compact(listIds: Seq[Int]): Unit = {
-    recover()
+    layout.recover()
     requireDirs(listsPath, "ivf_list", listIds)
     layout.commit(
       rewrite(_, "lists", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
@@ -271,7 +282,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   /** [[compact]] for the PQ codes layout — appendPq accretes files the
     * same way. */
   def compactPq(listIds: Seq[Int]): Unit = {
-    recover()
+    layout.recover()
     requireDirs(codesPath, "ivf_list", listIds)
     layout.commit(
       rewrite(_, "codes", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
@@ -281,16 +292,14 @@ final class IvfIndex(spark: SparkSession, path: String,
     * file per touched bucket; B is bounded, so this is always a small
     * job). No-op for a layout whose sidecar was never written. */
   def compactAssign(): Unit = {
-    recover()
+    layout.recover()
     layout.commit { b =>
-      Seq(("assign", assignMetaPath), ("assign_pq", assignPqMetaPath))
-        .filter { case (_, meta) => fs.exists(new Path(meta)) }
-        .foreach { case (rel, meta) =>
-          // a bucket no id ever hashed to has no directory — the rewrite
-          // leaves it absent
-          rewrite(b, rel, "abucket", 0 until readAssignBuckets(meta))(
-            _.repartition(col("abucket")))
-        }
+      Seq("assign", "assign_pq").filter(hasSidecar).foreach { rel =>
+        // a bucket no id ever hashed to has no directory — the rewrite
+        // leaves it absent
+        rewrite(b, rel, "abucket", 0 until readAssignBuckets(rel))(
+          _.repartition(col("abucket")))
+      }
     }
   }
 
@@ -298,19 +307,9 @@ final class IvfIndex(spark: SparkSession, path: String,
     * the [[compact]]-policy input, from the file listing alone (no data
     * read); the [[graft.sources.InvertedIndex.fileStats]] convention. */
   def fileStats(): DataFrame = {
-    recover()
+    layout.recover()
     import spark.implicits._
-    dirFileCounts(listsPath, "ivf_list").toDF("ivf_list", "n_files")
-  }
-
-  private def dirFileCounts(base: String, partCol: String): Seq[(Int, Int)] = {
-    if (!fs.exists(new Path(base))) return Nil
-    fs.listStatus(new Path(base)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .map { s =>
-        (s.getPath.getName.stripPrefix(s"$partCol=").toInt,
-          fs.listStatus(s.getPath).count(_.getPath.getName.startsWith("part-")))
-      }
+    layout.partFiles(listsPath, "ivf_list").map(r => (r._1, r._2)).toDF("ivf_list", "n_files")
   }
 
   /** Maintenance policy as code (X186, the raw-lists half): read the
@@ -331,16 +330,15 @@ final class IvfIndex(spark: SparkSession, path: String,
     // ivf_list=<last> dir — deciding on that stale listing would have
     // the inner compact() roll the merge forward mid-flight and then
     // fail requireDirs on the now-dropped directory
-    recover()
-    val listCounts = dirFileCounts(listsPath, "ivf_list")
-    val toCompact = listCounts.filter(_._2 > maxFilesPerList)
-      .map(_._1).sorted
+    layout.recover()
+    val listCounts = layout.partFiles(listsPath, "ivf_list")
+    val toCompact = listCounts.filter(_._2 > maxFilesPerList).map(_._1)
     if (toCompact.nonEmpty) compact(toCompact)
-    val assignMax = (dirFileCounts(assignPath, "abucket") ++
-      dirFileCounts(assignPqPath, "abucket")).map(_._2).maxOption.getOrElse(0)
+    val assignMax = (layout.partFiles(assignPath, "abucket") ++
+      layout.partFiles(assignPqPath, "abucket")).map(_._2).maxOption.getOrElse(0)
     val doAssign = assignMax > maxFilesPerList
     if (doAssign) compactAssign()
-    (listCounts.map { case (n, files) =>
+    (listCounts.map { case (n, files, _) =>
       ("compact_list", n, files.toDouble, maxFilesPerList.toDouble,
         files > maxFilesPerList)
     } :+ ("compact_assign", -1, assignMax.toDouble, maxFilesPerList.toDouble,
@@ -351,16 +349,13 @@ final class IvfIndex(spark: SparkSession, path: String,
 
   /** Consistent on-disk snapshot of the whole index — raw lists, PQ
     * codes, codebooks, centroids, both assignment sidecars and their
-    * meta ([[LayoutFs.snapshot]]; the reference's flagship funnel serves
-    * from THIS store, so it is the first layout a deployment needs to
-    * back up). [[recover]] first rolls a committed batch forward; the
+    * meta ([[LayoutFs.Live.snapshot]]; the reference's flagship funnel
+    * serves from THIS store, so it is the first layout a deployment needs
+    * to back up). Recovery first rolls a committed batch forward; the
     * snapshot then discards an uncommitted batch. The copy answers
     * exactly like the source at snapshot time (same centroids, same
     * pending compaction debt); open it with `new IvfIndex(spark, target)`. */
-  def snapshot(targetPath: String): Unit = {
-    recover()
-    LayoutFs.snapshot(fs, new Path(path), targetPath, spark.sparkContext.hadoopConfiguration)
-  }
+  def snapshot(targetPath: String): Unit = layout.snapshot(targetPath)
 
   private def requireDirs(base: String, partCol: String, ids: Seq[Int]): Unit =
     ids.foreach { n =>
@@ -386,7 +381,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * compressed layout is served. */
   def retrain(targetPath: String, iters: Int): IvfIndex = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    recover()
+    layout.recover()
     val vecs = layout(listsPath)
       .select(col("id"), col("vector"))
     val cents = Ann.lloydRounds(vecs, "vector", loadCentroids(), iters)
@@ -423,7 +418,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * Some((newListId, movedRows)) on success. */
   def splitList(listId: Int, lloydIters: Int = 1): Option[(Int, Long)] = {
     require(lloydIters >= 1, s"lloydIters must be >= 1, got $lloydIters")
-    recover()
+    layout.recover()
     val cs = loadCentroids()
     require(listId >= 0 && listId < cs.size,
       s"listId $listId out of range [0, ${cs.size})")
@@ -471,7 +466,6 @@ final class IvfIndex(spark: SparkSession, path: String,
       relabelAssign(batch, "assign", moves(movedIds, listId, newId))
       codesMovedIds.foreach(mi => relabelAssign(batch, "assign_pq", moves(mi, listId, newId)))
     }
-    centroidsMemo.invalidate()
     codesMovedIds.foreach(graft.util.Pins.release)
     graft.util.Pins.release(assigned)
     Some((newId, nMoved))
@@ -507,7 +501,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * highest list id the roles swap (the union lands under `b`) so the
     * vacated slot is always the highest. */
   def mergeLists(a: Int, b: Int): (Int, Long) = {
-    recover()
+    layout.recover()
     val cs = loadCentroids()
     require(a != b, s"cannot merge list $a with itself")
     Seq(a, b).foreach(i => require(i >= 0 && i < cs.size,
@@ -577,7 +571,6 @@ final class IvfIndex(spark: SparkSession, path: String,
       sourceIdsPq.foreach(sp => relabelAssign(batch, "assign_pq",
         moves(sp, source, target).unionByName(moves(lastIdsPq.get, last, vacated))))
     }
-    centroidsMemo.invalidate()
     sourceIdsPq.foreach { sp =>
       graft.util.Pins.release(sp)
       graft.util.Pins.release(lastIdsPq.get)
@@ -597,9 +590,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * as a delete, keyed on the pair. A pre-sidecar index has no sidecar
     * to relabel. */
   private def relabelAssign(b: LayoutFs.Batch, assignRel: String, moves: DataFrame): Unit = {
-    val metaPath = s"$path/${assignRel}_meta"
-    if (fs.exists(new Path(metaPath))) {
-      val buckets = moves.select(bucketOf(col("id"), readAssignBuckets(metaPath))).distinct()
+    if (hasSidecar(assignRel)) {
+      val buckets = moves.select(bucketOf(col("id"), readAssignBuckets(assignRel))).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
       val m = moves.select(col("id"), col("from").as("ivf_list"), col("to").as("__to"))
       rewrite(b, assignRel, "abucket", buckets)(_.join(m, Seq("id", "ivf_list"), "left")
@@ -615,38 +607,18 @@ final class IvfIndex(spark: SparkSession, path: String,
       .coalesce(1).write.parquet(dir.toString)
   }
 
-  private def fs =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Every read of a live index directory and every commit
-    * ([[LayoutFs.Live]]): a read pins the directory's schema, so it
-    * launches no footer-inference job. */
-  private val layout = new LayoutFs.Live(spark, () => fs, path)
-
-  /** Crash recovery, run once at the top of every entry point
-    * ([[LayoutFs.Recovery]]): the first call opens the index — under the
-    * root and the `lists`, `codes`, `assign` and `assign_pq` directories,
-    * where an earlier version's swaps left backups and its split/merge
-    * markers — and every later call probes the root once, rolling a
-    * committed batch forward. An uncommitted batch stays for the next
-    * mutation to discard. */
-  private[graft] val recover =
-    new LayoutFs.Recovery(() => fs, path, "lists", "codes", "assign", "assign_pq")
-
-  /** The stored centroids, ordered by cid, after [[recover]]: the root
+  /** The stored centroids, ordered by cid, after recovery: the root
     * pointer must never read as missing or as a mutation's half. */
-  def centroids(): Seq[Array[Float]] = { recover(); loadCentroids() }
+  def centroids(): Seq[Array[Float]] = { layout.recover(); loadCentroids() }
 
-  // memoized per instance, stamped by the centroids dir: every mutation
-  // replaces the directory (fresh mtime) — and the k-vector table is
-  // small by the coarse-quantizer contract (√n-ish), so holding it on
-  // the driver costs what one probe already costs. r22 profile: this
-  // read+collect pair scheduled 5x per q203 lifecycle walk.
-  private lazy val centroidsMemo =
-    new graft.util.StampedMemo[Seq[Array[Float]]](() => fs,
-      Seq(centroidsPath))
+  // memoized per instance: only a build, split or merge replaces the
+  // directory — and the k-vector table is small by the coarse-quantizer
+  // contract (√n-ish), so holding it on the driver costs what one probe
+  // already costs. r22 profile: this read+collect pair scheduled 5x per
+  // q203 lifecycle walk.
+  private val centroidsMemo = layout.memo[Seq[Array[Float]]]("centroids")
 
-  /** [[centroids]] for entry points that already ran [[recover]]. */
+  /** [[centroids]] for entry points that already recovered. */
   private def loadCentroids(): Seq[Array[Float]] =
     centroidsMemo(
       layout(centroidsPath).orderBy(col("cid"))
@@ -661,11 +633,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * ([[LayoutFs.Live]]), so no job infers a parquet footer. */
   def search(query: Array[Float], k: Int, nprobe: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recover()
-    val probed = layout(listsPath)
-      .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
-    Ann.bruteForceTopK(probed, "id", "vector", query, k)
+    layout.recover()
+    Ann.bruteForceTopK(probed("lists", query, nprobe), "id", "vector", query, k)
   }
 
   /** FILTERED ANN (X255 — the ES kNN `filter` parameter / FAISS
@@ -681,12 +650,8 @@ final class IvfIndex(spark: SparkSession, path: String,
   def searchWhere(query: Array[Float], k: Int, nprobe: Int,
       pred: Column): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recover()
-    val probed = layout(listsPath)
-      .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
-      .filter(pred)
-    Ann.bruteForceTopK(probed, "id", "vector", query, k)
+    layout.recover()
+    Ann.bruteForceTopK(probed("lists", query, nprobe).filter(pred), "id", "vector", query, k)
   }
 
   /** The raw lists frame with `ivf_list` as the pruning surface, and
@@ -696,29 +661,24 @@ final class IvfIndex(spark: SparkSession, path: String,
     * like [[search]]) and scores with the registered `vec_cosine`
     * kernel. */
   def listsView: DataFrame = {
-    recover()
+    layout.recover()
     layout(listsPath)
   }
 
   /** See [[listsView]]. */
   def centroidsView: DataFrame = {
-    recover()
+    layout.recover()
     layout(centroidsPath)
   }
 
-  /** The nprobe best coarse lists for a query — k driver-side dot
-    * products over the stored centroids. */
-  private def probeSet(query: Array[Float], nprobe: Int): Seq[Int] = {
-    def dot(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
-    loadCentroids().zipWithIndex
-      .map { case (c, i) => (i, dot(c, query)) }
-      .sortBy { case (i, d) => (-d, i) }
-      .take(nprobe).map(_._1)
+  /** The `rel` layout (`lists` or `codes`) pruned to the `nprobe` best
+    * coarse lists for `query` ([[graft.operators.Ann.probeOrder]] over
+    * the stored centroids): the probe set reaches the scan as a
+    * partition filter. */
+  private def probed(rel: String, query: Array[Float], nprobe: Int): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
+    layout(s"$path/$rel")
+      .filter(col("ivf_list").isin(Ann.probeOrder(loadCentroids(), query).take(nprobe): _*))
   }
 
   // ---- IVF×PQ layout (the FAISS-IVFPQ on-disk shape) ---------------------
@@ -726,7 +686,6 @@ final class IvfIndex(spark: SparkSession, path: String,
   private def codesPath = s"$path/codes"
   private def booksPath = s"$path/codebooks"
   private def assignPqPath = s"$path/assign_pq"
-  private def assignPqMetaPath = s"$path/assign_pq_meta"
 
   /** Persist the PQ-coded lists: (id, codes) partitioned by `ivf_list`,
     * codebooks stored beside them. The probed read then decodes m BYTES
@@ -763,7 +722,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * [[append]]. Codebook/centroid drift is
     * [[graft.operators.Ann.ivfStats]]'s contract, as for [[append]]. */
   def appendPq(embs: DataFrame, idCol: String, vecCol: String): Unit = {
-    recover()
+    layout.recover()
     val books = codebooks()
     appendTo("codes", "assign_pq", embs, idCol, vecCol)(
       Pq.encode(_, "vector", books).select(col("id"), col("codes"), col("ivf_list")))
@@ -775,13 +734,12 @@ final class IvfIndex(spark: SparkSession, path: String,
     * `codes/ivf_list=N` — so a 100 TB deployment serving from the
     * compressed layout gets steady-state deletes without a rebuild. */
   def deletePq(ids: DataFrame): Unit = {
-    recover()
-    deleteFrom("codes", "assign_pq", assignPqMetaPath, ids)
+    layout.recover()
+    deleteFrom("codes", "assign_pq", ids)
   }
 
   /** The stored PQ codebooks, (subspace, code)-ordered — memoized like
-    * the centroids, stamped by their directory, which every rebuild
-    * replaces. */
+    * the centroids: only a PQ build replaces their directory. */
   def codebooks(): Pq.Codebooks = booksMemo {
     val rows = layout(booksPath)
       .orderBy(col("subspace"), col("code")).collect()
@@ -790,19 +748,15 @@ final class IvfIndex(spark: SparkSession, path: String,
       .map(_._2.sortBy(_._2).map(_._3)).toArray
   }
 
-  private lazy val booksMemo =
-    new graft.util.StampedMemo[Pq.Codebooks](() => fs, Seq(booksPath))
+  private val booksMemo = layout.memo[Pq.Codebooks]("codebooks")
 
   /** ADC top-k over the probed CODE lists — [[graft.operators.Pq
     * .ivfAdcTopK]] semantics with the probe as a partition filter and
     * the LUT scoring m-byte codes straight off the pruned scan. */
   def searchPq(query: Array[Float], topK: Int, nprobe: Int): DataFrame = {
     require(topK >= 1, s"topK must be positive, got $topK")
-    require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recover()
-    val probed = layout(codesPath)
-      .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
-    Pq.adcTopK(probed, "id", "codes", codebooks(), query, topK)
+    layout.recover()
+    Pq.adcTopK(probed("codes", query, nprobe), "id", "codes", codebooks(), query, topK)
   }
 
   /** Filtered ADC search (X255's pre-filter semantics on the
@@ -817,12 +771,8 @@ final class IvfIndex(spark: SparkSession, path: String,
   def searchPqWhere(query: Array[Float], topK: Int, nprobe: Int,
       pred: Column): DataFrame = {
     require(topK >= 1, s"topK must be positive, got $topK")
-    require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
-    recover()
-    val probed = layout(codesPath)
-      .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
-      .filter(pred)
-    Pq.adcTopK(probed, "id", "codes", codebooks(), query, topK)
+    layout.recover()
+    Pq.adcTopK(probed("codes", query, nprobe).filter(pred), "id", "codes", codebooks(), query, topK)
   }
 
   /** ADC search with exact refinement (X205 — the FAISS
@@ -842,11 +792,10 @@ final class IvfIndex(spark: SparkSession, path: String,
       refine: Int = 3): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    recover()
+    layout.recover()
     val cand = searchPq(query, topK = refine * k, nprobe)
       .select(col("id"))
-    val probedRaw = layout(listsPath)
-      .filter(col("ivf_list").isin(probeSet(query, nprobe): _*))
+    val probedRaw = probed("lists", query, nprobe)
       .join(broadcast(cand), Seq("id"), "left_semi")
     Ann.bruteForceTopK(probedRaw, "id", "vector", query, k)
   }

@@ -30,16 +30,22 @@ import org.apache.spark.sql.types.StructType
   * file listing and partition discovery, so no reader sees staged files
   * or a `bucket=N.bak` partition value.
   *
-  * Recovery is split by where its state can come from. A layout
-  * handle [[open]]s its layout once, at its first call, which also looks
-  * under the layout directories where an earlier version's lone swaps
-  * left backups and its commit markers. Every later call of the handle,
-  * read or write, makes one glob of the root ([[Recovery]]), and every
+  * A layout handle owns one [[Live]] on its root, and every value the
+  * handle keeps follows one freshness rule: a value is good while the
+  * root's modification time is the one it was taken at. Every commit
+  * of any handle renames its marker into the root, so the root's mtime
+  * moves with every write; the handle's own batches keep their stamps
+  * and drop only what they changed.
+  *
+  * Recovery is split by where its state can come from. A handle
+  * [[open]]s its layout once, at its first call, which also looks under
+  * the layout directories where an earlier version's lone swaps left
+  * backups and its commit markers. Every later call of the handle, read
+  * or write, makes one glob of the root ([[Live.recover]]), and every
   * SQL scan build and every new batch makes the batch's own probe
   * ([[rollForward]]), which lists nothing. Readers never delete an
   * uncommitted batch: only the next batch or [[discardBatch]] (a
-  * layout's vacuum or a [[snapshot]]) discards one. A handle reads its
-  * live directories and commits its batches through one [[Live]].
+  * layout's vacuum or a [[snapshot]]) discards one.
   *
   * Atomicity assumption, stated once for the engine: each `rename` is
   * an ATOMIC O(1) metadata operation that either fully happens or not
@@ -79,7 +85,7 @@ object LayoutFs {
   private val Marker = ".committed"
 
   /** Open the layout at `root`: what a layout handle runs once, at its
-    * first call ([[Recovery]]). One glob of the root ([[RootProbe]])
+    * first call ([[Live.recover]]). One glob of the root ([[RootProbe]])
     * finds what [[rollForward]] finds, a backup `.<name>.bak` an earlier
     * version's lone swap left at the root and the legacy markers there;
     * one glob of each directory of `dirs` (relative to `root`) finds the
@@ -101,46 +107,59 @@ object LayoutFs {
     * literal, so Hadoop's globber looks each one up and lists nothing. */
   def rollForward(fs: FileSystem, root: Path): Boolean = recoverIn(fs, root, Probe)
 
-  /** A layout handle's one recovery call: the first call opens the
-    * layout ([[open]]); every later one globs the root alone
-    * ([[RootProbe]]: a committed batch, a root backup, a legacy marker)
-    * — one listing of the root, so a live handle still restores a root
-    * backup or refuses a legacy marker that appears after it opened. An
-    * open that fails (on a legacy marker) runs again at the next call. */
-  final class Recovery(fs: () => FileSystem, root: String, dirs: String*) {
-    @volatile private var opened = false
-    def apply(): Unit =
-      if (opened) recoverIn(fs(), new Path(root), RootProbe)
-      else { open(fs(), new Path(root), dirs: _*); opened = true }
-  }
-
-  /** A layout handle's reads of its live directories, and its commits.
+  /** The one object a layout handle owns on its root `root`: it holds
+    * the filesystem, recovers the layout ([[recover]]), reads its live
+    * directories, keeps the values the handle derives from them
+    * ([[memo]]) and commits its batches ([[commit]]).
+    *
     * Each read pins its directory's schema (`spark.read.schema(s)`), so
     * it lists the files and launches no Spark job: inferring a schema
-    * reads parquet footers in a job of its own. The schema of each
-    * directory is Spark's own inference, memoized and stamped by the
-    * layout ROOT's modification time: every write of every layout
-    * commits through a [[Batch]], whose marker renames into the root,
-    * so the root's mtime moves with every commit of any handle, and a
-    * schema stays exact until then.
+    * reads parquet footers in a job of its own. A schema, like every
+    * [[Memo]], is stamped by the root's modification time when it was
+    * taken and stays good while the root keeps that stamp: every write
+    * of every layout commits through a [[Batch]], whose marker renames
+    * into the root, so another handle's commit moves the stamp.
     *
-    * The handle's own batches ([[commit]]) keep their stamps good: every
-    * root stamp seen while its batch is open is its own staging's or
-    * commit's, so a schema stamped by one of them stays valid through the
-    * batch, and after it the batch drops the schema of each directory it
-    * replaced whole and re-stamps the others. A directory holds one
-    * schema — a reader infers it from any one footer — so rewriting some
-    * of its partitions or adding files to it cannot change it. */
-  final class Live(spark: SparkSession, fs: () => FileSystem, root: String) {
-    /** dir -> (the root's mtime when inferred, the schema). */
+    * The handle's own batches keep their stamps good: every root stamp
+    * seen while its batch is open is its own staging's or commit's, so
+    * a value stamped by one of them stays valid through the batch. After
+    * the batch, a memo whose directories the batch touched (a swap, a
+    * move into or out of one, a drop) is dropped, and a schema only when
+    * the batch replaced its directory whole — a directory holds one
+    * schema, which rewriting some of its partitions or adding files
+    * cannot change; everything else is re-stamped. `dirs` (relative to
+    * the root) are the directories [[LayoutFs.open]] looks under. */
+  final class Live(spark: SparkSession, root: String, dirs: String*) {
+    private[graft] lazy val fs: FileSystem =
+      new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private val rootPath = new Path(root).toUri.getPath
+    @volatile private var opened = false
+    /** dir -> (the root stamp when inferred, the schema). */
     private val schemas = new ConcurrentHashMap[String, (Long, StructType)]
+    @volatile private var memos = Vector.empty[Memo[_]]
     /** The root stamps this handle's open batch made, empty between batches. */
     @volatile private var own = Set.empty[Long]
-    private val rootPath = new Path(root).toUri.getPath
 
-    private def stamp(): Long =
-      try fs().getFileStatus(new Path(root)).getModificationTime
-      catch { case _: FileNotFoundException => -1L }
+    /** The handle's one recovery call: the first call opens the layout
+      * ([[open]]); every later one globs the root alone ([[RootProbe]]:
+      * a committed batch, a root backup, a legacy marker) — one listing
+      * of the root, so a live handle still restores a root backup or
+      * refuses a legacy marker that appears after it opened. An open
+      * that fails (on a legacy marker) runs again at the next call. */
+    def recover(): Unit =
+      if (opened) recoverIn(fs, new Path(root), RootProbe)
+      else { open(fs, new Path(root), dirs: _*); opened = true }
+
+    /** The root's stamp now, recorded as the open batch's own. */
+    private def stamp(): Long = {
+      val k = try fs.getFileStatus(new Path(root)).getModificationTime
+        catch { case _: FileNotFoundException => -1L }
+      if (own.nonEmpty) own += k
+      k
+    }
+
+    /** Whether a value stamped `k0` is still good at the root stamp `k`. */
+    private def fresh(k0: Long, k: Long): Boolean = k0 == k || own(k0)
 
     /** The live directory `dir` of the layout. */
     def apply(dir: String): DataFrame = spark.read.schema(schema(dir)).parquet(dir)
@@ -153,9 +172,8 @@ object LayoutFs {
     /** The schema of the live directory `dir`. */
     private def schema(dir: String): StructType = {
       val k = stamp()
-      if (own.nonEmpty) own += k
       Option(schemas.get(dir)) match {
-        case Some((k0, s)) if k0 == k || own(k0) => s
+        case Some((k0, s)) if fresh(k0, k) => s
         case _ =>
           val s = spark.read.parquet(dir).schema
           schemas.put(dir, (k, s))
@@ -163,10 +181,54 @@ object LayoutFs {
       }
     }
 
-    /** [[LayoutFs.commit]] on the root; then drop the schemas of the
-      * directories the batch replaced whole, and re-stamp the others. */
+    /** `(N, part-files, their bytes)` for each `partCol=N` directory of
+      * the directory `dir`, from the file listing alone, ordered by N; a
+      * missing `dir` has none. */
+    def partFiles(dir: String, partCol: String): Seq[(Int, Int, Long)] =
+      (try fs.listStatus(new Path(dir)).toSeq catch { case _: FileNotFoundException => Nil })
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+        .map { d =>
+          val parts = fs.listStatus(d.getPath).filter(_.getPath.getName.startsWith("part-"))
+          (d.getPath.getName.stripPrefix(s"$partCol=").toInt, parts.length, parts.map(_.getLen).sum)
+        }.sortBy(_._1)
+
+    /** A value the handle derives from its directories `dirs` (relative
+      * to the root), kept under the class doc's rule. */
+    def memo[T](dirs: String*): Memo[T] = {
+      val m = new Memo[T](dirs)
+      memos :+= m
+      m
+    }
+
+    final class Memo[T] private[Live] (dirs: Seq[String]) {
+      @volatile private var cell: Option[(Long, T)] = None
+      /** The kept value while it is fresh, else `compute`, kept. */
+      def apply(compute: => T): T = {
+        val k = stamp()
+        cell match {
+          case Some((k0, v)) if fresh(k0, k) => v
+          case _ => keep(k, compute)
+        }
+      }
+      /** Compute afresh and keep the value — for a caller whose own job
+        * yields it as a by-product. */
+      def refresh(compute: => T): T = keep(stamp(), compute)
+      private def keep(k: Long, compute: => T): T = {
+        val v = compute
+        cell = Some((k, v))
+        v
+      }
+      /** After the handle's batch `b`, whose last root stamp is `k`. */
+      private[Live] def settle(b: Batch, k: Long): Unit = cell.foreach { case (k0, v) =>
+        if (dirs.exists(b.touches)) cell = None
+        else if (own(k0)) cell = Some((k, v))
+      }
+    }
+
+    /** [[LayoutFs.commit]] on the root; then settle the schemas and the
+      * memos (the class doc's rule). */
     def commit(body: Batch => Unit): Unit = {
-      val b = batch(fs(), new Path(root))
+      val b = batch(fs, new Path(root))
       own = Set(stamp())
       try { body(b); b.commit() }
       finally {
@@ -178,8 +240,15 @@ object LayoutFs {
             schemas.remove(dir)
           else if (own(e._1)) schemas.put(dir, (k, e._2))
         }
+        memos.foreach(_.settle(b, k))
         own = Set.empty
       }
+    }
+
+    /** A snapshot of the recovered layout at `target` ([[LayoutFs.snapshot]]). */
+    def snapshot(target: String): Unit = {
+      recover()
+      LayoutFs.snapshot(fs, new Path(root), target, spark.sparkContext.hadoopConfiguration)
     }
   }
 
@@ -244,6 +313,12 @@ object LayoutFs {
     /** Whether the batch replaces or drops `rel`, or a directory holding it. */
     private[LayoutFs] def replaces(rel: String): Boolean =
       replaced.exists(r => r.isEmpty || rel == r || rel.startsWith(r + "/"))
+
+    /** Whether the batch swaps, moves files into or out of, or drops
+      * `rel`, a path under it or a directory holding it. */
+    private[LayoutFs] def touches(rel: String): Boolean =
+      (entries.flatMap(_.split(" ", -1).tail) ++ drops).exists(t =>
+        t.isEmpty || t == rel || t.startsWith(rel + "/") || rel.startsWith(t + "/"))
 
     /** Where the replacement of the live `root/rel` stages. */
     def staged(rel: String): Path = under(new Path(root, Staging), rel)

@@ -36,25 +36,19 @@ final class NgramLm(spark: SparkSession, path: String) {
   private def verDir(v: Int) = s"$path/v=$v"
   private def pointerLive = new Path(path, "current")
 
-  private def fs =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The model's one handle on its root ([[LayoutFs.Live]]): recovery
+    * (a committed batch rolled forward and a backup an earlier version's
+    * pointer swap left, `.current.bak`, restored, from one glob of the
+    * root), reads of the live layout directories with pinned schemas,
+    * memos and commits. */
+  private val layout = new LayoutFs.Live(spark, path)
+  import layout.fs
 
-  /** Reads of the live layout directories, with pinned schemas, and
-    * commits ([[LayoutFs.Live]]). */
-  private val layout = new LayoutFs.Live(spark, () => fs, path)
-
-  /** Roll a committed batch forward and restore a backup an earlier
-    * version's pointer swap left (`.current.bak`), from one glob of the
-    * root ([[LayoutFs.Recovery]]). */
-  private val recover = new LayoutFs.Recovery(() => fs, path)
-
-  /** The version the pointer currently names — memoized per instance,
-    * stamped by the pointer dir (every flip swaps in a fresh
-    * directory). */
-  private lazy val versionMemo =
-    new graft.util.StampedMemo[Int](() => fs, Seq(pointerLive.toString))
+  /** The version the pointer currently names — memoized per instance
+    * (every flip swaps in a fresh pointer directory). */
+  private val versionMemo = layout.memo[Int]("current")
   def currentVersion(): Int = {
-    recover()
+    layout.recover()
     versionMemo(layout(pointerLive.toString).head().getInt(0))
   }
 
@@ -181,18 +175,15 @@ final class NgramLm(spark: SparkSession, path: String) {
     }
   }
 
-  /** Consistent on-disk snapshot ([[LayoutFs.snapshot]]) — the
+  /** Consistent on-disk snapshot ([[LayoutFs.Live.snapshot]]) — the
     * cross-location copy the blue/green versioning alone cannot give
     * (versions protect against crashes, not against losing the
-    * location). It runs after [[recover]]; every version
+    * location). It runs after recovery; every version
     * directory travels with the pointer, so the copy serves the same
     * current version and still carries the superseded versions its
     * in-flight-reader retention contract promises (run [[vacuum]] on
     * either side independently). */
-  def snapshot(targetPath: String): Unit = {
-    recover()
-    LayoutFs.snapshot(fs, new Path(path), targetPath, spark.sparkContext.hadoopConfiguration)
-  }
+  def snapshot(targetPath: String): Unit = layout.snapshot(targetPath)
 
   /** Maintenance policy as code (X186, the versioned-artifact member of
     * the family: [[graft.sources.InvertedIndex.maintain]] /

@@ -54,12 +54,12 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   private def metaPath = s"$path/meta"
   private def tombstonesPath = s"$path/tombstones"
 
-  private def fs =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Reads of the live layout directories, with pinned schemas, and
-    * commits ([[LayoutFs.Live]]). */
-  private val layout = new LayoutFs.Live(spark, () => fs, path)
+  /** The store's one handle on its root ([[LayoutFs.Live]]): recovery
+    * (a committed batch rolled forward and a crashed swap of a top-level
+    * directory resolved, from one glob of the root), reads of the live
+    * layout directories with pinned schemas, memos and commits. */
+  private[graft] val layout = new LayoutFs.Live(spark, path)
+  import layout.fs
 
   private def bucketCol(term: Column, b: Int): Column =
     pmod(conv(substring(md5(term), 1, 7), 16, 10).cast(LongType), lit(b.toLong))
@@ -73,18 +73,10 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   }
 
   // stored bucket count: immutable between build()s — memoized per
-  // instance, stamped by the meta dir (the InvertedIndex rule)
-  private lazy val bucketsMemo =
-    new graft.util.StampedMemo[Int](() => fs, Seq(metaPath))
-  private def readBuckets(): Int =
+  // instance (the InvertedIndex rule)
+  private val bucketsMemo = layout.memo[Int]("meta")
+  private[graft] def readBuckets(): Int =
     bucketsMemo(layout(metaPath).head().getInt(0))
-
-  private def root = new Path(path)
-
-  /** Roll a committed batch forward and resolve a crashed swap of a
-    * top-level directory, from one glob of the root
-    * ([[LayoutFs.Recovery]]). */
-  private[graft] val recover = new LayoutFs.Recovery(() => fs, path)
 
   private def totalsOf(c: DataFrame): DataFrame =
     c.groupBy(col("query_id")).agg(
@@ -94,7 +86,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   /** Validate (the [[TextAnalysis.validateClauseBatch]] contract) and
     * write the partitioned clause layout, totals sidecar and meta. */
   def build(clauses: DataFrame): Unit = {
-    recover()
+    layout.recover()
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true) // two consumers: layout write + totals
     import spark.implicits._
@@ -114,7 +106,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * keeps the totals sidecar additive. Clause and totals rows stage in
     * one batch and move into the live directories together. */
   def append(clauses: DataFrame): Unit = {
-    recover()
+    layout.recover()
     val b = readBuckets()
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true)
@@ -135,7 +127,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   def delete(queryIds: DataFrame): Unit = {
     require(queryIds.columns.toSeq == Seq("query_id"),
       s"ids must be a single-column (query_id) frame, got ${queryIds.columns.toSeq}")
-    recover()
+    layout.recover()
     layout.commit(_.add("tombstones")(dir =>
       queryIds.select(col("query_id").cast(StringType)).write.parquet(dir.toString)))
   }
@@ -164,7 +156,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * both policies trigger, where vacuum-then-compact would rewrite the
     * whole layout twice back-to-back for the identical end state. */
   private def vacuumImpl(compactToo: Boolean): Unit = {
-    recover()
+    layout.recover()
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
     layout.commit { batch =>
@@ -183,15 +175,8 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * cost. The [[InvertedIndex.fileStats]] surface on the query side. */
   def fileStats(): DataFrame = {
     import spark.implicits._
-    recover()
-    fs.listStatus(new Path(clausesPath))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("tbucket="))
-      .map { d =>
-        val files = fs.listStatus(d.getPath)
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        (d.getPath.getName.stripPrefix("tbucket=").toInt,
-          files.length, files.map(_.getLen).sum)
-      }.toSeq.sortBy(_._1).toDF("tbucket", "n_files", "n_bytes")
+    layout.recover()
+    layout.partFiles(clausesPath, "tbucket").toDF("tbucket", "n_files", "n_bytes")
   }
 
   /** Rewrite the clause layout to ONE file per bucket (and totals to
@@ -199,7 +184,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * append's per-batch part-file accretion. Answers are bit-identical
     * (pure layout). */
   def compact(): Unit = {
-    recover()
+    layout.recover()
     layout.commit { batch =>
       batch.stageRows("clauses", Some("tbucket"),
         layout(clausesPath).repartition(col("tbucket")))
@@ -233,7 +218,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     require(maxTombstoneFrac > 0.0,
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
     import spark.implicits._
-    recover()
+    layout.recover()
     def tombFracNow(): Double =
       if (!fs.exists(new Path(tombstonesPath))) 0.0
       else {
@@ -271,26 +256,23 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   }
 
   /** Consistent on-disk snapshot of the whole store — clauses, totals,
-    * meta and pending tombstones ([[LayoutFs.snapshot]]), after
-    * [[recover]]; tombstone masks and maintenance debt travel with the
+    * meta and pending tombstones ([[LayoutFs.Live.snapshot]]), after
+    * recovery; tombstone masks and maintenance debt travel with the
     * copy, so it percolates exactly like the source at snapshot time.
     * Open it with `new QueryStore(spark, target)`. */
-  def snapshot(targetPath: String): Unit = {
-    recover()
-    LayoutFs.snapshot(fs, root, targetPath, spark.sparkContext.hadoopConfiguration)
-  }
+  def snapshot(targetPath: String): Unit = layout.snapshot(targetPath)
 
   /** The full LIVE clause frame (tombstones masked), `tbucket` kept as
     * the pruning surface — the SQL-registration view behind
     * [[StoreCatalog.registerQueryStore]]. */
   def liveClauses: DataFrame = {
-    recover()
+    layout.recover()
     liveOnly(layout(clausesPath))
   }
 
   /** The LIVE (query_id, n_must, n_should) totals frame. */
   def liveTotals: DataFrame = {
-    recover()
+    layout.recover()
     liveOnly(layout(totalsPath))
   }
 
@@ -298,7 +280,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * pruned slice [[percolate]] joins; exposed for plan audits. */
   def clausesForTerms(terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "need at least one term")
-    recover()
+    layout.recover()
     val b = readBuckets()
     clausesForBuckets(terms.map(bucketOf(_, b)).distinct.sorted)
   }
@@ -307,7 +289,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * slice [[percolate]] joins; exposed for plan audits. */
   def clausesForBuckets(bucketIds: Seq[Int]): DataFrame = {
     require(bucketIds.nonEmpty, "need at least one bucket")
-    recover()
+    layout.recover()
     liveOnly(layout(clausesPath)
       .filter(col("tbucket").isin(bucketIds: _*))
       .select(col("query_id"), col("term"), col("clause")))
@@ -335,7 +317,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   def percolate(docs: DataFrame, idCol: String, text: Column,
       minShould: Int = 1): DataFrame = {
     require(minShould >= 1, s"minShould must be >= 1, got $minShould")
-    recover()
+    layout.recover()
     val (deduped, batchBuckets) = stageBatch(docs, idCol, text)
     if (batchBuckets.isEmpty) return emptyFired(deduped, idCol)
     // membership needs (doc, term) SETS only — explode without
@@ -446,7 +428,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   def percolateScored(docs: DataFrame, idCol: String, text: Column,
       minShould: Int = 1, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(minShould >= 1, s"minShould must be >= 1, got $minShould")
-    recover()
+    layout.recover()
     val (deduped, batchBuckets) = stageBatch(docs, idCol, text)
     if (batchBuckets.isEmpty)
       return emptyFired(deduped, idCol).withColumn("score", lit(0.0))

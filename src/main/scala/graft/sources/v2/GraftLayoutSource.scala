@@ -91,10 +91,10 @@ private[v2] object GraftLayoutSource {
   def open(root: String, table: String): Unit = {
     val spark = SparkSession.active
     table.takeWhile(_ != '_') match {
-      case "ivf" => new graft.sources.IvfIndex(spark, root).recover()
-      case "query" => new graft.sources.QueryStore(spark, root).recover()
-      case "graph" => new graft.sources.GraphIndex(spark, root).recover()
-      case _ => new graft.sources.InvertedIndex(spark, root).recover()
+      case "ivf" => new graft.sources.IvfIndex(spark, root).layout.recover()
+      case "query" => new graft.sources.QueryStore(spark, root).layout.recover()
+      case "graph" => new graft.sources.GraphIndex(spark, root).layout.recover()
+      case _ => new graft.sources.InvertedIndex(spark, root).layout.recover()
     }
   }
 

@@ -146,11 +146,10 @@ object PercolateStream {
       schema: Option[org.apache.spark.sql.types.StructType],
       releaseOut: Boolean)(
       matcher: DataFrame => DataFrame): StreamingQuery = {
-    // finish a committed batch and restore a sidecar backup an earlier
-    // version's compaction swap left — losing the sidecar would re-match
-    // the whole history
-    val recover = new LayoutFs.Recovery(
-      () => new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration), outDir)
+    // the output's one handle: its recovery finishes a committed batch
+    // and restores a sidecar backup an earlier version's compaction swap
+    // left — losing the sidecar would re-match the whole history
+    val layout = new LayoutFs.Live(spark, outDir)
     spark.readStream
       .schema(schema.getOrElse(spark.read.parquet(docsDir).schema))
       .option("maxFilesPerTrigger", 1)
@@ -161,14 +160,13 @@ object PercolateStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val keyed = batch.dropDuplicates(idCol)
           .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
-        recover()
+        layout.recover()
         val fresh = freshDocs(spark, outDir, keyed, idCol)
           .localCheckpoint(true) // consumed twice: matcher + seen append
         try {
           if (!fresh.isEmpty) {
             val out = matcher(fresh.drop("__fp"))
-            val root = new Path(outDir)
-            LayoutFs.commit(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root) { b =>
+            layout.commit { b =>
               b.add("")(dir => out.write.parquet(dir.toString))
               stageSeen(spark, b, outDir, fresh.select(col(idCol), col("__fp")))
             }

@@ -1230,6 +1230,113 @@ class PlanAuditSuite extends AnyFunSuite {
     run(rebuilds.find(_.layout == layout).get)
   }
 
+  // ---- a memo follows the layout: others' commits, own commits ----------
+
+  /** One memo of a layout handle ([[sources.LayoutFs.Live.memo]]):
+    * `build` writes the layout through the handle, `value` reads the
+    * memoized value, `other` changes it through a second handle, `keep`
+    * makes own commits that leave the memo's directories alone, and
+    * `touch` makes an own commit that rewrites them. */
+  private case class MemoKind[H](kind: String, open: String => H, build: H => Unit,
+      value: H => Any, other: String => Unit, keep: (String, H) => Unit, touch: H => Unit)
+
+  private def memoKinds: Seq[MemoKind[_]] = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val rnd = new scala.util.Random(21)
+    def embs(from: Int, to: Int) = (from to to).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() * 2f - 1f).toSeq))
+      .toDF("id", "vector").withColumn("vector", col("vector").cast("array<float>"))
+    val base = embs(1, 24)
+    val cents = base.orderBy("id").limit(3).select("vector").collect().map(_.getSeq[Float](0).toArray).toSeq
+    val books = operators.Pq.seedCodebooks(base, "id", "vector", m = 4, k = 4)
+    val books2 = books.map(_.map(_.map(_ * 2f)))
+    def docs(from: Int, to: Int) = (from to to).map(i => (i.toLong, s"sort merge w$i join")).toDF("doc_id", "text")
+    def ids(c: String, xs: Long*) = xs.toDF(c)
+    def clauses(from: Int, to: Int) = (from to to).map(i => (i.toLong, "sort", "must")).toDF("query_id", "term", "clause")
+    val adj = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    def ivf(b: Int)(p: String) = new sources.IvfIndex(spark, p, assignBuckets = b)
+    def inv(b: Int)(p: String) = new sources.InvertedIndex(spark, p, buckets = b)
+    def qs(b: Int)(p: String) = new sources.QueryStore(spark, p, buckets = b)
+    def ivfKeep(h: sources.IvfIndex): Unit = { h.append(embs(25, 28), "id", "vector"); h.delete(ids("id", 1L, 2L)) }
+    def invKeep(h: sources.InvertedIndex): Unit = { h.append(docs(13, 14), "doc_id", col("text")); h.delete(ids("doc_id", 1L)) }
+    Seq(
+      MemoKind[sources.IvfIndex]("IvfIndex centroids", ivf(4), _.build(base, "id", "vector", cents),
+        _.centroids().map(_.toSeq), ivf(4)(_).build(base, "id", "vector", cents.take(2)),
+        (_, h) => ivfKeep(h), _.mergeLists(0, 1)),
+      MemoKind[sources.IvfIndex]("IvfIndex codebooks", ivf(4),
+        _.buildWithPq(base, "id", "vector", cents, books),
+        _.codebooks().map(_.map(_.toSeq).toSeq).toSeq,
+        ivf(4)(_).buildPq(base, "id", "vector", cents, books2),
+        (_, h) => { h.appendPq(embs(25, 28), "id", "vector"); h.deletePq(ids("id", 1L, 2L)) },
+        _.buildPq(base, "id", "vector", cents, books2)),
+      MemoKind[sources.IvfIndex]("IvfIndex assign-bucket meta", ivf(4),
+        _.build(base, "id", "vector", cents), _.readAssignBuckets("assign"),
+        ivf(8)(_).build(base, "id", "vector", cents), (_, h) => ivfKeep(h),
+        _.build(base, "id", "vector", cents)),
+      MemoKind[sources.InvertedIndex]("InvertedIndex meta", inv(4), _.build(docs(1, 12), "doc_id", col("text")),
+        _.bucketCount, inv(8)(_).build(docs(1, 12), "doc_id", col("text")), (_, h) => invKeep(h),
+        _.build(docs(1, 12), "doc_id", col("text"))),
+      MemoKind[sources.QueryStore]("QueryStore meta", qs(4), _.build(clauses(1, 6)),
+        _.readBuckets(), qs(8)(_).build(clauses(1, 6)),
+        (_, h) => { h.append(clauses(7, 8)); h.delete(ids("query_id", 1L)) }, _.build(clauses(1, 6))),
+      MemoKind[sources.GraphIndex]("GraphIndex meta", new sources.GraphIndex(spark, _, buckets = 2),
+        _.build(adj), _.storedMeta(),
+        new sources.GraphIndex(spark, _, buckets = 2).build(adj.withColumn("cosine", lit(0.5))),
+        (_, h) => h.delete(ids("id", 3L)), _.build(adj.withColumn("cosine", lit(0.5)))),
+      MemoKind[sources.InvertedIndex]("InvertedIndex fielded head length", inv(4),
+        h => { h.build(docs(1, 12), "doc_id", col("text")); h.buildFielded(2) },
+        _.fieldedHeadLen, inv(4)(_).buildFielded(3),
+        (p, h) => {
+          invKeep(h)
+          // a head length planted in place leaves the root's stamp as it
+          // was: only a re-read, not a kept memo, returns it
+          val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val out = fs.create(new org.apache.hadoop.fs.Path(s"$p/fielded/meta/head_len.txt"), true)
+          try out.write("7".getBytes("UTF-8")) finally out.close()
+        },
+        _.buildFielded(3)),
+      MemoKind[sources.InvertedIndex]("InvertedIndex live count", inv(4),
+        _.build(docs(1, 12), "doc_id", col("text")), _.liveDocCount(),
+        inv(4)(_).delete(ids("doc_id", 1L)), (_, h) => h.buildForward(), invKeep),
+      MemoKind[sources.NgramLm]("NgramLm version", new sources.NgramLm(spark, _),
+        h => { h.build(docs(1, 6), "doc_id", col("text")); h.append(docs(7, 8), "doc_id", col("text")) },
+        _.currentVersion(), new sources.NgramLm(spark, _).append(docs(9, 10), "doc_id", col("text")),
+        (_, h) => h.vacuum(), _.append(docs(9, 10), "doc_id", col("text"))))
+  }
+
+  for (kind <- Seq("IvfIndex centroids", "IvfIndex codebooks", "IvfIndex assign-bucket meta",
+      "InvertedIndex meta", "QueryStore meta", "GraphIndex meta", "InvertedIndex fielded head length",
+      "InvertedIndex live count", "NgramLm version");
+       row <- Seq("another handle's commit", "an own commit that leaves its directories", "an own commit that rewrites them"))
+    test(s"memo: $kind after $row") {
+      def run[H](m: MemoKind[H]): Unit = {
+        val p = s"${java.nio.file.Files.createTempDirectory("graft_memo_follow")}/layout"
+        val h = m.open(p)
+        m.build(h)
+        val before = m.value(h)
+        row match {
+          case "another handle's commit" =>
+            Thread.sleep(5) // a commit in a later millisecond: the root's mtime moves
+            m.other(p)
+            val after = m.value(h)
+            assert(after != before, s"${m.kind}: the first handle kept $before")
+            assert(after == m.value(m.open(p)), s"${m.kind}: the first handle reads $after")
+          case "an own commit that leaves its directories" =>
+            m.keep(p, h)
+            var after: Any = null
+            val names = jobNamesOf { after = m.value(h) }
+            assert(names.isEmpty && after == before, s"${m.kind}: re-read as $after by $names")
+          case _ =>
+            m.touch(h)
+            var after: Any = null
+            val names = jobNamesOf { after = m.value(h) }
+            assert(after == m.value(m.open(p)), s"${m.kind}: the handle kept $after")
+            assert(after != before || names.nonEmpty, s"${m.kind}: the handle kept $after without a read")
+        }
+      }
+      run(memoKinds.find(_.kind == kind).get)
+    }
+
   test("filtered search with a meta filter and a meta sort plans no shuffle exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val frame = search(filtered)

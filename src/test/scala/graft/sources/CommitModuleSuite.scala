@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * main source file other than `sources/LayoutFs.scala` calls
   * `.rename(`, and no layout writes or deletes behind the batch's back.
   * Reads live there too: a layout reads its live directories through
-  * [[LayoutFs.Live]], which pins their schemas. */
+  * [[LayoutFs.Live]], which pins their schemas and lists their
+  * part-files. */
 class CommitModuleSuite extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
 
@@ -29,6 +30,20 @@ class CommitModuleSuite extends AnyFunSuite {
       .filter(rel => source(rel).contains(".rename("))
     finally w.close()
     assert(offenders.isEmpty, s"files that rename outside LayoutFs: ${offenders.sorted.mkString(", ")}")
+  }
+
+  test("no main source file outside LayoutFs counts part-files itself") {
+    assert(Files.isDirectory(main), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val w = Files.walk(main)
+    val offenders = try w.iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => main.relativize(p).toString)
+      .filter(_ != "graft/sources/LayoutFs.scala")
+      .flatMap(rel => source(rel).linesIterator.zipWithIndex
+        .collect { case (line, n) if line.contains("startsWith(\"part-\")") => s"$rel:${n + 1}" })
+    finally w.close()
+    assert(offenders.isEmpty,
+      s"part-file listings outside LayoutFs.Live.partFiles: ${offenders.sorted.mkString(", ")}")
   }
 
   private val layouts = Seq("EmbeddingStore", "IvfIndex", "InvertedIndex", "QueryStore", "GraphIndex", "NgramLm")

@@ -14,13 +14,13 @@ import graft.TestSpark
   * measured on a warm call once a layout handle recovered at its first
   * call and made one glob of its root on each later one, and a SQL scan
   * build made the batch's one probe, which lists nothing
-  * ([[LayoutFs.Recovery]], [[LayoutFs.rollForward]]). A glob counts as
-  * one `globStatus` plus the `listStatus` calls Hadoop's globber makes
+  * ([[LayoutFs.Live.recover]], [[LayoutFs.rollForward]]). A glob counts
+  * as one `globStatus` plus the `listStatus` calls Hadoop's globber makes
   * through the same filesystem for its wildcards and the
   * `getFileStatus` calls it makes for literal names. `getFileStatus`
-  * counts every status lookup: the memo stamps' (one per watched path,
-  * [[graft.util.StampedMemo]]), the one inside each `exists`, Spark's
-  * and the globber's. */
+  * counts every status lookup: the root stamp's (one per schema or memo
+  * lookup, [[LayoutFs.Live]]), the one inside each `exists`, Spark's and
+  * the globber's. */
 class ServePathFsCallsSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -41,6 +41,9 @@ class ServePathFsCallsSuite extends AnyFunSuite {
     store.bulkLoad(raw.drop("id"))
     val ivf = new IvfIndex(spark, FaultyFs.uri(s"$root/ivf"), assignBuckets = 4)
     ivf.build(raw, "id", "vector", vecs.take(4).map(_._4.toArray))
+    val ivfPq = new IvfIndex(spark, FaultyFs.uri(s"$root/ivf_pq"), assignBuckets = 4)
+    ivfPq.buildWithPq(raw, "id", "vector", vecs.take(4).map(_._4.toArray),
+      graft.operators.Pq.seedCodebooks(raw, "id", "vector", m = 4, k = 4))
     new StoreCatalog(spark).registerIvfIndex("fs_calls", FaultyFs.uri(s"$root/ivf"))
     graft.functions.GraftFunctions.register(spark)
     val inv = new InvertedIndex(spark, FaultyFs.uri(s"$root/inv"), buckets = 4)
@@ -53,7 +56,7 @@ class ServePathFsCallsSuite extends AnyFunSuite {
       .build(Seq((1L, 2L, 0.5), (2L, 1L, 0.5), (2L, 3L, 0.25), (3L, 2L, 0.25))
         .toDF("src", "dst", "cosine"))
     new StoreCatalog(spark).registerGraphIndex("fs_calls_graph", FaultyFs.uri(s"$root/graph"))
-    (root, store, ivf, inv)
+    (root, store, ivf, inv, ivfPq)
   }
 
   /** Calls of each kind under the fixture root during one warm `body`. */
@@ -82,6 +85,16 @@ class ServePathFsCallsSuite extends AnyFunSuite {
   check("IvfIndex.search", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 2L,
       "globStatus" -> 1L, "listStatus" -> 6L, "getFileStatus" -> 15L)) {
     fixture._3.search(query, k = 5, nprobe = 2).collect()
+  }
+
+  check("IvfIndex.searchPq", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 2L,
+      "globStatus" -> 1L, "listStatus" -> 6L, "getFileStatus" -> 16L)) {
+    fixture._5.searchPq(query, topK = 5, nprobe = 2).collect()
+  }
+
+  check("InvertedIndex.vocab", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 8L,
+      "globStatus" -> 1L, "listStatus" -> 17L, "getFileStatus" -> 29L)) {
+    fixture._4.vocab().collect()
   }
 
   check("InvertedIndex.bm25", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 7L,
