@@ -2627,7 +2627,7 @@ object SparkEntry {
     "q218_index_snippets" -> ((s, d) => {
       // X177 query-biased snippets for the persisted index's BM25
       // top-20: anchor positions from the pruned term buckets, text
-      // refetched for ONLY the hit docs (the flagship refetch
+      // refetched for ONLY the hit docs (the reference's refetch
       // discipline) — the hit-list + snippet serving composition a
       // search UI runs per query
       val docs = t(s, d, "documents")

@@ -101,8 +101,9 @@ final case class SearchConfig(
       * is a MySQL safety valve that silently — and nondeterministically —
       * truncates the candidate set. A distributed engine doesn't need the
       * valve, so it defaults OFF; when set, the cap is applied
-      * deterministically (lowest ids win, via TakeOrderedAndProject — a
-      * per-partition heap, not a single-partition GlobalLimit funnel).
+      * deterministically: lowest ids win, resolved to an id bound (the
+      * cap-th smallest candidate id, from an id-only TakeOrderedAndProject
+      * heap in a scalar subquery), so the cap never puts vectors in a heap.
       * Documented divergence: the reference's subset is index-order
       * arbitrary. */
     stage1Limit: Option[Long] = None,

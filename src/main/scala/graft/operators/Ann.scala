@@ -354,16 +354,16 @@ object Ann {
     * cancels in cosine, so raw prefixes score identically to
     * [[graft.functions.VectorFunctions.matryoshka]] vectors), then
     * exact-rerank the `candidates` survivors on the full vector. Both
-    * stages plan as TakeOrderedAndProject and stage 1's per-row compute
-    * is prefixDims/dim of a full scoring pass. NOTE on I/O: Parquet
-    * cannot prune array ELEMENTS, so slicing `vecCol` in the query
-    * still reads full vectors. To realize the byte savings at 100 TB,
-    * pass `prefixCol` pointing at a STORED prefix column — the store
-    * materializes one as `vector_prefix` when built with `prefixDims`
-    * ([[graft.sources.EmbeddingStore.withDerived]]) — and stage 1
-    * becomes a prefixDims/dim-sized scan that never touches `vecCol`
-    * (column pruning; plan-audited). The stored slice is raw, exactly
-    * what `slice(vecCol, 1, prefixDims)` computes, so results are
+    * stages plan as TakeOrderedAndProject over ONE scan: stage 1's heap
+    * carries each survivor's full vector into the rerank heap, so no join
+    * re-scans the store, and stage 1's per-row compute is prefixDims/dim
+    * of a full scoring pass. NOTE on I/O: the scan reads `vecCol` for
+    * every row (Parquet cannot prune array ELEMENTS, and the rerank needs
+    * the survivors' vectors). A STORED prefix column (`prefixCol`) — the
+    * store materializes one as `vector_prefix` when built with
+    * `prefixDims` ([[graft.sources.EmbeddingStore.withDerived]]) — saves
+    * stage 1's per-row slice, not bytes read. The stored slice is raw,
+    * exactly what `slice(vecCol, 1, prefixDims)` computes, so results are
     * identical either way. */
   def matryoshkaTopK(embs: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], prefixDims: Int, candidates: Int, k: Int,
@@ -373,11 +373,10 @@ object Ann {
     val qp = lit(query.take(prefixDims)).cast(ArrayType(FloatType))
     val qf = lit(query).cast(ArrayType(FloatType))
     val prefix = prefixCol.fold(slice(col(vecCol), 1, prefixDims))(col)
-    val stage1 = embs
-      .select(col(idCol), vecCosine(prefix, qp).as("prefix_cos"))
+    embs
+      .select(col(idCol), col(vecCol), vecCosine(prefix, qp).as("prefix_cos"))
       .orderBy(col("prefix_cos").desc, col(idCol).asc)
       .limit(candidates)
-    stage1.join(embs.select(col(idCol), col(vecCol)), Seq(idCol))
       .select(col(idCol), vecCosine(col(vecCol), qf).as("__cos"))
       .orderBy(col("__cos").desc, col(idCol).asc)
       .limit(k)

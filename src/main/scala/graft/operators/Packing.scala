@@ -145,7 +145,7 @@ object Packing {
     * training job (the trainer reads one shard directory per worker and
     * checks its manifest row first). Slices carry (doc_id, pack_id,
     * offsets), not text: the trainer re-fetches text by doc_id from the
-    * primary store, the flagship funnel's refetch discipline — so the
+    * primary store, the reference's refetch discipline — so the
     * export shuffles ids and offsets only, and re-export is a pure
     * overwrite (idempotent). Returns the manifest. */
   def writeShards(slices: DataFrame, outDir: String,

@@ -16,34 +16,39 @@ import graft.query.{QueryBuilder, QueryCompiler}
   * runs the whole plan, and no stage's rows ever reach the driver:
   *
   *   stage 0  binarize the query vector driver-side (64 longs max — trivial)
-  *   stage 1  candidate filter, inside the hamming scan: the sketch columns
-  *            semi-join a broadcast of the posts columns the filter names,
-  *            the AND-of-OR condition in the join; meta predicates are IN
-  *            subqueries (existence joins under OR, broadcast too)
+  *   stage 1  candidate filter, inside the one store scan: the scanned
+  *            columns semi-join a broadcast of the posts columns the filter
+  *            names, the AND-of-OR condition in the join; meta predicates
+  *            are IN subqueries (existence joins under OR, broadcast too)
   *   stage 2  hamming prefilter: codegen XOR/popcount over the packed
   *            sketch, top-(10n) via orderBy+limit -> TakeOrderedAndProject
   *            (per-partition heap + single merge — the distributed version
-  *            of the reference's SplMinHeap, `VectorTable.php:122-146`)
-  *   stage 3  exact cosine rerank over only 10n rows, top-(5n): the fused
-  *            `vec_cosine` kernel with the stored magnitude, the query an
-  *            array literal, so every query reuses one compiled plan
+  *            of the reference's SplMinHeap, `VectorTable.php:122-146`);
+  *            each survivor carries its vector and magnitude through the
+  *            heap, so no heap holds more than 10n vectors
+  *   stage 3  exact cosine rerank over the heap's 10n rows, top-(5n): the
+  *            fused `vec_cosine` kernel with the stored magnitude, the query
+  *            an array literal, so every query reuses one compiled plan
   *   stage 4  optional attribute sort (posts/meta keys), final limit n —
   *            on the single-partition top-5n frame, so no exchange
   *
-  * Every broadcast is a Spark job of its own, so a search is several jobs
-  * in dependent waves. Unfiltered: 2 jobs — the hamming top-(10n)
-  * broadcast, then the rerank and final cut. Filtered and sorted: one more
-  * job per stage-1 broadcast (the posts columns, each meta predicate) and
-  * per stage-4 broadcast (the meta sort rows, the posts attributes). The
-  * benchmark's shape (one meta and two posts predicates, one meta and one
-  * posts sort key) runs 6 jobs in 4 waves: the leaf broadcasts; the posts
-  * broadcast, which waits for the meta one because Catalyst copies the
-  * meta subqueries onto the posts side through the join key equality;
-  * the hamming cut; the rerank and final cut. No stage shuffles row mass.
+  * Stages 1-3 run over ONE scan of the store: the reference refetches the
+  * survivors' vectors `WHERE id IN (...)` (`VectorTable.php:157`), a
+  * primary-key lookup in MySQL but a second whole-store scan over Parquet.
+  * Unfiltered, a search is 1 Spark job (the scan, the heaps, the rerank
+  * and the final cut; 2 stages). Every broadcast is a job of its own:
+  * filtered and sorted, one more job per stage-1 broadcast (the posts
+  * columns, each meta predicate) and per stage-4 broadcast (the meta sort
+  * rows, the posts attributes). The benchmark's shape (one meta and two
+  * posts predicates, one meta and one posts sort key) runs 5 jobs in 3
+  * waves: the leaf broadcasts; the posts broadcast, which waits for the
+  * meta one because Catalyst copies the meta subqueries onto the posts
+  * side through the join key equality; the scan with its cuts. No stage
+  * shuffles row mass.
   *
-  * Column pruning matters at scale: stages 1-2 never touch the wide
-  * `vector` column — only `id`/`post_id`/`binary_code` (3 cols) are read
-  * from Parquet until the 10n-row rerank fetches vectors.
+  * Column pruning: the scan reads (id, post_id, binary_code, vector,
+  * magnitude) and nothing else. It decodes every row's vector; a refetch
+  * by id would too, since Parquet has no primary-key lookup.
   */
 object SearchEngine {
 
@@ -85,42 +90,46 @@ object SearchEngine {
     val qVecLit = lit(queryVec).cast(ArrayType(FloatType))
     val qBitsLit = lit(qBits)
 
-    // stage 1 runs inside the hamming scan (only if filters present —
+    // stage 1 runs inside the one store scan (only if filters present —
     // VectorTable.php:112-114 always scopes by post type; post-type scoping
-    // is a caller-supplied filter group here). The sketch columns
+    // is a caller-supplied filter group here). The scanned columns
     // semi-join a broadcast of just the posts columns the filter names,
     // aliased apart from the store's, with the whole AND-of-OR condition
     // in the join; meta predicates are IN subqueries on post_id. Semi and
     // existence joins never duplicate a row, so nothing needs a distinct.
-    val sketch = embeddings.select(col("id"), col("post_id"), col("binary_code"))
+    val scan = embeddings.select(col("id"), col("post_id"), col("binary_code"),
+      col("vector"), col("magnitude"))
     val candidates =
       if (builder.hasFilters) {
         val fields = builder.groups.flatten.filterNot(_.meta).map(_.field).distinct
         val alias = fields.zipWithIndex.map { case (f, i) => f -> s"__pf_$i" }.toMap
         val attrs = posts.select(col("ID").as("__pk") +: fields.map(f => col(f).as(alias(f))): _*)
-        sketch.join(broadcast(attrs), sketch("post_id") === col("__pk") &&
-          QueryCompiler.condition(builder, postmeta, sketch("post_id"), f => col(alias(f))),
+        scan.join(broadcast(attrs), scan("post_id") === col("__pk") &&
+          QueryCompiler.condition(builder, postmeta, scan("post_id"), f => col(alias(f))),
           "left_semi")
-      } else sketch
+      } else scan
     // stage-1 cap: off by default (see SearchConfig.stage1Limit scaladoc);
-    // when on, deterministic lowest-ids via orderBy+limit (TakeOrdered)
+    // when on, the lowest `cap` ids, resolved to an id bound first (the
+    // cap-th smallest candidate id, a scalar subquery whose heap holds
+    // ids only), so no heap but stage 2's ever holds vectors. Store ids
+    // are unique and non-null, so the bound keeps exactly `cap` rows.
     val staged = cfg.stage1Limit.fold(candidates) { cap =>
-      candidates.orderBy(col("id").asc).limit(math.min(cap, Int.MaxValue.toLong).toInt)
+      val bound = candidates.select(col("id")).orderBy(col("id").asc)
+        .limit(math.min(cap, Int.MaxValue.toLong).toInt).agg(max(col("id")))
+      candidates.filter(col("id") <= bound.scalar())
     }
 
-    // stage 2: hamming top-(10n); reads only (id, post_id, binary_code)
+    // stage 2: hamming top-(10n); each survivor carries its vector and
+    // magnitude through the heap, so the rerank needs no refetch scan
     val hamming = staged
       .select(col("id"), col("post_id"),
-        hammingDist(col("binary_code"), qBitsLit).as("hamming_distance"))
+        hammingDist(col("binary_code"), qBitsLit).as("hamming_distance"),
+        col("vector"), col("magnitude"))
       .orderBy(col("hamming_distance").asc, col("id").asc)
       .limit(cfg.stage2Factor * n)
 
-    // stage 3: cosine rerank over 10n rows — fetch vectors for just those
-    // ids (broadcast join against the tiny survivor set), exactly the
-    // reference's `WHERE id IN (...)` refetch (VectorTable.php:157)
-    val cosine = embeddings
-      .select(col("id").as("__rid"), col("vector"), col("magnitude"))
-      .join(broadcast(hamming), col("__rid") === hamming("id"), "inner")
+    // stage 3: cosine rerank over the 10n survivors, top-(5n)
+    val cosine = hamming
       .select(col("id"), col("post_id"), col("hamming_distance"),
         vecCosine(col("vector"), qVecLit, col("magnitude")).as("cosine_similarity"))
       .orderBy(col("cosine_similarity").desc, col("id").asc)
@@ -190,7 +199,7 @@ object SearchEngine {
 
   /** The flagship two-phase pipeline (stages 0+2+3 and the default
     * cosine-descending output contract) as a PURE SQL string over the
-    * registered kernels (`pack_sign_bits` / `hamming_dist` / `vec_dot`) —
+    * registered kernels (`pack_sign_bits` / `hamming_dist` / `vec_cosine`) —
     * runnable by any SQL client of a session with [[graft.functions
     * .GraftFunctions.register]] or `GraftExtensions` loaded, against a
     * view carrying the store schema. Stage 1 relational filters and
@@ -201,8 +210,8 @@ object SearchEngine {
     * kernel, `vec_cosine(vector, q, magnitude)`, over the same float query
     * literal (each element's shortest-round-trip repr reads back to the
     * same float), and both orderings carry the id tiebreak. The plan
-    * compiles to the same two TakeOrderedAndProject heaps +
-    * broadcast-joined rerank. */
+    * compiles to the same shape: one scan of the view, whose hamming heap
+    * carries each survivor's vector into the rerank heap. */
   def searchSqlText(queryVec: Array[Float], n: Int,
       embeddingsView: String = "embeddings",
       cfg: SearchConfig = SearchConfig()): String = {
@@ -211,16 +220,16 @@ object SearchEngine {
     val qArr = queryVec.map(v => s"CAST('$v' AS FLOAT)")
       .mkString("array(", ", ", ")")
     s"""WITH ham AS (
-       |  SELECT id, post_id,
+       |  SELECT id, post_id, vector, magnitude,
        |         hamming_dist(binary_code, pack_sign_bits($qArr)) AS hamming_distance
        |  FROM $embeddingsView
        |  ORDER BY hamming_distance ASC, id ASC
        |  LIMIT ${cfg.stage2Factor * n}
        |),
        |rr AS (
-       |  SELECT e.id, e.post_id, h.hamming_distance,
-       |         vec_cosine(e.vector, $qArr, e.magnitude) AS cosine_similarity
-       |  FROM ham h JOIN $embeddingsView e ON e.id = h.id
+       |  SELECT id, post_id, hamming_distance,
+       |         vec_cosine(vector, $qArr, magnitude) AS cosine_similarity
+       |  FROM ham
        |  ORDER BY cosine_similarity DESC, id ASC
        |  LIMIT ${cfg.stage3Factor * n}
        |)
@@ -269,7 +278,7 @@ object SearchEngine {
     * order is reconstructible by the caller.
     *
     * Scale shape: text is fingerprinted ONLY for the hit docs (semi-join
-    * first — the flagship refetch discipline, nothing corpus-sized
+    * first — the reference's refetch discipline, nothing corpus-sized
     * shuffles for a k-bounded hit list); the collapse is one window over
     * the hit-sized join, the re-cut a TakeOrderedAndProject heap. */
   def dedupHits(hits: DataFrame, docs: DataFrame, idCol: String,

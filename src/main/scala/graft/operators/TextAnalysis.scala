@@ -960,7 +960,7 @@ object TextAnalysis {
     * [[positionalPostings]]' raw-slot convention, so a persisted
     * [[graft.sources.InvertedIndex]] slice drops in unchanged.
     *
-    * Scale shape — the flagship refetch discipline: the candidate scan
+    * Scale shape — the reference's refetch discipline: the candidate scan
     * runs on the QUERY TERMS' postings only (per-doc hit lists are
     * query-bounded, collected to one small array per doc — one doc-keyed
     * exchange), and the best window is picked by a per-row higher-order

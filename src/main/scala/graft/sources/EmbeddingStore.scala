@@ -110,9 +110,11 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * first-k slice backing the matryoshka stage-1 index
     * ([[graft.operators.Ann.matryoshkaTopK]]): Parquet cannot prune
     * array ELEMENTS, so slicing the full `vector` in a query still
-    * reads every float; a separate stored column is what turns the
-    * prefix ranking into a k/dim-sized I/O pass at 100 TB (the same
-    * split the store already does for `binary_code`). Raw slice, not
+    * reads every float; a separate stored column is what lets a
+    * prefix-only ranking read k/dim of the bytes (the same split the
+    * store already does for `binary_code`). matryoshkaTopK's one scan
+    * reads the full vector for its rerank anyway, so there the column
+    * saves the per-row slice, not I/O. Raw slice, not
     * re-normalized: cosine normalizes per-pair, so ranking is identical
     * and the column stays update-free if dims are re-chosen. */
   def withDerived(raw: DataFrame): DataFrame = {
@@ -141,8 +143,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
   /** The live store. Recovers crashed swaps and lists the files on every
     * call; the schema is pinned ([[layout]]), so a read launches no Spark
     * job. */
-  def read(): DataFrame = {
-    layout.recover()
+  def read(): DataFrame = layout.call {
     layout(path)
   }
 
@@ -307,8 +308,7 @@ final class EmbeddingStore(spark: SparkSession, path: String, numBuckets: Int = 
     * Recovers crashed swaps first, like every sibling stats call — a
     * listing taken mid-crash-window would count a hidden backup's
     * absence as an empty bucket. */
-  def fileStats(): DataFrame = {
-    layout.recover()
+  def fileStats(): DataFrame = layout.call {
     layout.partFiles(path, "bucket").map(r => (r._1, r._2)).toDF("bucket", "n_files")
       .orderBy(col("bucket"))
   }

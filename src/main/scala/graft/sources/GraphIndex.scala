@@ -116,8 +116,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   /** Live (src, dst) edge view — a full read, for diagnostics and
     * parity tests; serving goes through the pruned per-hop reads.
     * Recovers crashed append swaps first (the read-path rule). */
-  def edges(): DataFrame = {
-    layout.recover()
+  def edges(): DataFrame = layout.call {
     layout(edgesPath).select(col("src"), col("dst"))
   }
 
@@ -148,7 +147,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * the very next search. */
   def append(allEmbs: DataFrame, idCol: String, vecCol: String,
       newIds: DataFrame, r: Int, alpha: Double = 1.2,
-      searchBeam: Int = 32, entryId: Option[Long] = None): Unit = {
+      searchBeam: Int = 32, entryId: Option[Long] = None): Unit = layout.call {
     require(r >= 1 && r <= GraphAnn.MaxDegree,
       s"degree bound r in [1, ${GraphAnn.MaxDegree}], got $r")
     require(alpha >= 1.0, s"alpha >= 1, got $alpha")
@@ -161,7 +160,6 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       s"append needs a cosine-scored adjacency: the store at $path was " +
       "built from a (src, dst)-only edge set (build-only); rebuild with " +
       "cosine to enable inserts")
-    layout.recover()
     import org.apache.spark.sql.functions.broadcast
     val nodes = allEmbs.select(col(idCol).cast(LongType).as("id"),
       col(vecCol).as("v"))
@@ -283,8 +281,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * build writes set the baseline and [[append]]'s bucket rewrites
     * coalesce to one file per touched bucket (the [[EmbeddingStore]]
     * rule — mutation count never inflates file count). */
-  def fileStats(): DataFrame = {
-    layout.recover()
+  def fileStats(): DataFrame = layout.call {
     import spark.implicits._
     layout.partFiles(edgesPath, "gbucket").map(r => (r._1, r._2)).toDF("gbucket", "n_files")
       .orderBy(col("gbucket"))
@@ -318,9 +315,8 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   private def walk(embs: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int, beamWidth: Int, maxHops: Int,
       entryId: Option[Long],
-      resultFilter: DataFrame => DataFrame): DataFrame = {
+      resultFilter: DataFrame => DataFrame): DataFrame = layout.call {
     storedBuckets()
-    layout.recover()
     // the frontier's bucket set arrives from beamCore's per-hop digest
     // (collected in the same action that materializes the hop, ≤
     // `buckets` ints) and rides the edge read as a partition isin
@@ -344,10 +340,9 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * that owns the corpus acts on `rebuild_recommended`. File counts
     * are informational (append rewrites coalesce, so they cannot
     * accrete; a high count means an external writer). */
-  def maintain(maxTombstoneFrac: Double = 0.2): DataFrame = {
+  def maintain(maxTombstoneFrac: Double = 0.2): DataFrame = layout.call {
     require(maxTombstoneFrac > 0.0,
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
-    layout.recover()
     import spark.implicits._
     val nNodes = edges().select(col("src")).distinct().count()
     val nTomb = tombstoneIds().map(_.count()).getOrElse(0L)

@@ -153,9 +153,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * write + one doc-keyed and one term-keyed aggregate; B is recorded
     * in a one-row meta parquet (the [[IvfIndex]] sidecar-meta rule, so
     * later sessions and appends agree on the hash). */
-  def build(docs: DataFrame, idCol: String, text: Column): Unit = {
+  def build(docs: DataFrame, idCol: String, text: Column): Unit = layout.call {
     import spark.implicits._
-    layout.recover()
     layout.commit { batch =>
       batch.stageRows("meta", None, Seq(buckets).toDF("n_buckets").coalesce(1))
       val postings = TextAnalysis.positionalPostings(docs, idCol, text)
@@ -216,8 +215,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * read — including a streaming replay guard
     * ([[graft.streaming.IndexIngest]]) — sees the batch fully applied
     * or not at all, never a torn half. */
-  def append(docs: DataFrame, idCol: String, text: Column): Unit = {
-    layout.recover()
+  def append(docs: DataFrame, idCol: String, text: Column): Unit = layout.call {
     migrateFlatCensusBase()
     val b = readBuckets()
     layout.commit { batch =>
@@ -288,8 +286,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * rule); derived sidecars (forward/fielded/file-grain block-max)
     * go stale exactly as after an append — [[maintainDerived]]'s
     * policy covers the rebuild. */
-  def mergeFrom(other: InvertedIndex): Unit = {
-    layout.recover()
+  def mergeFrom(other: InvertedIndex): Unit = layout.call {
     other.layout.recover()
     migrateFlatCensusBase()
     val b = readBuckets()
@@ -339,8 +336,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * a doc that was later tombstoned must still be recognized as
     * already-ingested (re-appending it would resurrect the doc), so the
     * guard is deliberately NOT [[liveOnly]]-filtered. */
-  def appendedIds: DataFrame = {
-    layout.recover()
+  def appendedIds: DataFrame = layout.call {
     layout(doclensPath).select(col("doc_id"))
   }
 
@@ -364,10 +360,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * that is not in the index is a harmless no-op (the anti-join finds
     * nothing to mask). Takes effect on the very next read; [[vacuum]]
     * later makes it physical. */
-  def delete(ids: DataFrame): Unit = {
+  def delete(ids: DataFrame): Unit = layout.call {
     require(ids.columns.toSeq == Seq("doc_id"),
       s"ids must be a single-column (doc_id) frame, got ${ids.columns.toSeq}")
-    layout.recover()
     // cast to the stored doclens id type: two delete batches with
     // different integer widths must not leave conflicting parquet
     // schemas in the tombstone dir (the next read would mis-infer)
@@ -447,8 +442,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * into the SAME rewrite — [[maintain]] uses this when both policies
     * trigger at once, where vacuum-then-compact would rewrite the whole
     * layout twice back-to-back for the identical end state. */
-  private def vacuumImpl(compactToo: Boolean): Unit = {
-    layout.recover()
+  private def vacuumImpl(compactToo: Boolean): Unit = layout.call {
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
     layout.commit { batch =>
@@ -526,8 +520,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     vocabSlice(Some(prefixes.map(tprefixOf).distinct.sorted))
   }
 
-  private def vocabSlice(buckets: Option[Seq[Int]]): DataFrame = {
-    layout.recover()
+  private def vocabSlice(buckets: Option[Seq[Int]]): DataFrame = layout.call {
     // base rows prune by the PARTITION column (file-listing prune);
     // delta/fallback rows — tiny by the vacuum-cadence contract —
     // recompute the bucket from the term on the fly
@@ -558,8 +551,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * are masking (vacuum policy). Tombstoned docs are excluded — this
     * reports what queries actually see. One full-layout scan by design:
     * it is the monitoring pass, run at monitoring cadence. */
-  def stats(): DataFrame = {
-    layout.recover()
+  def stats(): DataFrame = layout.call {
     liveOnly(layout(postingsPath))
       .groupBy(col("tbucket"))
       .agg(count(lit(1)).as("n_postings"),
@@ -569,8 +561,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
 
   /** Part-file counts per bucket directory — the [[compact]]-policy
     * input, from the file listing alone (no data read). */
-  def fileStats(): DataFrame = {
-    layout.recover()
+  def fileStats(): DataFrame = layout.call {
     import spark.implicits._
     layout.partFiles(postingsPath, "tbucket").map(r => (r._1, r._2)).toDF("tbucket", "n_files")
   }
@@ -590,9 +581,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * the classic merge step a segment-based index performs. WHEN to
     * compact is the caller's read of file counts (the [[IvfIndex]]
     * monitoring convention). */
-  def compact(doclensFiles: Int = 1): Unit = {
+  def compact(doclensFiles: Int = 1): Unit = layout.call {
     require(doclensFiles >= 1, s"doclensFiles must be >= 1, got $doclensFiles")
-    layout.recover()
     layout.commit { batch =>
       batch.stageRows("postings", Some("tbucket"),
         layout(postingsPath).repartition(col("tbucket")))
@@ -629,13 +619,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * Thresholds are arguments, not constants — the caller's ops policy;
     * run on the monitoring cadence. */
   def maintain(maxFilesPerBucket: Int = 8,
-      maxTombstoneFrac: Double = 0.2): DataFrame = {
+      maxTombstoneFrac: Double = 0.2): DataFrame = layout.call {
     require(maxFilesPerBucket >= 1,
       s"maxFilesPerBucket must be >= 1, got $maxFilesPerBucket")
     require(maxTombstoneFrac > 0.0,
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
     import spark.implicits._
-    layout.recover()
     val tombFrac =
       if (!fs.exists(new Path(tombstonesPath))) 0.0
       else {
@@ -802,10 +791,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * already exact for every live file — meta refresh only),
     * `rebuild` (full recompute), `none` (below threshold, no action),
     * `absent` (artifact missing, never created). */
-  def maintainDerivedVerbose(maxStaleFrac: Double = 0.1): DataFrame = {
+  def maintainDerivedVerbose(maxStaleFrac: Double = 0.1): DataFrame = layout.call {
     require(maxStaleFrac > 0.0,
       s"maxStaleFrac must be > 0, got $maxStaleFrac")
-    layout.recover()
     import spark.implicits._
     // one doclens count and one meta head PER PASS: the doclens table
     // never changes inside a maintain pass (appends committed it
@@ -998,9 +986,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * byte-identical artifact rows (suite-pinned); the standalone
     * builders each re-scan the postings layout and forward/block-max
     * each re-aggregate the same (doc, term) tf table. */
-  def buildDerived(headLen: Int): Unit = {
+  def buildDerived(headLen: Int): Unit = layout.call {
     require(headLen >= 1, s"headLen must be positive, got $headLen")
-    layout.recover()
     rebuildDerived(Seq("forward", "fielded", "blockmax"), headLen)
   }
 
@@ -1301,21 +1288,19 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * {{{ WHERE term = 'x' AND tbucket =
     *       CAST(pmod(CAST(conv(substring(md5('x'), 1, 7), 16, 10)
     *         AS BIGINT), B) AS INT) }}} */
-  def livePostings: DataFrame = {
-    layout.recover()
+  def livePostings: DataFrame = layout.call {
     liveOnly(layout(postingsPath))
   }
 
   /** The LIVE (doc_id, dl) doclens frame — [[livePostings]]' stats-side
     * sibling for the SQL surface. */
-  def liveDoclens: DataFrame = {
-    layout.recover()
+  def liveDoclens: DataFrame = layout.call {
     liveOnly(layout(doclensPath))
   }
 
   /** The stored bucket count B — the SQL caller's input to the pruning
     * predicate documented on [[livePostings]]. */
-  def bucketCount: Int = { layout.recover(); readBuckets() }
+  def bucketCount: Int = layout.call(readBuckets())
 
   /** Dirichlet query-likelihood ranking (X197; Zhai & Lafferty, SIGIR
     * '01 — THE classic LM ranker next to BM25): top-k docs by
@@ -1663,11 +1648,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * map task — the per-term window is NOT a skew funnel. Refresh on
     * the maintenance cadence (a pruned copy is a derived artifact,
     * rebuilt not mutated). */
-  def prunedCopy(targetPath: String, keepPerTerm: Int): InvertedIndex = {
+  def prunedCopy(targetPath: String, keepPerTerm: Int): InvertedIndex = layout.call {
     require(keepPerTerm >= 1, s"keepPerTerm must be >= 1, got $keepPerTerm")
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    layout.recover()
     val b = readBuckets()
     val live = liveOnly(layout(postingsPath))
     val keep = live
@@ -1747,7 +1731,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * bounds in the unsafe direction). Reads max/min-merge across the
     * accreted part files, so the serve-time lookup is one
     * vocabulary-sized pruned read. */
-  def buildBlockMax(): Unit = { layout.recover(); buildBlockMaxFrom(None, None) }
+  def buildBlockMax(): Unit = layout.call(buildBlockMaxFrom(None, None))
 
   /** [[buildBlockMax]] over an optional shared live-postings scan
     * (must carry `__fname`) and shared (doc, term) tf aggregate —
@@ -1820,13 +1804,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * construction. */
   def bm25MaxScore(queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75,
-      maxCandidates: Int = 10000): DataFrame = {
+      maxCandidates: Int = 10000): DataFrame = layout.call {
     require(k > 0, s"k must be positive, got $k")
     require(queryTerms.nonEmpty, "no query terms")
     require(queryTerms.distinct.size == queryTerms.size,
       s"duplicate term in $queryTerms")
     require(maxCandidates >= 1, s"maxCandidates must be >= 1, got $maxCandidates")
-    layout.recover()
     def fallback() = bm25(queryTerms, k, k1, b)
     if (!fs.exists(new Path(blockmaxPath))) return fallback()
     val dls = liveOnly(layout(doclensPath))
@@ -2005,8 +1988,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * takes effect immediately; an APPEND is invisible until rebuild
     * (documented). [[build]] deletes the sidecar — a fresh corpus would
     * otherwise serve the OLD corpus's fielded rows. */
-  def buildFielded(headLen: Int): Unit = {
-    layout.recover()
+  def buildFielded(headLen: Int): Unit = layout.call {
     buildFieldedFrom(headLen, None)
   }
 
@@ -2050,8 +2032,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * instance (only [[buildFielded]] rewrites it); text fast path,
     * parquet fallback for pre-r22 layouts. */
   private val fieldedHeadMemo = layout.memo[Int]("fielded/meta")
-  def fieldedHeadLen: Int = {
-    layout.recover()
+  def fieldedHeadLen: Int = layout.call {
     fieldedHeadMemo {
       val txt = new Path(s"$fieldedPath/meta", "head_len.txt")
       if (fs.exists(txt)) {
@@ -2073,12 +2054,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * fielded doclens table; text never read. */
   def bm25fTopK(queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, wHead: Double = 2.0, wBody: Double = 1.0,
-      bHead: Double = 0.75, bBody: Double = 0.75): DataFrame = {
+      bHead: Double = 0.75, bBody: Double = 0.75): DataFrame = layout.call {
     require(queryTerms.nonEmpty, "no query terms")
     require(queryTerms.distinct.size == queryTerms.size,
       s"duplicate term in $queryTerms")
     require(k > 0, s"k must be positive, got $k")
-    layout.recover()
     require(fs.exists(new Path(fieldedPostingsPath)),
       s"no fielded sidecar under $path — run buildFielded first")
     val b = readBuckets()
@@ -2110,13 +2090,12 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * round-6). Pure composition surface: feed the legs to
     * [[graft.operators.SearchEngine.disMax]]. */
   def bm25FieldRanked(field: String, queryTerms: Seq[String],
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = layout.call {
     require(field == "head" || field == "body",
       s"field must be head|body, got $field")
     require(queryTerms.nonEmpty, "no query terms")
     require(queryTerms.distinct.size == queryTerms.size,
       s"duplicate term in $queryTerms")
-    layout.recover()
     require(fs.exists(new Path(fieldedPostingsPath)),
       s"no fielded sidecar under $path — run buildFielded first")
     val (tfCol, dlCol) =
@@ -2160,7 +2139,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * (tombstones resolved on the way in) with the stored bucket count;
     * a DERIVED artifact like [[prunedCopy]] — rebuild on the
     * maintenance cadence after append/vacuum, not mutated in place. */
-  def buildForward(): Unit = { layout.recover(); buildForwardFrom(None, None) }
+  def buildForward(): Unit = layout.call(buildForwardFrom(None, None))
 
   /** [[buildForward]] over an optional shared live-postings scan and
     * shared (doc, term) tf aggregate — [[rebuildDerived]]'s one-scan
@@ -2183,9 +2162,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
   /** The (doc_id, term, tf) term vectors of exactly `docIds`, read from
     * their pruned `dbucket` directories only ([[buildForward]] must
     * have run). */
-  def docTerms(docIds: Seq[Long]): DataFrame = {
+  def docTerms(docIds: Seq[Long]): DataFrame = layout.call {
     require(docIds.nonEmpty, "need at least one doc id")
-    layout.recover()
     val b = readBuckets()
     val bs = docIds.map(id => bucketOf(id.toString, b)).distinct.sorted
     layout(forwardPath)
@@ -2312,11 +2290,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * on a corpus without empty documents the two are bit-identical
     * (suite-pinned). Tombstones mask every leg (foreground vectors,
     * census, doclens), so a delete takes effect immediately. */
-  def significantTerms(fgIds: Seq[Long], n: Int, minDf: Long = 1L): DataFrame = {
+  def significantTerms(fgIds: Seq[Long], n: Int, minDf: Long = 1L): DataFrame = layout.call {
     require(fgIds.nonEmpty, "need at least one foreground doc id")
     require(n > 0, s"n must be positive, got $n")
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
-    layout.recover()
     require(fs.exists(new Path(forwardPath)),
       s"no forward sidecar under $path — run buildForward first")
     // ONE aggregate job for both corpus-side counts (was two identical
@@ -2374,10 +2351,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * corpus-mass — one term aggregate, one vocabulary join, a top-n
     * heap. Output (term, df_fg, df_bg, score). */
   def significantText(hits: DataFrame, idCol: String, text: Column,
-      n: Int, minDf: Long = 1L): DataFrame = {
+      n: Int, minDf: Long = 1L): DataFrame = layout.call {
     require(n > 0, s"n must be positive, got $n")
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
-    layout.recover()
     val nBg = liveDocCount()
     val empty = layout(doclensPath).limit(0)
       .select(col("doc_id").cast(StringType).as("term"),
@@ -2606,10 +2582,9 @@ final class InvertedIndex(spark: SparkSession, path: String,
 
   /** [[termPostings]] and the tombstone mask it applied ([[liveMask]]),
     * for a caller that masks more frames of the same call. */
-  private def termSlice(terms: Seq[String]): (DataFrame, DataFrame => DataFrame) = {
+  private def termSlice(terms: Seq[String]): (DataFrame, DataFrame => DataFrame) = layout.call {
     require(terms.nonEmpty, "need at least one term")
     require(terms.forall(_.nonEmpty), s"empty term in $terms")
-    layout.recover()
     val b = readBuckets()
     val bs = terms.map(bucketOf(_, b)).distinct.sorted
     val live = liveMask()

@@ -159,8 +159,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * monitor ([[graft.operators.Ann.ivfStats]] imbalance on the growing
     * index); a drifted coarse quantizer degrades recall, not the
     * within-probed-lists exactness. */
-  def append(embs: DataFrame, idCol: String, vecCol: String): Unit = {
-    layout.recover()
+  def append(embs: DataFrame, idCol: String, vecCol: String): Unit = layout.call {
     appendTo("lists", "assign", embs, idCol, vecCol)(identity)
   }
 
@@ -208,8 +207,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * recovery rolls a committed batch forward before the next read).
     * A list whose every row is deleted remains as an empty directory —
     * harmless to partition discovery. */
-  def delete(ids: DataFrame): Unit = {
-    layout.recover()
+  def delete(ids: DataFrame): Unit = layout.call {
     deleteFrom("lists", "assign", ids)
   }
 
@@ -272,8 +270,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * search never sees a half-compacted list. Content is bit-identical (suite-pinned); WHICH
     * lists to compact is the caller's read of file counts, the
     * [[splitList]] monitoring convention. */
-  def compact(listIds: Seq[Int]): Unit = {
-    layout.recover()
+  def compact(listIds: Seq[Int]): Unit = layout.call {
     requireDirs(listsPath, "ivf_list", listIds)
     layout.commit(
       rewrite(_, "lists", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
@@ -281,8 +278,7 @@ final class IvfIndex(spark: SparkSession, path: String,
 
   /** [[compact]] for the PQ codes layout — appendPq accretes files the
     * same way. */
-  def compactPq(listIds: Seq[Int]): Unit = {
-    layout.recover()
+  def compactPq(listIds: Seq[Int]): Unit = layout.call {
     requireDirs(codesPath, "ivf_list", listIds)
     layout.commit(
       rewrite(_, "codes", "ivf_list", listIds)(_.repartition(col("ivf_list"))))
@@ -291,8 +287,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   /** Compact BOTH assignment sidecars' hash buckets (every append adds a
     * file per touched bucket; B is bounded, so this is always a small
     * job). No-op for a layout whose sidecar was never written. */
-  def compactAssign(): Unit = {
-    layout.recover()
+  def compactAssign(): Unit = layout.call {
     layout.commit { b =>
       Seq("assign", "assign_pq").filter(hasSidecar).foreach { rel =>
         // a bucket no id ever hashed to has no directory — the rewrite
@@ -306,8 +301,7 @@ final class IvfIndex(spark: SparkSession, path: String,
   /** Part-file counts per `ivf_list=N` directory of the raw lists —
     * the [[compact]]-policy input, from the file listing alone (no data
     * read); the [[graft.sources.InvertedIndex.fileStats]] convention. */
-  def fileStats(): DataFrame = {
-    layout.recover()
+  def fileStats(): DataFrame = layout.call {
     import spark.implicits._
     layout.partFiles(listsPath, "ivf_list").map(r => (r._1, r._2)).toDF("ivf_list", "n_files")
   }
@@ -321,16 +315,15 @@ final class IvfIndex(spark: SparkSession, path: String,
     * Returns one row per list over threshold plus the sidecar decision
     * — the decision record an ops loop logs. Thresholds are arguments;
     * WHICH lists got compacted is the report, not a side channel. */
-  def maintain(maxFilesPerList: Int = 8): DataFrame = {
+  def maintain(maxFilesPerList: Int = 8): DataFrame = layout.call {
     require(maxFilesPerList >= 1,
       s"maxFilesPerList must be >= 1, got $maxFilesPerList")
     import spark.implicits._
-    // recover BEFORE reading the listing (the InvertedIndex.maintain
-    // rule): a crashed committed merge still lists the vacated
+    // the call recovers BEFORE the listing is read (the
+    // InvertedIndex.maintain rule): a crashed committed merge still lists the vacated
     // ivf_list=<last> dir — deciding on that stale listing would have
     // the inner compact() roll the merge forward mid-flight and then
     // fail requireDirs on the now-dropped directory
-    layout.recover()
     val listCounts = layout.partFiles(listsPath, "ivf_list")
     val toCompact = listCounts.filter(_._2 > maxFilesPerList).map(_._1)
     if (toCompact.nonEmpty) compact(toCompact)
@@ -379,9 +372,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * PQ codes layout too (codes quantize residuals of the OLD coarse
     * assignment) — run [[buildPq]] against the new index if the
     * compressed layout is served. */
-  def retrain(targetPath: String, iters: Int): IvfIndex = {
+  def retrain(targetPath: String, iters: Int): IvfIndex = layout.call {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    layout.recover()
     val vecs = layout(listsPath)
       .select(col("id"), col("vector"))
     val cents = Ann.lloydRounds(vecs, "vector", loadCentroids(), iters)
@@ -416,9 +408,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * [[retrain]] (which changes the quantizer) still requires a
     * [[buildPq]] rerun. Returns
     * Some((newListId, movedRows)) on success. */
-  def splitList(listId: Int, lloydIters: Int = 1): Option[(Int, Long)] = {
+  def splitList(listId: Int, lloydIters: Int = 1): Option[(Int, Long)] = layout.call {
     require(lloydIters >= 1, s"lloydIters must be >= 1, got $lloydIters")
-    layout.recover()
     val cs = loadCentroids()
     require(listId >= 0 && listId < cs.size,
       s"listId $listId out of range [0, ${cs.size})")
@@ -500,8 +491,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * normally `a` holding the union of `a` and `b`; when `a` is the
     * highest list id the roles swap (the union lands under `b`) so the
     * vacated slot is always the highest. */
-  def mergeLists(a: Int, b: Int): (Int, Long) = {
-    layout.recover()
+  def mergeLists(a: Int, b: Int): (Int, Long) = layout.call {
     val cs = loadCentroids()
     require(a != b, s"cannot merge list $a with itself")
     Seq(a, b).foreach(i => require(i >= 0 && i < cs.size,
@@ -609,7 +599,7 @@ final class IvfIndex(spark: SparkSession, path: String,
 
   /** The stored centroids, ordered by cid, after recovery: the root
     * pointer must never read as missing or as a mutation's half. */
-  def centroids(): Seq[Array[Float]] = { layout.recover(); loadCentroids() }
+  def centroids(): Seq[Array[Float]] = layout.call(loadCentroids())
 
   // memoized per instance: only a build, split or merge replaces the
   // directory — and the k-vector table is small by the coarse-quantizer
@@ -631,9 +621,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * ONE Spark job, the scoring scan itself: the centroids come from
     * their memo and the lists read with a pinned schema
     * ([[LayoutFs.Live]]), so no job infers a parquet footer. */
-  def search(query: Array[Float], k: Int, nprobe: Int): DataFrame = {
+  def search(query: Array[Float], k: Int, nprobe: Int): DataFrame = layout.call {
     require(k >= 1, s"k must be positive, got $k")
-    layout.recover()
     Ann.bruteForceTopK(probed("lists", query, nprobe), "id", "vector", query, k)
   }
 
@@ -648,9 +637,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * empty the probed lists while matches exist in unprobed ones —
     * raise nprobe, exactly like the unfiltered recall knob. */
   def searchWhere(query: Array[Float], k: Int, nprobe: Int,
-      pred: Column): DataFrame = {
+      pred: Column): DataFrame = layout.call {
     require(k >= 1, s"k must be positive, got $k")
-    layout.recover()
     Ann.bruteForceTopK(probed("lists", query, nprobe).filter(pred), "id", "vector", query, k)
   }
 
@@ -660,14 +648,12 @@ final class IvfIndex(spark: SparkSession, path: String,
     * probes with `WHERE ivf_list IN (...)` (partition-pruned exactly
     * like [[search]]) and scores with the registered `vec_cosine`
     * kernel. */
-  def listsView: DataFrame = {
-    layout.recover()
+  def listsView: DataFrame = layout.call {
     layout(listsPath)
   }
 
   /** See [[listsView]]. */
-  def centroidsView: DataFrame = {
-    layout.recover()
+  def centroidsView: DataFrame = layout.call {
     layout(centroidsPath)
   }
 
@@ -694,7 +680,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * FAISS-IVFPQ economics, from the parquet layout alone. The raw
     * vectors are NOT duplicated here: exact rerank (when wanted)
     * re-fetches the few topK survivors from the primary store by id —
-    * the flagship funnel's stage-3 refetch pattern. Writes its own
+    * the reference's stage-3 `WHERE id IN (...)` refetch. Writes its own
     * assignment sidecar (`assign_pq`) so the compressed layout gets the
     * same bucket-pruned delete discovery as the raw one. */
   def buildPq(embs: DataFrame, idCol: String, vecCol: String,
@@ -721,8 +707,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * with its sidecar rows — the same economics and crash story as
     * [[append]]. Codebook/centroid drift is
     * [[graft.operators.Ann.ivfStats]]'s contract, as for [[append]]. */
-  def appendPq(embs: DataFrame, idCol: String, vecCol: String): Unit = {
-    layout.recover()
+  def appendPq(embs: DataFrame, idCol: String, vecCol: String): Unit = layout.call {
     val books = codebooks()
     appendTo("codes", "assign_pq", embs, idCol, vecCol)(
       Pq.encode(_, "vector", books).select(col("id"), col("codes"), col("ivf_list")))
@@ -733,8 +718,7 @@ final class IvfIndex(spark: SparkSession, path: String,
     * and committed batch as [[delete]], walked over
     * `codes/ivf_list=N` — so a 100 TB deployment serving from the
     * compressed layout gets steady-state deletes without a rebuild. */
-  def deletePq(ids: DataFrame): Unit = {
-    layout.recover()
+  def deletePq(ids: DataFrame): Unit = layout.call {
     deleteFrom("codes", "assign_pq", ids)
   }
 
@@ -753,9 +737,8 @@ final class IvfIndex(spark: SparkSession, path: String,
   /** ADC top-k over the probed CODE lists — [[graft.operators.Pq
     * .ivfAdcTopK]] semantics with the probe as a partition filter and
     * the LUT scoring m-byte codes straight off the pruned scan. */
-  def searchPq(query: Array[Float], topK: Int, nprobe: Int): DataFrame = {
+  def searchPq(query: Array[Float], topK: Int, nprobe: Int): DataFrame = layout.call {
     require(topK >= 1, s"topK must be positive, got $topK")
-    layout.recover()
     Pq.adcTopK(probed("codes", query, nprobe), "id", "codes", codebooks(), query, topK)
   }
 
@@ -769,9 +752,8 @@ final class IvfIndex(spark: SparkSession, path: String,
     * [[searchWhere]]'s verbatim: a very selective filter can empty the
     * probed lists while matches sit in unprobed ones — raise nprobe. */
   def searchPqWhere(query: Array[Float], topK: Int, nprobe: Int,
-      pred: Column): DataFrame = {
+      pred: Column): DataFrame = layout.call {
     require(topK >= 1, s"topK must be positive, got $topK")
-    layout.recover()
     Pq.adcTopK(probed("codes", query, nprobe).filter(pred), "id", "codes", codebooks(), query, topK)
   }
 
@@ -789,10 +771,9 @@ final class IvfIndex(spark: SparkSession, path: String,
     * while reading `refine`·k vectors instead of every probed row.
     * Output matches [[search]]: (id, cosine) top-k. */
   def searchPqRefined(query: Array[Float], k: Int, nprobe: Int,
-      refine: Int = 3): DataFrame = {
+      refine: Int = 3): DataFrame = layout.call {
     require(k >= 1, s"k must be positive, got $k")
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    layout.recover()
     val cand = searchPq(query, topK = refine * k, nprobe)
       .select(col("id"))
     val probedRaw = probed("lists", query, nprobe)

@@ -116,7 +116,8 @@ object LayoutFs {
     * it lists the files and launches no Spark job: inferring a schema
     * reads parquet footers in a job of its own. A schema, like every
     * [[Memo]], is stamped by the root's modification time when it was
-    * taken and stays good while the root keeps that stamp: every write
+    * taken (once per public [[call]], shared by the call's lookups) and
+    * stays good while the root keeps that stamp: every write
     * of every layout commits through a [[Batch]], whose marker renames
     * into the root, so another handle's commit moves the stamp.
     *
@@ -150,6 +151,33 @@ object LayoutFs {
       if (opened) recoverIn(fs, new Path(root), RootProbe)
       else { open(fs, new Path(root), dirs: _*); opened = true }
 
+    /** The root stamp of the [[call]] running on this thread: null
+      * outside one, None until its first lookup. */
+    private val callStamp = new ThreadLocal[Option[Long]]
+
+    /** One public call of the handle: [[recover]], then `body`, whose
+      * schema and memo lookups share one root stamp, taken at the first
+      * of them (a batch keeps stamping its own). A value stamped earlier
+      * than what it read only expires sooner, so a shared stamp never
+      * serves a stale value. A nested call stamps afresh; the outermost
+      * one ends the stamp. */
+    def call[T](body: => T): T = {
+      recover()
+      val outer = callStamp.get
+      callStamp.set(None)
+      try body finally if (outer == null) callStamp.remove()
+    }
+
+    /** The stamp a lookup compares against: its call's, or its own. */
+    private def lookupStamp(): Long = callStamp.get match {
+      case Some(k) if own.isEmpty => k
+      case None if own.isEmpty =>
+        val k = stamp()
+        callStamp.set(Some(k))
+        k
+      case _ => stamp()
+    }
+
     /** The root's stamp now, recorded as the open batch's own. */
     private def stamp(): Long = {
       val k = try fs.getFileStatus(new Path(root)).getModificationTime
@@ -171,7 +199,7 @@ object LayoutFs {
 
     /** The schema of the live directory `dir`. */
     private def schema(dir: String): StructType = {
-      val k = stamp()
+      val k = lookupStamp()
       Option(schemas.get(dir)) match {
         case Some((k0, s)) if fresh(k0, k) => s
         case _ =>
@@ -204,7 +232,7 @@ object LayoutFs {
       @volatile private var cell: Option[(Long, T)] = None
       /** The kept value while it is fresh, else `compute`, kept. */
       def apply(compute: => T): T = {
-        val k = stamp()
+        val k = lookupStamp()
         cell match {
           case Some((k0, v)) if fresh(k0, k) => v
           case _ => keep(k, compute)
@@ -212,7 +240,7 @@ object LayoutFs {
       }
       /** Compute afresh and keep the value — for a caller whose own job
         * yields it as a by-product. */
-      def refresh(compute: => T): T = keep(stamp(), compute)
+      def refresh(compute: => T): T = keep(lookupStamp(), compute)
       private def keep(k: Long, compute: => T): T = {
         val v = compute
         cell = Some((k, v))
@@ -242,6 +270,7 @@ object LayoutFs {
         }
         memos.foreach(_.settle(b, k))
         own = Set.empty
+        if (callStamp.get != null) callStamp.set(Some(k))
       }
     }
 

@@ -47,8 +47,7 @@ final class NgramLm(spark: SparkSession, path: String) {
   /** The version the pointer currently names — memoized per instance
     * (every flip swaps in a fresh pointer directory). */
   private val versionMemo = layout.memo[Int]("current")
-  def currentVersion(): Int = {
-    layout.recover()
+  def currentVersion(): Int = layout.call {
     versionMemo(layout(pointerLive.toString).head().getInt(0))
   }
 

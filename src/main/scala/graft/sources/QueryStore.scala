@@ -85,8 +85,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
 
   /** Validate (the [[TextAnalysis.validateClauseBatch]] contract) and
     * write the partitioned clause layout, totals sidecar and meta. */
-  def build(clauses: DataFrame): Unit = {
-    layout.recover()
+  def build(clauses: DataFrame): Unit = layout.call {
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true) // two consumers: layout write + totals
     import spark.implicits._
@@ -105,8 +104,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * [[InvertedIndex.append]] disjointness contract, which is also what
     * keeps the totals sidecar additive. Clause and totals rows stage in
     * one batch and move into the live directories together. */
-  def append(clauses: DataFrame): Unit = {
-    layout.recover()
+  def append(clauses: DataFrame): Unit = layout.call {
     val b = readBuckets()
     val c = TextAnalysis.validateClauseBatch(clauses, 1)
       .localCheckpoint(true)
@@ -124,10 +122,9 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * contract as [[InvertedIndex.delete]]: run [[vacuum]] often enough
     * that the mask stays inside the `graft.mask.broadcast.maxBytes`
     * gate. */
-  def delete(queryIds: DataFrame): Unit = {
+  def delete(queryIds: DataFrame): Unit = layout.call {
     require(queryIds.columns.toSeq == Seq("query_id"),
       s"ids must be a single-column (query_id) frame, got ${queryIds.columns.toSeq}")
-    layout.recover()
     layout.commit(_.add("tombstones")(dir =>
       queryIds.select(col("query_id").cast(StringType)).write.parquet(dir.toString)))
   }
@@ -155,8 +152,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * normalization into the SAME rewrite — [[maintain]] uses this when
     * both policies trigger, where vacuum-then-compact would rewrite the
     * whole layout twice back-to-back for the identical end state. */
-  private def vacuumImpl(compactToo: Boolean): Unit = {
-    layout.recover()
+  private def vacuumImpl(compactToo: Boolean): Unit = layout.call {
     if (!fs.exists(new Path(tombstonesPath))) return
     val ts = tombstoneIds()
     layout.commit { batch =>
@@ -173,9 +169,8 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * the listing alone — every [[append]] adds part-files to each
     * touched bucket, and the serve's pruned read pays per-file open
     * cost. The [[InvertedIndex.fileStats]] surface on the query side. */
-  def fileStats(): DataFrame = {
+  def fileStats(): DataFrame = layout.call {
     import spark.implicits._
-    layout.recover()
     layout.partFiles(clausesPath, "tbucket").toDF("tbucket", "n_files", "n_bytes")
   }
 
@@ -183,8 +178,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * one file), committed as one batch — the amortized answer to
     * append's per-batch part-file accretion. Answers are bit-identical
     * (pure layout). */
-  def compact(): Unit = {
-    layout.recover()
+  def compact(): Unit = layout.call {
     layout.commit { batch =>
       batch.stageRows("clauses", Some("tbucket"),
         layout(clausesPath).repartition(col("tbucket")))
@@ -212,13 +206,12 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * that failed to clear its own trigger shows in the report instead
     * of in the next incident. */
   def maintain(maxFilesPerBucket: Int = 8,
-      maxTombstoneFrac: Double = 0.2): DataFrame = {
+      maxTombstoneFrac: Double = 0.2): DataFrame = layout.call {
     require(maxFilesPerBucket >= 1,
       s"maxFilesPerBucket must be >= 1, got $maxFilesPerBucket")
     require(maxTombstoneFrac > 0.0,
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
     import spark.implicits._
-    layout.recover()
     def tombFracNow(): Double =
       if (!fs.exists(new Path(tombstonesPath))) 0.0
       else {
@@ -265,31 +258,27 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   /** The full LIVE clause frame (tombstones masked), `tbucket` kept as
     * the pruning surface — the SQL-registration view behind
     * [[StoreCatalog.registerQueryStore]]. */
-  def liveClauses: DataFrame = {
-    layout.recover()
+  def liveClauses: DataFrame = layout.call {
     liveOnly(layout(clausesPath))
   }
 
   /** The LIVE (query_id, n_must, n_should) totals frame. */
-  def liveTotals: DataFrame = {
-    layout.recover()
+  def liveTotals: DataFrame = layout.call {
     liveOnly(layout(totalsPath))
   }
 
   /** The stored clause rows of exactly the given terms' buckets — the
     * pruned slice [[percolate]] joins; exposed for plan audits. */
-  def clausesForTerms(terms: Seq[String]): DataFrame = {
+  def clausesForTerms(terms: Seq[String]): DataFrame = layout.call {
     require(terms.nonEmpty, "need at least one term")
-    layout.recover()
     val b = readBuckets()
     clausesForBuckets(terms.map(bucketOf(_, b)).distinct.sorted)
   }
 
   /** The stored clause rows of exactly the given BUCKETS — the pruned
     * slice [[percolate]] joins; exposed for plan audits. */
-  def clausesForBuckets(bucketIds: Seq[Int]): DataFrame = {
+  def clausesForBuckets(bucketIds: Seq[Int]): DataFrame = layout.call {
     require(bucketIds.nonEmpty, "need at least one bucket")
-    layout.recover()
     liveOnly(layout(clausesPath)
       .filter(col("tbucket").isin(bucketIds: _*))
       .select(col("query_id"), col("term"), col("clause")))
@@ -315,9 +304,8 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * the alternative pins a batch-sized frame the CALLER would have to
     * release). Output: (query_id, doc_id, n_should). */
   def percolate(docs: DataFrame, idCol: String, text: Column,
-      minShould: Int = 1): DataFrame = {
+      minShould: Int = 1): DataFrame = layout.call {
     require(minShould >= 1, s"minShould must be >= 1, got $minShould")
-    layout.recover()
     val (deduped, batchBuckets) = stageBatch(docs, idCol, text)
     if (batchBuckets.isEmpty) return emptyFired(deduped, idCol)
     // membership needs (doc, term) SETS only — explode without
@@ -426,9 +414,8 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * clause join and gate are [[percolate]]'s. Output (query_id,
     * doc_id, n_should, score), score round-6 DESC-ranking-ready. */
   def percolateScored(docs: DataFrame, idCol: String, text: Column,
-      minShould: Int = 1, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      minShould: Int = 1, k1: Double = 1.2, b: Double = 0.75): DataFrame = layout.call {
     require(minShould >= 1, s"minShould must be >= 1, got $minShould")
-    layout.recover()
     val (deduped, batchBuckets) = stageBatch(docs, idCol, text)
     if (batchBuckets.isEmpty)
       return emptyFired(deduped, idCol).withColumn("score", lit(0.0))

@@ -55,12 +55,14 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"),
       s"orderBy+limit must plan as a distributed top-k heap:\n$p")
     assert(p.contains("BroadcastHashJoin"),
-      s"candidate/rerank joins must broadcast the small side:\n$p")
+      s"the stage-1 candidate join must broadcast the posts side:\n$p")
     assert(!p.contains("GlobalLimit"), s"no global-limit funnel in the default plan:\n$p")
   }
 
   test("search hamming stage reads only sketch columns, never the wide vector (column pruning)") {
-    // build the stage-2 frame the way SearchEngine does and inspect its scan
+    // a sketch-only projection of the store prunes the wide vector column;
+    // the search's own scan reads vector to carry it into the rerank, and
+    // the one-scan row below bounds its columns
     val emb = SparkEntry.embStore(spark, sf)
     val stage2 = emb.select(org.apache.spark.sql.functions.col("id"),
       org.apache.spark.sql.functions.col("binary_code"))
@@ -285,11 +287,13 @@ class PlanAuditSuite extends AnyFunSuite {
       s"sketch pairing must never fall back to all-pairs:\n$p")
   }
 
-  test("matryoshka funnel: both stages are distributed top-k heaps, rerank joins by id (X61)") {
+  test("matryoshka funnel: both stages are distributed top-k heaps over one scan, no rerank join (X61)") {
     val p = staticPlan("q104_matryoshka_search")
     assert("TakeOrderedAndProject".r.findAllIn(p).length == 2,
       s"prefix stage AND rerank must each plan as a top-k heap:\n$p")
     assert(!p.contains("GlobalLimit"), s"no single-partition limit funnel:\n$p")
+    assert(scans("q104_matryoshka_search").size == 1 && !p.contains("Join"),
+      s"the prefix heap carries the vectors into the rerank, no join re-scans them:\n$p")
   }
 
   test("mixture sample: single source-keyed exchange, literal budget map — no join at all (X49)") {
@@ -369,7 +373,7 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(p.contains("jl_project"), s"expected the broadcast codegen kernel:\n$p")
   }
 
-  test("matryoshka stage 1 over a stored prefix column never reads the full vector (X61)") {
+  test("matryoshka over a stored prefix column: one scan reads the prefix and the full vector once (X61)") {
     import org.apache.spark.sql.functions.{col, lit}
     val dir = java.nio.file.Files.createTempDirectory("graft_mrl_audit").toString
     val store = new sources.EmbeddingStore(spark, s"$dir/emb", numBuckets = 4,
@@ -385,11 +389,12 @@ class PlanAuditSuite extends AnyFunSuite {
       prefixCol = Some("vector_prefix"))
     val metas = frame.queryExecution.sparkPlan
       .collect { case s: FileSourceScanExec => s.metadata("ReadSchema") }
-    // stage 1: (id, vector_prefix) only; rerank: the full vector
-    assert(metas.exists(m => m.contains("vector_prefix") && !m.contains("vector:")),
-      s"stage-1 scan must prune the full vector column:\n${metas.mkString("\n")}")
-    assert(metas.exists(_.contains("vector:")),
-      s"the rerank stage still needs the full vector:\n${metas.mkString("\n")}")
+    // stage 1 ranks on the stored prefix; its heap carries the full
+    // vector into the rerank, so no second scan reads it again
+    assert(metas.size == 1 && metas.head.contains("vector_prefix") && metas.head.contains("vector:"),
+      s"one scan reads the prefix and the full vector:\n${metas.mkString("\n")}")
+    assert(!metas.head.contains("normalized_vector"),
+      s"the scan prunes the columns neither stage uses:\n${metas.head}")
     // and the prefix path returns the same rows as the slice path
     val viaSlice = operators.Ann.matryoshkaTopK(store.read(), "id", "vector",
       Array(1f, 2f, 3f, 4f), 2, 8, 4).collect().toSeq
@@ -1348,7 +1353,20 @@ class PlanAuditSuite extends AnyFunSuite {
       s"the final plan shuffles:\n$p")
   }
 
-  test("stage 1 is a LeftSemi join condition over a sketch scan that never reads vector") {
+  /** The store scans of `frame`'s prepared plan, subqueries included:
+    * each one's read columns. */
+  private def storeScans(frame: DataFrame): Seq[Seq[String]] =
+    prepared(frame).collectWithSubqueries {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.endsWith("/emb")) =>
+        s.requiredSchema.fieldNames.toSeq
+    }
+
+  private def searchPosts(b: query.QueryBuilder): DataFrame = {
+    val (store, posts, meta) = searchFixture
+    operators.SearchEngine.searchPosts(store.read(), posts, meta, searchQuery, 3, b)
+  }
+
+  test("stage 1 is a LeftSemi join condition inside the one store scan of a search") {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val plan = prepared(search(filtered))
@@ -1359,19 +1377,45 @@ class PlanAuditSuite extends AnyFunSuite {
     val cond = semis.head.condition.get.references.map(_.name).toSeq
     assert(cond.exists(_.startsWith("__pf_")), s"posts predicate in the join condition: $cond")
     assert(cond.contains("exists"), s"meta existence flag in the join condition: $cond")
-    val reads = semis.head.left.collect { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
-    assert(reads.exists(_.contains("binary_code")) && !reads.exists(_.contains("vector")),
-      s"the stage-1 scan reads the sketch only: $reads")
+    val columns = Set("id", "post_id", "binary_code", "vector", "magnitude")
+    for ((name, frame) <- Seq("filtered search" -> search(filtered),
+        "search" -> search(query.QueryBuilder()), "searchPosts" -> searchPosts(query.QueryBuilder()))) {
+      val reads = storeScans(frame)
+      assert(reads.size == 1, s"$name: exactly one store scan, got $reads:\n${prepared(frame)}")
+      assert(reads.head.toSet.subsetOf(columns), s"$name: the store scan reads ${reads.head}")
+    }
   }
 
-  test("job counts: filtered search <= 6, unfiltered <= 2, a warm store.read() 0") {
+  test("stage-1 cap: no heap carries vectors past the hamming cut, and the capped search matches the model") {
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    val (store, posts, meta) = searchFixture
+    val n = 2
+    val cfg = model.SearchConfig(stage1Limit = Some(30L))
+    assert(cfg.stage1Limit.get > cfg.stage2Factor * n, "the cap must exceed the hamming cut")
+    for (b <- Seq(query.QueryBuilder(), filtered)) {
+      val frame = operators.SearchEngine.search(store.read(), posts, meta, searchQuery, n, b, cfg)
+      val heaps = prepared(frame).collectWithSubqueries {
+        case t: TakeOrderedAndProjectExec if t.child.output.exists(_.name == "vector") => t.limit
+      }
+      assert(heaps.nonEmpty, s"the hamming heap carries the survivors' vectors:\n${prepared(frame)}")
+      assert(heaps.forall(_ <= cfg.stage2Factor * n),
+        s"a heap holding vectors has limit ${heaps.max} > ${cfg.stage2Factor * n}:\n${prepared(frame)}")
+      val model = operators.SearchEngineSuite.Reference.search(store.read(), posts, meta, searchQuery, n, b, cfg)
+      assert(frame.collect().toSeq == model.collect().toSeq, s"capped search diverged from the model for $b")
+    }
+  }
+
+  test("job counts: filtered search <= 5, unfiltered <= 1, searchPosts <= 1, a warm store.read() 0") {
     val (store, _, _) = searchFixture
     search(filtered).collect(); search(query.QueryBuilder()).collect() // warm
+    searchPosts(query.QueryBuilder()).collect()
     assert(jobsOf(store.read()) == 0, "read() must not infer the schema again")
     val f = jobsOf(search(filtered).collect())
-    assert(f <= 6, s"filtered search launched $f jobs")
+    assert(f <= 5, s"filtered search launched $f jobs")
     val u = jobsOf(search(query.QueryBuilder()).collect())
-    assert(u <= 2, s"unfiltered search launched $u jobs")
+    assert(u <= 1, s"unfiltered search launched $u jobs")
+    val p = jobsOf(searchPosts(query.QueryBuilder()).collect())
+    assert(p <= 1, s"searchPosts launched $p jobs")
   }
 
   test("job counts: registering and planning SQL views over more partition dirs than the parallel-listing threshold start no job") {

@@ -18,6 +18,7 @@ import graft.query._
   * plain Scala, exact id sequences asserted, including the stage-4 sort
   * branch and the deterministic stage-1 cap. */
 class SearchEngineSuite extends AnyFunSuite {
+  import SearchEngineSuite.Reference
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -430,77 +431,6 @@ class SearchEngineSuite extends AnyFunSuite {
 
   // ---- equivalence with the flag-and-aggregate formulation ---------------
 
-  /** The search as formulated before stage 1 moved into the hamming scan
-    * and stage 4 onto the cut frame: candidate posts through one left-joined
-    * flag column per meta predicate and a distinct, semi-joined to the
-    * store; meta sort keys aggregated per post over all of postmeta, then
-    * joined to the top-5n frame after the posts attributes. */
-  private object Reference {
-    def candidatePosts(posts: DataFrame, postmeta: DataFrame, qb: QueryBuilder): DataFrame = {
-      val flagOf = qb.metaFilters.zipWithIndex.toMap
-      val flagged = flagOf.foldLeft(posts) { case (acc, (f, i)) =>
-        val matching = postmeta
-          .filter(col("meta_key") === f.field && QueryCompiler.predicate(f, _ => col("meta_value")))
-          .select(col("post_id").as("__mf_post_id")).distinct()
-          .withColumn(s"__flag_$i", lit(true))
-        acc.join(matching, acc("ID") === col("__mf_post_id"), "left").drop("__mf_post_id")
-          .withColumn(s"__flag_$i", coalesce(col(s"__flag_$i"), lit(false)))
-      }
-      val groups = qb.groups.filter(_.nonEmpty).map(_.map { f =>
-        if (f.meta) col(s"__flag_${flagOf(f)}") else QueryCompiler.predicate(f, flagged.apply)
-      }.reduce(_ || _))
-      flagged.filter(groups.foldLeft(lit(true))(_ && _))
-        .select(col("ID").as("post_id")).distinct()
-    }
-
-    def search(emb: DataFrame, posts: DataFrame, postmeta: DataFrame, q: Array[Float],
-        n: Int, qb: QueryBuilder, cfg: SearchConfig): DataFrame = {
-      val candidates =
-        if (qb.hasFilters)
-          emb.join(broadcast(candidatePosts(posts, postmeta, qb)), Seq("post_id"), "left_semi")
-        else emb
-      val staged = cfg.stage1Limit.fold(candidates)(cap =>
-        candidates.orderBy(col("id").asc).limit(cap.toInt))
-      val hamming = staged
-        .withColumn("hamming_distance",
-          hammingDist(col("binary_code"), lit(SearchEngine.packQuery(q))))
-        .orderBy(col("hamming_distance").asc, col("id").asc)
-        .limit(cfg.stage2Factor * n)
-        .select(col("id"), col("post_id"), col("hamming_distance"))
-      val cosine = emb.select(col("id").as("__rid"), col("vector"), col("magnitude"))
-        .join(broadcast(hamming), col("__rid") === hamming("id"))
-        .withColumn("cosine_similarity",
-          vecDot(col("vector"), lit(q).cast(ArrayType(FloatType))) /
-            (col("magnitude") * lit(SearchEngine.magnitudeOf(q)) + lit(CosineEps)))
-        .orderBy(col("cosine_similarity").desc, col("id").asc)
-        .limit(cfg.stage3Factor * n)
-        .select(col("id"), col("post_id"), col("hamming_distance"), col("cosine_similarity"))
-      val sorted =
-        if (qb.hasSorts) {
-          val joined = cosine.join(broadcast(posts.withColumnRenamed("ID", "__post_ID")),
-            cosine("post_id") === col("__post_ID"), "left").drop("__post_ID")
-          val withMeta = qb.metaSortKeys.foldLeft(joined) { (acc, k) =>
-            val agg = postmeta.filter(col("meta_key") === k)
-              .groupBy(col("post_id").as("__ms_post_id"))
-              .agg(max(col("meta_value")).as(s"__meta_sort_$k"))
-            acc.join(agg, acc("post_id") === col("__ms_post_id"), "left").drop("__ms_post_id")
-          }
-          withMeta.orderBy(QueryCompiler.sortColumns(qb, withMeta.apply) :+ col("id").asc: _*)
-            .select(col("id"), col("post_id"), col("hamming_distance"), col("cosine_similarity"))
-        } else cosine.orderBy(col("cosine_similarity").desc, col("id").asc)
-      sorted.limit(n)
-    }
-
-    def searchPosts(pool: DataFrame, nPosts: Int): DataFrame =
-      pool.withColumn("__rk", row_number().over(Window.partitionBy(col("post_id"))
-          .orderBy(col("cosine_similarity").desc, col("id").asc)))
-        .filter(col("__rk") === 1)
-        .select(col("post_id"), col("id").as("best_chunk_id"),
-          col("hamming_distance"), col("cosine_similarity"))
-        .orderBy(col("cosine_similarity").desc, col("post_id").asc)
-        .limit(nPosts)
-  }
-
   private val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
   private def day(d: Int) = new Timestamp(t0.getTime + d * 86400000L)
   private val langs = Seq("en", "de", "fr")
@@ -624,5 +554,80 @@ class SearchEngineSuite extends AnyFunSuite {
     assert((got(1L).getString(4), got(1L).getString(5)) == (("9", "a")), "string MAX per key")
     assert((got(2L).getString(4), got(2L).getString(5)) == ((null, "b")))
     assert((got(3L).getString(4), got(3L).getString(5)) == ((null, null)), "no meta rows")
+  }
+}
+
+object SearchEngineSuite {
+  /** The search as formulated before stage 1 moved into the hamming scan
+    * and stage 4 onto the cut frame: candidate posts through one left-joined
+    * flag column per meta predicate and a distinct, semi-joined to the
+    * store; meta sort keys aggregated per post over all of postmeta, then
+    * joined to the top-5n frame after the posts attributes; the rerank
+    * refetches the survivors' vectors by a join, a second store scan.
+    * The one-scan search must answer the same, bit for bit. */
+  private[graft] object Reference {
+    def candidatePosts(posts: DataFrame, postmeta: DataFrame, qb: QueryBuilder): DataFrame = {
+      val flagOf = qb.metaFilters.zipWithIndex.toMap
+      val flagged = flagOf.foldLeft(posts) { case (acc, (f, i)) =>
+        val matching = postmeta
+          .filter(col("meta_key") === f.field && QueryCompiler.predicate(f, _ => col("meta_value")))
+          .select(col("post_id").as("__mf_post_id")).distinct()
+          .withColumn(s"__flag_$i", lit(true))
+        acc.join(matching, acc("ID") === col("__mf_post_id"), "left").drop("__mf_post_id")
+          .withColumn(s"__flag_$i", coalesce(col(s"__flag_$i"), lit(false)))
+      }
+      val groups = qb.groups.filter(_.nonEmpty).map(_.map { f =>
+        if (f.meta) col(s"__flag_${flagOf(f)}") else QueryCompiler.predicate(f, flagged.apply)
+      }.reduce(_ || _))
+      flagged.filter(groups.foldLeft(lit(true))(_ && _))
+        .select(col("ID").as("post_id")).distinct()
+    }
+
+    def search(emb: DataFrame, posts: DataFrame, postmeta: DataFrame, q: Array[Float],
+        n: Int, qb: QueryBuilder, cfg: SearchConfig): DataFrame = {
+      val candidates =
+        if (qb.hasFilters)
+          emb.join(broadcast(candidatePosts(posts, postmeta, qb)), Seq("post_id"), "left_semi")
+        else emb
+      val staged = cfg.stage1Limit.fold(candidates)(cap =>
+        candidates.orderBy(col("id").asc).limit(cap.toInt))
+      val hamming = staged
+        .withColumn("hamming_distance",
+          hammingDist(col("binary_code"), lit(SearchEngine.packQuery(q))))
+        .orderBy(col("hamming_distance").asc, col("id").asc)
+        .limit(cfg.stage2Factor * n)
+        .select(col("id"), col("post_id"), col("hamming_distance"))
+      val cosine = emb.select(col("id").as("__rid"), col("vector"), col("magnitude"))
+        .join(broadcast(hamming), col("__rid") === hamming("id"))
+        .withColumn("cosine_similarity",
+          vecDot(col("vector"), lit(q).cast(ArrayType(FloatType))) /
+            (col("magnitude") * lit(SearchEngine.magnitudeOf(q)) + lit(CosineEps)))
+        .orderBy(col("cosine_similarity").desc, col("id").asc)
+        .limit(cfg.stage3Factor * n)
+        .select(col("id"), col("post_id"), col("hamming_distance"), col("cosine_similarity"))
+      val sorted =
+        if (qb.hasSorts) {
+          val joined = cosine.join(broadcast(posts.withColumnRenamed("ID", "__post_ID")),
+            cosine("post_id") === col("__post_ID"), "left").drop("__post_ID")
+          val withMeta = qb.metaSortKeys.foldLeft(joined) { (acc, k) =>
+            val agg = postmeta.filter(col("meta_key") === k)
+              .groupBy(col("post_id").as("__ms_post_id"))
+              .agg(max(col("meta_value")).as(s"__meta_sort_$k"))
+            acc.join(agg, acc("post_id") === col("__ms_post_id"), "left").drop("__ms_post_id")
+          }
+          withMeta.orderBy(QueryCompiler.sortColumns(qb, withMeta.apply) :+ col("id").asc: _*)
+            .select(col("id"), col("post_id"), col("hamming_distance"), col("cosine_similarity"))
+        } else cosine.orderBy(col("cosine_similarity").desc, col("id").asc)
+      sorted.limit(n)
+    }
+
+    def searchPosts(pool: DataFrame, nPosts: Int): DataFrame =
+      pool.withColumn("__rk", row_number().over(Window.partitionBy(col("post_id"))
+          .orderBy(col("cosine_similarity").desc, col("id").asc)))
+        .filter(col("__rk") === 1)
+        .select(col("post_id"), col("id").as("best_chunk_id"),
+          col("hamming_distance"), col("cosine_similarity"))
+        .orderBy(col("cosine_similarity").desc, col("post_id").asc)
+        .limit(nPosts)
   }
 }

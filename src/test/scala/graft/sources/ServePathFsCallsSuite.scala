@@ -18,9 +18,9 @@ import graft.TestSpark
   * as one `globStatus` plus the `listStatus` calls Hadoop's globber makes
   * through the same filesystem for its wildcards and the
   * `getFileStatus` calls it makes for literal names. `getFileStatus`
-  * counts every status lookup: the root stamp's (one per schema or memo
-  * lookup, [[LayoutFs.Live]]), the one inside each `exists`, Spark's and
-  * the globber's. */
+  * counts every status lookup: the root stamp's (one per call that looks
+  * up a schema or memo, [[LayoutFs.Live.call]]), the one inside each
+  * `exists`, Spark's and the globber's. */
 class ServePathFsCallsSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -82,23 +82,37 @@ class ServePathFsCallsSuite extends AnyFunSuite {
     fixture._2.read().collect()
   }
 
+  /** An unfiltered, unsorted search reads neither. */
+  private lazy val posts = Seq((1L, "publish")).toDF("ID", "post_status")
+  private lazy val postmeta = Seq((1L, "lang", "en")).toDF("post_id", "meta_key", "meta_value")
+
+  check("SearchEngine.search", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 2L,
+      "globStatus" -> 1L, "listStatus" -> 4L, "getFileStatus" -> 8L)) {
+    graft.operators.SearchEngine.search(fixture._2.read(), posts, postmeta, query, n = 5).collect()
+  }
+
+  check("SearchEngine.searchPosts", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 2L,
+      "globStatus" -> 1L, "listStatus" -> 4L, "getFileStatus" -> 8L)) {
+    graft.operators.SearchEngine.searchPosts(fixture._2.read(), posts, postmeta, query, nPosts = 3).collect()
+  }
+
   check("IvfIndex.search", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 2L,
-      "globStatus" -> 1L, "listStatus" -> 6L, "getFileStatus" -> 15L)) {
+      "globStatus" -> 1L, "listStatus" -> 6L, "getFileStatus" -> 14L)) {
     fixture._3.search(query, k = 5, nprobe = 2).collect()
   }
 
   check("IvfIndex.searchPq", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 2L,
-      "globStatus" -> 1L, "listStatus" -> 6L, "getFileStatus" -> 16L)) {
+      "globStatus" -> 1L, "listStatus" -> 6L, "getFileStatus" -> 14L)) {
     fixture._5.searchPq(query, topK = 5, nprobe = 2).collect()
   }
 
   check("InvertedIndex.vocab", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 8L,
-      "globStatus" -> 1L, "listStatus" -> 17L, "getFileStatus" -> 29L)) {
+      "globStatus" -> 1L, "listStatus" -> 17L, "getFileStatus" -> 27L)) {
     fixture._4.vocab().collect()
   }
 
   check("InvertedIndex.bm25", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 7L,
-      "globStatus" -> 1L, "listStatus" -> 9L, "getFileStatus" -> 22L)) {
+      "globStatus" -> 1L, "listStatus" -> 9L, "getFileStatus" -> 20L)) {
     fixture._4.bm25(Seq("sort", "merge"), k = 3).collect()
   }
 
