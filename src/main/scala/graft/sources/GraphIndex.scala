@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,7 +31,8 @@ import graft.operators.GraphAnn
   *    committed batch, O(batch) I/O, edge files untouched. Deleted
   *    nodes keep ROUTING — their edges still carry the walk, which is
   *    what preserves navigability — but never RETURN ([[searchTopK]]
-  *    anti-joins the broadcast tombstone set before the final cut).
+  *    masks them before the final cut, under the [[Tombstones]]
+  *    vacuum-cadence contract — here the vacuum is a rebuild).
   *  - There is deliberately NO edge-rewriting vacuum/compact: removing
   *    a tombstoned node's edges without re-patching its neighbors'
   *    neighborhoods (FreshDiskANN's StreamingMerge) breaks the graph
@@ -48,7 +48,6 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
 
   private def edgesPath = s"$path/edges"
   private def metaPath = s"$path/meta"
-  private def tombstonesPath = s"$path/tombstones"
 
   /** The graph's one handle on its root ([[LayoutFs.Live]]): reads of
     * the live layout directories with pinned schemas, memos and commits.
@@ -57,7 +56,9 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     * earlier version's swaps left bucket backups — and every later call
     * probes the root once, rolling a committed batch forward. */
   private[graft] val layout = new LayoutFs.Live(spark, path, "edges")
-  import layout.fs
+
+  /** The graph's lazily deleted node ids ([[Tombstones]]). */
+  private[graft] val tombstones = new Tombstones(layout, "id")
 
   private def bucketOf(c: Column): Column = pmod(hash(c), lit(buckets))
 
@@ -82,7 +83,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       // only the nodes whose neighborhoods actually change).
       b.stageRows("meta", None, spark.range(1).select(lit(buckets).as("buckets"),
         lit(hasCosine).as("has_cosine")))
-      b.drop("tombstones")
+      tombstones.drop(b)
     }
   }
 
@@ -262,20 +263,9 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
     graft.util.Pins.release(addDf)
   }
 
-  /** Lazy delete: add ids to the tombstone table in one committed batch
-    * (O(batch)); the nodes keep routing but stop returning on the next
-    * search. */
-  def delete(ids: DataFrame): Unit = {
-    require(ids.columns.toSeq == Seq("id"),
-      s"ids must be a single-column (id) frame, got ${ids.columns.toSeq}")
-    layout.commit(_.add("tombstones")(dir =>
-      ids.select(col("id").cast(LongType)).write.parquet(dir.toString)))
-  }
-
-  private def tombstoneIds(): Option[DataFrame] =
-    if (fs.exists(new Path(tombstonesPath)))
-      Some(layout(tombstonesPath).select(col("id")).distinct())
-    else None
+  /** Lazy delete: tombstone the ids ([[Tombstones.add]]); the nodes
+    * keep routing but stop returning on the next search. */
+  def delete(ids: DataFrame): Unit = layout.call(tombstones.add(ids, LongType))
 
   /** Per-bucket part-file counts (the sibling observability surface):
     * build writes set the baseline and [[append]]'s bucket rewrites
@@ -296,12 +286,8 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
   def searchTopK(embs: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int, beamWidth: Int, maxHops: Int = 64,
       entryId: Option[Long] = None): DataFrame = {
-    val resultFilter = (visited: DataFrame) => tombstoneIds() match {
-      case Some(ts) => visited.join(broadcast(ts), Seq("id"), "left_anti")
-      case None => visited
-    }
     walk(embs, idCol, vecCol, query, k, beamWidth, maxHops, entryId,
-      resultFilter)
+      visited => tombstones.mask()(visited))
   }
 
   /** The walk WITHOUT the tombstone result filter — [[append]]'s
@@ -345,7 +331,7 @@ final class GraphIndex(spark: SparkSession, path: String, buckets: Int = 16) {
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
     import spark.implicits._
     val nNodes = edges().select(col("src")).distinct().count()
-    val nTomb = tombstoneIds().map(_.count()).getOrElse(0L)
+    val nTomb = tombstones.count()
     val tombFrac =
       if (nNodes == 0L) (if (nTomb > 0L) 1.0 else 0.0)
       else nTomb.toDouble / nNodes

@@ -33,9 +33,10 @@ import graft.operators.TextAnalysis
   * every bucket, so IN-PLACE removal would rewrite work ∝ the index per
   * batch — instead [[delete]] appends the ids to a tiny `tombstones/`
   * table (O(batch) I/O, postings untouched) and every read path
-  * ([[termPostings]], [[bm25]]) anti-joins the broadcast tombstone set
-  * from both the postings slice and the doclens table, so phrase hits
-  * AND corpus stats (N, avgdl, df) see exactly the surviving corpus —
+  * ([[termPostings]], [[bm25]]) anti-joins the tombstone set
+  * ([[Tombstones]]) from both the postings slice and the doclens
+  * table, so phrase hits AND corpus stats (N, avgdl, df) see exactly
+  * the surviving corpus —
   * bit-identical to an index rebuilt without the deleted docs
   * (suite-pinned; q217 gates it against q214's oracle + a WHERE).
   * [[vacuum]] amortizes the physical removal: one anti-join rewrite of
@@ -89,19 +90,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
   private[graft] val layout = new LayoutFs.Live(spark, path)
   import layout.fs
 
-  /** The engine-wide 28-bit md5 bucket (the minhash/sidecar idiom) —
-    * Column form for writes, Scala form for query-time pruning; the
-    * suite pins their agreement. */
-  private def bucketCol(term: Column, b: Int): Column =
-    pmod(conv(substring(md5(term), 1, 7), 16, 10).cast(LongType), lit(b.toLong))
-      .cast(IntegerType)
+  /** The index's lazily deleted doc ids ([[Tombstones]]). */
+  private[graft] val tombstones = new Tombstones(layout, "doc_id")
 
-  private[graft] def bucketOf(term: String, b: Int): Int = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(term.getBytes("UTF-8"))
-    val hex = d.take(4).map("%02x".format(_)).mkString.take(7)
-    (java.lang.Long.parseLong(hex, 16) % b).toInt
-  }
+  import InvertedIndex.bucketCol
+  private[graft] def bucketOf(term: String, b: Int): Int = InvertedIndex.bucketOf(term, b)
 
   /** Census partition key (X226): the md5 bucket of the term's FIRST
     * character — `tprefix=N` directory partitions over the census
@@ -142,7 +135,6 @@ final class InvertedIndex(spark: SparkSession, path: String,
     bucketsMemo(layout(metaPath).head().getInt(0))
 
   private def doclensPath = s"$path/doclens"
-  private def tombstonesPath = s"$path/tombstones"
   private def censusPath = s"$path/census"
   private def censusBasePath = s"$censusPath/base"
 
@@ -175,7 +167,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
       // fielded sidecar would serve the OLD corpus's per-field tfs, and
       // pending sidecar deltas describe the OLD corpus's append batches —
       // rebuild the derived artifacts on the cadence
-      Seq("tombstones", "blockmax", "blockmax_files", "fielded", "derived_meta/fielded",
+      tombstones.drop(batch)
+      Seq("blockmax", "blockmax_files", "fielded", "derived_meta/fielded",
         "derived_meta/blockmax", "forward_delta", "fielded_delta").foreach(batch.drop)
     }
   }
@@ -187,15 +180,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * partition discovery rejects — detect the old layout at the
     * mutation entry points and rewrite it once through the partitioned
     * writer (same rows, one batch), after which every append is
-    * directory-additive again. No-op on current layouts (one
-    * listStatus). */
-  private def migrateFlatCensusBase(): Unit = {
-    val baseP = new Path(censusBasePath)
-    if (fs.exists(baseP) && fs.listStatus(baseP).exists(s =>
-        s.isFile && !s.getPath.getName.startsWith("_"))) {
+    * directory-additive again. No-op on current layouts, whose base
+    * root holds no data file ([[LayoutFs.dataFiles]], one listStatus). */
+  private def migrateFlatCensusBase(): Unit =
+    if (LayoutFs.dataFiles(fs, new Path(censusBasePath)).nonEmpty)
       layout.commit(stageCensus(_, censusSummed(), onePerPrefix = true))
-    }
-  }
 
   /** Append new documents' postings, doclens and census rows —
     * directory-additive, work ∝ the batch. Uses the STORED bucket
@@ -293,7 +282,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(other.readBuckets() == b,
       s"bucket-count mismatch: this=$b source=${other.readBuckets()} — " +
         "a re-bucketing merge is a rebuild")
-    require(!other.layout.fs.exists(new Path(other.tombstonesPath)),
+    require(!other.tombstones.present,
       s"source ${other.indexPath} has pending tombstones — vacuum it first")
     layout.commit { batch =>
       val srcPostings = other.layout(other.postingsPath)
@@ -335,83 +324,21 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * ([[graft.streaming.IndexIngest]]): a replayed at-least-once batch of
     * a doc that was later tombstoned must still be recognized as
     * already-ingested (re-appending it would resurrect the doc), so the
-    * guard is deliberately NOT [[liveOnly]]-filtered. */
+    * guard is deliberately NOT tombstone-masked. */
   def appendedIds: DataFrame = layout.call {
     layout(doclensPath).select(col("doc_id"))
   }
 
-  /** Logical deletion (X175): add the ids to the tombstone table, one
-    * committed batch.
-    *
-    * '''Vacuum cadence — the tombstone-bound contract.''' Every read
-    * masks tombstones with an anti-join whose cost (and, on the fast
-    * path, driver/executor memory) is ∝ the UNVACUUMED tombstone mass,
-    * so the operational contract is: run [[vacuum]] (or [[maintain]],
-    * whose `maxTombstoneFrac` policy encodes exactly this bound) often
-    * enough that the tombstone table stays within the
-    * `graft.mask.broadcast.maxBytes` broadcast gate (default 32 MiB —
-    * tens of millions of ids). Within the gate reads pay one broadcast
-    * anti-join; past it [[tombstoneIds]] drops the hint and reads
-    * degrade gracefully to a shuffled anti-join (correct, never an
-    * OOM) until the next vacuum restores the fast path. The SQL views
-    * ([[graft.sources.StoreCatalog.registerInvertedIndex]]) mask through
-    * the same plan-level anti-join and share this contract. —
-    * O(batch) I/O, no postings or doclens files touched. Deleting an id
-    * that is not in the index is a harmless no-op (the anti-join finds
-    * nothing to mask). Takes effect on the very next read; [[vacuum]]
-    * later makes it physical. */
+  /** Logical deletion (X175): tombstone the ids ([[Tombstones.add]],
+    * under its vacuum-cadence contract, which [[maintain]]'s
+    * `maxTombstoneFrac` policy enforces), cast to the stored doclens id
+    * type. No postings or doclens file is touched; every read masks the
+    * ids from the next one on (an index that never deleted plans exactly
+    * as before, so q213/q214 stay bit-identical), and [[vacuum]] later
+    * makes the deletion physical. */
   def delete(ids: DataFrame): Unit = layout.call {
-    require(ids.columns.toSeq == Seq("doc_id"),
-      s"ids must be a single-column (doc_id) frame, got ${ids.columns.toSeq}")
-    // cast to the stored doclens id type: two delete batches with
-    // different integer widths must not leave conflicting parquet
-    // schemas in the tombstone dir (the next read would mis-infer)
-    val idType = layout(doclensPath).schema("doc_id").dataType
-    layout.commit(_.add("tombstones")(dir =>
-      ids.select(col("doc_id").cast(idType)).write.parquet(dir.toString)))
+    tombstones.add(ids, layout(doclensPath).schema("doc_id").dataType)
   }
-
-  /** Total on-disk bytes of the tombstone table — the size-gate input
-    * for [[tombstoneIds]], from the file listing alone (no job). */
-  private def tombstoneBytes(): Long =
-    fs.listStatus(new Path(tombstonesPath))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .map(_.getLen).sum
-
-  /** The distinct tombstoned-id frame, broadcast-hinted ONLY while the
-    * table is small (on-disk bytes ≤ `graft.mask.broadcast.maxBytes`,
-    * default 32 MiB — see [[InvertedIndex.maskBroadcastBytes]]). The
-    * hint is the fast path the vacuum cadence is expected to maintain;
-    * past the gate the hint is DROPPED and AQE/stats pick the join
-    * strategy, so a takedown batch of 10⁷–10⁸ ids landed before the
-    * next vacuum degrades to a shuffled anti-join instead of a driver
-    * OOM — reads stay correct and bounded either way. */
-  private def tombstoneIds(): DataFrame = {
-    val ts = layout(tombstonesPath)
-      .select(col("doc_id")).distinct()
-    if (tombstoneBytes() <= InvertedIndex.maskBroadcastBytes(spark))
-      broadcast(ts)
-    else ts
-  }
-
-  /** Anti-join the tombstone set out of a doc_id-keyed frame — the
-    * read-side half of the tombstone contract, size-gated through
-    * [[tombstoneIds]]. No tombstone table ⇒ the frame passes through
-    * untouched (zero plan change for an index that never deleted, so
-    * q213/q214 stay bit-identical). Single-writer caveat: the existence
-    * check happens at plan-build time but the read executes lazily, so
-    * a query frame must not straddle a concurrent [[vacuum]] (which
-    * deletes the tombstone dir) — the engine-wide
-    * single-maintenance-writer assumption every layout here shares. */
-  private def liveOnly(df: DataFrame): DataFrame = liveMask()(df)
-
-  /** [[liveOnly]] as a mask, from one probe of the tombstones directory:
-    * what a call that masks several frames applies to each of them. */
-  private def liveMask(): DataFrame => DataFrame =
-    if (fs.exists(new Path(tombstonesPath))) {
-      val ts = tombstoneIds()
-      _.join(ts, Seq("doc_id"), "left_anti")
-    } else identity
 
   /** One LIVE doc count per layout state, not per serve call. The
     * serve surface counts the live doclens in several entry points
@@ -424,7 +351,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * drops it. */
   private val liveCountMemo = layout.memo[Long]("doclens", "tombstones")
   private[graft] def liveDocCount(): Long =
-    liveCountMemo(liveOnly(layout(doclensPath)).count())
+    liveCountMemo(tombstones.mask()(layout(doclensPath)).count())
 
   /** Physically remove tombstoned docs (X175): ONE anti-join rewrite
     * each of postings (partition layout preserved) and doclens, plus a
@@ -443,8 +370,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * trigger at once, where vacuum-then-compact would rewrite the whole
     * layout twice back-to-back for the identical end state. */
   private def vacuumImpl(compactToo: Boolean): Unit = layout.call {
-    if (!fs.exists(new Path(tombstonesPath))) return
-    val ts = tombstoneIds()
+    if (!tombstones.present) return
+    val ts = tombstones.ids()
     layout.commit { batch =>
       val postings = layout(postingsPath)
       if (fs.exists(new Path(censusBasePath)))
@@ -461,7 +388,8 @@ final class InvertedIndex(spark: SparkSession, path: String,
       // pending sidecar deltas may describe docs this vacuum just removed
       // — applying them later would resurrect ghosts; drop them and let
       // maintainDerived fall back to the full rebuild
-      Seq("forward_delta", "fielded_delta", "tombstones").foreach(batch.drop)
+      Seq("forward_delta", "fielded_delta").foreach(batch.drop)
+      tombstones.drop(batch)
     }
   }
 
@@ -495,7 +423,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * pending, the masked docs' contribution subtracts out through one
     * column-pruned (term, doc_id) pass over the postings restricted to
     * the tombstone set — the transient cost [[vacuum]] amortizes away,
-    * exactly like [[liveOnly]]'s anti-join. A [[vacuum]] rewrites
+    * exactly like the read-side tombstone mask. A [[vacuum]] rewrites
     * postings, census and tombstones in one commit, so the two sides
     * never disagree. A pre-census layout falls back to the full
     * live-postings census (documented fallback, the [[IvfIndex]]
@@ -529,13 +457,13 @@ final class InvertedIndex(spark: SparkSession, path: String,
     def maskTerm(df: DataFrame) =
       buckets.fold(df)(bs => df.filter(tprefixCol(col("term")).isin(bs: _*)))
     if (!fs.exists(new Path(censusBasePath)))
-      return maskTerm(liveOnly(layout(postingsPath))
+      return maskTerm(tombstones.mask()(layout(postingsPath))
         .groupBy(col("term"))
         .agg(count_distinct(col("doc_id")).as("df")))
     val delta =
-      if (fs.exists(new Path(tombstonesPath)))
+      if (tombstones.present)
         Some(maskTerm(layout(postingsPath)
-          .join(tombstoneIds(), Seq("doc_id"), "left_semi")
+          .join(tombstones.ids(), Seq("doc_id"), "left_semi")
           .groupBy(col("term"))
           .agg(count_distinct(col("doc_id")).as("df"))))
       else None
@@ -552,7 +480,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * reports what queries actually see. One full-layout scan by design:
     * it is the monitoring pass, run at monitoring cadence. */
   def stats(): DataFrame = layout.call {
-    liveOnly(layout(postingsPath))
+    tombstones.mask()(layout(postingsPath))
       .groupBy(col("tbucket"))
       .agg(count(lit(1)).as("n_postings"),
         count_distinct(col("term")).as("n_terms"),
@@ -605,7 +533,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     *  - `vacuum` when distinct tombstoned ids / doclens rows >
     *    `maxTombstoneFrac` — the broadcast + read-side anti-join tax
     *    has outgrown its amortization (this policy is the enforcement
-    *    arm of the vacuum-cadence contract documented on [[delete]]:
+    *    arm of the [[Tombstones]] vacuum-cadence contract:
     *    run on a cadence that keeps the mask inside the
     *    `graft.mask.broadcast.maxBytes` gate);
     *  - `compact` when any term bucket holds more than
@@ -626,12 +554,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
     import spark.implicits._
     val tombFrac =
-      if (!fs.exists(new Path(tombstonesPath))) 0.0
+      if (!tombstones.present) 0.0
       else {
         val nDocs = layout(doclensPath).count()
-        if (nDocs == 0L) 1.0
-        else layout(tombstonesPath)
-          .select(col("doc_id")).distinct().count().toDouble / nDocs
+        if (nDocs == 0L) 1.0 else tombstones.count().toDouble / nDocs
       }
     val maxFiles = fileStats().agg(max(col("n_files"))).head() match {
       case r if r.isNullAt(0) => 0
@@ -862,10 +788,10 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * equality toward the safe side. The check reads O(delta) rows. */
   private def deltaCovers(name: String, deltaDocs: => Long,
       built: Long, liveDocs: Long): Boolean = {
-    // with no tombstones in force (checked first), liveOnly(doclens)
-    // IS the raw doclens count, so the caller's pass-wide live count
+    // with no tombstones in force (checked first), the live doclens
+    // count IS the raw one, so the caller's pass-wide live count
     // substitutes for a fresh count job
-    if (fs.exists(new Path(tombstonesPath))) return false
+    if (tombstones.present) return false
     if (built <= 0L) return false
     built + deltaDocs == liveDocs
   }
@@ -922,18 +848,11 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * for real. */
   private def maintainBlockMaxCheap(live: Long): Option[String] = {
     def covered: Boolean = {
-      if (fs.exists(new Path(tombstonesPath))) return false
+      if (tombstones.present) return false
       if (!fs.exists(new Path(blockmaxFilesPath))) return false
       if (!fs.exists(new Path(derivedMetaPath("blockmax")))) return false
-      val live = fs.listStatus(new Path(postingsPath))
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("tbucket="))
-        .flatMap { d =>
-          val bk = d.getPath.getName.stripPrefix("tbucket=").toInt
-          fs.listStatus(d.getPath)
-            .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-            .map(f => (bk, f.getPath.getName))
-        }.toSet
+      val live = LayoutFs.partDataFiles(fs, new Path(postingsPath), "tbucket")
+        .flatMap { case (bk, files) => files.map(f => (bk, f.getPath.getName)) }.toSet
       val sidecar = layout(blockmaxFilesPath)
         .select(col("tbucket"), col("fname")).distinct()
         .collect().map(r => (r.getInt(0), r.getString(1))).toSet
@@ -949,7 +868,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
   /** The LIVE postings scan every derived builder aggregates from,
     * carrying the file-identity column block-max's file grain needs. */
   private def livePostingsScan(): DataFrame =
-    liveOnly(layout(postingsPath)
+    tombstones.mask()(layout(postingsPath)
       .withColumn("__fname", substring_index(input_file_name(), "/", -1)))
 
   /** Rebuild the named derived artifacts from ONE shared live-postings
@@ -1043,7 +962,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         count(when(col("term") === t, 1)).as(s"tf$i") },
         members.tail.map { case (t, i) =>
           count(when(col("term") === t, 1)).as(s"tf$i") }: _*)
-    val dls = liveOnly(layout(doclensPath))
+    val dls = tombstones.mask()(layout(doclensPath))
     // match-only inner join (the bm25PerDoc contract): scored rows
     // bounded by the member terms' postings; N/avgdl stay corpus-wide
     // through the broadcast stats row
@@ -1289,13 +1208,13 @@ final class InvertedIndex(spark: SparkSession, path: String,
     *       CAST(pmod(CAST(conv(substring(md5('x'), 1, 7), 16, 10)
     *         AS BIGINT), B) AS INT) }}} */
   def livePostings: DataFrame = layout.call {
-    liveOnly(layout(postingsPath))
+    tombstones.mask()(layout(postingsPath))
   }
 
   /** The LIVE (doc_id, dl) doclens frame — [[livePostings]]' stats-side
     * sibling for the SQL surface. */
   def liveDoclens: DataFrame = layout.call {
-    liveOnly(layout(doclensPath))
+    tombstones.mask()(layout(doclensPath))
   }
 
   /** The stored bucket count B — the SQL caller's input to the pruning
@@ -1344,7 +1263,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         count(when(col("term") === t, 1)).as(s"cf$i") },
       terms.tail.map { case (t, i) =>
         count(when(col("term") === t, 1)).as(s"cf$i") }: _*)
-    val totals = liveOnly(layout(doclensPath))
+    val totals = tombstones.mask()(layout(doclensPath))
       .agg(sum(col("dl")).cast(LongType).as("__c"))
     val stats = cfs.crossJoin(totals)
     val dlD = col("dl").cast(DoubleType)
@@ -1441,7 +1360,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val dfs =
       if (censusDf) vocab().filter(col("term").isin(terms: _*))
       else tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val dls = liveOnly(layout(doclensPath))
+    val dls = tombstones.mask()(layout(doclensPath))
     val stats = dls.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
     val tfD = col("tf").cast(DoubleType)
@@ -1522,7 +1441,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val tf = slice.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val cfs = slice.groupBy(col("term")).agg(count(lit(1)).as("cf"))
-    val dls = liveOnly(layout(doclensPath))
+    val dls = tombstones.mask()(layout(doclensPath))
     val totals = dls.agg(sum(col("dl")).cast(LongType).as("__c"))
     val cand = q.join(tf.select(col("term"), col("doc_id")), Seq("term"))
       .select(col("query_id"), col("doc_id")).distinct()
@@ -1653,7 +1572,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val b = readBuckets()
-    val live = liveOnly(layout(postingsPath))
+    val live = tombstones.mask()(layout(postingsPath))
     val keep = live
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("__tf"))
       .withColumn("__rk", row_number().over(
@@ -1667,7 +1586,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       batch.stageRows("postings", Some("tbucket"), live.join(keep, Seq("term", "doc_id"), "left_semi")
         .select(col("doc_id"), col("pos"), col("term"))
         .withColumn("tbucket", bucketCol(col("term"), b)))
-      batch.stageRows("doclens", None, liveOnly(layout(doclensPath)))
+      batch.stageRows("doclens", None, tombstones.mask()(layout(doclensPath)))
       stageCensus(batch, vocab(), onePerPrefix = false)
     }
     target
@@ -1745,7 +1664,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         .localCheckpoint(true)) // two grains aggregate from one read
     layout.commit { batch =>
       try {
-        val dls = liveOnly(layout(doclensPath))
+        val dls = tombstones.mask()(layout(doclensPath))
         batch.stageRows("blockmax", None, termBounds(tfShared.getOrElse(
           post.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))), dls))
         // (term, file)-grain rows (Ding & Suel SIGIR'11 — true block-max):
@@ -1812,7 +1731,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     require(maxCandidates >= 1, s"maxCandidates must be >= 1, got $maxCandidates")
     def fallback() = bm25(queryTerms, k, k1, b)
     if (!fs.exists(new Path(blockmaxPath))) return fallback()
-    val dls = liveOnly(layout(doclensPath))
+    val dls = tombstones.mask()(layout(doclensPath))
     // stats with the exact bm25Scored expression shapes, so the scalar
     // values broadcast into scoring are bit-equal to the plain path's
     val statsRow = dls.agg(count(lit(1)).as("n_docs"),
@@ -1897,12 +1816,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
           }.toMap
         val bOf = essential.map(t => t -> bucketOf(t, readBuckets())).toMap
         val listing: Map[Int, Seq[String]] = bOf.values.toSeq.distinct.map { bk =>
-          val dir = new Path(postingsPath, s"tbucket=$bk")
-          bk -> (if (!fs.exists(dir)) Seq.empty[String]
-            else fs.listStatus(dir).toSeq
-              .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-                !s.getPath.getName.startsWith("."))
-              .map(_.getPath.getName))
+          bk -> LayoutFs.dataFiles(fs, new Path(postingsPath, s"tbucket=$bk")).toSeq.map(_.getPath.getName)
         }.toMap
         val keep = InvertedIndex.selectBlockFiles(
           essential, bOf, listing, covered, fileUb, restUb, theta)
@@ -1913,7 +1827,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         else {
           val paths = keep.toSeq.sorted.map { case (bk, f) =>
             new Path(new Path(postingsPath, s"tbucket=$bk"), f).toString }
-          liveOnly(layout.files(postingsPath, paths)
+          tombstones.mask()(layout.files(postingsPath, paths)
             .filter(col("term").isin(essential: _*))
             .select(col("doc_id"), col("pos"), col("term")))
         }
@@ -2001,7 +1915,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val b = readBuckets()
     val own = shared.isEmpty
     val live = shared.getOrElse(
-      liveOnly(layout(postingsPath))
+      tombstones.mask()(layout(postingsPath))
         .localCheckpoint(true)) // two consumers: fielded postings + doclens
     layout.commit { batch =>
       try batch.stage("fielded") { dir =>
@@ -2064,7 +1978,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val b = readBuckets()
     val terms = queryTerms.zipWithIndex
     val bs = queryTerms.map(bucketOf(_, b)).distinct.sorted
-    val slice = liveOnly(layout(fieldedPostingsPath)
+    val slice = tombstones.mask()(layout(fieldedPostingsPath)
       .filter(col("tbucket").isin(bs: _*))
       .filter(col("term").isin(queryTerms: _*))
       .select(col("doc_id"), col("term"), col("tf_head"), col("tf_body")))
@@ -2072,7 +1986,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
       sum(when(col("term") === t, col("tf_head"))).as(s"tfh$i"),
       sum(when(col("term") === t, col("tf_body"))).as(s"tfb$i")) }
     val tf = slice.groupBy(col("doc_id")).agg(aggCols.head, aggCols.tail: _*)
-    val perDoc = liveOnly(layout(fieldedDoclensPath))
+    val perDoc = tombstones.mask()(layout(fieldedDoclensPath))
       .join(tf, Seq("doc_id"), "left")
       .na.fill(0L, terms.flatMap { case (_, i) => Seq(s"tfh$i", s"tfb$i") })
     TextAnalysis.bm25fRank(perDoc, queryTerms.size, k,
@@ -2103,7 +2017,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val bkts = readBuckets()
     val bs = queryTerms.map(bucketOf(_, bkts)).distinct.sorted
     val terms = queryTerms.zipWithIndex
-    val slice = liveOnly(layout(fieldedPostingsPath)
+    val slice = tombstones.mask()(layout(fieldedPostingsPath)
       .filter(col("tbucket").isin(bs: _*))
       .filter(col("term").isin(queryTerms: _*))
       .filter(col(tfCol) > 0)
@@ -2113,7 +2027,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         sum(when(col("term") === t, col("__tf"))).as(s"tf$i") },
         terms.tail.map { case (t, i) =>
           sum(when(col("term") === t, col("__tf"))).as(s"tf$i") }: _*)
-    val dls = liveOnly(layout(fieldedDoclensPath))
+    val dls = tombstones.mask()(layout(fieldedDoclensPath))
       .filter(col(dlCol) > 0)
       .select(col("doc_id"), col(dlCol).as("dl"))
     val perDoc = dls.join(tf, Seq("doc_id"))
@@ -2149,7 +2063,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     val b = readBuckets()
     layout.commit { batch =>
       batch.stageRows("forward", Some("dbucket"), tfShared.getOrElse(
-          shared.getOrElse(liveOnly(layout(postingsPath)))
+          shared.getOrElse(tombstones.mask()(layout(postingsPath)))
             .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
         .withColumn("dbucket", bucketCol(col("doc_id").cast(StringType), b)))
       stageDerivedMeta(batch, "forward", None)
@@ -2301,7 +2215,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
     // instance's live-count cache for any later serve in the same walk
     var nFg = 0L
     val nBg = liveCountMemo.refresh {
-      val cts = liveOnly(layout(doclensPath)).agg(count(lit(1)).as("__bg"),
+      val cts = tombstones.mask()(layout(doclensPath)).agg(count(lit(1)).as("__bg"),
         count(when(col("doc_id").isin(fgIds: _*), lit(1))).as("__fg")).head()
       nFg = cts.getLong(1)
       cts.getLong(0)
@@ -2311,7 +2225,7 @@ final class InvertedIndex(spark: SparkSession, path: String,
         lit(0L).as("df_fg"), lit(0L).as("df_bg"), lit(0.0).as("score"))
       .limit(0)
     if (nFg == 0L || nBg == 0L) return empty
-    val fgTerms = liveOnly(docTerms(fgIds))
+    val fgTerms = tombstones.mask()(docTerms(fgIds))
       .groupBy(col("term")).agg(count(lit(1)).as("df_fg"))
     val joined = fgTerms
       .join(vocab().withColumnRenamed("df", "df_bg"), Seq("term"))
@@ -2580,14 +2494,15 @@ final class InvertedIndex(spark: SparkSession, path: String,
     * operators compose unchanged. */
   def termPostings(terms: Seq[String]): DataFrame = termSlice(terms)._1
 
-  /** [[termPostings]] and the tombstone mask it applied ([[liveMask]]),
-    * for a caller that masks more frames of the same call. */
+  /** [[termPostings]] and the tombstone mask it applied
+    * ([[Tombstones.mask]]), for a caller that masks more frames of the
+    * same call. */
   private def termSlice(terms: Seq[String]): (DataFrame, DataFrame => DataFrame) = layout.call {
     require(terms.nonEmpty, "need at least one term")
     require(terms.forall(_.nonEmpty), s"empty term in $terms")
     val b = readBuckets()
     val bs = terms.map(bucketOf(_, b)).distinct.sorted
-    val live = liveMask()
+    val live = tombstones.mask()
     (live(layout(postingsPath)
       .filter(col("tbucket").isin(bs: _*))
       .filter(col("term").isin(terms: _*))
@@ -2597,12 +2512,6 @@ final class InvertedIndex(spark: SparkSession, path: String,
 
 object InvertedIndex {
 
-  /** Runtime conf key for the tombstone-mask broadcast gate: the
-    * maximum ON-DISK bytes of a layout's tombstone table for which the
-    * read-side anti-join still carries a `broadcast` hint. Past it the
-    * hint is dropped (AQE picks the strategy) and the V2 SQL surface
-    * refuses to collect the set — see the vacuum-cadence contract on
-    * [[InvertedIndex.delete]]. */
   /** The X228 file-selection rule, factored pure for unit testing:
     * which (tbucket, fname) files of the essential terms' buckets the
     * candidate read must open. Per essential term t and file F of t's
@@ -2639,14 +2548,20 @@ object InvertedIndex {
     * still reads ≈ 1/64 of the census. */
   val CensusPrefixBuckets = 64
 
-  val MaskBroadcastKey = "graft.mask.broadcast.maxBytes"
+  /** The engine-wide 28-bit md5 term bucket (the minhash/sidecar idiom)
+    * of the index's `tbucket=N` postings and `tprefix=N` census and of
+    * the [[QueryStore]]'s `tbucket=N` clauses — persisted, so it never
+    * changes. Column form for writes, Scala form for query-time pruning;
+    * the suites pin their agreement, and the SQL views prune with the
+    * same rule in stock SQL ([[InvertedIndex.livePostings]]). */
+  private[sources] def bucketCol(term: Column, b: Int): Column =
+    pmod(conv(substring(md5(term), 1, 7), 16, 10).cast(LongType), lit(b.toLong))
+      .cast(IntegerType)
 
-  /** Default gate: 32 MiB of parquet ≈ tens of millions of ids —
-    * comfortably inside executor broadcast budgets, far above any
-    * between-vacuums tombstone mass the maintenance policy tolerates. */
-  val MaskBroadcastDefaultBytes: Long = 32L * 1024 * 1024
-
-  private[graft] def maskBroadcastBytes(spark: SparkSession): Long =
-    spark.conf.getOption(MaskBroadcastKey).map(_.toLong)
-      .getOrElse(MaskBroadcastDefaultBytes)
+  private[graft] def bucketOf(term: String, b: Int): Int = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(term.getBytes("UTF-8"))
+    val hex = d.take(4).map("%02x".format(_)).mkString.take(7)
+    (java.lang.Long.parseLong(hex, 16) % b).toInt
+  }
 }

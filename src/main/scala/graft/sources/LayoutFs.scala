@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -130,7 +130,8 @@ object LayoutFs {
     * schema, which rewriting some of its partitions or adding files
     * cannot change; everything else is re-stamped. `dirs` (relative to
     * the root) are the directories [[LayoutFs.open]] looks under. */
-  final class Live(spark: SparkSession, root: String, dirs: String*) {
+  final class Live(private[sources] val spark: SparkSession, private[sources] val root: String,
+      dirs: String*) {
     private[graft] lazy val fs: FileSystem =
       new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     private val rootPath = new Path(root).toUri.getPath
@@ -209,16 +210,13 @@ object LayoutFs {
       }
     }
 
-    /** `(N, part-files, their bytes)` for each `partCol=N` directory of
-      * the directory `dir`, from the file listing alone, ordered by N; a
-      * missing `dir` has none. */
+    /** `(N, data files, their bytes)` for each `partCol=N` directory of
+      * the directory `dir` ([[partDataFiles]]), from the file listing
+      * alone. */
     def partFiles(dir: String, partCol: String): Seq[(Int, Int, Long)] =
-      (try fs.listStatus(new Path(dir)).toSeq catch { case _: FileNotFoundException => Nil })
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-        .map { d =>
-          val parts = fs.listStatus(d.getPath).filter(_.getPath.getName.startsWith("part-"))
-          (d.getPath.getName.stripPrefix(s"$partCol=").toInt, parts.length, parts.map(_.getLen).sum)
-        }.sortBy(_._1)
+      partDataFiles(fs, new Path(dir), partCol).map { case (n, files) =>
+        (n, files.length, files.map(_.getLen).sum)
+      }
 
     /** A value the handle derives from its directories `dirs` (relative
       * to the root), kept under the class doc's rule. */
@@ -280,6 +278,25 @@ object LayoutFs {
       LayoutFs.snapshot(fs, new Path(root), target, spark.sparkContext.hadoopConfiguration)
     }
   }
+
+  /** The data files of the directory `dir`: subdirectories and hidden
+    * (`.`/`_`) names — checksums, commit markers, staging — skipped; a
+    * missing `dir` has none. */
+  def dataFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    (try fs.listStatus(dir) catch { case _: FileNotFoundException => Array.empty[FileStatus] })
+      .filter(s => s.isFile && !hidden(s))
+
+  private def hidden(s: FileStatus): Boolean =
+    s.getPath.getName.startsWith(".") || s.getPath.getName.startsWith("_")
+
+  /** `(N, its data files)` ([[dataFiles]]) for each `partCol=N`
+    * directory of the directory `dir`, ordered by N; a missing `dir` has
+    * none. */
+  def partDataFiles(fs: FileSystem, dir: Path, partCol: String): Seq[(Int, Array[FileStatus])] =
+    (try fs.listStatus(dir).toSeq catch { case _: FileNotFoundException => Nil })
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+      .map(d => (d.getPath.getName.stripPrefix(s"$partCol=").toInt, dataFiles(fs, d.getPath)))
+      .sortBy(_._1)
 
   private val Nested = "census/pending_delta,edges/.tmp_gbucket_batch/_committed"
 
@@ -512,8 +529,7 @@ object LayoutFs {
   private def moveFiles(fs: FileSystem, src: Path, dst: Path): Unit =
     if (fs.exists(src)) {
       fs.mkdirs(dst)
-      fs.listStatus(src).filterNot(s => s.getPath.getName.startsWith(".") ||
-          s.getPath.getName.startsWith("_")).foreach { s =>
+      fs.listStatus(src).filterNot(hidden).foreach { s =>
         val to = new Path(dst, s.getPath.getName)
         if (s.isDirectory) moveFiles(fs, s.getPath, to)
         else if (!fs.rename(s.getPath, to))

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,8 +34,8 @@ import graft.operators.TextAnalysis
   * query_ids must be disjoint from stored ones — the [[InvertedIndex
   * .append]] contract); [[delete]] tombstones query ids (alert
   * unsubscribe: O(batch), clause files untouched, effective on the
-  * next read via the size-gated anti-join — the
-  * [[InvertedIndex.delete]] vacuum-cadence contract); [[vacuum]]
+  * next read via the size-gated anti-join — the [[Tombstones]]
+  * vacuum-cadence contract); [[vacuum]]
   * rewrites clauses and totals without the tombstoned queries. Every
   * mutation commits as one [[LayoutFs.Batch]], so a crash never leaves
   * clause rows without their totals row. Reads are LIVE per
@@ -52,25 +51,18 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
   private def clausesPath = s"$path/clauses"
   private def totalsPath = s"$path/totals"
   private def metaPath = s"$path/meta"
-  private def tombstonesPath = s"$path/tombstones"
 
   /** The store's one handle on its root ([[LayoutFs.Live]]): recovery
     * (a committed batch rolled forward and a crashed swap of a top-level
     * directory resolved, from one glob of the root), reads of the live
     * layout directories with pinned schemas, memos and commits. */
   private[graft] val layout = new LayoutFs.Live(spark, path)
-  import layout.fs
 
-  private def bucketCol(term: Column, b: Int): Column =
-    pmod(conv(substring(md5(term), 1, 7), 16, 10).cast(LongType), lit(b.toLong))
-      .cast(IntegerType)
+  /** The store's unsubscribed query ids ([[Tombstones]]). */
+  private[graft] val tombstones = new Tombstones(layout, "query_id")
 
-  private[graft] def bucketOf(term: String, b: Int): Int = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(term.getBytes("UTF-8"))
-    val hex = d.take(4).map("%02x".format(_)).mkString.take(7)
-    (java.lang.Long.parseLong(hex, 16) % b).toInt
-  }
+  import InvertedIndex.bucketCol
+  private[graft] def bucketOf(term: String, b: Int): Int = InvertedIndex.bucketOf(term, b)
 
   // stored bucket count: immutable between build()s — memoized per
   // instance (the InvertedIndex rule)
@@ -93,7 +85,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
       b.stageRows("meta", None, Seq(buckets).toDF("n_buckets").coalesce(1))
       b.stageRows("clauses", Some("tbucket"), c.withColumn("tbucket", bucketCol(col("term"), buckets)))
       b.stageRows("totals", None, totalsOf(c))
-      b.drop("tombstones")
+      tombstones.drop(b)
     }
     graft.util.Pins.release(c)
   }
@@ -116,32 +108,13 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     }
   }
 
-  /** Unsubscribe: tombstone the query ids in one committed batch —
-    * O(batch) I/O, clause files untouched, effective on the very next
-    * read. Same vacuum-cadence
-    * contract as [[InvertedIndex.delete]]: run [[vacuum]] often enough
-    * that the mask stays inside the `graft.mask.broadcast.maxBytes`
-    * gate. */
+  /** Unsubscribe: tombstone the query ids ([[Tombstones.add]]) —
+    * clause files untouched, effective on the very next read, under the
+    * [[Tombstones]] vacuum-cadence contract: run [[vacuum]] often enough
+    * that the mask stays inside its broadcast gate. */
   def delete(queryIds: DataFrame): Unit = layout.call {
-    require(queryIds.columns.toSeq == Seq("query_id"),
-      s"ids must be a single-column (query_id) frame, got ${queryIds.columns.toSeq}")
-    layout.commit(_.add("tombstones")(dir =>
-      queryIds.select(col("query_id").cast(StringType)).write.parquet(dir.toString)))
+    tombstones.add(queryIds, StringType)
   }
-
-  private def tombstoneIds(): DataFrame = {
-    val ts = layout(tombstonesPath)
-      .select(col("query_id")).distinct()
-    val bytes = fs.listStatus(new Path(tombstonesPath))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .map(_.getLen).sum
-    if (bytes <= InvertedIndex.maskBroadcastBytes(spark)) broadcast(ts) else ts
-  }
-
-  private def liveOnly(df: DataFrame): DataFrame =
-    if (fs.exists(new Path(tombstonesPath)))
-      df.join(tombstoneIds(), Seq("query_id"), "left_anti")
-    else df
 
   /** Physically drop tombstoned queries: one anti-join rewrite each of
     * clauses (partition layout preserved) and totals, committed with the
@@ -153,15 +126,15 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * both policies trigger, where vacuum-then-compact would rewrite the
     * whole layout twice back-to-back for the identical end state. */
   private def vacuumImpl(compactToo: Boolean): Unit = layout.call {
-    if (!fs.exists(new Path(tombstonesPath))) return
-    val ts = tombstoneIds()
+    if (!tombstones.present) return
+    val ts = tombstones.ids()
     layout.commit { batch =>
       val clauses = layout(clausesPath).join(ts, Seq("query_id"), "left_anti")
       batch.stageRows("clauses", Some("tbucket"),
         if (compactToo) clauses.repartition(col("tbucket")) else clauses)
       val totals = layout(totalsPath).join(ts, Seq("query_id"), "left_anti")
       batch.stageRows("totals", None, if (compactToo) totals.coalesce(1) else totals)
-      batch.drop("tombstones")
+      tombstones.drop(batch)
     }
   }
 
@@ -193,8 +166,8 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * threshold and whether the action ran.
     *
     *  - `vacuum` when distinct tombstoned ids / stored queries >
-    *    `maxTombstoneFrac` (the enforcement arm of the vacuum-cadence
-    *    contract on [[delete]]);
+    *    `maxTombstoneFrac` (the enforcement arm of the [[Tombstones]]
+    *    vacuum-cadence contract);
     *  - `compact` when any clause bucket holds more than
     *    `maxFilesPerBucket` part-files. Evaluated on the PRE-action
     *    listing; a triggered vacuum's rewrite usually satisfies compact
@@ -213,12 +186,10 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
       s"maxTombstoneFrac must be > 0, got $maxTombstoneFrac")
     import spark.implicits._
     def tombFracNow(): Double =
-      if (!fs.exists(new Path(tombstonesPath))) 0.0
+      if (!tombstones.present) 0.0
       else {
         val nQueries = layout(totalsPath).count()
-        if (nQueries == 0L) 1.0
-        else layout(tombstonesPath)
-          .select(col("query_id")).distinct().count().toDouble / nQueries
+        if (nQueries == 0L) 1.0 else tombstones.count().toDouble / nQueries
       }
     def maxFilesNow(): Int =
       fileStats().agg(max(col("n_files"))).head() match {
@@ -259,12 +230,12 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * the pruning surface — the SQL-registration view behind
     * [[StoreCatalog.registerQueryStore]]. */
   def liveClauses: DataFrame = layout.call {
-    liveOnly(layout(clausesPath))
+    tombstones.mask()(layout(clausesPath))
   }
 
   /** The LIVE (query_id, n_must, n_should) totals frame. */
   def liveTotals: DataFrame = layout.call {
-    liveOnly(layout(totalsPath))
+    tombstones.mask()(layout(totalsPath))
   }
 
   /** The stored clause rows of exactly the given terms' buckets — the
@@ -279,7 +250,7 @@ final class QueryStore(spark: SparkSession, path: String, buckets: Int = 16) {
     * slice [[percolate]] joins; exposed for plan audits. */
   def clausesForBuckets(bucketIds: Seq[Int]): DataFrame = layout.call {
     require(bucketIds.nonEmpty, "need at least one bucket")
-    liveOnly(layout(clausesPath)
+    tombstones.mask()(layout(clausesPath)
       .filter(col("tbucket").isin(bucketIds: _*))
       .select(col("query_id"), col("term"), col("clause")))
   }

@@ -97,7 +97,7 @@ final class StoreCatalog(spark: SparkSession) {
     // side reads empty and AQE collapses the join away; small sets
     // broadcast by AQE's own size decision; a pre-vacuum takedown
     // batch degrades to a shuffled anti-join instead of a driver
-    // collect (the size-gate rule on [[graft.sources.InvertedIndex.delete]]).
+    // collect (the size-gate rule on [[graft.sources.Tombstones]]).
     // Both sides are live V2 scans, so the delete-visible-to-the-next-
     // statement contract is unchanged.
     spark.sql(

@@ -1,6 +1,5 @@
 package graft.sources.v2
 
-import java.io.FileNotFoundException
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
@@ -98,20 +97,16 @@ private[v2] object GraftLayoutSource {
     }
   }
 
-  /** The live part-files under `dir`, listed on the driver: the root, then
-    * each `col=N` directory when partitioned; hidden (`.`/`_`) names are
-    * skipped and a missing root lists none. Spark's own listing would run
-    * a job per query once a root holds more partition directories than
+  /** The live data files under `dir`, listed on the driver: those of
+    * `dir`, or of each `col=N` directory when partitioned
+    * ([[LayoutFs.dataFiles]]). Spark's own listing would run a job per
+    * query once a root holds more partition directories than
     * `spark.sql.sources.parallelPartitionDiscovery.threshold`. */
   def liveFiles(dir: String, partCol: Option[String]): Array[FileStatus] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-    def list(p: Path) = fs.listStatus(p).filterNot(s =>
-      s.getPath.getName.startsWith(".") || s.getPath.getName.startsWith("_"))
-    val top = try list(root) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
-    partCol.fold(top.filter(_.isFile))(c => top
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$c="))
-      .flatMap(d => list(d.getPath).filter(_.isFile)))
+    partCol.fold(LayoutFs.dataFiles(fs, root))(c =>
+      LayoutFs.partDataFiles(fs, root, c).flatMap(_._2).toArray)
   }
 
   /** The data columns of the first part-file under `dir`, as Spark reads

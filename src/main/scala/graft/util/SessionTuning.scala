@@ -2,26 +2,26 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-adaptive session defaults shared by every engine entry point
-  * (Bench, Verify, Smoke, Explain, ProfileQ) — guide §2.2/§9.
+/** The session settings every engine entry point (Bench, Verify, Smoke,
+  * Explain, ProfileQ) and perfbench share: AQE's two partition-coalescing
+  * knobs, each at Spark's own default unless its environment variable
+  * overrides it, so an A/B of either is an environment change.
   *
-  * The one non-default here is AQE partition coalescing with
-  * `parallelismFirst=false`: with the default (`true`), AQE only
-  * coalesces post-shuffle partitions down to the session's default
-  * parallelism — i.e. the partition COUNT tracks the core count, not
-  * the data size, so a tiny shuffle on a 32-core driver still runs 32
-  * near-empty tasks per stage (pure scheduling overhead at bench SF)
-  * while a 100 TB shuffle on a big cluster gets partitions far above
-  * the advisory size. `false` makes AQE size partitions by
-  * `advisoryPartitionSizeInBytes` alone — the same setting is the
-  * scale-correct one on a real cluster (partitions in the 100 MB-1 GB
-  * band per §2.2) and at local bench SF (small shuffles coalesce to a
-  * handful of tasks). Both knobs stay env-overridable so the driver's
-  * bench contract (`local[$SPARK_GRAFT_CPUS]`,
-  * `spark.sql.shuffle.partitions=$cpus` as the pre-AQE fan-out) is
-  * unchanged; this only governs how AQE re-sizes AFTER a shuffle's
-  * true byte size is known — a data-derived value, not a core-count
-  * constant. */
+  *  - `spark.sql.adaptive.coalescePartitions.parallelismFirst` `true`
+  *    (`SPARK_GRAFT_AQE_PARALLELISM_FIRST`): AQE ignores the advisory
+  *    size and coalesces post-shuffle partitions only down to
+  *    `coalescePartitions.minPartitionSize` (1 MB), keeping a small
+  *    shuffle's parallelism. `false` coalesces toward the advisory size;
+  *    an A/B of it on a 20-row lifecycle board collapsed the tiny-SF
+  *    corpus aggregates to one task each and cost the write/aggregate
+  *    rows up to +60 % wall time, with no gain elsewhere beyond noise,
+  *    so it is not the default. At cluster scale shuffles are far above
+  *    the advisory size either way.
+  *  - `spark.sql.adaptive.advisoryPartitionSizeInBytes` `64m`
+  *    (`SPARK_GRAFT_AQE_ADVISORY`): the size `false` coalesces toward.
+  *
+  * Neither touches the bench contract (`local[$SPARK_GRAFT_CPUS]`,
+  * `spark.sql.shuffle.partitions=$cpus` as the pre-AQE fan-out). */
 object SessionTuning {
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",

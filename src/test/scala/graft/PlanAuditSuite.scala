@@ -59,7 +59,7 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(!p.contains("GlobalLimit"), s"no global-limit funnel in the default plan:\n$p")
   }
 
-  test("search hamming stage reads only sketch columns, never the wide vector (column pruning)") {
+  test("a column-pruned projection of the store fixture reads only its columns") {
     // a sketch-only projection of the store prunes the wide vector column;
     // the search's own scan reads vector to carry it into the rerank, and
     // the one-scan row below bounds its columns
@@ -1264,6 +1264,15 @@ class PlanAuditSuite extends AnyFunSuite {
     def qs(b: Int)(p: String) = new sources.QueryStore(spark, p, buckets = b)
     def ivfKeep(h: sources.IvfIndex): Unit = { h.append(embs(25, 28), "id", "vector"); h.delete(ids("id", 1L, 2L)) }
     def invKeep(h: sources.InvertedIndex): Unit = { h.append(docs(13, 14), "doc_id", col("text")); h.delete(ids("doc_id", 1L)) }
+    // a data file planted in place leaves the root's stamp as it was:
+    // only a re-listing, not a kept memo, counts its bytes
+    def plantTombstone(p: String): Unit = {
+      val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = fs.create(new org.apache.hadoop.fs.Path(s"$p/tombstones/planted"), true)
+      try out.write(Array.fill[Byte](64)(0)) finally out.close()
+    }
+    lazy val graphEmbs = embs(1, 4)
+    val graphAdj = adj.withColumn("cosine", lit(0.5))
     Seq(
       MemoKind[sources.IvfIndex]("IvfIndex centroids", ivf(4), _.build(base, "id", "vector", cents),
         _.centroids().map(_.toSeq), ivf(4)(_).build(base, "id", "vector", cents.take(2)),
@@ -1306,12 +1315,30 @@ class PlanAuditSuite extends AnyFunSuite {
       MemoKind[sources.NgramLm]("NgramLm version", new sources.NgramLm(spark, _),
         h => { h.build(docs(1, 6), "doc_id", col("text")); h.append(docs(7, 8), "doc_id", col("text")) },
         _.currentVersion(), new sources.NgramLm(spark, _).append(docs(9, 10), "doc_id", col("text")),
-        (_, h) => h.vacuum(), _.append(docs(9, 10), "doc_id", col("text"))))
+        (_, h) => h.vacuum(), _.append(docs(9, 10), "doc_id", col("text"))),
+      MemoKind[sources.InvertedIndex]("InvertedIndex tombstone listing", inv(4),
+        h => { h.build(docs(1, 12), "doc_id", col("text")); h.delete(ids("doc_id", 1L)) },
+        _.tombstones.bytes(), inv(4)(_).delete(ids("doc_id", 2L)),
+        (p, h) => { h.append(docs(13, 14), "doc_id", col("text")); plantTombstone(p) },
+        _.delete(ids("doc_id", 3L))),
+      MemoKind[sources.QueryStore]("QueryStore tombstone listing", qs(4),
+        h => { h.build(clauses(1, 6)); h.delete(ids("query_id", 1L)) },
+        _.tombstones.bytes(), qs(4)(_).delete(ids("query_id", 2L)),
+        (p, h) => { h.append(clauses(7, 8)); plantTombstone(p) }, _.delete(ids("query_id", 3L))),
+      MemoKind[sources.GraphIndex]("GraphIndex tombstone listing", new sources.GraphIndex(spark, _, buckets = 2),
+        h => { h.build(graphAdj); h.delete(ids("id", 1L)) }, _.tombstones.bytes(),
+        new sources.GraphIndex(spark, _, buckets = 2).delete(ids("id", 2L)),
+        (p, h) => {
+          h.append(graphEmbs, "id", "vector", ids("id", 4L), r = 2, searchBeam = 4, entryId = Some(1L))
+          plantTombstone(p)
+        },
+        _.delete(ids("id", 3L))))
   }
 
   for (kind <- Seq("IvfIndex centroids", "IvfIndex codebooks", "IvfIndex assign-bucket meta",
       "InvertedIndex meta", "QueryStore meta", "GraphIndex meta", "InvertedIndex fielded head length",
-      "InvertedIndex live count", "NgramLm version");
+      "InvertedIndex live count", "NgramLm version", "InvertedIndex tombstone listing",
+      "QueryStore tombstone listing", "GraphIndex tombstone listing");
        row <- Seq("another handle's commit", "an own commit that leaves its directories", "an own commit that rewrites them"))
     test(s"memo: $kind after $row") {
       def run[H](m: MemoKind[H]): Unit = {

@@ -59,6 +59,18 @@ class CommitModuleSuite extends AnyFunSuite {
     assert(offenders.isEmpty, s"layout writes outside LayoutFs.Batch: ${offenders.mkString(", ")}")
   }
 
+  test("no lazily deleting layout handles its tombstones directory itself") {
+    assert(Files.isDirectory(main), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val probe = """/tombstones"|(add|drop)\("tombstones"\)""".r
+    val offenders = for {
+      rel <- Seq("InvertedIndex", "QueryStore", "GraphIndex").map(n => s"graft/sources/$n.scala")
+      (line, n) <- source(rel).linesIterator.zipWithIndex
+      if probe.findFirstIn(line).isDefined
+    } yield s"$rel:${n + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      s"tombstone handling outside graft.sources.Tombstones:\n${offenders.mkString("\n")}")
+  }
+
   /** The reads a layout makes with `spark.read` itself: each one reads a
     * batch's staged `.commit/` files, not a live directory. */
   private val stagedReads = Seq("spark.read.parquet(batch.staged(")

@@ -178,7 +178,7 @@ class IngestCatalogSuite extends AnyFunSuite {
     // over-threshold: the VIEW keeps answering identically (anti-join
     // scales); the provider itself never masks, so the removed masked
     // option is refused rather than silently serving tombstoned rows
-    spark.conf.set(InvertedIndex.MaskBroadcastKey, "0")
+    spark.conf.set(Tombstones.MaskBroadcastKey, "0")
     try {
       assert(live().collect().map(_.getLong(0)).toSet == want,
         "anti-join view must be unaffected by the gate")
@@ -188,7 +188,7 @@ class IngestCatalogSuite extends AnyFunSuite {
         .option("masked", "true").load())
       assert(e.getMessage.contains("<name>_postings") && e.getMessage.contains("<name>_doclens"),
         s"the refusal must name the anti-join views: ${e.getMessage}")
-    } finally spark.conf.unset(InvertedIndex.MaskBroadcastKey)
+    } finally spark.conf.unset(Tombstones.MaskBroadcastKey)
   }
 
   test("unmasked V2 scans read COLUMNAR (vectorized batches); results ≡ spark.read.parquet") {

@@ -1001,38 +1001,6 @@ class InvertedIndexSuite extends AnyFunSuite {
     assert(e3.getMessage.contains("two clauses"))
   }
 
-  test("tombstone mask size gate: over-threshold drops the broadcast hint, answers identical") {
-    val dir = Files.createTempDirectory("graft_inv_gate").toString
-    val idx = new InvertedIndex(spark, s"$dir/inv", buckets = 8)
-    idx.build(docsA.union(docsB), "doc_id", col("text"))
-    idx.delete(Seq(4L, 5L).toDF("doc_id"))
-    def bm() = idx.bm25(Seq("sort", "merge"), 10)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(col("doc_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    import org.apache.spark.sql.catalyst.plans.LeftAnti
-    import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
-    def antiHinted() = bm().queryExecution.optimizedPlan.collect {
-      case j: LJoin if j.joinType == LeftAnti => j
-    }.map(_.hint.rightHint.exists(_.strategy.isDefined))
-    // default gate (32 MiB): the tiny tombstone table keeps the hint
-    val small = rows(bm())
-    assert(antiHinted().contains(true),
-      "under the gate the mask anti-join must carry the broadcast hint")
-    // force the over-threshold branch: same answers, hint GONE from the
-    // mask anti-join (AQE may still broadcast at runtime from actual
-    // sizes — the point is the engine no longer FORCES it)
-    spark.conf.set(InvertedIndex.MaskBroadcastKey, "0")
-    try {
-      assert(rows(bm()) === small, "gate must not change results")
-      assert(antiHinted().nonEmpty && !antiHinted().contains(true),
-        "over the gate the forced broadcast hint must be dropped")
-      // vacuum under the gate stays correct too
-      idx.vacuum()
-      assert(rows(bm()) === small)
-    } finally spark.conf.unset(InvertedIndex.MaskBroadcastKey)
-  }
-
   test("block-max MaxScore: bit-identical to bm25, fewer shuffled rows on a skewed query (X211)") {
     val dir = Files.createTempDirectory("graft_inv_bmx").toString
     val idx = new InvertedIndex(spark, s"$dir/inv", buckets = 8)

@@ -106,13 +106,13 @@ class ServePathFsCallsSuite extends AnyFunSuite {
     fixture._5.searchPq(query, topK = 5, nprobe = 2).collect()
   }
 
-  check("InvertedIndex.vocab", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 8L,
-      "globStatus" -> 1L, "listStatus" -> 17L, "getFileStatus" -> 27L)) {
+  check("InvertedIndex.vocab", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 7L,
+      "globStatus" -> 1L, "listStatus" -> 16L, "getFileStatus" -> 26L)) {
     fixture._4.vocab().collect()
   }
 
-  check("InvertedIndex.bm25", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 7L,
-      "globStatus" -> 1L, "listStatus" -> 9L, "getFileStatus" -> 20L)) {
+  check("InvertedIndex.bm25", Map("rename" -> 0L, "delete" -> 0L, "exists" -> 6L,
+      "globStatus" -> 1L, "listStatus" -> 8L, "getFileStatus" -> 19L)) {
     fixture._4.bm25(Seq("sort", "merge"), k = 3).collect()
   }
 
